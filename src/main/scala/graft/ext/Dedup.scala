@@ -6,7 +6,7 @@ import scala.concurrent.ExecutionContext.Implicits.global
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.functions.{polyFingerprint, polyFingerprint64}
+import graft.functions.{PolyFold, polyFingerprint, polyFingerprint64}
 
 /** Deduplication family for training-data pipelines: exact, MinHash+LSH
   * near-dup, SimHash, and n-gram Jaccard — designed for the 100 TB
@@ -38,8 +38,6 @@ object Dedup {
     * from candidate generation and disclosed.
     */
   val DefaultMaxBucketWidth: Int = 256
-
-  val P: Long = 2147483647L // 2^31-1, the PolyHash modulus
 
   /** MinHash permutation constants (a·h + b mod P). Fixed primes —
     * deterministic across engines and runs.
@@ -89,8 +87,9 @@ object Dedup {
   /** Declarative spec of [[minhashSignature]] (interpreted per row). */
   def minhashSignatureHof(hashes: Column): Column =
     array(Perms.map { case (a, b) =>
-      coalesce(array_min(transform(hashes, h => (lit(a) * h + lit(b)) % lit(P))),
-        lit(P))
+      coalesce(array_min(transform(hashes,
+          h => (lit(a) * h + lit(b)) % lit(PolyFold.P31))),
+        lit(PolyFold.P31))
     }: _*)
 
   /** SimHash (bits-wide): majority vote per bit position over the hash

@@ -105,7 +105,7 @@ object FreqSketch {
     // rank = 26 − bitlength(w) ≤ 0 and corrupt registers/estimates
     // SILENTLY; fail loud at the first out-of-range row instead.
     val h = when(hashCol.cast("long") < 0L ||
-        hashCol.cast("long") >= 2147483647L,
+        hashCol.cast("long") >= graft.functions.PolyFold.P31,
       raise_error(concat(
         lit("hllRegisters expects the 31-bit polyhash in [0, 2^31-1); got "),
         hashCol.cast("string"))).cast("long"))

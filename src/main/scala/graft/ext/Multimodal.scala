@@ -55,12 +55,7 @@ object Multimodal {
     * is the same production plumbing.
     */
   def decodeStub(payload: Array[Byte]): (Long, Long, Long) = {
-    var acc = 0L
-    var i = 0
-    while (i < payload.length) {
-      acc = (acc * 31L + (payload(i) & 0xffL)) % 2147483647L
-      i += 1
-    }
+    val acc = graft.functions.PolyFold.h31(payload)
     (acc % 1280, acc % 720, payload.length % 32 + 1)
   }
 
@@ -237,17 +232,9 @@ object Multimodal {
     * path exactly like [[decodeStub]] stands in for codecs; the
     * engine-portable arithmetic is what the oracle replays.
     */
-  def dHashStubBytes(payload: Array[Byte]): Long = {
-    def ph(bs: Array[Byte]): Long = {
-      var acc = 0L; var i = 0
-      while (i < bs.length) {
-        acc = (acc * 31L + (bs(i) & 0xffL)) % 2147483647L
-        i += 1
-      }
-      acc
-    }
-    (ph(payload) << 32) + ph(payload ++ HashSalt)
-  }
+  def dHashStubBytes(payload: Array[Byte]): Long =
+    (graft.functions.PolyFold.h31(payload) << 32) +
+      graft.functions.PolyFold.h31(payload ++ HashSalt)
 
   private val HashSalt: Array[Byte] = "#".getBytes("UTF-8")
 

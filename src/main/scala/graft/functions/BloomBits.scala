@@ -1,8 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, XXH64}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, LongType}
 
@@ -44,28 +42,14 @@ object BloomBits {
   * [[graft.ext.BloomGate.buildBits]].
   */
 case class BloomBitPositions(child: Expression, numBits: Int, k: Int)
-  extends UnaryExpression {
+  extends NativeUnary[Long] {
   require(numBits > 0 && k > 0, s"numBits=$numBits k=$k must be positive")
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == LongType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"bloom_bit_positions needs a long argument, got ${child.dataType}")
+  override def inputTypes = Seq(LongType)
 
-  override def nullSafeEval(input: Any): Any =
-    new GenericArrayData(
-      BloomBits.positions(input.asInstanceOf[Long], numBits, k))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("bloomPositions", this,
-      classOf[BloomBitPositions].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.arr($c);")
-  }
-
-  /** Boxed entry point for generated code. */
-  def arr(key: Long): GenericArrayData =
+  def compute(key: Long): GenericArrayData =
     new GenericArrayData(BloomBits.positions(key, numBits, k))
 
   override protected def withNewChildInternal(newChild: Expression): BloomBitPositions =
@@ -79,21 +63,16 @@ case class BloomBitPositions(child: Expression, numBits: Int, k: Int)
   * and the filter runs map-side with zero shuffle.
   */
 case class BloomMightContain(child: Expression, words: Array[Long],
-                             numBits: Int, k: Int) extends UnaryExpression {
+                             numBits: Int, k: Int)
+  extends NativeUnary[Long] {
   require(words.length.toLong * 64 >= numBits,
     s"bitset too small: ${words.length} words for $numBits bits")
 
   override def dataType: DataType = BooleanType
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == LongType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"bloom_might_contain needs a long argument, got ${child.dataType}")
+  override def inputTypes = Seq(LongType)
 
-  override def nullSafeEval(input: Any): Any =
-    probe(input.asInstanceOf[Long])
-
-  def probe(key: Long): Boolean = {
+  def compute(key: Long): Boolean = {
     val pos = BloomBits.positions(key, numBits, k)
     var i = 0
     while (i < pos.length) {
@@ -102,12 +81,6 @@ case class BloomMightContain(child: Expression, words: Array[Long],
       i += 1
     }
     true
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("bloomProbe", this,
-      classOf[BloomMightContain].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.probe($c);")
   }
 
   override protected def withNewChildInternal(newChild: Expression): BloomMightContain =

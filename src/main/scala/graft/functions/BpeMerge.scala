@@ -1,8 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -16,8 +14,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * is mergeable. Returns the final token array (count = `size(...)`).
   * One native expression: the merge table lives once in a hash map on
   * the reference object, and the whole tokenization is a single map
-  * over the document scan — no shuffle, no UDF, whole-stage codegen
-  * via the reference-object pattern (see [[ShingleHashes]]).
+  * over the document scan — no shuffle, no UDF ([[NativeExpr]]).
   *
   * WELL-FORMEDNESS (checked at construction): each merge's two sides
   * must be a single character or the output of an EARLIER merge — the
@@ -49,7 +46,7 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 case class BpeMergeTokens(child: Expression, merges: Seq[(String, String)],
                           pattern: String, byteLevel: Boolean = false)
-  extends UnaryExpression {
+  extends NativeUnary[UTF8String] {
 
   // an EMPTY table is legal — tokenization degenerates to one symbol
   // per character, the starting state of BPE training
@@ -71,10 +68,7 @@ case class BpeMergeTokens(child: Expression, merges: Seq[(String, String)],
 
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"bpe_merge_tokens needs a string argument, got ${child.dataType}")
+  override def inputTypes = Seq(StringType)
 
   @transient private lazy val regex = java.util.regex.Pattern.compile(pattern)
   // pair (a, b) keyed as a + NUL + b (symbols never contain NUL)
@@ -89,11 +83,7 @@ case class BpeMergeTokens(child: Expression, merges: Seq[(String, String)],
   }
   @transient private lazy val pairArr: Array[(String, String)] = merges.toArray
 
-  override def nullSafeEval(input: Any): Any =
-    tokenize(input.asInstanceOf[UTF8String])
-
-  /** Called from both eval and generated code. */
-  def tokenize(text: UTF8String): ArrayData = {
+  def compute(text: UTF8String): ArrayData = {
     val m = regex.matcher(text.toString)
     val out = scala.collection.mutable.ArrayBuffer.empty[Any]
     while (m.find()) {
@@ -142,12 +132,6 @@ case class BpeMergeTokens(child: Expression, merges: Seq[(String, String)],
       while (k < syms.size) { out += UTF8String.fromString(syms.get(k)); k += 1 }
     }
     new GenericArrayData(out.toArray)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("bpeMergeTokens", this,
-      classOf[BpeMergeTokens].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.tokenize($c);")
   }
 
   override protected def withNewChildInternal(newChild: Expression): BpeMergeTokens =

@@ -1,8 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -79,27 +77,15 @@ object ByteLevel {
   * each UTF-8 byte of the input becomes one mapped char, so downstream
   * `length`/`substr` count byte symbols. Null → null.
   */
-case class ByteLevelEncode(child: Expression) extends UnaryExpression {
+case class ByteLevelEncode(child: Expression)
+    extends NativeUnary[UTF8String] {
 
   override def dataType: DataType = StringType
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"byte_level_encode needs a string argument, got ${child.dataType}")
+  override def inputTypes = Seq(StringType)
 
-  /** Called from both eval and generated code. */
-  def encodeU(s: UTF8String): UTF8String =
+  def compute(s: UTF8String): UTF8String =
     UTF8String.fromString(ByteLevel.encode(s.toString))
-
-  override def nullSafeEval(input: Any): Any =
-    encodeU(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("byteLevelEncode", this,
-      classOf[ByteLevelEncode].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.encodeU($c);")
-  }
 
   override protected def withNewChildInternal(newChild: Expression): ByteLevelEncode =
     copy(child = newChild)

@@ -1,10 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -32,10 +29,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * buffer; ASCII case-fold via `| 0x20` (exact on this corpus — the
   * oracle's `lower()` agrees byte-for-byte). Null text → null; the
   * query layer coalesces and derives the pass flag so the thresholds
-  * stay visible in SQL. doGenCode uses the reference-object pattern so
-  * enclosing operators stay whole-stage-codegen'd.
+  * stay visible in SQL.
   */
-case class C4Stats(child: Expression) extends UnaryExpression {
+case class C4Stats(child: Expression) extends NativeUnary[UTF8String] {
 
   override def dataType: DataType = StructType(Seq(
     StructField("clean", StringType, nullable = false),
@@ -46,13 +42,7 @@ case class C4Stats(child: Expression) extends UnaryExpression {
     StructField("has_brace", LongType, nullable = false),
     StructField("has_badword", LongType, nullable = false)))
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"c4_stats needs a string argument, got ${child.dataType}")
-
-  override def nullSafeEval(input: Any): Any =
-    compute(input.asInstanceOf[UTF8String])
+  override def inputTypes = Seq(StringType)
 
   /** Case-insensitive ASCII substring search: `pat` must be lowercase;
     * a text byte matches when `(b | 0x20) == p` — exact for letters,
@@ -72,7 +62,6 @@ case class C4Stats(child: Expression) extends UnaryExpression {
     false
   }
 
-  /** Called from both eval and generated code. */
   def compute(text: UTF8String): InternalRow = {
     val b = text.getBytes
     // ── page-level flags over the ORIGINAL bytes ───────────────────
@@ -153,11 +142,6 @@ case class C4Stats(child: Expression) extends UnaryExpression {
     new GenericInternalRow(Array[Any](
       UTF8String.fromBytes(clean.toByteArray), nLines, nKept, nSentences,
       hasLorem, hasBrace, hasBad))
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("c4Stats", this, classOf[C4Stats].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.compute($c);")
   }
 
   override protected def withNewChildInternal(newChild: Expression): C4Stats =

@@ -1,7 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -17,19 +16,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * exact `array_sort` comparator). Non-URLs pass through unchanged;
   * null stays null.
   */
-case class CanonicalUrl(child: Expression) extends UnaryExpression {
+case class CanonicalUrl(child: Expression) extends NativeUnary[UTF8String] {
   override def dataType: DataType = StringType
-  override def checkInputDataTypes() =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"canonical_url needs a string argument, got ${child.dataType}")
+  override def inputTypes = Seq(StringType)
 
   private val trackingRe =
     java.util.regex.Pattern.compile("^(utm_[^=]*|fbclid|gclid|ref)(=.*)?$")
 
-  def canonicalize(in: UTF8String): UTF8String = {
+  def compute(in: UTF8String): UTF8String = {
     val full = in.toString
     // 1. fragment strip — replaceAll, not indexOf-cut: the spec chain
     // is regexp_replace(url, "#.*", "") and Java '.' stops at \n, so a
@@ -85,16 +79,6 @@ case class CanonicalUrl(child: Expression) extends UnaryExpression {
       }
     UTF8String.fromString(scheme + "://" + host + path + qpart)
   }
-
-  override def nullSafeEval(input: Any): Any =
-    canonicalize(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val ref = ctx.addReferenceObj("canonUrlExpr", this,
-        classOf[CanonicalUrl].getName)
-      s"${ev.value} = $ref.canonicalize($c);"
-    })
 
   override protected def withNewChildInternal(newChild: Expression): CanonicalUrl =
     copy(child = newChild)

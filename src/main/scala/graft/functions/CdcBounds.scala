@@ -1,8 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -12,10 +10,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * declarative HOF chain kept as the executable spec
   * ([[graft.ext.Dedup.cdcChunksHof]], the [[WinnowFps]] precedent):
   *
-  *  1. word boundaries = single-space splits (empty words kept), so a
-  *     trailing `window`-word shingle's joined string is byte-identical
-  *     to the original span and its [[PolyHash]] folds directly over
-  *     the byte range;
+  *  1. words are [[Words]] (empty words kept), so a trailing
+  *     `window`-word shingle's joined string is byte-identical to the
+  *     original span and its [[PolyFold.h31]] folds directly over the
+  *     byte range;
   *  2. a boundary falls AFTER 1-based word `i` (for i in
   *     window..nWords−1) exactly when that shingle hash ≡ 0 mod
   *     `divisor`;
@@ -29,72 +27,42 @@ import org.apache.spark.unsafe.types.UTF8String
   * only the output slices.
   */
 case class CdcChunksExpr(child: Expression, window: Int, divisor: Int)
-    extends UnaryExpression {
+    extends NativeUnary[UTF8String] {
   require(window >= 1, s"window must be >= 1, got $window")
   require(divisor > 1, s"divisor must be > 1, got $divisor")
 
   override def dataType: DataType =
     ArrayType(StringType, containsNull = false)
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"cdc_chunks needs a string argument, got ${child.dataType}")
+  override def inputTypes = Seq(StringType)
 
-  def chunks(s: UTF8String): ArrayData = {
+  def compute(s: UTF8String): ArrayData = {
     val bytes = s.getBytes
-    val n = bytes.length
-    var nWords = 1
-    var i = 0
-    while (i < n) { if (bytes(i) == ' ') nWords += 1; i += 1 }
-    val starts = new Array[Int](nWords + 1)
-    starts(0) = 0
-    var wIdx = 1
-    i = 0
-    while (i < n) {
-      if (bytes(i) == ' ') { starts(wIdx) = i + 1; wIdx += 1 }
-      i += 1
-    }
-    starts(nWords) = n + 1 // sentinel: end(t) = starts(t+1) - 1
+    val starts = Words.starts(bytes)
+    val nWords = starts.length - 1
     // bounds in 1-based word counts: 0, every qualifying cut, nWords.
-    // Candidates i = window..nWords-1: shingle = words i-window+1..i
-    // (1-based) = bytes [starts(i-window), starts(i)-1)
-    val bounds = new scala.collection.mutable.ArrayBuffer[Int](8)
-    bounds += 0
+    // Candidates c = window..nWords-1: shingle = words c-window+1..c
+    // (1-based) = 0-based words c-window..c-1
+    val bounds = new Array[Int](nWords + 1)
+    var nBounds = 1
     var c = window
     while (c <= nWords - 1) {
-      var acc = 0L
-      var p = starts(c - window)
-      val end = starts(c) - 1
-      while (p < end) {
-        acc = (acc * 31L + (bytes(p) & 0xffL)) % 2147483647L
-        p += 1
+      if (PolyFold.h31(bytes, starts(c - window), Words.end(starts, c - 1)) %
+          divisor == 0L) {
+        bounds(nBounds) = c
+        nBounds += 1
       }
-      if (acc % divisor == 0L) bounds += c
       c += 1
     }
-    bounds += nWords
-    val out = new Array[Any](bounds.length - 1)
+    bounds(nBounds) = nWords
+    val out = new Array[Any](nBounds)
     var j = 1
-    while (j < bounds.length) {
-      val from = starts(bounds(j - 1))
-      val until = starts(bounds(j)) - 1 // end of word bounds(j)-1
-      out(j - 1) = UTF8String.fromBytes(
-        java.util.Arrays.copyOfRange(bytes, from, until))
+    while (j <= nBounds) {
+      out(j - 1) = Words.slice(bytes, starts, bounds(j - 1), bounds(j)).copy()
       j += 1
     }
     new GenericArrayData(out)
   }
-
-  override def nullSafeEval(input: Any): Any =
-    chunks(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val ref = ctx.addReferenceObj("cdcChunksExpr", this,
-        classOf[CdcChunksExpr].getName)
-      s"${ev.value} = $ref.chunks($c);"
-    })
 
   override protected def withNewChildInternal(newChild: Expression): CdcChunksExpr =
     copy(child = newChild)

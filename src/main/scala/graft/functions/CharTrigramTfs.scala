@@ -1,9 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -29,21 +26,15 @@ import org.apache.spark.unsafe.types.UTF8String
   * byte); trigrams are CODE-POINT trigrams, so multi-byte text grams
   * agree with the `substr`-based re-encode.
   */
-case class CharTrigramTfs(child: Expression) extends UnaryExpression {
+case class CharTrigramTfs(child: Expression)
+    extends NativeUnary[UTF8String] {
 
   override def dataType: DataType = ArrayType(StructType(Seq(
     StructField("word", StringType, nullable = false),
     StructField("tf", LongType, nullable = false))), containsNull = false)
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"char_trigram_tfs needs a string argument, got ${child.dataType}")
+  override def inputTypes = Seq(StringType)
 
-  override def nullSafeEval(input: Any): Any =
-    compute(input.asInstanceOf[UTF8String])
-
-  /** Called from both eval and generated code. */
   def compute(text: UTF8String): ArrayData = {
     val src = text.getBytes
     // space → '_' (byte-safe: 0x20 is never a UTF-8 continuation byte)
@@ -92,13 +83,6 @@ case class CharTrigramTfs(child: Expression) extends UnaryExpression {
       j += 1
     }
     new GenericArrayData(out)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("charTrigramTfs", this,
-      classOf[CharTrigramTfs].getName)
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = $ref.compute($c);")
   }
 
   override protected def withNewChildInternal(newChild: Expression): CharTrigramTfs =

@@ -1,8 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, XXH64}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -29,19 +27,14 @@ object CmsSketch {
   * into the ≤ d·w-cell table by [[graft.ext.FreqSketch.buildCms]].
   */
 case class CmsPositions(child: Expression, d: Int, w: Int)
-  extends UnaryExpression {
+  extends NativeUnary[UTF8String] {
   require(d > 0 && w > 0, s"d=$d w=$w must be positive")
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"cms_positions needs a string argument, got ${child.dataType}")
+  override def inputTypes = Seq(StringType)
 
-  override def nullSafeEval(input: Any): Any = arr(input.asInstanceOf[UTF8String])
-
-  def arr(word: UTF8String): GenericArrayData = {
+  def compute(word: UTF8String): GenericArrayData = {
     val out = new Array[Long](d)
     var i = 0
     while (i < d) {
@@ -49,12 +42,6 @@ case class CmsPositions(child: Expression, d: Int, w: Int)
       i += 1
     }
     new GenericArrayData(out)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("cmsPositions", this,
-      classOf[CmsPositions].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.arr($c);")
   }
 
   override protected def withNewChildInternal(newChild: Expression): CmsPositions =
@@ -68,20 +55,15 @@ case class CmsPositions(child: Expression, d: Int, w: Int)
   * it a safe pruning gate in front of an exact aggregation.
   */
 case class CmsEstimate(child: Expression, table: Array[Long], d: Int, w: Int)
-  extends UnaryExpression {
+  extends NativeUnary[UTF8String] {
   require(table.length == d * w,
     s"table has ${table.length} cells, want ${d * w}")
 
   override def dataType: DataType = LongType
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"cms_estimate needs a string argument, got ${child.dataType}")
+  override def inputTypes = Seq(StringType)
 
-  override def nullSafeEval(input: Any): Any = est(input.asInstanceOf[UTF8String])
-
-  def est(word: UTF8String): Long = {
+  def compute(word: UTF8String): Long = {
     var m = Long.MaxValue
     var i = 0
     while (i < d) {
@@ -90,12 +72,6 @@ case class CmsEstimate(child: Expression, table: Array[Long], d: Int, w: Int)
       i += 1
     }
     m
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("cmsEstimate", this,
-      classOf[CmsEstimate].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.est($c);")
   }
 
   override protected def withNewChildInternal(newChild: Expression): CmsEstimate =

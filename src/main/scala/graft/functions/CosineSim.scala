@@ -1,9 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types._
 
 /** Cosine similarity of two float/double vectors as a native Catalyst
@@ -24,7 +24,7 @@ import org.apache.spark.sql.types._
   * default) or if lengths differ / either norm is zero.
   */
 case class CosineSim(left: Expression, right: Expression)
-  extends BinaryExpression {
+  extends BinaryExpression with ExpectsInputTypes {
 
   override def dataType: DataType = DoubleType
   override def nullable: Boolean = true
@@ -32,14 +32,8 @@ case class CosineSim(left: Expression, right: Expression)
   private def elemType(e: Expression): DataType =
     e.dataType.asInstanceOf[ArrayType].elementType
 
-  override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
-    case (ArrayType(lt, _), ArrayType(rt, _))
-      if Seq(lt, rt).forall(t => t == FloatType || t == DoubleType) =>
-      TypeCheckResult.TypeCheckSuccess
-    case other =>
-      TypeCheckResult.TypeCheckFailure(
-        s"cosine_sim needs two array<float|double> arguments, got $other")
-  }
+  override def inputTypes =
+    Seq.fill(2)(Bridge.anyOf(ArrayType(FloatType), ArrayType(DoubleType)))
 
   private def get(arr: ArrayData, i: Int, t: DataType): Double = t match {
     case FloatType => arr.getFloat(i).toDouble

@@ -1,9 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{BinaryType, DataType, LongType, StringType}
-import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.types.{DataType, LongType}
 
 /** DEFLATE-compressed byte length of a text/binary payload — the
   * compression-ratio quality signal of the Gopher/Dolma lineage:
@@ -22,18 +20,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * compress loop itself is JNI-backed zlib; codegen fuses the row
   * plumbing, which is all the JVM side does).
   */
-case class DeflateLen(child: Expression) extends UnaryExpression {
+case class DeflateLen(child: Expression) extends NativeBytes {
   override def dataType: DataType = LongType
-  override def checkInputDataTypes() =
-    if (child.dataType == StringType || child.dataType == BinaryType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"deflate_len needs a string or binary argument, got ${child.dataType}")
 
-  private def isBinary: Boolean = child.dataType == BinaryType
-
-  def deflateLen(bytes: Array[Byte]): Long = {
+  def compute(bytes: Array[Byte]): Long = {
     val d = new java.util.zip.Deflater(6, true)
     try {
       d.setInput(bytes)
@@ -44,19 +34,6 @@ case class DeflateLen(child: Expression) extends UnaryExpression {
       total
     } finally d.end()
   }
-
-  override def nullSafeEval(input: Any): Any =
-    deflateLen(
-      if (isBinary) input.asInstanceOf[Array[Byte]]
-      else input.asInstanceOf[UTF8String].getBytes)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val ref = ctx.addReferenceObj("deflateExpr", this,
-        classOf[DeflateLen].getName)
-      val src = if (isBinary) c else s"$c.getBytes()"
-      s"${ev.value} = $ref.deflateLen($src);"
-    })
 
   override protected def withNewChildInternal(newChild: Expression): DeflateLen =
     copy(child = newChild)

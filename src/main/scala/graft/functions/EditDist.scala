@@ -1,8 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -25,24 +23,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * 1 — [[LcsLen]]'s element law). Empty vs n tokens → n.
   */
 case class EditDist(left: Expression, right: Expression)
-  extends BinaryExpression {
+  extends NativeBinary[ArrayData, ArrayData] {
 
   override def dataType: DataType = LongType
   override def nullable: Boolean = true
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(StringType, _), ArrayType(StringType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"edit_dist needs two array<string> arguments, got $other")
-    }
+  override def inputTypes = Seq(ArrayType(StringType), ArrayType(StringType))
 
-  override def nullSafeEval(l: Any, r: Any): Any =
-    dist(l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData])
-
-  /** Called from both eval and generated code. */
-  def dist(a: ArrayData, b: ArrayData): Long = {
+  def compute(a: ArrayData, b: ArrayData): Long = {
     val n = a.numElements()
     val m = b.numElements()
     if (n == 0) return m.toLong
@@ -77,11 +65,6 @@ case class EditDist(left: Expression, right: Expression)
       i += 1
     }
     prev(m)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("editDist", this, classOf[EditDist].getName)
-    nullSafeCodeGen(ctx, ev, (a, b) => s"${ev.value} = $ref.dist($a, $b);")
   }
 
   override protected def withNewChildrenInternal(

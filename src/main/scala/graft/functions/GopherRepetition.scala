@@ -1,11 +1,7 @@
 package graft.functions
 
-import scala.collection.mutable
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -23,7 +19,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * The query layer divides by the document's byte length for the
   * filterable x100 fractions. Gram identity and length are exact gram
-  * BYTES (the contiguous `words[w..w+n)` range joined by 0x20 — byte
+  * BYTES (the contiguous [[Words]] range `words[w..w+n)` — byte
   * length == char length on the ASCII corpus, matching the oracle's
   * `length()`).
   *
@@ -31,13 +27,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * query surface), this exists because the `aggregate`-HOF formulation
   * runs in Catalyst's lambda interpreter at ~1 ms/doc·n; here all nine
   * n-sizes share ONE word-boundary scan and nine zero-copy counting
-  * passes at byte speed. doGenCode uses the reference-object pattern so
-  * enclosing operators stay whole-stage-codegen'd.
+  * passes at byte speed.
   *
   * Fewer than n words → that size's counters are 0; null text → null
   * (the query layer coalesces).
   */
-case class GopherRepetition(child: Expression) extends UnaryExpression {
+case class GopherRepetition(child: Expression)
+    extends NativeUnary[UTF8String] {
 
   override def dataType: DataType = StructType(
     GopherRepetition.TopNs.map(n =>
@@ -45,26 +41,12 @@ case class GopherRepetition(child: Expression) extends UnaryExpression {
       GopherRepetition.DupNs.map(n =>
         StructField(s"dup$n", LongType, nullable = false)))
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"gopher_repetition needs a string argument, got ${child.dataType}")
+  override def inputTypes = Seq(StringType)
 
-  override def nullSafeEval(input: Any): Any =
-    compute(input.asInstanceOf[UTF8String])
-
-  /** Called from both eval and generated code. */
   def compute(text: UTF8String): InternalRow = {
     val bytes = text.getBytes
-    val starts = mutable.ArrayBuffer(0)
-    val ends = mutable.ArrayBuffer.empty[Int]
-    var i = 0
-    while (i < bytes.length) {
-      if (bytes(i) == 0x20) { ends += i; starts += i + 1 }
-      i += 1
-    }
-    ends += bytes.length
-    val nWords = starts.length
+    val starts = Words.starts(bytes)
+    val nWords = starts.length - 1
     val out = new Array[Any](GopherRepetition.TopNs.length +
       GopherRepetition.DupNs.length)
     var slot = 0
@@ -75,8 +57,7 @@ case class GopherRepetition(child: Expression) extends UnaryExpression {
         val counts = new java.util.HashMap[UTF8String, java.lang.Long]
         var w = 0
         while (w <= nWords - n) {
-          val g = UTF8String.fromBytes(bytes, starts(w),
-            ends(w + n - 1) - starts(w))
+          val g = Words.slice(bytes, starts, w, w + n)
           val prev = counts.get(g)
           counts.put(g, if (prev == null) 1L else prev + 1L)
           w += 1
@@ -93,13 +74,6 @@ case class GopherRepetition(child: Expression) extends UnaryExpression {
       slot += 1
     }
     new GenericInternalRow(out)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("gopherRepetition", this,
-      classOf[GopherRepetition].getName)
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = $ref.compute($c);")
   }
 
   override protected def withNewChildInternal(newChild: Expression): GopherRepetition =

@@ -1,8 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -17,14 +16,14 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Identical by construction to
   * `polyFingerprint64(concat_ws(" ", slice(split(text, " "), pos + 1, k)))`
-  * (spec-asserted): word boundaries are single-space splits with empty
-  * words kept, so a window's joined string is byte-identical to the
-  * original span and the hash folds DIRECTLY over the byte range with
-  * zero per-window allocation. The HOF formulation this replaces
-  * built a k-word string per TOKEN (O(tokens·k) interpreted
+  * (spec-asserted): [[Words]] keeps empty words, so a window's joined
+  * string is byte-identical to the original span and the hash folds
+  * DIRECTLY over the byte range with zero per-window allocation. The
+  * HOF formulation this replaces built a k-word string per TOKEN (O(tokens·k) interpreted
   * allocation inside the scan); this is one byte pass per row.
   */
-case class GramHashes(child: Expression, k: Int) extends UnaryExpression {
+case class GramHashes(child: Expression, k: Int)
+    extends NativeUnary[UTF8String] {
   require(k >= 1, s"k (window width) must be >= 1, got $k")
 
   override def dataType: DataType = ArrayType(
@@ -33,58 +32,22 @@ case class GramHashes(child: Expression, k: Int) extends UnaryExpression {
       StructField("fp", LongType, nullable = false))),
     containsNull = false)
 
-  override def checkInputDataTypes() =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"gram_hashes needs a string argument, got ${child.dataType}")
+  override def inputTypes = Seq(StringType)
 
-  def hashes(s: UTF8String): ArrayData = {
+  def compute(s: UTF8String): ArrayData = {
     val bytes = s.getBytes
-    val n = bytes.length
-    var nWords = 1
-    var i = 0
-    while (i < n) { if (bytes(i) == ' ') nWords += 1; i += 1 }
-    val starts = new Array[Int](nWords + 1)
-    starts(0) = 0
-    var wIdx = 1
-    i = 0
-    while (i < n) {
-      if (bytes(i) == ' ') { starts(wIdx) = i + 1; wIdx += 1 }
-      i += 1
-    }
-    starts(nWords) = n + 1 // sentinel: end(t) = starts(t+1) - 1
-    val nGrams = nWords - (k - 1)
+    val starts = Words.starts(bytes)
+    val nGrams = starts.length - 1 - (k - 1) // nWords − (k − 1)
     if (nGrams < 1) return new GenericArrayData(Array.empty[Any])
     val rows = new Array[Any](nGrams)
     var g = 0
     while (g < nGrams) {
-      var a = 0L
-      var b = 0L
-      var p = starts(g)
-      val end = starts(g + k) - 1 // end of word g+k-1 (exclusive)
-      while (p < end) {
-        val c = bytes(p) & 0xffL
-        a = (a * 31L + c) % 2147483647L
-        b = (b * 37L + c) % 2147483629L
-        p += 1
-      }
-      rows(g) = InternalRow(g.toLong, a * 2147483629L + b)
+      rows(g) = InternalRow(g.toLong,
+        PolyFold.h64(bytes, starts(g), Words.end(starts, g + k - 1)))
       g += 1
     }
     new GenericArrayData(rows)
   }
-
-  override def nullSafeEval(input: Any): Any =
-    hashes(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val ref = ctx.addReferenceObj("gramHashesExpr", this,
-        classOf[GramHashes].getName)
-      s"${ev.value} = $ref.hashes($c);"
-    })
 
   override protected def withNewChildInternal(newChild: Expression): GramHashes =
     copy(child = newChild)

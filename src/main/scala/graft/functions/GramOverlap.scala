@@ -1,9 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -26,9 +23,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * [[WordTfs]] argument, one level up: at 100 TB the whole metric
   * becomes the id join plus a per-order rollup).
   *
-  * `chars = false` (word mode): units are the 0x20-separated tokens,
-  * the empty string has ZERO tokens (the eval operators' `toksOf`
-  * law), and the order-n gram equals
+  * `chars = false` (word mode): units are the [[Words]] of the text,
+  * except that the empty string has ZERO tokens (the eval operators'
+  * `toksOf` law), and the order-n gram equals
   * `array_join(slice(tokens, i, n), " ")` — materialized as the BYTE
   * SLICE spanning tokens i..i+n−1, which is the same string because
   * the callers feed single-space-normalized text.
@@ -48,7 +45,7 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 case class GramOverlap(left: Expression, right: Expression,
                        maxN: Int, chars: Boolean)
-    extends BinaryExpression {
+    extends NativeBinary[UTF8String, UTF8String] {
   require(maxN >= 1 && maxN <= 8, s"maxN must be in [1, 8], got $maxN")
 
   override def dataType: DataType = ArrayType(StructType(Seq(
@@ -57,36 +54,11 @@ case class GramOverlap(left: Expression, right: Expression,
     StructField("tp", LongType, nullable = false),
     StructField("tr", LongType, nullable = false))), containsNull = false)
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (left.dataType == StringType && right.dataType == StringType)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"gram_overlap needs two string arguments, got " +
-        s"${left.dataType} / ${right.dataType}")
+  override def inputTypes = Seq(StringType, StringType)
 
-  override def nullSafeEval(p: Any, r: Any): Any =
-    compute(p.asInstanceOf[UTF8String], r.asInstanceOf[UTF8String])
-
-  /** Unit boundaries: in char mode unit i is byte i (bounds(i) = i,
-    * count = bytes.length); in word mode bounds hold each token's
-    * start offset plus the terminal end, and the gram (i, n) spans
-    * bytes [bounds(i), bounds(i+n) − 1) — minus the trailing space
-    * (or end). Empty text → zero units in BOTH modes.
+  /** Units: in char mode unit i is byte i; in word mode the [[Words]].
+    * Empty text → zero units in BOTH modes.
     */
-  private def unitStarts(bytes: Array[Byte]): Array[Int] = {
-    if (bytes.length == 0) return Array(0)
-    val starts = new scala.collection.mutable.ArrayBuilder.ofInt
-    starts += 0
-    var i = 0
-    while (i < bytes.length) {
-      if (bytes(i) == 0x20) starts += i + 1
-      i += 1
-    }
-    starts += bytes.length + 1 // sentinel: end(last) = len
-    starts.result()
-  }
-
-  /** Called from both eval and generated code. */
   def compute(p: UTF8String, r: UTF8String): ArrayData = {
     val pb = p.getBytes
     val rb = r.getBytes
@@ -101,8 +73,8 @@ case class GramOverlap(left: Expression, right: Expression,
         n += 1
       }
     } else {
-      val ps = unitStarts(pb)
-      val rs = unitStarts(rb)
+      val ps = Words.starts(pb)
+      val rs = Words.starts(rb)
       val lp = if (pb.length == 0) 0 else ps.length - 1
       val lr = if (rb.length == 0) 0 else rs.length - 1
       var n = 1
@@ -150,7 +122,7 @@ case class GramOverlap(left: Expression, right: Expression,
     val counts = new java.util.HashMap[UTF8String, Integer](tp * 2)
     var i = 0
     while (i < tp) {
-      val g = UTF8String.fromBytes(pb, ps(i), ps(i + n) - 1 - ps(i))
+      val g = Words.slice(pb, ps, i, i + n)
       val prev = counts.get(g)
       counts.put(g, if (prev == null) 1 else prev + 1)
       i += 1
@@ -158,7 +130,7 @@ case class GramOverlap(left: Expression, right: Expression,
     var m = 0L
     i = 0
     while (i < tr) {
-      val g = UTF8String.fromBytes(rb, rs(i), rs(i + n) - 1 - rs(i))
+      val g = Words.slice(rb, rs, i, i + n)
       val left = counts.get(g)
       if (left != null && left > 0) {
         counts.put(g, left - 1)
@@ -167,13 +139,6 @@ case class GramOverlap(left: Expression, right: Expression,
       i += 1
     }
     m
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("gramOverlap", this,
-      classOf[GramOverlap].getName)
-    nullSafeCodeGen(ctx, ev, (pc, rc) =>
-      s"${ev.value} = $ref.compute($pc, $rc);")
   }
 
   override protected def withNewChildrenInternal(

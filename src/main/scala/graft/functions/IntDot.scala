@@ -1,9 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types._
 
 /** Integer dot product of two int/long vectors as a native Catalyst
@@ -26,7 +26,7 @@ import org.apache.spark.sql.types._
   * default) or if lengths differ.
   */
 case class IntDot(left: Expression, right: Expression)
-  extends BinaryExpression {
+  extends BinaryExpression with ExpectsInputTypes {
 
   override def dataType: DataType = LongType
   override def nullable: Boolean = true
@@ -34,14 +34,8 @@ case class IntDot(left: Expression, right: Expression)
   private def elemType(e: Expression): DataType =
     e.dataType.asInstanceOf[ArrayType].elementType
 
-  override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
-    case (ArrayType(lt, _), ArrayType(rt, _))
-      if Seq(lt, rt).forall(t => t == IntegerType || t == LongType) =>
-      TypeCheckResult.TypeCheckSuccess
-    case other =>
-      TypeCheckResult.TypeCheckFailure(
-        s"int_dot needs two array<int|long> arguments, got $other")
-  }
+  override def inputTypes =
+    Seq.fill(2)(Bridge.anyOf(ArrayType(IntegerType), ArrayType(LongType)))
 
   private def get(arr: ArrayData, i: Int, t: DataType): Long = t match {
     case IntegerType => arr.getInt(i).toLong

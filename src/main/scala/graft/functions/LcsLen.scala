@@ -1,8 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -10,10 +8,10 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Longest-common-subsequence LENGTH of two string arrays as one native
   * Catalyst expression — the row-local kernel of ROUGE-L
   * ([[graft.ext.Eval.rougeL]]): the classic two-row DP, O(|a|·|b|) time
-  * and O(|b|) space, entirely inside whole-stage codegen via the
-  * reference-object pattern ([[BpeMergeTokens]]). Pure integer — the
-  * score is bit-reproducible in any engine, which is what lets the
-  * DuckDB oracle replay it (as a recursive-CTE row carry) exactly.
+  * and O(|b|) space, entirely inside whole-stage codegen
+  * ([[NativeExpr]]). Pure integer — the score is bit-reproducible in
+  * any engine, which is what lets the DuckDB oracle replay it (as a
+  * recursive-CTE row carry) exactly.
   *
   * The recurrence used is the relaxed max-of-three form
   * `L[i][j] = max(L[i-1][j], L[i][j-1], L[i-1][j-1] + eq)` — equivalent
@@ -25,24 +23,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * default); an element that is null matches nothing. Empty → 0.
   */
 case class LcsLen(left: Expression, right: Expression)
-  extends BinaryExpression {
+  extends NativeBinary[ArrayData, ArrayData] {
 
   override def dataType: DataType = LongType
   override def nullable: Boolean = true
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(StringType, _), ArrayType(StringType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"lcs_len needs two array<string> arguments, got $other")
-    }
+  override def inputTypes = Seq(ArrayType(StringType), ArrayType(StringType))
 
-  override def nullSafeEval(l: Any, r: Any): Any =
-    lcs(l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData])
-
-  /** Called from both eval and generated code. */
-  def lcs(a: ArrayData, b: ArrayData): Long = {
+  def compute(a: ArrayData, b: ArrayData): Long = {
     val n = a.numElements()
     val m = b.numElements()
     if (n == 0 || m == 0) return 0L
@@ -73,11 +61,6 @@ case class LcsLen(left: Expression, right: Expression)
       i += 1
     }
     prev(m)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("lcsLen", this, classOf[LcsLen].getName)
-    nullSafeCodeGen(ctx, ev, (a, b) => s"${ev.value} = $ref.lcs($a, $b);")
   }
 
   override protected def withNewChildrenInternal(

@@ -1,8 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, LongType}
 
@@ -30,7 +29,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, L
   * table — so this expression returns all-zero buckets for those rows.
   */
 case class LshBuckets(child: Expression, tables: Int, planes: Int, dims: Int)
-  extends UnaryExpression {
+  extends NativeUnary[ArrayData] {
 
   require(tables >= 1 && planes >= 1 && planes <= 63 && dims >= 1,
     s"need tables >= 1, 1 <= planes <= 63, dims >= 1; " +
@@ -38,11 +37,8 @@ case class LshBuckets(child: Expression, tables: Int, planes: Int, dims: Int)
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType | DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"lsh_buckets needs array<float|double>, got $other")
-  }
+  override def inputTypes =
+    Seq(Bridge.anyOf(ArrayType(FloatType), ArrayType(DoubleType)))
 
   @transient private lazy val isFloat: Boolean = child.dataType match {
     case ArrayType(FloatType, _) => true
@@ -71,14 +67,7 @@ case class LshBuckets(child: Expression, tables: Int, planes: Int, dims: Int)
     w
   }
 
-  override def nullSafeEval(input: Any): Any =
-    computeBuckets(input.asInstanceOf[ArrayData])
-
-  /** Called from both eval and generated code (reference-object pattern:
-    * the stage stays whole-stage-codegen'd, per-row work is one virtual
-    * call into this compiled loop — no CodegenFallback).
-    */
-  def computeBuckets(vec: ArrayData): ArrayData = {
+  def compute(vec: ArrayData): ArrayData = {
     val tp = tables * planes
     if (vec.numElements() != dims) return LshBuckets.zeros(tables)
     val acc = new Array[Double](tp)
@@ -110,11 +99,6 @@ case class LshBuckets(child: Expression, tables: Int, planes: Int, dims: Int)
       t += 1
     }
     new GenericArrayData(out)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("lshBuckets", this, classOf[LshBuckets].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.computeBuckets($c);")
   }
 
   override protected def withNewChildInternal(newChild: Expression): LshBuckets =

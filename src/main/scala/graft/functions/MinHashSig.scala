@@ -1,16 +1,14 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
 /** MinHash signature of a shingle-hash set: per permutation (a, b),
-  * min over hashes of (a·h + b) mod P — one fused pass over the input
-  * array computing all permutations, instead of `perms` separate
-  * interpreted `transform`/`array_min` passes. Empty input → P per slot
-  * (matches the declarative coalesce fallback).
+  * min over hashes of (a·h + b) mod P, P = [[PolyFold.P31]] — one fused
+  * pass over the input array computing all permutations, instead of
+  * `perms` separate interpreted `transform`/`array_min` passes. Empty
+  * input → P per slot (matches the declarative coalesce fallback).
   *
   * Together with [[ShingleHashes]] this makes the whole dedup
   * signature path native: text → hash set → signature with no Catalyst
@@ -19,50 +17,31 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * (t_minhash_sig).
   */
 case class MinHashSig(child: Expression, perms: Seq[(Long, Long)])
-  extends UnaryExpression {
+  extends NativeUnary[ArrayData] {
 
-  private val P = 2147483647L
+  private val as = perms.map(_._1).toArray
+  private val bs = perms.map(_._2).toArray
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"minhash_sig needs array<bigint>, got $other")
-  }
+  override def inputTypes = Seq(ArrayType(LongType))
 
-  override def nullSafeEval(input: Any): Any =
-    computeSig(input.asInstanceOf[ArrayData])
-
-  /** Called from both eval and generated code (reference-object pattern:
-    * the stage stays whole-stage-codegen'd, the per-row work is one
-    * virtual call into this compiled loop — no CodegenFallback, which
-    * would exclude the whole operator from stage fusion).
-    */
-  def computeSig(hashes: ArrayData): ArrayData = {
-    val k = perms.length
-    val mins = Array.fill(k)(P)
-    val as = perms.map(_._1).toArray
-    val bs = perms.map(_._2).toArray
+  def compute(hashes: ArrayData): ArrayData = {
+    val k = as.length
+    val mins = Array.fill(k)(PolyFold.P31)
     var i = 0
     val n = hashes.numElements()
     while (i < n) {
       val h = hashes.getLong(i)
       var j = 0
       while (j < k) {
-        val v = (as(j) * h + bs(j)) % P
+        val v = (as(j) * h + bs(j)) % PolyFold.P31
         if (v < mins(j)) mins(j) = v
         j += 1
       }
       i += 1
     }
     new GenericArrayData(mins)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("minhashSig", this, classOf[MinHashSig].getName)
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = $ref.computeSig($c);")
   }
 
   override protected def withNewChildInternal(newChild: Expression): MinHashSig =

@@ -1,9 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{BinaryType, DataType, LongType, StringType}
-import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.types.{DataType, LongType}
 
 /** Energy-delta acoustic fingerprint of a PCM sample buffer (the
   * Shazam/Chromaprint family's core signal, integer-exact):
@@ -17,11 +15,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *     the guarded Hamming-ball machinery (Dedup.hammingNearDups) does
   *     audio near-dup exactly as it does image dHash.
   *
-  * Native Catalyst expression with whole-stage codegen: the per-byte
-  * decode loop is the hot path and runs fused inside the generated
-  * stage, like [[PolyHash]]. Every operation is integer arithmetic on
-  * byte values, so the DuckDB oracle replays it exactly with list
-  * lambdas (ord² sums over 16-char frames). Only 60 delta bits are
+  * Native Catalyst expression ([[NativeBytes]]), like [[PolyHash]].
+  * Every operation is integer arithmetic on byte values, so the DuckDB
+  * oracle replays it exactly with list lambdas (ord² sums over 16-char frames). Only 60 delta bits are
   * used — bit 63 is the Long sign and engines differ on >> semantics
   * near it; 60 keeps every shift unambiguous.
   *
@@ -29,21 +25,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * compressed codecs (mp3/aac) stay sandbox-absent and route through
   * the corrupt-sample fallback like image decode does.
   */
-case class PcmFingerprint(child: Expression) extends UnaryExpression {
+case class PcmFingerprint(child: Expression) extends NativeBytes {
   override def dataType: DataType = LongType
-  override def checkInputDataTypes() =
-    if (child.dataType == StringType || child.dataType == BinaryType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"pcm_fingerprint needs a string or binary argument, got ${child.dataType}")
 
-  private def isBinary: Boolean = child.dataType == BinaryType
-
-  override def nullSafeEval(input: Any): Any = {
-    val bytes =
-      if (isBinary) input.asInstanceOf[Array[Byte]]
-      else input.asInstanceOf[UTF8String].getBytes
+  def compute(bytes: Array[Byte]): Long = {
     var fp = 0L
     var prev = 0L
     var f = 0
@@ -62,34 +47,6 @@ case class PcmFingerprint(child: Expression) extends UnaryExpression {
     }
     fp
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val bytes = ctx.freshName("bytes")
-      val i = ctx.freshName("i")
-      val end = ctx.freshName("end")
-      val e = ctx.freshName("e")
-      val v = ctx.freshName("v")
-      val f = ctx.freshName("f")
-      val prev = ctx.freshName("prev")
-      val fp = ctx.freshName("fp")
-      val src = if (isBinary) c else s"$c.getBytes()"
-      s"""
-         |byte[] $bytes = $src;
-         |long $fp = 0L; long $prev = 0L; int $f = 0; int $i = 0;
-         |while ($i < $bytes.length) {
-         |  int $end = Math.min($i + 16, $bytes.length);
-         |  long $e = 0L;
-         |  for (; $i < $end; $i++) {
-         |    long $v = (long) ($bytes[$i] & 0xff);
-         |    $e += $v * $v;
-         |  }
-         |  if ($f >= 1 && $f <= 60 && $e > $prev) $fp |= 1L << ($f - 1);
-         |  $prev = $e; $f++;
-         |}
-         |${ev.value} = $fp;
-       """.stripMargin
-    })
 
   override protected def withNewChildInternal(newChild: Expression): PcmFingerprint =
     copy(child = newChild)

@@ -1,67 +1,26 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{BinaryType, DataType, LongType, StringType}
-import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.types.{DataType, LongType}
 
-/** Deterministic polynomial rolling-hash fingerprint of a string:
+/** Deterministic polynomial rolling-hash fingerprint of a string or
+  * binary value: [[PolyFold.h31]] over its bytes,
   *
-  *   h = fold(chars)(acc, c => (acc * 31 + c) mod 2^31-1),  acc0 = 0
+  *   h = fold(bytes)(acc, c => (acc * 31 + c) mod 2^31-1),  acc0 = 0
   *
-  * Native Catalyst `Expression` with whole-stage codegen (`doGenCode`),
-  * so document fingerprinting stays inside the generated loop — no UDF
-  * serialization, no boxing. The arithmetic is plain 64-bit int ops on
-  * UTF-8 bytes, so the same value is computable in any engine (the
-  * DuckDB oracle reproduces it with `list_reduce`); mod 2^31-1 keeps
-  * every intermediate well inside Long range (no overflow anywhere).
+  * Native Catalyst expression ([[NativeBytes]]), so document
+  * fingerprinting stays inside the generated stage — no UDF
+  * serialization, no boxing. The same value is computable in any
+  * engine (the DuckDB oracle reproduces it with `list_reduce`).
   *
   * Used by the `t_fingerprint` text-analysis query (SURVEY.md §7 ext/);
   * the reference pipeline itself needs no custom expressions
   * (SURVEY.md §2.9).
   */
-case class PolyHash(child: Expression) extends UnaryExpression {
+case class PolyHash(child: Expression) extends NativeBytes {
   override def dataType: DataType = LongType
-  override def checkInputDataTypes() =
-    if (child.dataType == StringType || child.dataType == BinaryType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"polyhash needs a string or binary argument, got ${child.dataType}")
 
-  // binary input hashes its raw bytes — identical to the string path on
-  // UTF-8 text, and free of the binary→string cast's replacement-char
-  // substitution on non-UTF-8 payloads (the multimodal trap)
-  private def isBinary: Boolean = child.dataType == BinaryType
-
-  override def nullSafeEval(input: Any): Any = {
-    val bytes =
-      if (isBinary) input.asInstanceOf[Array[Byte]]
-      else input.asInstanceOf[UTF8String].getBytes
-    var acc = 0L
-    var i = 0
-    while (i < bytes.length) {
-      acc = (acc * 31L + (bytes(i) & 0xffL)) % 2147483647L
-      i += 1
-    }
-    acc
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val bytes = ctx.freshName("bytes")
-      val i = ctx.freshName("i")
-      val acc = ctx.freshName("acc")
-      val src = if (isBinary) c else s"$c.getBytes()"
-      s"""
-         |byte[] $bytes = $src;
-         |long $acc = 0L;
-         |for (int $i = 0; $i < $bytes.length; $i++) {
-         |  $acc = ($acc * 31L + ($bytes[$i] & 0xffL)) % 2147483647L;
-         |}
-         |${ev.value} = $acc;
-       """.stripMargin
-    })
+  def compute(bytes: Array[Byte]): Long = PolyFold.h31(bytes)
 
   override protected def withNewChildInternal(newChild: Expression): PolyHash =
     copy(child = newChild)

@@ -1,11 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{BinaryType, DataType, LongType, StringType}
-import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.types.{DataType, LongType}
 
-/** 62-bit packed double polynomial fingerprint:
+/** 62-bit packed double polynomial fingerprint, [[PolyFold.h64]]:
   *
   *   h31 = fold(bytes)(acc, c => (acc · 31 + c) mod 2³¹−1)
   *   h37 = fold(bytes)(acc, c => (acc · 37 + c) mod 2³¹−19)
@@ -21,57 +19,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * past 2³¹ distinct keys; the exact operators that key whole
   * relations on content hashes use THIS.
   *
-  * Same cross-engine contract as [[PolyHash]]: plain 64-bit integer
-  * ops on UTF-8 bytes, every intermediate far inside Long (max acc
-  * ≈ 2³¹·37 + 255 ≈ 2³⁶·1.2), replayed in DuckDB with two
-  * `list_reduce` folds.
+  * Same cross-engine contract as [[PolyHash]], replayed in DuckDB with
+  * two `list_reduce` folds.
   */
-case class PolyHash64(child: Expression) extends UnaryExpression {
+case class PolyHash64(child: Expression) extends NativeBytes {
   override def dataType: DataType = LongType
-  override def checkInputDataTypes() =
-    if (child.dataType == StringType || child.dataType == BinaryType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"polyhash64 needs a string or binary argument, got ${child.dataType}")
 
-  private def isBinary: Boolean = child.dataType == BinaryType
-
-  override def nullSafeEval(input: Any): Any = {
-    val bytes =
-      if (isBinary) input.asInstanceOf[Array[Byte]]
-      else input.asInstanceOf[UTF8String].getBytes
-    var a = 0L
-    var b = 0L
-    var i = 0
-    while (i < bytes.length) {
-      val c = bytes(i) & 0xffL
-      a = (a * 31L + c) % 2147483647L
-      b = (b * 37L + c) % 2147483629L
-      i += 1
-    }
-    a * 2147483629L + b
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val bytes = ctx.freshName("bytes")
-      val i = ctx.freshName("i")
-      val a = ctx.freshName("a")
-      val b = ctx.freshName("b")
-      val ch = ctx.freshName("ch")
-      val src = if (isBinary) c else s"$c.getBytes()"
-      s"""
-         |byte[] $bytes = $src;
-         |long $a = 0L; long $b = 0L;
-         |for (int $i = 0; $i < $bytes.length; $i++) {
-         |  long $ch = $bytes[$i] & 0xffL;
-         |  $a = ($a * 31L + $ch) % 2147483647L;
-         |  $b = ($b * 37L + $ch) % 2147483629L;
-         |}
-         |${ev.value} = $a * 2147483629L + $b;
-       """.stripMargin
-    })
+  def compute(bytes: Array[Byte]): Long = PolyFold.h64(bytes, 0, bytes.length)
 
   override protected def withNewChildInternal(newChild: Expression): PolyHash64 =
     copy(child = newChild)

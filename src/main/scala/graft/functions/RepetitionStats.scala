@@ -1,11 +1,7 @@
 package graft.functions
 
-import scala.collection.mutable
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -17,52 +13,35 @@ import org.apache.spark.unsafe.types.UTF8String
   * semantically right and shuffle-free but costs ~1 ms/document in
   * Catalyst's lambda interpreter, which put it on the wrong side of the
   * same scan-stage budget as [[ShingleHashes]]; this loop is the same
-  * statistic at byte-scan speed. doGenCode uses the reference-object
-  * pattern so enclosing operators stay whole-stage-codegen'd, and the
-  * three struct-field reads of one call collapse via codegen
-  * subexpression elimination.
+  * statistic at byte-scan speed. The three struct-field reads of one
+  * call collapse via codegen subexpression elimination.
   *
   * Semantics (asserted against the HOF spec in NativeExprSpec): words =
-  * split on 0x20 keeping empties, gram = two adjacent words joined by
-  * the space (the contiguous byte range), counts by exact gram bytes;
+  * [[Words]], gram = two adjacent words joined by the space (the
+  * contiguous byte range), counts by exact gram bytes;
   * fewer than 2 words → (0, 0, 0); null text → null (the query layer
   * coalesces).
   */
-case class RepetitionStats(child: Expression) extends UnaryExpression {
+case class RepetitionStats(child: Expression)
+    extends NativeUnary[UTF8String] {
 
   override def dataType: DataType = StructType(Seq(
     StructField("n_2grams", LongType, nullable = false),
     StructField("max_2gram_count", LongType, nullable = false),
     StructField("n_dup_2grams", LongType, nullable = false)))
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"repetition_stats needs a string argument, got ${child.dataType}")
+  override def inputTypes = Seq(StringType)
 
-  override def nullSafeEval(input: Any): Any =
-    compute(input.asInstanceOf[UTF8String])
-
-  /** Called from both eval and generated code. */
   def compute(text: UTF8String): InternalRow = {
     val bytes = text.getBytes
-    val starts = mutable.ArrayBuffer(0)
-    val ends = mutable.ArrayBuffer.empty[Int]
-    var i = 0
-    while (i < bytes.length) {
-      if (bytes(i) == 0x20) { ends += i; starts += i + 1 }
-      i += 1
-    }
-    ends += bytes.length
-    val nWords = starts.length
+    val starts = Words.starts(bytes)
+    val nWords = starts.length - 1
     if (nWords < 2)
       return new GenericInternalRow(Array[Any](0L, 0L, 0L))
     val counts = new java.util.HashMap[UTF8String, java.lang.Long]
     var w = 0
     while (w < nWords - 1) {
-      // the gram is words w, w+1 joined by 0x20 — the contiguous byte
-      // range starts(w)..ends(w+1); fromBytes wraps without copying
-      val g = UTF8String.fromBytes(bytes, starts(w), ends(w + 1) - starts(w))
+      val g = Words.slice(bytes, starts, w, w + 2)
       val prev = counts.get(g)
       counts.put(g, if (prev == null) 1L else prev + 1L)
       w += 1
@@ -76,13 +55,6 @@ case class RepetitionStats(child: Expression) extends UnaryExpression {
       if (c > 1L) dup += c
     }
     new GenericInternalRow(Array[Any]((nWords - 1).toLong, mx, dup))
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("repetitionStats", this,
-      classOf[RepetitionStats].getName)
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = $ref.compute($c);")
   }
 
   override protected def withNewChildInternal(newChild: Expression): RepetitionStats =

@@ -5,10 +5,9 @@ import java.nio.ByteBuffer
 import scala.collection.mutable
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types._
 
 /** Exact ROC-AUC as a native SQL AGGREGATE —
@@ -41,7 +40,8 @@ case class RocAucAgg(
     label: Expression,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[mutable.LongMap[Array[Long]]] {
+  extends TypedImperativeAggregate[mutable.LongMap[Array[Long]]]
+  with ExpectsInputTypes {
 
   override def children: Seq[Expression] = Seq(score, label)
   override def nullable: Boolean = false
@@ -52,14 +52,8 @@ case class RocAucAgg(
     StructField("u2", LongType, nullable = false),
     StructField("auc_x10000", LongType, nullable = true)))
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    (score.dataType, label.dataType) match {
-      case (ByteType | ShortType | IntegerType | LongType, BooleanType) =>
-        TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        "roc_auc(score, label) needs an integral score and a boolean " +
-          s"label, got $other")
-    }
+  override def inputTypes = Seq(
+    Bridge.anyOf(ByteType, ShortType, IntegerType, LongType), BooleanType)
 
   override def createAggregationBuffer(): mutable.LongMap[Array[Long]] =
     mutable.LongMap.empty[Array[Long]]

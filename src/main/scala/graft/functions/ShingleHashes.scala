@@ -1,9 +1,7 @@
 package graft.functions
 
 import scala.collection.mutable
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -13,15 +11,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * an interpreted higher-order-function chain
   * (split → transform(concat_ws) → transform(polyhash) → array_distinct),
   * which costs ~1 ms/document in Catalyst's lambda interpreter. At
-  * 100 TB text dedup this map stage IS the workload. doGenCode uses the
-  * reference-object pattern — the generated stage makes one virtual
-  * call per row into the compiled byte-scan loop, and the enclosing
-  * operators stay whole-stage-codegen'd (a CodegenFallback would
-  * exclude the whole operator from stage fusion).
+  * 100 TB text dedup this map stage IS the workload.
   *
   * Value semantics match the declarative chain exactly (asserted
-  * bitwise in NativeExprSpec): shingle = n consecutive words (split on
-  * 0x20), hash = PolyHash over the shingle's UTF-8 bytes with 0x20
+  * bitwise in NativeExprSpec): shingle = n consecutive [[Words]],
+  * hash = [[PolyFold.h31]] over the shingle's UTF-8 bytes with 0x20
   * between words, distinct preserving first occurrence; fewer than n
   * words → the whole text is the single shingle; null text → null
   * (the HOF spec wraps itself in an isNotNull guard to agree).
@@ -32,66 +26,29 @@ import org.apache.spark.unsafe.types.UTF8String
   * U+FFFD on invalid UTF-8 and hash differently).
   */
 case class ShingleHashes(child: Expression, n: Int)
-  extends UnaryExpression {
+  extends NativeUnary[UTF8String] {
 
   require(n >= 1, s"shingle width must be >= 1, got $n")
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"shingle_hashes needs a string argument, got ${child.dataType}")
+  override def inputTypes = Seq(StringType)
 
-  override def nullSafeEval(input: Any): Any =
-    computeHashes(input.asInstanceOf[UTF8String])
-
-  /** Called from both eval and generated code. */
-  def computeHashes(text: UTF8String): ArrayData = {
+  def compute(text: UTF8String): ArrayData = {
     val bytes = text.getBytes
-    val P = 2147483647L
-    // word boundaries: starts(i) .. ends(i) (exclusive), split on 0x20,
-    // keeping empty words exactly like Spark's split(text, " ")
-    val starts = mutable.ArrayBuffer(0)
-    val ends = mutable.ArrayBuffer.empty[Int]
-    var i = 0
-    while (i < bytes.length) {
-      if (bytes(i) == 0x20) { ends += i; starts += i + 1 }
-      i += 1
-    }
-    ends += bytes.length
-    val nWords = starts.length
-
-    def hashRange(from: Int, until: Int, acc0: Long): Long = {
-      var acc = acc0
-      var k = from
-      while (k < until) {
-        acc = (acc * 31L + (bytes(k) & 0xffL)) % P
-        k += 1
-      }
-      acc
-    }
-
+    val starts = Words.starts(bytes)
+    val nWords = starts.length - 1
     val out = new mutable.LinkedHashSet[Long]
     if (nWords < n) {
-      out += hashRange(0, bytes.length, 0L)
+      out += PolyFold.h31(bytes)
     } else {
       var w = 0
       while (w <= nWords - n) {
-        // the shingle is words w..w+n-1 joined by 0x20 — which is the
-        // contiguous byte range starts(w)..ends(w+n-1) of the input
-        out += hashRange(starts(w), ends(w + n - 1), 0L)
+        out += PolyFold.h31(bytes, starts(w), Words.end(starts, w + n - 1))
         w += 1
       }
     }
     new GenericArrayData(out.toArray)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("shingleHashes", this,
-      classOf[ShingleHashes].getName)
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = $ref.computeHashes($c);")
   }
 
   override protected def withNewChildInternal(newChild: Expression): ShingleHashes =

@@ -1,8 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
@@ -17,26 +15,16 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * Empty set: `ones * 2 >= size` is 0 ≥ 0 = true for every bit, so the
   * HOF sets ALL bits — reproduced exactly here. Null input → null.
   */
-case class SimHash(child: Expression, bits: Int) extends UnaryExpression {
+case class SimHash(child: Expression, bits: Int)
+    extends NativeUnary[ArrayData] {
 
   require(bits >= 1 && bits <= 63, s"need 1 <= bits <= 63, got $bits")
 
   override def dataType: DataType = LongType
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"simhash needs array<bigint>, got $other")
-  }
+  override def inputTypes = Seq(ArrayType(LongType))
 
-  override def nullSafeEval(input: Any): Any =
-    computeSimhash(input.asInstanceOf[ArrayData])
-
-  /** Called from both eval and generated code (reference-object pattern:
-    * whole-stage codegen is preserved, per-row work is one virtual call
-    * into this compiled loop).
-    */
-  def computeSimhash(hashes: ArrayData): Long = {
+  def compute(hashes: ArrayData): Long = {
     val counts = new Array[Int](bits)
     val n = hashes.numElements()
     var i = 0
@@ -56,11 +44,6 @@ case class SimHash(child: Expression, bits: Int) extends UnaryExpression {
       b += 1
     }
     out
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("simHash", this, classOf[SimHash].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.computeSimhash($c);")
   }
 
   override protected def withNewChildInternal(newChild: Expression): SimHash =

@@ -1,8 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -30,8 +28,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * Symbols are Unicode CODE POINTS (the [[BpeMergeTokens]] walk), and
   * `substr`/`length` on both engines count code points, so block cuts
   * and piece slices align cross-engine. Null text → null. One native
-  * expression on the reference-object pattern: the whole tokenization
-  * is a map over the scan — no shuffle, no UDF, whole-stage codegen.
+  * expression ([[NativeExpr]]): the whole tokenization is a map over
+  * the scan — no shuffle, no UDF, whole-stage codegen.
   *
   * `byteLevel = true` switches the symbols to the pre-token's UTF-8
   * bytes rendered through [[ByteLevel]] (the [[BpeMergeTokens]] byte
@@ -45,7 +43,7 @@ case class UnigramLmTokens(child: Expression, pieces: Seq[(String, Long)],
                            unkBits: Long, maxPieceLen: Int, blockLen: Int,
                            pattern: Option[String],
                            byteLevel: Boolean = false)
-    extends UnaryExpression {
+    extends NativeUnary[UTF8String] {
 
   locally {
     require(maxPieceLen >= 1 && maxPieceLen <= blockLen,
@@ -63,10 +61,7 @@ case class UnigramLmTokens(child: Expression, pieces: Seq[(String, Long)],
 
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"unigram_lm_tokens needs a string argument, got ${child.dataType}")
+  override def inputTypes = Seq(StringType)
 
   @transient private lazy val regex =
     pattern.map(java.util.regex.Pattern.compile)
@@ -76,11 +71,7 @@ case class UnigramLmTokens(child: Expression, pieces: Seq[(String, Long)],
     m
   }
 
-  override def nullSafeEval(input: Any): Any =
-    tokenize(input.asInstanceOf[UTF8String])
-
-  /** Called from both eval and generated code. */
-  def tokenize(text: UTF8String): ArrayData = {
+  def compute(text: UTF8String): ArrayData = {
     val out = scala.collection.mutable.ArrayBuffer.empty[Any]
     regex match {
       case Some(rx) =>
@@ -158,12 +149,6 @@ case class UnigramLmTokens(child: Expression, pieces: Seq[(String, Long)],
       out += UTF8String.fromString(sb.toString)
       dd -= l
     }
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("unigramLmTokens", this,
-      classOf[UnigramLmTokens].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.tokenize($c);")
   }
 
   override protected def withNewChildInternal(newChild: Expression): UnigramLmTokens =

@@ -1,8 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -13,8 +11,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * One native expression — the vocabulary lives once in a hash set on
   * the reference object (the broadcast-analog for a plan-embedded
   * constant), and the whole count is a single map over the document
-  * scan: no shuffle, no UDF, whole-stage codegen via the
-  * reference-object pattern (see [[ShingleHashes]]).
+  * scan: no shuffle, no UDF ([[NativeExpr]]).
   *
   * Cross-engine contract (t_token_vocab): the DuckDB oracle replays the
   * identical rule as a recursive CTE whose step width is
@@ -25,16 +22,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * engines. Null text → null (the query layer coalesces).
   */
 case class VocabTokenCount(child: Expression, vocab: Seq[String],
-                           pattern: String) extends UnaryExpression {
+                           pattern: String)
+    extends NativeUnary[UTF8String] {
 
   require(vocab.nonEmpty, "empty vocabulary")
 
   override def dataType: DataType = LongType
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"vocab_token_count needs a string argument, got ${child.dataType}")
+  override def inputTypes = Seq(StringType)
 
   @transient private lazy val regex = java.util.regex.Pattern.compile(pattern)
   @transient private lazy val vocabSet: java.util.HashSet[String] = {
@@ -44,11 +39,7 @@ case class VocabTokenCount(child: Expression, vocab: Seq[String],
   }
   @transient private lazy val maxTokLen: Int = vocab.map(_.length).max
 
-  override def nullSafeEval(input: Any): Any =
-    countTokens(input.asInstanceOf[UTF8String])
-
-  /** Called from both eval and generated code. */
-  def countTokens(text: UTF8String): Long = {
+  def compute(text: UTF8String): Long = {
     val m = regex.matcher(text.toString)
     var total = 0L
     while (m.find()) {
@@ -66,12 +57,6 @@ case class VocabTokenCount(child: Expression, vocab: Seq[String],
       }
     }
     total
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("vocabTokenCount", this,
-      classOf[VocabTokenCount].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.countTokens($c);")
   }
 
   override protected def withNewChildInternal(newChild: Expression): VocabTokenCount =

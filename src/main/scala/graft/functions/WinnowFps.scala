@@ -1,8 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -14,12 +13,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * executable spec this expression is tested against (the LshBuckets
   * precedent):
   *
-  *  1. word boundaries = single-space splits (split(text, " ")
-  *     semantics, empty words included — a k-gram's joined string is
-  *     then byte-identical to the original span, so gram hashes fold
-  *     DIRECTLY over text byte ranges with zero per-gram allocation);
-  *  2. gram i (1-based) hash = [[PolyHash64]]'s fused double fold over
-  *     the span [start(i), end(i+k−1));
+  *  1. words are [[Words]] (empty words included — a k-gram's joined
+  *     string is then byte-identical to the original span, so gram
+  *     hashes fold DIRECTLY over text byte ranges with zero per-gram
+  *     allocation);
+  *  2. gram i (1-based) hash = [[PolyFold.h64]] over the span
+  *     [start(i), end(i+k−1));
   *  3. every w-wide window keeps its minimum hash, ties → RIGHTMOST;
   *     fewer than w grams → one window over what exists;
   *  4. selections dedup globally in first-occurrence order
@@ -32,7 +31,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * and one you don't.
   */
 case class WinnowFps(child: Expression, k: Int, w: Int)
-    extends UnaryExpression {
+    extends NativeUnary[UTF8String] {
   require(k >= 1, s"k (gram width) must be >= 1, got $k")
   require(w >= 1, s"w (window width) must be >= 1, got $w")
 
@@ -42,48 +41,17 @@ case class WinnowFps(child: Expression, k: Int, w: Int)
       StructField("fp", LongType, nullable = false))),
     containsNull = false)
 
-  override def checkInputDataTypes() =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"winnow_fps needs a string argument, got ${child.dataType}")
+  override def inputTypes = Seq(StringType)
 
-  def winnow(s: UTF8String): ArrayData = {
+  def compute(s: UTF8String): ArrayData = {
     val bytes = s.getBytes
-    val n = bytes.length
-    // word starts: 0 and every byte after a space (split(" ") keeps
-    // empty words, so consecutive spaces produce empty words exactly
-    // as the declarative chain sees them)
-    var nWords = 1
-    var i = 0
-    while (i < n) { if (bytes(i) == ' ') nWords += 1; i += 1 }
-    val starts = new Array[Int](nWords + 1)
-    starts(0) = 0
-    var wIdx = 1
-    i = 0
-    while (i < n) {
-      if (bytes(i) == ' ') { starts(wIdx) = i + 1; wIdx += 1 }
-      i += 1
-    }
-    starts(nWords) = n + 1 // sentinel: end(t) = starts(t+1) - 1
-    val nGrams = nWords - (k - 1)
+    val starts = Words.starts(bytes)
+    val nGrams = starts.length - 1 - (k - 1) // nWords − (k − 1)
     if (nGrams < 1) return new GenericArrayData(Array.empty[Any])
-    // gram hashes: PolyHash64's fused double fold over the byte span
     val h = new Array[Long](nGrams)
     var g = 0
     while (g < nGrams) {
-      var a = 0L
-      var b = 0L
-      var p = starts(g)
-      val end = starts(g + k) - 1 // end of word g+k-1 (exclusive)
-      while (p < end) {
-        val c = bytes(p) & 0xffL
-        a = (a * 31L + c) % 2147483647L
-        b = (b * 37L + c) % 2147483629L
-        p += 1
-      }
-      h(g) = a * 2147483629L + b
+      h(g) = PolyFold.h64(bytes, starts(g), Words.end(starts, g + k - 1))
       g += 1
     }
     // window minima, rightmost tie, global first-occurrence dedup
@@ -106,23 +74,13 @@ case class WinnowFps(child: Expression, k: Int, w: Int)
       j += 1
     }
     val rows = new Array[Any](outN)
-    i = 0
+    var i = 0
     while (i < outN) {
       rows(i) = InternalRow(posOut(i), fpOut(i))
       i += 1
     }
     new GenericArrayData(rows)
   }
-
-  override def nullSafeEval(input: Any): Any =
-    winnow(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val ref = ctx.addReferenceObj("winnowExpr", this,
-        classOf[WinnowFps].getName)
-      s"${ev.value} = $ref.winnow($c);"
-    })
 
   override protected def withNewChildInternal(newChild: Expression): WinnowFps =
     copy(child = newChild)

@@ -1,9 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -18,45 +15,32 @@ import org.apache.spark.unsafe.types.UTF8String
   * moved the repetition counters into [[RepetitionStats]]; at 100 TB the
   * tf stage becomes part of the scan's map stage). The `aggregate`-HOF
   * run-length formulation is semantically identical but interpreted
-  * (~1 ms/doc); this loop runs at byte-scan speed and keeps the
-  * enclosing operator whole-stage-codegen'd via the reference-object
-  * pattern.
+  * (~1 ms/doc); this loop runs at byte-scan speed.
   *
   * Semantics (matches `explode(split(text, ' ')) → count` exactly,
-  * NativeExprSpec asserts the twin): words = split on 0x20 KEEPING
-  * empties (an empty string has one empty word, "a  b" has an empty
-  * middle word); null text → null. Word bytes are copied out of the
+  * NativeExprSpec asserts the twin): words = [[Words]], empties KEPT
+  * (an empty string has one empty word, "a  b" has an empty middle
+  * word); null text → null. Word bytes are copied out of the
   * input buffer — the returned rows outlive the scan row they came from.
   */
-case class WordTfs(child: Expression) extends UnaryExpression {
+case class WordTfs(child: Expression) extends NativeUnary[UTF8String] {
 
   override def dataType: DataType = ArrayType(StructType(Seq(
     StructField("word", StringType, nullable = false),
     StructField("tf", LongType, nullable = false))), containsNull = false)
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"word_tfs needs a string argument, got ${child.dataType}")
+  override def inputTypes = Seq(StringType)
 
-  override def nullSafeEval(input: Any): Any =
-    compute(input.asInstanceOf[UTF8String])
-
-  /** Called from both eval and generated code. */
   def compute(text: UTF8String): ArrayData = {
     val bytes = text.getBytes
+    val starts = Words.starts(bytes)
     val counts = new java.util.LinkedHashMap[UTF8String, java.lang.Long]
-    var start = 0
-    var i = 0
-    while (i <= bytes.length) {
-      if (i == bytes.length || bytes(i) == 0x20) {
-        val w = UTF8String.fromBytes(
-          java.util.Arrays.copyOfRange(bytes, start, i))
-        val prev = counts.get(w)
-        counts.put(w, if (prev == null) 1L else prev + 1L)
-        start = i + 1
-      }
-      i += 1
+    var t = 0
+    while (t < starts.length - 1) {
+      val w = Words.slice(bytes, starts, t, t + 1).copy()
+      val prev = counts.get(w)
+      counts.put(w, if (prev == null) 1L else prev + 1L)
+      t += 1
     }
     val out = new Array[Any](counts.size)
     val it = counts.entrySet().iterator()
@@ -67,12 +51,6 @@ case class WordTfs(child: Expression) extends UnaryExpression {
       j += 1
     }
     new GenericArrayData(out)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("wordTfs", this, classOf[WordTfs].getName)
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = $ref.compute($c);")
   }
 
   override protected def withNewChildInternal(newChild: Expression): WordTfs =

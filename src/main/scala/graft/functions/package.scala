@@ -9,8 +9,16 @@ import org.apache.spark.sql.functions._
   * The reference pipeline uses only three scalar constructs
   * (SURVEY.md §2.3/§2.9): `TIMESTAMPTOSTRING`, `LCASE`, and `+` string
   * concatenation — all thin wrappers over codegen'd Spark built-ins here.
-  * `polyFingerprint` is the one native Catalyst expression this engine
-  * adds (ext/ text analysis).
+  *
+  * The rest are graft's own native Catalyst expressions for the ext/
+  * text, dedup and similarity operators. All row-level ones but the
+  * inline-codegen'd [[CosineSim]] and [[IntDot]] extend [[NativeExpr]],
+  * which declares their input types to Spark's analysis check and runs
+  * one `compute` body from both interpreted eval and generated code.
+  * Two decisions shared by many of them live in one module each:
+  * [[Words]], the word rule (split on byte 0x20, empty words kept), and
+  * [[PolyFold]], the hash rule (the 31-bit `×31 mod 2³¹−1` fold and its
+  * 62-bit pair with `×37 mod 2³¹−19`).
   */
 package object functions {
 

@@ -193,7 +193,7 @@ object LlmOracle {
 
   /** Per-permutation minhash min expressions over the `hs` column. */
   def minhashExprs: Seq[String] = Dedup.Perms.map { case (a, b) =>
-    s"coalesce(list_min(list_transform(hs, h -> ($a * h + $b) % ${Dedup.P})), ${Dedup.P})"
+    s"coalesce(list_min(list_transform(hs, h -> ($a * h + $b) % 2147483647)), 2147483647)"
   }
 
   val sigCte: String =

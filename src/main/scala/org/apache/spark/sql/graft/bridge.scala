@@ -3,6 +3,7 @@ package org.apache.spark.sql.graft
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.types.{AbstractDataType, DataType, TypeCollection}
 
 /** Bridge into Spark's `private[sql]` Column↔Expression converters
   * (Spark 4 removed the public `new Column(Expression)` constructor).
@@ -12,6 +13,11 @@ import org.apache.spark.sql.classic.ExpressionUtils
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** An expected input type accepting any of `types`, for
+    * `ExpectsInputTypes.inputTypes` (`TypeCollection` is private[sql]).
+    */
+  def anyOf(types: DataType*): AbstractDataType = TypeCollection(types: _*)
 
   /** DataFrame from a LogicalPlan (`Dataset.ofRows` is private[sql]) —
     * needed to hand custom logical nodes to the session's planner.

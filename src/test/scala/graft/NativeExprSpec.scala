@@ -128,8 +128,8 @@ class NativeExprSpec extends SparkSuite {
     // edge shapes: null text → null struct (the query layer coalesces);
     // short/empty/empty-word texts agree with the split(" ") semantics
     import spark.implicits._
-    val edges = Seq("", "single", "a a", "a  a", " ", "x y x y x")
-      .toDF("text")
+    val edges = (Seq("single", "a a", "a  a", "x y x y x") ++
+      Fixtures.edgeTexts).toDF("text")
     val e = edges.select(
       TextAnalysis.gramCount(col("text")).as("ng"),
       TextAnalysis.maxGramCount(col("text")).as("mg"),
@@ -146,8 +146,11 @@ class NativeExprSpec extends SparkSuite {
 
   test("native word-tf array is identical to the explode+groupBy formulation on the corpus") {
     import graft.functions.wordTfs
+    import spark.implicits._
     val docs = graft.core.Tables.documents(spark, "/root/testdata/sf0.001")
-      .filter(col("text").isNotNull)
+      .filter(col("text").isNotNull).select(col("doc_id"), col("text"))
+      .unionByName(Fixtures.edgeTexts.zipWithIndex
+        .map { case (t, i) => (-1L - i, t) }.toDF("doc_id", "text"))
     // twin: the (doc, word, tf) relation the corpus-wide aggregation
     // produced before round 11 — same rows, now computed row-locally
     val native = docs
@@ -163,7 +166,6 @@ class NativeExprSpec extends SparkSuite {
       native.queryExecution.executedPlan.toString)
     // edge shapes under the split-keeping-empties contract: empty text
     // = one empty word; double space = an empty middle word; null → null
-    import spark.implicits._
     val edge = Seq("", "a  a", " ").toDF("text")
       .select(col("text"), wordTfs(col("text")).as("w"))
       .as[(String, Seq[(String, Long)])].collect().toMap
@@ -214,7 +216,9 @@ class NativeExprSpec extends SparkSuite {
   }
 
   test("native shingle-hash set is identical to the HOF formulation on the corpus") {
+    import spark.implicits._
     val docs = graft.core.Tables.documents(spark, "/root/testdata/sf0.001")
+      .select(col("text")).union(Fixtures.edgeTexts.toDF("text"))
     val both = docs.select(
       graft.ext.Dedup.shingleHashes(col("text")).as("native"),
       graft.ext.Dedup.shingleHashesHof(col("text")).as("hof"))
@@ -222,7 +226,6 @@ class NativeExprSpec extends SparkSuite {
     assert(both.count() > 0)
 
     // short-doc fallback (fewer words than the shingle width)
-    import spark.implicits._
     val short = Seq((1L, "two words")).toDF("doc_id", "text")
     val s = short.select(
       graft.ext.Dedup.shingleHashes(col("text")).as("native"),
@@ -438,7 +441,7 @@ class NativeExprSpec extends SparkSuite {
 
   test("polyhash64: binary overload equals the string path on UTF-8 text; packing recovers both halves") {
     import spark.implicits._
-    val df = Seq("alpha beta", "", "zz").toDF("t")
+    val df = (Seq("alpha beta", "zz") ++ Fixtures.edgeTexts).toDF("t")
     val got = df.select(
         graft.functions.polyFingerprint64(col("t")).as("s64"),
         graft.functions.polyFingerprint64(col("t").cast("binary")).as("b64"),
@@ -1027,10 +1030,22 @@ class NativeExprSpec extends SparkSuite {
         graft.ext.TextAnalysis.normalizeText(col("text")).as("p"),
         graft.ext.TextAnalysis.normalizeText(
           concat_ws(" ", slice(split(col("text"), " "), 1, 9))).as("r"))
-      .localCheckpoint()
+    // word-rule edge shapes, each paired with every edge shape; char
+    // mode takes the ASCII ones only (its units are bytes, which equal
+    // the reference's characters only on ASCII text)
+    val edgePairs = for (p <- Fixtures.edgeTexts; r <- Fixtures.edgeTexts)
+      yield (p, r)
+    def withEdges(pairs: Seq[(String, String)]) =
+      docs.unionByName(pairs.zipWithIndex
+          .map { case ((p, r), i) => (-1L - i, p, r) }.toDF("doc_id", "p", "r"))
+        .localCheckpoint()
+    val wordDocs = withEdges(edgePairs)
+    val charDocs = withEdges(edgePairs.filter { case (p, r) =>
+      (p + r).forall(_ < 0x80) })
     val maxN = 4
     // reference formulation: explode n-grams per side, clip via join
-    def refCounts(chars: Boolean): Map[(Long, Long), (Long, Long, Long)] = {
+    def refCounts(docs: org.apache.spark.sql.DataFrame, chars: Boolean)
+        : Map[(Long, Long), (Long, Long, Long)] = {
       def gramsOf(c: String): org.apache.spark.sql.DataFrame = {
         val arr = if (chars)
           when(length(col(c)) >= col("n"),
@@ -1068,15 +1083,18 @@ class NativeExprSpec extends SparkSuite {
         .as[(Long, Long, Long, Long, Long)].collect()
         .map { case (id, n, mm, tp, tr) => (id, n) -> ((mm, tp, tr)) }.toMap
     }
-    def gotCounts(chars: Boolean): Map[(Long, Long), (Long, Long, Long)] =
+    def gotCounts(docs: org.apache.spark.sql.DataFrame, chars: Boolean)
+        : Map[(Long, Long), (Long, Long, Long)] =
       docs.select(col("doc_id"), explode(graft.functions.gramOverlap(
           col("p"), col("r"), maxN, chars)).as("o"))
         .select(col("doc_id"), col("o.n"), col("o.m"), col("o.tp"),
           col("o.tr"))
         .as[(Long, Long, Long, Long, Long)].collect()
         .map { case (id, n, mm, tp, tr) => (id, n) -> ((mm, tp, tr)) }.toMap
-    assert(gotCounts(chars = false) == refCounts(chars = false))
-    assert(gotCounts(chars = true) == refCounts(chars = true))
+    assert(gotCounts(wordDocs, chars = false) ==
+      refCounts(wordDocs, chars = false))
+    assert(gotCounts(charDocs, chars = true) ==
+      refCounts(charDocs, chars = true))
     // edge shapes: empty-vs-empty, empty-vs-nonempty, repeated grams
     // (clipping), null propagation
     val edge = Seq(("", ""), ("", "a b"), ("a a a b", "a a c"),
@@ -1104,8 +1122,9 @@ class NativeExprSpec extends SparkSuite {
       .select(col("doc_id"), col("text"))
     // edge shapes ride along: empty text, single word, consecutive
     // spaces (empty words), shorter than the window
-    val edge = Seq((9001L, ""), (9002L, "one"), (9003L, "a  b c"),
-      (9004L, "w1 w2 w3")).toDF("doc_id", "text")
+    val edge = (Seq("one", "a  b c", "w1 w2 w3") ++ Fixtures.edgeTexts)
+      .zipWithIndex.map { case (t, i) => (9001L + i, t) }
+      .toDF("doc_id", "text")
     val docs = raw.unionByName(edge).localCheckpoint()
     val k = 4
     val ws = split(col("text"), " ")

@@ -42,6 +42,13 @@ final case class Rating(RATING_ID: Long, USER_ID: Int, STARS: Double,
 object Fixtures {
   private def t(s: String) = java.sql.Timestamp.valueOf(s)
 
+  /** Edge shapes of the word rule (graft.functions.Words): empty text,
+    * a lone space, an empty middle word, leading/trailing spaces, and
+    * multi-byte UTF-8 (bytes >= 0x80) inside and between words.
+    */
+  val edgeTexts: Seq[String] = Seq("", " ", "a  b", " lead", "trail ",
+    " both  ends ", "héllo wörld", "日本 語  テキスト ")
+
   val clubTiers = Seq("platinum", "gold", "silver", "bronze")
 
   val customers: Seq[Customer] = (1 to 20).map { i =>
