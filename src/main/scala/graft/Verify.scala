@@ -1,8 +1,11 @@
 package graft
-import graft.core.Sessions
+import graft.core.{Json, Overlap, Sessions}
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare, and
+  * disclosures.json: per query, the recall losses its operators
+  * disclosed ([[Overlap.Disclosure]] records; queries with none are
+  * left out). */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
@@ -15,7 +18,7 @@ object Verify {
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val selected = only.fold(SparkEntry.queries)(names =>
       SparkEntry.queries.filter { case (n, _) => names.contains(n) })
-    selected.foreach { case (name, fn) =>
+    val disclosed = selected.flatMap { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
@@ -32,21 +35,16 @@ object Verify {
             s"${e.getClass.getName}: ${Option(e.getMessage).getOrElse("")}\n")
         } catch { case _: Throwable => () } // sentinel write is best-effort
       }
+      Some(Overlap.drain(spark)).filter(_.nonEmpty).map(name -> _)
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    Files.writeString(Paths.get(s"$outDir/disclosures.json"), disclosed
+      .map { case (name, ds) => Json.str(name) + ": " + ds.map(_.json).mkString("[", ",", "]") }
+      .mkString("{", ",\n", "}\n"))
+    // Json.str escapes ALL control chars (<0x20): a tab or CR in
+    // builder-authored SQL would otherwise make the driver's json.load
+    // fail and silently zero the round's correctness.
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${Json.str(k)}: ${Json.str(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

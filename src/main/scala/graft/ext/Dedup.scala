@@ -1,11 +1,9 @@
 package graft.ext
 
-import scala.concurrent.{Await, Future}
-import scala.concurrent.duration.Duration
-import scala.concurrent.ExecutionContext.Implicits.global
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.core.Overlap
 import graft.functions.{PolyFold, polyFingerprint, polyFingerprint64}
 
 /** Deduplication family for training-data pipelines: exact, MinHash+LSH
@@ -24,13 +22,13 @@ import graft.functions.{PolyFold, polyFingerprint, polyFingerprint64}
   *    pipeline exists for is exactly the one that would otherwise put a
   *    skew cliff inside its own candidate join), and any band bucket
   *    still wider than [[DefaultMaxBucketWidth]] distinct documents is
-  *    excluded from candidate generation and DISCLOSED (WARN log +
-  *    [[bandOverflow]]), so pathological spam degrades recall visibly
-  *    instead of OOMing a task.
+  *    excluded from candidate generation and DISCLOSED (an
+  *    [[graft.core.Overlap.Disclosure]] record, joined before the
+  *    operator returns; [[bandOverflow]] is the same relation on
+  *    demand), so pathological spam degrades recall visibly instead of
+  *    OOMing a task.
   */
 object Dedup {
-
-  private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
   /** Cap on DISTINCT documents per (band, bandKey) after exact-collapse:
     * a capped bucket emits at most cap²/2 in-task candidate pairs. Keys
@@ -240,23 +238,6 @@ object Dedup {
       .filter(col("bkey").isNotNull)
       .withColumn("__w", count(lit(1)).over(Window.partitionBy("band", "bkey")))
       .localCheckpoint()
-    // overflow disclosure as an OVERLAPPED job (round 22, the
-    // sampledExactTruth pattern): the probe reads only the pinned
-    // `widthed` frame and gates nothing downstream, so it runs
-    // concurrently with the caller's next blocking job (the clustering
-    // fixpoint's first round) instead of inserting a serial barrier.
-    // Failures are logged, never swallowed silently.
-    Future {
-      val over = widthed.filter(col("__w") > maxBucket)
-        .select(col("band"), col("bkey"), col("__w")).distinct()
-        .limit(21).collect()
-      if (over.nonEmpty)
-        log.warn(s"lsh candidate generation: ${over.length}${if (over.length > 20) "+" else ""} " +
-          s"band bucket(s) wider than $maxBucket DISTINCT documents excluded from " +
-          s"candidate generation (recall loss, not a failure): " +
-          over.take(20).map(r => s"(band=${r.get(0)}, bkey=${r.get(1)}, n=${r.get(2)})").mkString(", "))
-    }.failed.foreach(e =>
-      log.warn(s"lsh overflow disclosure probe failed: ${e.getMessage}"))
     val capped = widthed.filter(col("__w") <= maxBucket).drop("__w")
     val l = capped.withColumnRenamed(idCol, "doc_a")
     val r = capped.withColumnRenamed(idCol, "doc_b")
@@ -265,7 +246,12 @@ object Dedup {
       .select("doc_a", "doc_b").distinct()
     val repPairs = withJaccard(cands, "doc_a", "doc_b", repFeats, repFeats, idCol)
       .select("doc_a", "doc_b", "inter", "uni")
-    (grouped, repPairs)
+    Overlap.disclosing("lsh candidate generation",
+      s"band bucket(s) wider than $maxBucket DISTINCT documents excluded " +
+        "from candidate generation (recall loss, not a failure)",
+      widthed.filter(col("__w") > maxBucket)
+        .select(col("band"), col("bkey"), col("__w").as("n")).distinct()
+    )((grouped, repPairs))
   }
 
   /** Exact n-gram Jaccard verification over candidate pairs, from
@@ -394,24 +380,10 @@ object Dedup {
       .select(col(idCol), shingleHashes(col(textCol), n).as("hashes"))
       .withColumn("sig", minhashSignature(col("hashes")))
       .localCheckpoint()
-    // the truth chain and each config's candidate materialization are
-    // INDEPENDENT until the report join — overlap their jobs from
-    // driver threads (guide §2.6 posture: actions are only sequential
-    // because the driver calls them sequentially); plan shapes are
-    // untouched, the sweep just stops paying one serial job barrier
-    // per config
-    val truthF = Future(sampledExactTruth(feats, idCol, jaccardNum,
-      jaccardDen, maxShingleDf, "lshRecallGrid"))
-    val candsF = Future.traverse(configs) { case (b, r) =>
-      Future(lshCandidates(feats, idCol, b, r, maxBucket).localCheckpoint())
+    auditGrid("lshRecallGrid", feats, idCol, configs,
+      ("num_bands", "rows_per_band"), jaccardNum, jaccardDen, maxShingleDf) {
+      (b, r) => lshCandidates(feats, idCol, b, r, maxBucket)
     }
-    val truth = Await.result(truthF, Duration.Inf)
-    val cands = Await.result(candsF, Duration.Inf)
-    configs.zip(cands).map { case ((b, r), c) =>
-      auditReport(feats, truth, c, idCol, jaccardNum, jaccardDen)
-        .select(lit(b.toLong).as("num_bands"),
-          lit(r.toLong).as("rows_per_band"), col("*"))
-    }.reduce(_ unionByName _)
   }
 
   /** The SIMHASH analog of [[lshRecallAudit]] — the eval of the
@@ -473,40 +445,45 @@ object Dedup {
     val feats = samp
       .select(col(idCol), shingleHashes(col(textCol), n).as("hashes"))
       .localCheckpoint()
-    // the truth chain and the candidate chains are INDEPENDENT until
-    // the report join — overlap their jobs from driver threads (guide
-    // §2.6; plan shapes untouched). Within the candidate side, the
-    // Hamming-0 collapse and the intra-group expansion are
-    // radius-INDEPENDENT and run ONCE for the whole sweep (each config
-    // previously re-ran the collapse window + its checkpoint); only
-    // the block-combination join runs per config, and the configs'
-    // materializations overlap too.
-    val truthF = Future(sampledExactTruth(feats, idCol, jaccardNum,
-      jaccardDen, maxShingleDf, "simhashRecallGrid"))
-    val candsF = Future {
-      val grouped = hammingGrouped(feats
-        .select(col(idCol), simhash(col("hashes"), bits).as("simhash")),
-        idCol, "simhash")
-      val intra = hammingIntraPairs(grouped, idCol)
-        .select("doc_a", "doc_b")
-      Await.result(Future.traverse(configs) { case (blocks, maxHamming) =>
-        Future(hammingCrossPairs(grouped, idCol, bits, blocks, maxHamming,
-            maxBucket)
-          .select("doc_a", "doc_b").union(intra).localCheckpoint())
-      }, Duration.Inf)
+    // the Hamming-0 collapse and the intra-group expansion are
+    // radius-INDEPENDENT and run ONCE for the whole sweep; only the
+    // block-combination join runs per config
+    val grouped = hammingGrouped(feats
+      .select(col(idCol), simhash(col("hashes"), bits).as("simhash")),
+      idCol, "simhash")
+    val intra = hammingIntraPairs(grouped, idCol).select("doc_a", "doc_b")
+    auditGrid("simhashRecallGrid", feats, idCol, configs,
+      ("blocks", "max_hamming"), jaccardNum, jaccardDen, maxShingleDf) {
+      (blocks, maxHamming) =>
+        hammingCrossPairs(grouped, idCol, bits, blocks, maxHamming, maxBucket)
+          .select("doc_a", "doc_b").union(intra)
     }
-    val truth = Await.result(truthF, Duration.Inf)
-    val cands = Await.result(candsF, Duration.Inf)
-    configs.zip(cands).map { case ((blocks, maxHamming), c) =>
+  }
+
+  /** The recall grids' sweep over pinned sample features: the truth
+    * chain ([[sampledExactTruth]]) and each config's candidate pin are
+    * INDEPENDENT until the report join, so their jobs overlap (guide
+    * §2.6 posture: actions are only sequential because the driver calls
+    * them sequentially; plan shapes are untouched). One
+    * [[auditReport]] row per config, keyed by the two `keys` columns.
+    */
+  private def auditGrid(who: String, feats: DataFrame, idCol: String,
+                        configs: Seq[(Int, Int)], keys: (String, String),
+                        jaccardNum: Int, jaccardDen: Int, maxShingleDf: Int)
+                       (cands: (Int, Int) => DataFrame): DataFrame = {
+    val truth +: pinned = Overlap.all(
+      (() => sampledExactTruth(feats, idCol, jaccardNum, jaccardDen,
+        maxShingleDf, who)) +:
+        configs.map { case (x, y) => () => cands(x, y).localCheckpoint() })
+    configs.zip(pinned).map { case ((x, y), c) =>
       auditReport(feats, truth, c, idCol, jaccardNum, jaccardDen)
-        .select(lit(blocks.toLong).as("blocks"),
-          lit(maxHamming.toLong).as("max_hamming"), col("*"))
+        .select(lit(x.toLong).as(keys._1), lit(y.toLong).as(keys._2), col("*"))
     }.reduce(_ unionByName _)
   }
 
   /** Shared df-capped exact-Jaccard ground truth of the recall audits:
     * every sample pair sharing ≥ 1 shingle of document frequency
-    * ≤ `maxShingleDf` (drop disclosed via WARN under `who`), verified
+    * ≤ `maxShingleDf` (drop disclosed under `who`), verified
     * by exact integer Jaccard. Returns (doc_a, doc_b), pinned.
     */
   private def sampledExactTruth(feats: DataFrame, idCol: String,
@@ -541,19 +518,16 @@ object Dedup {
     // independent — overlap their jobs (both recompute the cheap hdf
     // subtree off the pinned feats; a shared checkpoint would insert a
     // serial job barrier that costs more than the recompute)
-    val droppedF = Future(hdf.filter(col("__la_df") > maxShingleDf)
-      .limit(21).collect())
-    val truth = withJaccard(truthCand, "doc_a", "doc_b", feats, feats, idCol)
-      .filter(jaccardAtLeast(jaccardNum, jaccardDen))
-      .select("doc_a", "doc_b").localCheckpoint()
-    val dropped = Await.result(droppedF, Duration.Inf)
-    if (dropped.nonEmpty)
-      log.warn(s"$who: ${dropped.length}${if (dropped.length > 20) "+" else ""} " +
-        s"shingle(s) wider than $maxShingleDf sampled docs excluded from the " +
-        s"ground-truth index (truth pairs sharing ONLY those shingles are " +
-        s"not counted): " + dropped.take(20)
-          .map(r => s"(h=${r.get(0)}, df=${r.get(1)})").mkString(", "))
-    truth
+    Overlap.disclosing(who,
+      s"shingle(s) wider than $maxShingleDf sampled docs excluded from the " +
+        "ground-truth index (truth pairs sharing ONLY those shingles are " +
+        "not counted)",
+      hdf.filter(col("__la_df") > maxShingleDf)
+        .select(col("__la_h").as("h"), col("__la_df").as("df"))) {
+      withJaccard(truthCand, "doc_a", "doc_b", feats, feats, idCol)
+        .filter(jaccardAtLeast(jaccardNum, jaccardDen))
+        .select("doc_a", "doc_b").localCheckpoint()
+    }
   }
 
   /** The audits' shared one-row readout over (sample features, truth
@@ -615,25 +589,19 @@ object Dedup {
     // hash document-frequency, materialized once: the disclosure probe
     // and the universe cut both read it
     val hdf = ex.groupBy("h").agg(count(lit(1)).as("hdf")).localCheckpoint()
-    // overflow disclosure as an OVERLAPPED job (round 22, the
-    // repLevelPairs pattern): reads only the pinned df relation and
-    // gates nothing — it runs concurrently with the `kept` pin below
-    // instead of inserting a serial barrier; failures are logged
-    Future {
-      val over = hdf.filter(col("hdf") > maxDf).limit(21).collect()
-      if (over.nonEmpty)
-        log.warn(s"containment: ${over.length}${if (over.length > 20) "+" else ""} " +
-          s"shingle hash(es) in more than $maxDf documents dropped from the " +
-          s"overlap universe (boilerplate guard; recall loss on pairs whose " +
-          s"overlap was only those shingles)")
-    }.failed.foreach(e =>
-      log.warn(s"containment overflow disclosure probe failed: ${e.getMessage}"))
     // materialized once: `sizes` and BOTH sides of the self-join below
     // read `kept` — without the checkpoint the corpus-wide shingle
     // explode + universe-cut join would be three separate plan subtrees
-    // (up to three corpus scans in one action)
-    val kept = ex.join(hdf.filter(col("hdf") <= maxDf).select("h"), "h")
-      .localCheckpoint()
+    // (up to three corpus scans in one action). The disclosure probe
+    // runs next to this pin.
+    val kept = Overlap.disclosing("containment",
+      s"shingle hash(es) in more than $maxDf documents dropped from the " +
+        "overlap universe (boilerplate guard; recall loss on pairs whose " +
+        "overlap was only those shingles)",
+      hdf.filter(col("hdf") > maxDf)) {
+      ex.join(hdf.filter(col("hdf") <= maxDf).select("h"), "h")
+        .localCheckpoint()
+    }
     val sizes = kept.groupBy(col(idCol))
       .agg(count(lit(1)).as("nh"))
     // shared-hash counts per pair GENERATED IN-TASK from each hash's
@@ -797,20 +765,6 @@ object Dedup {
       .select(col(idCol), col("b.band"), col("b.bkey"))
       .withColumn("__w", count(lit(1)).over(Window.partitionBy("band", "bkey")))
       .localCheckpoint() // feeds the disclosure probe AND the capped join
-    // overflow disclosure as an OVERLAPPED job (round 22, the
-    // repLevelPairs pattern): reads only the pinned banded rows and
-    // gates nothing — failures are logged, never swallowed
-    Future {
-      val over = banded.filter(col("__w") > maxBucket)
-        .select(col("band"), col("bkey"), col("__w")).distinct()
-        .limit(21).collect()
-      if (over.nonEmpty)
-        log.warn(s"simhash candidate generation: ${over.length}${if (over.length > 20) "+" else ""} " +
-          s"combo bucket(s) wider than $maxBucket representatives excluded from " +
-          s"candidate generation (recall loss, not a failure): " +
-          over.take(20).map(r => s"(band=${r.get(0)}, bkey=${r.get(1)}, n=${r.get(2)})").mkString(", "))
-    }.failed.foreach(e =>
-      log.warn(s"simhash overflow disclosure probe failed: ${e.getMessage}"))
     val capped = banded.filter(col("__w") <= maxBucket).drop("__w")
     val l = capped.select(col(idCol).as("doc_a"), col("band"), col("bkey"))
     val r = capped.select(col(idCol).as("doc_b"), col("band"), col("bkey"))
@@ -828,9 +782,15 @@ object Dedup {
       col("hamming"))
     val ga = grouped.select(col(idCol).as("a"), col("rep").as("ra"))
     val gb = grouped.select(col(idCol).as("b"), col("rep").as("rb"))
-    rp.join(ga, "ra").join(gb, "rb")
-      .select(least(col("a"), col("b")).as("doc_a"),
-        greatest(col("a"), col("b")).as("doc_b"), col("hamming"))
+    Overlap.disclosing("simhash candidate generation",
+      s"combo bucket(s) wider than $maxBucket representatives excluded " +
+        "from candidate generation (recall loss, not a failure)",
+      banded.filter(col("__w") > maxBucket)
+        .select(col("band"), col("bkey"), col("__w").as("n")).distinct()) {
+      rp.join(ga, "ra").join(gb, "rb")
+        .select(least(col("a"), col("b")).as("doc_a"),
+          greatest(col("a"), col("b")).as("doc_b"), col("hamming"))
+    }
   }
 
   /** Exact dedup: representative (min id) + multiplicity per distinct
@@ -1474,32 +1434,22 @@ object Dedup {
       .localCheckpoint()
     val width = fps.groupBy("fp").agg(count(lit(1)).as("__wo_n"))
       .localCheckpoint()
-    // overflow disclosure as an OVERLAPPED job (round 22, the
-    // repLevelPairs pattern): reads only the pinned width table and
-    // gates nothing — failures are logged, never swallowed
-    Future {
-      val over = width.filter(col("__wo_n") > maxBucket)
-        .limit(21).collect()
-      if (over.nonEmpty)
-        org.slf4j.LoggerFactory.getLogger(getClass).warn(
-          s"winnowOverlap: ${over.length}${if (over.length > 20) "+" else ""} " +
-            s"fingerprint bucket(s) wider than $maxBucket documents excluded " +
-            s"from pair generation (recall loss on corpus-wide template " +
-            s"grams, not a failure): " +
-            over.take(20).map(r => s"(fp=${r.get(0)}, n=${r.get(1)})")
-              .mkString(", "))
-    }.failed.foreach(e =>
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"winnowOverlap overflow disclosure probe failed: ${e.getMessage}"))
     val keep = fps.join(width.filter(col("__wo_n") <= maxBucket), "fp")
       .select(col(idCol), col("fp"))
     val a = keep.select(col(idCol).as("doc_a"), col("fp"))
     val b = keep.select(col(idCol).as("doc_b"), col("fp"))
-    a.join(b, "fp")
-      .filter(col("doc_a") < col("doc_b"))
-      .groupBy("doc_a", "doc_b")
-      .agg(count(lit(1)).as("shared"))
-      .filter(col("shared") >= minShared.toLong)
+    Overlap.disclosing("winnowOverlap",
+      s"fingerprint bucket(s) wider than $maxBucket documents excluded " +
+        "from pair generation (recall loss on corpus-wide template grams, " +
+        "not a failure)",
+      width.filter(col("__wo_n") > maxBucket)
+        .select(col("fp"), col("__wo_n").as("n"))) {
+      a.join(b, "fp")
+        .filter(col("doc_a") < col("doc_b"))
+        .groupBy("doc_a", "doc_b")
+        .agg(count(lit(1)).as("shared"))
+        .filter(col("shared") >= minShared.toLong)
+    }
   }
 
   /** [[dedupPassages]] over CONTENT-DEFINED chunks ([[cdcChunks]])

@@ -3,10 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-
-import scala.concurrent.duration.Duration
-import scala.concurrent.ExecutionContext.Implicits.global
-import scala.concurrent.{Await, Future}
+import graft.core.Overlap
 
 /** Similarity search over an embedding column (`Array[Float]`):
   * brute-force cosine top-k as the exact baseline, and a random-
@@ -1209,16 +1206,13 @@ object Similarity {
                 vecCol: String = "embedding"): DataFrame = {
     val sub = dims / m
     // the coarse quantizer and the PQ codebooks are INDEPENDENT
-    // training chains, each ending in an eager pin — overlap them from
-    // driver threads (guide §2.6, the recall-grid pattern) so the
-    // second chain's jobs back-fill executors during the first's tail
-    val centsF = Future(trainCentroids(corpus, centroids, idCol, vecCol)
-      .localCheckpoint())
-    val pqcentsF = Future(
-      pqTrainCodebooks(corpus, m, codebookSize, dims, idCol, vecCol)
-        .localCheckpoint())
-    val cents = Await.result(centsF, Duration.Inf)
-    val pqcents = Await.result(pqcentsF, Duration.Inf)
+    // training chains, each ending in an eager pin — overlap them
+    // (guide §2.6, the recall-grid pattern) so the second chain's jobs
+    // back-fill executors during the first's tail
+    val Seq(cents, pqcents) = Overlap.all(Seq(
+      () => trainCentroids(corpus, centroids, idCol, vecCol).localCheckpoint(),
+      () => pqTrainCodebooks(corpus, m, codebookSize, dims, idCol, vecCol)
+        .localCheckpoint()))
     val assigned = assignCells(corpus, cents, idCol, vecCol)
       .select(col(idCol), col("cell"))
     val codes = pqEncode(corpus, pqcents, m, dims, idCol, vecCol)
@@ -1692,21 +1686,6 @@ object Similarity {
       .select(col("tbl"), col("bucket"), col(idCol))
       .withColumn("__w", count(lit(1)).over(Window.partitionBy("tbl", "bucket")))
       .localCheckpoint()
-    // overflow disclosure as an OVERLAPPED job (round 22, the
-    // repLevelPairs pattern): reads only the pinned bucket rows and
-    // gates nothing — failures are logged, never swallowed
-    Future {
-      val over = bucketRows.filter(col("__w") > maxBucket)
-        .select(col("tbl"), col("bucket"), col("__w")).distinct()
-        .limit(21).collect()
-      if (over.nonEmpty)
-        org.slf4j.LoggerFactory.getLogger(getClass).warn(
-          s"embeddingNearDups: ${over.length}${if (over.length > 20) "+" else ""} LSH " +
-            s"bucket(s) wider than $maxBucket DISTINCT vectors excluded from " +
-            s"candidate generation (recall loss, not a failure): " +
-            over.take(20).map(r => s"(tbl=${r.get(0)}, bucket=${r.get(1)}, n=${r.get(2)})").mkString(", "))
-    }.failed.foreach(e => org.slf4j.LoggerFactory.getLogger(getClass).warn(
-      s"embeddingNearDups overflow disclosure probe failed: ${e.getMessage}"))
     val capped = bucketRows.filter(col("__w") <= maxBucket).drop("__w")
     val l = capped.select(col("tbl"), col("bucket"), col(idCol).as("id_a"))
     val r = capped.select(col("tbl"), col("bucket"), col(idCol).as("id_b"))
@@ -1735,7 +1714,12 @@ object Similarity {
     val mb = grouped.select(col(idCol).as("b"), col("rep").as("r0"))
     val intra = ma.join(mb, "r0").filter(col("a") < col("b")).join(selfCos, "r0")
       .select(col("a").as("id_a"), col("b").as("id_b"), col("cos"))
-    cross.union(intra)
+    Overlap.disclosing("embeddingNearDups",
+      s"LSH bucket(s) wider than $maxBucket DISTINCT vectors excluded from " +
+        "candidate generation (recall loss, not a failure)",
+      bucketRows.filter(col("__w") > maxBucket)
+        .select(col("tbl"), col("bucket"), col("__w").as("n")).distinct()
+    )(cross.union(intra))
   }
 
   /** The embedding-LSH recall audit — third member of the
@@ -1890,33 +1874,22 @@ object Similarity {
     val vecs = corpus.filter(col(vecCol).isNotNull)
     val cents = trainCentroids(vecs, centroids, idCol, vecCol)
     val assigned = assignCells(vecs, cents, idCol, vecCol).localCheckpoint()
-    val widths = assigned.groupBy("cell").agg(count(lit(1)).as("__w"))
-    // overflow disclosure as an OVERLAPPED job (round 22, the
-    // repLevelPairs pattern): reads only the pinned assignment and
-    // gates nothing downstream — it runs concurrently with the
-    // caller's next blocking job instead of inserting a serial
-    // barrier; failures are logged, never swallowed
-    Future {
-      val over = widths.filter(col("__w") > maxCell).limit(21).collect()
-      if (over.nonEmpty)
-        org.slf4j.LoggerFactory.getLogger(getClass).warn(
-          s"semDedupPairs: ${over.length}${if (over.length > 20) "+" else ""} " +
-            s"cell(s) wider than $maxCell vectors excluded from pair " +
-            s"generation (recall loss, not a failure — raise `centroids`): " +
-            over.take(20).map(r => s"(cell=${r.get(0)}, n=${r.get(1)})")
-              .mkString(", "))
-    }.failed.foreach(e => org.slf4j.LoggerFactory.getLogger(getClass).warn(
-      s"semDedupPairs overflow disclosure probe failed: ${e.getMessage}"))
+    val widths = assigned.groupBy("cell").agg(count(lit(1)).as("n"))
     val capped = assigned.join(
-      broadcast(widths.filter(col("__w") <= maxCell).select("cell")), "cell")
+      broadcast(widths.filter(col("n") <= maxCell).select("cell")), "cell")
     val a = capped.select(col("cell"), col(idCol).as("id_a"),
       col(vecCol).as("__va"))
     val b = capped.select(col("cell"), col(idCol).as("id_b"),
       col(vecCol).as("__vb"))
-    a.join(b, "cell").filter(col("id_a") < col("id_b"))
-      .withColumn("cos", round(cosine(col("__va"), col("__vb")), 6))
-      .filter(col("cos") >= threshold)
-      .select(col("id_a"), col("id_b"), col("cos"))
+    Overlap.disclosing("semDedupPairs",
+      s"cell(s) wider than $maxCell vectors excluded from pair generation " +
+        "(recall loss, not a failure — raise `centroids`)",
+      widths.filter(col("n") > maxCell)) {
+      a.join(b, "cell").filter(col("id_a") < col("id_b"))
+        .withColumn("cos", round(cosine(col("__va"), col("__vb")), 6))
+        .filter(col("cos") >= threshold)
+        .select(col("id_a"), col("id_b"), col("cos"))
+    }
   }
 
   /** Connected-component labels over the [[semDedupPairs]] graph —

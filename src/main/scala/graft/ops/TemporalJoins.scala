@@ -5,9 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructField, StructType,
   TimestampNTZType, TimestampType}
-
-import scala.concurrent.ExecutionContext.Implicits.global
-import scala.concurrent.Future
+import graft.core.Overlap
 
 /** Temporal joins Spark has no native operator for — AS-OF
   * (point-in-time: each left row picks the single nearest right row at
@@ -43,8 +41,6 @@ import scala.concurrent.Future
   *    condition — still the same single (keys, bin) equi-shuffle.
   */
 object TemporalJoins {
-
-  private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
   /** Exact integer floor division of a long column by a positive
     * constant — `floor(col / m)` promotes to double and can misround
@@ -264,21 +260,6 @@ object TemporalJoins {
       // materialized once: the disclosure probe below and the join both
       // read the interval side (the semDedupPairs guard pattern)
       .localCheckpoint()
-    // disclosure probe: over-wide intervals leave the join, visibly.
-    // The probe is a dim-sized action (right is the interval side),
-    // reads only the pinned frame and gates nothing — OVERLAPPED with
-    // the caller's next job (round 22, the repLevelPairs pattern);
-    // failures are logged, never swallowed
-    Future {
-      val over = rBase.filter(col("__rj_nb") > maxBins)
-        .select(keys.map(col) :+ col("__rj_nb"): _*).limit(21).collect()
-      if (over.nonEmpty)
-        log.warn(s"rangeJoin: ${over.length}${if (over.length > 20) "+" else ""} " +
-          s"interval(s) spanning more than $maxBins bins of $binMicros micros " +
-          s"excluded from the join (raise binMicros or maxBins): " +
-          over.take(20).map(_.toString).mkString(", "))
-    }.failed.foreach(e =>
-      log.warn(s"rangeJoin disclosure probe failed: ${e.getMessage}"))
     val rBinned = rBase
       .filter(col("__rj_nb").between(1, maxBins))
       .withColumn("__rj_bin", explode(sequence(col("__rj_b0"), col("__rj_b1"))))
@@ -286,7 +267,7 @@ object TemporalJoins {
     val lTimed = left
       .withColumn("__rj_t", toMicros(col(timeCol), left.schema(timeCol).dataType))
       .withColumn("__rj_bin", floorDivExpr("__rj_t", binMicros))
-    joinType match {
+    val joined = joinType match {
       case "inner" =>
         val lBinned = lTimed.filter(
           keys.map(col(_).isNotNull).reduce(_ && _) && col(timeCol).isNotNull)
@@ -314,6 +295,13 @@ object TemporalJoins {
           .drop("__rj_bin", "__rj_t", "__rj_rbin", "__rj_s", "__rj_e")
           .drop(keys.indices.map(i => s"__rj_k$i"): _*)
     }
+    // disclosure probe: over-wide intervals leave the join, visibly.
+    // The probe is a dim-sized action (right is the interval side).
+    Overlap.disclosing("rangeJoin",
+      s"interval(s) spanning more than $maxBins bins of $binMicros micros " +
+        "excluded from the join (raise binMicros or maxBins)",
+      rBase.filter(col("__rj_nb") > maxBins)
+        .select(keys.map(col) :+ col("__rj_nb").as("bins"): _*))(joined)
   }
 
   /** INTERVAL-OVERLAP equi-join — both sides are intervals (media
@@ -369,31 +357,12 @@ object TemporalJoins {
         .drop("__ij_e1")
     val lBase = prep(left, leftStartCol, leftEndCol,
       "__ij_ls", "__ij_le", "__ij_lb0", "__ij_lb1")
-    // limit-21 short-circuit probes — pure disclosures gating nothing,
-    // OVERLAPPED with the caller's next job (round 22, the
-    // repLevelPairs pattern); failures are logged, never swallowed
-    Future {
-      val lOver = lBase.filter(col("__ij_nb") > maxBins)
-        .select(keys.map(col) :+ col("__ij_nb"): _*).limit(21).collect()
-      if (lOver.nonEmpty)
-        log.warn(s"intervalJoin: ${lOver.length}${if (lOver.length > 20) "+" else ""} " +
-          s"left interval(s) spanning more than $maxBins bins excluded " +
-          s"(raise binMicros or maxBins): " +
-          lOver.take(20).map(_.toString).mkString(", "))
-    }.failed.foreach(e =>
-      log.warn(s"intervalJoin left disclosure probe failed: ${e.getMessage}"))
     val rBase = prep(right, rightStartCol, rightEndCol,
       "__ij_rs", "__ij_re", "__ij_rb0", "__ij_rb1").localCheckpoint()
-    Future {
-      val rOver = rBase.filter(col("__ij_nb") > maxBins)
-        .select(keys.map(col) :+ col("__ij_nb"): _*).limit(21).collect()
-      if (rOver.nonEmpty)
-        log.warn(s"intervalJoin: ${rOver.length}${if (rOver.length > 20) "+" else ""} " +
-          s"right interval(s) spanning more than $maxBins bins excluded " +
-          s"(raise binMicros or maxBins): " +
-          rOver.take(20).map(_.toString).mkString(", "))
-    }.failed.foreach(e =>
-      log.warn(s"intervalJoin right disclosure probe failed: ${e.getMessage}"))
+    // one probe over both sides, `side` naming which one a row is from
+    def over(base: DataFrame, side: String): DataFrame =
+      base.filter(col("__ij_nb") > maxBins)
+        .select(lit(side).as("side") +: keys.map(col) :+ col("__ij_nb").as("bins"): _*)
     val lBinned = lBase.filter(col("__ij_nb").between(1, maxBins))
       .withColumn("__ij_bin",
         explode(sequence(col("__ij_lb0"), col("__ij_lb1"))))
@@ -402,14 +371,19 @@ object TemporalJoins {
       .withColumn("__ij_bin",
         explode(sequence(col("__ij_rb0"), col("__ij_rb1"))))
       .drop("__ij_nb", "__ij_rb1")
-    lBinned.join(rBinned, keys :+ "__ij_bin")
-      .filter(col("__ij_ls") < col("__ij_re") &&
-        col("__ij_rs") < col("__ij_le") &&
-        col("__ij_bin") === greatest(col("__ij_lb0"), col("__ij_rb0")))
-      .withColumn("overlap_micros",
-        least(col("__ij_le"), col("__ij_re")) -
-          greatest(col("__ij_ls"), col("__ij_rs")))
-      .drop("__ij_bin", "__ij_lb0", "__ij_rb0", "__ij_ls", "__ij_le",
-        "__ij_rs", "__ij_re")
+    Overlap.disclosing("intervalJoin",
+      s"interval(s) spanning more than $maxBins bins excluded " +
+        "(raise binMicros or maxBins)",
+      over(lBase, "left").unionByName(over(rBase, "right"))) {
+      lBinned.join(rBinned, keys :+ "__ij_bin")
+        .filter(col("__ij_ls") < col("__ij_re") &&
+          col("__ij_rs") < col("__ij_le") &&
+          col("__ij_bin") === greatest(col("__ij_lb0"), col("__ij_rb0")))
+        .withColumn("overlap_micros",
+          least(col("__ij_le"), col("__ij_re")) -
+            greatest(col("__ij_ls"), col("__ij_rs")))
+        .drop("__ij_bin", "__ij_lb0", "__ij_rb0", "__ij_ls", "__ij_le",
+          "__ij_rs", "__ij_re")
+    }
   }
 }

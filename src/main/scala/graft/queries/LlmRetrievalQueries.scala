@@ -1,12 +1,8 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.core.{Overlap, Tables}
 import graft.ext.{Dedup, Multimodal, Similarity, TextAnalysis}
-
-import scala.concurrent.duration.Duration
-import scala.concurrent.ExecutionContext.Implicits.global
-import scala.concurrent.{Await, Future}
 
 /** Sparse/hybrid retrieval, PRF, rank-eval, leaderboard and MMR queries.
   * Split out of the monolithic LlmQueries registry (round 20); order
@@ -188,8 +184,7 @@ private[graft] object LlmRetrievalQueries {
       val queries = SearchQueries.toDF("query_id", "term")
       val docs = Tables.documents(s, d)
       // both arms score ONE pinned matched-tf relation (round 22,
-      // §2.4) — one corpus scan + one pin; the r21/r22 per-arm Futures
-      // became moot once the arms stopped pinning their own scans
+      // §2.4) — one corpus scan + one pin
       val matched = TextAnalysis.searchMatched(docs, queries)
       val a = TextAnalysis.searchDocsFromMatched(matched, queries, k = 10)
         .select(col("query_id"), col("doc_id"), col("rank"))
@@ -268,8 +263,7 @@ private[graft] object LlmRetrievalQueries {
       val docs = Tables.documents(s, d)
       val qIds = SearchQueries.map(_._1).distinct.sorted
       // both lexical arms score ONE pinned matched-tf relation (round
-      // 22, §2.4); the per-arm Futures became moot once the arms
-      // stopped pinning their own corpus scans
+      // 22, §2.4)
       val matched = TextAnalysis.searchMatched(docs, queries)
       val sparse = TextAnalysis
         .searchDocsFromMatched(matched, queries, k = 20)
@@ -312,23 +306,18 @@ private[graft] object LlmRetrievalQueries {
       // ONE pinned matched-tf scan feeds all three lexical relations
       // (round 22, §2.4); their |Q|·k-bounded pins (each is consumed
       // by both the tri fusion and its own leaderboard row) stay
-      // overlapped from driver threads (guide §2.6)
+      // overlapped (guide §2.6)
       val matched = TextAnalysis.searchMatched(docs, queries)
-      val qrelsF = Future(graft.ext.Retrieval
-        .termCoverageQrelsFromMatched(matched, queries)
-        .localCheckpoint())
       val qIds = SearchQueries.map(_._1).distinct.sorted
-      val sparse20F = Future(TextAnalysis
-        .searchDocsFromMatched(matched, queries, k = 20)
-        .select(col("query_id"), col("doc_id"),
-          col("rank").as("tfidf_rank")).localCheckpoint())
-      val bm2520F = Future(TextAnalysis
-        .searchDocsBm25FromMatched(docs, matched, queries, k = 20)
-        .select(col("query_id"), col("doc_id"),
-          col("rank").as("bm25_rank")).localCheckpoint())
-      val qrels = Await.result(qrelsF, Duration.Inf)
-      val sparse20 = Await.result(sparse20F, Duration.Inf)
-      val bm2520 = Await.result(bm2520F, Duration.Inf)
+      val Seq(qrels, sparse20, bm2520) = Overlap.all(Seq(
+        () => graft.ext.Retrieval
+          .termCoverageQrelsFromMatched(matched, queries).localCheckpoint(),
+        () => TextAnalysis.searchDocsFromMatched(matched, queries, k = 20)
+          .select(col("query_id"), col("doc_id"),
+            col("rank").as("tfidf_rank")).localCheckpoint(),
+        () => TextAnalysis.searchDocsBm25FromMatched(docs, matched, queries, k = 20)
+          .select(col("query_id"), col("doc_id"),
+            col("rank").as("bm25_rank")).localCheckpoint()))
       val dense = Similarity
         .topKByIdsNative(Tables.embeddings(s, d), qIds, 20)
         .select(col("query_id"), col("neighbor_id").as("doc_id"),

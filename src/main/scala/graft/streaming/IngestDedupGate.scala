@@ -3,10 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import graft.core.Overlap
 import graft.ext.Dedup
-
-import scala.concurrent.ExecutionContext.Implicits.global
-import scala.concurrent.Future
 
 /** Streaming ingest dedup gate: a document stream is admitted batch by
   * batch against a PERSISTED signature store — redelivered ids, exact
@@ -43,8 +41,6 @@ import scala.concurrent.Future
   * longer ahead of the committed head).
   */
 object IngestDedupGate {
-
-  private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
   /** The store's manifest directory (under the session warehouse). */
   def storeDir(spark: SparkSession, name: String): String =
@@ -191,45 +187,46 @@ object IngestDedupGate {
     // checkpoint before feeding the self-join's branches.
     val checked =
       if (survivors eq batchReps) batchReps else survivors.localCheckpoint()
-    // overflow disclosure as an OVERLAPPED job (round 22, the
-    // repLevelPairs pattern): reads only the pinned survivor frame and
-    // gates nothing — it runs concurrently with the pair-verification
-    // pin below instead of inserting a serial barrier
-    Future {
-      val over = Dedup.bandOverflow(checked, idCol, numBands, rowsPerBand)
-        .limit(21).collect()
-      if (over.nonEmpty)
-        log.warn(
-          s"ingest gate: ${over.length}${if (over.length > 20) "+" else ""} within-batch " +
-            s"band bucket(s) over the width cap excluded from near-dup checking " +
-            s"(recall loss, not a failure): " +
-            over.take(20).map(r => s"(band=${r.get(0)}, bkey=${r.get(1)}, n=${r.get(2)})").mkString(", "))
-    }.failed.foreach(e =>
-      log.warn(s"ingest gate overflow disclosure probe failed: ${e.getMessage}"))
-    val bcand = Dedup.lshCandidates(checked, idCol, numBands, rowsPerBand)
-    val passing = Dedup.withJaccard(bcand, "doc_a", "doc_b", checked, checked, idCol)
-      .filter(Dedup.jaccardAtLeast(jaccardNum, jaccardDen))
-      .select(col("doc_a"), col("doc_b")).localCheckpoint()
-    // the common batch has ZERO within-batch near-dup pairs — skip the
-    // drop anti-join and the orphan probe's two joins + count entirely
-    // (isEmpty on the checkpointed pair frame is a cheap partition peek)
-    if (passing.isEmpty) checked
-    else {
-      val batchDups = passing.select(col("doc_b").as(idCol)).distinct()
-      // chained-drop disclosure: a dropped doc whose EVERY keeper was
-      // itself dropped has no admitted near-dup — data loss, not dedup
-      val dropsAsA = passing.select(col("doc_b").as("doc_a")).distinct()
-      val withAliveKeeper = passing.join(dropsAsA, Seq("doc_a"), "left_anti")
-        .select(col("doc_b")).distinct()
-      val orphaned = passing.select(col("doc_b")).distinct()
-        .join(withAliveKeeper, Seq("doc_b"), "left_anti").count()
-      if (orphaned > 0)
-        log.warn(s"ingest gate: $orphaned within-batch doc(s) dropped although " +
-          "every admitted-keeper candidate was itself dropped (chained " +
-          "near-dups) — their content has no admitted representative in this " +
-          "batch; run a corpus-level dedupedCorpus pass if that matters")
-      checked.join(batchDups, Seq(idCol), "left_anti").localCheckpoint()
+    // the overflow probe reads only the pinned survivor frame; it runs
+    // next to the pair-verification pin below
+    Overlap.disclosing("ingest gate", "within-batch " + OverflowKind,
+      Dedup.bandOverflow(checked, idCol, numBands, rowsPerBand)) {
+      val bcand = Dedup.lshCandidates(checked, idCol, numBands, rowsPerBand)
+      val passing = Dedup.withJaccard(bcand, "doc_a", "doc_b", checked, checked, idCol)
+        .filter(Dedup.jaccardAtLeast(jaccardNum, jaccardDen))
+        .select(col("doc_a"), col("doc_b")).localCheckpoint()
+      // the common batch has ZERO within-batch near-dup pairs — skip the
+      // drop anti-join and the orphan probe's two joins + count entirely
+      // (isEmpty on the checkpointed pair frame is a cheap partition peek)
+      if (passing.isEmpty) checked
+      else {
+        val batchDups = passing.select(col("doc_b").as(idCol)).distinct()
+        discloseOrphans(passing, "ingest gate", "within-batch doc(s) dropped", "batch")
+        checked.join(batchDups, Seq(idCol), "left_anti").localCheckpoint()
+      }
     }
+  }
+
+  private val OverflowKind = "band bucket(s) over the width cap excluded " +
+    "from near-dup checking (recall loss, not a failure)"
+
+  /** Chained-drop disclosure: a dropped doc whose EVERY keeper was
+    * itself dropped has no admitted near-dup — data loss, not dedup.
+    * `passing` holds the verified within-`unit` pairs (doc_b drops).
+    */
+  private def discloseOrphans(passing: DataFrame, operator: String,
+                              dropped: String, unit: String): Unit = {
+    val dropsAsA = passing.select(col("doc_b").as("doc_a")).distinct()
+    val withAliveKeeper = passing.join(dropsAsA, Seq("doc_a"), "left_anti")
+      .select(col("doc_b")).distinct()
+    val orphaned = passing.select(col("doc_b")).distinct()
+      .join(withAliveKeeper, Seq("doc_b"), "left_anti").count()
+    if (orphaned > 0)
+      Overlap.disclose(passing.sparkSession, Overlap.Disclosure(operator,
+        s"$dropped although every admitted-keeper candidate was itself " +
+          "dropped (chained near-dups) — their content has no admitted " +
+          s"representative in this $unit; run a corpus-level dedupedCorpus " +
+          "pass if that matters", orphaned, atLeast = false, Nil))
   }
 
   /** Batch VERDICT screen of an offline corpus drop against an EXISTING
@@ -323,43 +320,24 @@ object IngestDedupGate {
     // same capped candidate generation + disclosure as filterNovel
     val survivors = unknown.join(storeDup.select(col(idCol)),
       Seq(idCol), "left_anti").localCheckpoint()
-    // overlapped disclosure — the filterNovel/repLevelPairs pattern
-    Future {
-      val over = Dedup.bandOverflow(survivors, idCol, numBands, rowsPerBand)
-        .limit(21).collect()
-      if (over.nonEmpty)
-        log.warn(
-          s"gate probe: ${over.length}${if (over.length > 20) "+" else ""} within-drop " +
-            s"band bucket(s) over the width cap excluded from near-dup checking " +
-            s"(recall loss, not a failure): " +
-            over.take(20).map(r => s"(band=${r.get(0)}, bkey=${r.get(1)}, n=${r.get(2)})").mkString(", "))
-    }.failed.foreach(e =>
-      log.warn(s"gate probe overflow disclosure probe failed: ${e.getMessage}"))
-    val passing = Dedup.withJaccard(
-        Dedup.lshCandidates(survivors, idCol, numBands, rowsPerBand),
-        "doc_a", "doc_b", survivors, survivors, idCol)
-      .filter(Dedup.jaccardAtLeast(jaccardNum, jaccardDen))
-      .select(col("doc_a"), col("doc_b")).localCheckpoint()
-    val batchDup = passing.select(col("doc_b").as(idCol)).distinct()
-      .select(col(idCol), lit("batch_near_dup").as("verdict"))
-    if (!passing.isEmpty) {
-      val dropsAsA = passing.select(col("doc_b").as("doc_a")).distinct()
-      val withAliveKeeper = passing.join(dropsAsA, Seq("doc_a"), "left_anti")
-        .select(col("doc_b")).distinct()
-      val orphaned = passing.select(col("doc_b")).distinct()
-        .join(withAliveKeeper, Seq("doc_b"), "left_anti").count()
-      if (orphaned > 0)
-        log.warn(s"gate probe: $orphaned within-drop doc(s) would drop although " +
-          "every admitted-keeper candidate was itself dropped (chained " +
-          "near-dups) — their content has no admitted representative in this " +
-          "drop; run a corpus-level dedupedCorpus pass if that matters")
+    Overlap.disclosing("gate probe", "within-drop " + OverflowKind,
+      Dedup.bandOverflow(survivors, idCol, numBands, rowsPerBand)) {
+      val passing = Dedup.withJaccard(
+          Dedup.lshCandidates(survivors, idCol, numBands, rowsPerBand),
+          "doc_a", "doc_b", survivors, survivors, idCol)
+        .filter(Dedup.jaccardAtLeast(jaccardNum, jaccardDen))
+        .select(col("doc_a"), col("doc_b")).localCheckpoint()
+      val batchDup = passing.select(col("doc_b").as(idCol)).distinct()
+        .select(col(idCol), lit("batch_near_dup").as("verdict"))
+      if (!passing.isEmpty)
+        discloseOrphans(passing, "gate probe", "within-drop doc(s) would drop", "drop")
+      // stages are disjoint by construction — one labeled union, then the
+      // left join back to the drop; unlabeled = admitted
+      val labeled = exactDup.unionByName(knownIds).unionByName(storeDup)
+        .unionByName(batchDup)
+      corpus.select(col(idCol)).join(labeled, Seq(idCol), "left")
+        .select(col(idCol), coalesce(col("verdict"), lit("admit")).as("verdict"))
     }
-    // stages are disjoint by construction — one labeled union, then the
-    // left join back to the drop; unlabeled = admitted
-    val labeled = exactDup.unionByName(knownIds).unionByName(storeDup)
-      .unionByName(batchDup)
-    corpus.select(col(idCol)).join(labeled, Seq(idCol), "left")
-      .select(col(idCol), coalesce(col("verdict"), lit("admit")).as("verdict"))
   }
 
   private def writeSorted(df: DataFrame, path: String, key: String,

@@ -7,7 +7,10 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Source lint: the word rule and the hash rule are each written once in
   * src/main, in graft.functions.Words and graft.functions.PolyFold. A
   * byte-level 0x20 word-boundary scan, or a hash-rule modulus literal,
-  * anywhere else fails this spec. Exemptions:
+  * anywhere else fails this spec. Likewise background jobs and
+  * disclosure probes live only in graft.core.Overlap: a Scala Future,
+  * an Await, the global ExecutionContext or a 21-row probe anywhere
+  * else fails it. Exemptions:
   *
   *  - queries/LlmOracle.scala keeps its own moduli: its DuckDB replay
   *    text is the independent oracle the engine is checked against;
@@ -37,6 +40,9 @@ class RuleLintSpec extends AnyFunSuite {
 
   private val Moduli = """(?<!\d)(2147483647|2147483629)(?!\d)""".r
   private val SpaceScan = """\)\s*[!=]=\s*(0x20\b|' '|32\b)""".r
+  private val Concurrency =
+    ("""scala\.concurrent\.[^}]*\bFuture\b|\bFuture\s*[({.]|\bAwait\.""" +
+      """|ExecutionContext\.Implicits\.global|limit\(21\)""").r
 
   test("the hash-rule moduli appear only in PolyFold (and the oracle's replay)") {
     assert(Moduli.findFirstIn(sources("graft/functions/PolyFold.scala")).isDefined)
@@ -49,5 +55,10 @@ class RuleLintSpec extends AnyFunSuite {
     assert(offenders(SpaceScan, Set("graft/functions/Words.scala",
       "graft/functions/C4Stats.scala",
       "graft/functions/CharTrigramTfs.scala")) == Nil)
+  }
+
+  test("Futures, Awaits, the global ExecutionContext and 21-row probes appear only in Overlap") {
+    assert(Concurrency.findFirstIn(sources("graft/core/Overlap.scala")).isDefined)
+    assert(offenders(Concurrency, Set("graft/core/Overlap.scala")) == Nil)
   }
 }

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.core.{Sessions, Tables}
+import graft.core.{Overlap, Sessions, Tables}
 import graft.ext.{Dedup, Similarity}
 
 /** The guard half of the scale spot-check (SCALE.md): the hot-bucket
@@ -26,6 +26,11 @@ class ScaleGuardSpec extends AnyFunSuite {
     val cleanOverflow = Dedup.bandOverflow(Dedup.features(docs))
     assert(cleanOverflow.count() == 0L,
       "clean corpus must not trip the band-width guard")
+    // ...and the operator that owns the probe records nothing
+    Overlap.drain(spark)
+    Dedup.nearDupPairs(docs)
+    assert(Overlap.drain(spark).isEmpty,
+      "clean corpus must not produce a disclosure record")
 
     // planted-hot: DefaultMaxBucketWidth+100 docs sharing a long
     // template but each carrying a distinct trailing token — distinct
@@ -44,6 +49,14 @@ class ScaleGuardSpec extends AnyFunSuite {
     assert(overflow.nonEmpty,
       "planted distinct-content spam must be DISCLOSED by bandOverflow")
     assert(overflow.forall(_.getLong(2) > Dedup.DefaultMaxBucketWidth))
+    // ...and the operator records them before it returns
+    Dedup.nearDupPairs(mixed)
+    val disclosed = Overlap.drain(spark)
+      .filter(_.operator == "lsh candidate generation")
+    assert(disclosed.nonEmpty && disclosed.forall(_.sample.nonEmpty),
+      "nearDupPairs must record the planted hot buckets as a Disclosure")
+    assert(disclosed.flatMap(_.sample)
+      .forall(_.getAs[Long]("n") > Dedup.DefaultMaxBucketWidth))
 
     // ...and the capped candidate path EXCLUDES them instead of
     // building quadratic in-bucket pairs: no candidate pair may join
