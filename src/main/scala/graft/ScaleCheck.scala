@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.Pin._
 import graft.core.Sessions
 
 /** SCALE spot-check — the measured "would this survive 100×?" evidence
@@ -94,7 +95,7 @@ object ScaleCheck {
       .select(col("keep_id").as("doc_id"))
     val kept = docs.select("doc_id", "text").join(best, "doc_id")
       .repartition(docs.sparkSession.sparkContext.defaultParallelism)
-      .localCheckpoint()
+      .pin()
     val fimmed = graft.ext.Packing.fimTransform(kept)
       .withColumn("toks",
         col("n_tokens") + when(col("fim"), 3L).otherwise(0L))
@@ -216,11 +217,11 @@ object ScaleCheck {
       // planted verbatim-dup graph deepens with m)
       record("code_prep", nDocs,
         timeIt(reps, warm = m == mults.head)(noop {
-          val st = graft.ext.TextAnalysis.codeStats(docs).localCheckpoint()
+          val st = graft.ext.TextAnalysis.codeStats(docs).pin()
           val gated = docs.select("doc_id", "text")
             .join(st.filter(col("code_pass") === 1L).select("doc_id"),
               Seq("doc_id"), "left_semi")
-            .localCheckpoint()
+            .pin()
           val pairs = graft.ext.Dedup.winnowOverlap(gated, minShared = 2)
           val clusters = graft.ext.Dedup.clusterLabelsStar(
               gated.select(col("doc_id").as("id")),
@@ -231,7 +232,7 @@ object ScaleCheck {
             .select(col("keep_id").as("doc_id"))
           val kept = gated.join(best, "doc_id")
             .repartition(docs.sparkSession.sparkContext.defaultParallelism)
-            .localCheckpoint()
+            .pin()
           val fimmed = graft.ext.Packing.fimTransform(kept)
             .withColumn("toks",
               col("n_tokens") + when(col("fim"), 3L).otherwise(0L))

@@ -27,6 +27,9 @@ import org.apache.spark.sql.SparkSession
   *    ROWTIME (README.md:238), i.e. instants, not wall-clock values.
   *    Operators additionally accept NTZ inputs directly (defense in
   *    depth for user-supplied frames) — see FIXTURES.md §Timestamps.
+  *  - `cleaner.referenceTracking.cleanCheckpoints=true`: when a
+  *    checkpoint dir is set, [[Pin]]'s reliable pins are deleted once
+  *    nothing references them (no effect without a dir).
   */
 object Sessions {
 
@@ -48,6 +51,7 @@ object Sessions {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
       .config("spark.sql.warehouse.dir",
         s"${System.getProperty("java.io.tmpdir")}/graft-warehouse/" +
           s"$appName-$warehouseNonce")

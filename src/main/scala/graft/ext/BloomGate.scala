@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Bridge
+import graft.core.Pin._
 import graft.functions.{BloomBitPositions, BloomBits, BloomMightContain}
 
 /** Bloom-filter membership gate for corpus-vs-corpus scale: when the
@@ -93,6 +94,6 @@ object BloomGate {
                     n: Int = 3, minOverlap: Int = 1,
                     numBits: Int = DefaultNumBits, k: Int = DefaultK): DataFrame =
     decontaminateAgainst(corpus,
-      Decontamination.benchmarkGrams(bench, textCol, n).localCheckpoint(),
+      Decontamination.benchmarkGrams(bench, textCol, n).pin(),
       idCol, textCol, n, minOverlap, numBits, k)
 }

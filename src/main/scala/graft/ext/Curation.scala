@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.core.Pin._
 
 /** End-to-end corpus curation — the consumable derived relation of the
   * LLM-data mandate, composing the pipeline a training run actually
@@ -422,7 +423,7 @@ object Curation {
       // scored — without the pin the whole surprisal chain (two corpus
       // scans + three aggregations) runs twice (the duplicationProfile
       // lesson)
-      .localCheckpoint()
+      .pin()
     val thr = groupPercentiles(scored, domainCol, "mean_bits_x100",
         Seq(33, 67))
       .select(col(domainCol), col("p33"), col("p67"))
@@ -465,7 +466,7 @@ object Curation {
     require(keepBuckets.nonEmpty, "ccnetCurate needs at least one kept bucket")
     val buck = perplexityBuckets(docs, domainCol, idCol, textCol, scorer)
       .select(col(idCol), col("mean_bits_x100"), col("bucket"))
-      .localCheckpoint()
+      .pin()
     val kept = docs.join(
       buck.filter(col("bucket").isin(keepBuckets: _*)).select(col(idCol)),
       Seq(idCol))
@@ -542,7 +543,7 @@ object Curation {
           .as("ref_bits_x100"))
       .withColumn("excess_x100",
         greatest(col("proxy_bits_x100") - col("ref_bits_x100"), lit(0L)))
-      .localCheckpoint()
+      .pin()
     // domain-bounded collect → exact largest-remainder allocation
     val excess = perDomain.select("domain", "excess_x100")
       .collect().map(row => row.getString(0) -> row.getLong(1)).toSeq
@@ -633,7 +634,7 @@ object Curation {
     val pred = TextAnalysis
       .classifyLangId(docs, labeled, labelCol, idCol, textCol)
       .select(col(idCol), col("pred").as("lang_pred"))
-      .localCheckpoint()
+      .pin()
     Sampling.temperatureMix(
       docs.select(col(idCol)).join(pred, Seq(idCol)),
       col("lang_pred"), col(idCol), alphaNum, alphaDen)
@@ -650,7 +651,7 @@ object Curation {
                           textCol: String = "text"): DataFrame = {
     val pred = TextAnalysis.classifyWith(docs, bundle, idCol, textCol)
       .select(col(idCol), col("pred").as("lang_pred"))
-      .localCheckpoint()
+      .pin()
     Sampling.temperatureMix(
       docs.select(col(idCol)).join(pred, Seq(idCol)),
       col("lang_pred"), col(idCol), alphaNum, alphaDen)

@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.core.Pin._
 
 /** Benchmark decontamination for training corpora: drop (or report)
   * corpus documents that share word n-grams with a held-out benchmark /
@@ -171,8 +172,8 @@ object Decontamination {
     // each read them, and Catalyst has no cross-branch subexpression
     // reuse — without the checkpoint the corpus shingle/minhash stage
     // would run twice per call (the repLevelPairs pattern)
-    val cf = Dedup.features(corpus, idCol, textCol, n).localCheckpoint()
-    val bf = Dedup.features(bench, idCol, textCol, n).localCheckpoint()
+    val cf = Dedup.features(corpus, idCol, textCol, n).pin()
+    val bf = Dedup.features(bench, idCol, textCol, n).pin()
     val cb = Dedup.bands(cf, idCol, numBands, rowsPerBand)
       .filter(col("bkey").isNotNull)
     val bb = Dedup.bands(bf, idCol, numBands, rowsPerBand)

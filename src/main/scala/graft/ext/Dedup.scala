@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.Overlap
+import graft.core.Pin._
 import graft.functions.{PolyFold, polyFingerprint, polyFingerprint64}
 
 /** Deduplication family for training-data pipelines: exact, MinHash+LSH
@@ -221,7 +222,7 @@ object Dedup {
   /** Representative-level pipeline core: exact-collapse (one window),
     * capped LSH candidates + exact-Jaccard verification over
     * REPRESENTATIVES only, plus eager overflow disclosure. Returns
-    * (grouped, repPairs): `grouped` = feats + rep, localCheckpointed —
+    * (grouped, repPairs): `grouped` = feats + rep, pinned —
     * it feeds many plan branches (band self-join, hash re-attach, member
     * expansion) and Catalyst has no cross-branch subexpression reuse, so
     * one executor-local materialization beats re-running the window (and
@@ -230,14 +231,14 @@ object Dedup {
     */
   private def repLevelPairs(feats: DataFrame, idCol: String, numBands: Int,
                             rowsPerBand: Int, maxBucket: Int): (DataFrame, DataFrame) = {
-    val grouped = withExactReps(feats, idCol).localCheckpoint()
+    val grouped = withExactReps(feats, idCol).pin()
     val repFeats = grouped.filter(col(idCol) === col("rep"))
     // band rows + bucket width in ONE window pass, materialized once:
     // the overflow disclosure and the capped self-join both read it
     val widthed = bands(repFeats, idCol, numBands, rowsPerBand)
       .filter(col("bkey").isNotNull)
       .withColumn("__w", count(lit(1)).over(Window.partitionBy("band", "bkey")))
-      .localCheckpoint()
+      .pin()
     val capped = widthed.filter(col("__w") <= maxBucket).drop("__w")
     val l = capped.withColumnRenamed(idCol, "doc_a")
     val r = capped.withColumnRenamed(idCol, "doc_b")
@@ -379,7 +380,7 @@ object Dedup {
     val feats = samp
       .select(col(idCol), shingleHashes(col(textCol), n).as("hashes"))
       .withColumn("sig", minhashSignature(col("hashes")))
-      .localCheckpoint()
+      .pin()
     auditGrid("lshRecallGrid", feats, idCol, configs,
       ("num_bands", "rows_per_band"), jaccardNum, jaccardDen, maxShingleDf) {
       (b, r) => lshCandidates(feats, idCol, b, r, maxBucket)
@@ -444,7 +445,7 @@ object Dedup {
     // would be computed and pinned for nothing
     val feats = samp
       .select(col(idCol), shingleHashes(col(textCol), n).as("hashes"))
-      .localCheckpoint()
+      .pin()
     // the Hamming-0 collapse and the intra-group expansion are
     // radius-INDEPENDENT and run ONCE for the whole sweep; only the
     // block-combination join runs per config
@@ -474,7 +475,7 @@ object Dedup {
     val truth +: pinned = Overlap.all(
       (() => sampledExactTruth(feats, idCol, jaccardNum, jaccardDen,
         maxShingleDf, who)) +:
-        configs.map { case (x, y) => () => cands(x, y).localCheckpoint() })
+        configs.map { case (x, y) => () => cands(x, y).pin() })
     configs.zip(pinned).map { case ((x, y), c) =>
       auditReport(feats, truth, c, idCol, jaccardNum, jaccardDen)
         .select(lit(x.toLong).as(keys._1), lit(y.toLong).as(keys._2), col("*"))
@@ -526,7 +527,7 @@ object Dedup {
         .select(col("__la_h").as("h"), col("__la_df").as("df"))) {
       withJaccard(truthCand, "doc_a", "doc_b", feats, feats, idCol)
         .filter(jaccardAtLeast(jaccardNum, jaccardDen))
-        .select("doc_a", "doc_b").localCheckpoint()
+        .select("doc_a", "doc_b").pin()
     }
   }
 
@@ -588,7 +589,7 @@ object Dedup {
     val ex = feats.select(col(idCol), explode(col("hashes")).as("h"))
     // hash document-frequency, materialized once: the disclosure probe
     // and the universe cut both read it
-    val hdf = ex.groupBy("h").agg(count(lit(1)).as("hdf")).localCheckpoint()
+    val hdf = ex.groupBy("h").agg(count(lit(1)).as("hdf")).pin()
     // materialized once: `sizes` and BOTH sides of the self-join below
     // read `kept` — without the checkpoint the corpus-wide shingle
     // explode + universe-cut join would be three separate plan subtrees
@@ -600,7 +601,7 @@ object Dedup {
         "overlap was only those shingles)",
       hdf.filter(col("hdf") > maxDf)) {
       ex.join(hdf.filter(col("hdf") <= maxDf).select("h"), "h")
-        .localCheckpoint()
+        .pin()
     }
     val sizes = kept.groupBy(col(idCol))
       .agg(count(lit(1)).as("nh"))
@@ -712,7 +713,7 @@ object Dedup {
       .withColumn("rep",
         when(col("simhash").isNull, col(idCol))
           .otherwise(min(col(idCol)).over(Window.partitionBy("simhash"))))
-      .localCheckpoint()
+      .pin()
 
   /** Intra-group member pairs of a [[hammingGrouped]] frame — Hamming 0
     * by construction, config-independent.
@@ -764,7 +765,7 @@ object Dedup {
       .select(col(idCol), explode(bandStructs).as("b"))
       .select(col(idCol), col("b.band"), col("b.bkey"))
       .withColumn("__w", count(lit(1)).over(Window.partitionBy("band", "bkey")))
-      .localCheckpoint() // feeds the disclosure probe AND the capped join
+      .pin() // feeds the disclosure probe AND the capped join
     val capped = banded.filter(col("__w") <= maxBucket).drop("__w")
     val l = capped.select(col(idCol).as("doc_a"), col("band"), col("bkey"))
     val r = capped.select(col(idCol).as("doc_b"), col("band"), col("bkey"))
@@ -802,47 +803,6 @@ object Dedup {
 
   // ── Near-dup clustering + canonical keep-list ──────────────────────
 
-  /** Connected components by iterative min-label propagation: every node
-    * starts labelled with its own id; each round, a node adopts the
-    * minimum label in its closed neighbourhood; at fixpoint every
-    * component carries its minimum member id as the cluster label.
-    *
-    * Scale shape: one equi-join (edges ⋈ labels on src) plus one hash
-    * aggregation (min per id) per round — all key-partitioned shuffles,
-    * never a collected graph on the driver. Rounds = graph diameter,
-    * which for near-dup clusters (cliques-with-bridges) is small; the
-    * convergence probe is a single overflow-safe DECIMAL(38) checksum
-    * (labels only decrease, so an unchanged sum IS the fixpoint — no
-    * extra join against the previous iteration). Each round is
-    * `localCheckpoint`ed: lineage stays O(1) instead of growing a plan
-    * per round, and the blocks are released by the ContextCleaner once
-    * the next round supersedes them.
-    *
-    * `nodes` must expose `id`; `edges` must expose (`src`, `dst`) —
-    * undirected, either orientation; symmetrized here.
-    *
-    * If the loop exits at `maxRounds` without reaching the fixpoint (a
-    * component of diameter > maxRounds — gradual-mutation spam chains),
-    * the labels are NOT the transitive closure. The checksum probe
-    * detects this exactly, so non-convergence is never silent: default
-    * is a WARN log naming rounds used (partial labels returned, each
-    * still a component member so downstream keep-lists stay safe —
-    * just split); `strict = true` throws instead, for pipelines where
-    * a split cluster must halt the job rather than ship.
-    *
-    * Per-round frames pin via `localCheckpoint` by default — executor-
-    * local blocks, cheap, but an executor loss mid-clustering restarts
-    * the whole job. Pass `checkpointDir` (reliable storage — HDFS/S3 in
-    * production) to switch the round frames to RELIABLE checkpoints:
-    * each round's labels survive executor loss, the long-clustering
-    * durability knob for corpora where restarting from round 0 is the
-    * expensive path. The context's checkpoint dir is set ONCE per call
-    * (setCheckpointDir mints a fresh UUID subdir, so probing
-    * getCheckpointDir for equality can never match — and the knob is
-    * SparkContext-global, shared with any concurrent job); checkpoint
-    * files persist after the job (`cleanCheckpoints` is off by
-    * default) — the caller owns deleting the directory when done.
-    */
   /** Cheap per-round fixpoint signature shared by the clustering
     * loops: (row count, exact DECIMAL sum of the rows' xxhash64) over
     * ALL columns — type-agnostic (string ids hash like longs; the old
@@ -857,26 +817,42 @@ object Dedup {
     (r.getLong(0), r.getDecimal(1))
   }
 
+  /** Connected components by iterative min-label propagation: every node
+    * starts labelled with its own id; each round, a node adopts the
+    * minimum label in its closed neighbourhood; at fixpoint every
+    * component carries its minimum member id as the cluster label.
+    *
+    * Scale shape: one equi-join (edges ⋈ labels on src) plus one hash
+    * aggregation (min per id) per round — all key-partitioned shuffles,
+    * never a collected graph on the driver. Rounds = graph diameter,
+    * which for near-dup clusters (cliques-with-bridges) is small; the
+    * convergence probe is a cheap per-round [[labelSig]] signature, and
+    * ONE exact `exceptAll` against the previous round confirms the
+    * first fixpoint it reports. Each round is pinned: lineage stays
+    * O(1) instead of growing a plan per round, and the pinned data is
+    * released by the ContextCleaner once the next round supersedes it.
+    *
+    * `nodes` must expose `id`; `edges` must expose (`src`, `dst`) —
+    * undirected, either orientation; symmetrized here.
+    *
+    * If the loop exits at `maxRounds` without reaching the fixpoint (a
+    * component of diameter > maxRounds — gradual-mutation spam chains),
+    * the labels are NOT the transitive closure. The checksum probe
+    * detects this exactly, so non-convergence is never silent: default
+    * is a WARN log naming rounds used (partial labels returned, each
+    * still a component member so downstream keep-lists stay safe —
+    * just split); `strict = true` throws instead, for pipelines where
+    * a split cluster must halt the job rather than ship.
+    *
+    * Per-round frames are pinned lazily by [[graft.core.Pin]], which
+    * decides from the context whether they survive executor loss.
+    */
   def clusterLabels(nodes: DataFrame, edges: DataFrame,
-                    maxRounds: Int = 50, strict: Boolean = false,
-                    checkpointDir: Option[String] = None): DataFrame = {
-    val sc = nodes.sparkSession.sparkContext
-    var ckptDirSet = false
-    // LAZY local pins (lineage still truncated — the pinned frame plans
-    // as a flat RDD scan — but materialization folds into the round's
-    // OWN signature job instead of a separate eager job): each round
-    // costs ONE action, not two. The round driver is an aggregation /
-    // key-partitioned join, so nothing downstream needs the pre-run
-    // size statistics an eager pin would add. Reliable-checkpoint mode
-    // (explicit checkpointDir) keeps eager semantics unchanged.
-    def pin(df: DataFrame): DataFrame = checkpointDir match {
-      case Some(d) =>
-        if (!ckptDirSet) { sc.setCheckpointDir(d); ckptDirSet = true }
-        df.checkpoint()
-      case None => df.localCheckpoint(eager = false)
-    }
-    val sym = pin(edges.select(col("src"), col("dst"))
-      .union(edges.select(col("dst").as("src"), col("src").as("dst"))))
+                    maxRounds: Int = 50, strict: Boolean = false): DataFrame = {
+    // lazy pins: one action per round, not two (Pin.pinLazily)
+    val sym = edges.select(col("src"), col("dst"))
+      .union(edges.select(col("dst").as("src"), col("src").as("dst")))
+      .pinLazily()
     // candidate generation must not rerun per round (hence the pin above).
     // Round 22 (guide §2.3): only nodes TOUCHED BY AN EDGE can ever
     // change label — the fixpoint runs over the dup graph's own node
@@ -885,8 +861,8 @@ object Dedup {
     // round's join/aggregation is dup-graph-bounded, never
     // corpus-bounded — at 100 TB the difference between shuffling the
     // corpus O(diameter) times and shuffling only the dup membership.
-    var labels = pin(sym.select(col("src").as("id")).distinct()
-      .select(col("id"), col("id").as("label")))
+    var labels = sym.select(col("src").as("id")).distinct()
+      .select(col("id"), col("id").as("label")).pinLazily()
     var rounds = 0
     var converged = false
     // carry the previous round's signature forward: labelSig(labels)
@@ -897,8 +873,8 @@ object Dedup {
     while (!converged && rounds < maxRounds) {
       val viaNeighbour = sym.join(labels, sym("src") === labels("id"))
         .select(sym("dst").as("id"), col("label"))
-      val next = pin(labels.union(viaNeighbour)
-        .groupBy("id").agg(min("label").as("label")))
+      val next = labels.union(viaNeighbour)
+        .groupBy("id").agg(min("label").as("label")).pinLazily()
       // Fixpoint probe, exact in two stages: per round a CHEAP
       // partial-agg signature (row count + exact DECIMAL sum of the
       // rows' 64-bit hashes — type-agnostic, so string ids can never
@@ -966,23 +942,11 @@ object Dedup {
     * cluster_id = component min; isolated nodes label themselves.
     * Non-convergence at `maxRounds` warns (or throws under `strict`)
     * with labels = each node's best-known min — still component
-    * members, just possibly split. `checkpointDir` switches the
-    * per-round pins to reliable checkpoints exactly as in
-    * [[clusterLabels]].
+    * members, just possibly split. Rounds pin as in [[clusterLabels]].
     */
   def clusterLabelsStar(nodes: DataFrame, edges: DataFrame,
-                        maxRounds: Int = 25, strict: Boolean = false,
-                        checkpointDir: Option[String] = None): DataFrame = {
-    val sc = nodes.sparkSession.sparkContext
-    var ckptDirSet = false
-    // lazy local pins: one action per round instead of two — see
-    // [[clusterLabels]]' pin note
-    def pin(df: DataFrame): DataFrame = checkpointDir match {
-      case Some(d) =>
-        if (!ckptDirSet) { sc.setCheckpointDir(d); ckptDirSet = true }
-        df.checkpoint()
-      case None => df.localCheckpoint(eager = false)
-    }
+                        maxRounds: Int = 25, strict: Boolean = false): DataFrame = {
+    // lazy pins: one action per round, not two (Pin.pinLazily)
     // canonical orientation (big, small); self-loops and duplicates out
     def canon(e: DataFrame): DataFrame = e
       .filter(col("src") =!= col("dst"))
@@ -1017,12 +981,12 @@ object Dedup {
     def sameEdges(a: DataFrame, aSig: (Long, java.math.BigDecimal),
                   b: DataFrame, bSig: (Long, java.math.BigDecimal)): Boolean =
       aSig == bSig && b.exceptAll(a).isEmpty
-    var cur = pin(canon(edges))
+    var cur = canon(edges).pinLazily()
     var curSig = labelSig(cur)
     var rounds = 0
     var converged = curSig._1 == 0L // edge-free graph: all singletons
     while (!converged && rounds < maxRounds) {
-      val next = pin(canon(smallStar(largeStar(cur))))
+      val next = canon(smallStar(largeStar(cur))).pinLazily()
       val nextSig = labelSig(next)
       converged = sameEdges(cur, curSig, next, nextSig)
       cur = next
@@ -1066,12 +1030,10 @@ object Dedup {
                       numBands: Int = 4, rowsPerBand: Int = 2,
                       jaccardNum: Int = 8, jaccardDen: Int = 10,
                       maxBucket: Int = DefaultMaxBucketWidth,
-                      maxRounds: Int = 50, strict: Boolean = false,
-                      checkpointDir: Option[String] = None): DataFrame = {
+                      maxRounds: Int = 50, strict: Boolean = false): DataFrame = {
     val edges = nearDupEdgeSet(docs, idCol, textCol, n, numBands,
       rowsPerBand, jaccardNum, jaccardDen, maxBucket)
-    clusterLabels(docs.select(col(idCol).as("id")), edges,
-      maxRounds, strict, checkpointDir)
+    clusterLabels(docs.select(col(idCol).as("id")), edges, maxRounds, strict)
       .select(col("id").as(idCol), col("cluster_id"))
   }
 
@@ -1089,12 +1051,11 @@ object Dedup {
                           numBands: Int = 4, rowsPerBand: Int = 2,
                           jaccardNum: Int = 8, jaccardDen: Int = 10,
                           maxBucket: Int = DefaultMaxBucketWidth,
-                          maxRounds: Int = 25, strict: Boolean = false,
-                          checkpointDir: Option[String] = None): DataFrame = {
+                          maxRounds: Int = 25, strict: Boolean = false): DataFrame = {
     val edges = nearDupEdgeSet(docs, idCol, textCol, n, numBands,
       rowsPerBand, jaccardNum, jaccardDen, maxBucket)
     clusterLabelsStar(docs.select(col(idCol).as("id")), edges,
-      maxRounds, strict, checkpointDir)
+      maxRounds, strict)
       .select(col("id").as(idCol), col("cluster_id"))
   }
 
@@ -1167,10 +1128,9 @@ object Dedup {
                     numBands: Int = 4, rowsPerBand: Int = 2,
                     jaccardNum: Int = 8, jaccardDen: Int = 10,
                     maxBucket: Int = DefaultMaxBucketWidth,
-                    maxRounds: Int = 50, strict: Boolean = false,
-                    checkpointDir: Option[String] = None): DataFrame = {
+                    maxRounds: Int = 50, strict: Boolean = false): DataFrame = {
     val keep = nearDupClusters(docs, idCol, textCol, n, numBands, rowsPerBand,
-      jaccardNum, jaccardDen, maxBucket, maxRounds, strict, checkpointDir)
+      jaccardNum, jaccardDen, maxBucket, maxRounds, strict)
       .filter(col(idCol) === col("cluster_id"))
       .select(col(idCol))
     docs.join(keep, Seq(idCol), "left_semi")
@@ -1431,9 +1391,9 @@ object Dedup {
     // scan re-runs three times (measured 14.6 s → ~5 s at sf0.1)
     val fps = winnowFingerprints(docs, k, w, idCol, textCol)
       .select(col(idCol), col("fp")).distinct()
-      .localCheckpoint()
+      .pin()
     val width = fps.groupBy("fp").agg(count(lit(1)).as("__wo_n"))
-      .localCheckpoint()
+      .pin()
     val keep = fps.join(width.filter(col("__wo_n") <= maxBucket), "fp")
       .select(col(idCol), col("fp"))
     val a = keep.select(col(idCol).as("doc_a"), col("fp"))
@@ -1803,7 +1763,7 @@ object Dedup {
       // pinned: dfreq AND the flag join both read hs — without the pin
       // the corpus scan + shingle explode runs twice, contradicting the
       // single-pass claim above (the nbParts/Decontamination pattern)
-      .localCheckpoint()
+      .pin()
     val dfreq = hs.groupBy("__dp_h").agg(count(lit(1)).as("__dp_df"))
     val agg = hs.join(dfreq, "__dp_h")
       .groupBy(col(idCol))
@@ -1922,7 +1882,7 @@ object Dedup {
     require(n >= 1, s"shingle width must be >= 1, got $n")
     val hs = docs.filter(col(textCol).isNotNull)
       .select(col(idCol), explode(shingleHashes(col(textCol), n)).as("__sd_h"))
-      .localCheckpoint()
+      .pin()
     val dfreq = hs.groupBy("__sd_h").agg(count(lit(1)).as("__sd_df"))
     val agg = hs.join(dfreq, "__sd_h")
       .groupBy(col(idCol))

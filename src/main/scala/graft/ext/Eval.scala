@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.core.Pin._
 
 /** Evaluation & annotation analytics — the scoring rungs a training-data
   * platform runs AFTER the model: eval-set scoring (exact match, token
@@ -550,12 +551,12 @@ object Eval {
     val cells = labels.filter(col(labelCol).isNotNull)
       .groupBy(col(itemCol), col(labelCol))
       .agg(count(lit(1)).as("__fk_nij"))
-      .localCheckpoint()
+      .pin()
     val items = cells.groupBy(col(itemCol))
       .agg(sum(col("__fk_nij")).as("__fk_ri"),
         sum(col("__fk_nij") * col("__fk_nij")).as("__fk_sq"))
       .filter(col("__fk_ri") >= 2L)
-      .localCheckpoint()
+      .pin()
     // lcm of the distinct per-item denominators r(r−1): the distinct-r
     // set is bounded by the annotator count — a config-sized collect
     def gcd(a: Long, b: Long): Long = if (b == 0L) a else gcd(b, a % b)
@@ -619,12 +620,12 @@ object Eval {
     val cells = labels.filter(col(labelCol).isNotNull)
       .groupBy(col(itemCol), col(labelCol))
       .agg(count(lit(1)).as("__ka_nij"))
-      .localCheckpoint()
+      .pin()
     val items = cells.groupBy(col(itemCol))
       .agg(sum(col("__ka_nij")).as("__ka_ri"),
         sum(col("__ka_nij") * col("__ka_nij")).as("__ka_sq"))
       .filter(col("__ka_ri") >= 2L)
-      .localCheckpoint()
+      .pin()
     def gcd(a: Long, b: Long): Long = if (b == 0L) a else gcd(b, a % b)
     val rs = items.select(col("__ka_ri")).distinct().collect()
       .map(_.getLong(0))

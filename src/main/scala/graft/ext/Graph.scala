@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.core.Pin._
 
 /** Distributed graph signals for curation: PageRank-style authority
   * (the Common-Crawl-lineage quality prior — rank domains/URLs by the
@@ -73,10 +74,10 @@ object Graph {
         col(weightCol).cast("long").as("__pr_w"))
       .filter(col("__pr_src").isNotNull && col("__pr_dst").isNotNull &&
         col("__pr_w") > 0)
-      .localCheckpoint()
+      .pin()
     val nodes = e.select(col("__pr_src").as("node"))
       .union(e.select(col("__pr_dst").as("node"))).distinct()
-      .localCheckpoint()
+      .pin()
     val nn = nodes.agg(count(lit(1)).as("__pr_n"))
     val outW = e.groupBy("__pr_src").agg(sum("__pr_w").as("__pr_ow"))
     val teleport = expr(s"$RankScale div __pr_n")
@@ -98,7 +99,7 @@ object Graph {
             "div 100").as("rank_ppb"))
         // truncate the per-round lineage: ranks is |V|-bounded, and an
         // unpinned chain re-plans (and re-runs) every prior round
-        .localCheckpoint()
+        .pin()
     }
     ranks
   }
@@ -141,13 +142,13 @@ object Graph {
     // derivation (a banding pipeline, a similarity join) must not
     // re-run per round (the pageRank edge-pinning posture)
     val und = half.union(half.select(col("__lp_b").as("__lp_a"),
-      col("__lp_a").as("__lp_b"))).distinct().localCheckpoint()
+      col("__lp_a").as("__lp_b"))).distinct().pin()
     var labeled = seeds
       .filter(col(nodeCol).isNotNull && col(labelCol).isNotNull)
       .select(col(nodeCol).cast("string").as("node"),
         col(labelCol).cast("string").as("label"), lit(0L).as("round"))
       .dropDuplicates("node")
-      .localCheckpoint()
+      .pin()
     for (r <- 1 to rounds) {
       // majority label among labeled neighbors, smallest label on ties
       val votes = und
@@ -163,7 +164,7 @@ object Graph {
         .select(col("node"), col("label"), lit(r.toLong).as("round"))
       val fresh = winners.join(labeled.select("node"), Seq("node"),
         "left_anti")
-      labeled = labeled.union(fresh).localCheckpoint()
+      labeled = labeled.union(fresh).pin()
     }
     labeled
   }

@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.core.Pin._
 
 /** Deterministic sequence packing for training pipelines: lay documents
   * out in a content-independent, engine-reproducible order and cut the
@@ -120,7 +121,7 @@ object Packing {
     // only safe because this guard has already bounded its input)
     val totals = base.groupBy("__sb_pri", "__sb_grp")
       .agg(sum("__sb_tok").as("__sb_total"))
-      .localCheckpoint()
+      .pin()
     val nOff = totals.count()
     require(nOff <= MaxOffsetRows,
       s"selectByBudget: $nOff distinct (priority, group) rows exceed the " +
@@ -182,7 +183,7 @@ object Packing {
     // relation BEFORE the unpartitioned window over it runs
     val totals = base.groupBy("__cp_stg", "__cp_grp")
       .agg(sum("__cp_tok").as("__cp_total"))
-      .localCheckpoint()
+      .pin()
     val nOff = totals.count()
     require(nOff <= MaxOffsetRows,
       s"curriculumPack: $nOff distinct (stage, group) rows exceed the " +

@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.core.Pin._
 
 /** Preference-data machinery: fit Bradley–Terry strengths from
   * pairwise comparison counts — the model underneath RLHF/DPO reward
@@ -108,14 +109,14 @@ object Preference {
         col(nCol).cast("long").as("__bt_n"))
       .filter(col("__bt_w").isNotNull && col("__bt_l").isNotNull &&
         col("__bt_n") > 0 && col("__bt_w") =!= col("__bt_l"))
-      .localCheckpoint()
+      .pin()
     // the undirected match matrix both MM sums range over
     val matches = c.select(col("__bt_w").as("a"), col("__bt_l").as("b"),
         col("__bt_n"))
       .union(c.select(col("__bt_l").as("a"), col("__bt_w").as("b"),
         col("__bt_n")))
       .groupBy("a", "b").agg(sum("__bt_n").as("n"))
-      .localCheckpoint()
+      .pin()
     val items = matches.select(col("a").as("item")).distinct()
     val wins = c.groupBy(col("__bt_w").as("item"))
       .agg(sum("__bt_n").as("n_wins"))
@@ -141,7 +142,7 @@ object Preference {
               lit(1L)))
             .otherwise(lit(0L)).as("s"))
         // |V|-bounded; truncates the per-round lineage
-        .localCheckpoint()
+        .pin()
     }
     s.join(wins, Seq("item"), "left")
       .join(played, Seq("item"))

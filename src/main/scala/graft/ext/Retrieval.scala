@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.core.Pin._
 
 /** Hybrid retrieval — fuse the engine's SPARSE keyword search
   * ([[TextAnalysis.searchDocs]], integer tf-idf) with its DENSE
@@ -193,7 +194,7 @@ object Retrieval {
     * top-k scan; everything after is QUERY-BOUNDED — the pairwise sim
     * relation is |Q|·kCand² rows (kCand ≤ 64 enforced), and each of
     * the k greedy rounds is one anti-join + one partial-agg argmax
-    * over it, with the selected set localCheckpoint-pinned per round
+    * over it, with the selected set pinned per round
     * (|Q|·t rows) so the plan does not re-derive the trajectory.
     */
   def mmrRerank(emb: DataFrame, queryIds: Seq[Long], kCand: Int = 20,
@@ -209,7 +210,7 @@ object Retrieval {
     val cand = Similarity.topKByIdsNative(emb, queryIds, kCand, idCol, vecCol)
       .select(col("query_id"), col("neighbor_id"),
         round(col("cos") * 1e6, 0).cast("long").as("__mm_rel"))
-      .localCheckpoint()
+      .pin()
     val cv = cand.join(
       emb.select(col(idCol).as("neighbor_id"), col(vecCol).as("__mm_v")),
       "neighbor_id")
@@ -222,7 +223,7 @@ object Retrieval {
       .select(col("query_id"), col("__mm_ia"), col("__mm_ib"),
         round(round(Similarity.cosine(col("__mm_va"), col("__mm_vb")), 6)
           * 1e6, 0).cast("long").as("__mm_sim"))
-      .localCheckpoint()
+      .pin()
     def pick(scored: DataFrame): DataFrame = scored
       .groupBy(col("query_id"))
       .agg(min(struct((-col("__mm_mmr")).as("nm"),
@@ -232,7 +233,7 @@ object Retrieval {
     var selected = pick(cand
         .withColumn("__mm_mmr", lit(lam) * col("__mm_rel")))
       .withColumn("mmr_rank", lit(1L))
-      .localCheckpoint()
+      .pin()
     for (t <- 2 to k) {
       val remaining = cand.join(
         selected.select("query_id", "neighbor_id"),
@@ -248,7 +249,7 @@ object Retrieval {
           lit(lam) * col("__mm_rel") - lit(100L - lam) * col("__mm_ms"))
       selected = selected.union(
           pick(scored).withColumn("mmr_rank", lit(t.toLong)))
-        .localCheckpoint()
+        .pin()
     }
     selected.select(col("query_id"), col("neighbor_id"),
       col("mmr_rank"), col("mmr_score"))

@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.core.Pin._
 import graft.functions.polyFingerprint
 
 /** Deterministic splitting/sampling for training-data pipelines: every
@@ -212,7 +213,7 @@ object Sampling {
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val withCum = base.withColumn("__ps_cum", sum("__ps_tok").over(inGrp))
     val totals = base.groupBy("__ps_grp").agg(sum("__ps_tok").as("__ps_total"))
-      .localCheckpoint()
+      .pin()
     val offsets = totals
       .withColumn("__ps_off",
         coalesce(sum("__ps_total").over(
@@ -422,7 +423,7 @@ object Sampling {
     val dtf = gramBuckets(corpus)
       .groupBy(col(idCol), col("__ds_b"))
       .agg(count(lit(1)).as("__ds_tf"))
-      .localCheckpoint()
+      .pin()
     val rawm = dtf.groupBy("__ds_b").agg(sum("__ds_tf").as("__ds_cr"))
     val tgtm = gramBuckets(target)
       .groupBy("__ds_b").agg(count(lit(1)).as("__ds_ct"))
@@ -646,7 +647,7 @@ object Sampling {
     // cell relation BEFORE any window over it runs
     val totals = base.groupBy(col(domainCol), col("__tt_grp"))
       .agg(sum("toks").as("__tt_total"))
-      .localCheckpoint()
+      .pin()
     val nOff = totals.count()
     require(nOff <= Packing.MaxOffsetRows,
       s"takeTokenApportioned: $nOff (domain, group) cells exceed the " +

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.Overlap
+import graft.core.Pin._
 
 /** Similarity search over an embedding column (`Array[Float]`):
   * brute-force cosine top-k as the exact baseline, and a random-
@@ -639,7 +640,7 @@ object Similarity {
     // train once: the centroid frame feeds two write branches (quantizer
     // table + assignment join) — materialize so Lloyd runs a single time
     val cents = trainCentroids(corpus, centroids, idCol, vecCol)
-      .localCheckpoint()
+      .pin()
     graft.core.Layout.writeBucketed(cents, s"${name}_centroids", "cell", 1)
     graft.core.Layout.writeBucketed(
       assignCells(corpus, cents, idCol, vecCol), s"${name}_lists", "cell",
@@ -822,7 +823,7 @@ object Similarity {
     else None
 
   /** Append-time drift gate over distances the append ALREADY computed
-    * (the scored assignment/encode frames, localCheckpointed by the
+    * (the scored assignment/encode frames, pinned by the
     * caller so stats and append share one evaluation): WARN past
     * `maxDriftRatio`, or throw — BEFORE any index mutation — under
     * strict. An empty delta reads as zero drift.
@@ -948,7 +949,7 @@ object Similarity {
     // baseline present the scored frame is checkpointed so the stats
     // job and the append share one evaluation (zero extra delta passes)
     val scored0 = assignCellsScored(delta, cents, idCol, vecCol)
-    val scored = if (base.isDefined) scored0.localCheckpoint() else scored0
+    val scored = if (base.isDefined) scored0.pin() else scored0
     base.foreach(b => enforceDrift(name, b,
       Seq("ivf_assign" ->
         scored.select(col(idCol), (lit(1.0) - col("__cos")).as("d"))),
@@ -1083,7 +1084,7 @@ object Similarity {
              idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val sub = dims / m
     val cents = pqTrainCodebooks(corpus, m, codebookSize, dims, idCol, vecCol)
-      .localCheckpoint()
+      .pin()
     val codes = pqEncode(corpus, cents, m, dims, idCol, vecCol)
     val queries = corpus.filter(col(idCol).isin(queryIds: _*))
       .select(col(idCol).as("query_id"), col(vecCol))
@@ -1210,9 +1211,9 @@ object Similarity {
     // (guide §2.6, the recall-grid pattern) so the second chain's jobs
     // back-fill executors during the first's tail
     val Seq(cents, pqcents) = Overlap.all(Seq(
-      () => trainCentroids(corpus, centroids, idCol, vecCol).localCheckpoint(),
+      () => trainCentroids(corpus, centroids, idCol, vecCol).pin(),
       () => pqTrainCodebooks(corpus, m, codebookSize, dims, idCol, vecCol)
-        .localCheckpoint()))
+        .pin()))
     val assigned = assignCells(corpus, cents, idCol, vecCol)
       .select(col(idCol), col("cell"))
     val codes = pqEncode(corpus, pqcents, m, dims, idCol, vecCol)
@@ -1256,7 +1257,7 @@ object Similarity {
                    idCol: String = "vec_id",
                    vecCol: String = "embedding"): Unit = {
     val cents = pqTrainCodebooks(corpus, m, codebookSize, dims, idCol, vecCol)
-      .localCheckpoint()
+      .pin()
     graft.core.Layout.writeBucketed(cents, s"${name}_codebooks", "cell", 1)
     graft.core.Layout.writeBucketed(
       pqEncode(corpus, cents, m, dims, idCol, vecCol), s"${name}_codes",
@@ -1289,7 +1290,7 @@ object Similarity {
     val base = driftBaseline(spark, name, maxDriftRatio)
     val cents = spark.table(s"${name}_codebooks")
     val enc0 = pqEncodeScored(delta, cents, m, dims, idCol, vecCol)
-    val enc = if (base.isDefined) enc0.localCheckpoint() else enc0
+    val enc = if (base.isDefined) enc0.pin() else enc0
     base.foreach(b => enforceDrift(name, b,
       Seq("pq_residual" ->
         enc.groupBy(col(idCol)).agg(sum(col("__d")).as("d"))),
@@ -1343,13 +1344,13 @@ object Similarity {
                       buckets: Int = 8, idCol: String = "vec_id",
                       vecCol: String = "embedding"): Unit = {
     val cents = trainCentroids(corpus, centroids, idCol, vecCol)
-      .localCheckpoint()
+      .pin()
     graft.core.Layout.writeBucketed(cents, s"${name}_centroids", "cell", 1)
     graft.core.Layout.writeBucketed(
       assignCells(corpus, cents, idCol, vecCol).select(col(idCol), col("cell")),
       s"${name}_lists", "cell", buckets)
     val books = pqTrainCodebooks(corpus, m, codebookSize, dims, idCol, vecCol)
-      .localCheckpoint()
+      .pin()
     graft.core.Layout.writeBucketed(books, s"${name}_codebooks", "cell", 1)
     graft.core.Layout.writeBucketed(
       pqEncode(corpus, books, m, dims, idCol, vecCol), s"${name}_codes",
@@ -1423,10 +1424,10 @@ object Similarity {
     val base = driftBaseline(spark, name, maxDriftRatio)
     val scored0 = assignCellsScored(delta, spark.table(s"${name}_centroids"),
       idCol, vecCol)
-    val scored = if (base.isDefined) scored0.localCheckpoint() else scored0
+    val scored = if (base.isDefined) scored0.pin() else scored0
     val enc0 = pqEncodeScored(delta, spark.table(s"${name}_codebooks"), m,
       dims, idCol, vecCol)
-    val enc = if (base.isDefined) enc0.localCheckpoint() else enc0
+    val enc = if (base.isDefined) enc0.pin() else enc0
     // BOTH quantizers' drift from the frames the append writes anyway;
     // the strict path throws before either table has been touched
     base.foreach(b => enforceDrift(name, b,
@@ -1509,7 +1510,7 @@ object Similarity {
       // corpus-sized by definition.
       val corpus = indexed.select(col(idCol), col(vecCol))
         .unionByName(delta.select(col(idCol), col(vecCol)))
-        .localCheckpoint()
+        .pin()
       kind match {
         case "ivf"   => buildIvfIndex(corpus, name, mi("centroids"),
           mi("buckets"), idCol, vecCol)
@@ -1676,7 +1677,7 @@ object Similarity {
     val grouped = corpus.filter(col(vecCol).isNotNull)
       .select(col(idCol), col(vecCol))
       .withColumn("rep", min(col(idCol)).over(Window.partitionBy(col(vecCol))))
-      .localCheckpoint()
+      .pin()
     val reps = grouped.filter(col(idCol) === col("rep"))
     // bucket representatives ONCE (single fused LshBuckets evaluation in
     // the checkpoint job), with bucket width attached in the same pass:
@@ -1685,7 +1686,7 @@ object Similarity {
     val bucketRows = lshTableBuckets(reps, tables, planes, dims, vecCol)
       .select(col("tbl"), col("bucket"), col(idCol))
       .withColumn("__w", count(lit(1)).over(Window.partitionBy("tbl", "bucket")))
-      .localCheckpoint()
+      .pin()
     val capped = bucketRows.filter(col("__w") <= maxBucket).drop("__w")
     val l = capped.select(col("tbl"), col("bucket"), col(idCol).as("id_a"))
     val r = capped.select(col("tbl"), col("bucket"), col(idCol).as("id_b"))
@@ -1806,16 +1807,16 @@ object Similarity {
       .orderBy(graft.functions.polyFingerprint(col(idCol).cast("string")),
         col(idCol))
       .limit(maxSample)
-      .localCheckpoint()
+      .pin()
     val a = samp.select(col(idCol).as("id_a"), col(vecCol).as("va"))
     val b = samp.select(col(idCol).as("id_b"), col(vecCol).as("vb"))
     val truth = a.join(b, col("id_a") < col("id_b"))
       .filter(round(cosine(col("va"), col("vb")), 6) >= threshold)
-      .select("id_a", "id_b").localCheckpoint()
+      .select("id_a", "id_b").pin()
     configs.map { case (tables, planes) =>
       val cands = embeddingNearDups(samp, -1.0, planes, dims, tables,
           idCol, vecCol, maxBucket)
-        .localCheckpoint()
+        .pin()
       val verified = cands.filter(col("cos") >= threshold)
       val hits = truth.join(cands, Seq("id_a", "id_b"), "left_semi")
       samp.agg(count(lit(1)).as("n_sampled"))
@@ -1873,7 +1874,7 @@ object Similarity {
     require(maxCell >= 2, s"maxCell must be >= 2, got $maxCell")
     val vecs = corpus.filter(col(vecCol).isNotNull)
     val cents = trainCentroids(vecs, centroids, idCol, vecCol)
-    val assigned = assignCells(vecs, cents, idCol, vecCol).localCheckpoint()
+    val assigned = assignCells(vecs, cents, idCol, vecCol).pin()
     val widths = assigned.groupBy("cell").agg(count(lit(1)).as("n"))
     val capped = assigned.join(
       broadcast(widths.filter(col("n") <= maxCell).select("cell")), "cell")
@@ -1903,13 +1904,12 @@ object Similarity {
                        centroids: Int = 16, idCol: String = "vec_id",
                        vecCol: String = "embedding",
                        maxCell: Int = DefaultMaxCellWidth,
-                       maxRounds: Int = 50, strict: Boolean = false,
-                       checkpointDir: Option[String] = None): DataFrame =
+                       maxRounds: Int = 50, strict: Boolean = false): DataFrame =
     graft.ext.Dedup.clusterLabels(
       corpus.select(col(idCol).as("id")),
       semDedupPairs(corpus, threshold, centroids, idCol, vecCol, maxCell)
         .select(col("id_a").as("src"), col("id_b").as("dst")),
-      maxRounds, strict, checkpointDir)
+      maxRounds, strict)
       .select(col("id").as(idCol), col("cluster_id"))
 
   /** Cluster-stratified DIVERSITY sampling — a small subset that COVERS
@@ -1957,7 +1957,7 @@ object Similarity {
         lit(0.0), (acc, v) => acc + v)
     val n2 = when(col(vecCol).isNull, lit(null))
       .otherwise(round(dotSelf(col(vecCol)) * 1e6, 0).cast("long"))
-    val base = corpus.select(n2.as("__nr_n2")).localCheckpoint()
+    val base = corpus.select(n2.as("__nr_n2")).pin()
     val stats = base.agg(
       count(lit(1)).as("n_vecs"),
       sum(when(col("__nr_n2").isNull, 1L).otherwise(0L)).as("n_null"),

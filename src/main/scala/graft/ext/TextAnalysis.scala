@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.core.Pin._
 import graft.functions.polyFingerprint
 
 /** Text-analysis operators for a large-scale training-data pipeline
@@ -142,7 +143,7 @@ object TextAnalysis {
     * best pair's count falls below `minPairCount`.
     *
     * Scale shape: ONE corpus-sized explode + aggregation builds the
-    * weighted pre-token vocabulary (localCheckpointed — iterations
+    * weighted pre-token vocabulary (pinned — iterations
     * never re-read the corpus); each of the `nMerges` iterations is one
     * map (re-tokenize the vocabulary, codegen'd) + one partial-
     * aggregated pair-count shuffle + a TakeOrdered(1) argmax. Real
@@ -176,7 +177,7 @@ object TextAnalysis {
       .select(explode(regexp_extract_all(col(textCol), lit(BpePattern),
         lit(0))).as("pt"))
       .groupBy("pt").agg(count(lit(1)).as("w"))
-      .localCheckpoint()
+      .pin()
     val learned = scala.collection.mutable.ArrayBuffer.empty[(String, String, Long)]
     var go = true
     while (go && learned.size < nMerges) {
@@ -244,7 +245,7 @@ object TextAnalysis {
       .select(explode(regexp_extract_all(col(textCol), lit(BpePattern),
         lit(0))).as("pt"))
       .groupBy("pt").agg(count(lit(1)).as("w"))
-      .localCheckpoint()
+      .pin()
     // byte-level symbols are UTF-8 bytes, so the fixed-point guard
     // counts bytes, not code points
     val symLen = if (byteLevel) octet_length(col("pt")) else length(col("pt"))
@@ -261,7 +262,7 @@ object TextAnalysis {
         learned.toSeq.map(m => (m._1, m._2)), byteLevel)
       // pinned: the pair-count and symbol-count aggregations both read
       // the tokenized vocabulary — one tokenization pass, not two
-      val tokd = vocabPt.select(toks.as("t"), col("w")).localCheckpoint()
+      val tokd = vocabPt.select(toks.as("t"), col("w")).pin()
       val pairs = tokd.filter(size(col("t")) >= 2)
         .select(explode(zip_with(
           slice(col("t"), lit(1), size(col("t")) - 1),
@@ -355,7 +356,7 @@ object TextAnalysis {
         rawPts.select(byteLevelEncode(col("pt")).as("pt"))
       else rawPts)
       .groupBy("pt").agg(count(lit(1)).as("w"))
-      .localCheckpoint()
+      .pin()
     val blocks = vocabPt.select(
       explode(transform(
         sequence(lit(0),
@@ -373,7 +374,7 @@ object TextAnalysis {
           l => col("b").substr(p, l))))).as("piece"),
       col("w"))
       .groupBy("piece").agg(sum("w").as("cnt"))
-      .localCheckpoint()
+      .pin()
     val top = seedCounts.orderBy(col("cnt").desc, col("piece"))
       .limit(seedSize).collect()
       .map(r => r.getString(0) -> r.getLong(1))
@@ -1321,7 +1322,7 @@ object TextAnalysis {
     // tf is deliberately NOT pinned although dfreq and the scoring join
     // both read it: WordTfs is a cheap codegen'd map pipelined straight
     // into each consumer's aggregation, and a measured sf0.1 A/B showed
-    // localCheckpoint-materializing the corpus-sized explode costs ~25%
+    // pinning the corpus-sized explode costs ~25%
     // (0.67→0.88 s) — two pipelined columnar scans beat writing the
     // row blow-up. Pinning pays only for BOUNDED or post-aggregation
     // relations (searchDocs' query-cut `matched`, nbParts' vocab-sized
@@ -1437,7 +1438,7 @@ object TextAnalysis {
       // duplicationProfile lesson, ADVICE r12; re-examined round 22 —
       // the no-pin initial plan shows 10 parquet scans and no
       // ReusedExchange, so the pin stays)
-      .localCheckpoint()
+      .pin()
     val c2 = bp.groupBy("bigram").agg(sum("tf").as("cnt"))
       .withColumn("w1", substring_index(col("bigram"), " ", 1))
     val c1 = c2.groupBy("w1").agg(sum("cnt").as("ctx"))
@@ -1743,7 +1744,7 @@ object TextAnalysis {
     val pairs = docs.filter(col(textCol).isNotNull)
       .select(explode(ngramArray(textCol, 2)).as("bigram"))
       .groupBy("bigram").agg(count(lit(1)).cast("long").as("n_pair"))
-      .localCheckpoint()
+      .pin()
     val uni = tfRelation(docs, idCol, textCol)
       .groupBy("word").agg(sum("tf").cast("long").as("cnt"))
     val tot = pairs.agg(sum("n_pair").cast("long").as("n_total"))
@@ -1795,7 +1796,7 @@ object TextAnalysis {
       .select(explode(leveledGrams(textCol)).as("lg"))
       .select(col("lg.level").as("level"), col("lg.gram").as("gram"))
       .groupBy("level", "gram").agg(count(lit(1)).cast("long").as("cnt"))
-      .localCheckpoint()
+      .pin()
     val nv = counts.filter(col("level") === 1)
       .agg((sum("cnt") + count(lit(1))).cast("long").as("cnt"))
       .select(lit(0).as("level"), lit("").as("gram"), col("cnt"))
@@ -1846,7 +1847,7 @@ object TextAnalysis {
   def trigramScoreWith(docs: DataFrame, model: DataFrame,
                        idCol: String = "doc_id",
                        textCol: String = "text"): DataFrame = {
-    val m = model.localCheckpoint()
+    val m = model.pin()
     def lvl(n: Int, cntAs: String): DataFrame = m
       .filter(col("level") === n).select(col("gram"), col("cnt").as(cntAs))
     val nv = m.filter(col("level") === 0)
@@ -1946,7 +1947,7 @@ object TextAnalysis {
       .select(explode(leveledGrams(textCol)).as("lg"))
       .select(col("lg.level").as("level"), col("lg.gram").as("gram"))
       .groupBy("level", "gram").agg(count(lit(1)).cast("long").as("cnt"))
-      .localCheckpoint()
+      .pin()
     val tri = base.filter(col("level") === 3).select("gram", "cnt")
     val big = base.filter(col("level") === 2).select("gram", "cnt")
     val uni = base.filter(col("level") === 1).select("gram", "cnt")
@@ -2018,7 +2019,7 @@ object TextAnalysis {
   def knTrigramScoreWith(docs: DataFrame, model: DataFrame,
                          idCol: String = "doc_id",
                          textCol: String = "text"): DataFrame = {
-    val m = model.localCheckpoint()
+    val m = model.pin()
     def lvl(n: Int, key: String, cntAs: String): DataFrame = m
       .filter(col("level") === n)
       .select(col("gram").as(key), col("cnt").as(cntAs))
@@ -2168,13 +2169,13 @@ object TextAnalysis {
     // both read it, and without the checkpoint each would replay the
     // corpus scan (plan-audited: two Scan parquet nodes → one)
     val matched = tf.join(broadcast(terms.select("word").distinct()), "word")
-      .localCheckpoint()
+      .pin()
     searchDocsFromMatched(matched, queries, k, idCol, queryIdCol, termCol)
   }
 
   /** The query-term-matched corpus tf relation the MULTI-ARM retrieval
     * queries share: `(idCol, dlen, word, tf)`, one row per (document,
-    * query term present), localCheckpoint-pinned. ONE corpus scan feeds
+    * query term present), pinned. ONE corpus scan feeds
     * the tf-idf arm ([[searchDocsFromMatched]]), the BM25 arm
     * ([[searchDocsBm25FromMatched]]) AND the term-coverage qrels
     * ([[graft.ext.Retrieval.termCoverageQrelsFromMatched]]) — before
@@ -2199,7 +2200,7 @@ object TextAnalysis {
       .select(col(idCol), col("dlen"),
         col("wt.word").as("word"), col("wt.tf").as("tf"))
       .join(broadcast(words), "word")
-      .localCheckpoint()
+      .pin()
   }
 
   /** [[searchDocs]]' scoring over an already-pinned matched-tf relation
@@ -2275,7 +2276,7 @@ object TextAnalysis {
     val top = searchDocs(docs, queries, kFirst, idCol, textCol,
         queryIdCol, termCol)
       .select(col("query_id"), col(idCol), col("score"))
-      .localCheckpoint()
+      .pin()
     val fb = tfRelation(docs, idCol, textCol)
       .join(broadcast(top), Seq(idCol))
       .groupBy(col("query_id"), col("word"))
@@ -2405,7 +2406,7 @@ object TextAnalysis {
   }
 
   /** Internal: the trained multinomial-NB relations. `wc` = per
-    * (label, word) token counts (localCheckpointed — vocab, classes AND
+    * (label, word) token counts (pinned — vocab, classes AND
     * the model all read it; without the pin each consumer would replay
     * the labeled-corpus scan); `classes` = per-label stats (n_docs,
     * denom, prior_bits, default_bits); `model` = per (label, word)
@@ -2431,7 +2432,7 @@ object TextAnalysis {
       .select(col("label"), explode(tfs(col("__text"))).as("wt"))
       .select(col("label"), col("wt.word").as("word"), col("wt.tf").as("tf"))
       .groupBy("label", "word").agg(sum("tf").as("cnt"))
-      .localCheckpoint()
+      .pin()
     val vocabN = wc.agg(countDistinct("word").as("v"))
     val toks = wc.groupBy("label").agg(sum("cnt").as("tok"))
     val classes = priors.join(toks, Seq("label"), "left_outer")
@@ -2503,11 +2504,11 @@ object TextAnalysis {
   }
 
   /** A trained NB model pinned for REPEATED application — the streaming
-    * / per-batch shape: the three model relations localCheckpoint-pin
-    * (executor-local materialized blocks), so each [[classifyWith]]
-    * call pays only the scoring plan, never a training re-aggregation
-    * of the labeled corpus. `tfs` rides along so the applying side is
-    * guaranteed the same tokenizer the model trained under.
+    * / per-batch shape: the three model relations are pinned, so each
+    * [[classifyWith]] call pays only the scoring plan, never a training
+    * re-aggregation of the labeled corpus. `tfs` rides along so the
+    * applying side is guaranteed the same tokenizer the model trained
+    * under.
     */
   final case class NbBundle(wc: DataFrame, classes: DataFrame,
                             model: DataFrame, tfs: Column => Column)
@@ -2521,7 +2522,7 @@ object TextAnalysis {
                     tfs: Column => Column =
                       graft.functions.wordTfs): NbBundle = {
     val (wc, classes, model) = nbParts(labeled, labelCol, textCol, tfs)
-    NbBundle(wc, classes.localCheckpoint(), model.localCheckpoint(), tfs)
+    NbBundle(wc, classes.pin(), model.pin(), tfs)
   }
 
   /** Apply a pinned [[NbBundle]] — identical semantics to
@@ -2569,7 +2570,7 @@ object TextAnalysis {
       throw new IllegalArgumentException(
         s"unknown tokenizer '$tokenizer' — register it in " +
           s"TextAnalysis.NbTokenizers (have: ${NbTokenizers.keys.mkString(", ")})"))
-    // nbParts pins wc (localCheckpoint), so the three writes share one
+    // nbParts pins wc, so the three writes share one
     // training aggregation — the labeled corpus is scanned once
     val (wc, classes, model) = nbParts(labeled, labelCol, textCol, tfs)
     graft.core.Layout.writeBucketed(wc, s"${name}_wc", "word", buckets)
@@ -2584,7 +2585,7 @@ object TextAnalysis {
 
   /** Load a persisted NB bundle written by [[writeNbBundle]]: the three
     * model relations read straight from the bucketed tables (no
-    * training work, no localCheckpoint — the tables ARE the pinned
+    * training work, no pin — the tables ARE the pinned
     * form), the tokenizer resolved from `_meta`. A loaded bundle
     * classifies bit-identically to the in-session one it was written
     * from (spec-gated, plus the t_nb_classify_persisted oracle).

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
+import graft.core.Pin._
 
 /** Per-key temporal FEATURE derivation over an event log — the
   * feature-engineering step a behavioral training pipeline runs before
@@ -60,7 +61,7 @@ object EventFeatures {
       s"factorX100 must exceed 100 (the median itself), got $factorX100")
     val bins = binCounts(events, key, timeCol, binMicros)
       // pinned: the median histogram AND the flag join both read bins
-      .localCheckpoint()
+      .pin()
     flagBins(bins, key, factorX100)
   }
 

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructField, StructType,
   TimestampNTZType, TimestampType}
 import graft.core.Overlap
+import graft.core.Pin._
 
 /** Temporal joins Spark has no native operator for — AS-OF
   * (point-in-time: each left row picks the single nearest right row at
@@ -259,7 +260,7 @@ object TemporalJoins {
           col("__rj_b1") - col("__rj_b0") + 1).otherwise(lit(0L)))
       // materialized once: the disclosure probe below and the join both
       // read the interval side (the semDedupPairs guard pattern)
-      .localCheckpoint()
+      .pin()
     val rBinned = rBase
       .filter(col("__rj_nb").between(1, maxBins))
       .withColumn("__rj_bin", explode(sequence(col("__rj_b0"), col("__rj_b1"))))
@@ -358,7 +359,7 @@ object TemporalJoins {
     val lBase = prep(left, leftStartCol, leftEndCol,
       "__ij_ls", "__ij_le", "__ij_lb0", "__ij_lb1")
     val rBase = prep(right, rightStartCol, rightEndCol,
-      "__ij_rs", "__ij_re", "__ij_rb0", "__ij_rb1").localCheckpoint()
+      "__ij_rs", "__ij_re", "__ij_rb0", "__ij_rb1").pin()
     // one probe over both sides, `side` naming which one a row is from
     def over(base: DataFrame, side: String): DataFrame =
       base.filter(col("__ij_nb") > maxBins)

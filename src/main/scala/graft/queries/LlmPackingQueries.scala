@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
+import graft.core.Pin._
 import graft.core.Tables
 import graft.ext.{Dedup, Multimodal, Similarity, TextAnalysis}
 
@@ -87,7 +88,7 @@ private[graft] object LlmPackingQueries {
       // a derived relation whose per-row map cost dominates its scan)
       val kept = docs.select("doc_id", "text").join(best, "doc_id")
         .repartition(s.sparkContext.defaultParallelism)
-        .localCheckpoint()
+        .pin()
       val staged = kept.select(col("doc_id"),
         (lit(4) - col("quality")).cast("long").as("stage"),
         when(col("text").isNull, 0)
@@ -196,7 +197,7 @@ private[graft] object LlmPackingQueries {
       // would serialize the FIM stage's per-row slicing onto one task
       val kept = docs.select("doc_id", "text").join(best, "doc_id")
         .repartition(s.sparkContext.defaultParallelism)
-        .localCheckpoint()
+        .pin()
       val fimmed = graft.ext.Packing.fimTransform(kept)
         .withColumn("toks",
           col("n_tokens") + when(col("fim"), 3L).otherwise(0L))
@@ -311,10 +312,10 @@ private[graft] object LlmPackingQueries {
             lit("def main"), col("doc_id").cast("string"),
             lit("():\nvalue = "), col("doc_id").cast("string"),
             lit(" * 31\nreturn value"))).as("text"))
-        .localCheckpoint()
-      val st = TextAnalysis.codeStats(planted).localCheckpoint()
+        .pin()
+      val st = TextAnalysis.codeStats(planted).pin()
       val gated = planted.join(st.filter(col("code_pass") === 1L)
-        .select("doc_id"), Seq("doc_id"), "left_semi").localCheckpoint()
+        .select("doc_id"), Seq("doc_id"), "left_semi").pin()
       // bucket cap 24: wider than any planted 20-member vendored-copy
       // block, narrower than the evens-wide template grams at EVERY sf
       // (>= 25 even docs at sf0.001) — the corpus-wide grams are
@@ -333,7 +334,7 @@ private[graft] object LlmPackingQueries {
       // serialize the FIM stage's per-row slicing onto one task
       val kept = gated.join(best, "doc_id")
         .repartition(s.sparkContext.defaultParallelism)
-        .localCheckpoint()
+        .pin()
       val fimmed = graft.ext.Packing.fimTransform(kept)
         .withColumn("toks",
           col("n_tokens") + when(col("fim"), 3L).otherwise(0L))

@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
+import graft.core.Pin._
 import graft.core.{Overlap, Tables}
 import graft.ext.{Dedup, Multimodal, Similarity, TextAnalysis}
 
@@ -311,13 +312,13 @@ private[graft] object LlmRetrievalQueries {
       val qIds = SearchQueries.map(_._1).distinct.sorted
       val Seq(qrels, sparse20, bm2520) = Overlap.all(Seq(
         () => graft.ext.Retrieval
-          .termCoverageQrelsFromMatched(matched, queries).localCheckpoint(),
+          .termCoverageQrelsFromMatched(matched, queries).pin(),
         () => TextAnalysis.searchDocsFromMatched(matched, queries, k = 20)
           .select(col("query_id"), col("doc_id"),
-            col("rank").as("tfidf_rank")).localCheckpoint(),
+            col("rank").as("tfidf_rank")).pin(),
         () => TextAnalysis.searchDocsBm25FromMatched(docs, matched, queries, k = 20)
           .select(col("query_id"), col("doc_id"),
-            col("rank").as("bm25_rank")).localCheckpoint()))
+            col("rank").as("bm25_rank")).pin()))
       val dense = Similarity
         .topKByIdsNative(Tables.embeddings(s, d), qIds, 20)
         .select(col("query_id"), col("neighbor_id").as("doc_id"),

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import graft.core.Pin._
 import graft.ext.Similarity
 
 /** STREAMING ANN index maintenance — admitted vectors become searchable
@@ -136,7 +137,7 @@ object AnnIndexStream {
         else {
           // pinned: counted for the event AND appended — one evaluation
           val novel = novelOnly(batch.toDF(), s"${name}_buckets", idCol)
-            .localCheckpoint()
+            .pin()
           val n = novel.count()
           if (n > 0) {
             Similarity.appendToLshIndex(novel, name, planes, dims, tables,
@@ -185,7 +186,7 @@ object AnnIndexStream {
           onBatch(MaintainEvent(epoch, "skipped", "ivf", 0L, Double.NaN))
         else {
           val novel = novelOnly(batch.toDF(), s"${name}_lists", idCol)
-            .localCheckpoint()
+            .pin()
           val n = novel.count()
           if (n > 0) {
             val indexed = spark.table(s"${name}_lists")

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import graft.core.Pin._
 import graft.ext.TextAnalysis
 
 /** The composed streaming curation flagship: one topology chaining the
@@ -269,7 +270,7 @@ object CurationStream {
     // pinned so per-batch broadcasts never re-read the table
     val boilerHashes = boilerplateStrip.map(b =>
       graft.ext.Dedup.loadBoilerplateLines(docs.sparkSession,
-        b.artifactName).select("line_hash").localCheckpoint())
+        b.artifactName).select("line_hash").pin())
     // lexicon pins once at start — a malformed lexicon (missing
     // columns) dies here, not on batch 0
     val lexPinned = lexiconGate.map { lx =>
@@ -279,7 +280,7 @@ object CurationStream {
       require(Set("term", "category", "weight_x100").subsetOf(cols),
         s"LexiconScreenGate lexicon needs (term, category, weight_x100), " +
           s"got ${cols.toSeq.sorted.mkString(", ")}")
-      lx.lexicon.localCheckpoint()
+      lx.lexicon.pin()
     }
     // model quality gate loads its persisted bundle ONCE, here — a
     // missing/foreign-tokenizer artifact dies at start, not on batch 0
@@ -294,7 +295,7 @@ object CurationStream {
         s"PerplexityGate.maxMeanBitsX100 must be positive, got " +
           s"${pg.maxMeanBitsX100}")
       val b = TextAnalysis.loadLmModel(docs.sparkSession, pg.bundleName)
-      b.copy(model = b.model.localCheckpoint())
+      b.copy(model = b.model.pin())
     }
     // language model trains once, here, and pins — per batch only the
     // scoring plan runs (trainNbBundle fails loud on an unlabeled

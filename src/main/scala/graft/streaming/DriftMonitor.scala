@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import graft.core.Pin._
 import graft.ext.TextAnalysis
 
 /** STREAMING corpus-drift monitor: per micro-batch, the ingest's
@@ -401,7 +402,7 @@ object DriftMonitor {
     else {
       val xs = metricsBy(batch, groupCol, textCol, minQuality)
         .select(col(groupCol).as("grp"), col("metric"), col("x"))
-        .localCheckpoint()
+        .pin()
       if (xs.isEmpty) DriftEvent(epoch, "empty_batch", Nil)
       else {
         requireProfileShape(spark, name, perGroup = true)
@@ -439,7 +440,7 @@ object DriftMonitor {
           lit(0L).as("last_x"))
         val merged = Seq(upd, carried, marker)
           .reduce(_ unionByName _)
-          .localCheckpoint()
+          .pin()
         publishSwap(spark, name, merged)
         val alarms = merged.filter(col("kind") === "s" &&
             (col("s_up") > threshold || col("s_dn") > threshold))
@@ -501,7 +502,7 @@ object DriftMonitor {
     if (skip.isDefined) DriftEvent(epoch, skip.get, Nil)
     else {
       val xs = metrics(batch, textCol, minQuality)
-        .localCheckpoint()
+        .pin()
       if (xs.isEmpty) DriftEvent(epoch, "empty_batch", Nil)
       else {
         requireProfileShape(spark, name, perGroup = false)
@@ -540,7 +541,7 @@ object DriftMonitor {
           lit(0L).as("n_batches"), lit(0L).as("last_x"))
         val merged = Seq(upd, carried, marker)
           .reduce(_ unionByName _)
-          .localCheckpoint()
+          .pin()
         publishSwap(spark, name, merged)
         val alarms = merged.filter(col("kind") === "s" &&
             (col("s_up") > threshold || col("s_dn") > threshold))

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import graft.core.Pin._
 
 /** STREAMING eval counters — the online face of the batch eval family
   * ([[graft.ext.Eval.accuracyCi]]/confusion): a stream of scored items
@@ -139,7 +140,7 @@ object EvalStream {
           .groupBy("kind", "grp", "ref", "pred", "epoch")
           .agg(sum(col("n")).as("n"))
           .select("kind", "grp", "ref", "pred", "n", "epoch")
-          .localCheckpoint()
+          .pin()
         graft.core.Layout.writeBucketed(merged, scratch(name), "kind", 1)
         spark.sql(s"DROP TABLE IF EXISTS $live")
         spark.sql(s"ALTER TABLE ${scratch(name)} RENAME TO $live")

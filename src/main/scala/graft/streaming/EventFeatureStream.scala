@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 import org.apache.spark.sql.types._
+import graft.core.Pin._
 
 /** STREAMING complements of [[graft.ops.EventFeatures]] — the same
   * per-key temporal features, derived incrementally as events ingest
@@ -474,7 +475,7 @@ object EventFeatureStream {
           .binCounts(batch.toDF(), key, timeCol, binMicros)
           // read twice (store upsert + touched-key list) → pinned;
           // bounded by the batch's (key, bin) cardinality
-          .localCheckpoint()
+          .pin()
         val touched = bins.select(col(key)).distinct()
           .collect().map(_.get(0)).toSeq
         if (touched.nonEmpty) {
@@ -494,7 +495,7 @@ object EventFeatureStream {
             .readWhere(spark, storeDir, "bin_key", col(key).isin(touched: _*))
             .groupBy(col(key), col("bin_start_us"))
             .agg(sum(col("n_events")).as("n_events"))
-            .localCheckpoint() // the flag helper reads it twice
+            .pin() // the flag helper reads it twice
           sink(graft.ops.EventFeatures.flagBins(hist, key, factorX100), epoch)
           if (compactEvery > 0 &&
               ManifestStore.latestManifest(spark, storeDir)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import graft.core.Overlap
+import graft.core.Pin._
 import graft.ext.Dedup
 
 /** Streaming ingest dedup gate: a document stream is admitted batch by
@@ -128,7 +129,7 @@ object IngestDedupGate {
     * content is lost to the corpus, the price of the one-pass rule —
     * the full transitive collapse is [[graft.ext.Dedup.dedupedCorpus]]'s
     * job at corpus level). Returns the novel documents' FEATURE rows
-    * (id, hashes, sig, simhash), localCheckpointed — the decision is
+    * (id, hashes, sig, simhash), pinned — the decision is
     * frozen before any store mutation.
     *
     * Scale shape: the batch side is always the broadcast/collected side
@@ -143,7 +144,7 @@ object IngestDedupGate {
     val batchReps = Dedup.withExactReps(
         Dedup.features(batch, idCol, textCol, n), idCol)
       .filter(col(idCol) === col("rep")).drop("rep")
-      .localCheckpoint()
+      .pin()
     val survivors =
       if (!storeExists(spark, name)) batchReps
       else {
@@ -186,7 +187,7 @@ object IngestDedupGate {
     // batchReps); only the store-filtered branch needs its own
     // checkpoint before feeding the self-join's branches.
     val checked =
-      if (survivors eq batchReps) batchReps else survivors.localCheckpoint()
+      if (survivors eq batchReps) batchReps else survivors.pin()
     // the overflow probe reads only the pinned survivor frame; it runs
     // next to the pair-verification pin below
     Overlap.disclosing("ingest gate", "within-batch " + OverflowKind,
@@ -194,7 +195,7 @@ object IngestDedupGate {
       val bcand = Dedup.lshCandidates(checked, idCol, numBands, rowsPerBand)
       val passing = Dedup.withJaccard(bcand, "doc_a", "doc_b", checked, checked, idCol)
         .filter(Dedup.jaccardAtLeast(jaccardNum, jaccardDen))
-        .select(col("doc_a"), col("doc_b")).localCheckpoint()
+        .select(col("doc_a"), col("doc_b")).pin()
       // the common batch has ZERO within-batch near-dup pairs — skip the
       // drop anti-join and the orphan probe's two joins + count entirely
       // (isEmpty on the checkpointed pair frame is a cheap partition peek)
@@ -202,7 +203,7 @@ object IngestDedupGate {
       else {
         val batchDups = passing.select(col("doc_b").as(idCol)).distinct()
         discloseOrphans(passing, "ingest gate", "within-batch doc(s) dropped", "batch")
-        checked.join(batchDups, Seq(idCol), "left_anti").localCheckpoint()
+        checked.join(batchDups, Seq(idCol), "left_anti").pin()
       }
     }
   }
@@ -274,7 +275,7 @@ object IngestDedupGate {
         s"version under ${storeDir(spark, name)} — run the gate (or " +
         "appendToStore) first")
     val feats0 = Dedup.withExactReps(
-      Dedup.features(corpus, idCol, textCol, n), idCol).localCheckpoint()
+      Dedup.features(corpus, idCol, textCol, n), idCol).pin()
     val exactDup = feats0.filter(col(idCol) =!= col("rep"))
       .select(col(idCol), lit("exact_dup_batch").as("verdict"))
     val batchReps = feats0.filter(col(idCol) === col("rep")).drop("rep")
@@ -291,7 +292,7 @@ object IngestDedupGate {
       .join(storeIds, Seq(idCol), "left_semi")
       .select(col(idCol), lit("known_id").as("verdict"))
     val unknown = batchReps.join(storeIds, Seq(idCol), "left_anti")
-      .localCheckpoint()
+      .pin()
     // stage 2: near-dups of stored content — stored hashes ride the
     // band rows (one store scan feeds the Jaccard check, as in the gate)
     val bb = Dedup.bands(unknown, idCol, numBands, rowsPerBand)
@@ -319,14 +320,14 @@ object IngestDedupGate {
     // stage 3: within-drop pairwise near-dups over the survivors — the
     // same capped candidate generation + disclosure as filterNovel
     val survivors = unknown.join(storeDup.select(col(idCol)),
-      Seq(idCol), "left_anti").localCheckpoint()
+      Seq(idCol), "left_anti").pin()
     Overlap.disclosing("gate probe", "within-drop " + OverflowKind,
       Dedup.bandOverflow(survivors, idCol, numBands, rowsPerBand)) {
       val passing = Dedup.withJaccard(
           Dedup.lshCandidates(survivors, idCol, numBands, rowsPerBand),
           "doc_a", "doc_b", survivors, survivors, idCol)
         .filter(Dedup.jaccardAtLeast(jaccardNum, jaccardDen))
-        .select(col("doc_a"), col("doc_b")).localCheckpoint()
+        .select(col("doc_a"), col("doc_b")).pin()
       val batchDup = passing.select(col("doc_b").as(idCol)).distinct()
         .select(col(idCol), lit("batch_near_dup").as("verdict"))
       if (!passing.isEmpty)

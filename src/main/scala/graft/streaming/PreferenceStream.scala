@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import graft.core.Pin._
 
 /** STREAMING faces of the RLHF/SFT prep operators — scored responses
   * and chat turns arrive continuously (a labeling queue, a reward
@@ -110,7 +111,7 @@ object PreferenceStream {
         min(struct(col("__dp_s").as("s"), col(respCol).as("id")))
           .as("r"),
         count(lit(1)).as("n"))
-      .localCheckpoint() // read twice: upsert + touched list
+      .pin() // read twice: upsert + touched list
     // BOUNDED key probe (round 22, VERDICT r21 #5): at most
     // pushdownKeyLimit+1 keys ever cross to the driver — the semi-join
     // fallback needs only whether the limit is EXCEEDED, never the
@@ -270,7 +271,7 @@ object PreferenceStream {
       .agg(max(struct(col("role"), col("content"))).as("rc"))
       .select(col("conv"), col("turn_idx"),
         col("rc.role").as("role"), col("rc.content").as("content"))
-      .localCheckpoint()
+      .pin()
     // BOUNDED key probe — the mergeDpoBatch rationale: only up to
     // pushdownKeyLimit+1 distinct convs cross to the driver
     val touched = batchTurns.select(col("conv")).distinct()

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import graft.core.Pin._
 import graft.ext.{Dedup, FreqSketch}
 
 /** STREAMING distinct-count sketch maintenance: fold every ingested
@@ -198,7 +199,7 @@ object SketchStream {
               .unionByName(batchCells).unionByName(marker)
           })
           .groupBy("kind", "k").agg(sum("v").as("v"))
-          .localCheckpoint()
+          .pin()
         graft.core.Layout.writeBucketed(merged, cmsScratch(name), "kind", 1)
         spark.sql(s"DROP TABLE IF EXISTS $live")
         spark.sql(s"ALTER TABLE ${cmsScratch(name)} RENAME TO $live")
@@ -288,7 +289,7 @@ object SketchStream {
             spark.table(live).unionByName(batchRegs)
           else batchRegs)
           .groupBy("group", "reg").agg(max("rank").as("rank"))
-          .localCheckpoint()
+          .pin()
         graft.core.Layout.writeBucketed(merged, scratch(name), "group", 1)
         spark.sql(s"DROP TABLE IF EXISTS $live")
         spark.sql(s"ALTER TABLE ${scratch(name)} RENAME TO $live")

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.Checkpoints
 import org.apache.spark.sql.functions._
 import graft.core.Tables
 import graft.ext.{Dedup, Multimodal, Similarity, TextAnalysis}
@@ -1308,17 +1309,23 @@ class LlmOpsSpec extends SparkSuite {
 
   test("clustering with a reliable checkpoint dir completes and matches the default path") {
     import spark.implicits._
+    val sc = spark.sparkContext
     val docs = Tables.documents(spark, sf).limit(80)
-    val ckpt = java.nio.file.Files.createTempDirectory("cluster-ckpt").toString
-    val viaReliable = Dedup.nearDupClusters(docs, checkpointDir = Some(ckpt))
-      .as[(Long, Long)].collect().toMap
     val viaLocal = Dedup.nearDupClusters(docs).as[(Long, Long)].collect().toMap
-    assert(viaReliable == viaLocal && viaReliable.nonEmpty)
-    // the knob really switched to reliable storage: the dir holds rdd
-    // checkpoint data (executor-loss-survivable, unlike local blocks)
+    val ckpt = java.nio.file.Files.createTempDirectory("cluster-ckpt").toString
     def hasData(f: java.io.File): Boolean =
       f.isFile || Option(f.listFiles()).exists(_.exists(hasData))
-    assert(hasData(new java.io.File(ckpt)), "no reliable checkpoint written")
+    Checkpoints.withDir(sc, ckpt) {
+      val clusters = Dedup.nearDupClusters(docs)
+      val viaReliable = clusters.as[(Long, Long)].collect().toMap
+      assert(viaReliable == viaLocal && viaReliable.nonEmpty)
+      // the pins really went to reliable storage: while `clusters` still
+      // references its pinned rounds (so the cleaner keeps their files),
+      // the dir holds rdd checkpoint data
+      assert(hasData(new java.io.File(ckpt)), "no reliable checkpoint written")
+      assert(clusters.columns.toSeq == Seq("doc_id", "cluster_id"))
+    }
+    assert(sc.getCheckpointDir.isEmpty, "the checkpoint dir must not outlive the body")
   }
 
   test("scale guard: no cartesian product in the round-18 corpus-join plans") {

@@ -10,6 +10,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * anywhere else fails this spec. Likewise background jobs and
   * disclosure probes live only in graft.core.Overlap: a Scala Future,
   * an Await, the global ExecutionContext or a 21-row probe anywhere
+  * else fails it. And pins live only in graft.core.Pin: a
+  * `localCheckpoint(`, `.checkpoint(` or `setCheckpointDir` anywhere
   * else fails it. Exemptions:
   *
   *  - queries/LlmOracle.scala keeps its own moduli: its DuckDB replay
@@ -43,6 +45,7 @@ class RuleLintSpec extends AnyFunSuite {
   private val Concurrency =
     ("""scala\.concurrent\.[^}]*\bFuture\b|\bFuture\s*[({.]|\bAwait\.""" +
       """|ExecutionContext\.Implicits\.global|limit\(21\)""").r
+  private val Pinning = """localCheckpoint\(|\.checkpoint\(|setCheckpointDir""".r
 
   test("the hash-rule moduli appear only in PolyFold (and the oracle's replay)") {
     assert(Moduli.findFirstIn(sources("graft/functions/PolyFold.scala")).isDefined)
@@ -60,5 +63,10 @@ class RuleLintSpec extends AnyFunSuite {
   test("Futures, Awaits, the global ExecutionContext and 21-row probes appear only in Overlap") {
     assert(Concurrency.findFirstIn(sources("graft/core/Overlap.scala")).isDefined)
     assert(offenders(Concurrency, Set("graft/core/Overlap.scala")) == Nil)
+  }
+
+  test("localCheckpoint, checkpoint and setCheckpointDir appear only in Pin") {
+    assert(Pinning.findFirstIn(sources("graft/core/Pin.scala")).isDefined)
+    assert(offenders(Pinning, Set("graft/core/Pin.scala")) == Nil)
   }
 }
