@@ -22,6 +22,11 @@ import org.apache.spark.sql.functions._
   * real integrations — plug in without touching the sink. The
   * reference's 5 s/message demo throttle (python_kafka_notify.py:29) is
   * deliberately NOT reproduced: it is a demo artifact, not semantics.
+  *
+  * Delivery is at-least-once, the one exception to `SinkDef`'s
+  * idempotent-per-epoch rule: a replayed epoch (a crash before its
+  * commit) sends its alerts again, like the reference's Kafka
+  * consumers. Each epoch is one `foreachPartition` job.
   */
 final case class AlertSink(
     transport: AlertSink.Transport,

@@ -18,10 +18,15 @@ import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
   *    records, never fail the pipeline.
   *
   * Offline impl: the ES bulk-API NDJSON format (action line + document
-  * line) written to a directory; rows without a doc id are routed to a
-  * dead-letter directory instead of failing. The transformation is a
-  * pure DataFrame→DataFrame (`bulkLines`) so the driver's oracle can
-  * verify it; file IO is the thin writeBatch shell.
+  * line). The transformation is a pure DataFrame→DataFrame (`bulkLines`)
+  * so the driver's oracle can verify it. `writeBatch` evaluates the same
+  * column expressions in one pass: per row, a dead-letter flag and
+  * either the bulk line (`action\ndoc`) or, for a row without a usable
+  * doc id, its `to_json` dead-letter line. One job writes both outputs
+  * as `dir/epoch=N/part-*` and `deadLetterDir/epoch=N/part-*` files
+  * (`EpochFiles`): each file is written under a hidden temp name and
+  * renamed into place, and a replayed epoch first deletes its
+  * directories, so its output replaces the earlier attempt's.
   */
 final case class EsBulkNdjsonSink(
     dir: String,
@@ -38,21 +43,15 @@ final case class EsBulkNdjsonSink(
     // appear verbatim in a JSON action line (quotes/backslashes are
     // escaped by bulkLines; control chars would need \u escapes and are
     // malformed keys in practice).
-    // overwrite the epoch directory, not append: Structured Streaming
-    // re-runs an epoch after a crash-before-commit, and the SinkDef
-    // contract requires replays to be idempotent — append would
-    // duplicate every record of the replayed batch
-    val bad = keyed.filter(
-      col("__id").isNull || col("__id").rlike("[\\x00-\\x1f]"))
-    deadLetterDir.foreach { dl =>
-      bad.select(to_json(struct(df.columns.map(col): _*)).as("value"))
-        .write.mode("overwrite").text(s"$dl/epoch=$epochId")
+    val bad = col("__id").isNull || col("__id").rlike("[\\x00-\\x1f]")
+    val (action, doc) = EsBulkNdjsonSink.bulkColumns(keyed, index, "__id")
+    val line = concat_ws("\n", action, doc)
+    val rows = deadLetterDir match {
+      case Some(_) => keyed.select(bad.cast("int"),
+        when(bad, to_json(struct(df.columns.map(col): _*))).otherwise(line))
+      case None => keyed.filter(!bad).select(lit(0), line)
     }
-    val good = keyed.filter(
-      col("__id").isNotNull && !col("__id").rlike("[\\x00-\\x1f]"))
-    EsBulkNdjsonSink.bulkLines(good, index, "__id")
-      .select(concat_ws("\n", col("action"), col("doc")).as("value"))
-      .write.mode("overwrite").text(s"$dir/epoch=$epochId")
+    EpochFiles.write(s"EsBulkNdjsonSink[$index]", rows, dir +: deadLetterDir.toSeq, epochId)
   }
 }
 
@@ -88,6 +87,14 @@ object EsBulkNdjsonSink {
     * All timestamp columns serialize ISO-8601 per the template rule.
     */
   def bulkLines(df: DataFrame, index: String, idCol: String): DataFrame = {
+    val (action, doc) = bulkColumns(df, index, idCol)
+    df.select(action.as("action"), doc.as("doc"))
+  }
+
+  /** `bulkLines`' two column expressions, for `writeBatch` to evaluate
+    * in its own select.
+    */
+  private def bulkColumns(df: DataFrame, index: String, idCol: String): (Column, Column) = {
     val payloadCols = df.columns.filterNot(_ == idCol)
     val serialized = payloadCols.map { name =>
       df.schema(name).dataType match {
@@ -95,9 +102,8 @@ object EsBulkNdjsonSink {
         case _ => col(name)
       }
     }
-    df.select(
-      concat(lit(s"""{"index":{"_index":"$index","_id":""""),
-        jsonEscape(col(idCol).cast("string")), lit("\"}}")).as("action"),
-      to_json(struct(serialized: _*)).as("doc"))
+    (concat(lit(s"""{"index":{"_index":"$index","_id":""""),
+        jsonEscape(col(idCol).cast("string")), lit("\"}}")),
+      to_json(struct(serialized: _*)))
   }
 }

@@ -11,18 +11,21 @@ import org.apache.spark.sql.functions._
   * The record contract is `key` + JSON `value` of the whole row — in
   * Spark, `to_json(struct(*))` plus the key column, exactly what a
   * `writeStream.format("kafka")` sink consumes. Offline we persist the
-  * same two-column frame to a directory; the transformation
+  * same two-column frame as JSON lines `{"key":…,"value":…}` in
+  * `dir/topic=T/epoch=N/part-*` files (`EpochFiles`: one job per epoch,
+  * a replayed epoch overwrites its files); the transformation
   * (`records`) is pure and oracle-verifiable.
   */
 final case class KafkaShapeSink(dir: String, topic: String, keyCol: String)
   extends SinkDef {
 
   override def writeBatch(df: DataFrame, epochId: Long): Unit =
-    KafkaShapeSink.records(df, keyCol)
-      // repartition on key = the producer's key→partition placement (L3);
-      // overwrite-per-epoch keeps crash-replays idempotent (SinkDef).
-      .repartition(col("key"))
-      .write.mode("overwrite").json(s"$dir/topic=$topic/epoch=$epochId")
+    EpochFiles.write(s"KafkaShapeSink[$topic]",
+      KafkaShapeSink.records(df, keyCol)
+        // repartition on key = the producer's key→partition placement (L3)
+        .repartition(col("key"))
+        .select(lit(0), to_json(struct(col("key"), col("value")))),
+      Seq(s"$dir/topic=$topic"), epochId)
 }
 
 object KafkaShapeSink {

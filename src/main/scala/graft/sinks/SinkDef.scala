@@ -11,11 +11,16 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   * One implementation serves batch and streaming: `writeBatch` is the
   * whole contract, and `stream` runs it per micro-batch via foreachBatch
   * (checkpointed — Spark's at-least-once delivery to an idempotent sink,
-  * SURVEY.md §2.8).
+  * SURVEY.md §2.8). The file sinks are idempotent per epoch, so a replay
+  * leaves exactly-once output. `AlertSink` is the one exception: it
+  * re-sends a replayed epoch's alerts (at-least-once, like the
+  * reference's Kafka consumers).
   */
 trait SinkDef extends Serializable {
 
-  /** Materialize one (micro-)batch. Must be idempotent per epoch. */
+  /** Materialize one (micro-)batch. Must be idempotent per epoch, except
+    * for `AlertSink` (at-least-once, see above).
+    */
   def writeBatch(df: DataFrame, epochId: Long): Unit
 
   /** Attach this sink to a streaming DataFrame. */

@@ -6,9 +6,10 @@ import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.types.{AbstractDataType, DataType, TypeCollection}
 
 /** Bridge into Spark's `private[sql]` Column↔Expression converters
-  * (Spark 4 removed the public `new Column(Expression)` constructor).
-  * Lives in the org.apache.spark.sql package tree purely for access;
-  * contains no Spark-internal logic of its own.
+  * (Spark 4 removed the public `new Column(Expression)` constructor) and
+  * its `private[spark]` Hadoop-configuration builder. Lives in the
+  * org.apache.spark.sql package tree purely for access; contains no
+  * Spark-internal logic of its own.
   */
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
@@ -32,4 +33,10 @@ object Bridge {
   def logicalPlan(df: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
     df.queryExecution.analyzed
+
+  /** A Hadoop configuration built from `conf` the way Spark builds the
+    * context's: Hadoop defaults plus every `spark.hadoop.*` entry.
+    */
+  def hadoopConf(conf: org.apache.spark.SparkConf): org.apache.hadoop.conf.Configuration =
+    org.apache.spark.deploy.SparkHadoopUtil.get.newConfiguration(conf)
 }

@@ -12,7 +12,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * an Await, the global ExecutionContext or a 21-row probe anywhere
   * else fails it. And pins live only in graft.core.Pin: a
   * `localCheckpoint(`, `.checkpoint(` or `setCheckpointDir` anywhere
-  * else fails it. Exemptions:
+  * else fails it. The file sinks write through graft.sinks.EpochFiles
+  * only: a `DataFrameWriter` (`.write` not followed by a call's `(`, or
+  * `.writeTo(`) anywhere under graft/sinks fails it. Exemptions:
   *
   *  - queries/LlmOracle.scala keeps its own moduli: its DuckDB replay
   *    text is the independent oracle the engine is checked against;
@@ -46,6 +48,7 @@ class RuleLintSpec extends AnyFunSuite {
     ("""scala\.concurrent\.[^}]*\bFuture\b|\bFuture\s*[({.]|\bAwait\.""" +
       """|ExecutionContext\.Implicits\.global|limit\(21\)""").r
   private val Pinning = """localCheckpoint\(|\.checkpoint\(|setCheckpointDir""".r
+  private val FrameWriter = """\.write\b(?!\s*\()|\.writeTo\(""".r
 
   test("the hash-rule moduli appear only in PolyFold (and the oracle's replay)") {
     assert(Moduli.findFirstIn(sources("graft/functions/PolyFold.scala")).isDefined)
@@ -68,5 +71,13 @@ class RuleLintSpec extends AnyFunSuite {
   test("localCheckpoint, checkpoint and setCheckpointDir appear only in Pin") {
     assert(Pinning.findFirstIn(sources("graft/core/Pin.scala")).isDefined)
     assert(offenders(Pinning, Set("graft/core/Pin.scala")) == Nil)
+  }
+
+  test("no DataFrameWriter call under graft/sinks: file sinks write through EpochFiles") {
+    assert(FrameWriter.findFirstIn("""df.write.mode("overwrite").text(dir)""").isDefined)
+    assert(FrameWriter.findFirstIn("out.write(bytes); df.writeStream").isEmpty)
+    val sinks = sources.keySet.filter(_.startsWith("graft/sinks/"))
+    assert(sinks.contains("graft/sinks/EpochFiles.scala"))
+    assert(offenders(FrameWriter, sources.keySet -- sinks) == Nil)
   }
 }

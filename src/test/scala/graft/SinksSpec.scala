@@ -1,8 +1,13 @@
 package graft
 
+import java.io.File
+import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.Files
+import java.time.LocalDateTime
 import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
+import org.apache.spark.ListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import graft.sinks.{AlertSink, EsBulkNdjsonSink, KafkaShapeSink}
 
@@ -14,12 +19,25 @@ object TestTransport {
 /** Sink layer semantics (SURVEY §2.2 K1–K7): ES bulk NDJSON with
   * doc-id-from-key + ISO-8601 timestamps + dead-letter tolerance, Kafka
   * record materialization, and the alert consumer incl. the
-  * malformed-payload fallback (python_kafka_notify.py:46–49).
+  * malformed-payload fallback (python_kafka_notify.py:46–49). The file
+  * sinks' epoch files: a replay overwrites, a killed attempt's hidden
+  * temp file is never read, and one write is one Spark job.
   */
 class SinksSpec extends SparkSuite {
 
   private def tmp(prefix: String) =
     Files.createTempDirectory(prefix).toString
+
+  /** The visible (readable) files of a directory. */
+  private def partFiles(d: String): Seq[File] =
+    new File(d).listFiles().toSeq.filterNot(_.getName.startsWith(".")).sortBy(_.getName)
+
+  /** Each visible file's lines; every file must end with a newline. */
+  private def fileLines(d: String): Seq[Seq[String]] = partFiles(d).map { f =>
+    val text = new String(Files.readAllBytes(f.toPath), UTF_8)
+    assert(text.endsWith("\n"), s"$f does not end with a newline")
+    text.split("\n", -1).toSeq.dropRight(1)
+  }
 
   test("ES NDJSON sink: bulk format, ISO-8601 *_TS, dead-letter for null ids") {
     import spark.implicits._
@@ -139,5 +157,93 @@ class SinksSpec extends SparkSuite {
     assert(TestTransport.sent.size() == 4)
     assert(TestTransport.sent.asScala.forall(_._1 == "unhappy-customers"))
     assert(TestTransport.sent.asScala.exists(_._2.contains("`first1@example.test`")))
+  }
+
+  test("ES sink replay: a second write of an epoch replaces the first, from fewer partitions") {
+    import spark.implicits._
+    val first = ((1 to 40).map(i => (Option(i.toLong), s"first$i")) :+
+      ((None: Option[Long]) -> "first-bad")).toDF("ID", "TAG").repartition(4)
+    val second = (1 to 10).map(i => (Option(i.toLong), s"second$i"))
+      .toDF("ID", "TAG").coalesce(1)
+    val dir = tmp("es-replay"); val dl = tmp("es-replay-dead")
+    val sink = EsBulkNdjsonSink(dir, "replay", "ID", deadLetterDir = Some(dl))
+    sink.writeBatch(first, 3)
+    assert(partFiles(s"$dir/epoch=3").length > 1)
+    sink.writeBatch(second, 3)
+
+    assert(partFiles(s"$dir/epoch=3").map(_.getName) == Seq("part-00000"))
+    val lines = spark.read.text(s"$dir/epoch=3").as[String].collect()
+    assert(lines.length == 20 && lines.distinct.length == 20)
+    val docs = lines.filterNot(_.startsWith("""{"index""""))
+    assert(docs.sorted.sameElements((1 to 10).map(i => s"""{"ID":$i,"TAG":"second$i"}""").sorted))
+    // the first write's dead letter is gone too: the second had no bad rows
+    assert(partFiles(s"$dl/epoch=3").isEmpty && spark.read.text(s"$dl/epoch=3").count() == 0)
+    // partition discovery over the sink directory sees the same lines
+    assert(spark.read.text(dir).count() == 20)
+  }
+
+  test("ES sink crash: a killed attempt's hidden temp file is never read, and a replay removes it") {
+    import spark.implicits._
+    val df = Seq((1L, "a"), (2L, "b")).toDF("ID", "TAG")
+    val dir = tmp("es-crash")
+    val sink = EsBulkNdjsonSink(dir, "crash", "ID")
+    sink.writeBatch(df, 0)
+    val leftover = new File(s"$dir/epoch=0/.part-00001.77.tmp")
+    Files.write(leftover.toPath, "{\"index\":{\"_id\":\"stale\"}}\n{}\n".getBytes(UTF_8))
+    assert(spark.read.text(s"$dir/epoch=0").count() == 4)
+    assert(spark.read.text(dir).count() == 4)
+    assert(!spark.read.text(dir).select("value").as[String].collect().exists(_.contains("stale")))
+    sink.writeBatch(df, 0)
+    assert(!leftover.exists && spark.read.text(s"$dir/epoch=0").count() == 4)
+  }
+
+  test("ES sink exact output in one named job: bulk lines equal bulkLines, dead letters equal to_json") {
+    import spark.implicits._
+    val t = LocalDateTime.parse("2024-01-01T10:01:00.123")
+    val df = Seq(
+      (Option("1"), "good-plain", t),
+      (Option("a\"b\\c"), "good-escaped", t.plusMinutes(1)),
+      (Option("2"), "good-two", t.plusMinutes(2)),
+      (None: Option[String], "bad-null", t.plusMinutes(3)),
+      (Option("x\u0001y"), "bad-control", t.plusMinutes(4)))
+      .toDF("ID", "TAG", "EVENT_TS")
+    assert(df.schema("EVENT_TS").dataType == org.apache.spark.sql.types.TimestampNTZType)
+    val dir = tmp("es-exact"); val dl = tmp("es-exact-dead")
+    val sink = EsBulkNdjsonSink(dir, "events", "ID", deadLetterDir = Some(dl))
+
+    val sc = spark.sparkContext
+    val descriptions = new ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        descriptions.add(String.valueOf(e.properties.getProperty("spark.job.description")))
+    }
+    def jobsOf(epoch: Long): Seq[String] = {
+      descriptions.clear()
+      ListenerBus.drain(sc)
+      sc.addSparkListener(listener)
+      try { sink.writeBatch(df, epoch); ListenerBus.drain(sc) }
+      finally sc.removeSparkListener(listener)
+      descriptions.asScala.toSeq
+    }
+    sc.setJobDescription("caller")
+    try {
+      assert(jobsOf(5) == Seq("EsBulkNdjsonSink[events] epoch=5"))
+      assert(jobsOf(6) == Seq("EsBulkNdjsonSink[events] epoch=6"))
+      assert(sc.getLocalProperty("spark.job.description") == "caller")
+    } finally sc.setJobDescription(null)
+
+    val good = df.filter(col("TAG").startsWith("good"))
+      .withColumn("__id", col("ID").cast("string"))
+    val expected = EsBulkNdjsonSink.bulkLines(good, "events", "__id").collect()
+      .map(r => r.getString(0) + "\n" + r.getString(1)).toSeq
+    val written = fileLines(s"$dir/epoch=6").flatMap(_.grouped(2).map(_.mkString("\n")))
+    assert(written.sorted == expected.sorted)
+    assert(written.exists(_.startsWith("""{"index":{"_index":"events","_id":"a\"b\\c"}}""")))
+    assert(written.exists(_.contains(""""EVENT_TS":"2024-01-01T10:01:00.123Z"""")))
+
+    val deadExpected = df.filter(col("TAG").startsWith("bad"))
+      .select(to_json(struct(df.columns.map(col): _*))).as[String].collect().toSeq
+    assert(fileLines(s"$dl/epoch=6").flatten.sorted == deadExpected.sorted)
+    assert(deadExpected.length == 2)
   }
 }
