@@ -11,6 +11,10 @@ import graft.tables.LatestByKey
   * RatingsPipeline and the LatestByKey changelog table and prints each
   * derived relation — the runnable entry point for eyeballing the
   * streaming layer end-to-end without a test harness.
+  *
+  * Kept on purpose: it is the only runnable S6 console-inspection entry
+  * point (the specs assert on the relations but print nothing), and
+  * README's entry-point list points users to it.
   */
 object StreamDemo {
   final case class R(RATING_ID: Long, USER_ID: Int, STARS: Double,

@@ -1561,20 +1561,16 @@ object Similarity {
     * indexes; [[graft.streaming.AnnIndexStream]] runs it on a
     * `compactEvery` cadence.
     *
-    * CRASH-SAFE (the compactStore precedent, adapted to catalog
-    * tables): the compacted rows are first written to a scratch table
-    * (`<table>__compact`, its own location) while the live table's
-    * files stay IMMUTABLE — a reader mid-scan and a crash mid-rewrite
-    * both keep a complete copy on disk at every instant. Only after
-    * the scratch write commits does the swap run: DROP the old table,
-    * then an atomic catalog RENAME moves the scratch directory into
-    * place. A crash between those two steps leaves the data solely in
-    * the scratch table; the next [[compactIndex]] call detects the
-    * orphan (scratch exists, live table missing) and completes the
-    * rename instead of recompacting. The bucket KEY per table comes
-    * from the build's `_meta` `data_keys` record ([[writeIndexMeta]]);
-    * indexes persisted by earlier builds fall back to the historical
-    * table-existence heuristic.
+    * CRASH-SAFE: each table is republished through
+    * [[graft.core.SwapTable]], whose scratch-then-swap keeps a complete
+    * copy on disk at every instant, for a reader mid-scan and for a
+    * crash mid-rewrite. A crash after the DROP leaves the rows only in
+    * the scratch table; the next [[compactIndex]] call finishes that
+    * swap ([[graft.core.SwapTable.recover]]) instead of recompacting.
+    * The bucket KEY per table comes from the build's `_meta`
+    * `data_keys` record ([[writeIndexMeta]]); indexes persisted by
+    * earlier builds fall back to the historical table-existence
+    * heuristic.
     */
   def compactIndex(spark: org.apache.spark.sql.SparkSession, name: String,
                    idCol: String = "vec_id"): Seq[TableCompaction] = {
@@ -1605,38 +1601,30 @@ object Similarity {
         // orphaned swap: the previous compaction crashed after DROP —
         // the rows live only in the scratch table; keep it a target so
         // the recovery branch below republishes it
-        spark.catalog.tableExists(s"${t}__compact")
+        spark.catalog.tableExists(graft.core.SwapTable.scratch(t))
     }
     require(targets.nonEmpty,
       s"index '$name' has no data tables (_buckets/_lists/_codes)")
     targets.map { case (table, key) =>
-      val scratch = s"${table}__compact"
-      if (!spark.catalog.tableExists(table)) {
-        // recovery: finish the interrupted swap (no recompaction — the
-        // scratch table already holds the complete compacted rows)
-        spark.sql(s"ALTER TABLE $scratch RENAME TO $table")
+      if (graft.core.SwapTable.recover(spark, table)) {
+        // no recompaction: the scratch held the complete compacted rows
         val n = parquetFileCount(spark, table)
         TableCompaction(table, n, n)
       } else {
         val before = parquetFileCount(spark, table)
-        // scratch write first: live table untouched (the source files
-        // are immutable while this plan runs); writeBucketed clears any
-        // stale scratch from a crash mid-write. The source is the
-        // table's files read as RAW parquet, not the catalog table: a
-        // catalog scan CLAIMS the bucketed HashPartitioning (so the
-        // optimizer deletes this repartition as redundant) while
-        // auto-bucketed-scan simultaneously un-buckets the actual read
-        // — each task then holds several bucket ids and the bucketed
-        // writer fans out to task×bucket files instead of `buckets`.
-        // The raw read claims nothing, the exchange stays, and its
-        // hash-mod law matches the writer's bucket-id law, so each
-        // task lands exactly one file.
+        // The source is the table's files read as RAW parquet, not
+        // the catalog table: a catalog scan CLAIMS the bucketed
+        // HashPartitioning (so the optimizer deletes this repartition
+        // as redundant) while auto-bucketed-scan simultaneously
+        // un-buckets the actual read — each task then holds several
+        // bucket ids and the bucketed writer fans out to task×bucket
+        // files instead of `buckets`. The raw read claims nothing, the
+        // exchange stays, and its hash-mod law matches the writer's
+        // bucket-id law, so each task lands exactly one file.
         val raw = spark.read.parquet(
           s"${spark.conf.get("spark.sql.warehouse.dir")}/$table")
-        graft.core.Layout.writeBucketed(
-          raw.repartition(buckets, col(key)), scratch, key, buckets)
-        spark.sql(s"DROP TABLE $table")
-        spark.sql(s"ALTER TABLE $scratch RENAME TO $table")
+        graft.core.SwapTable.publish(
+          raw.repartition(buckets, col(key)), table, key, buckets)
         TableCompaction(table, before, parquetFileCount(spark, table))
       }
     }

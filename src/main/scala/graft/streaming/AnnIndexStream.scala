@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import graft.core.Pin._
+import graft.core.SwapTable
 import graft.ext.Similarity
 
 /** STREAMING ANN index maintenance — admitted vectors become searchable
@@ -90,7 +91,7 @@ object AnnIndexStream {
                            idCol: String): Unit =
     if (compactEvery > 0 && appliedCount(spark, name) % compactEvery == 0) {
       Similarity.compactIndex(spark, name, idCol)
-      refreshOwner(owner, name)
+      SwapTable.refreshOwner(owner, indexTables(name): _*)
     }
 
   /** Delta rows whose id the index does not already hold — the
@@ -103,17 +104,14 @@ object AnnIndexStream {
     delta.join(delta.sparkSession.table(indexTable).select(col(idCol)),
       Seq(idCol), "left_anti")
 
-  /** Invalidate the OWNING session's cached relations for the index's
-    * tables after a mutation. foreachBatch runs in a CLONED session
-    * whose own catalog refresh (inside saveAsTable) does not touch the
-    * owner's per-session table-relation cache — without this, the
-    * session that started the stream keeps searching a stale file
-    * listing and never sees appended vectors.
+  /** The index tables a mutation can change: the stream refreshes them
+    * in its owning session after each one
+    * ([[graft.core.SwapTable.refreshOwner]]), or that session keeps
+    * searching a stale file listing and never sees appended vectors.
     */
-  private def refreshOwner(owner: SparkSession, name: String): Unit =
+  private def indexTables(name: String): Seq[String] =
     Seq("_buckets", "_lists", "_centroids", "_meta", "_drift")
-      .map(s => s"$name$s").filter(owner.catalog.tableExists)
-      .foreach(owner.catalog.refreshTable)
+      .map(s => s"$name$s")
 
   /** Maintain a persisted LSH index ([[Similarity.buildLshIndex]] must
     * have run) from a stream of (`idCol`, `vecCol`, ...) rows. Search
@@ -142,7 +140,7 @@ object AnnIndexStream {
           if (n > 0) {
             Similarity.appendToLshIndex(novel, name, planes, dims, tables,
               buckets, idCol, vecCol)
-            refreshOwner(owner, name)
+            SwapTable.refreshOwner(owner, indexTables(name): _*)
           }
           markApplied(spark, name, epoch)
           maybeCompact(spark, owner, name, compactEvery, idCol)
@@ -193,7 +191,7 @@ object AnnIndexStream {
               .select(col(idCol), col(vecCol))
             val r = Similarity.maintainIndex(spark, name, indexed, novel,
               maxDriftRatio, idCol, vecCol)
-            refreshOwner(owner, name)
+            SwapTable.refreshOwner(owner, indexTables(name): _*)
             markApplied(spark, name, epoch)
             maybeCompact(spark, owner, name, compactEvery, idCol)
             onBatch(MaintainEvent(epoch, r.action, r.kind, n, r.maxMeanRatio))

@@ -1,9 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import graft.core.Pin._
+import graft.core.SwapTable
 import graft.ext.TextAnalysis
 
 /** STREAMING corpus-drift monitor: per micro-batch, the ingest's
@@ -32,8 +33,9 @@ import graft.ext.TextAnalysis
   *
   * REPLAY SAFETY: CUSUM is a running sum — not redelivery-idempotent —
   * so a HIGH-WATER epoch marker rides in the SAME state table and the
-  * (skip | update+mark) decision publishes as ONE atomic scratch-swap
-  * ([[SketchStream.maintainCms]]'s law, same crash-window recovery).
+  * (skip | update+mark) decision publishes as ONE atomic
+  * [[graft.core.SwapTable]] swap, which also owns the crash-window
+  * recovery.
   * Within one checkpoint lineage epochs are monotonically increasing,
   * so `epoch ≤ high-water` identifies every replay and ONE marker row
   * suffices — the state table never grows with stream lifetime. A
@@ -46,8 +48,6 @@ import graft.ext.TextAnalysis
   * |metrics| rows + one high-water marker row.
   */
 object DriftMonitor {
-
-  private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
   /** One monitor decision, reported per batch via `onBatch`: `alarms`
     * = metrics whose CUSUM crossed the threshold AFTER this update
@@ -74,8 +74,6 @@ object DriftMonitor {
     */
   def stateTable(name: String): String = s"${name}_state"
 
-  private def scratch(name: String): String = s"${name}_state__merge"
-
   /** The shared metric law: (metric, x) ×10⁴ rates over `df`. A batch
     * (or snapshot) with zero rows yields zero metric rows; rates over
     * non-null-text docs are absent when no such doc exists (no signal,
@@ -83,31 +81,8 @@ object DriftMonitor {
     * to 0").
     */
   def metrics(df: DataFrame, textCol: String = "text",
-              minQuality: Int = 3): DataFrame = {
-    val agg = df.agg(
-      count(lit(1)).as("__dm_rows"),
-      sum(when(col(textCol).isNull, 1L).otherwise(0L)).as("__dm_nulls"),
-      sum(when(col(textCol).isNotNull, 1L)).as("__dm_docs"),
-      sum(when(col(textCol).isNotNull &&
-        TextAnalysis.qualityScore(col(textCol)) >= minQuality, 1L)
-        .otherwise(0L)).as("__dm_good"),
-      sum(when(col(textCol).isNotNull &&
-        TextAnalysis.tokenCount(col(textCol)) < 10, 1L)
-        .otherwise(0L)).as("__dm_short"))
-    agg.select(explode(array(
-        struct(lit("quality_rate").as("metric"),
-          when(col("__dm_docs") > 0L,
-            expr("(__dm_good * 10000) div __dm_docs")).as("x")),
-        struct(lit("null_text_rate").as("metric"),
-          when(col("__dm_rows") > 0L,
-            expr("(__dm_nulls * 10000) div __dm_rows")).as("x")),
-        struct(lit("short_doc_rate").as("metric"),
-          when(col("__dm_docs") > 0L,
-            expr("(__dm_short * 10000) div __dm_docs")).as("x"))))
-        .as("m"))
-      .select(col("m.metric").as("metric"), col("m.x").as("x"))
-      .filter(col("x").isNotNull)
-  }
+              minQuality: Int = 3): DataFrame =
+    metricsOf(df, None, textCol, minQuality)
 
   /** [[metrics]] resolved PER GROUP (source domain, language, shard):
     * (groupCol, metric, x) — the same three ×10⁴ rates over each
@@ -117,8 +92,17 @@ object DriftMonitor {
     */
   def metricsBy(df: DataFrame, groupCol: String = "source",
                 textCol: String = "text",
-                minQuality: Int = 3): DataFrame = {
-    val agg = df.groupBy(col(groupCol)).agg(
+                minQuality: Int = 3): DataFrame =
+    metricsOf(df, Some(groupCol), textCol, minQuality)
+
+  /** The metric law over `group`'s groups, or over all of `df` when
+    * `group` is None (`groupBy()` with no keys is the global aggregate,
+    * one row even over an empty frame).
+    */
+  private def metricsOf(df: DataFrame, group: Option[String],
+                        textCol: String, minQuality: Int): DataFrame = {
+    val keys = group.toSeq.map(col)
+    val agg = df.groupBy(keys: _*).agg(
       count(lit(1)).as("__dm_rows"),
       sum(when(col(textCol).isNull, 1L).otherwise(0L)).as("__dm_nulls"),
       sum(when(col(textCol).isNotNull, 1L)).as("__dm_docs"),
@@ -128,7 +112,7 @@ object DriftMonitor {
       sum(when(col(textCol).isNotNull &&
         TextAnalysis.tokenCount(col(textCol)) < 10, 1L)
         .otherwise(0L)).as("__dm_short"))
-    agg.select(col(groupCol), explode(array(
+    agg.select(keys :+ explode(array(
         struct(lit("quality_rate").as("metric"),
           when(col("__dm_docs") > 0L,
             expr("(__dm_good * 10000) div __dm_docs")).as("x")),
@@ -138,9 +122,9 @@ object DriftMonitor {
         struct(lit("short_doc_rate").as("metric"),
           when(col("__dm_docs") > 0L,
             expr("(__dm_short * 10000) div __dm_docs")).as("x"))))
-        .as("m"))
-      .select(col(groupCol), col("m.metric").as("metric"),
-        col("m.x").as("x"))
+        .as("m"): _*)
+      .select(keys ++ Seq(col("m.metric").as("metric"),
+        col("m.x").as("x")): _*)
       .filter(col("x").isNotNull)
   }
 
@@ -168,36 +152,9 @@ object DriftMonitor {
   def cusumTrajectoryBy(batches: Seq[DataFrame], profile: DataFrame,
                         groupCol: String = "source",
                         textCol: String = "text", minQuality: Int = 3,
-                        slack: Long = 200L): DataFrame = {
-    require(batches.nonEmpty,
-      "cusumTrajectoryBy needs at least one batch")
-    val spark = batches.head.sparkSession
-    val mu = profile
-      .filter(col(groupCol).isNotNull)
-      .select(col(groupCol).cast("string"), col("metric"), col("mu"))
-      .collect()
-      .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
-    var state = Map.empty[(String, String), (Long, Long)]
-    val rows = batches.zipWithIndex.flatMap { case (b, i) =>
-      val xs = metricsBy(b, groupCol, textCol, minQuality)
-        .filter(col(groupCol).isNotNull)
-        .select(col(groupCol).cast("string"), col("metric"), col("x"))
-        .collect()
-        .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2))
-        .toMap
-      xs.toSeq.sortBy(_._1).flatMap { case (gm @ (g, m), x) =>
-        mu.get(gm).map { m0 =>
-          val (pu, pd) = state.getOrElse(gm, (0L, 0L))
-          val su = math.max(0L, pu + (x - m0 - slack))
-          val sd = math.max(0L, pd + (m0 - x - slack))
-          state += (gm -> (su, sd))
-          (i.toLong, g, m, x, su, sd)
-        }
-      }
-    }
-    import spark.implicits._
-    rows.toDF("batch_idx", groupCol, "metric", "x", "s_up", "s_dn")
-  }
+                        slack: Long = 200L): DataFrame =
+    trajectoryOf(batches, profile, Some(groupCol), textCol, minQuality,
+      slack)
 
   /** PURE batch replay of the CUSUM law — the oracle-gateable face of
     * the monitor (the streaming path's state lives in tables; this
@@ -215,27 +172,45 @@ object DriftMonitor {
     */
   def cusumTrajectory(batches: Seq[DataFrame], profile: DataFrame,
                       textCol: String = "text", minQuality: Int = 3,
-                      slack: Long = 200L): DataFrame = {
-    require(batches.nonEmpty, "cusumTrajectory needs at least one batch")
+                      slack: Long = 200L): DataFrame =
+    trajectoryOf(batches, profile, None, textCol, minQuality, slack)
+
+  /** The CUSUM fold of both trajectory faces, keyed (group, metric);
+    * the group is None throughout for the global face, whose output
+    * then has no group column.
+    */
+  private def trajectoryOf(batches: Seq[DataFrame], profile: DataFrame,
+                           group: Option[String], textCol: String,
+                           minQuality: Int, slack: Long): DataFrame = {
+    require(batches.nonEmpty,
+      s"cusumTrajectory${if (group.isDefined) "By" else ""} needs at " +
+        "least one batch")
     val spark = batches.head.sparkSession
-    val mu = profile.collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    var state = Map.empty[String, (Long, Long)]
+    def keyed(df: DataFrame, value: String) =
+      df.filter(group.fold(lit(true))(g => col(g).isNotNull))
+        .select(group.fold(lit(null))(g => col(g)).cast("string"),
+          col("metric"), col(value))
+        .collect()
+        .map(r => (Option(r.getString(0)), r.getString(1)) -> r.getLong(2))
+        .toMap
+    val mu = keyed(profile, "mu")
+    var state = Map.empty[(Option[String], String), (Long, Long)]
     val rows = batches.zipWithIndex.flatMap { case (b, i) =>
-      val xs = metrics(b, textCol, minQuality).collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
-      xs.toSeq.sortBy(_._1).flatMap { case (m, x) =>
-        mu.get(m).map { m0 =>
-          val (pu, pd) = state.getOrElse(m, (0L, 0L))
+      val xs = keyed(metricsOf(b, group, textCol, minQuality), "x")
+      xs.toSeq.sortBy(_._1).flatMap { case (gm @ (g, m), x) =>
+        mu.get(gm).map { m0 =>
+          val (pu, pd) = state.getOrElse(gm, (0L, 0L))
           val su = math.max(0L, pu + (x - m0 - slack))
           val sd = math.max(0L, pd + (m0 - x - slack))
-          state += (m -> (su, sd))
-          (i.toLong, m, x, su, sd)
+          state += (gm -> (su, sd))
+          (i.toLong, g.orNull, m, x, su, sd)
         }
       }
     }
     import spark.implicits._
-    rows.toDF("batch_idx", "metric", "x", "s_up", "s_dn")
+    val out = rows.toDF("batch_idx", "__dm_grp", "metric", "x", "s_up",
+      "s_dn")
+    group.fold(out.drop("__dm_grp"))(out.withColumnRenamed("__dm_grp", _))
   }
 
   /** Train-once for the PER-GROUP monitor: pin (grp, metric, mu)
@@ -246,21 +221,23 @@ object DriftMonitor {
   def writeProfileBy(docs: DataFrame, name: String,
                      groupCol: String = "source",
                      textCol: String = "text",
-                     minQuality: Int = 3): Unit = {
-    val mu = metricsBy(docs, groupCol, textCol, minQuality)
-      .select(col(groupCol).as("grp"), col("metric"),
-        col("x").as("mu"))
-    graft.core.Layout.writeBucketed(mu, profileTable(name), "metric", 1)
-  }
+                     minQuality: Int = 3): Unit =
+    writeProfileOf(docs, name, Some(groupCol), textCol, minQuality)
 
   /** Train-once: pin the baseline profile (metric, mu) from a trusted
     * snapshot. Overwrites an existing profile of the same name — the
     * deliberate re-baseline operation.
     */
   def writeProfile(docs: DataFrame, name: String, textCol: String = "text",
-                   minQuality: Int = 3): Unit = {
-    val mu = metrics(docs, textCol, minQuality)
-      .select(col("metric"), col("x").as("mu"))
+                   minQuality: Int = 3): Unit =
+    writeProfileOf(docs, name, None, textCol, minQuality)
+
+  private def writeProfileOf(docs: DataFrame, name: String,
+                             group: Option[String], textCol: String,
+                             minQuality: Int): Unit = {
+    val mu = metricsOf(docs, group, textCol, minQuality)
+      .select(group.map(g => col(g).as("grp")).toSeq ++
+        Seq(col("metric"), col("x").as("mu")): _*)
     graft.core.Layout.writeBucketed(mu, profileTable(name), "metric", 1)
   }
 
@@ -288,61 +265,6 @@ object DriftMonitor {
         s"monitor '$name' has a PER-GROUP profile — use the per-group " +
           "face (updateBatchBy/maintainBy) or writeProfile a global " +
           "baseline")
-  }
-
-  /** The high-water epoch of the live state (None before any marker)
-    * — the shared replay-skip law of both update faces.
-    */
-  private def highWaterOf(liveDf: Option[DataFrame]): Option[Long] =
-    liveDf.flatMap(df =>
-      Option(df.filter(col("kind") === "e")
-        .agg(max(col("epoch"))).collect().head.get(0))
-        .map(_.asInstanceOf[Long]))
-
-  /** The shared skip verdict of both update faces: None = apply the
-    * batch; Some(action) = drop it, with the replay/stale distinction
-    * (and WARN on stale — see [[DriftEvent]]).
-    */
-  private def skipActionOf(name: String, liveDf: Option[DataFrame],
-                           epoch: Long): Option[String] =
-    highWaterOf(liveDf).collect {
-      case hw if epoch == hw => "skipped_replay"
-      case hw if epoch < hw =>
-        log.warn(s"$name: epoch $epoch is below the high-water mark " +
-          s"$hw — an out-of-order manual submission or a fresh-" +
-          "checkpoint restart re-reading folded history; the monotone-" +
-          "lineage contract drops it (state unchanged)")
-        "skipped_stale"
-    }
-
-  /** Publish pinned `merged` rows as the live state table in one
-    * atomic scratch-swap — the shared crash-window law of both update
-    * faces (a fix to either belongs HERE, not in one copy).
-    */
-  private def publishSwap(spark: SparkSession, name: String,
-                          merged: DataFrame): Unit = {
-    graft.core.Layout.writeBucketed(merged, scratch(name), "kind", 1)
-    spark.sql(s"DROP TABLE IF EXISTS ${stateTable(name)}")
-    spark.sql(s"ALTER TABLE ${scratch(name)} RENAME TO ${stateTable(name)}")
-    spark.catalog.refreshTable(stateTable(name))
-  }
-
-  /** Finish an interrupted scratch-swap ([[SketchStream.recoverCms]]'s
-    * law): live missing + scratch present → republish the scratch.
-    * Every batch calls it first; safe any time.
-    */
-  def recover(spark: SparkSession, name: String): Boolean = {
-    val live = stateTable(name)
-    if (!spark.catalog.tableExists(live) &&
-        spark.catalog.tableExists(scratch(name))) {
-      spark.sql(s"ALTER TABLE ${scratch(name)} RENAME TO $live")
-      true
-    } else {
-      if (spark.catalog.tableExists(live) &&
-          spark.catalog.tableExists(scratch(name)))
-        spark.sql(s"DROP TABLE ${scratch(name)}")
-      false
-    }
   }
 
   /** Current per-metric monitor state: (metric, mu, s_up, s_dn,
@@ -390,92 +312,9 @@ object DriftMonitor {
                     groupCol: String = "source",
                     textCol: String = "text", minQuality: Int = 3,
                     slack: Long = 200L,
-                    threshold: Long = 1000L): DriftEvent = {
-    val spark = batch.sparkSession
-    recover(spark, name)
-    val live = stateTable(name)
-    val liveDf =
-      if (spark.catalog.tableExists(live)) Some(spark.table(live))
-      else None
-    val skip = skipActionOf(name, liveDf, epoch)
-    if (skip.isDefined) DriftEvent(epoch, skip.get, Nil)
-    else {
-      val xs = metricsBy(batch, groupCol, textCol, minQuality)
-        .select(col(groupCol).as("grp"), col("metric"), col("x"))
-        .pin()
-      if (xs.isEmpty) DriftEvent(epoch, "empty_batch", Nil)
-      else {
-        requireProfileShape(spark, name, perGroup = true)
-        val prof = spark.table(profileTable(name))
-        val prev = liveDf.map(_.filter(col("kind") === "s"))
-          .getOrElse(spark.emptyDataFrame
-            .select(lit("").as("kind"), lit("").as("grp"),
-              lit("").as("metric"), lit(0L).as("epoch"),
-              lit(0L).as("s_up"), lit(0L).as("s_dn"),
-              lit(0L).as("n_batches"), lit(0L).as("last_x")).limit(0))
-          .select(col("grp"), col("metric"),
-            col("s_up").as("__dm_pu"), col("s_dn").as("__dm_pd"),
-            col("n_batches").as("__dm_pn"))
-        // inner join against the profile: unprofiled (grp, metric)
-        // pairs drop here, by contract
-        val upd = xs.join(broadcast(prof), Seq("grp", "metric"))
-          .join(prev, Seq("grp", "metric"), "left")
-          .select(lit("s").as("kind"), col("grp"), col("metric"),
-            lit(0L).as("epoch"),
-            greatest(lit(0L), coalesce(col("__dm_pu"), lit(0L))
-              + (col("x") - col("mu") - lit(slack))).as("s_up"),
-            greatest(lit(0L), coalesce(col("__dm_pd"), lit(0L))
-              + (col("mu") - col("x") - lit(slack))).as("s_dn"),
-            (coalesce(col("__dm_pn"), lit(0L)) + 1L).as("n_batches"),
-            col("x").as("last_x"))
-        val carried = prev.join(xs, Seq("grp", "metric"), "left_anti")
-          .select(lit("s").as("kind"), col("grp"), col("metric"),
-            lit(0L).as("epoch"), col("__dm_pu").as("s_up"),
-            col("__dm_pd").as("s_dn"), col("__dm_pn").as("n_batches"),
-            lit(null).cast("long").as("last_x"))
-        val marker = spark.range(1).select(lit("e").as("kind"),
-          lit("").as("grp"), lit("").as("metric"),
-          lit(epoch).as("epoch"), lit(0L).as("s_up"),
-          lit(0L).as("s_dn"), lit(0L).as("n_batches"),
-          lit(0L).as("last_x"))
-        val merged = Seq(upd, carried, marker)
-          .reduce(_ unionByName _)
-          .pin()
-        publishSwap(spark, name, merged)
-        val alarms = merged.filter(col("kind") === "s" &&
-            (col("s_up") > threshold || col("s_dn") > threshold))
-          .select(concat_ws("/", col("grp"), col("metric")))
-          .collect().map(_.getString(0)).sorted
-        DriftEvent(epoch, "merged", alarms.toSeq)
-      }
-    }
-  }
-
-  /** Maintain the PER-GROUP drift monitor over a document stream —
-    * [[maintain]]'s topology over [[updateBatchBy]].
-    */
-  def maintainBy(docs: DataFrame, name: String, checkpointDir: String,
-                 groupCol: String = "source", textCol: String = "text",
-                 minQuality: Int = 3, slack: Long = 200L,
-                 threshold: Long = 1000L,
-                 onBatch: DriftEvent => Unit = _ => ()): StreamingQuery = {
-    require(slack >= 0L, s"slack must be >= 0, got $slack")
-    require(threshold > 0L, s"threshold must be positive, got $threshold")
-    require(docs.sparkSession.catalog.tableExists(profileTable(name)),
-      s"no baseline profile '${profileTable(name)}' — writeProfileBy first")
-    requireProfileShape(docs.sparkSession, name, perGroup = true)
-    val owner = docs.sparkSession
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], epoch: Long) =>
-        val ev = updateBatchBy(name, batch.toDF(), epoch, groupCol,
-          textCol, minQuality, slack, threshold)
-        if (owner.catalog.tableExists(stateTable(name)))
-          owner.catalog.refreshTable(stateTable(name))
-        onBatch(ev)
-      }
-      .start()
-  }
+                    threshold: Long = 1000L): DriftEvent =
+    updateOf(name, batch, epoch, Some(groupCol), textCol, minQuality,
+      slack, threshold)
 
   /** ONE batch's monitor update — the reusable core [[maintain]] wraps
     * and [[CurationStream]] composes into its own topology (one stream,
@@ -487,69 +326,94 @@ object DriftMonitor {
     */
   def updateBatch(name: String, batch: DataFrame, epoch: Long,
                   textCol: String = "text", minQuality: Int = 3,
-                  slack: Long = 200L, threshold: Long = 1000L): DriftEvent = {
+                  slack: Long = 200L, threshold: Long = 1000L): DriftEvent =
+    updateOf(name, batch, epoch, None, textCol, minQuality, slack,
+      threshold)
+
+  /** The update of both faces. The state is keyed (grp, metric) when
+    * `group` is set (the batch's `group` column becomes `grp`) and
+    * (metric) when it is None; alarms are the keys joined by "/".
+    */
+  private def updateOf(name: String, batch: DataFrame, epoch: Long,
+                       group: Option[String], textCol: String,
+                       minQuality: Int, slack: Long,
+                       threshold: Long): DriftEvent = {
     val spark = batch.sparkSession
-    recover(spark, name)
     val live = stateTable(name)
-    val liveDf =
-      if (spark.catalog.tableExists(live)) Some(spark.table(live))
-      else None
+    val liveDf = SwapTable.current(spark, live)
     // monotone-epoch lineage: anything at or below the high-water
     // marker has already been folded in (an empty batch leaves no mark
     // — but an empty epoch can only be re-delivered while it is still
     // the newest, i.e. above the mark, so it re-reads as empty again)
-    val skip = skipActionOf(name, liveDf, epoch)
-    if (skip.isDefined) DriftEvent(epoch, skip.get, Nil)
-    else {
-      val xs = metrics(batch, textCol, minQuality)
-        .pin()
-      if (xs.isEmpty) DriftEvent(epoch, "empty_batch", Nil)
-      else {
-        requireProfileShape(spark, name, perGroup = false)
-        val prof = spark.table(profileTable(name))
-        val prev = liveDf.map(_.filter(col("kind") === "s"))
-          .getOrElse(spark.emptyDataFrame
-            .select(lit("").as("kind"), lit("").as("metric"),
-              lit(0L).as("epoch"), lit(0L).as("s_up"),
-              lit(0L).as("s_dn"), lit(0L).as("n_batches"),
-              lit(0L).as("last_x")).limit(0))
-          .select(col("metric"), col("s_up").as("__dm_pu"),
-            col("s_dn").as("__dm_pd"),
-            col("n_batches").as("__dm_pn"))
-        val upd = xs.join(broadcast(prof), "metric")
-          .join(prev, Seq("metric"), "left")
-          .select(lit("s").as("kind"), col("metric"),
-            lit(0L).as("epoch"),
-            greatest(lit(0L), coalesce(col("__dm_pu"), lit(0L))
-              + (col("x") - col("mu") - lit(slack))).as("s_up"),
-            greatest(lit(0L), coalesce(col("__dm_pd"), lit(0L))
-              + (col("mu") - col("x") - lit(slack))).as("s_dn"),
-            (coalesce(col("__dm_pn"), lit(0L)) + 1L).as("n_batches"),
-            col("x").as("last_x"))
-        // metrics absent from THIS batch (e.g. all-null batch has no
-        // quality signal) carry their state forward unchanged
-        val carried = prev.join(xs, Seq("metric"), "left_anti")
-          .select(lit("s").as("kind"), col("metric"),
-            lit(0L).as("epoch"), col("__dm_pu").as("s_up"),
-            col("__dm_pd").as("s_dn"), col("__dm_pn").as("n_batches"),
-            lit(null).cast("long").as("last_x"))
-        // this epoch is above the mark (skip check passed), so it IS
-        // the new high water — old markers are subsumed, not carried
-        val marker = spark.range(1).select(lit("e").as("kind"),
-          lit("").as("metric"), lit(epoch).as("epoch"),
-          lit(0L).as("s_up"), lit(0L).as("s_dn"),
-          lit(0L).as("n_batches"), lit(0L).as("last_x"))
-        val merged = Seq(upd, carried, marker)
-          .reduce(_ unionByName _)
+    SwapTable.skipOf(liveDf, "epoch", epoch, live) match {
+      case Some(skip) => DriftEvent(epoch, skip, Nil)
+      case None =>
+        val keys = group.map(_ => "grp").toSeq :+ "metric"
+        // one state row: kind, the keys, then the CUSUM columns
+        def stateRow(kind: String, keyCols: Seq[Column], ep: Column,
+                     sUp: Column, sDn: Column, n: Column,
+                     lastX: Column): Seq[Column] =
+          (lit(kind).as("kind") +: keyCols.zip(keys).map {
+            case (c, k) => c.as(k) }) ++
+            Seq(ep.as("epoch"), sUp.as("s_up"), sDn.as("s_dn"),
+              n.as("n_batches"), lastX.as("last_x"))
+        val blankKeys = keys.map(_ => lit(""))
+        val xs = metricsOf(batch, group, textCol, minQuality)
+          .select(group.map(g => col(g).as("grp")).toSeq ++
+            Seq(col("metric"), col("x")): _*)
           .pin()
-        publishSwap(spark, name, merged)
-        val alarms = merged.filter(col("kind") === "s" &&
-            (col("s_up") > threshold || col("s_dn") > threshold))
-          .select("metric").collect().map(_.getString(0)).sorted
-        DriftEvent(epoch, "merged", alarms.toSeq)
-      }
+        if (xs.isEmpty) DriftEvent(epoch, "empty_batch", Nil)
+        else {
+          requireProfileShape(spark, name, perGroup = group.isDefined)
+          val prof = spark.table(profileTable(name))
+          val prev = liveDf.map(_.filter(col("kind") === "s"))
+            .getOrElse(spark.emptyDataFrame.select(stateRow("", blankKeys,
+              lit(0L), lit(0L), lit(0L), lit(0L), lit(0L)): _*).limit(0))
+            .select(keys.map(col) ++ Seq(col("s_up").as("__dm_pu"),
+              col("s_dn").as("__dm_pd"), col("n_batches").as("__dm_pn")): _*)
+          // inner join against the profile: unprofiled keys drop here,
+          // by contract
+          val upd = xs.join(broadcast(prof), keys)
+            .join(prev, keys, "left")
+            .select(stateRow("s", keys.map(col), lit(0L),
+              greatest(lit(0L), coalesce(col("__dm_pu"), lit(0L))
+                + (col("x") - col("mu") - lit(slack))),
+              greatest(lit(0L), coalesce(col("__dm_pd"), lit(0L))
+                + (col("mu") - col("x") - lit(slack))),
+              coalesce(col("__dm_pn"), lit(0L)) + 1L,
+              col("x")): _*)
+          // keys absent from THIS batch (e.g. all-null batch has no
+          // quality signal) carry their state forward unchanged
+          val carried = prev.join(xs, keys, "left_anti")
+            .select(stateRow("s", keys.map(col), lit(0L), col("__dm_pu"),
+              col("__dm_pd"), col("__dm_pn"), lit(null).cast("long")): _*)
+          // this epoch is above the mark (skip check passed), so it IS
+          // the new high water — old markers are subsumed, not carried
+          val marker = spark.range(1).select(stateRow("e", blankKeys,
+            lit(epoch), lit(0L), lit(0L), lit(0L), lit(0L)): _*)
+          val merged = Seq(upd, carried, marker)
+            .reduce(_ unionByName _)
+            .pin()
+          SwapTable.publish(merged, live, "kind", 1)
+          val alarms = merged.filter(col("kind") === "s" &&
+              (col("s_up") > threshold || col("s_dn") > threshold))
+            .select(concat_ws("/", keys.map(col): _*))
+            .collect().map(_.getString(0)).sorted
+          DriftEvent(epoch, "merged", alarms.toSeq)
+        }
     }
   }
+
+  /** Maintain the PER-GROUP drift monitor over a document stream —
+    * [[maintain]]'s topology over [[updateBatchBy]].
+    */
+  def maintainBy(docs: DataFrame, name: String, checkpointDir: String,
+                 groupCol: String = "source", textCol: String = "text",
+                 minQuality: Int = 3, slack: Long = 200L,
+                 threshold: Long = 1000L,
+                 onBatch: DriftEvent => Unit = _ => ()): StreamingQuery =
+    maintainOf(docs, name, checkpointDir, Some(groupCol), textCol,
+      minQuality, slack, threshold, onBatch)
 
   /** Maintain the drift monitor over a document stream as its own
     * topology (the standalone shape; [[updateBatch]] is the composable
@@ -561,22 +425,28 @@ object DriftMonitor {
   def maintain(docs: DataFrame, name: String, checkpointDir: String,
                textCol: String = "text", minQuality: Int = 3,
                slack: Long = 200L, threshold: Long = 1000L,
-               onBatch: DriftEvent => Unit = _ => ()): StreamingQuery = {
+               onBatch: DriftEvent => Unit = _ => ()): StreamingQuery =
+    maintainOf(docs, name, checkpointDir, None, textCol, minQuality,
+      slack, threshold, onBatch)
+
+  private def maintainOf(docs: DataFrame, name: String,
+                         checkpointDir: String, group: Option[String],
+                         textCol: String, minQuality: Int, slack: Long,
+                         threshold: Long,
+                         onBatch: DriftEvent => Unit): StreamingQuery = {
     require(slack >= 0L, s"slack must be >= 0, got $slack")
     require(threshold > 0L, s"threshold must be positive, got $threshold")
     require(docs.sparkSession.catalog.tableExists(profileTable(name)),
-      s"no baseline profile '${profileTable(name)}' — writeProfile first")
-    requireProfileShape(docs.sparkSession, name, perGroup = false)
+      s"no baseline profile '${profileTable(name)}' — writeProfile" +
+        s"${if (group.isDefined) "By" else ""} first")
+    requireProfileShape(docs.sparkSession, name, perGroup = group.isDefined)
     val owner = docs.sparkSession
     docs.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: Dataset[Row], epoch: Long) =>
-        val ev = updateBatch(name, batch.toDF(), epoch, textCol,
+        val ev = updateOf(name, batch.toDF(), epoch, group, textCol,
           minQuality, slack, threshold)
-        // the batch session's clone wrote the swap; make sure the
-        // OWNER session's catalog sees the republished table too
-        if (owner.catalog.tableExists(stateTable(name)))
-          owner.catalog.refreshTable(stateTable(name))
+        SwapTable.refreshOwner(owner, stateTable(name))
         onBatch(ev)
       }
       .start()

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import graft.core.Pin._
+import graft.core.SwapTable
 
 /** STREAMING eval counters — the online face of the batch eval family
   * ([[graft.ext.Eval.accuracyCi]]/confusion): a stream of scored items
@@ -16,8 +17,8 @@ import graft.core.Pin._
   *
   * Counts are a SUM structure (not replay-idempotent), so a HIGH-WATER
   * epoch marker rides the same table and each batch's (skip |
-  * merge+mark) decision publishes as ONE atomic scratch-swap —
-  * [[SketchStream.maintainCms]]'s law verbatim, same crash-window
+  * merge+mark) decision publishes as ONE atomic [[graft.core.SwapTable]]
+  * swap — [[SketchStream.maintainCms]]'s law, same crash-window
   * recovery, same one-checkpoint-lineage contract. Epochs within a
   * lineage are monotone, so `epoch ≤ high-water` identifies every
   * replay and ONE marker row suffices — the cells table stays
@@ -34,23 +35,6 @@ object EvalStream {
     * cells + kind='e' epoch markers).
     */
   def cellsTable(name: String): String = s"${name}_cells"
-
-  private def scratch(name: String): String = s"${name}_cells__merge"
-
-  /** Finish an interrupted scratch-swap; every batch calls it first. */
-  def recover(spark: SparkSession, name: String): Boolean = {
-    val live = cellsTable(name)
-    if (!spark.catalog.tableExists(live) &&
-        spark.catalog.tableExists(scratch(name))) {
-      spark.sql(s"ALTER TABLE ${scratch(name)} RENAME TO $live")
-      true
-    } else {
-      if (spark.catalog.tableExists(live) &&
-          spark.catalog.tableExists(scratch(name)))
-        spark.sql(s"DROP TABLE ${scratch(name)}")
-      false
-    }
-  }
 
   /** The live per-group report off the maintained cells:
     * (group, n, n_correct, acc_x10000, wilson_lo_x10000,
@@ -103,24 +87,11 @@ object EvalStream {
   def mergeBatch(batch: DataFrame, name: String, epoch: Long,
                  groupCol: String = "source", predCol: String = "pred",
                  refCol: String = "ref"): EvalEvent = {
-    val spark = batch.sparkSession
-    recover(spark, name)
     val live = cellsTable(name)
-    val liveDf =
-      if (spark.catalog.tableExists(live)) Some(spark.table(live))
-      else None
-    val highWater = liveDf.flatMap(df =>
-      Option(df.filter(col("kind") === "e")
-        .agg(max(col("epoch"))).collect().head.get(0))
-        .map(_.asInstanceOf[Long]))
-    highWater match {
-      case Some(hw) if epoch == hw => EvalEvent(epoch, "skipped_replay", 0L)
-      case Some(hw) if epoch < hw =>
-        log.warn(s"$name: epoch $epoch is below the high-water mark $hw " +
-          "— an out-of-order manual submission or a fresh-checkpoint " +
-          "restart re-reading folded history; dropped (state unchanged)")
-        EvalEvent(epoch, "skipped_stale", 0L)
-      case _ =>
+    val liveDf = SwapTable.current(batch.sparkSession, live)
+    SwapTable.skipOf(liveDf, "epoch", epoch, live) match {
+      case Some(skip) => EvalEvent(epoch, skip, 0L)
+      case None =>
         val cells = batch
           .filter(col(predCol).isNotNull && col(refCol).isNotNull)
           .groupBy(col(groupCol).as("grp"), col(refCol).as("ref"),
@@ -130,7 +101,7 @@ object EvalStream {
             col("pred"), col("n"), lit(0L).as("epoch"))
         // epoch > high-water (skip check passed): the new marker
         // subsumes the old one, so only kind='c' cells carry over
-        val marker = spark.range(1).select(lit("e").as("kind"),
+        val marker = batch.sparkSession.range(1).select(lit("e").as("kind"),
           lit("").as("grp"), lit("").as("ref"), lit("").as("pred"),
           lit(0L).as("n"), lit(epoch).as("epoch"))
         val merged = liveDf.fold(cells.unionByName(marker)) { lv =>
@@ -141,16 +112,11 @@ object EvalStream {
           .agg(sum(col("n")).as("n"))
           .select("kind", "grp", "ref", "pred", "n", "epoch")
           .pin()
-        graft.core.Layout.writeBucketed(merged, scratch(name), "kind", 1)
-        spark.sql(s"DROP TABLE IF EXISTS $live")
-        spark.sql(s"ALTER TABLE ${scratch(name)} RENAME TO $live")
-        spark.catalog.refreshTable(live)
+        SwapTable.publish(merged, live, "kind", 1)
         val nCells = merged.filter(col("kind") === "c").count()
         EvalEvent(epoch, "merged", nCells)
     }
   }
-
-  private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
   /** Maintain the eval counters over a scored stream. Rows with a null
     * pred or ref carry no verdict and are dropped; a null group is a
@@ -166,8 +132,7 @@ object EvalStream {
       .foreachBatch { (batch: Dataset[Row], epoch: Long) =>
         val ev = mergeBatch(batch.toDF(), name, epoch, groupCol,
           predCol, refCol)
-        if (owner.catalog.tableExists(cellsTable(name)))
-          owner.catalog.refreshTable(cellsTable(name))
+        SwapTable.refreshOwner(owner, cellsTable(name))
         onBatch(ev)
       }
       .start()

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import graft.core.Pin._
+import graft.core.SwapTable
 import graft.ext.{Dedup, FreqSketch}
 
 /** STREAMING distinct-count sketch maintenance: fold every ingested
@@ -22,12 +23,10 @@ import graft.ext.{Dedup, FreqSketch}
   * bookkeeping (spec-gated). The maintained table is bit-identical to
   * a single batch build over everything ingested.
   *
-  * Publication is crash-safe by the scratch-swap precedent of
-  * [[graft.ext.Similarity.compactIndex]]: the merged registers are
-  * written to a scratch table first (live table untouched, its files
-  * immutable while the merge plan reads them), then DROP + RENAME; a
-  * crash between the two leaves only the scratch table, which the next
-  * batch (or [[recoverRegisters]]) republishes before merging.
+  * Publication is crash-safe through [[graft.core.SwapTable]]: the
+  * merged registers go to a scratch table first (live table untouched,
+  * its files immutable while the merge plan reads them), then swap into
+  * place; every batch first finishes a swap a crash cut short.
   */
 object SketchStream {
 
@@ -40,22 +39,6 @@ object SketchStream {
 
   /** The maintained register table's name for a sketch `name`. */
   def registersTable(name: String): String = s"${name}_regs"
-
-  private def scratch(name: String): String = s"${name}_regs__merge"
-
-  /** Finish an interrupted swap: if the live table is missing but the
-    * scratch table exists (a crash landed between DROP and RENAME),
-    * republish the scratch — it already holds the complete merged
-    * registers. Safe to call any time; every batch calls it first.
-    */
-  def recoverRegisters(spark: SparkSession, name: String): Boolean = {
-    val live = registersTable(name)
-    if (!spark.catalog.tableExists(live) &&
-        spark.catalog.tableExists(scratch(name))) {
-      spark.sql(s"ALTER TABLE ${scratch(name)} RENAME TO $live")
-      true
-    } else false
-  }
 
   /** Current distinct-count estimates from the maintained registers —
     * (group, n_regs, max_rank, hll_distinct) via
@@ -70,34 +53,10 @@ object SketchStream {
     * structure, NOT redelivery-idempotent like the HLL's max-merge, so
     * replay safety needs epoch dedup, and keeping markers and cells in
     * ONE table makes each batch's (skip | merge+mark) decision a
-    * single atomic scratch-swap: no crash window where the cells
-    * applied but the marker didn't.
+    * single atomic [[graft.core.SwapTable]] swap: no crash window where
+    * the cells applied but the marker didn't.
     */
   def cmsTable(name: String): String = s"${name}_cms"
-
-  private def cmsScratch(name: String): String = s"${name}_cms__merge"
-
-  /** Finish an interrupted CMS swap (the [[recoverRegisters]] law):
-    * live missing + scratch present (crash between DROP and RENAME) →
-    * republish the scratch, which holds the complete merged state
-    * INCLUDING the batch's epoch marker. Both present = the crash
-    * preceded the DROP; the live copy is complete and the scratch's
-    * epoch was never published, so dropping the scratch lets the
-    * replayed batch re-merge cleanly.
-    */
-  def recoverCms(spark: SparkSession, name: String): Boolean = {
-    val live = cmsTable(name)
-    if (!spark.catalog.tableExists(live) &&
-        spark.catalog.tableExists(cmsScratch(name))) {
-      spark.sql(s"ALTER TABLE ${cmsScratch(name)} RENAME TO $live")
-      true
-    } else {
-      if (spark.catalog.tableExists(live) &&
-          spark.catalog.tableExists(cmsScratch(name)))
-        spark.sql(s"DROP TABLE ${cmsScratch(name)}")
-      false
-    }
-  }
 
   /** Maintain a count-min sketch of corpus WORD frequencies over a
     * document stream — the streaming face of [[FreqSketch.buildCms]]:
@@ -132,8 +91,7 @@ object SketchStream {
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: Dataset[Row], epoch: Long) =>
         val ev = mergeCmsBatch(batch.toDF(), name, epoch, textCol, d, w)
-        if (owner.catalog.tableExists(cmsTable(name)))
-          owner.catalog.refreshTable(cmsTable(name))
+        SwapTable.refreshOwner(owner, cmsTable(name))
         onBatch(ev)
       }
       .start()
@@ -157,28 +115,14 @@ object SketchStream {
                     textCol: String = "text",
                     d: Int = FreqSketch.DefaultDepth,
                     w: Int = FreqSketch.DefaultWidth): SketchEvent = {
-    val spark = batch.sparkSession
-    recoverCms(spark, name)
     val live = cmsTable(name)
-    val liveDf =
-      if (spark.catalog.tableExists(live)) Some(spark.table(live))
-      else None
+    val liveDf = SwapTable.current(batch.sparkSession, live)
     // monotone-epoch lineage: ONE high-water marker row identifies
     // every replay (epoch <= mark), so the table stays d×w-bounded
     // for any stream lifetime
-    val highWater = liveDf.flatMap(df =>
-      Option(df.filter(col("kind") === "e")
-        .agg(max(col("k"))).collect().head.get(0))
-        .map(_.asInstanceOf[Long]))
-    highWater match {
-      case Some(hw) if epoch == hw =>
-        SketchEvent(epoch, "skipped_replay", 1L, 0L)
-      case Some(hw) if epoch < hw =>
-        log.warn(s"$name: epoch $epoch is below the high-water mark $hw " +
-          "— an out-of-order manual submission or a fresh-checkpoint " +
-          "restart re-reading folded history; dropped (state unchanged)")
-        SketchEvent(epoch, "skipped_stale", 1L, 0L)
-      case _ =>
+    SwapTable.skipOf(liveDf, "k", epoch, live) match {
+      case Some(skip) => SketchEvent(epoch, skip, 1L, 0L)
+      case None =>
         val toks = batch.filter(col(textCol).isNotNull)
           .select(explode(graft.functions.wordTfs(col(textCol)))
             .as("wt"))
@@ -189,7 +133,7 @@ object SketchStream {
             .as("k"), col("tf").as("v"))
           .groupBy("k").agg(sum("v").as("v"))
           .select(lit("c").as("kind"), col("k"), col("v"))
-        val marker = spark.range(1)
+        val marker = batch.sparkSession.range(1)
           .select(lit("e").as("kind"), lit(epoch).as("k"),
             lit(0L).as("v"))
         // epoch > high-water: the new marker subsumes the old, so
@@ -200,16 +144,11 @@ object SketchStream {
           })
           .groupBy("kind", "k").agg(sum("v").as("v"))
           .pin()
-        graft.core.Layout.writeBucketed(merged, cmsScratch(name), "kind", 1)
-        spark.sql(s"DROP TABLE IF EXISTS $live")
-        spark.sql(s"ALTER TABLE ${cmsScratch(name)} RENAME TO $live")
-        spark.catalog.refreshTable(live)
+        SwapTable.publish(merged, live, "kind", 1)
         val cells = merged.filter(col("kind") === "c").count()
         SketchEvent(epoch, "merged", 1L, cells)
     }
   }
-
-  private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
   /** Estimate candidate-term frequencies against the maintained CMS:
     * the cells load once into the config-bounded d×w array (≤ 64k
@@ -263,8 +202,8 @@ object SketchStream {
   /** Maintain per-`groupCol` HLL registers of distinct `n`-shingles
     * over a document stream. Each batch: build the batch's registers
     * (one partial-aggregated pass over the batch only), max-merge with
-    * the persisted table, publish via scratch-swap. Null text/group
-    * rows carry no shingles and are excluded, matching
+    * the persisted table, publish via [[graft.core.SwapTable]]. Null
+    * text/group rows carry no shingles and are excluded, matching
     * [[FreqSketch.hllShingleReport]].
     */
   def maintainHll(docs: DataFrame, name: String, checkpointDir: String,
@@ -275,8 +214,6 @@ object SketchStream {
     docs.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: Dataset[Row], epoch: Long) =>
-        val spark = batch.sparkSession
-        recoverRegisters(spark, name)
         val live = registersTable(name)
         val items = batch.toDF()
           .filter(col(textCol).isNotNull && col(groupCol).isNotNull)
@@ -285,15 +222,12 @@ object SketchStream {
         val batchRegs = FreqSketch.hllRegisters(items, col("group"), col("h"))
         // pinned BEFORE the swap: the merge plan reads the live table's
         // files; materializing first keeps the read/overwrite disjoint
-        val merged = (if (spark.catalog.tableExists(live))
-            spark.table(live).unionByName(batchRegs)
-          else batchRegs)
+        val merged = SwapTable.current(batch.sparkSession, live)
+          .fold(batchRegs)(_.unionByName(batchRegs))
           .groupBy("group", "reg").agg(max("rank").as("rank"))
           .pin()
-        graft.core.Layout.writeBucketed(merged, scratch(name), "group", 1)
-        spark.sql(s"DROP TABLE IF EXISTS $live")
-        spark.sql(s"ALTER TABLE ${scratch(name)} RENAME TO $live")
-        if (owner.catalog.tableExists(live)) owner.catalog.refreshTable(live)
+        SwapTable.publish(merged, live, "group", 1)
+        SwapTable.refreshOwner(owner, live)
         val groups = merged.select("group").distinct().count()
         onBatch(SketchEvent(epoch, "merged", groups, merged.count()))
       }

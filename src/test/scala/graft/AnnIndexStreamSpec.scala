@@ -224,7 +224,7 @@ class AnnIndexStreamSpec extends SparkSuite {
     // dropped, RENAME never ran — the rows exist ONLY in the scratch
     val buckets = spark.table("t_cr_lsh_buckets")
     graft.core.Layout.writeBucketed(
-      buckets.repartition(8, col("bucket")), "t_cr_lsh_buckets__compact",
+      buckets.repartition(8, col("bucket")), "t_cr_lsh_buckets__merge",
       "bucket", 8)
     spark.sql("DROP TABLE t_cr_lsh_buckets")
     assert(!spark.catalog.tableExists("t_cr_lsh_buckets"))
@@ -233,7 +233,7 @@ class AnnIndexStreamSpec extends SparkSuite {
     val report = Similarity.compactIndex(spark, "t_cr_lsh")
     assert(report.map(_.table) == Seq("t_cr_lsh_buckets"), report.toString)
     assert(spark.catalog.tableExists("t_cr_lsh_buckets"))
-    assert(!spark.catalog.tableExists("t_cr_lsh_buckets__compact"))
+    assert(!spark.catalog.tableExists("t_cr_lsh_buckets__merge"))
     val afterSearch = rows(Similarity.annTopKIndexed(spark, "t_cr_lsh",
       Seq(0L, 1L, 2L), 5))
     assert(afterSearch == beforeSearch,

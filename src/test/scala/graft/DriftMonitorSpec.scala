@@ -4,6 +4,7 @@ import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.core.SwapTable
 import graft.streaming.DriftMonitor
 
 /** The streaming corpus-drift monitor: a quiet stream accumulates
@@ -170,9 +171,9 @@ class DriftMonitorSpec extends SparkSuite {
     // interrupted swap: crash landed between DROP and RENAME
     val live = DriftMonitor.stateTable(name)
     spark.sql(s"ALTER TABLE $live RENAME TO ${live}__merge")
-    assert(DriftMonitor.recover(spark, name))
+    assert(SwapTable.recover(spark, live))
     assert(spark.table(live).collect().map(_.toSeq).toSet == before)
-    assert(!DriftMonitor.recover(spark, name))
+    assert(!SwapTable.recover(spark, live))
 
     // no profile → loud failure, not a silently unmonitored stream
     intercept[IllegalArgumentException] {

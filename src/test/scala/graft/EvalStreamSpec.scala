@@ -4,12 +4,14 @@ import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.core.SwapTable
 import graft.streaming.EvalStream
 
 /** Streaming eval counters: the maintained cells equal a single batch
   * fold over everything ingested, the live report matches the batch
   * accuracy/Wilson law bit-for-bit, replayed epochs are marker-skipped
-  * (counts are sums), and the scratch-swap recovers its crash window.
+  * (counts are sums), and the scratch-swap recovers both crash
+  * windows.
   */
 class EvalStreamSpec extends SparkSuite {
   import spark.implicits._
@@ -79,11 +81,35 @@ class EvalStreamSpec extends SparkSuite {
 
     // interrupted swap recovery (both crash windows)
     val live = EvalStream.cellsTable(name)
-    val before = spark.table(live).collect().map(_.toSeq).toSet
+    def liveRows() = spark.table(live).collect().map(_.toSeq).toSet
+    val before = liveRows()
+    // crash between DROP and RENAME: the rows live only in the scratch
     spark.sql(s"ALTER TABLE $live RENAME TO ${live}__merge")
-    assert(EvalStream.recover(spark, name))
-    assert(spark.table(live).collect().map(_.toSeq).toSet == before)
-    assert(!EvalStream.recover(spark, name))
+    assert(SwapTable.recover(spark, live))
+    assert(liveRows() == before)
+    assert(!SwapTable.recover(spark, live))
+    // crash before the DROP: the scratch holds epoch 2 merged, live was
+    // never dropped — the scratch was never published, so recovery
+    // drops it, and the replayed epoch 2 then merges exactly once
+    val pending = scoredRows(200L, 20)
+    val side = "t_eval_stream_side"
+    graft.core.Layout.writeBucketed(spark.table(live),
+      EvalStream.cellsTable(side), "kind", 1)
+    assert(EvalStream.mergeBatch(pending, side, 2L).action == "merged")
+    spark.sql(s"ALTER TABLE ${EvalStream.cellsTable(side)} " +
+      s"RENAME TO ${SwapTable.scratch(live)}")
+    assert(!SwapTable.recover(spark, live))
+    assert(!spark.catalog.tableExists(SwapTable.scratch(live)))
+    assert(liveRows() == before)
+    assert(EvalStream.mergeBatch(pending, name, 2L).action == "merged")
+    val refAfter = all.union(pending).groupBy("source", "ref", "pred")
+      .agg(count(lit(1)).as("n")).collect()
+      .map(r => (r.getString(0), r.getString(1), r.getString(2)) ->
+        r.getLong(3)).toMap
+    assert(EvalStream.confusion(spark, name).collect()
+      .map(r => (r.getString(0), r.getString(1), r.getString(2)) ->
+        r.getLong(3)).toMap == refAfter,
+      "the replayed epoch must add its cells exactly once")
   }
 
   test("batch face mergeBatch: in-lineage == replay vs stale < epoch distinguished; neither moves cells") {

@@ -14,7 +14,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * `localCheckpoint(`, `.checkpoint(` or `setCheckpointDir` anywhere
   * else fails it. The file sinks write through graft.sinks.EpochFiles
   * only: a `DataFrameWriter` (`.write` not followed by a call's `(`, or
-  * `.writeTo(`) anywhere under graft/sinks fails it. Exemptions:
+  * `.writeTo(`) anywhere under graft/sinks fails it. And tables swap
+  * into place through graft.core.SwapTable only: a `RENAME TO` anywhere
+  * else fails it. Exemptions:
   *
   *  - queries/LlmOracle.scala keeps its own moduli: its DuckDB replay
   *    text is the independent oracle the engine is checked against;
@@ -49,6 +51,7 @@ class RuleLintSpec extends AnyFunSuite {
       """|ExecutionContext\.Implicits\.global|limit\(21\)""").r
   private val Pinning = """localCheckpoint\(|\.checkpoint\(|setCheckpointDir""".r
   private val FrameWriter = """\.write\b(?!\s*\()|\.writeTo\(""".r
+  private val Rename = """(?i)\bRENAME\s+TO\b""".r
 
   test("the hash-rule moduli appear only in PolyFold (and the oracle's replay)") {
     assert(Moduli.findFirstIn(sources("graft/functions/PolyFold.scala")).isDefined)
@@ -79,5 +82,10 @@ class RuleLintSpec extends AnyFunSuite {
     val sinks = sources.keySet.filter(_.startsWith("graft/sinks/"))
     assert(sinks.contains("graft/sinks/EpochFiles.scala"))
     assert(offenders(FrameWriter, sources.keySet -- sinks) == Nil)
+  }
+
+  test("RENAME TO appears only in SwapTable") {
+    assert(Rename.findFirstIn(sources("graft/core/SwapTable.scala")).isDefined)
+    assert(offenders(Rename, Set("graft/core/SwapTable.scala")) == Nil)
   }
 }

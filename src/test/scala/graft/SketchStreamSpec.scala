@@ -3,7 +3,7 @@ package graft
 import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.core.{SwapTable, Tables}
 import graft.ext.{Dedup, FreqSketch}
 import graft.streaming.SketchStream
 
@@ -117,9 +117,9 @@ class SketchStreamSpec extends SparkSuite {
     val live = SketchStream.cmsTable("t_cms_stream")
     val before = spark.table(live).collect().map(_.toSeq).toSet
     spark.sql(s"ALTER TABLE $live RENAME TO ${live}__merge")
-    assert(SketchStream.recoverCms(spark, "t_cms_stream"))
+    assert(SwapTable.recover(spark, live))
     assert(spark.table(live).collect().map(_.toSeq).toSet == before)
-    assert(!SketchStream.recoverCms(spark, "t_cms_stream"))
+    assert(!SwapTable.recover(spark, live))
   }
 
   test("streaming HLL: an interrupted scratch-swap recovers (crash between DROP and RENAME)") {
@@ -139,9 +139,9 @@ class SketchStreamSpec extends SparkSuite {
     // simulate the crash window: registers live only in the scratch
     spark.sql(s"ALTER TABLE $live RENAME TO ${live}__merge")
     assert(!spark.catalog.tableExists(live))
-    assert(SketchStream.recoverRegisters(spark, "t_hll_crash"))
+    assert(SwapTable.recover(spark, live))
     assert(spark.table(live).collect().map(_.toSeq).toSet == before)
-    assert(!SketchStream.recoverRegisters(spark, "t_hll_crash"))
+    assert(!SwapTable.recover(spark, live))
   }
 
   test("batch face mergeCmsBatch: in-lineage == replay vs stale < epoch distinguished; mass invariant holds over the fold") {
