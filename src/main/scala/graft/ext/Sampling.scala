@@ -3,7 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.core.Pin._
-import graft.functions.polyFingerprint
+import graft.functions.{polyFingerprint, wordGrams}
 
 /** Deterministic splitting/sampling for training-data pipelines: every
   * assignment is a pure function of the row's KEY (polyhash mod a fixed
@@ -398,11 +398,11 @@ object Sampling {
     * surprisal-family left-join law). Output: (idCol, dsir_bits,
     * n_grams).
     *
-    * Scale shape: grams derive ROW-LOCALLY (split + the shared
-    * 2-gram transform); the per-doc bucket tf relation is pinned once
-    * (model counts + scoring join share it — the bigramSurprisal
-    * lesson); the raw model is ONE `buckets`-bounded partial-agg
-    * shuffle; the target model likewise (the target may be any size —
+    * Scale shape: grams derive ROW-LOCALLY (one native
+    * [[graft.functions.WordGrams]] pass, orders 1 and 2); the per-doc
+    * bucket tf relation is pinned once (model counts + scoring join
+    * share it — the bigramSurprisal lesson); the raw model is ONE
+    * `buckets`-bounded partial-agg shuffle; the target model likewise (the target may be any size —
     * its model is still ≤ `buckets` rows); per-bucket weights and the
     * 1-row total shift BROADCAST back over the pinned tf relation.
     * Nothing corpus-sized crosses an exchange except the one (doc,
@@ -413,8 +413,8 @@ object Sampling {
     require(buckets > 0, s"buckets must be positive, got $buckets")
     def gramBuckets(df: DataFrame): DataFrame =
       df.filter(col(textCol).isNotNull)
-        .select(col(idCol), explode(concat(split(col(textCol), " "),
-          TextAnalysis.ngramArray(textCol, 2))).as("__ds_gram"))
+        .select(col(idCol),
+          explode(wordGrams(col(textCol), 1, 2)).as("__ds_gram"))
         .select(col(idCol),
           pmod(polyFingerprint(col("__ds_gram")), lit(buckets.toLong))
             .as("__ds_b"))

@@ -3,7 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.core.Pin._
-import graft.functions.polyFingerprint
+import graft.functions.{leveledWordGrams, polyFingerprint, wordGrams}
 
 /** Text-analysis operators for a large-scale training-data pipeline
   * (BASELINE north star; beyond the reference surface, SURVEY §0). All
@@ -1403,9 +1403,9 @@ object TextAnalysis {
     * filterable `mean_bits_x100` (0 for null/empty/single-token text,
     * via the left join back to the corpus).
     *
-    * Scale shape: bigram strings derive ROW-LOCALLY from the scan (a
-    * codegen'd transform over the split array — no custom expression
-    * needed since the per-doc tf aggregation shuffles anyway); then ONE
+    * Scale shape: bigram strings derive ROW-LOCALLY from the scan (the
+    * native [[graft.functions.WordGrams]] pass the n-gram LM family
+    * shares, via [[ngramArray]]); then ONE
     * (doc, bigram) partial-agg shuffle, a bigram-vocab-bounded count
     * aggregation with its context rollup, a 1-row V broadcast, and the
     * doc-keyed scoring sum — every exchange vocab- or doc-bounded,
@@ -1413,24 +1413,12 @@ object TextAnalysis {
     */
   def bigramSurprisal(docs: DataFrame, idCol: String = "doc_id",
                       textCol: String = "text"): DataFrame = {
-    // the one operator here that splices the column name into SQL text
-    // (the transform/sequence lambda below) — a backtick in the name
-    // would break out of the quoting, so reject it up front instead of
-    // failing with an opaque parse error (ADVICE r13)
+    // input contract: a backticked column name is rejected up front
     require(!textCol.contains("`"),
       s"bigramSurprisal: textCol must not contain a backtick, got '$textCol'")
     // per-doc bigram occurrence counts; single-token docs yield none
     val bp = docs.filter(col(textCol).isNotNull)
-      .select(col(idCol), explode(expr(
-        // the size guard matters: Spark's sequence(2, 1) DESCENDS
-        // ([2, 1]) instead of being empty like generate_series, so a
-        // single-token doc would index past its array
-        s"""CASE WHEN size(split(`$textCol`, ' ')) >= 2 THEN
-           |  transform(sequence(2, size(split(`$textCol`, ' '))),
-           |    i -> concat_ws(' ', element_at(split(`$textCol`, ' '), i - 1),
-           |                        element_at(split(`$textCol`, ' '), i)))
-           |ELSE cast(array() AS array<string>) END"""
-          .stripMargin)).as("bigram"))
+      .select(col(idCol), explode(ngramArray(textCol, 2)).as("bigram"))
       .groupBy(col(idCol), col("bigram"))
       .agg(count(lit(1)).as("tf"))
       // pinned: the corpus-wide counts AND the scoring join both read
@@ -1463,25 +1451,14 @@ object TextAnalysis {
           .otherwise(lit(0L)).as("mean_bits_x100"))
   }
 
-  /** Array of word `n`-grams of `textCol` (space-joined strings), built
-    * row-locally over the split array — empty for docs with fewer than
-    * `n` tokens (the explicit size guard matters: Spark's
-    * `sequence(n, m)` DESCENDS when m < n instead of being empty).
-    * Shared by the n-gram LM family; validates the column name because
-    * the lambda is SQL text (the [[bigramSurprisal]] splice rule).
+  /** Array of word `n`-grams of `textCol` (space-joined strings, in
+    * position order) from the native one-pass
+    * [[graft.functions.WordGrams]] — empty for docs with fewer than `n`
+    * words, null for a null text (both explode to no rows). Shared by
+    * the n-gram LM family.
     */
-  private[ext] def ngramArray(textCol: String, n: Int): org.apache.spark.sql.Column = {
-    require(!textCol.contains("`"),
-      s"column name must not contain a backtick, got '$textCol'")
-    val parts = (n - 1 to 0 by -1)
-      .map(j => s"element_at(split(`$textCol`, ' '), i - $j)")
-      .mkString(", ")
-    expr(
-      s"""CASE WHEN size(split(`$textCol`, ' ')) >= $n THEN
-         |  transform(sequence($n, size(split(`$textCol`, ' '))),
-         |    i -> concat_ws(' ', $parts))
-         |ELSE cast(array() AS array<string>) END""".stripMargin)
-  }
+  private def ngramArray(textCol: String, n: Int): Column =
+    wordGrams(col(textCol), n)
 
   /** Per-document LEXICAL DIVERSITY: distinct words, total words, and
     * the integer type-token ratio ×100 — the classic richness signal
@@ -1803,18 +1780,15 @@ object TextAnalysis {
     counts.select(col("level"), col("gram"), col("cnt")).unionByName(nv)
   }
 
-  /** All of `orders`' n-gram arrays of a text column, level-tagged, in
-    * ONE row-local expression — `concat` of per-order [[ngramArray]]
-    * transforms, so a single explode (and a single corpus scan) feeds
-    * every level of an n-gram model at once. The repeated `split` the
-    * per-order arrays share is collapsed by codegen subexpression
-    * elimination.
+  /** All of `orders`' n-grams of a text column, level-tagged, in ONE
+    * row-local expression — the leveled face of
+    * [[graft.functions.WordGrams]]: one word scan per row emits every
+    * order's grams, so a single explode (and a single corpus scan) feeds
+    * every level of an n-gram model at once.
     */
   private def leveledGrams(textCol: String,
                            orders: Seq[Int] = Seq(1, 2, 3)): Column =
-    concat(orders.map(n =>
-      transform(ngramArray(textCol, n),
-        g => struct(lit(n).as("level"), g.as("gram")))): _*)
+    leveledWordGrams(col(textCol), orders: _*)
 
   /** TRIGRAM surprisal under a stupid-backoff model ([[trigramModel]])
     * — the third rung of the n-gram-LM ladder (unigram → bigram →

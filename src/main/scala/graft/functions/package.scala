@@ -18,7 +18,8 @@ import org.apache.spark.sql.functions._
   * Two decisions shared by many of them live in one module each:
   * [[Words]], the word rule (split on byte 0x20, empty words kept), and
   * [[PolyFold]], the hash rule (the 31-bit `×31 mod 2³¹−1` fold and its
-  * 62-bit pair with `×37 mod 2³¹−19`).
+  * 62-bit pair with `×37 mod 2³¹−19`). Word n-gram strings come from
+  * one expression, [[WordGrams]] ([[wordGrams]], [[leveledWordGrams]]).
   */
 package object functions {
 
@@ -131,6 +132,20 @@ package object functions {
     */
   def gramHashes(c: Column, k: Int): Column =
     Bridge.column(GramHashes(Bridge.expression(c), k))
+
+  /** Every word n-gram of a text for each of `orders`, order by order
+    * as given, in one row-local pass (custom codegen'd Catalyst expression,
+    * see [[graft.functions.WordGrams]]) — the n-gram LM family's gram
+    * arrays without the per-gram re-split of an interpreted lambda.
+    */
+  def wordGrams(c: Column, orders: Int*): Column =
+    Bridge.column(WordGrams(Bridge.expression(c), orders, leveled = false))
+
+  /** [[wordGrams]] with each gram tagged by its order:
+    * `array<struct<level: int, gram: string>>`.
+    */
+  def leveledWordGrams(c: Column, orders: Int*): Column =
+    Bridge.column(WordGrams(Bridge.expression(c), orders, leveled = true))
 
   /** Content-defined chunk texts in one row-local pass (custom
     * codegen'd Catalyst expression, see

@@ -1,7 +1,9 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import graft.ext.Similarity
+import graft.functions.{leveledWordGrams, wordGrams}
 
 /** Native Catalyst expressions: CosineSim must be bit-identical to the
   * higher-order-function spec it replaces, behave on edge shapes, and be
@@ -1140,6 +1142,57 @@ class NativeExprSpec extends SparkSuite {
       .select(col("doc_id"), col("g.pos"), col("g.fp"))
     assert(rows(got) == rows(ref))
     assert(got.count() > 0)
+  }
+
+  /** The formulation [[graft.functions.WordGrams]] replaced, kept as the
+    * reference: word `n`-grams of `text` by an interpreted lambda that
+    * re-splits the text for every gram (the size guard because Spark's
+    * `sequence(n, m)` descends when m < n).
+    */
+  private def ngramsHof(n: Int): Column = {
+    val parts = (n - 1 to 0 by -1)
+      .map(j => s"element_at(split(text, ' '), i - $j)").mkString(", ")
+    expr(
+      s"""CASE WHEN size(split(text, ' ')) >= $n THEN
+         |  transform(sequence($n, size(split(text, ' '))),
+         |    i -> concat_ws(' ', $parts))
+         |ELSE cast(array() AS array<string>) END""".stripMargin)
+  }
+
+  test("WordGrams equals the transform(sequence(...)) formulation, per order and leveled 1 → 2 → 3") {
+    import spark.implicits._
+    val raw = graft.core.Tables.documents(spark, "/root/testdata/sf0.001")
+      .filter(col("text").isNotNull).limit(150)
+      .select(col("doc_id"), col("text"))
+    // null, "", " ", "a  b", leading/trailing spaces and multi-byte
+    // words (Fixtures.edgeTexts), and texts shorter than each order
+    val edge = ((Seq("one", "w1 w2", "w1 w2 w3") ++ Fixtures.edgeTexts)
+      .map(Option(_)) :+ None)
+      .zipWithIndex.map { case (t, i) => (9001L + i, t.orNull) }
+      .toDF("doc_id", "text")
+    val docs = raw.unionByName(edge).localCheckpoint()
+    def grams(arr: Column): Seq[(Long, Int, String)] =
+      docs.select(col("doc_id"), posexplode(arr))
+        .as[(Long, Int, String)].collect().toSeq.sorted
+    for (n <- 1 to 3) {
+      val got = grams(wordGrams(col("text"), n))
+      assert(got == grams(ngramsHof(n)), s"n = $n")
+      assert(got.nonEmpty)
+    }
+    def leveled(arr: Column): Seq[(Long, Int, Int, String)] =
+      docs.select(col("doc_id"), posexplode(arr))
+        .select(col("doc_id"), col("pos"), col("col.level"), col("col.gram"))
+        .as[(Long, Int, Int, String)].collect().toSeq.sorted
+    val hof = concat((1 to 3).map(n => transform(ngramsHof(n),
+      g => struct(lit(n).as("level"), g.as("gram")))): _*)
+    assert(leveled(leveledWordGrams(col("text"), 1, 2, 3)) == leveled(hof))
+    // goldens: empty words kept, too-short texts and null give no grams
+    val one = Seq("a  b", " x", "ü ß", "solo").toDF("text")
+      .select(wordGrams(col("text"), 2)).as[Seq[String]].collect().toSeq
+    assert(one == Seq(Seq("a ", " b"), Seq(" x"), Seq("ü ß"), Seq()))
+    val nul = Seq(null: String).toDF("text")
+      .select(explode(leveledWordGrams(col("text"), 1, 2, 3)))
+    assert(nul.count() == 0)
   }
 
   test("CdcChunksExpr equals the declarative cdcChunksHof spec on corpus + edge shapes") {

@@ -58,6 +58,8 @@ class NativeExprTableSpec extends SparkSuite {
       str("PcmFingerprint", PcmFingerprint(_)),
       bin("PcmFingerprint/binary", PcmFingerprint(_)),
       str("GramHashes", GramHashes(_, 3)),
+      str("WordGrams", WordGrams(_, Seq(1, 2, 3), leveled = false)),
+      str("WordGrams/leveled", WordGrams(_, Seq(1, 2, 3), leveled = true)),
       str("WinnowFps", WinnowFps(_, 3, 2)),
       str("CdcChunksExpr", CdcChunksExpr(_, 2, 3)),
       str("ShingleHashes", ShingleHashes(_, 3)),

@@ -16,13 +16,20 @@ import org.scalatest.funsuite.AnyFunSuite
   * only: a `DataFrameWriter` (`.write` not followed by a call's `(`, or
   * `.writeTo(`) anywhere under graft/sinks fails it. And tables swap
   * into place through graft.core.SwapTable only: a `RENAME TO` anywhere
-  * else fails it. Exemptions:
+  * else fails it. Word n-grams come from graft.functions.WordGrams (or
+  * another Words-based pass): a `split(` inside the lambda of a
+  * `transform(sequence(` call, which re-splits the text for every
+  * element, fails it. Exemptions:
   *
-  *  - queries/LlmOracle.scala keeps its own moduli: its DuckDB replay
-  *    text is the independent oracle the engine is checked against;
+  *  - queries/LlmOracle.scala keeps its own moduli and its own word
+  *    splits: its DuckDB replay text is the independent oracle the
+  *    engine is checked against;
   *  - functions/C4Stats.scala and functions/CharTrigramTfs.scala compare
   *    bytes to 0x20 for other rules: C4's line filter counts NON-EMPTY
-  *    words, and the trigram pass rewrites spaces to '_'.
+  *    words, and the trigram pass rewrites spaces to '_';
+  *  - TextMiningQueries.LineifySpark re-splits inside its lambda: it is
+  *    the C4 fixture generator, not an operator, and the oracle replays
+  *    its text verbatim, so it stays in the shape both engines share.
   */
 class RuleLintSpec extends AnyFunSuite {
 
@@ -52,6 +59,29 @@ class RuleLintSpec extends AnyFunSuite {
   private val Pinning = """localCheckpoint\(|\.checkpoint\(|setCheckpointDir""".r
   private val FrameWriter = """\.write\b(?!\s*\()|\.writeTo\(""".r
   private val Rename = """(?i)\bRENAME\s+TO\b""".r
+  private val TransformSeq = """\btransform\(\s*sequence\(""".r
+
+  /** Offset just past the paren that closes the one at `open`. */
+  private def closing(src: String, open: Int): Int = {
+    var depth = 0
+    var i = open
+    do {
+      if (src(i) == '(') depth += 1 else if (src(i) == ')') depth -= 1
+      i += 1
+    } while (depth > 0 && i < src.length)
+    i
+  }
+
+  /** Offsets of the `transform(sequence(` calls in `src` whose lambda
+    * (after the sequence's closing paren, up to the transform's) calls
+    * `split(`.
+    */
+  private def splitInSeqLambda(src: String): Seq[Int] =
+    TransformSeq.findAllMatchIn(src).map(_.start).filter { at =>
+      val open = src.indexOf('(', at)
+      val seqEnd = closing(src, src.indexOf('(', open + 1))
+      src.substring(seqEnd, closing(src, open)).contains("split(")
+    }.toSeq
 
   test("the hash-rule moduli appear only in PolyFold (and the oracle's replay)") {
     assert(Moduli.findFirstIn(sources("graft/functions/PolyFold.scala")).isDefined)
@@ -87,5 +117,31 @@ class RuleLintSpec extends AnyFunSuite {
   test("RENAME TO appears only in SwapTable") {
     assert(Rename.findFirstIn(sources("graft/core/SwapTable.scala")).isDefined)
     assert(offenders(Rename, Set("graft/core/SwapTable.scala")) == Nil)
+  }
+
+  test("no split( inside a transform(sequence( lambda: word n-grams come from WordGrams") {
+    assert(splitInSeqLambda(
+      "transform(sequence(2, n), i -> element_at(split(t, ' '), i))") == Seq(0))
+    assert(splitInSeqLambda(
+      "transform(sequence(2, size(split(t, ' '))), i -> element_at(ws, i))") == Nil)
+    assert(splitInSeqLambda(
+      "list_transform(generate_series(1, n), i -> string_split(t, ' ')[i])") == Nil)
+    val lineify = {
+      val src = sources("graft/queries/TextMiningQueries.scala")
+      val at = src.indexOf("LineifySpark = expr(")
+      assert(at >= 0)
+      val span = at until closing(src, src.indexOf('(', at))
+      assert(splitInSeqLambda(src).exists(span.contains)) // the exemption is live
+      span
+    }
+    val found = sources.toSeq.sortBy(_._1).flatMap { case (file, src) =>
+      splitInSeqLambda(src).collect {
+        case at if file != "graft/queries/LlmOracle.scala" &&
+            !(file == "graft/queries/TextMiningQueries.scala" &&
+              lineify.contains(at)) =>
+          s"$file:${src.take(at).count(_ == '\n') + 1}"
+      }
+    }
+    assert(found == Nil)
   }
 }
