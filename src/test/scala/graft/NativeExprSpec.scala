@@ -1166,9 +1166,8 @@ class NativeExprSpec extends SparkSuite {
       .select(col("doc_id"), col("text"))
     // null, "", " ", "a  b", leading/trailing spaces and multi-byte
     // words (Fixtures.edgeTexts), and texts shorter than each order
-    val edge = ((Seq("one", "w1 w2", "w1 w2 w3") ++ Fixtures.edgeTexts)
-      .map(Option(_)) :+ None)
-      .zipWithIndex.map { case (t, i) => (9001L + i, t.orNull) }
+    val edge = (Seq("one", "w1 w2", "w1 w2 w3") ++ Fixtures.edgeTexts :+ null)
+      .zipWithIndex.map { case (t, i) => (9001L + i, t) }
       .toDF("doc_id", "text")
     val docs = raw.unionByName(edge).localCheckpoint()
     def grams(arr: Column): Seq[(Long, Int, String)] =
