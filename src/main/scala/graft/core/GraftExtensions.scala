@@ -76,7 +76,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       (children: Seq[Expression]) => {
         require(children.length == 1 || children.length == 2,
           "shingle_hashes(text[, n]) takes 1-2 arguments")
-        val n = if (children.length == 2) intArg(children(1), "n") else 3
+        val n = if (children.length == 2) intArg(children(1), "n")
+          else graft.ext.Dedup.ShingleN
         ShingleHashes(children.head, n)
       }))
     ext.injectFunction((

@@ -44,16 +44,14 @@ object Curation {
              textCol: String = "text", minQuality: Int = 3,
              splits: Seq[(String, Double)] =
                Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1),
-             n: Int = 3, numBands: Int = 4, rowsPerBand: Int = 2,
              jaccardNum: Int = 8, jaccardDen: Int = 10,
              maxBucket: Int = Dedup.DefaultMaxBucketWidth,
              maxRounds: Int = 50, strictClustering: Boolean = true): DataFrame = {
     val gated = docs
       .withColumn("quality", TextAnalysis.qualityScore(col(textCol)).cast("long"))
       .filter(col("quality") >= minQuality)
-    val kept = Dedup.dedupedCorpus(gated, idCol, textCol, n, numBands,
-      rowsPerBand, jaccardNum, jaccardDen, maxBucket, maxRounds,
-      strictClustering)
+    val kept = Dedup.dedupedCorpus(gated, idCol, textCol, jaccardNum,
+      jaccardDen, maxBucket, maxRounds, strictClustering)
     Sampling.assignSplit(kept, col(idCol), splits)
       .select(col(idCol), col("quality"), col("split"))
   }

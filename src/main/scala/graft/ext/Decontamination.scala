@@ -156,15 +156,13 @@ object Decontamination {
     * shingle Jaccard reaches `jaccardNum/jaccardDen` — (idCol,
     * bench_id, inter, uni), the auditable evidence behind
     * [[fuzzyDecontaminate]]. Recall is LSH-banded (a pair missing every
-    * band escapes — the standard near-dup trade, same banding layout
-    * knobs as [[Dedup.nearDupPairs]]).
+    * band escapes — the standard near-dup trade, in the same fixed
+    * layout as [[Dedup.nearDupPairs]]).
     */
   def fuzzyContaminationReport(corpus: DataFrame, bench: DataFrame,
                                jaccardNum: Int = 8, jaccardDen: Int = 10,
                                idCol: String = "doc_id",
-                               textCol: String = "text", n: Int = 3,
-                               numBands: Int = 4,
-                               rowsPerBand: Int = 2): DataFrame = {
+                               textCol: String = "text"): DataFrame = {
     require(jaccardNum > 0 && jaccardDen > 0 && jaccardNum <= jaccardDen,
       s"jaccard threshold must be a ratio in (0, 1], got " +
         s"$jaccardNum/$jaccardDen")
@@ -172,11 +170,11 @@ object Decontamination {
     // each read them, and Catalyst has no cross-branch subexpression
     // reuse — without the checkpoint the corpus shingle/minhash stage
     // would run twice per call (the repLevelPairs pattern)
-    val cf = Dedup.features(corpus, idCol, textCol, n).pin()
-    val bf = Dedup.features(bench, idCol, textCol, n).pin()
-    val cb = Dedup.bands(cf, idCol, numBands, rowsPerBand)
+    val cf = Dedup.features(corpus, idCol, textCol).pin()
+    val bf = Dedup.features(bench, idCol, textCol).pin()
+    val cb = Dedup.bands(cf, idCol)
       .filter(col("bkey").isNotNull)
-    val bb = Dedup.bands(bf, idCol, numBands, rowsPerBand)
+    val bb = Dedup.bands(bf, idCol)
       .filter(col("bkey").isNotNull)
       .select(col("band"), col("bkey"), col(idCol).as("bench_id"))
     val cand = cb.join(broadcast(bb), Seq("band", "bkey"))
@@ -191,12 +189,11 @@ object Decontamination {
     */
   def fuzzyDecontaminate(corpus: DataFrame, bench: DataFrame,
                          jaccardNum: Int = 8, jaccardDen: Int = 10,
-                         idCol: String = "doc_id", textCol: String = "text",
-                         n: Int = 3, numBands: Int = 4,
-                         rowsPerBand: Int = 2): DataFrame =
+                         idCol: String = "doc_id",
+                         textCol: String = "text"): DataFrame =
     corpus.join(
       fuzzyContaminationReport(corpus, bench, jaccardNum, jaccardDen,
-        idCol, textCol, n, numBands, rowsPerBand)
+        idCol, textCol)
         .select(col(idCol)).distinct(),
       Seq(idCol), "left_anti")
 

@@ -46,6 +46,17 @@ object Dedup {
     (49979687L, 6700417L), (67867967L, 999999937L), (86028121L, 998244353L),
     (104395301L, 1000000007L), (122949823L, 1610612741L))
 
+  /** The near-dup layout: word `ShingleN`-gram shingles, `NumBands`
+    * bands of `RowsPerBand` signature rows. Constants, not parameters:
+    * the ingest gate's store persists band keys of this layout, and a
+    * reader banding otherwise would silently match none of them. Only
+    * [[lshRecallGrid]] sweeps other band shapes.
+    */
+  val ShingleN: Int = 3
+  val NumBands: Int = 4
+  val RowsPerBand: Int = 2
+  require(NumBands * RowsPerBand == Perms.length, "layout must tile Perms")
+
   /** Word n-gram shingles (n consecutive words joined by a space). */
   def shingles(text: Column, n: Int): Column = {
     val ws = split(text, " ")
@@ -112,25 +123,29 @@ object Dedup {
 
   /** Per-document dedup features over a corpus. */
   def features(docs: DataFrame, idCol: String = "doc_id",
-               textCol: String = "text", n: Int = 3): DataFrame =
+               textCol: String = "text"): DataFrame =
     docs.select(col(idCol),
-      shingleHashes(col(textCol), n).as("hashes"))
+      shingleHashes(col(textCol), ShingleN).as("hashes"))
       .withColumn("sig", minhashSignature(col("hashes")))
       .withColumn("simhash", simhash(col("hashes")))
 
-  /** LSH banding: signature → (band, bandKey) rows. Docs sharing any
-    * band key are near-dup candidates. bands×rowsPerBand must equal the
-    * signature width.
+  /** LSH banding: signature → (band, bandKey) rows of the
+    * [[NumBands]] × [[RowsPerBand]] layout. Docs sharing any band key
+    * are near-dup candidates.
     */
-  def bands(sigDf: DataFrame, idCol: String, bands: Int,
-            rowsPerBand: Int): DataFrame = {
-    require(bands * rowsPerBand == Perms.length,
-      s"bands ($bands) x rowsPerBand ($rowsPerBand) must equal the " +
+  def bands(sigDf: DataFrame, idCol: String): DataFrame =
+    bandsOf(sigDf, idCol, NumBands, RowsPerBand)
+
+  /** [[bands]] by any (b, r) shape, for [[lshRecallGrid]]'s sweep. */
+  private def bandsOf(sigDf: DataFrame, idCol: String, b: Int,
+                      r: Int): DataFrame = {
+    require(b * r == Perms.length,
+      s"bands ($b) x rowsPerBand ($r) must equal the " +
         s"signature width (${Perms.length}); an out-of-range slice would " +
         "give every doc an empty band key and explode candidates to n^2")
-    val bandStructs = array((0 until bands).map { b =>
-      struct(lit(b).as("band"),
-        array_join(transform(slice(col("sig"), b * rowsPerBand + 1, rowsPerBand),
+    val bandStructs = array((0 until b).map { i =>
+      struct(lit(i).as("band"),
+        array_join(transform(slice(col("sig"), i * r + 1, r),
           _.cast("string")), "_").as("bkey"))
     }: _*)
     sigDf.select(col(idCol), explode(bandStructs).as("b"))
@@ -157,9 +172,8 @@ object Dedup {
     * candidate generation — recall loss you can see, not an OOM.
     */
   def bandOverflow(feats: DataFrame, idCol: String = "doc_id",
-                   numBands: Int = 4, rowsPerBand: Int = 2,
                    maxBucket: Int = DefaultMaxBucketWidth): DataFrame =
-    bands(feats, idCol, numBands, rowsPerBand)
+    bands(feats, idCol)
       .filter(col("bkey").isNotNull)
       .groupBy("band", "bkey").agg(count(lit(1)).as("n_docs"))
       .filter(col("n_docs") > maxBucket)
@@ -172,13 +186,18 @@ object Dedup {
     * uses, so the cap adds no extra exchange on the hot path.
     */
   def lshCandidates(features: DataFrame, idCol: String = "doc_id",
-                    numBands: Int = 4, rowsPerBand: Int = 2,
-                    maxBucket: Int = DefaultMaxBucketWidth): DataFrame = {
-    val capped = bands(features, idCol, numBands, rowsPerBand)
-      .filter(col("bkey").isNotNull)
+                    maxBucket: Int = DefaultMaxBucketWidth): DataFrame =
+    bucketPairs(withWidth(bands(features, idCol)), idCol, maxBucket)
+
+  /** Non-null band rows plus their bucket's width `__w` (one window). */
+  private def withWidth(banded: DataFrame): DataFrame =
+    banded.filter(col("bkey").isNotNull)
       .withColumn("__w", count(lit(1)).over(Window.partitionBy("band", "bkey")))
-      .filter(col("__w") <= maxBucket)
-      .drop("__w")
+
+  /** The capped (band, bkey) self-join over [[withWidth]] rows. */
+  private def bucketPairs(widthed: DataFrame, idCol: String,
+                          maxBucket: Int): DataFrame = {
+    val capped = widthed.filter(col("__w") <= maxBucket).drop("__w")
     val l = capped.withColumnRenamed(idCol, "doc_a")
     val r = capped.withColumnRenamed(idCol, "doc_b")
     l.join(r, Seq("band", "bkey"))
@@ -229,22 +248,14 @@ object Dedup {
     * any unmaterialized signature stage) per branch; `repPairs` =
     * (doc_a, doc_b, inter, uni) over rep ids, doc_a < doc_b.
     */
-  private def repLevelPairs(feats: DataFrame, idCol: String, numBands: Int,
-                            rowsPerBand: Int, maxBucket: Int): (DataFrame, DataFrame) = {
+  private def repLevelPairs(feats: DataFrame, idCol: String,
+                            maxBucket: Int): (DataFrame, DataFrame) = {
     val grouped = withExactReps(feats, idCol).pin()
     val repFeats = grouped.filter(col(idCol) === col("rep"))
     // band rows + bucket width in ONE window pass, materialized once:
     // the overflow disclosure and the capped self-join both read it
-    val widthed = bands(repFeats, idCol, numBands, rowsPerBand)
-      .filter(col("bkey").isNotNull)
-      .withColumn("__w", count(lit(1)).over(Window.partitionBy("band", "bkey")))
-      .pin()
-    val capped = widthed.filter(col("__w") <= maxBucket).drop("__w")
-    val l = capped.withColumnRenamed(idCol, "doc_a")
-    val r = capped.withColumnRenamed(idCol, "doc_b")
-    val cands = l.join(r, Seq("band", "bkey"))
-      .filter(col("doc_a") < col("doc_b"))
-      .select("doc_a", "doc_b").distinct()
+    val widthed = withWidth(bands(repFeats, idCol)).pin()
+    val cands = bucketPairs(widthed, idCol, maxBucket)
     val repPairs = withJaccard(cands, "doc_a", "doc_b", repFeats, repFeats, idCol)
       .select("doc_a", "doc_b", "inter", "uni")
     Overlap.disclosing("lsh candidate generation",
@@ -270,9 +281,8 @@ object Dedup {
     * materialize intra-group pairs.
     */
   def nearDupPairsFromFeatures(feats: DataFrame, idCol: String = "doc_id",
-                               numBands: Int = 4, rowsPerBand: Int = 2,
                                maxBucket: Int = DefaultMaxBucketWidth): DataFrame = {
-    val (grouped, repPairs) = repLevelPairs(feats, idCol, numBands, rowsPerBand, maxBucket)
+    val (grouped, repPairs) = repLevelPairs(feats, idCol, maxBucket)
     val rp = repPairs.select(col("doc_a").as("ra"), col("doc_b").as("rb"),
       col("inter"), col("uni"))
     val ga = grouped.select(col(idCol).as("a"), col("rep").as("ra"))
@@ -299,11 +309,9 @@ object Dedup {
     * [[nearDupPairsFromFeatures]] directly.
     */
   def nearDupPairs(docs: DataFrame, idCol: String = "doc_id",
-                   textCol: String = "text", n: Int = 3,
-                   numBands: Int = 4, rowsPerBand: Int = 2,
+                   textCol: String = "text",
                    maxBucket: Int = DefaultMaxBucketWidth): DataFrame =
-    nearDupPairsFromFeatures(features(docs, idCol, textCol, n),
-      idCol, numBands, rowsPerBand, maxBucket)
+    nearDupPairsFromFeatures(features(docs, idCol, textCol), idCol, maxBucket)
 
   /** LSH CONFIG RECALL AUDIT — the eval of the dedup configuration
     * itself: on a deterministic key-hash sample
@@ -321,9 +329,10 @@ object Dedup {
     * ~half its shingles, so losing only the template ones from the
     * INDEX almost never loses the pair), verified by exact integer
     * Jaccard at `jaccardNum/jaccardDen`. Candidates = the plain
-    * [[lshCandidates]] of the SAME banding layout the production run
-    * uses, including its hot-bucket cap — the cap's recall cost is
-    * exactly what this audit makes visible. One row out:
+    * [[lshCandidates]] of the fixed [[NumBands]] × [[RowsPerBand]]
+    * layout — the one the ingest gate and the clustering run —
+    * including its hot-bucket cap, whose recall cost is exactly what
+    * this audit makes visible. One row out:
     * (n_sampled, n_truth_pairs, n_candidates, n_verified, n_hits,
     * recall_x10000, precision_x10000).
     *
@@ -336,11 +345,10 @@ object Dedup {
   def lshRecallAudit(docs: DataFrame, sampleFraction: Double = 0.25,
                      jaccardNum: Int = 1, jaccardDen: Int = 2,
                      idCol: String = "doc_id", textCol: String = "text",
-                     n: Int = 3, numBands: Int = 4, rowsPerBand: Int = 2,
                      maxBucket: Int = DefaultMaxBucketWidth,
                      maxShingleDf: Int = 200): DataFrame =
-    lshRecallGrid(docs, Seq((numBands, rowsPerBand)), sampleFraction,
-      jaccardNum, jaccardDen, idCol, textCol, n, maxBucket, maxShingleDf)
+    lshRecallGrid(docs, Seq((NumBands, RowsPerBand)), sampleFraction,
+      jaccardNum, jaccardDen, idCol, textCol, maxBucket, maxShingleDf)
       .drop("num_bands", "rows_per_band")
 
   /** The CONFIG GRID over [[lshRecallAudit]] — the sweep that answers
@@ -349,21 +357,23 @@ object Dedup {
     * tokenize+shingle pass, and ONE df-capped exact ground truth (the
     * expensive artifacts — candidates per config are the cheap part),
     * so an s-vector sample prices a c-config sweep at truth + c band
-    * joins, not c audits. Every config must tile the full
-    * [[Perms]]-wide signature (bands × rows == 8 — the [[bands]]
-    * contract), so the default grid (8,1)/(4,2)/(2,4) sweeps the
+    * joins, not c audits. The only entry point that bands any shape
+    * but the fixed layout: each config goes through [[bandsOf]], which
+    * requires it to tile the full [[Perms]]-wide signature (bands ×
+    * rows == 8), so the default grid (8,1)/(4,2)/(2,4) sweeps the
     * recall/precision trade at constant signature cost: more bands of
     * fewer rows → match on ANY shorter key → recall monotonically up,
     * precision down (the S-curve law the oracle's ordered rows
-    * exhibit). Output: one [[lshRecallAudit]] row per config, keyed by
-    * (num_bands, rows_per_band).
+    * exhibit). The (4,2) row is the layout production runs. Output: one
+    * [[lshRecallAudit]] row per config, keyed by (num_bands,
+    * rows_per_band).
     */
   def lshRecallGrid(docs: DataFrame,
                     configs: Seq[(Int, Int)] = Seq((8, 1), (4, 2), (2, 4)),
                     sampleFraction: Double = 0.25,
                     jaccardNum: Int = 1, jaccardDen: Int = 2,
                     idCol: String = "doc_id", textCol: String = "text",
-                    n: Int = 3, maxBucket: Int = DefaultMaxBucketWidth,
+                    maxBucket: Int = DefaultMaxBucketWidth,
                     maxShingleDf: Int = 200): DataFrame = {
     require(configs.nonEmpty, "lshRecallGrid needs at least one config")
     require(configs.distinct.size == configs.size,
@@ -378,12 +388,13 @@ object Dedup {
     // and the MinHash sig (banding) — [[features]]' simhash column
     // would be computed and pinned for nothing here
     val feats = samp
-      .select(col(idCol), shingleHashes(col(textCol), n).as("hashes"))
+      .select(col(idCol), shingleHashes(col(textCol), ShingleN).as("hashes"))
       .withColumn("sig", minhashSignature(col("hashes")))
       .pin()
     auditGrid("lshRecallGrid", feats, idCol, configs,
       ("num_bands", "rows_per_band"), jaccardNum, jaccardDen, maxShingleDf) {
-      (b, r) => lshCandidates(feats, idCol, b, r, maxBucket)
+      (b, r) => bucketPairs(withWidth(bandsOf(feats, idCol, b, r)), idCol,
+        maxBucket)
     }
   }
 
@@ -1026,13 +1037,12 @@ object Dedup {
     * not just the candidate join.
     */
   def nearDupClusters(docs: DataFrame, idCol: String = "doc_id",
-                      textCol: String = "text", n: Int = 3,
-                      numBands: Int = 4, rowsPerBand: Int = 2,
+                      textCol: String = "text",
                       jaccardNum: Int = 8, jaccardDen: Int = 10,
                       maxBucket: Int = DefaultMaxBucketWidth,
                       maxRounds: Int = 50, strict: Boolean = false): DataFrame = {
-    val edges = nearDupEdgeSet(docs, idCol, textCol, n, numBands,
-      rowsPerBand, jaccardNum, jaccardDen, maxBucket)
+    val edges = nearDupEdgeSet(docs, idCol, textCol, jaccardNum,
+      jaccardDen, maxBucket)
     clusterLabels(docs.select(col(idCol).as("id")), edges, maxRounds, strict)
       .select(col("id").as(idCol), col("cluster_id"))
   }
@@ -1047,13 +1057,12 @@ object Dedup {
     * [[nearDupClusters]] — the two paths must agree bit-for-bit.
     */
   def nearDupClustersStar(docs: DataFrame, idCol: String = "doc_id",
-                          textCol: String = "text", n: Int = 3,
-                          numBands: Int = 4, rowsPerBand: Int = 2,
+                          textCol: String = "text",
                           jaccardNum: Int = 8, jaccardDen: Int = 10,
                           maxBucket: Int = DefaultMaxBucketWidth,
                           maxRounds: Int = 25, strict: Boolean = false): DataFrame = {
-    val edges = nearDupEdgeSet(docs, idCol, textCol, n, numBands,
-      rowsPerBand, jaccardNum, jaccardDen, maxBucket)
+    val edges = nearDupEdgeSet(docs, idCol, textCol, jaccardNum,
+      jaccardDen, maxBucket)
     clusterLabelsStar(docs.select(col(idCol).as("id")), edges,
       maxRounds, strict)
       .select(col("id").as(idCol), col("cluster_id"))
@@ -1064,11 +1073,10 @@ object Dedup {
     * exact-copy member) both clustering algorithms close over.
     */
   private def nearDupEdgeSet(docs: DataFrame, idCol: String,
-                             textCol: String, n: Int, numBands: Int,
-                             rowsPerBand: Int, jaccardNum: Int,
+                             textCol: String, jaccardNum: Int,
                              jaccardDen: Int, maxBucket: Int): DataFrame = {
     val (grouped, repPairs) = repLevelPairs(
-      features(docs, idCol, textCol, n), idCol, numBands, rowsPerBand, maxBucket)
+      features(docs, idCol, textCol), idCol, maxBucket)
     val repEdges = repPairs
       .filter(jaccardAtLeast(jaccardNum, jaccardDen))
       .select(col("doc_a").as("src"), col("doc_b").as("dst"))
@@ -1124,13 +1132,12 @@ object Dedup {
     * payload never rides through the clustering shuffles).
     */
   def dedupedCorpus(docs: DataFrame, idCol: String = "doc_id",
-                    textCol: String = "text", n: Int = 3,
-                    numBands: Int = 4, rowsPerBand: Int = 2,
+                    textCol: String = "text",
                     jaccardNum: Int = 8, jaccardDen: Int = 10,
                     maxBucket: Int = DefaultMaxBucketWidth,
                     maxRounds: Int = 50, strict: Boolean = false): DataFrame = {
-    val keep = nearDupClusters(docs, idCol, textCol, n, numBands, rowsPerBand,
-      jaccardNum, jaccardDen, maxBucket, maxRounds, strict)
+    val keep = nearDupClusters(docs, idCol, textCol, jaccardNum, jaccardDen,
+      maxBucket, maxRounds, strict)
       .filter(col(idCol) === col("cluster_id"))
       .select(col(idCol))
     docs.join(keep, Seq(idCol), "left_semi")

@@ -197,13 +197,13 @@ object CurationStream {
     * `sink` enriched (left outer — a doc with no dim row survives with
     * nulls) with a `quality` column attached.
     *
-    * The dedup knobs (`n`/`numBands`/`rowsPerBand`/`jaccardNum`/
-    * `jaccardDen`) and the maintenance cadence (`compactEvery`/
-    * `vacuumAfterCompact`) pass straight through to
-    * [[IngestDedupGate.gate]] — the composed flagship exposes the same
-    * tuning surface as its stages, so a production corpus isn't pinned
-    * to the demo thresholds. Unlike the bare gate (cadence off for
-    * callers owning an external schedule), the FLAGSHIP defaults to
+    * The near-dup threshold (`jaccardNum`/`jaccardDen`) and the
+    * maintenance cadence (`compactEvery`) pass straight through to
+    * [[IngestDedupGate.gate]]. The shingle size and band layout do not:
+    * they are [[graft.ext.Dedup]]'s fixed layout, because the gate's
+    * store persists band keys of that layout and a restart that banded
+    * differently would match none of them. Unlike the bare gate (cadence
+    * off for callers owning an external schedule), the FLAGSHIP defaults to
     * `compactEvery = 64`: it is the run-unattended-for-weeks topology
     * (the reference boots docker-compose and walks away), and 64
     * five-minute batches ≈ one fold per ~5 h — version accumulation
@@ -237,10 +237,8 @@ object CurationStream {
     */
   def run(docs: DataFrame, storeName: String, dimDir: String, dimKey: String,
           checkpointDir: String, idCol: String = "doc_id",
-          textCol: String = "text", minQuality: Int = 3, n: Int = 3,
-          numBands: Int = 4, rowsPerBand: Int = 2, jaccardNum: Int = 8,
-          jaccardDen: Int = 10, compactEvery: Int = 64,
-          vacuumAfterCompact: Boolean = true,
+          textCol: String = "text", minQuality: Int = 3,
+          jaccardNum: Int = 8, jaccardDen: Int = 10, compactEvery: Int = 64,
           benchmark: Option[DataFrame] = None, minOverlap: Int = 1,
           broadcastDim: Boolean = true, redactPii: Boolean = false,
           gopherGate: Boolean = false,
@@ -324,7 +322,7 @@ object CurationStream {
       val src = if (redactPii)
         b.withColumn(textCol, TextAnalysis.redactPii(col(textCol)))
       else b
-      graft.ext.Decontamination.benchmarkGrams(src, textCol, n).cache()
+      graft.ext.Decontamination.benchmarkGrams(src, textCol).cache()
     }
     // Fail at stream START, not mid-stream: a feature column sharing a
     // name with a doc/dim column would make the as-of join's output
@@ -346,10 +344,8 @@ object CurationStream {
           "would produce ambiguous duplicate output columns)")
     }
     val query = IngestDedupGate.gate(docs, storeName, checkpointDir,
-      idCol = idCol, textCol = textCol, n = n, numBands = numBands,
-      rowsPerBand = rowsPerBand, jaccardNum = jaccardNum,
-      jaccardDen = jaccardDen, compactEvery = compactEvery,
-      vacuumAfterCompact = vacuumAfterCompact) { (novel, epoch) =>
+      idCol = idCol, textCol = textCol, jaccardNum = jaccardNum,
+      jaccardDen = jaccardDen, compactEvery = compactEvery) { (novel, epoch) =>
       // drift monitoring observes the NOVEL batch before any gate —
       // the epoch lineage is the gate stream's own checkpoint, so the
       // monitor's replay markers stay consistent across restarts
@@ -438,7 +434,7 @@ object CurationStream {
       }
       val clean = benchGrams.fold(headed)(g =>
         graft.ext.Decontamination.decontaminateAgainst(
-          headed, broadcast(g), idCol, textCol, n, minOverlap))
+          headed, broadcast(g), idCol, textCol, minOverlap = minOverlap))
       val dim0 = ManifestStore.read(novel.sparkSession, dimDir, dimKey)
       val dim = if (broadcastDim) broadcast(dim0) else dim0
       val enriched = clean.join(dim, Seq(dimKey), "left_outer")

@@ -28,9 +28,10 @@ import graft.ext.Dedup
   * previous two-append layout needed is retired. Band rows carry the
   * doc's hash set so the near-dup Jaccard check reads ONE pruned scan
   * per batch instead of re-probing the feats table by candidate id (the
-  * ×numBands hash duplication is the disclosed price; [[compactStore]]
-  * bounds the file count). Per batch, work scales with batch-size ×
-  * collisions, never with store size.
+  * ×[[Dedup.NumBands]] hash duplication is the disclosed price;
+  * [[compactStore]] bounds the file count). Per batch, work scales with
+  * batch-size × collisions, never with store size. Band keys use
+  * [[Dedup]]'s one fixed layout, so every writer and reader agree.
   *
   * Delivery contract (same as [[ChangelogDim.joinEachBatch]]): the sink
   * runs BEFORE the store commit, so a crash between them replays the
@@ -46,6 +47,9 @@ object IngestDedupGate {
   /** The store's manifest directory (under the session warehouse). */
   def storeDir(spark: SparkSession, name: String): String =
     s"${spark.conf.get("spark.sql.warehouse.dir")}/gstore_$name"
+
+  /** Key-sorted files per table in each version dir. */
+  private val StoreBuckets = 8
 
   def storeExists(spark: SparkSession, name: String): Boolean =
     ManifestStore.latestManifest(spark, storeDir(spark, name)).nonEmpty
@@ -137,12 +141,11 @@ object IngestDedupGate {
     * batch's key sets in `isinChunk`-sized chunks ([[prunedByKeys]]).
     */
   def filterNovel(batch: DataFrame, name: String, idCol: String = "doc_id",
-                  textCol: String = "text", n: Int = 3, numBands: Int = 4,
-                  rowsPerBand: Int = 2, jaccardNum: Int = 8,
+                  textCol: String = "text", jaccardNum: Int = 8,
                   jaccardDen: Int = 10, isinChunk: Int = 10000): DataFrame = {
     val spark = batch.sparkSession
     val batchReps = Dedup.withExactReps(
-        Dedup.features(batch, idCol, textCol, n), idCol)
+        Dedup.features(batch, idCol, textCol), idCol)
       .filter(col(idCol) === col("rep")).drop("rep")
       .pin()
     val survivors =
@@ -155,29 +158,16 @@ object IngestDedupGate {
           prunedByKeys(feats(spark, name).select(col(idCol)), idCol,
             batchIds, isinChunk),
           Seq(idCol), "left_anti")
-        // 2. near-dups of stored content: batch band keys vs the store.
-        //    The BOUNDED side is the batch (|batch| × numBands rows) —
-        //    it carries the broadcast hint; the store side is only ever
-        //    scanned, pruned by the batch's key chunks. Never broadcast
-        //    the store: one popular band key can match millions of
-        //    stored rows. Stored hashes ride the band rows, so this one
-        //    scan feeds the Jaccard check too.
-        val bb = Dedup.bands(unknownIds, idCol, numBands, rowsPerBand)
+        // 2. near-dups of stored content: batch band keys vs the store,
+        //    scanned pruned by the batch's key chunks. The BOUNDED side
+        //    is the batch (|batch| × NumBands rows), so it is broadcast.
+        val bb = Dedup.bands(unknownIds, idCol)
           .filter(col("bkey").isNotNull)
         val batchKeys = bb.select("bkey").distinct().collect()
           .map(_.get(0): Any).toSeq
-        val cand = broadcast(bb).join(
-            prunedByKeys(bands(spark, name), "bkey", batchKeys, isinChunk)
-              .select(col("band"), col("bkey"), col(idCol).as("__sid"),
-                col("hashes").as("__hb")),
-            Seq("band", "bkey"))
-          .select(col(idCol), col("__sid"), col("__hb"))
-          .dropDuplicates(idCol, "__sid")
-        val dupIds = Dedup.withJaccardCols(cand.join(
-            broadcast(batchReps.select(col(idCol), col("hashes").as("__ha"))),
-            Seq(idCol)))
-          .filter(Dedup.jaccardAtLeast(jaccardNum, jaccardDen))
-          .select(col(idCol))
+        val dupIds = storeNearDupIds(bb,
+          prunedByKeys(bands(spark, name), "bkey", batchKeys, isinChunk),
+          batchReps, idCol, broadcastBatch = true, jaccardNum, jaccardDen)
         unknownIds.join(dupIds, Seq(idCol), "left_anti")
       }
     // within-batch near-dups: lshCandidates emits canonically-ordered
@@ -188,14 +178,8 @@ object IngestDedupGate {
     // checkpoint before feeding the self-join's branches.
     val checked =
       if (survivors eq batchReps) batchReps else survivors.pin()
-    // the overflow probe reads only the pinned survivor frame; it runs
-    // next to the pair-verification pin below
-    Overlap.disclosing("ingest gate", "within-batch " + OverflowKind,
-      Dedup.bandOverflow(checked, idCol, numBands, rowsPerBand)) {
-      val bcand = Dedup.lshCandidates(checked, idCol, numBands, rowsPerBand)
-      val passing = Dedup.withJaccard(bcand, "doc_a", "doc_b", checked, checked, idCol)
-        .filter(Dedup.jaccardAtLeast(jaccardNum, jaccardDen))
-        .select(col("doc_a"), col("doc_b")).pin()
+    withinPairs(checked, "ingest gate", "batch", idCol, jaccardNum,
+        jaccardDen) { passing =>
       // the common batch has ZERO within-batch near-dup pairs — skip the
       // drop anti-join and the orphan probe's two joins + count entirely
       // (isEmpty on the checkpointed pair frame is a cheap partition peek)
@@ -208,8 +192,42 @@ object IngestDedupGate {
     }
   }
 
-  private val OverflowKind = "band bucket(s) over the width cap excluded " +
-    "from near-dup checking (recall loss, not a failure)"
+  /** Admit stage 2 of [[filterNovel]] and [[probeBatch]]: ids behind
+    * batch band rows `bb` with a stored near-dup. Only the batch side is
+    * ever broadcast: one band key can match millions of stored rows.
+    */
+  private def storeNearDupIds(bb: DataFrame, storeBands: DataFrame,
+                              batchHashes: DataFrame, idCol: String,
+                              broadcastBatch: Boolean, jaccardNum: Int,
+                              jaccardDen: Int): DataFrame = {
+    def side(df: DataFrame) = if (broadcastBatch) broadcast(df) else df
+    val cand = side(bb)
+      .join(storeBands.select(col("band"), col("bkey"),
+          col(idCol).as("__sid"), col("hashes").as("__hb")),
+        Seq("band", "bkey"))
+      .select(col(idCol), col("__sid"), col("__hb"))
+      .dropDuplicates(idCol, "__sid")
+    Dedup.withJaccardCols(cand.join(
+        side(batchHashes.select(col(idCol), col("hashes").as("__ha"))),
+        Seq(idCol)))
+      .filter(Dedup.jaccardAtLeast(jaccardNum, jaccardDen))
+      .select(col(idCol))
+  }
+
+  /** Admit stage 3, shared likewise: `body` gets the verified pinned
+    * (doc_a < doc_b) near-dup pairs within `docs`, overflow disclosed.
+    */
+  private def withinPairs[T](docs: DataFrame, operator: String, unit: String,
+                             idCol: String, jaccardNum: Int, jaccardDen: Int)
+                            (body: DataFrame => T): T =
+    Overlap.disclosing(operator, s"within-$unit band bucket(s) over the " +
+        "width cap excluded from near-dup checking (recall loss, not a failure)",
+      Dedup.bandOverflow(docs, idCol)) {
+      body(Dedup.withJaccard(Dedup.lshCandidates(docs, idCol), "doc_a",
+          "doc_b", docs, docs, idCol)
+        .filter(Dedup.jaccardAtLeast(jaccardNum, jaccardDen))
+        .select(col("doc_a"), col("doc_b")).pin())
+    }
 
   /** Chained-drop disclosure: a dropped doc whose EVERY keeper was
     * itself dropped has no admitted near-dup — data loss, not dedup.
@@ -265,8 +283,7 @@ object IngestDedupGate {
     * rows). Work then scales with |drop| + collisions either way.
     */
   def probeBatch(corpus: DataFrame, name: String, idCol: String = "doc_id",
-                 textCol: String = "text", n: Int = 3, numBands: Int = 4,
-                 rowsPerBand: Int = 2, jaccardNum: Int = 8,
+                 textCol: String = "text", jaccardNum: Int = 8,
                  jaccardDen: Int = 10, isinChunk: Int = 10000,
                  pushdownKeyLimit: Int = 200000): DataFrame = {
     val spark = corpus.sparkSession
@@ -275,7 +292,7 @@ object IngestDedupGate {
         s"version under ${storeDir(spark, name)} — run the gate (or " +
         "appendToStore) first")
     val feats0 = Dedup.withExactReps(
-      Dedup.features(corpus, idCol, textCol, n), idCol).pin()
+      Dedup.features(corpus, idCol, textCol), idCol).pin()
     val exactDup = feats0.filter(col(idCol) =!= col("rep"))
       .select(col(idCol), lit("exact_dup_batch").as("verdict"))
     val batchReps = feats0.filter(col(idCol) === col("rep")).drop("rep")
@@ -293,9 +310,8 @@ object IngestDedupGate {
       .select(col(idCol), lit("known_id").as("verdict"))
     val unknown = batchReps.join(storeIds, Seq(idCol), "left_anti")
       .pin()
-    // stage 2: near-dups of stored content — stored hashes ride the
-    // band rows (one store scan feeds the Jaccard check, as in the gate)
-    val bb = Dedup.bands(unknown, idCol, numBands, rowsPerBand)
+    // stage 2: near-dups of stored content, as in the gate
+    val bb = Dedup.bands(unknown, idCol)
       .filter(col("bkey").isNotNull)
     val storeBands = {
       val base = bands(spark, name)
@@ -305,29 +321,15 @@ object IngestDedupGate {
         prunedByKeys(base, "bkey", batchKeys, isinChunk)
       } else base
     }
-    val cand = (if (prune) broadcast(bb) else bb)
-      .join(storeBands.select(col("band"), col("bkey"),
-          col(idCol).as("__sid"), col("hashes").as("__hb")),
-        Seq("band", "bkey"))
-      .select(col(idCol), col("__sid"), col("__hb"))
-      .dropDuplicates(idCol, "__sid")
-    val batchHashes = unknown.select(col(idCol), col("hashes").as("__ha"))
-    val storeDup = Dedup.withJaccardCols(cand.join(
-        if (prune) broadcast(batchHashes) else batchHashes, Seq(idCol)))
-      .filter(Dedup.jaccardAtLeast(jaccardNum, jaccardDen))
-      .select(col(idCol)).distinct()
+    val storeDup = storeNearDupIds(bb, storeBands, unknown, idCol, prune,
+        jaccardNum, jaccardDen).distinct()
       .select(col(idCol), lit("store_near_dup").as("verdict"))
     // stage 3: within-drop pairwise near-dups over the survivors — the
     // same capped candidate generation + disclosure as filterNovel
     val survivors = unknown.join(storeDup.select(col(idCol)),
       Seq(idCol), "left_anti").pin()
-    Overlap.disclosing("gate probe", "within-drop " + OverflowKind,
-      Dedup.bandOverflow(survivors, idCol, numBands, rowsPerBand)) {
-      val passing = Dedup.withJaccard(
-          Dedup.lshCandidates(survivors, idCol, numBands, rowsPerBand),
-          "doc_a", "doc_b", survivors, survivors, idCol)
-        .filter(Dedup.jaccardAtLeast(jaccardNum, jaccardDen))
-        .select(col("doc_a"), col("doc_b")).pin()
+    withinPairs(survivors, "gate probe", "drop", idCol, jaccardNum,
+        jaccardDen) { passing =>
       val batchDup = passing.select(col("doc_b").as(idCol)).distinct()
         .select(col(idCol), lit("batch_near_dup").as("verdict"))
       if (!passing.isEmpty)
@@ -341,9 +343,8 @@ object IngestDedupGate {
     }
   }
 
-  private def writeSorted(df: DataFrame, path: String, key: String,
-                          buckets: Int): Unit =
-    df.repartition(buckets, col(key)).sortWithinPartitions(key)
+  private def writeSorted(df: DataFrame, path: String, key: String): Unit =
+    df.repartition(StoreBuckets, col(key)).sortWithinPartitions(key)
       .write.parquet(path)
 
   /** Commit admitted feature rows to the store (creating it on first
@@ -356,40 +357,39 @@ object IngestDedupGate {
     * other does not.
     */
   def appendToStore(novelFeats: DataFrame, name: String,
-                    idCol: String = "doc_id", numBands: Int = 4,
-                    rowsPerBand: Int = 2, buckets: Int = 8): Unit = {
+                    idCol: String = "doc_id"): Unit = {
     val spark = novelFeats.sparkSession
     val dir = storeDir(spark, name)
     val m0 = ManifestStore.latestManifest(spark, dir)
     val v = m0.map(_.version + 1).getOrElse(1L)
     val rel = s"d-$v-${java.util.UUID.randomUUID().toString.take(8)}"
-    val bandRows = Dedup.bands(novelFeats, idCol, numBands, rowsPerBand)
+    val bandRows = Dedup.bands(novelFeats, idCol)
       .filter(col("bkey").isNotNull)
       .join(novelFeats.select(col(idCol), col("hashes")), Seq(idCol))
-    writeSorted(bandRows, s"$dir/$rel/bands", "bkey", buckets)
+    writeSorted(bandRows, s"$dir/$rel/bands", "bkey")
     writeSorted(novelFeats.select(col(idCol), col("hashes"), col("sig")),
-      s"$dir/$rel/feats", idCol, buckets)
+      s"$dir/$rel/feats", idCol)
     ManifestStore.commit(spark, dir,
       ManifestStore.Manifest(v, m0.map(_.dirs).getOrElse(Nil) :+ (v -> rel)))
   }
 
   /** Fold the per-batch version accumulation back to ONE version dir of
-    * `buckets` key-sorted files per table: reads the current pinned
+    * [[StoreBuckets]] key-sorted files per table: reads the current pinned
     * manifest, writes a fresh dir (never touching the immutable inputs),
     * commits a manifest referencing only it. A month of 5-minute batches
     * otherwise costs ~8.6k file sets per listing — run this on a
     * maintenance cadence; [[vacuumStore]] reclaims the superseded dirs.
     */
   def compactStore(spark: SparkSession, name: String,
-                   idCol: String = "doc_id", buckets: Int = 8): Unit = {
+                   idCol: String = "doc_id"): Unit = {
     val dir = storeDir(spark, name)
     ManifestStore.latestManifest(spark, dir).foreach { m0 =>
       val v = m0.version + 1
       val rel = s"d-$v-${java.util.UUID.randomUUID().toString.take(8)}"
       writeSorted(readPart(spark, dir, m0, "bands"), s"$dir/$rel/bands",
-        "bkey", buckets)
+        "bkey")
       writeSorted(readPart(spark, dir, m0, "feats"), s"$dir/$rel/feats",
-        idCol, buckets)
+        idCol)
       ManifestStore.commit(spark, dir, ManifestStore.Manifest(v, Seq(v -> rel)))
     }
   }
@@ -440,41 +440,39 @@ object IngestDedupGate {
     * idempotent per epoch.
     *
     * Maintenance cadence: `compactEvery = N` folds the store back to one
-    * version dir whenever the committed manifest references ≥ N dirs
-    * (then vacuums the superseded ones unless `vacuumAfterCompact` is
-    * off) — the self-driving answer to the per-batch version
-    * accumulation ([[compactStore]]'s ~8.6k file sets per month of
-    * 5-minute batches). Counting DIRS rather than batches makes the
-    * cadence restart-safe: a resumed query sees the store as it is, not
-    * a counter that died with the previous driver. Compaction runs
+    * version dir whenever the committed manifest references ≥ N dirs,
+    * then vacuums the superseded ones — the self-driving answer to the
+    * per-batch version accumulation ([[compactStore]]'s ~8.6k file sets
+    * per month of 5-minute batches). Counting DIRS rather than batches
+    * makes the cadence restart-safe: a resumed query sees the store as
+    * it is, not a counter that died with the previous driver. Compaction runs
     * AFTER the batch's own commit, so a crash mid-compaction leaves the
     * just-committed data fully visible; `0` disables (the default —
     * callers owning an external maintenance schedule keep it).
     */
   def gate(docs: DataFrame, name: String, checkpointDir: String,
-           idCol: String = "doc_id", textCol: String = "text", n: Int = 3,
-           numBands: Int = 4, rowsPerBand: Int = 2, jaccardNum: Int = 8,
-           jaccardDen: Int = 10, buckets: Int = 8, isinChunk: Int = 10000,
-           compactEvery: Int = 0, vacuumAfterCompact: Boolean = true)
+           idCol: String = "doc_id", textCol: String = "text",
+           jaccardNum: Int = 8, jaccardDen: Int = 10, isinChunk: Int = 10000,
+           compactEvery: Int = 0)
           (sink: (DataFrame, Long) => Unit): StreamingQuery =
     docs.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: Dataset[Row], epoch: Long) =>
         val b = batch.toDF()
         val spark = b.sparkSession
-        val novel = filterNovel(b, name, idCol, textCol, n, numBands,
-          rowsPerBand, jaccardNum, jaccardDen, isinChunk)
+        val novel = filterNovel(b, name, idCol, textCol, jaccardNum,
+          jaccardDen, isinChunk)
         sink(b.join(novel.select(col(idCol)), Seq(idCol), "left_semi"), epoch)
-        appendToStore(novel, name, idCol, numBands, rowsPerBand, buckets)
+        appendToStore(novel, name, idCol)
         if (compactEvery > 0 &&
             ManifestStore.latestManifest(spark, storeDir(spark, name))
               .exists(_.dirs.size >= compactEvery)) {
-          compactStore(spark, name, idCol, buckets)
+          compactStore(spark, name, idCol)
           // retention floor 2, not the eager 1: an external observer
           // (storeStats, a bands()/feats() probe) pinned to the
           // pre-compaction manifest must not lose its files mid-scan —
           // its dirs are reclaimed at the NEXT cadence hit instead
-          if (vacuumAfterCompact) vacuumStore(spark, name, minVersionsToKeep = 2)
+          vacuumStore(spark, name, minVersionsToKeep = 2)
         }
       }
       .start()

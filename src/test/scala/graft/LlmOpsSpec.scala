@@ -191,7 +191,9 @@ class LlmOpsSpec extends SparkSuite {
     // the single audit is literally its grid row
     val single = Dedup.lshRecallAudit(docs, sampleFraction = 1.0)
       .collect().head
-    val row42 = lg.find(r => lcol(r, "num_bands") == 4L).get
+    val row42 = lg.find(r =>
+      lcol(r, "num_bands") == Dedup.NumBands &&
+        lcol(r, "rows_per_band") == Dedup.RowsPerBand).get
     assert(single.toSeq ==
       row42.toSeq.drop(2), s"$single vs $row42")
 

@@ -19,11 +19,13 @@ import org.scalatest.funsuite.AnyFunSuite
   * else fails it. Word n-grams come from graft.functions.WordGrams (or
   * another Words-based pass): a `split(` inside the lambda of a
   * `transform(sequence(` call, which re-splits the text for every
-  * element, fails it. Exemptions:
+  * element, fails it. The near-dup band layout is graft.ext.Dedup's
+  * alone: a parameter named `numBands` or `rowsPerBand` declared
+  * anywhere else fails it. Exemptions:
   *
-  *  - queries/LlmOracle.scala keeps its own moduli and its own word
-  *    splits: its DuckDB replay text is the independent oracle the
-  *    engine is checked against;
+  *  - queries/LlmOracle.scala keeps its own moduli, its own word splits
+  *    and its own band-layout parameters: its DuckDB replay text is the
+  *    independent oracle the engine is checked against;
   *  - functions/C4Stats.scala and functions/CharTrigramTfs.scala compare
   *    bytes to 0x20 for other rules: C4's line filter counts NON-EMPTY
   *    words, and the trigram pass rewrites spaces to '_';
@@ -60,6 +62,7 @@ class RuleLintSpec extends AnyFunSuite {
   private val FrameWriter = """\.write\b(?!\s*\()|\.writeTo\(""".r
   private val Rename = """(?i)\bRENAME\s+TO\b""".r
   private val TransformSeq = """\btransform\(\s*sequence\(""".r
+  private val BandParam = """\b(numBands|rowsPerBand)\s*:""".r
 
   /** Offset just past the paren that closes the one at `open`. */
   private def closing(src: String, open: Int): Int = {
@@ -143,5 +146,15 @@ class RuleLintSpec extends AnyFunSuite {
       }
     }
     assert(found == Nil)
+  }
+
+  test("numBands/rowsPerBand parameters are declared only in Dedup: one near-dup layout") {
+    assert(BandParam.findFirstIn("def f(df: DataFrame, numBands: Int = 4,").isDefined)
+    assert(BandParam.findFirstIn("    rowsPerBand: Int): DataFrame =").isDefined)
+    assert(BandParam.findFirstIn("g(numBands = numBands, Dedup.RowsPerBand)").isEmpty)
+    // the oracle's exemption is live
+    assert(BandParam.findFirstIn(sources("graft/queries/LlmOracle.scala")).isDefined)
+    assert(offenders(BandParam, Set("graft/ext/Dedup.scala",
+      "graft/queries/LlmOracle.scala")) == Nil)
   }
 }
