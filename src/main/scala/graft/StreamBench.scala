@@ -131,7 +131,7 @@ object StreamBench {
     graft.streaming.ManifestStore.seed(
       (0 until 20).map(i => (i, s"crawler$i", if (i % 4 == 0) "low" else "high"))
         .toDF("source_id", "source_name", "trust"),
-      "source_id", dimDir)
+      dimDir)
 
     def mkDocs(b: Int, size: Int): Seq[(Long, String, Int)] =
       (0 until size).map { i =>

@@ -129,13 +129,6 @@ object Multimodal {
       (nBytes % 32 + 1).as("n_frames"))
   }
 
-  /** Resize stub: real impls transform payload bytes; the stub tags the
-    * target dims while preserving the media contract.
-    */
-  def resizeStub(media: DataFrame, w: Int, h: Int): DataFrame =
-    media.withColumn("media_type",
-      concat(col("media_type"), lit(s";resized=${w}x$h")))
-
   /** Frame sampling: one output row per sampled frame index — the
     * video→training-examples explode shape. Frame count comes from the
     * decode stub (n_frames); a real decoder swaps in actual frame

@@ -3,7 +3,6 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
 
 /** Event-stream product analytics over the corpus `events` shape
   * (key, type, timestamp): ordered funnels and cohort retention — the
@@ -79,11 +78,7 @@ object EventAnalytics {
     */
   def cohortRetention(events: DataFrame, keyCol: String = "user_id",
                       tsCol: String = "ts"): DataFrame = {
-    val t: Column = events.schema(tsCol).dataType match {
-      case TimestampType    => unix_micros(col(tsCol))
-      case TimestampNTZType => unix_micros(col(tsCol).cast(TimestampType))
-      case _                => col(tsCol).cast("long")
-    }
+    val t = TemporalJoins.toMicros(col(tsCol), events.schema(tsCol).dataType)
     val days = events.filter(col(tsCol).isNotNull)
       .select(col(keyCol), t.as("__cr_us"))
       .withColumn("__cr_day", epochDayExpr("__cr_us"))
@@ -125,11 +120,7 @@ object EventAnalytics {
                        idCol: String = "event_id"): DataFrame = {
     require(horizonMicros > 0,
       s"horizonMicros must be positive, got $horizonMicros")
-    val t: Column = events.schema(tsCol).dataType match {
-      case TimestampType    => unix_micros(col(tsCol))
-      case TimestampNTZType => unix_micros(col(tsCol).cast(TimestampType))
-      case _                => col(tsCol).cast("long")
-    }
+    val t = TemporalJoins.toMicros(col(tsCol), events.schema(tsCol).dataType)
     val base = events
       .filter(col(keyCol).isNotNull && col(tsCol).isNotNull &&
         col(typeCol).isNotNull)
@@ -195,11 +186,7 @@ object EventAnalytics {
                     keyCol: String = "user_id",
                     tsCol: String = "ts"): DataFrame = {
     require(windowDays > 0, s"windowDays must be positive, got $windowDays")
-    val t: Column = events.schema(tsCol).dataType match {
-      case TimestampType    => unix_micros(col(tsCol))
-      case TimestampNTZType => unix_micros(col(tsCol).cast(TimestampType))
-      case _                => col(tsCol).cast("long")
-    }
+    val t = TemporalJoins.toMicros(col(tsCol), events.schema(tsCol).dataType)
     val days = events
       .filter(col(tsCol).isNotNull && col(keyCol).isNotNull)
       .select(col(keyCol), t.as("__ra_us"))
@@ -291,11 +278,7 @@ object EventAnalytics {
       s"funnelLatency needs at least two steps, got ${steps.length}")
     require(steps.distinct.size == steps.size,
       s"duplicate step in $steps — a repeated type is ambiguous")
-    val t: Column = events.schema(tsCol).dataType match {
-      case TimestampType    => unix_micros(col(tsCol))
-      case TimestampNTZType => unix_micros(col(tsCol).cast(TimestampType))
-      case _                => col(tsCol).cast("long")
-    }
+    val t = TemporalJoins.toMicros(col(tsCol), events.schema(tsCol).dataType)
     val w = Window.partitionBy(keyCol)
     // null keys excluded for the same reason as funnelDepth: one pooled
     // window partition would convert across unrelated events and emit

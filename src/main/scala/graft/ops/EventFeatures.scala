@@ -1,9 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
 import graft.core.Pin._
 
 /** Per-key temporal FEATURE derivation over an event log — the
@@ -73,11 +72,7 @@ object EventFeatures {
                                timeCol: String,
                                binMicros: Long): DataFrame = {
     require(binMicros > 0, s"binMicros must be positive, got $binMicros")
-    val t: Column = events.schema(timeCol).dataType match {
-      case TimestampType    => unix_micros(col(timeCol))
-      case TimestampNTZType => unix_micros(col(timeCol).cast(TimestampType))
-      case _                => col(timeCol).cast("long")
-    }
+    val t = TemporalJoins.toMicros(col(timeCol), events.schema(timeCol).dataType)
     events
       .filter(col(key).isNotNull && col(timeCol).isNotNull)
       .withColumn("__ef_t", t)
@@ -135,11 +130,7 @@ object EventFeatures {
     require(reserved.isEmpty,
       s"column(s) ${reserved.mkString(", ")} collide with lagFeatures " +
         "outputs / reserved prefix '__ef_' — rename before deriving")
-    val t: Column = events.schema(timeCol).dataType match {
-      case TimestampType    => unix_micros(col(timeCol))
-      case TimestampNTZType => unix_micros(col(timeCol).cast(TimestampType))
-      case _                => col(timeCol).cast("long")
-    }
+    val t = TemporalJoins.toMicros(col(timeCol), events.schema(timeCol).dataType)
     // the validity flag is part of the PARTITIONING, not just an output
     // mask: a null-time row sorted into its key's timeline would shift
     // every seq and leak its value into a lag — isolating invalid rows
@@ -204,11 +195,7 @@ object EventFeatures {
                          typeCol: String = "event_type",
                          sessionGap: Long = 300L * 1000000L): DataFrame = {
     val typed = events.filter(col(typeCol).isNotNull)
-    val t: Column = events.schema(timeCol).dataType match {
-      case TimestampType    => unix_micros(col(timeCol))
-      case TimestampNTZType => unix_micros(col(timeCol).cast(TimestampType))
-      case _                => col(timeCol).cast("long")
-    }
+    val t = TemporalJoins.toMicros(col(timeCol), events.schema(timeCol).dataType)
     lagFeatures(typed, keys, timeCol, idCol, typeCol, sessionGap)
       .filter(col("session_idx").isNotNull)
       .withColumn("__st_turn",
@@ -224,11 +211,7 @@ object EventFeatures {
                    timeCol: String = "ts", idCol: String = "event_id",
                    valueCol: String = "value",
                    sessionGap: Long = 300L * 1000000L): DataFrame = {
-    val t: Column = events.schema(timeCol).dataType match {
-      case TimestampType    => unix_micros(col(timeCol))
-      case TimestampNTZType => unix_micros(col(timeCol).cast(TimestampType))
-      case _                => col(timeCol).cast("long")
-    }
+    val t = TemporalJoins.toMicros(col(timeCol), events.schema(timeCol).dataType)
     lagFeatures(events, keys, timeCol, idCol, valueCol, sessionGap)
       .filter(col("session_idx").isNotNull)
       .withColumn("__ss_us", t)

@@ -60,8 +60,10 @@ object TemporalJoins {
     * bit-identical reinterpretation of the stored micros, and
     * `unix_micros` on raw NTZ is an analysis error. Numeric time
     * columns pass through in their own units (documented contract).
+    * The engine's one event-time rule: every event operator, batch and
+    * streaming, reads its time column through it.
     */
-  private def toMicros(c: Column, dt: DataType): Column = dt match {
+  private[graft] def toMicros(c: Column, dt: DataType): Column = dt match {
     case TimestampType    => unix_micros(c)
     case TimestampNTZType => unix_micros(c.cast(TimestampType))
     case _                => c.cast("long")

@@ -1,10 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Row}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 import org.apache.spark.sql.types._
 import graft.core.Pin._
+import graft.ops.TemporalJoins
 
 /** STREAMING complements of [[graft.ops.EventFeatures]] — the same
   * per-key temporal features, derived incrementally as events ingest
@@ -36,6 +37,28 @@ import graft.core.Pin._
   */
 object EventFeatureStream {
 
+  /** The batch operators' (time, id) tiebreak on the id, for whatever id
+    * type the log carries — by value, as Spark's native sort orders the
+    * common orderable types (nulls first, the ASC default). Every
+    * stateful stage below orders its in-batch events with it, so a
+    * stream's same-time events come out in the batch operator's order.
+    */
+  private def cmpId(a: Any, b: Any): Int = (a, b) match {
+    case (null, null)             => 0
+    case (null, _)                => -1
+    case (_, null)                => 1
+    case (x: Long, y: Long)       => java.lang.Long.compare(x, y)
+    case (x: Int, y: Int)         => java.lang.Integer.compare(x, y)
+    case (x: Short, y: Short)     => java.lang.Short.compare(x, y)
+    case (x: Byte, y: Byte)       => java.lang.Byte.compare(x, y)
+    case (x: Double, y: Double)   => java.lang.Double.compare(x, y)
+    case (x: Float, y: Float)     => java.lang.Float.compare(x, y)
+    case (x: String, y: String)   => x.compareTo(y)
+    case (x: java.sql.Timestamp, y: java.sql.Timestamp) => x.compareTo(y)
+    case (x: java.math.BigDecimal, y: java.math.BigDecimal) => x.compareTo(y)
+    case (x, y)                   => x.toString.compareTo(y.toString)
+  }
+
   /** Per-key lag/gap/seq/session features over a streaming DataFrame —
     * output schema = input columns + (`seq`, `prev_value`,
     * `gap_micros`, `session_idx`), identical to
@@ -62,11 +85,7 @@ object EventFeatureStream {
     require(reserved.isEmpty,
       s"column(s) ${reserved.mkString(", ")} collide with lagFeatures " +
         "outputs / reserved prefix '__ef_' — rename before deriving")
-    val t: Column = events.schema(timeCol).dataType match {
-      case TimestampType    => unix_micros(col(timeCol))
-      case TimestampNTZType => unix_micros(col(timeCol).cast(TimestampType))
-      case _                => col(timeCol).cast("long")
-    }
+    val t = TemporalJoins.toMicros(col(timeCol), events.schema(timeCol).dataType)
     val valueType = events.schema(valueCol).dataType
     val withT = events.withColumn("__ef_t", t)
     val inSchema = withT.schema
@@ -93,24 +112,6 @@ object EventFeatureStream {
     val keyEnc = Encoders.row(keySchema)
     val stateEnc = Encoders.row(stateSchema)
     val outEnc = Encoders.row(outSchema)
-
-    // the batch operator's (time, id) tiebreak, applied to whatever id
-    // type the log carries — matching Spark's native sort for the
-    // common orderable types
-    def cmpId(a: Any, b: Any): Int = (a, b) match {
-      case (null, null)             => 0
-      case (null, _)                => -1 // nulls first, Spark ASC default
-      case (_, null)                => 1
-      case (x: Long, y: Long)       => java.lang.Long.compare(x, y)
-      case (x: Int, y: Int)         => java.lang.Integer.compare(x, y)
-      case (x: Short, y: Short)     => java.lang.Short.compare(x, y)
-      case (x: Double, y: Double)   => java.lang.Double.compare(x, y)
-      case (x: Float, y: Float)     => java.lang.Float.compare(x, y)
-      case (x: String, y: String)   => x.compareTo(y)
-      case (x: java.sql.Timestamp, y: java.sql.Timestamp) => x.compareTo(y)
-      case (x: java.math.BigDecimal, y: java.math.BigDecimal) => x.compareTo(y)
-      case (x, y)                   => x.toString.compareTo(y.toString)
-    }
 
     def emit(row: Row, seq: Any, prev: Any, gap: Any, sess: Any): Row =
       Row.fromSeq(
@@ -183,11 +184,7 @@ object EventFeatureStream {
     require(steps.distinct.size == steps.size,
       s"duplicate step in $steps — a repeated type is ambiguous")
     require(keys.nonEmpty, "funnelDepth needs at least one key column")
-    val t: Column = events.schema(timeCol).dataType match {
-      case TimestampType    => unix_micros(col(timeCol))
-      case TimestampNTZType => unix_micros(col(timeCol).cast(TimestampType))
-      case _                => col(timeCol).cast("long")
-    }
+    val t = TemporalJoins.toMicros(col(timeCol), events.schema(timeCol).dataType)
     val withT = events.withColumn("__ef_t", t)
     val inSchema = withT.schema
     val tIdx = inSchema.fieldIndex("__ef_t")
@@ -204,16 +201,6 @@ object EventFeatureStream {
     val keyEnc = Encoders.row(keySchema)
     val stateEnc = Encoders.row(stateSchema)
     val outEnc = Encoders.row(outSchema)
-
-    def cmpId(a: Any, b: Any): Int = (a, b) match {
-      case (null, null)           => 0
-      case (null, _)              => -1
-      case (_, null)              => 1
-      case (x: Long, y: Long)     => java.lang.Long.compare(x, y)
-      case (x: Int, y: Int)       => java.lang.Integer.compare(x, y)
-      case (x: String, y: String) => x.compareTo(y)
-      case (x, y)                 => x.toString.compareTo(y.toString)
-    }
 
     def fn(key: Row, it: Iterator[Row], state: GroupState[Row]): Iterator[Row] = {
       val keyNull = (0 until key.size).exists(key.isNullAt)
@@ -312,11 +299,7 @@ object EventFeatureStream {
     require(tombstoneTtlMs <= 0 || tombstoneTtlMs >= timeoutMs,
       s"tombstoneTtlMs ($tombstoneTtlMs) must be >= timeoutMs ($timeoutMs): " +
         "a tombstone outliving its session's idle window is the point")
-    val t: Column = events.schema(timeCol).dataType match {
-      case TimestampType    => unix_micros(col(timeCol))
-      case TimestampNTZType => unix_micros(col(timeCol).cast(TimestampType))
-      case _                => col(timeCol).cast("long")
-    }
+    val t = TemporalJoins.toMicros(col(timeCol), events.schema(timeCol).dataType)
     val withT = events.withColumn("__ef_t", t)
     val inSchema = withT.schema
     val tIdx = inSchema.fieldIndex("__ef_t")
@@ -337,16 +320,6 @@ object EventFeatureStream {
     val keyEnc = Encoders.row(keySchema)
     val stateEnc = Encoders.row(stateSchema)
     val outEnc = Encoders.row(outSchema)
-
-    def cmpId(a: Any, b: Any): Int = (a, b) match {
-      case (null, null)           => 0
-      case (null, _)              => -1
-      case (_, null)              => 1
-      case (x: Long, y: Long)     => java.lang.Long.compare(x, y)
-      case (x: Int, y: Int)       => java.lang.Integer.compare(x, y)
-      case (x: String, y: String) => x.compareTo(y)
-      case (x, y)                 => x.toString.compareTo(y.toString)
-    }
 
     def sessionRow(key: Row, sess: Long, turns: Seq[String]): Row =
       Row.fromSeq((0 until key.size).map(key.get) ++
@@ -455,8 +428,9 @@ object EventFeatureStream {
     * touched-key predicate into the version-dir parquet scans — batch
     * cost tracks the touched keys' history, not total store size)
     * followed by the shared flag arithmetic on bins. `compactEvery`
-    * folds the store's version dirs on the [[IngestDedupGate.gate]]
-    * cadence so file counts stay bounded on a long-running stream.
+    * folds the store's version dirs on the store's one cadence
+    * ([[ManifestStore.compactOnCadence]]) so file counts stay bounded
+    * on a long-running stream.
     */
   def rateAnomalies(events: DataFrame, storeDir: String,
                     checkpointDir: String, key: String = "user_id",
@@ -485,9 +459,7 @@ object EventFeatureStream {
             concat_ws(Sep, col(key), col("bin_start_us"), lit(epoch))
               .as("bin_key"),
             col(key), col("bin_start_us"), col("n_events"))
-          if (ManifestStore.latestManifest(spark, storeDir).isEmpty)
-            ManifestStore.seed(rows, "bin_key", storeDir)
-          else ManifestStore.upsert(rows, "bin_key", storeDir)
+          ManifestStore.upsert(rows, storeDir)
           // full history of the touched keys only — pruned below the
           // version window (safe: `key` is embedded in the row key, so
           // the predicate is version-invariant)
@@ -497,12 +469,8 @@ object EventFeatureStream {
             .agg(sum(col("n_events")).as("n_events"))
             .pin() // the flag helper reads it twice
           sink(graft.ops.EventFeatures.flagBins(hist, key, factorX100), epoch)
-          if (compactEvery > 0 &&
-              ManifestStore.latestManifest(spark, storeDir)
-                .exists(_.dirs.size >= compactEvery)) {
-            ManifestStore.compact(spark, storeDir, "bin_key")
-            ManifestStore.vacuum(spark, storeDir, minVersionsToKeep = 2)
-          }
+          ManifestStore.compactOnCadence(spark, storeDir, compactEvery)(
+            ManifestStore.compact(spark, storeDir, "bin_key"))
         } else sink(
           graft.ops.EventFeatures.flagBins(
             bins.withColumn("bin_start_us", col("bin_start_us").cast("long")),

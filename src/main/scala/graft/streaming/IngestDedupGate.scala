@@ -33,13 +33,13 @@ import graft.ext.Dedup
   * batch-size × collisions, never with store size. Band keys use
   * [[Dedup]]'s one fixed layout, so every writer and reader agree.
   *
-  * Delivery contract (same as [[ChangelogDim.joinEachBatch]]): the sink
+  * Delivery contract (same as [[ManifestStore.joinEachBatch]]): the sink
   * runs BEFORE the store commit, so a crash between them replays the
   * batch — the sink must be idempotent per epoch (at-least-once); the
   * store commit itself is replay-safe, because a replayed document
   * matches its own stored signature (Jaccard 1) and is dropped before
   * a second commit, and a half-written uncommitted version dir is
-  * invisible (reclaimed by [[vacuumStore]] once its version is no
+  * invisible (reclaimed by [[ManifestStore.vacuum]] once its version is no
   * longer ahead of the committed head).
   */
 object IngestDedupGate {
@@ -350,27 +350,24 @@ object IngestDedupGate {
   /** Commit admitted feature rows to the store (creating it on first
     * use): ONE new immutable version dir holding both the band rows
     * (with hashes attached) and the signature rows, published by a
-    * single atomic manifest commit ([[ManifestStore.commit]] — hard
-    * link on POSIX, create-if-absent rename on HDFS). A crash anywhere
-    * before the commit leaves an unreferenced dir that no reader ever
-    * sees; there is no state where one table has the batch and the
-    * other does not.
+    * single atomic manifest commit ([[ManifestStore.commitVersion]] —
+    * hard link on POSIX, create-if-absent rename on HDFS). A crash
+    * anywhere before the commit leaves an unreferenced dir that no
+    * reader ever sees; there is no state where one table has the batch
+    * and the other does not.
     */
   def appendToStore(novelFeats: DataFrame, name: String,
                     idCol: String = "doc_id"): Unit = {
     val spark = novelFeats.sparkSession
-    val dir = storeDir(spark, name)
-    val m0 = ManifestStore.latestManifest(spark, dir)
-    val v = m0.map(_.version + 1).getOrElse(1L)
-    val rel = s"d-$v-${java.util.UUID.randomUUID().toString.take(8)}"
     val bandRows = Dedup.bands(novelFeats, idCol)
       .filter(col("bkey").isNotNull)
       .join(novelFeats.select(col(idCol), col("hashes")), Seq(idCol))
-    writeSorted(bandRows, s"$dir/$rel/bands", "bkey")
-    writeSorted(novelFeats.select(col(idCol), col("hashes"), col("sig")),
-      s"$dir/$rel/feats", idCol)
-    ManifestStore.commit(spark, dir,
-      ManifestStore.Manifest(v, m0.map(_.dirs).getOrElse(Nil) :+ (v -> rel)))
+    ManifestStore.commitVersion(spark, storeDir(spark, name),
+        replace = false) { (_, path) =>
+      writeSorted(bandRows, s"$path/bands", "bkey")
+      writeSorted(novelFeats.select(col(idCol), col("hashes"), col("sig")),
+        s"$path/feats", idCol)
+    }
   }
 
   /** Fold the per-batch version accumulation back to ONE version dir of
@@ -378,33 +375,23 @@ object IngestDedupGate {
     * manifest, writes a fresh dir (never touching the immutable inputs),
     * commits a manifest referencing only it. A month of 5-minute batches
     * otherwise costs ~8.6k file sets per listing — run this on a
-    * maintenance cadence; [[vacuumStore]] reclaims the superseded dirs.
+    * maintenance cadence; [[ManifestStore.vacuum]] over [[storeDir]]
+    * reclaims the superseded dirs.
     */
   def compactStore(spark: SparkSession, name: String,
                    idCol: String = "doc_id"): Unit = {
     val dir = storeDir(spark, name)
-    ManifestStore.latestManifest(spark, dir).foreach { m0 =>
-      val v = m0.version + 1
-      val rel = s"d-$v-${java.util.UUID.randomUUID().toString.take(8)}"
-      writeSorted(readPart(spark, dir, m0, "bands"), s"$dir/$rel/bands",
-        "bkey")
-      writeSorted(readPart(spark, dir, m0, "feats"), s"$dir/$rel/feats",
-        idCol)
-      ManifestStore.commit(spark, dir, ManifestStore.Manifest(v, Seq(v -> rel)))
+    ManifestStore.commitVersion(spark, dir, replace = true) { (m0, path) =>
+      writeSorted(readPart(spark, dir, m0, "bands"), s"$path/bands", "bkey")
+      writeSorted(readPart(spark, dir, m0, "feats"), s"$path/feats", idCol)
     }
   }
-
-  /** Reclaim superseded version dirs — [[ManifestStore.vacuum]] with its
-    * retention floor and in-flight-writer guard, over this store's dir.
-    */
-  def vacuumStore(spark: SparkSession, name: String,
-                  minVersionsToKeep: Int = 1): Unit =
-    ManifestStore.vacuum(spark, storeDir(spark, name), minVersionsToKeep)
 
   /** Operational snapshot of the store: committed version, version-dir
     * count and per-table parquet file/byte totals — the numbers an
     * operator watches to judge whether the maintenance cadence
-    * (`compactEvery`, [[compactStore]]/[[vacuumStore]]) is keeping up.
+    * (`compactEvery`, [[compactStore]]/[[ManifestStore.vacuum]]) is
+    * keeping up.
     * LISTING-ONLY on the pinned manifest's dirs: no data is read, so
     * the probe costs the same at 100 TB as at 100 rows.
     */
@@ -440,15 +427,11 @@ object IngestDedupGate {
     * idempotent per epoch.
     *
     * Maintenance cadence: `compactEvery = N` folds the store back to one
-    * version dir whenever the committed manifest references ≥ N dirs,
-    * then vacuums the superseded ones — the self-driving answer to the
-    * per-batch version accumulation ([[compactStore]]'s ~8.6k file sets
-    * per month of 5-minute batches). Counting DIRS rather than batches
-    * makes the cadence restart-safe: a resumed query sees the store as
-    * it is, not a counter that died with the previous driver. Compaction runs
-    * AFTER the batch's own commit, so a crash mid-compaction leaves the
-    * just-committed data fully visible; `0` disables (the default —
-    * callers owning an external maintenance schedule keep it).
+    * version dir with [[compactStore]] on the
+    * [[ManifestStore.compactOnCadence]] trigger — the self-driving
+    * answer to the per-batch version accumulation (~8.6k file sets per
+    * month of 5-minute batches); `0` disables (the default — callers
+    * owning an external maintenance schedule keep it).
     */
   def gate(docs: DataFrame, name: String, checkpointDir: String,
            idCol: String = "doc_id", textCol: String = "text",
@@ -464,16 +447,8 @@ object IngestDedupGate {
           jaccardDen, isinChunk)
         sink(b.join(novel.select(col(idCol)), Seq(idCol), "left_semi"), epoch)
         appendToStore(novel, name, idCol)
-        if (compactEvery > 0 &&
-            ManifestStore.latestManifest(spark, storeDir(spark, name))
-              .exists(_.dirs.size >= compactEvery)) {
-          compactStore(spark, name, idCol)
-          // retention floor 2, not the eager 1: an external observer
-          // (storeStats, a bands()/feats() probe) pinned to the
-          // pre-compaction manifest must not lose its files mid-scan —
-          // its dirs are reclaimed at the NEXT cadence hit instead
-          vacuumStore(spark, name, minVersionsToKeep = 2)
-        }
+        ManifestStore.compactOnCadence(spark, storeDir(spark, name),
+          compactEvery)(compactStore(spark, name, idCol))
       }
       .start()
 }

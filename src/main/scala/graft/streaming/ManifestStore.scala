@@ -2,30 +2,36 @@ package graft.streaming
 
 import java.nio.charset.StandardCharsets
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import graft.tables.LatestByKey
 
-/** Transactional dim store: the atomic-manifest answer to the
-  * documented raw-parquet caveat in [[ChangelogDim]] (a reader listing
-  * files exactly while a dynamic partition overwrite replaces them can
-  * see missing files). Same idea Delta/Iceberg commit logs are built
-  * on, reduced to the piece the dim-store seam needs:
+/** The engine's one versioned store. The dim-store seams ([[maintain]] /
+  * [[maintainCdc]] / [[joinEachBatch]]: a ksqlDB TABLE fed by a change
+  * stream and joined live into an enrichment query, the reference's
+  * signature probe — UPDATE a customer and the running join sees it on
+  * its next batch, README.md:201–210) and every derived store
+  * (PreferenceStream, EventFeatureStream, CurationStream, the
+  * [[IngestDedupGate]] signature store) commit through it. Same idea
+  * Delta/Iceberg commit logs are built on, reduced to the piece those
+  * seams need:
   *
   *  - data lives in IMMUTABLE version directories `d-<v>-<uuid>/`; a
   *    committed file is never modified or deleted by a writer;
-  *  - each commit writes `_manifest.<v>.txt` (the full list of live
-  *    version dirs) to a temp name and atomically PUBLISHES it —
-  *    create-if-absent rename on HDFS-semantics filesystems, hard link
-  *    on POSIX ones (where rename(2) would silently replace a racing
-  *    winner); a half-written manifest is invisible because it only
-  *    exists under the temp name;
+  *  - [[commitVersion]] is the one place a version is allocated, its dir
+  *    named and its manifest published; each commit writes
+  *    `_manifest.<v>.txt` (the full list of live version dirs) to a temp
+  *    name and atomically PUBLISHES it — create-if-absent rename on
+  *    HDFS-semantics filesystems, hard link on POSIX ones (where
+  *    rename(2) would silently replace a racing winner); a half-written
+  *    manifest is invisible because it only exists under the temp name;
   *  - readers pin the highest committed manifest at plan time and read
   *    exactly its files — a concurrent upsert commits a NEW version and
   *    never perturbs the pinned one (snapshot isolation for the
-  *    micro-batch join);
+  *    micro-batch join; a raw-parquet dynamic partition overwrite, by
+  *    contrast, deletes files a pinned listing still names);
   *  - merge-on-read: each version dir holds at most one row per key
   *    (the LatestByKey contract); the read view keeps each key's row
   *    from the highest version and drops tombstones (`__op = 'd'`).
@@ -34,7 +40,8 @@ import graft.tables.LatestByKey
   *    knob: `minVersionsToKeep` manifests stay readable for pinned
   *    readers, and a dir whose version is ahead of the latest commit is
   *    treated as the single writer's in-flight commit and never
-  *    deleted).
+  *    deleted); [[compactOnCadence]] is every maintainer's one trigger
+  *    for the two.
   *
   * Single-writer (one maintaining stream), many-reader — the dim-store
   * topology. A concurrent second writer loses the manifest rename race
@@ -78,6 +85,10 @@ object ManifestStore {
     else Some(readManifest(spark, dir, versions.max))
   }
 
+  /** Publish manifest `m`, failing if its version is already committed.
+    * Only [[commitVersion]] calls it; it is package-visible so a spec
+    * can drive the two-writer race directly.
+    */
   private[graft] def commit(spark: SparkSession, dir: String, m: Manifest): Unit = {
     val fs = hfs(spark, dir)
     val body = m.dirs.map { case (v, rel) => s"$v\t$rel" }.mkString("\n")
@@ -112,31 +123,59 @@ object ManifestStore {
     }
   }
 
+  /** Version dir names are `d-<version>-<uuid8>`: [[commitVersion]]
+    * writes them, [[vacuum]] parses the version back for its in-flight
+    * guard.
+    */
+  private val DataDirName = """d-(\d+)-.*""".r
+
+  /** The store's one version commit. Allocates version head + 1 and its
+    * immutable dir, lets `write(head, path)` fill the dir, then publishes
+    * the manifest: the head's dirs plus the new one, or — `replace`, a
+    * compaction — the new dir alone. The dir is written BEFORE any
+    * manifest names it, so a crash in between leaves an unreferenced
+    * dir no reader sees (and [[vacuum]] spares while its version is
+    * ahead of the head). With no commit yet the head is version 0 with
+    * no dirs, and a `replace` is a no-op.
+    */
+  private[streaming] def commitVersion(spark: SparkSession, dir: String,
+                                       replace: Boolean)
+                                      (write: (Manifest, String) => Unit): Unit = {
+    val head = latestManifest(spark, dir)
+    if (!replace || head.nonEmpty) {
+      val m0 = head.getOrElse(Manifest(0L, Nil))
+      val v = m0.version + 1
+      val rel = s"d-$v-${java.util.UUID.randomUUID().toString.take(8)}"
+      write(m0, s"$dir/$rel")
+      commit(spark, dir,
+        Manifest(v, (if (replace) Nil else m0.dirs) :+ (v -> rel)))
+    }
+  }
+
   /** Commit one change batch as a new version. `latest` must carry at
     * most one row per key (the [[LatestByKey]] contract) and an `__op`
     * column ('d' rows are tombstones, anything else upserts); plain
     * upsert batches go through [[upsert]], which adds `__op = 'u'`.
     */
-  def applyChanges(latest: DataFrame, key: String, dir: String): Unit = {
+  def applyChanges(latest: DataFrame, dir: String): Unit = {
     require(latest.columns.contains("__op"),
       "applyChanges needs an __op column; use upsert() for plain upserts")
-    val spark = latest.sparkSession
-    val m0 = latestManifest(spark, dir)
-    val v = m0.map(_.version + 1).getOrElse(1L)
-    val rel = s"d-$v-${java.util.UUID.randomUUID().toString.take(8)}"
-    latest.write.parquet(s"$dir/$rel")
-    commit(spark, dir, Manifest(v, m0.map(_.dirs).getOrElse(Nil) :+ (v -> rel)))
+    commitVersion(latest.sparkSession, dir, replace = false) { (_, path) =>
+      latest.write.parquet(path)
+    }
   }
 
-  /** Upsert-only change batch (no tombstones). */
-  def upsert(latest: DataFrame, key: String, dir: String): Unit =
-    applyChanges(latest.withColumn("__op", lit("u")), key, dir)
+  /** Upsert-only change batch (no tombstones); the first one creates the
+    * store.
+    */
+  def upsert(latest: DataFrame, dir: String): Unit =
+    applyChanges(latest.withColumn("__op", lit("u")), dir)
 
   /** Seed the store with its initial table state as version 1. */
-  def seed(initial: DataFrame, key: String, dir: String): Unit = {
+  def seed(initial: DataFrame, dir: String): Unit = {
     require(latestManifest(initial.sparkSession, dir).isEmpty,
       s"store under $dir already has committed versions")
-    upsert(initial, key, dir)
+    upsert(initial, dir)
   }
 
   /** The current merged view: pins the highest committed manifest at
@@ -158,7 +197,7 @@ object ManifestStore {
     * resurrect an older version of a row whose latest version fails it.
     */
   def readWhere(spark: SparkSession, dir: String, key: String,
-                pred: org.apache.spark.sql.Column): DataFrame =
+                pred: Column): DataFrame =
     readWherePruned(spark, dir, key, _.filter(pred))
 
   /** [[readWhere]] generalized to a scan-level PRUNING FUNCTION: `prune`
@@ -171,9 +210,16 @@ object ManifestStore {
     * must keep or drop ALL versions of a key's rows together.
     */
   def readWherePruned(spark: SparkSession, dir: String, key: String,
-                      prune: DataFrame => DataFrame): DataFrame = {
-    val m = latestManifest(spark, dir).getOrElse(
-      throw new IllegalStateException(s"no committed version under $dir — seed() first"))
+                      prune: DataFrame => DataFrame): DataFrame =
+    merged(spark, dir, latestManifest(spark, dir).getOrElse(
+      throw new IllegalStateException(s"no committed version under $dir — seed() first")),
+      key, prune)
+
+  /** The merged view of manifest `m`'s dirs, `prune` applied below the
+    * latest-version window.
+    */
+  private def merged(spark: SparkSession, dir: String, m: Manifest,
+                     key: String, prune: DataFrame => DataFrame): DataFrame = {
     // allowMissingColumns: version dirs may differ in columns (e.g. a
     // maintain stream carrying its version-ts column over a seed that
     // lacked it) — absent columns read as null, dim-store schema drift
@@ -191,15 +237,11 @@ object ManifestStore {
     * back to one file set). Old dirs stay on disk for pinned readers
     * until [[vacuum]].
     */
-  def compact(spark: SparkSession, dir: String, key: String): Unit = {
-    val m0 = latestManifest(spark, dir).getOrElse(return)
-    val v = m0.version + 1
-    val rel = s"d-$v-${java.util.UUID.randomUUID().toString.take(8)}"
-    read(spark, dir, key).withColumn("__op", lit("u")).write.parquet(s"$dir/$rel")
-    commit(spark, dir, Manifest(v, Seq(v -> rel)))
-  }
-
-  private val DataDirName = """d-(\d+)-.*""".r
+  def compact(spark: SparkSession, dir: String, key: String): Unit =
+    commitVersion(spark, dir, replace = true) { (m0, path) =>
+      merged(spark, dir, m0, key, identity).withColumn("__op", lit("u"))
+        .write.parquet(path)
+    }
 
   /** Delete data dirs and manifests referenced by none of the newest
     * `minVersionsToKeep` committed manifests. Two safety rules:
@@ -211,7 +253,7 @@ object ManifestStore {
     *    loses its files"). The floor is a hard guard, not advice:
     *    vacuum(1) is the only setting that reclaims eagerly, and then
     *    only a quiesced-reader cadence makes it safe.
-    *  - IN-FLIGHT WRITER: [[applyChanges]] writes its version dir
+    *  - IN-FLIGHT WRITER: [[commitVersion]] writes its version dir
     *    BEFORE committing the manifest, so a dir whose encoded version
     *    exceeds the latest committed version may be a commit in flight —
     *    never deleted (a vacuum racing the single writer would
@@ -241,57 +283,89 @@ object ManifestStore {
     }
   }
 
-  /** Self-driving maintenance cadence for the streaming maintainers —
-    * the same dirs-count trigger as [[IngestDedupGate.gate]]'s
-    * `compactEvery` (restart-safe: reads the store, not a counter).
-    * `vacuumKeep` defaults to 2, the retention floor [[vacuum]]'s doc
-    * prescribes for concurrent pinned readers: a [[joinEachBatch]]
-    * micro-batch one commit behind never loses its files; `0` skips
-    * vacuuming entirely.
+  /** Retention floor of [[compactOnCadence]]'s vacuum: a reader pinned
+    * one commit behind — a [[joinEachBatch]] micro-batch, a store probe
+    * such as [[IngestDedupGate.storeStats]] — never loses its files
+    * mid-scan; the folded dirs go at the next cadence hit instead.
     */
-  private def maybeMaintain(spark: SparkSession, dir: String, key: String,
-                            compactEvery: Int, vacuumKeep: Int): Unit =
+  private val CadenceKeep = 2
+
+  /** Every store maintainer's one compaction cadence: once the committed
+    * manifest references ≥ `compactEvery` dirs (`0` = never), run `fold`
+    * (the store's compaction onto one dir — [[compact]] for a
+    * merge-on-read store) and then [[vacuum]] past [[CadenceKeep]].
+    * Counting DIRS rather than batches makes it restart-safe: a resumed
+    * query sees the store as it is, not a counter that died with the
+    * previous driver. Callers run it AFTER their batch's own commit, so
+    * a crash mid-compaction leaves the just-committed data visible.
+    * Without it a long-lived maintainer accumulates one version dir per
+    * batch forever.
+    */
+  private[streaming] def compactOnCadence(spark: SparkSession, dir: String,
+                                          compactEvery: Int)
+                                         (fold: => Unit): Unit =
     if (compactEvery > 0 &&
         latestManifest(spark, dir).exists(_.dirs.size >= compactEvery)) {
-      compact(spark, dir, key)
-      if (vacuumKeep > 0) vacuum(spark, dir, vacuumKeep)
+      fold
+      vacuum(spark, dir, CadenceKeep)
     }
 
-  /** Maintain the store as the latest-by-key view of a version stream —
-    * the transactional mirror of [[ChangelogDim.maintain]]. Epoch
-    * replay recommits identical rows as a new version: the merged view
-    * is unchanged (idempotent in effect). `compactEvery = N` folds the
-    * merge-on-read history whenever it reaches N dirs and vacuums past
-    * the `vacuumKeep` retention floor — without it a long-lived
-    * maintainer accumulates one version dir per changed batch forever.
+  /** Maintain the store as the latest-by-key view of a version stream.
+    * Update-mode changelog: each micro-batch commits only the keys whose
+    * latest value changed. Epoch replay recommits identical rows as a
+    * new version: the merged view is unchanged (idempotent in effect).
+    * `compactEvery` is the [[compactOnCadence]] trigger.
     */
   def maintain(versions: DataFrame, key: String, ts: String, dir: String,
                checkpointDir: String, tiebreak: Seq[String] = Nil,
-               compactEvery: Int = 0, vacuumKeep: Int = 2): StreamingQuery =
+               compactEvery: Int = 0): StreamingQuery =
     LatestByKey.streaming(versions, key, ts, tiebreak = tiebreak)
       .writeStream
       .outputMode("update")
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: Dataset[Row], _: Long) =>
         if (!batch.isEmpty) {
-          upsert(batch.toDF(), key, dir)
-          maybeMaintain(batch.sparkSession, dir, key, compactEvery, vacuumKeep)
+          val spark = batch.sparkSession
+          upsert(batch.toDF(), dir)
+          compactOnCadence(spark, dir, compactEvery)(compact(spark, dir, key))
         }
       }
       .start()
 
-  /** Maintain the store from a stream of Debezium-shaped CDC envelopes
-    * (`{before, after, op, ts_ms}`) — the transactional mirror of
-    * [[ChangelogDim.maintainCdc]], sharing its flatten/latest semantics
-    * ([[ChangelogDim.cdcLatest]]: per batch only each key's latest
-    * change applies, arrival-order tiebreak on equal ts). Deletes land
-    * as tombstone rows (`__op = 'd'`) in the committed version instead
-    * of driver-side partition removals — one atomic commit covers the
-    * whole batch, upserts and deletes together.
+  /** Flatten a batch of Debezium-shaped envelopes to each key's LATEST
+    * change row (`__op`, `__ts`, `__seq` + the row columns). `__seq`
+    * preserves ARRIVAL order as the equal-ts tiebreak: ts_ms is
+    * millisecond-granular, so an update-then-delete of one key in the
+    * same millisecond is routine — the later log event must win (an
+    * op-string tiebreak would keep 'u' over 'd' and leak the row
+    * forever). monotonically_increasing_id is ordered within each input
+    * partition, and a keyed source (Kafka) delivers one key's events
+    * through one partition in order.
     */
-  def maintainCdc(envelopes: DataFrame, envelope: org.apache.spark.sql.Column,
+  private def cdcLatest(batch: DataFrame, envelope: Column,
+                        keyField: String): DataFrame = {
+    val flat = batch.select(envelope.alias("__env"))
+      .select(col("__env.op").as("__op"), col("__env.ts_ms").as("__ts"),
+        coalesce(col("__env.after"), col("__env.before")).as("__row"))
+      .select(col("__op"), col("__ts"), col("__row.*"))
+      .withColumn("__seq", monotonically_increasing_id())
+    LatestByKey.batch(flat, keyField, "__ts", "__seq")
+  }
+
+  /** Maintain the store from a stream of Debezium-shaped CDC envelopes
+    * (`{before, after, op, ts_ms}` in `envelope`) — complete ksqlDB-table
+    * semantics: creates/updates/snapshot-reads upsert the key, DELETES
+    * (op 'd', the tombstone path ksqlDB drops table rows on) land as
+    * tombstone rows (`__op = 'd'`) in the committed version. Per batch
+    * only each key's latest change applies ([[cdcLatest]]: arrival-order
+    * tiebreak on equal ts), so an update+delete of one key in one batch
+    * resolves deterministically; a later re-insert resurrects the key.
+    * One atomic commit covers the whole batch, upserts and deletes
+    * together.
+    */
+  def maintainCdc(envelopes: DataFrame, envelope: Column,
                   keyField: String, dir: String, checkpointDir: String,
-                  compactEvery: Int = 0, vacuumKeep: Int = 2): StreamingQuery =
+                  compactEvery: Int = 0): StreamingQuery =
     envelopes.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: Dataset[Row], _: Long) =>
@@ -299,21 +373,25 @@ object ManifestStore {
         // frame would run the flatten+groupBy once for the probe and
         // again for the commit write
         if (!batch.isEmpty) {
+          val spark = batch.sparkSession
           applyChanges(
-            ChangelogDim.cdcLatest(batch.toDF(), envelope, keyField)
-              .drop("__ts", "__seq"),
-            keyField, dir)
-          maybeMaintain(batch.sparkSession, dir, keyField, compactEvery,
-            vacuumKeep)
+            cdcLatest(batch.toDF(), envelope, keyField).drop("__ts", "__seq"),
+            dir)
+          compactOnCadence(spark, dir, compactEvery)(
+            compact(spark, dir, keyField))
         }
       }
       .start()
 
-  /** Enrich a fact stream against the CURRENT committed dim state —
-    * the transactional mirror of [[ChangelogDim.joinEachBatch]]: each
-    * micro-batch pins one committed version for its whole join, so a
-    * concurrent upsert can neither tear the read nor leak a partial
-    * batch into it.
+  /** Enrich a fact stream against the CURRENT committed dim state:
+    * `foreachBatch` re-reads the store per micro-batch, so an update
+    * committed by [[maintain]] is visible to the very next batch of
+    * facts (a stream-static join would pin the file listing captured at
+    * plan time). Each micro-batch pins one committed version for its
+    * whole join, so a concurrent upsert can neither tear the read nor
+    * leak a partial batch into it. `join` receives (facts-batch,
+    * current-dim); `sink` receives (joined, epochId) and must be
+    * idempotent on epoch replay.
     */
   def joinEachBatch(stream: DataFrame, dimDir: String, key: String,
                     checkpointDir: String,

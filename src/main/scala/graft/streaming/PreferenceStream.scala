@@ -81,7 +81,7 @@ object PreferenceStream {
     * store once beats thousands of pruned scans) and restricts to the
     * touched set by a broadcast semi-join against the already-pinned
     * batch partial instead. `compactEvery` folds version dirs on the
-    * gate cadence.
+    * store's one cadence ([[ManifestStore.compactOnCadence]]).
     */
   def mergeDpoBatch(batch: DataFrame, storeDir: String, epoch: Long,
                     promptCol: String = "prompt_id",
@@ -138,15 +138,9 @@ object PreferenceStream {
     val rows = partial.select(
       concat_ws(Sep, keyGuard, lit(epoch)).as("row_key"),
       col("prompt"), col("c"), col("r"), col("n"))
-    if (ManifestStore.latestManifest(spark, storeDir).isEmpty)
-      ManifestStore.seed(rows, "row_key", storeDir)
-    else ManifestStore.upsert(rows, "row_key", storeDir)
-    if (compactEvery > 0 &&
-        ManifestStore.latestManifest(spark, storeDir)
-          .exists(_.dirs.size >= compactEvery)) {
-      ManifestStore.compact(spark, storeDir, "row_key")
-      ManifestStore.vacuum(spark, storeDir, minVersionsToKeep = 2)
-    }
+    ManifestStore.upsert(rows, storeDir)
+    ManifestStore.compactOnCadence(spark, storeDir, compactEvery)(
+      ManifestStore.compact(spark, storeDir, "row_key"))
     pairsOf(prunedStoreRead(spark, storeDir, "prompt", touched, partial,
       isinChunk, pushdownKeyLimit), promptCol, minMargin)
   }
@@ -293,15 +287,9 @@ object PreferenceStream {
         .as("row_key"),
       col("conv"), col("turn_idx"), col("role"), col("content"),
       lit(epoch).as("epoch"))
-    if (ManifestStore.latestManifest(spark, storeDir).isEmpty)
-      ManifestStore.seed(rows, "row_key", storeDir)
-    else ManifestStore.upsert(rows, "row_key", storeDir)
-    if (compactEvery > 0 &&
-        ManifestStore.latestManifest(spark, storeDir)
-          .exists(_.dirs.size >= compactEvery)) {
-      ManifestStore.compact(spark, storeDir, "row_key")
-      ManifestStore.vacuum(spark, storeDir, minVersionsToKeep = 2)
-    }
+    ManifestStore.upsert(rows, storeDir)
+    ManifestStore.compactOnCadence(spark, storeDir, compactEvery)(
+      ManifestStore.compact(spark, storeDir, "row_key"))
     renderOf(prunedStoreRead(spark, storeDir, "conv", touched, batchTurns,
       isinChunk, pushdownKeyLimit), convCol)
   }

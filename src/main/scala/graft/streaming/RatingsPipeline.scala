@@ -26,7 +26,9 @@ import graft.ops.RatingsOps
   * The customers side is stream-STATIC: Spark re-binds the static plan
   * every micro-batch, so a refreshable static source (parquet dir, Delta)
   * reproduces the reference's live-update probe (README.md:201–210);
-  * for true changelog semantics feed [[graft.tables.LatestByKey.streaming]].
+  * for true changelog semantics maintain the customers table with
+  * [[ManifestStore.maintain]] and enrich through
+  * [[ManifestStore.joinEachBatch]].
   */
 final case class RatingsPipeline(
     ratings: DataFrame,

@@ -307,8 +307,7 @@ class DriftMonitorSpec extends SparkSuite {
       cmix(80, 20, 50000L).toDF("doc_id", "text", "source_id")
         .select(col("doc_id"), col("text")), name)
     val dimDir = java.nio.file.Files.createTempDirectory("cd-dim").toString
-    ManifestStore.seed(Seq((0, "crawlA")).toDF("source_id", "source"),
-      "source_id", dimDir)
+    ManifestStore.seed(Seq((0, "crawlA")).toDF("source_id", "source"), dimDir)
     val drifts = new ConcurrentLinkedQueue[DriftMonitor.DriftEvent]()
     val curated = new ConcurrentLinkedQueue[Long]()
     val ms = MemoryStream[(Long, String, Int)]

@@ -170,7 +170,7 @@ class IngestGateSpec extends SparkSuite {
     assert(decide() == before)
     // vacuum reclaims the superseded dirs but never the ahead-of-head
     // orphan (indistinguishable from an in-flight commit)
-    IngestDedupGate.vacuumStore(spark, name)
+    ManifestStore.vacuum(spark, dir)
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val left = fs.listStatus(new org.apache.hadoop.fs.Path(dir))
@@ -256,7 +256,7 @@ class IngestGateSpec extends SparkSuite {
     assert(v1 == 2L && dirs1 == 2L, s"accumulation stats wrong: ${stats()}")
     assert(bandFiles1 > 0 && featFiles1 > 0)
     IngestDedupGate.compactStore(spark, name)
-    IngestDedupGate.vacuumStore(spark, name)
+    ManifestStore.vacuum(spark, IngestDedupGate.storeDir(spark, name))
     val (v2, dirs2, bandFiles2, featFiles2) = stats()
     assert(v2 == 3L && dirs2 == 1L, s"compaction stats wrong: ${stats()}")
     // one folded dir: at most `buckets` files per table
@@ -378,8 +378,7 @@ class IngestGateSpec extends SparkSuite {
     val name = "t_cur_knobs"
     val dimDir = java.nio.file.Files.createTempDirectory("knob-dim").toString
     ManifestStore.seed(
-      Seq((0, "crawlA"), (1, "crawlB")).toDF("source_id", "source"),
-      "source_id", dimDir)
+      Seq((0, "crawlA"), (1, "crawlB")).toDF("source_id", "source"), dimDir)
     val ms = MemoryStream[(Long, String, Int)]
     val q = CurationStream.run(
       ms.toDF().toDF("doc_id", "text", "source_id"), name, dimDir,
@@ -416,7 +415,7 @@ class IngestGateSpec extends SparkSuite {
     val name = "t_cur_gopher"
     val dimDir = java.nio.file.Files.createTempDirectory("go-dim").toString
     ManifestStore.seed(
-      Seq((0, "crawlA")).toDF("source_id", "source"), "source_id", dimDir)
+      Seq((0, "crawlA")).toDF("source_id", "source"), dimDir)
     val ms = MemoryStream[(Long, String, Int)]
     val q = CurationStream.run(
       ms.toDF().toDF("doc_id", "text", "source_id"), name, dimDir,
@@ -452,7 +451,7 @@ class IngestGateSpec extends SparkSuite {
     val name = "t_cur_deflate"
     val dimDir = java.nio.file.Files.createTempDirectory("df-dim").toString
     ManifestStore.seed(
-      Seq((0, "crawlA")).toDF("source_id", "source"), "source_id", dimDir)
+      Seq((0, "crawlA")).toDF("source_id", "source"), dimDir)
     val ms = MemoryStream[(Long, String, Int)]
     val q = CurationStream.run(
       ms.toDF().toDF("doc_id", "text", "source_id"), name, dimDir,
@@ -497,8 +496,7 @@ class IngestGateSpec extends SparkSuite {
       .mkString(" ")
     val name = "t_cur_boiler"
     val dimDir = java.nio.file.Files.createTempDirectory("bp-dim").toString
-    ManifestStore.seed(Seq((0, "crawlA")).toDF("source_id", "source"),
-      "source_id", dimDir)
+    ManifestStore.seed(Seq((0, "crawlA")).toDF("source_id", "source"), dimDir)
     val sunk = new ConcurrentLinkedQueue[(Long, String)]()
     // each query run owns a checkpoint (a MemoryStream can't resume a
     // prior run's offsets); the persisted ARTIFACT and the gate store
@@ -558,8 +556,7 @@ class IngestGateSpec extends SparkSuite {
     val lex = Seq(("badword", "tox", 100)).toDF("term", "category", "weight_x100")
     val name = "t_cur_lex"
     val dimDir = java.nio.file.Files.createTempDirectory("lx-dim").toString
-    ManifestStore.seed(Seq((0, "crawlA")).toDF("source_id", "source"),
-      "source_id", dimDir)
+    ManifestStore.seed(Seq((0, "crawlA")).toDF("source_id", "source"), dimDir)
     val ms = MemoryStream[(Long, String, Int)]
     // budget: 2000 x100-points per 1000 tokens. dense: 10 hits × 100 =
     // 1000 over 40 tokens → 25000‰ > 2000 → dropped; diluted: 200 over
@@ -593,8 +590,7 @@ class IngestGateSpec extends SparkSuite {
     val withPii = base + " contact bob@example.com from 10.0.0.7"
     val name = "t_cur_redact"
     val dimDir = java.nio.file.Files.createTempDirectory("red-dim").toString
-    ManifestStore.seed(Seq((0, "crawlA")).toDF("source_id", "source"),
-      "source_id", dimDir)
+    ManifestStore.seed(Seq((0, "crawlA")).toDF("source_id", "source"), dimDir)
     val sunk = new java.util.concurrent.ConcurrentLinkedQueue[(Long, String)]()
     val ms = MemoryStream[(Long, String, Int)]
     val q = CurationStream.run(
@@ -656,8 +652,7 @@ class IngestGateSpec extends SparkSuite {
       .toDF("doc_id", "lang", "text")
     val name = "t_cur_lang"
     val dimDir = java.nio.file.Files.createTempDirectory("lg-dim").toString
-    ManifestStore.seed(Seq((0, "crawlA")).toDF("source_id", "source"),
-      "source_id", dimDir)
+    ManifestStore.seed(Seq((0, "crawlA")).toDF("source_id", "source"), dimDir)
     val sunk = new java.util.concurrent.ConcurrentLinkedQueue[(Long, String)]()
     val ms = MemoryStream[(Long, String, Int)]
     val q = CurationStream.run(
@@ -727,8 +722,7 @@ class IngestGateSpec extends SparkSuite {
       "the badw1 badw2 badw3 badw4 badw5 badw6 badw7 badw8 badw9 finally done"
     val name = "t_cur_qc"
     val dimDir = java.nio.file.Files.createTempDirectory("qc-dim").toString
-    ManifestStore.seed(Seq((0, "crawlA")).toDF("source_id", "source"),
-      "source_id", dimDir)
+    ManifestStore.seed(Seq((0, "crawlA")).toDF("source_id", "source"), dimDir)
     val sunk = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
     val ms = MemoryStream[(Long, String, Int)]
     val q = CurationStream.run(
@@ -790,8 +784,7 @@ class IngestGateSpec extends SparkSuite {
       ("the " + (1 to 11).map(i => s"zq$i").mkString(" "))
     val name = "t_cur_lm"
     val dimDir = java.nio.file.Files.createTempDirectory("lm-dim").toString
-    ManifestStore.seed(Seq((0, "crawlA")).toDF("source_id", "source"),
-      "source_id", dimDir)
+    ManifestStore.seed(Seq((0, "crawlA")).toDF("source_id", "source"), dimDir)
     // calibrate the cut between the two scores (the production flow:
     // thresholds come from scoring a sample under the SAME artifact)
     val lm = graft.ext.TextAnalysis.loadLmModel(spark, "t_cur_lm_bundle")
@@ -846,8 +839,7 @@ class IngestGateSpec extends SparkSuite {
     val name = "t_cur_decon"
     val dimDir = java.nio.file.Files.createTempDirectory("dec-dim").toString
     ManifestStore.seed(
-      Seq((0, "crawlA"), (1, "crawlB")).toDF("source_id", "source"),
-      "source_id", dimDir)
+      Seq((0, "crawlA"), (1, "crawlB")).toDF("source_id", "source"), dimDir)
     val ms = MemoryStream[(Long, String, Int)]
     val q = CurationStream.run(
       ms.toDF().toDF("doc_id", "text", "source_id"), name, dimDir,
@@ -886,8 +878,7 @@ class IngestGateSpec extends SparkSuite {
     val good = words.mkString(" ")
     val dimDir = java.nio.file.Files.createTempDirectory("bd-dim").toString
     ManifestStore.seed(
-      Seq((0, "crawlA"), (1, "crawlB")).toDF("source_id", "source"),
-      "source_id", dimDir)
+      Seq((0, "crawlA"), (1, "crawlB")).toDF("source_id", "source"), dimDir)
     // disable size-based auto-broadcast so the contrast below is the HINT
     // itself (mirrors the LayoutSpec enrich escape-hatch test)
     val saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
@@ -942,8 +933,7 @@ class IngestGateSpec extends SparkSuite {
     val ckpt = java.nio.file.Files.createTempDirectory("cur-ckpt").toString
     val dimDir = java.nio.file.Files.createTempDirectory("cur-dimd").toString
     ManifestStore.seed(
-      Seq((0, "crawlA"), (1, "crawlB")).toDF("source_id", "source"),
-      "source_id", dimDir)
+      Seq((0, "crawlA"), (1, "crawlB")).toDF("source_id", "source"), dimDir)
     val schema = Seq((0L, "", 0)).toDF("doc_id", "text", "source_id").schema
     def start() = CurationStream.run(
       spark.readStream.schema(schema).parquet(srcDir), name, dimDir,
@@ -964,8 +954,7 @@ class IngestGateSpec extends SparkSuite {
 
     // while stopped: dim update commits a new version; next file holds a
     // novel doc and an exact redelivery
-    ManifestStore.upsert(Seq((0, "crawlA2")).toDF("source_id", "source"),
-      "source_id", dimDir)
+    ManifestStore.upsert(Seq((0, "crawlA2")).toDF("source_id", "source"), dimDir)
     Seq((4L, good2, 0), (5L, good, 0))
       .toDF("doc_id", "text", "source_id").write.mode("append").parquet(srcDir)
     val q2 = start(); q2.processAllAvailable(); q2.stop()
@@ -985,14 +974,13 @@ class IngestGateSpec extends SparkSuite {
     val dimDir = java.nio.file.Files.createTempDirectory("asof-dimd").toString
     val featDir = java.nio.file.Files.createTempDirectory("asof-feat").toString
     ManifestStore.seed(
-      Seq((0, "crawlA")).toDF("source_id", "source"), "source_id", dimDir)
+      Seq((0, "crawlA")).toDF("source_id", "source"), dimDir)
     // feature HISTORY: row-unique feat_id preserves versions; source 0's
     // score is 10 from 10:00 and 20 from 11:00
     ManifestStore.seed(
       Seq((1L, 0, ts("2024-01-01 10:00:00"), 10L),
           (2L, 0, ts("2024-01-01 11:00:00"), 20L))
-        .toDF("feat_id", "source_id", "f_ts", "score"),
-      "feat_id", featDir)
+        .toDF("feat_id", "source_id", "f_ts", "score"), featDir)
 
     val schema = Seq((0L, "", 0, ts("2024-01-01 00:00:00")))
       .toDF("doc_id", "text", "source_id", "ts").schema
@@ -1023,8 +1011,7 @@ class IngestGateSpec extends SparkSuite {
     // past the 2 h tolerance of the freshest row → null (staleness guard)
     ManifestStore.upsert(
       Seq((3L, 0, ts("2024-01-01 12:00:00"), 30L))
-        .toDF("feat_id", "source_id", "f_ts", "score"),
-      "feat_id", featDir)
+        .toDF("feat_id", "source_id", "f_ts", "score"), featDir)
     feat.clear()
     Seq((4L, text(4), 0, ts("2024-01-01 12:30:00")),
         (5L, text(5), 0, ts("2024-01-01 11:40:00")),
@@ -1248,6 +1235,36 @@ class IngestGateSpec extends SparkSuite {
       s"post-flush events must open session 2: $u1")
   }
 
+  test("streaming session transcripts order same-time turns by id value, as the batch operator does") {
+    import spark.implicits._
+    val got = new ConcurrentLinkedQueue[String]()
+    val srcDir = java.nio.file.Files.createTempDirectory("sts-ord-src").toString
+    val ckpt = java.nio.file.Files.createTempDirectory("sts-ord-ckpt").toString
+    // short ids 9 and 10 at the same time: by value 9 comes first, by
+    // string "10" would; the event past the gap closes the session
+    val events = Seq((10, 1L, 100L, "second"), (9, 1L, 100L, "first"),
+        (11, 1L, 5000L, "later"))
+      .toDF("event_id", "user_id", "ts", "event_type")
+      .withColumn("event_id", col("event_id").cast("short"))
+    events.write.mode("append").parquet(srcDir)
+    val q = graft.streaming.EventFeatureStream.sessionTranscripts(
+        spark.readStream.schema(events.schema).parquet(srcDir),
+        keys = Seq("user_id"), timeCol = "ts", idCol = "event_id",
+        typeCol = "event_type", sessionGap = 1000L)
+      .writeStream.option("checkpointLocation", ckpt)
+      .foreachBatch { (out: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+        out.select("transcript").collect().foreach(r => got.add(r.getString(0)))
+      }.start()
+    try q.processAllAvailable() finally q.stop()
+    val batch = graft.ops.EventFeatures.sessionTranscripts(events,
+        keys = Seq("user_id"), timeCol = "ts", idCol = "event_id",
+        typeCol = "event_type", sessionGap = 1000L)
+      .filter(col("session_idx") === 1).select("transcript")
+      .as[String].collect().toSeq
+    assert(batch == Seq("first second"))
+    assert(got.asScala.toSeq == batch, s"stream ${got.asScala.toSeq}")
+  }
+
   test("streaming rate anomalies accumulate bin history in the store and match the batch operator") {
     import spark.implicits._
     val got = new ConcurrentLinkedQueue[(Long, Long, Long, Long, Long, Long)]()
@@ -1303,13 +1320,12 @@ class IngestGateSpec extends SparkSuite {
     val dimDir = java.nio.file.Files.createTempDirectory("clash-dimd").toString
     val featDir = java.nio.file.Files.createTempDirectory("clash-feat").toString
     ManifestStore.seed(
-      Seq((0, "crawlA")).toDF("source_id", "source"), "source_id", dimDir)
+      Seq((0, "crawlA")).toDF("source_id", "source"), dimDir)
     // feature history carries a column literally named "source" — the
     // dim's enrich column — and one named "quality" — the gate's own
     ManifestStore.seed(
       Seq((1L, 0, ts("2024-01-01 10:00:00"), "boom", 9L))
-        .toDF("feat_id", "source_id", "f_ts", "source", "quality"),
-      "feat_id", featDir)
+        .toDF("feat_id", "source_id", "f_ts", "source", "quality"), featDir)
     val schema = Seq((0L, "", 0, ts("2024-01-01 00:00:00")))
       .toDF("doc_id", "text", "source_id", "ts").schema
     val e = intercept[IllegalArgumentException] {

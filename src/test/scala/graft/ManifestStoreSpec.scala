@@ -4,54 +4,46 @@ import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import graft.streaming.{ChangelogDim, ManifestStore}
+import graft.ops.RatingsOps
+import graft.streaming.ManifestStore
 
 object ManifestStoreSpec {
   val joined = new ConcurrentLinkedQueue[(Int, String)]()
+  val enriched = new ConcurrentLinkedQueue[(Long, String)]()
 }
 
 /** Transactional dim store: atomic manifest commits, snapshot-pinned
-  * readers, tombstones, replay idempotence, compaction — plus the
-  * contrast case showing why the raw dynamic-overwrite store needed it.
+  * readers, tombstones, replay idempotence, compaction, and the
+  * reference's live-update probe through the full streaming topology.
   */
 class ManifestStoreSpec extends SparkSuite {
 
   private def tmp(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
 
-  test("reader pins a committed snapshot; concurrent upserts never tear it (raw store breaks)") {
+  test("reader pins a committed snapshot; concurrent upserts never tear it") {
     import spark.implicits._
     val dim = (1 to 20).map(i => (i, s"name$i", s"tier${i % 4}"))
       .toDF("id", "name", "tier")
 
-    // manifest store: a pinned read survives any number of commits
+    // a pinned read survives any number of commits
     val mdir = tmp("mstore")
-    ManifestStore.seed(dim, "id", mdir)
+    ManifestStore.seed(dim, mdir)
     val pinned = ManifestStore.read(spark, mdir, "id")
-    ManifestStore.upsert(Seq((5, "NEW5", "tierX")).toDF("id", "name", "tier"), "id", mdir)
-    ManifestStore.upsert(Seq((7, "NEW7", "tierY")).toDF("id", "name", "tier"), "id", mdir)
+    ManifestStore.upsert(Seq((5, "NEW5", "tierX")).toDF("id", "name", "tier"), mdir)
+    ManifestStore.upsert(Seq((7, "NEW7", "tierY")).toDF("id", "name", "tier"), mdir)
     val snap = pinned.collect().map(r => (r.getInt(0), r.getString(1))).toMap
     assert(snap(5) == "name5" && snap(7) == "name7" && snap.size == 20,
       "pinned plan must read the version it pinned, untorn")
     val fresh = ManifestStore.read(spark, mdir, "id")
       .collect().map(r => (r.getInt(0), r.getString(1))).toMap
     assert(fresh(5) == "NEW5" && fresh(7) == "NEW7" && fresh.size == 20)
-
-    // raw store: the same sequence leaves the pinned listing pointing at
-    // files the dynamic partition overwrite deleted
-    val rdir = tmp("rawstore")
-    ChangelogDim.seed(dim, "id", rdir)
-    val rawPinned = spark.read.parquet(rdir)
-    ChangelogDim.upsert(Seq((5, "NEW5", "tierX")).toDF("id", "name", "tier"), "id", rdir)
-    val torn = intercept[Throwable] { rawPinned.collect() }
-    assert(torn.toString.toLowerCase.contains("file") || torn.getCause != null,
-      s"raw store read over a replaced partition must fail: $torn")
   }
 
   test("commit race: the second writer of one version fails loudly, never silently overwrites") {
     import spark.implicits._
     val dir = tmp("mstore-race")
-    ManifestStore.seed(Seq((1, "a")).toDF("id", "v"), "id", dir)
+    ManifestStore.seed(Seq((1, "a")).toDF("id", "v"), dir)
     // two writers race version 2: the winner's commit sticks
     ManifestStore.commit(spark, dir,
       ManifestStore.Manifest(2L, ManifestStore.latestManifest(spark, dir).get.dirs))
@@ -67,22 +59,22 @@ class ManifestStoreSpec extends SparkSuite {
   test("tombstones delete, re-inserts resurrect, epoch replay is idempotent in effect") {
     import spark.implicits._
     val dir = tmp("mstore-del")
-    ManifestStore.seed((1 to 5).map(i => (i, s"v$i")).toDF("id", "v"), "id", dir)
+    ManifestStore.seed((1 to 5).map(i => (i, s"v$i")).toDF("id", "v"), dir)
     // delete id=3 via tombstone
     ManifestStore.applyChanges(
-      Seq((3, null: String, "d")).toDF("id", "v", "__op"), "id", dir)
+      Seq((3, null: String, "d")).toDF("id", "v", "__op"), dir)
     def state(): Map[Int, String] = ManifestStore.read(spark, dir, "id")
       .collect().map(r => (r.getInt(0), r.getString(1))).toMap
     assert(state() == Map(1 -> "v1", 2 -> "v2", 4 -> "v4", 5 -> "v5"))
     // re-insert resurrects
     val reinsert = Seq((3, "v3b")).toDF("id", "v")
-    ManifestStore.upsert(reinsert, "id", dir)
+    ManifestStore.upsert(reinsert, dir)
     val afterReinsert = state()
     assert(afterReinsert(3) == "v3b" && afterReinsert.size == 5)
     // replaying the same change batch (epoch replay) recommits identical
     // rows: a new version, the same merged view
     val vBefore = ManifestStore.latestManifest(spark, dir).get.version
-    ManifestStore.upsert(reinsert, "id", dir)
+    ManifestStore.upsert(reinsert, dir)
     assert(state() == afterReinsert)
     assert(ManifestStore.latestManifest(spark, dir).get.version == vBefore + 1)
   }
@@ -90,9 +82,9 @@ class ManifestStoreSpec extends SparkSuite {
   test("compact folds history to one dir; vacuum removes unreferenced files; view unchanged") {
     import spark.implicits._
     val dir = tmp("mstore-compact")
-    ManifestStore.seed((1 to 10).map(i => (i, i * 10)).toDF("id", "x"), "id", dir)
-    (1 to 5).foreach(i => ManifestStore.upsert(Seq((i, i * 100)).toDF("id", "x"), "id", dir))
-    ManifestStore.applyChanges(Seq((10, 0, "d")).toDF("id", "x", "__op"), "id", dir)
+    ManifestStore.seed((1 to 10).map(i => (i, i * 10)).toDF("id", "x"), dir)
+    (1 to 5).foreach(i => ManifestStore.upsert(Seq((i, i * 100)).toDF("id", "x"), dir))
+    ManifestStore.applyChanges(Seq((10, 0, "d")).toDF("id", "x", "__op"), dir)
     val before = rows(ManifestStore.read(spark, dir, "id"))
     ManifestStore.compact(spark, dir, "id")
     assert(ManifestStore.latestManifest(spark, dir).get.dirs.size == 1)
@@ -107,8 +99,8 @@ class ManifestStoreSpec extends SparkSuite {
   test("vacuum retention floor protects pinned readers; in-flight writer dir is never deleted") {
     import spark.implicits._
     val dir = tmp("mstore-vac")
-    ManifestStore.seed((1 to 5).map(i => (i, i)).toDF("id", "x"), "id", dir) // v1
-    ManifestStore.upsert(Seq((1, 100)).toDF("id", "x"), "id", dir) // v2
+    ManifestStore.seed((1 to 5).map(i => (i, i)).toDF("id", "x"), dir) // v1
+    ManifestStore.upsert(Seq((1, 100)).toDF("id", "x"), dir) // v2
     val pinned = ManifestStore.read(spark, dir, "id") // pins v2 → dirs {d1, d2}
     ManifestStore.compact(spark, dir, "id") // v3 → one fresh dir
     // a racing writer's in-flight dir: version ahead of the committed head
@@ -137,7 +129,7 @@ class ManifestStoreSpec extends SparkSuite {
     implicit val sql = spark.sqlContext
     import spark.implicits._
     val dir = tmp("mstore-cdc")
-    ManifestStore.seed(customersDf, "id", dir) // ids 1..20
+    ManifestStore.seed(customersDf, dir) // ids 1..20
 
     val ms = MemoryStream[CdcCust]
     val after = struct(col("id"), col("first_name"), col("last_name"),
@@ -160,17 +152,32 @@ class ManifestStoreSpec extends SparkSuite {
       assert(state().filter(col("id") === 1).select("first_name")
         .collect().head.getString(0) == "Rick")
       assert(state().filter(col("id") === 2).isEmpty)
+      assert(state().filter(col("id") === 3).count() == 1) // untouched key
       // re-insert resurrects the key
       ms.addData(CdcCust("c", 2, "Back", "Again", "b@x.test", "gold", 102L))
       q.processAllAvailable()
+      assert(state().count() == 20)
       assert(state().filter(col("id") === 2).select("first_name")
         .collect().head.getString(0) == "Back")
+      // in-batch update-then-delete of one key resolves by latest ts
+      ms.addData(
+        CdcCust("u", 4, "Short", "Lived", "s@x.test", "gold", 103L),
+        CdcCust("d", 4, "Short", "Lived", "s@x.test", "gold", 104L))
+      q.processAllAvailable()
+      assert(state().filter(col("id") === 4).isEmpty)
       // same-millisecond update-then-delete: arrival order wins
       ms.addData(
         CdcCust("u", 5, "Same", "Milli", "m@x.test", "gold", 200L),
         CdcCust("d", 5, "Same", "Milli", "m@x.test", "gold", 200L))
       q.processAllAvailable()
       assert(state().filter(col("id") === 5).isEmpty)
+      // epoch replay: re-applying the same upsert leaves the view unchanged
+      val before = rows(state())
+      ManifestStore.upsert(
+        Seq(("Back", "Again", "b@x.test", "gold", 2))
+          .toDF("first_name", "last_name", "email", "club_status", "id"),
+        dir)
+      assert(rows(state()) == before)
     } finally q.stop()
   }
 
@@ -179,7 +186,7 @@ class ManifestStoreSpec extends SparkSuite {
     import spark.implicits._
     val dir = tmp("mstore-cad")
     ManifestStore.seed(
-      Seq((1, "bronze"), (2, "silver")).toDF("id", "tier"), "id", dir)
+      Seq((1, "bronze"), (2, "silver")).toDF("id", "tier"), dir)
     val ms = MemoryStream[(Int, String, java.sql.Timestamp)]
     val q = ManifestStore.maintain(
       ms.toDF().toDF("id", "tier", "uts"), "id", "uts", dir, tmp("ck-cad"),
@@ -212,7 +219,7 @@ class ManifestStoreSpec extends SparkSuite {
     ManifestStoreSpec.joined.clear()
     val dimDir = tmp("mstore-dim")
     ManifestStore.seed(
-      Seq((1, "bronze"), (2, "platinum")).toDF("id", "tier"), "id", dimDir)
+      Seq((1, "bronze"), (2, "platinum")).toDF("id", "tier"), dimDir)
 
     val dimMs = MemoryStream[(Int, String, java.sql.Timestamp)]
     val maintainQ = ManifestStore.maintain(
@@ -237,5 +244,48 @@ class ManifestStoreSpec extends SparkSuite {
       assert(ManifestStoreSpec.joined.asScala.toSet ==
         Set((100, "bronze"), (101, "gold")))
     } finally { joinQ.stop(); maintainQ.stop() }
+
+    // the reference's probe (README.md:201–210) through RatingsOps.enrich:
+    // customer 42, Rica Blaisdell, is UPDATEd to Rick Astley through the
+    // changelog stream, and the next rating joins the new name
+    ManifestStoreSpec.enriched.clear()
+    val custDir = tmp("mstore-cust")
+    def cv(id: Int, fn: String, ln: String, at: String) =
+      CustDimVersion(id, fn, ln, s"c$id@example.test", "platinum", ts(at))
+    ManifestStore.seed(
+      Seq(cv(42, "Rica", "Blaisdell", "2024-01-01 00:00:00"),
+        cv(7, "Seven", "Of9", "2024-01-01 00:00:00")).toDF(), custDir)
+    val custMs = MemoryStream[CustDimVersion]
+    val custQ = ManifestStore.maintain(
+      custMs.toDF(), "id", "ts", custDir, tmp("ck-cust"))
+    val ratingsMs = MemoryStream[Rating]
+    val enrichQ = ManifestStore.joinEachBatch(
+      ratingsMs.toDF(), custDir, "id", tmp("ck-enrich"),
+      (facts, dim) => RatingsOps.enrich(facts, dim)) { (out, _) =>
+      out.select("RATING_ID", "FULL_NAME").collect()
+        .foreach(r => ManifestStoreSpec.enriched.add((r.getLong(0), r.getString(1))))
+    }
+    try {
+      ratingsMs.addData(Rating(100, 42, 1.0, "ios", "meh", ts("2024-01-01 10:00:00")))
+      enrichQ.processAllAvailable()
+      custMs.addData(cv(42, "Rick", "Astley", "2024-01-01 12:00:00"))
+      custQ.processAllAvailable()
+      ratingsMs.addData(Rating(101, 42, 2.0, "ios", "still meh", ts("2024-01-01 10:01:00")))
+      enrichQ.processAllAvailable()
+      // a key the update did not touch survives it
+      ratingsMs.addData(Rating(102, 7, 5.0, "web", "hi", ts("2024-01-01 10:02:00")))
+      enrichQ.processAllAvailable()
+      val seen = ManifestStoreSpec.enriched.asScala.toMap
+      assert(seen == Map(100L -> "Rica Blaisdell", 101L -> "Rick Astley",
+        102L -> "Seven Of9"), seen)
+    } finally { enrichQ.stop(); custQ.stop() }
   }
 }
+
+final case class CdcCust(op: String, id: Int, first_name: String,
+                         last_name: String, email: String,
+                         club_status: String, ts_ms: Long)
+
+final case class CustDimVersion(id: Int, first_name: String, last_name: String,
+                                email: String, club_status: String,
+                                ts: java.sql.Timestamp)

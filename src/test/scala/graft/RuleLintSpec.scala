@@ -21,7 +21,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * `transform(sequence(` call, which re-splits the text for every
   * element, fails it. The near-dup band layout is graft.ext.Dedup's
   * alone: a parameter named `numBands` or `rowsPerBand` declared
-  * anywhere else fails it. Exemptions:
+  * anywhere else fails it. Versioned stores commit through
+  * graft.streaming.ManifestStore only: a `"d-` version-dir name, a
+  * `ManifestStore.Manifest(` or a `ManifestStore.commit(` anywhere else
+  * fails it, and so does any main or test source naming the deleted
+  * raw-parquet dim store (whose concurrent reads could tear).
+  * Exemptions:
   *
   *  - queries/LlmOracle.scala keeps its own moduli, its own word splits
   *    and its own band-layout parameters: its DuckDB replay text is the
@@ -37,12 +42,14 @@ class RuleLintSpec extends AnyFunSuite {
 
   private val root = Paths.get("src/main/scala")
 
-  private val sources: Map[String, String] =
+  private def scalaSources(root: Path): Map[String, String] =
     Files.walk(root).iterator().asScala
       .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".scala"))
       .map((p: Path) => root.relativize(p).toString.replace('\\', '/') ->
         new String(Files.readAllBytes(p), "UTF-8"))
       .toMap
+
+  private val sources: Map[String, String] = scalaSources(root)
 
   private def offenders(rule: scala.util.matching.Regex,
                         allowed: Set[String]): Seq[String] =
@@ -63,6 +70,10 @@ class RuleLintSpec extends AnyFunSuite {
   private val Rename = """(?i)\bRENAME\s+TO\b""".r
   private val TransformSeq = """\btransform\(\s*sequence\(""".r
   private val BandParam = """\b(numBands|rowsPerBand)\s*:""".r
+  private val StoreCommit =
+    """"d-|ManifestStore\.Manifest\(|ManifestStore\.commit\(""".r
+  // the character class keeps this spec's own source from naming it
+  private val RawDimStore = """\bChangelog[D]im\b""".r
 
   /** Offset just past the paren that closes the one at `open`. */
   private def closing(src: String, open: Int): Int = {
@@ -156,5 +167,24 @@ class RuleLintSpec extends AnyFunSuite {
     assert(BandParam.findFirstIn(sources("graft/queries/LlmOracle.scala")).isDefined)
     assert(offenders(BandParam, Set("graft/ext/Dedup.scala",
       "graft/queries/LlmOracle.scala")) == Nil)
+  }
+
+  test("version dirs and manifests are named and committed only in ManifestStore; the raw-parquet dim store stays gone") {
+    assert(StoreCommit.findFirstIn("""val rel = s"d-$v-${uuid.take(8)}"""").isDefined)
+    assert(StoreCommit.findFirstIn("ManifestStore.commit(spark, dir, m)").isDefined)
+    assert(StoreCommit.findFirstIn("Seq(ManifestStore.Manifest(2L, Nil))").isDefined)
+    assert(StoreCommit.findFirstIn("m: ManifestStore.Manifest, part: String").isEmpty)
+    assert(StoreCommit.findFirstIn("""ManifestStore.commitVersion(spark, dir, replace = false)""").isEmpty)
+    assert(StoreCommit.findFirstIn(sources("graft/streaming/ManifestStore.scala")).isDefined)
+    assert(offenders(StoreCommit, Set("graft/streaming/ManifestStore.scala")) == Nil)
+    assert(RawDimStore.findFirstIn("graft.streaming." + "Changelog" + "Dim.seed(df, dir)").isDefined)
+    val tests = scalaSources(Paths.get("src/test/scala"))
+    assert(tests.contains("graft/RuleLintSpec.scala"))
+    val named = (sources.toSeq.map { case (f, src) => s"main/$f" -> src } ++
+        tests.toSeq.map { case (f, src) => s"test/$f" -> src })
+      .sortBy(_._1).collect {
+        case (file, src) if RawDimStore.findFirstIn(src).isDefined => file
+      }
+    assert(named == Nil)
   }
 }

@@ -116,118 +116,4 @@ class StreamingPipelineSpec extends SparkSuite {
       assert(seen(101L) == "Rick Astley")
     } finally q.stop()
   }
-
-  test("S4+J1 full topology: LatestByKey changelog feeds the enrich join; mid-stream update lands next micro-batch") {
-    implicit val sql = spark.sqlContext
-    import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("graft-chlog").toString
-    val dimDir = s"$base/dim"
-    def cv(id: Int, fn: String, ln: String, at: String) =
-      CustDimVersion(id, fn, ln, s"c$id@example.test", "platinum", ts(at))
-    // seed the dim store with the initial table (incl. the reference's
-    // customer 42, Rica Blaisdell — README.md:201–210)
-    graft.streaming.ChangelogDim.seed(
-      Seq(cv(42, "Rica", "Blaisdell", "2024-01-01 00:00:00"),
-        cv(7, "Seven", "Of9", "2024-01-01 00:00:00")).toDF(), "id", dimDir)
-
-    val custMs = MemoryStream[CustDimVersion]
-    val maintainQ = graft.streaming.ChangelogDim.maintain(
-      custMs.toDF(), "id", "ts", dimDir, s"$base/cp_dim")
-    val ratingsMs = MemoryStream[Rating]
-    val out = new java.util.concurrent.ConcurrentLinkedQueue[(Long, String)]()
-    val joinQ = graft.streaming.ChangelogDim.joinEachBatch(
-      ratingsMs.toDF(), dimDir, s"$base/cp_join",
-      (facts, dim) => RatingsOps.enrich(facts, dim)) { (joined, _) =>
-      joined.select("RATING_ID", "FULL_NAME").collect()
-        .foreach(r => out.add((r.getLong(0), r.getString(1))))
-    }
-    try {
-      ratingsMs.addData(Rating(100, 42, 1.0, "ios", "meh", ts("2024-01-01 10:00:00")))
-      joinQ.processAllAvailable()
-      // the probe: UPDATE customer 42 → Rick Astley, THROUGH the
-      // changelog stream (not a dim rewrite from the outside)
-      custMs.addData(cv(42, "Rick", "Astley", "2024-01-01 12:00:00"))
-      maintainQ.processAllAvailable()
-      ratingsMs.addData(Rating(101, 42, 2.0, "ios", "still meh", ts("2024-01-01 10:01:00")))
-      joinQ.processAllAvailable()
-      // an untouched key must survive the partial upsert
-      ratingsMs.addData(Rating(102, 7, 5.0, "web", "hi", ts("2024-01-01 10:02:00")))
-      joinQ.processAllAvailable()
-
-      val seen = out.toArray(Array.empty[(Long, String)]).toMap
-      assert(seen(100L) == "Rica Blaisdell", seen)
-      assert(seen(101L) == "Rick Astley", seen)
-      assert(seen(102L) == "Seven Of9", seen)
-    } finally { maintainQ.stop(); joinQ.stop() }
-  }
-
-  test("CDC-driven dim store applies upserts AND tombstones (ksqlDB table delete semantics)") {
-    implicit val sql = spark.sqlContext
-    import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("graft-cdcdim").toString
-    val dimDir = s"$base/dim"
-    graft.streaming.ChangelogDim.seed(customersDf, "id", dimDir) // ids 1..20
-
-    val ms = MemoryStream[CdcCust]
-    val after = struct(col("id"), col("first_name"), col("last_name"),
-      col("email"), col("club_status"))
-    val envelopes = ms.toDF().select(struct(
-      lit(null).cast(customersDf.schema).as("before"),
-      after.as("after"), col("op"), col("ts_ms")).as("value"))
-    val q = graft.streaming.ChangelogDim.maintainCdc(
-      envelopes, col("value"), "id", dimDir, s"$base/cp")
-    try {
-      // one batch carrying an update of #1 and a tombstone of #2
-      ms.addData(
-        CdcCust("u", 1, "Rick", "Astley", "r@x.test", "platinum", 100L),
-        CdcCust("d", 2, "Gone", "Gone", "g@x.test", "gold", 101L))
-      q.processAllAvailable()
-      val dim1 = spark.read.parquet(dimDir)
-      assert(dim1.count() == 19) // 20 seeded, one deleted
-      assert(dim1.filter(col("id") === 1).select("first_name")
-        .collect().head.getString(0) == "Rick")
-      assert(dim1.filter(col("id") === 2).isEmpty)
-      assert(dim1.filter(col("id") === 3).count() == 1) // untouched key
-
-      // a later re-insert recreates the key's partition
-      ms.addData(CdcCust("c", 2, "Back", "Again", "b@x.test", "gold", 102L))
-      q.processAllAvailable()
-      val dim2 = spark.read.parquet(dimDir)
-      assert(dim2.count() == 20)
-      assert(dim2.filter(col("id") === 2).select("first_name")
-        .collect().head.getString(0) == "Back")
-
-      // in-batch update-then-delete of one key resolves by latest ts
-      ms.addData(
-        CdcCust("u", 4, "Short", "Lived", "s@x.test", "gold", 103L),
-        CdcCust("d", 4, "Short", "Lived", "s@x.test", "gold", 104L))
-      q.processAllAvailable()
-      assert(spark.read.parquet(dimDir).filter(col("id") === 4).isEmpty)
-
-      // SAME-MILLISECOND update-then-delete: ts_ms ties are routine;
-      // arrival order must decide, so the tombstone still wins
-      ms.addData(
-        CdcCust("u", 5, "Same", "Milli", "m@x.test", "gold", 200L),
-        CdcCust("d", 5, "Same", "Milli", "m@x.test", "gold", 200L))
-      q.processAllAvailable()
-      assert(spark.read.parquet(dimDir).filter(col("id") === 5).isEmpty)
-
-      // epoch replay idempotence (SinkDef contract): re-applying the
-      // same upsert leaves the store byte-identical in content
-      val before = rows(spark.read.parquet(dimDir))
-      graft.streaming.ChangelogDim.upsert(
-        Seq(("Back", "Again", "b@x.test", "gold", 2))
-          .toDF("first_name", "last_name", "email", "club_status", "id"),
-        "id", dimDir)
-      assert(rows(spark.read.parquet(dimDir)) == before)
-    } finally q.stop()
-  }
 }
-
-final case class CdcCust(op: String, id: Int, first_name: String,
-                         last_name: String, email: String,
-                         club_status: String, ts_ms: Long)
-
-final case class CustDimVersion(id: Int, first_name: String, last_name: String,
-                                email: String, club_status: String,
-                                ts: java.sql.Timestamp)
