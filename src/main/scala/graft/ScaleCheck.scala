@@ -138,8 +138,8 @@ object ScaleCheck {
         .write.mode("overwrite").parquet(s"$base/documents")
       replicateEmb(graft.core.Tables.embeddings(spark, sfDir), m)
         .write.mode("overwrite").parquet(s"$base/embeddings")
-      val docs = spark.read.parquet(s"$base/documents")
-      val emb = spark.read.parquet(s"$base/embeddings")
+      val docs = graft.core.Parquet.read(spark, s"$base/documents")
+      val emb = graft.core.Parquet.read(spark, s"$base/embeddings")
       val nDocs = docs.count()
       val nVecs = emb.count()
 

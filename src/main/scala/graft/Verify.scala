@@ -1,12 +1,42 @@
 package graft
 import graft.core.{Json, Overlap, Sessions}
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.ConcurrentHashMap
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerStageSubmitted, SparkListenerTaskEnd}
+import org.apache.spark.sql.graft.Bridge
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare, and
+  * plus oracle_sql.json, for the driver's DuckDB compare;
   * disclosures.json: per query, the recall losses its operators
   * disclosed ([[Overlap.Disclosure]] records; queries with none are
-  * left out). */
+  * left out); and jobs.json: per query, the Spark jobs, stages and
+  * tasks that building and writing it started. Those counts repeat
+  * exactly run to run, so two builds compare by them without timing
+  * noise. */
 object Verify {
+  /** The local property naming the query a job belongs to. Spark copies
+    * local properties to the threads a query spawns (AQE stages,
+    * broadcasts, [[Overlap]] tasks), so every job carries it.
+    */
+  private val QueryKey = "graft.verify.query"
+
+  /** Jobs, stages and tasks per query, from the listener bus. */
+  private final class Counts extends SparkListener {
+    val jobs, stages, tasks = new ConcurrentHashMap[String, Long]()
+    private val stageQuery = new ConcurrentHashMap[Int, String]()
+    private def query(p: java.util.Properties): String =
+      Option(p).flatMap(x => Option(x.getProperty(QueryKey))).getOrElse("")
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      jobs.merge(query(e.properties), 1L, _ + _)
+    override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit = {
+      val q = query(e.properties)
+      stageQuery.put(e.stageInfo.stageId, q)
+      stages.merge(q, 1L, _ + _)
+    }
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+      tasks.merge(stageQuery.getOrDefault(e.stageId, ""), 1L, _ + _)
+  }
+
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -18,7 +48,11 @@ object Verify {
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val selected = only.fold(SparkEntry.queries)(names =>
       SparkEntry.queries.filter { case (n, _) => names.contains(n) })
+    val sc = spark.sparkContext
+    val counts = new Counts
+    sc.addSparkListener(counts)
     val disclosed = selected.flatMap { case (name, fn) =>
+      sc.setLocalProperty(QueryKey, name)
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
@@ -35,8 +69,20 @@ object Verify {
             s"${e.getClass.getName}: ${Option(e.getMessage).getOrElse("")}\n")
         } catch { case _: Throwable => () } // sentinel write is best-effort
       }
+      finally sc.setLocalProperty(QueryKey, null)
       Some(Overlap.drain(spark)).filter(_.nonEmpty).map(name -> _)
     }
+    Bridge.drainListenerBus(sc)
+    sc.removeSparkListener(counts)
+    def triple(qs: Seq[String]) = Seq(counts.jobs, counts.stages, counts.tasks)
+      .map(m => qs.map(m.getOrDefault(_, 0L)).sum) match {
+        case Seq(j, st, t) => s"""{"jobs": $j, "stages": $st, "tasks": $t}"""
+      }
+    val names = selected.keys.toSeq.sorted
+    Files.writeString(Paths.get(s"$outDir/jobs.json"),
+      s"""{"total": ${triple(names)},\n"queries": """ +
+        names.map(q => s"  ${Json.str(q)}: ${triple(Seq(q))}")
+          .mkString("{\n", ",\n", "\n}}\n"))
     Files.writeString(Paths.get(s"$outDir/disclosures.json"), disclosed
       .map { case (name, ds) => Json.str(name) + ": " + ds.map(_.json).mkString("[", ",", "]") }
       .mkString("{", ",\n", "}\n"))

@@ -79,7 +79,7 @@ object Layout {
     */
   def recentWindowPruned(spark: SparkSession, dir: String, tsCol: String,
                          minutes: Int): DataFrame = {
-    val store = spark.read.parquet(dir)
+    val store = Parquet.read(spark, dir)
     // Row.get, not Row.getTimestamp: the anchor value is
     // java.sql.Timestamp for TIMESTAMP_LTZ columns but
     // java.time.LocalDateTime for TIMESTAMP_NTZ parquet (writer-

@@ -15,8 +15,10 @@ import org.apache.spark.sql.execution.SQLExecution
   *
   * Tasks run on a small daemon pool through Spark's
   * `SQLExecution.withThreadLocalCaptured`: their jobs carry the caller's
-  * job group, description, job tags and active session, plus a tag of
-  * the call by which the first failing task cancels the others' jobs.
+  * job group, job tags and active session, plus a tag of the call by
+  * which the first failing task cancels the others' jobs. Their jobs are
+  * described as `<caller>/overlap` (an [[all]] task) or
+  * `<caller>/disclose` (a [[disclosing]] probe) ([[JobDescription]]).
   */
 object Overlap {
 
@@ -61,7 +63,7 @@ object Overlap {
   def all[T](tasks: Seq[() => T]): Seq[T] = {
     if (onPool) throw new IllegalStateException(
       "Overlap.all called from an Overlap task; fan out from the caller instead")
-    val call = new Call(SparkSession.active)
+    val call = new Call(SparkSession.active, s"${JobDescription.caller()}/overlap")
     call.join(tasks.map(t => call.submit(t())))
   }
 
@@ -74,11 +76,13 @@ object Overlap {
     */
   def disclosing[T](operator: String, kind: String, overCap: DataFrame)
                    (body: => T): T = {
-    def probe() = overCap.limit(21).collect()
+    val description = s"${JobDescription.caller()}/disclose"
+    def probe() = JobDescription.around(overCap.sparkSession.sparkContext,
+      description)(overCap.limit(21).collect())
     val (result, over) =
       if (onPool) { val r = body; (r, probe()) }
       else {
-        val call = new Call(overCap.sparkSession)
+        val call = new Call(overCap.sparkSession, description)
         val f = Seq(call.submit(probe()))
         val r = try Some(body) catch { case e: Throwable => call.fail(e); None }
         val over = call.join(f).head // rethrows body's failure, if any
@@ -103,8 +107,10 @@ object Overlap {
   def drain(spark: SparkSession): Seq[Disclosure] =
     registry.synchronized(Option(registry.remove(spark)).getOrElse(Vector.empty))
 
-  /** One call's tasks: they share a job tag and the first failure. */
-  private final class Call(spark: SparkSession) {
+  /** One call's tasks: they share a job tag, a job description and the
+    * first failure.
+    */
+  private final class Call(spark: SparkSession, description: String) {
     private val sc = spark.sparkContext
     private val tag = TagPrefix + tags.incrementAndGet()
     private val failed = new AtomicReference[Throwable]
@@ -119,7 +125,7 @@ object Overlap {
         sc.addJobTag(tag)
         try {
           if (failed.get != null) throw new IllegalStateException(s"$tag: a sibling failed")
-          body
+          JobDescription.around(sc, description)(body)
         } catch { case e: Throwable => fail(e); throw e }
         finally sc.removeJobTag(tag)
       }

@@ -29,9 +29,14 @@ object Pin {
 
   implicit final class Pins[T](private val ds: Dataset[T]) extends AnyVal {
 
-    /** Pin now: one job materializes the frame before this returns. */
+    /** Pin now: one job materializes the frame before this returns. Its
+      * jobs are described as `<caller>/pin` ([[JobDescription]]).
+      */
     def pin(): Dataset[T] =
-      if (reliable) ds.checkpoint() else ds.localCheckpoint()
+      JobDescription.around(ds.sparkSession.sparkContext,
+          s"${JobDescription.caller()}/pin") {
+        if (reliable) ds.checkpoint() else ds.localCheckpoint()
+      }
 
     /** Cut the lineage now and materialize on the frame's first action,
       * under the local policy. The pinned frame still plans as a flat
@@ -43,7 +48,9 @@ object Pin {
       * consumes the frame). Under the reliable policy this pins eagerly.
       */
     def pinLazily(): Dataset[T] =
-      if (reliable) ds.checkpoint() else ds.localCheckpoint(eager = false)
+      if (reliable) JobDescription.around(ds.sparkSession.sparkContext,
+          s"${JobDescription.caller()}/pin")(ds.checkpoint())
+      else ds.localCheckpoint(eager = false)
 
     private def reliable: Boolean =
       ds.sparkSession.sparkContext.getCheckpointDir.isDefined

@@ -5,8 +5,10 @@ import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
 /** Loaders for the driver-generated corpus (TESTDATA.md / FIXTURES.md §B).
-  * One parquet file per table; schemas are fixed by the generator, so we
-  * read with schema inference off the footer (exact) — no sampling.
+  * One parquet file per table, read through [[Parquet.read]]: the schema
+  * is inferred from the footer (exact, no sampling) on a file's first
+  * load and reused while the file is unchanged, so a query builder's
+  * loads start no schema-inference job.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -42,7 +44,7 @@ object Tables {
   def load(spark: SparkSession, dir: String, name: String,
            split: Boolean = false): DataFrame = {
     val path = s"$dir/$name.parquet"
-    val df = spark.read.parquet(path)
+    val df = Parquet.read(spark, path)
     if ((split || splitTables.contains(name)) && needsSplit(spark, path))
       df.repartition(spark.sparkContext.defaultParallelism)
     else df

@@ -1621,7 +1621,7 @@ object Similarity {
         // files instead of `buckets`. The raw read claims nothing, the
         // exchange stays, and its hash-mod law matches the writer's
         // bucket-id law, so each task lands exactly one file.
-        val raw = spark.read.parquet(
+        val raw = graft.core.Parquet.read(spark,
           s"${spark.conf.get("spark.sql.warehouse.dir")}/$table")
         graft.core.SwapTable.publish(
           raw.repartition(buckets, col(key)), table, key, buckets)

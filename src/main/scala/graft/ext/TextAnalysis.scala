@@ -1816,7 +1816,10 @@ object TextAnalysis {
     * the small levels; the model is pinned once here because the five
     * level-filters would otherwise recompute an inline training
     * pipeline five times); a 1-row N+V broadcast; one doc-keyed sum.
-    * Nothing corpus-quadratic, no corpus sort.
+    * Nothing corpus-quadratic, no corpus sort. This is the held-out
+    * scorer (a model trained on other text, or a persisted one); a
+    * corpus scored under its own model needs only two of the levels
+    * and takes [[trigramSurprisal]]'s path.
     */
   def trigramScoreWith(docs: DataFrame, model: DataFrame,
                        idCol: String = "doc_id",
@@ -1867,15 +1870,51 @@ object TextAnalysis {
           .otherwise(lit(0L)).as("mean_bits_x100"))
   }
 
-  /** Self-scored convenience: [[trigramScoreWith]] under a model
-    * trained on the same corpus (every trigram seen → no backoff fires;
-    * the in-corpus perplexity signal, same contract as
-    * [[unigramSurprisal]]/[[bigramSurprisal]] and a drop-in scorer for
-    * [[graft.ext.Curation.perplexityBuckets]]).
+  /** Self-scored trigram surprisal: [[trigramScoreWith]] under
+    * [[trigramModel]] of the same corpus (the in-corpus perplexity
+    * signal, same contract as [[unigramSurprisal]]/[[bigramSurprisal]]
+    * and a drop-in scorer for [[graft.ext.Curation.perplexityBuckets]]),
+    * computed from the two model levels that case reads. The model is
+    * trained on the documents it scores, so every trigram occurrence and
+    * its prefix bigram are in it and backoff never fires: per trigram
+    * occurrence
+    *
+    *   bits = L(cnt₂(w1 w2)) − L(cnt₃(w1 w2 w3))
+    *
+    * Scale shape: two row-local explodes of the scan, one for the
+    * bigram and trigram counts (one gram-keyed partial-agg shuffle,
+    * vocab-bounded; a bigram holds one space and a trigram two, so one
+    * count relation without a level serves both lookups) and one for
+    * the (doc, trigram) tf (one partial-agg shuffle); the tf relation
+    * joins the counts twice, on the trigram and on its prefix bigram;
+    * one doc-keyed sum. No pin, no N+V scalar, no corpus sort.
     */
   def trigramSurprisal(docs: DataFrame, idCol: String = "doc_id",
-                       textCol: String = "text"): DataFrame =
-    trigramScoreWith(docs, trigramModel(docs, idCol, textCol), idCol, textCol)
+                       textCol: String = "text"): DataFrame = {
+    val live = docs.filter(col(textCol).isNotNull)
+    val counts = live.select(explode(wordGrams(col(textCol), 2, 3)).as("gram"))
+      .groupBy("gram").agg(count(lit(1)).as("cnt"))
+    val occ = live
+      .select(col(idCol), explode(ngramArray(textCol, 3)).as("g123"))
+      .groupBy(col(idCol), col("g123"))
+      .agg(count(lit(1)).as("tf"))
+    val agg = occ
+      .join(counts.select(col("gram").as("g123"), col("cnt").as("c3")), "g123")
+      .withColumn("g12", substring_index(col("g123"), " ", 2))
+      .join(counts.select(col("gram").as("g12"), col("cnt").as("c12")), "g12")
+      .withColumn("bits",
+        (length(bin(col("c12"))) - length(bin(col("c3")))).cast("long"))
+      .groupBy(col(idCol))
+      .agg(sum(col("tf") * col("bits")).as("surprisal"),
+        sum(col("tf")).as("n_trigrams"))
+    docs.select(col(idCol)).join(agg, Seq(idCol), "left_outer")
+      .select(col(idCol),
+        coalesce(col("surprisal"), lit(0L)).as("surprisal"),
+        coalesce(col("n_trigrams"), lit(0L)).as("n_trigrams"),
+        when(coalesce(col("n_trigrams"), lit(0L)) > 0,
+          expr("(surprisal * 100) div n_trigrams"))
+          .otherwise(lit(0L)).as("mean_bits_x100"))
+  }
 
   /** Train a KNESER–NEY-grade ABSOLUTE-DISCOUNT trigram model — the
     * smoothing rung above stupid backoff ([[trigramModel]]): lower

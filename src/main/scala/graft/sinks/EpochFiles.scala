@@ -28,9 +28,6 @@ import org.apache.spark.sql.graft.Bridge
   */
 private[sinks] object EpochFiles {
 
-  /** The Spark local property that names a job in the UI and event log. */
-  private val JobDescription = "spark.job.description"
-
   /** Writes `rows` in one job. Column 0 is the index into `dirs` of the
     * output a row's line goes to (int), column 1 the line (string, written
     * as UTF-8 plus `\n`). The job is described as `<sink> epoch=<N>`; the
@@ -45,10 +42,9 @@ private[sinks] object EpochFiles {
       fs.delete(p, true)
       if (!fs.mkdirs(p)) throw new java.io.IOException(s"cannot create $p")
     }
-    val prev = sc.getLocalProperty(JobDescription)
-    sc.setJobDescription(s"$sink epoch=$epochId")
-    try rows.foreachPartition((it: Iterator[Row]) => writePartition(it, epochDirs))
-    finally sc.setJobDescription(prev)
+    graft.core.JobDescription.around(sc, s"$sink epoch=$epochId") {
+      rows.foreachPartition((it: Iterator[Row]) => writePartition(it, epochDirs))
+    }
   }
 
   private def writePartition(rows: Iterator[Row], dirs: Seq[String]): Unit = {

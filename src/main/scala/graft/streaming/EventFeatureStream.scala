@@ -3,7 +3,9 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 import graft.core.Pin._
 import graft.ops.TemporalJoins
 
@@ -39,9 +41,12 @@ object EventFeatureStream {
 
   /** The batch operators' (time, id) tiebreak on the id, for whatever id
     * type the log carries — by value, as Spark's native sort orders the
-    * common orderable types (nulls first, the ASC default). Every
-    * stateful stage below orders its in-batch events with it, so a
-    * stream's same-time events come out in the batch operator's order.
+    * common orderable types (nulls first, the ASC default): strings by
+    * their UTF-8 bytes (not Java's UTF-16 code units, which put a
+    * supplementary character before U+E000–U+FFFF), and floating point
+    * with −0.0 equal to 0.0 and NaN above every number. Every stateful
+    * stage below orders its in-batch events with it, so a stream's
+    * same-time events come out in the batch operator's order.
     */
   private def cmpId(a: Any, b: Any): Int = (a, b) match {
     case (null, null)             => 0
@@ -51,9 +56,10 @@ object EventFeatureStream {
     case (x: Int, y: Int)         => java.lang.Integer.compare(x, y)
     case (x: Short, y: Short)     => java.lang.Short.compare(x, y)
     case (x: Byte, y: Byte)       => java.lang.Byte.compare(x, y)
-    case (x: Double, y: Double)   => java.lang.Double.compare(x, y)
-    case (x: Float, y: Float)     => java.lang.Float.compare(x, y)
-    case (x: String, y: String)   => x.compareTo(y)
+    case (x: Double, y: Double)   => SQLOrderingUtil.compareDoubles(x, y)
+    case (x: Float, y: Float)     => SQLOrderingUtil.compareFloats(x, y)
+    case (x: String, y: String)   =>
+      UTF8String.fromString(x).binaryCompare(UTF8String.fromString(y))
     case (x: java.sql.Timestamp, y: java.sql.Timestamp) => x.compareTo(y)
     case (x: java.math.BigDecimal, y: java.math.BigDecimal) => x.compareTo(y)
     case (x, y)                   => x.toString.compareTo(y.toString)
@@ -363,9 +369,11 @@ object EventFeatureStream {
           !keyNull && !r.isNullAt(tIdx) && !r.isNullAt(typeIdx))
         if (valid.isEmpty) Iterator.empty
         else {
+          // (time, id, type): the batch operator's turn-struct order
           val ordered = valid.sortWith { (a, b) =>
             val c = java.lang.Long.compare(a.getLong(tIdx), b.getLong(tIdx))
-            if (c != 0) c < 0 else cmpId(a.get(idIdx), b.get(idIdx)) < 0
+            val ci = if (c != 0) c else cmpId(a.get(idIdx), b.get(idIdx))
+            (if (ci != 0) ci else cmpId(a.get(typeIdx), b.get(typeIdx))) < 0
           }
           var (lastT, sess, turns) = state.getOption match {
             case Some(s) if s.getBoolean(3) =>
@@ -459,18 +467,19 @@ object EventFeatureStream {
             concat_ws(Sep, col(key), col("bin_start_us"), lit(epoch))
               .as("bin_key"),
             col(key), col("bin_start_us"), col("n_events"))
-          ManifestStore.upsert(rows, storeDir)
+          val head = ManifestStore.upsert(rows, storeDir)
           // full history of the touched keys only — pruned below the
           // version window (safe: `key` is embedded in the row key, so
           // the predicate is version-invariant)
           val hist = ManifestStore
-            .readWhere(spark, storeDir, "bin_key", col(key).isin(touched: _*))
+            .readWhere(spark, storeDir, head, "bin_key", col(key).isin(touched: _*))
             .groupBy(col(key), col("bin_start_us"))
             .agg(sum(col("n_events")).as("n_events"))
             .pin() // the flag helper reads it twice
           sink(graft.ops.EventFeatures.flagBins(hist, key, factorX100), epoch)
-          ManifestStore.compactOnCadence(spark, storeDir, compactEvery)(
+          ManifestStore.compactOnCadence(spark, storeDir, compactEvery, head)(
             ManifestStore.compact(spark, storeDir, "bin_key"))
+          ()
         } else sink(
           graft.ops.EventFeatures.flagBins(
             bins.withColumn("bin_start_us", col("bin_start_us").cast("long")),

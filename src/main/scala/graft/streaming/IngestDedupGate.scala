@@ -56,7 +56,7 @@ object IngestDedupGate {
 
   private def readPart(spark: SparkSession, dir: String,
                        m: ManifestStore.Manifest, part: String): DataFrame =
-    m.dirs.map { case (_, rel) => spark.read.parquet(s"$dir/$rel/$part") }
+    m.dirs.map { case (_, rel) => graft.core.Parquet.readImmutable(spark, s"$dir/$rel/$part") }
       .reduce(_.unionByName(_))
 
   /** The store's band rows (id, band, bkey, hashes), pinned to the
@@ -354,10 +354,10 @@ object IngestDedupGate {
     * hard link on POSIX, create-if-absent rename on HDFS). A crash
     * anywhere before the commit leaves an unreferenced dir that no
     * reader ever sees; there is no state where one table has the batch
-    * and the other does not.
+    * and the other does not. Returns the committed manifest.
     */
   def appendToStore(novelFeats: DataFrame, name: String,
-                    idCol: String = "doc_id"): Unit = {
+                    idCol: String = "doc_id"): ManifestStore.Manifest = {
     val spark = novelFeats.sparkSession
     val bandRows = Dedup.bands(novelFeats, idCol)
       .filter(col("bkey").isNotNull)
@@ -376,10 +376,10 @@ object IngestDedupGate {
     * commits a manifest referencing only it. A month of 5-minute batches
     * otherwise costs ~8.6k file sets per listing — run this on a
     * maintenance cadence; [[ManifestStore.vacuum]] over [[storeDir]]
-    * reclaims the superseded dirs.
+    * reclaims the superseded dirs. Returns the committed manifest.
     */
   def compactStore(spark: SparkSession, name: String,
-                   idCol: String = "doc_id"): Unit = {
+                   idCol: String = "doc_id"): ManifestStore.Manifest = {
     val dir = storeDir(spark, name)
     ManifestStore.commitVersion(spark, dir, replace = true) { (m0, path) =>
       writeSorted(readPart(spark, dir, m0, "bands"), s"$path/bands", "bkey")
@@ -446,9 +446,10 @@ object IngestDedupGate {
         val novel = filterNovel(b, name, idCol, textCol, jaccardNum,
           jaccardDen, isinChunk)
         sink(b.join(novel.select(col(idCol)), Seq(idCol), "left_semi"), epoch)
-        appendToStore(novel, name, idCol)
         ManifestStore.compactOnCadence(spark, storeDir(spark, name),
-          compactEvery)(compactStore(spark, name, idCol))
+          compactEvery, appendToStore(novel, name, idCol))(
+          compactStore(spark, name, idCol))
+        ()
       }
       .start()
 }

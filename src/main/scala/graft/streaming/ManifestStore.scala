@@ -136,19 +136,23 @@ object ManifestStore {
     * manifest names it, so a crash in between leaves an unreferenced
     * dir no reader sees (and [[vacuum]] spares while its version is
     * ahead of the head). With no commit yet the head is version 0 with
-    * no dirs, and a `replace` is a no-op.
+    * no dirs, and a `replace` is a no-op. Returns the head after the
+    * call — the committed manifest — so the single writer's cadence
+    * check and read-back need not list the store again.
     */
   private[streaming] def commitVersion(spark: SparkSession, dir: String,
                                        replace: Boolean)
-                                      (write: (Manifest, String) => Unit): Unit = {
+                                      (write: (Manifest, String) => Unit): Manifest = {
     val head = latestManifest(spark, dir)
-    if (!replace || head.nonEmpty) {
-      val m0 = head.getOrElse(Manifest(0L, Nil))
+    val m0 = head.getOrElse(Manifest(0L, Nil))
+    if (replace && head.isEmpty) m0
+    else {
       val v = m0.version + 1
       val rel = s"d-$v-${java.util.UUID.randomUUID().toString.take(8)}"
       write(m0, s"$dir/$rel")
-      commit(spark, dir,
-        Manifest(v, (if (replace) Nil else m0.dirs) :+ (v -> rel)))
+      val m = Manifest(v, (if (replace) Nil else m0.dirs) :+ (v -> rel))
+      commit(spark, dir, m)
+      m
     }
   }
 
@@ -156,8 +160,9 @@ object ManifestStore {
     * most one row per key (the [[LatestByKey]] contract) and an `__op`
     * column ('d' rows are tombstones, anything else upserts); plain
     * upsert batches go through [[upsert]], which adds `__op = 'u'`.
+    * Returns the committed manifest.
     */
-  def applyChanges(latest: DataFrame, dir: String): Unit = {
+  def applyChanges(latest: DataFrame, dir: String): Manifest = {
     require(latest.columns.contains("__op"),
       "applyChanges needs an __op column; use upsert() for plain upserts")
     commitVersion(latest.sparkSession, dir, replace = false) { (_, path) =>
@@ -166,9 +171,9 @@ object ManifestStore {
   }
 
   /** Upsert-only change batch (no tombstones); the first one creates the
-    * store.
+    * store. Returns the committed manifest.
     */
-  def upsert(latest: DataFrame, dir: String): Unit =
+  def upsert(latest: DataFrame, dir: String): Manifest =
     applyChanges(latest.withColumn("__op", lit("u")), dir)
 
   /** Seed the store with its initial table state as version 1. */
@@ -184,21 +189,28 @@ object ManifestStore {
     * immutable and stay on disk until [[vacuum]].
     */
   def read(spark: SparkSession, dir: String, key: String): DataFrame =
-    readWhere(spark, dir, key, lit(true))
+    readWherePruned(spark, dir, head(spark, dir), key, identity)
 
-  /** [[read]] with a predicate applied BELOW the latest-version window,
-    * directly on the version-dir parquet scans — the pruned read a
-    * per-batch consumer needs (scanning and window-sorting the whole
-    * store to look at a batch's keys would make batch cost grow with
-    * store size). ONLY safe when `pred` is functionally determined by
-    * the row key — every version of a key row satisfies it or none
+  /** The highest committed manifest; fails if the store has none. */
+  private def head(spark: SparkSession, dir: String): Manifest =
+    latestManifest(spark, dir).getOrElse(
+      throw new IllegalStateException(s"no committed version under $dir — seed() first"))
+
+  /** The merged view of manifest `m` (the store's single writer reads
+    * back the head its own commit returned) with a predicate applied
+    * BELOW the latest-version window, directly on the version-dir
+    * parquet scans — the pruned read a per-batch consumer needs
+    * (scanning and window-sorting the whole store to look at a batch's
+    * keys would make batch cost grow with store size). ONLY safe when
+    * `pred` is functionally determined by the row key — every version
+    * of a key row satisfies it or none
     * (e.g. a predicate on the key itself, or on an immutable attribute
     * the key embeds); a predicate on a MUTABLE column would instead
     * resurrect an older version of a row whose latest version fails it.
     */
-  def readWhere(spark: SparkSession, dir: String, key: String,
+  def readWhere(spark: SparkSession, dir: String, m: Manifest, key: String,
                 pred: Column): DataFrame =
-    readWherePruned(spark, dir, key, _.filter(pred))
+    readWherePruned(spark, dir, m, key, _.filter(pred))
 
   /** [[readWhere]] generalized to a scan-level PRUNING FUNCTION: `prune`
     * is applied to the unioned version-dir scans BELOW the
@@ -209,22 +221,13 @@ object ManifestStore {
     * The same key-determinism caveat as [[readWhere]] applies: `prune`
     * must keep or drop ALL versions of a key's rows together.
     */
-  def readWherePruned(spark: SparkSession, dir: String, key: String,
-                      prune: DataFrame => DataFrame): DataFrame =
-    merged(spark, dir, latestManifest(spark, dir).getOrElse(
-      throw new IllegalStateException(s"no committed version under $dir — seed() first")),
-      key, prune)
-
-  /** The merged view of manifest `m`'s dirs, `prune` applied below the
-    * latest-version window.
-    */
-  private def merged(spark: SparkSession, dir: String, m: Manifest,
-                     key: String, prune: DataFrame => DataFrame): DataFrame = {
+  def readWherePruned(spark: SparkSession, dir: String, m: Manifest,
+                      key: String, prune: DataFrame => DataFrame): DataFrame = {
     // allowMissingColumns: version dirs may differ in columns (e.g. a
     // maintain stream carrying its version-ts column over a seed that
     // lacked it) — absent columns read as null, dim-store schema drift
     val all = m.dirs.map { case (v, rel) =>
-      spark.read.parquet(s"$dir/$rel").withColumn("__v", lit(v))
+      graft.core.Parquet.readImmutable(spark, s"$dir/$rel").withColumn("__v", lit(v))
     }.reduce(_.unionByName(_, allowMissingColumns = true))
     val w = Window.partitionBy(col(key)).orderBy(col("__v").desc)
     prune(all).withColumn("__rn", row_number().over(w))
@@ -235,11 +238,11 @@ object ManifestStore {
 
   /** Fold merge-on-read history into a single version dir (read cost
     * back to one file set). Old dirs stay on disk for pinned readers
-    * until [[vacuum]].
+    * until [[vacuum]]. Returns the committed manifest.
     */
-  def compact(spark: SparkSession, dir: String, key: String): Unit =
+  def compact(spark: SparkSession, dir: String, key: String): Manifest =
     commitVersion(spark, dir, replace = true) { (m0, path) =>
-      merged(spark, dir, m0, key, identity).withColumn("__op", lit("u"))
+      readWherePruned(spark, dir, m0, key, identity).withColumn("__op", lit("u"))
         .write.parquet(path)
     }
 
@@ -290,10 +293,12 @@ object ManifestStore {
     */
   private val CadenceKeep = 2
 
-  /** Every store maintainer's one compaction cadence: once the committed
-    * manifest references ≥ `compactEvery` dirs (`0` = never), run `fold`
-    * (the store's compaction onto one dir — [[compact]] for a
-    * merge-on-read store) and then [[vacuum]] past [[CadenceKeep]].
+  /** Every store maintainer's one compaction cadence: once `head`, the
+    * manifest the maintainer's batch just committed, references
+    * ≥ `compactEvery` dirs (`0` = never), run `fold` (the store's
+    * compaction onto one dir — [[compact]] for a merge-on-read store)
+    * and then [[vacuum]] past [[CadenceKeep]]. Returns the head after
+    * the call: `fold`'s commit, or `head` when the cadence did not fire.
     * Counting DIRS rather than batches makes it restart-safe: a resumed
     * query sees the store as it is, not a counter that died with the
     * previous driver. Callers run it AFTER their batch's own commit, so
@@ -302,13 +307,13 @@ object ManifestStore {
     * batch forever.
     */
   private[streaming] def compactOnCadence(spark: SparkSession, dir: String,
-                                          compactEvery: Int)
-                                         (fold: => Unit): Unit =
-    if (compactEvery > 0 &&
-        latestManifest(spark, dir).exists(_.dirs.size >= compactEvery)) {
-      fold
+                                          compactEvery: Int, head: Manifest)
+                                         (fold: => Manifest): Manifest =
+    if (compactEvery > 0 && head.dirs.size >= compactEvery) {
+      val folded = fold
       vacuum(spark, dir, CadenceKeep)
-    }
+      folded
+    } else head
 
   /** Maintain the store as the latest-by-key view of a version stream.
     * Update-mode changelog: each micro-batch commits only the keys whose
@@ -326,9 +331,10 @@ object ManifestStore {
       .foreachBatch { (batch: Dataset[Row], _: Long) =>
         if (!batch.isEmpty) {
           val spark = batch.sparkSession
-          upsert(batch.toDF(), dir)
-          compactOnCadence(spark, dir, compactEvery)(compact(spark, dir, key))
+          compactOnCadence(spark, dir, compactEvery, upsert(batch.toDF(), dir))(
+            compact(spark, dir, key))
         }
+        ()
       }
       .start()
 
@@ -374,12 +380,13 @@ object ManifestStore {
         // again for the commit write
         if (!batch.isEmpty) {
           val spark = batch.sparkSession
-          applyChanges(
+          val head = applyChanges(
             cdcLatest(batch.toDF(), envelope, keyField).drop("__ts", "__seq"),
             dir)
-          compactOnCadence(spark, dir, compactEvery)(
+          compactOnCadence(spark, dir, compactEvery, head)(
             compact(spark, dir, keyField))
         }
+        ()
       }
       .start()
 

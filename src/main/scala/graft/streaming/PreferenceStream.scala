@@ -138,10 +138,10 @@ object PreferenceStream {
     val rows = partial.select(
       concat_ws(Sep, keyGuard, lit(epoch)).as("row_key"),
       col("prompt"), col("c"), col("r"), col("n"))
-    ManifestStore.upsert(rows, storeDir)
-    ManifestStore.compactOnCadence(spark, storeDir, compactEvery)(
+    val head = ManifestStore.compactOnCadence(spark, storeDir, compactEvery,
+      ManifestStore.upsert(rows, storeDir))(
       ManifestStore.compact(spark, storeDir, "row_key"))
-    pairsOf(prunedStoreRead(spark, storeDir, "prompt", touched, partial,
+    pairsOf(prunedStoreRead(spark, storeDir, head, "prompt", touched, partial,
       isinChunk, pushdownKeyLimit), promptCol, minMargin)
   }
 
@@ -155,14 +155,14 @@ object PreferenceStream {
     * 10⁵–10⁶-key IN tree would bloat codegen besides).
     */
   private def prunedStoreRead(spark: SparkSession, storeDir: String,
-                              keyCol: String, touched: Seq[String],
-                              partial: DataFrame, isinChunk: Int,
-                              pushdownKeyLimit: Int): DataFrame =
+                              head: ManifestStore.Manifest, keyCol: String,
+                              touched: Seq[String], partial: DataFrame,
+                              isinChunk: Int, pushdownKeyLimit: Int): DataFrame =
     if (touched.size <= pushdownKeyLimit)
-      ManifestStore.readWherePruned(spark, storeDir, "row_key",
+      ManifestStore.readWherePruned(spark, storeDir, head, "row_key",
         IngestDedupGate.prunedByKeys(_, keyCol, touched, isinChunk))
     else
-      ManifestStore.read(spark, storeDir, "row_key")
+      ManifestStore.readWherePruned(spark, storeDir, head, "row_key", identity)
         .join(broadcast(partial.select(col(keyCol)).distinct()),
           Seq(keyCol), "left_semi")
 
@@ -287,10 +287,10 @@ object PreferenceStream {
         .as("row_key"),
       col("conv"), col("turn_idx"), col("role"), col("content"),
       lit(epoch).as("epoch"))
-    ManifestStore.upsert(rows, storeDir)
-    ManifestStore.compactOnCadence(spark, storeDir, compactEvery)(
+    val head = ManifestStore.compactOnCadence(spark, storeDir, compactEvery,
+      ManifestStore.upsert(rows, storeDir))(
       ManifestStore.compact(spark, storeDir, "row_key"))
-    renderOf(prunedStoreRead(spark, storeDir, "conv", touched, batchTurns,
+    renderOf(prunedStoreRead(spark, storeDir, head, "conv", touched, batchTurns,
       isinChunk, pushdownKeyLimit), convCol)
   }
 

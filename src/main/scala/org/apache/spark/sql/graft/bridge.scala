@@ -6,8 +6,9 @@ import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.types.{AbstractDataType, DataType, TypeCollection}
 
 /** Bridge into Spark's `private[sql]` Column↔Expression converters
-  * (Spark 4 removed the public `new Column(Expression)` constructor) and
-  * its `private[spark]` Hadoop-configuration builder. Lives in the
+  * (Spark 4 removed the public `new Column(Expression)` constructor),
+  * its `private[spark]` Hadoop-configuration builder and its listener
+  * bus. Lives in the
   * org.apache.spark.sql package tree purely for access; contains no
   * Spark-internal logic of its own.
   */
@@ -39,4 +40,8 @@ object Bridge {
     */
   def hadoopConf(conf: org.apache.spark.SparkConf): org.apache.hadoop.conf.Configuration =
     org.apache.spark.deploy.SparkHadoopUtil.get.newConfiguration(conf)
+
+  /** Wait until every listener event posted so far has been delivered. */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
 }

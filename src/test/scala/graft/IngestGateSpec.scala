@@ -1265,6 +1265,48 @@ class IngestGateSpec extends SparkSuite {
     assert(got.asScala.toSeq == batch, s"stream ${got.asScala.toSeq}")
   }
 
+  test("streaming session transcripts order same-time ids as Spark does: UTF-8 string order, -0.0 equal to 0.0") {
+    import spark.implicits._
+    /** The closed session's transcript from the stream and from the
+      * batch operator, over `events` (event_id, user_id, ts, event_type).
+      */
+    def transcripts(events: org.apache.spark.sql.DataFrame): (Seq[String], Seq[String]) = {
+      val got = new ConcurrentLinkedQueue[String]()
+      val srcDir = java.nio.file.Files.createTempDirectory("sts-sql-src").toString
+      val ckpt = java.nio.file.Files.createTempDirectory("sts-sql-ckpt").toString
+      events.coalesce(1).write.mode("append").parquet(srcDir)
+      val q = graft.streaming.EventFeatureStream.sessionTranscripts(
+          spark.readStream.schema(events.schema).parquet(srcDir),
+          keys = Seq("user_id"), timeCol = "ts", idCol = "event_id",
+          typeCol = "event_type", sessionGap = 1000L)
+        .writeStream.option("checkpointLocation", ckpt)
+        .foreachBatch { (out: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+          out.select("transcript").collect().foreach(r => got.add(r.getString(0)))
+        }.start()
+      try q.processAllAvailable() finally q.stop()
+      val batch = graft.ops.EventFeatures.sessionTranscripts(events,
+          keys = Seq("user_id"), timeCol = "ts", idCol = "event_id",
+          typeCol = "event_type", sessionGap = 1000L)
+        .filter(col("session_idx") === 1).select("transcript")
+        .as[String].collect().toSeq
+      (got.asScala.toSeq, batch)
+    }
+    // U+1F600 is a surrogate pair (0xD83D…) in UTF-16, below U+E000;
+    // in UTF-8 (F0 9F …) it sorts above U+E000 (EE 80 80)
+    val (s1, b1) = transcripts(Seq(("😀", 1L, 100L, "second"),
+        ("", 1L, 100L, "first"), ("z", 1L, 5000L, "later"))
+      .toDF("event_id", "user_id", "ts", "event_type"))
+    assert(b1 == Seq("first second"))
+    assert(s1 == b1, s"stream $s1")
+    // -0.0 and 0.0 are one id value: the batch sort falls through to
+    // the turn type
+    val (s2, b2) = transcripts(Seq((0.0, 1L, 100L, "first"),
+        (-0.0, 1L, 100L, "second"), (1.0, 1L, 5000L, "later"))
+      .toDF("event_id", "user_id", "ts", "event_type"))
+    assert(b2 == Seq("first second"))
+    assert(s2 == b2, s"stream $s2")
+  }
+
   test("streaming rate anomalies accumulate bin history in the store and match the batch operator") {
     import spark.implicits._
     val got = new ConcurrentLinkedQueue[(Long, Long, Long, Long, Long, Long)]()

@@ -1822,6 +1822,29 @@ class LlmOpsSpec extends SparkSuite {
     assert(self == ((1L, 0L, 1L, 0L)), s"self-scored: $self")
   }
 
+  test("self-scored trigram surprisal equals the backoff scorer under the corpus' own model") {
+    import spark.implicits._
+    // the corpus plus edge texts: null, fewer than 3 words, double and
+    // leading spaces (empty words), a trigram repeated in one doc, and
+    // multi-byte UTF-8
+    val edge = (Fixtures.edgeTexts ++ Seq(null, "x y", "  a b", "p  q r",
+        "a b c a b c a b c", "日本 語 テキスト 日本 語 テキスト", "z z z z"))
+      .zipWithIndex.map { case (t, i) => (1000000L + i, t) }
+    val docs = Tables.documents(spark, sf).select("doc_id", "text")
+      .unionByName(edge.toDF("doc_id", "text"))
+    val ta = graft.ext.TextAnalysis
+    // the reference: the held-out scorer under a model of the same docs
+    val reference = ta.trigramScoreWith(docs, ta.trigramModel(docs))
+    val got = ta.trigramSurprisal(docs)
+    assert(got.schema == reference.schema)
+    assert(got.count() == docs.count())
+    assert(got.exceptAll(reference).isEmpty && reference.exceptAll(got).isEmpty)
+    // the edge rows are scored, not only the corpus
+    val repeated = got.filter($"doc_id" === edge.indexWhere(_._2 == "a b c a b c a b c") + 1000000L)
+      .select("n_trigrams").as[Long].head()
+    assert(repeated == 7L)
+  }
+
   test("perplexity buckets accept a pluggable scorer (trigram drop-in)") {
     import spark.implicits._
     var u = 0

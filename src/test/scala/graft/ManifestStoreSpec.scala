@@ -1,15 +1,31 @@
 package graft
 
-import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 import scala.jdk.CollectionConverters._
+import org.apache.hadoop.fs.{FileStatus, FileSystem, LocalFileSystem, Path}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import graft.ops.RatingsOps
-import graft.streaming.ManifestStore
+import graft.streaming.{ManifestStore, PreferenceStream}
 
 object ManifestStoreSpec {
   val joined = new ConcurrentLinkedQueue[(Int, String)]()
   val enriched = new ConcurrentLinkedQueue[(Long, String)]()
+}
+
+/** The local filesystem, counting LIST calls per directory. Hadoop's
+  * `FileSystem.Statistics` for `file` cannot: RawLocalFileSystem counts
+  * no read operations.
+  */
+class ListCountingFileSystem extends LocalFileSystem {
+  override def listStatus(f: Path): Array[FileStatus] = {
+    ListCountingFileSystem.lists.merge(makeQualified(f).toString, 1L, _ + _)
+    super.listStatus(f)
+  }
+}
+
+object ListCountingFileSystem {
+  val lists = new ConcurrentHashMap[String, Long]()
 }
 
 /** Transactional dim store: atomic manifest commits, snapshot-pinned
@@ -38,6 +54,34 @@ class ManifestStoreSpec extends SparkSuite {
     val fresh = ManifestStore.read(spark, mdir, "id")
       .collect().map(r => (r.getInt(0), r.getString(1))).toMap
     assert(fresh(5) == "NEW5" && fresh(7) == "NEW7" && fresh.size == 20)
+  }
+
+  test("a maintainer batch lists the store dir once: its commit's manifest feeds the cadence check and the read-back") {
+    import spark.implicits._
+    val dir = tmp("mstore-lists")
+    def batch(e: Long) = PreferenceStream.mergeDpoBatch(
+      Seq(("p", 10L + e, 5L), ("p", 20L + e, 1L), ("q", 30L + e, 2L))
+        .toDF("prompt_id", "response_id", "score"),
+      dir, epoch = e, compactEvery = 100)
+    batch(0L).collect() // creates the store
+    val conf = spark.sparkContext.hadoopConfiguration
+    val saved = Seq("fs.file.impl", "fs.file.impl.disable.cache")
+      .map(k => k -> Option(conf.get(k)))
+    conf.set("fs.file.impl", classOf[ListCountingFileSystem].getName)
+    conf.setBoolean("fs.file.impl.disable.cache", true)
+    val key = FileSystem.getLocal(conf).makeQualified(new Path(dir)).toString
+    try {
+      val lists = (1L to 3L).map { e =>
+        val before = ListCountingFileSystem.lists.getOrDefault(key, 0L)
+        assert(batch(e).collect().nonEmpty)
+        ListCountingFileSystem.lists.getOrDefault(key, 0L) - before
+      }
+      info(s"store-dir LISTs per batch: ${lists.mkString(", ")}")
+      assert(lists == Seq(1L, 1L, 1L))
+    } finally saved.foreach {
+      case (k, Some(v)) => conf.set(k, v)
+      case (k, None) => conf.unset(k)
+    }
   }
 
   test("commit race: the second writer of one version fails loudly, never silently overwrites") {

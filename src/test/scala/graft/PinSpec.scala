@@ -1,10 +1,7 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.{Checkpoints, ListenerBus, SparkException}
+import org.apache.spark.{Checkpoints, SparkException}
 import org.apache.spark.rdd.RDD
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
@@ -29,19 +26,6 @@ class PinSpec extends SparkSuite {
 
   private def tempDir(): String =
     java.nio.file.Files.createTempDirectory("pin-spec").toString
-
-  /** Jobs started while `body` runs. */
-  private def jobsDuring(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val started = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = started.incrementAndGet()
-    }
-    ListenerBus.drain(sc)
-    sc.addSparkListener(listener)
-    try { body; ListenerBus.drain(sc) } finally sc.removeSparkListener(listener)
-    started.get
-  }
 
   test("local policy: a pin whose blocks are lost fails the next action instead of recomputing") {
     val sc = spark.sparkContext
@@ -68,10 +52,26 @@ class PinSpec extends SparkSuite {
     val sc = spark.sparkContext
     assert(sc.getCheckpointDir.isEmpty)
     val source = frame
-    assert(jobsDuring(source.pinLazily()) == 0)
+    assert(jobsStarted(source.pinLazily()).isEmpty)
     Checkpoints.withDir(sc, tempDir()) {
-      assert(jobsDuring(source.pinLazily()) == 1)
+      assert(jobsStarted(source.pinLazily()).size == 1)
     }
     assert(sc.getCheckpointDir.isEmpty)
+  }
+
+  test("a pin's jobs, AQE stage jobs included, are described by the operator that pinned") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val docs = Seq((1L, "a b c a b"), (2L, "b c d")).toDF("doc_id", "text")
+    sc.setJobDescription("caller")
+    try {
+      // trigramModel pins its (level, gram) aggregation: AQE runs the
+      // shuffle stage as its own job before the pin's result job
+      val jobs = jobsStarted(graft.ext.TextAnalysis.trigramModel(docs))
+      val descriptions = jobs.map(_.properties.getProperty("spark.job.description"))
+      assert(jobs.size >= 2, descriptions)
+      assert(descriptions.forall(_ == "TextAnalysis.trigramModel/pin"), descriptions)
+      assert(sc.getLocalProperty("spark.job.description") == "caller")
+    } finally sc.setJobDescription(null)
   }
 }

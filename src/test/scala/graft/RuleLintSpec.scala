@@ -25,8 +25,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * graft.streaming.ManifestStore only: a `"d-` version-dir name, a
   * `ManifestStore.Manifest(` or a `ManifestStore.commit(` anywhere else
   * fails it, and so does any main or test source naming the deleted
-  * raw-parquet dim store (whose concurrent reads could tear).
-  * Exemptions:
+  * raw-parquet dim store (whose concurrent reads could tear). Parquet is
+  * read through graft.core.Parquet only, which reuses inferred schemas:
+  * a `.read.parquet(` anywhere else, which starts a schema-inference job
+  * per call, fails it. Exemptions:
   *
   *  - queries/LlmOracle.scala keeps its own moduli, its own word splits
   *    and its own band-layout parameters: its DuckDB replay text is the
@@ -74,6 +76,7 @@ class RuleLintSpec extends AnyFunSuite {
     """"d-|ManifestStore\.Manifest\(|ManifestStore\.commit\(""".r
   // the character class keeps this spec's own source from naming it
   private val RawDimStore = """\bChangelog[D]im\b""".r
+  private val ParquetRead = """\.read\s*\.\s*parquet\(""".r
 
   /** Offset just past the paren that closes the one at `open`. */
   private def closing(src: String, open: Int): Int = {
@@ -186,5 +189,17 @@ class RuleLintSpec extends AnyFunSuite {
         case (file, src) if RawDimStore.findFirstIn(src).isDefined => file
       }
     assert(named == Nil)
+  }
+
+  test("parquet is read only through graft.core.Parquet, which reuses inferred schemas") {
+    assert(ParquetRead.findFirstIn("""val df = spark.read.parquet(path)""").isDefined)
+    assert(ParquetRead.findFirstIn("spark.read\n  .parquet(dir)").isDefined)
+    assert(ParquetRead.findFirstIn("""df.write.parquet(path)""").isEmpty)
+    assert(ParquetRead.findFirstIn("""spark.readStream.schema(s).parquet(dir)""").isEmpty)
+    // whole sources, not lines: a call split across lines counts too
+    val readers = sources.toSeq.sortBy(_._1).collect {
+      case (file, src) if ParquetRead.findFirstIn(src).isDefined => file
+    }
+    assert(readers == Seq("graft/core/Parquet.scala"))
   }
 }

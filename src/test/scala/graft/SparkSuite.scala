@@ -1,5 +1,10 @@
 package graft
 
+import java.util.concurrent.ConcurrentLinkedQueue
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.ListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.core.Sessions
@@ -12,6 +17,19 @@ trait SparkSuite extends AnyFunSuite {
 
   def rows(df: DataFrame): Set[String] =
     df.collect().map(_.toString).toSet
+
+  /** The start events of the jobs started while `body` runs. */
+  def jobsStarted(body: => Any): Seq[SparkListenerJobStart] = {
+    val sc = spark.sparkContext
+    val started = new ConcurrentLinkedQueue[SparkListenerJobStart]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = started.add(e)
+    }
+    ListenerBus.drain(sc)
+    sc.addSparkListener(listener)
+    try { body; ListenerBus.drain(sc) } finally sc.removeSparkListener(listener)
+    started.asScala.toSeq
+  }
 
   /** Reference-shaped fixtures (customers.sql:26–45 analog: 20 customers,
     * 4 club tiers; ratings shaped like the datagen stream, SURVEY §1.2).
