@@ -199,9 +199,7 @@ object StreamBench {
     val ms = MemoryStream[(Long, Long, Long, Long)]
     val rows = new java.util.concurrent.atomic.AtomicLong
     val feats = graft.streaming.EventFeatureStream.lagFeatures(
-      ms.toDF().toDF("event_id", "user_id", "ts", "value"),
-      keys = Seq("user_id"), timeCol = "ts", idCol = "event_id",
-      valueCol = "value", sessionGap = 1000L * 100L)
+      ms.toDF().toDF("event_id", "user_id", "ts", "value"), sessionGap = 1000L * 100L)
     val q = feats.writeStream
       .queryName(s"${tag}_feats")
       .option("checkpointLocation",

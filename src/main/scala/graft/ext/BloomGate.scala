@@ -69,31 +69,26 @@ object BloomGate {
     * corpus-vs-corpus scale pass a persisted gram table and size
     * `numBits` to its cardinality.
     */
-  def decontaminateAgainst(corpus: DataFrame, grams: DataFrame,
-                           idCol: String = "doc_id", textCol: String = "text",
-                           n: Int = 3, minOverlap: Int = 1,
+  def decontaminateAgainst(corpus: DataFrame, grams: DataFrame, minOverlap: Int = 1,
                            numBits: Int = DefaultNumBits,
                            k: Int = DefaultK): DataFrame = {
     require(minOverlap >= 1, s"minOverlap must be >= 1, got $minOverlap")
     val bits = buildBits(grams, col("gram"), numBits, k)
-    val report = corpus.select(col(idCol),
-        explode(Dedup.shingleHashes(col(textCol), n)).as("gram"))
+    val report = corpus.select(col("doc_id"),
+        explode(Dedup.shingleHashes(col("text"), 3)).as("gram"))
       .filter(mightContain(col("gram"), bits, numBits, k))
       .join(grams, "gram")
-      .groupBy(col(idCol))
+      .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("overlap_grams"))
       .filter(col("overlap_grams") >= minOverlap)
-    corpus.join(report.select(col(idCol)), Seq(idCol), "left_anti")
+    corpus.join(report.select(col("doc_id")), Seq("doc_id"), "left_anti")
   }
 
   /** [[decontaminateAgainst]] with the gram set derived from the bench
     * relation inline (distinct shingle hashes).
     */
-  def decontaminate(corpus: DataFrame, bench: DataFrame,
-                    idCol: String = "doc_id", textCol: String = "text",
-                    n: Int = 3, minOverlap: Int = 1,
+  def decontaminate(corpus: DataFrame, bench: DataFrame, minOverlap: Int = 1,
                     numBits: Int = DefaultNumBits, k: Int = DefaultK): DataFrame =
     decontaminateAgainst(corpus,
-      Decontamination.benchmarkGrams(bench, textCol, n).pin(),
-      idCol, textCol, n, minOverlap, numBits, k)
+      Decontamination.benchmarkGrams(bench).pin(), minOverlap, numBits, k)
 }

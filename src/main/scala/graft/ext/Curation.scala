@@ -35,25 +35,21 @@ object Curation {
     * key hash, so no duplicate can straddle train/test). The leakage
     * guarantee requires the clustering to actually converge, so curate
     * runs the cluster chain STRICT by default: a component whose
-    * diameter exceeds `maxRounds` halts the job instead of silently
+    * diameter exceeds 50 rounds halts the job instead of silently
     * shipping a split cluster into train AND test — set
     * `strictClustering = false` only if a disclosed partial collapse is
     * acceptable.
     */
-  def curate(docs: DataFrame, idCol: String = "doc_id",
-             textCol: String = "text", minQuality: Int = 3,
-             splits: Seq[(String, Double)] =
-               Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1),
+  def curate(docs: DataFrame,
              jaccardNum: Int = 8, jaccardDen: Int = 10,
-             maxBucket: Int = Dedup.DefaultMaxBucketWidth,
-             maxRounds: Int = 50, strictClustering: Boolean = true): DataFrame = {
+             maxBucket: Int = Dedup.DefaultMaxBucketWidth): DataFrame = {
     val gated = docs
-      .withColumn("quality", TextAnalysis.qualityScore(col(textCol)).cast("long"))
-      .filter(col("quality") >= minQuality)
-    val kept = Dedup.dedupedCorpus(gated, idCol, textCol, jaccardNum,
-      jaccardDen, maxBucket, maxRounds, strictClustering)
-    Sampling.assignSplit(kept, col(idCol), splits)
-      .select(col(idCol), col("quality"), col("split"))
+      .withColumn("quality", TextAnalysis.qualityScore(col("text")).cast("long"))
+      .filter(col("quality") >= 3)
+    val kept = Dedup.dedupedCorpus(gated, jaccardNum,
+      jaccardDen, maxBucket, true)
+    Sampling.assignSplit(kept, col("doc_id"), Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1))
+      .select(col("doc_id"), col("quality"), col("split"))
   }
 
   /** Per-domain corpus profile — the mixture report a pipeline reads
@@ -67,11 +63,10 @@ object Curation {
     * domain-cardinality rows, the sketch a few KB per domain), joined
     * domain-keyed.
     */
-  def corpusProfile(docs: DataFrame, domainCol: String = "source",
-                    textCol: String = "text",
+  def corpusProfile(docs: DataFrame,
                     approxRsd: Double = 0.05): DataFrame = {
-    val t = col(textCol)
-    val exact = docs.groupBy(col(domainCol)).agg(
+    val t = col("text")
+    val exact = docs.groupBy(col("source")).agg(
       count(lit(1)).as("n_docs"),
       sum(when(t.isNull, 0L)
         .otherwise(TextAnalysis.tokenCount(t).cast("long"))).as("n_tokens"),
@@ -90,9 +85,9 @@ object Curation {
     // the exact count instead. The word explode is the zero-shuffle
     // WordTfs map over the scan.
     val sketch = docs.filter(t.isNotNull)
-      .select(col(domainCol),
+      .select(col("source"),
         explode(graft.functions.wordTfs(t)).as("wt"))
-      .groupBy(col(domainCol))
+      .groupBy(col("source"))
       .agg(approx_count_distinct(col("wt.word"), approxRsd)
         .as("approx_distinct_tokens"))
     // null-safe join (the null-domain group must keep its sketch row);
@@ -100,8 +95,8 @@ object Curation {
     // post-join drop() resolved the wrong instance and surfaced the
     // sketch side's null for domains with no text
     exact.join(sketch,
-        exact(domainCol) <=> sketch(domainCol), "left_outer")
-      .select(exact(domainCol), col("n_docs"), col("n_tokens"),
+        exact("source") <=> sketch("source"), "left_outer")
+      .select(exact("source"), col("n_docs"), col("n_tokens"),
         col("n_chars"), col("quality_sum"),
         coalesce(col("approx_distinct_tokens"), lit(0L))
           .as("approx_distinct_tokens"))
@@ -120,12 +115,10 @@ object Curation {
     * aggregations → one vocab-keyed full-outer join; the top-k is a
     * bounded TakeOrdered, never a vocabulary sort.
     */
-  def vocabDrift(oldDocs: DataFrame, newDocs: DataFrame, k: Int = 20,
-                 textCol: String = "text"): DataFrame = {
-    require(k > 0, s"k must be positive, got $k")
+  def vocabDrift(oldDocs: DataFrame, newDocs: DataFrame): DataFrame = {
     def counts(df: DataFrame, as: String): DataFrame = df
-      .filter(col(textCol).isNotNull)
-      .select(explode(graft.functions.wordTfs(col(textCol))).as("wt"))
+      .filter(col("text").isNotNull)
+      .select(explode(graft.functions.wordTfs(col("text"))).as("wt"))
       .groupBy(col("wt.word").as("word"))
       .agg(sum("wt.tf").cast("long").as(as))
     val o = counts(oldDocs, "c_old")
@@ -139,7 +132,7 @@ object Curation {
       .withColumn("__vd_sn", expr("c_new * 1000000 div __vd_tn"))
       .withColumn("drift_x1m", abs(col("__vd_sn") - col("__vd_so")))
       .orderBy(col("drift_x1m").desc, col("word"))
-      .limit(k)
+      .limit(20)
       .withColumn("rank", row_number().over(
         org.apache.spark.sql.expressions.Window
           .orderBy(col("drift_x1m").desc, col("word"))).cast("long"))
@@ -157,25 +150,18 @@ object Curation {
     * Scale shape: the audited NB plan + one id equi-join to re-attach
     * the domain + two bounded aggregations.
     */
-  def domainLangProfile(docs: DataFrame, labeled: DataFrame,
-                        domainCol: String = "source",
-                        labelCol: String = "lang",
-                        idCol: String = "doc_id",
-                        textCol: String = "text"): DataFrame =
+  def domainLangProfile(docs: DataFrame, labeled: DataFrame): DataFrame =
     domainLangRollup(docs, TextAnalysis
-      .classifyLangId(docs, labeled, labelCol, idCol, textCol),
-      domainCol, idCol)
+      .classifyLangId(docs, labeled, "doc_id"),
+      "source", "doc_id")
 
   /** [[domainLangProfile]] under a PERSISTED char-trigram bundle — the
     * train-once rung ([[langBalancedMixWith]]'s precedent).
     */
-  def domainLangProfileWith(docs: DataFrame, bundle: TextAnalysis.NbBundle,
-                            domainCol: String = "source",
-                            idCol: String = "doc_id",
-                            textCol: String = "text"): DataFrame =
+  def domainLangProfileWith(docs: DataFrame, bundle: TextAnalysis.NbBundle): DataFrame =
     domainLangRollup(docs,
-      TextAnalysis.classifyWith(docs, bundle, idCol, textCol),
-      domainCol, idCol)
+      TextAnalysis.classifyWith(docs, bundle, "doc_id"),
+      "source", "doc_id")
 
   /** The per-domain prediction rollup shared by both profile paths —
     * one definition of the (count DESC, label ASC) dominant-language
@@ -215,9 +201,8 @@ object Curation {
     * spread; the three 1-row results attach by broadcast crossJoin
     * (the stat-attachment pattern).
     */
-  def corpusReport(docs: DataFrame, textCol: String = "text",
-                   langCol: String = "lang"): DataFrame = {
-    val t = col(textCol)
+  def corpusReport(docs: DataFrame): DataFrame = {
+    val t = col("text")
     val base = docs.agg(
       count(lit(1)).as("n_docs"),
       sum(when(t.isNull, 1L).otherwise(0L)).as("n_null_text"),
@@ -229,12 +214,12 @@ object Curation {
     val dups = docs.filter(t.isNotNull).agg(
       (count(lit(1)) - countDistinct(graft.functions.polyFingerprint(t)))
         .cast("long").as("n_dup_docs"))
-    val langCounts = docs.filter(col(langCol).isNotNull)
-      .groupBy(col(langCol)).agg(count(lit(1)).as("__cr_c"))
+    val langCounts = docs.filter(col("lang").isNotNull)
+      .groupBy(col("lang")).agg(count(lit(1)).as("__cr_c"))
     val langs = langCounts.agg(
       count(lit(1)).as("n_langs"),
       sum("__cr_c").as("__cr_n"),
-      min(struct((-col("__cr_c")).as("negc"), col(langCol).as("l")))
+      min(struct((-col("__cr_c")).as("negc"), col("lang").as("l")))
         .as("__cr_top"))
     base.crossJoin(broadcast(dups)).crossJoin(broadcast(langs))
       .select(col("n_docs"), col("n_null_text"), col("n_tokens"),
@@ -264,13 +249,11 @@ object Curation {
     * multiple, potentially contradictory (id, status) rows.
     * Deduplicate or pre-aggregate fingerprints per id first.
     */
-  def corpusDiff(oldDocs: DataFrame, newDocs: DataFrame,
-                 idCol: String = "doc_id",
-                 textCol: String = "text"): DataFrame = {
+  def corpusDiff(oldDocs: DataFrame, newDocs: DataFrame): DataFrame = {
     def fp(df: DataFrame, side: String) = df.select(
-      col(idCol).as(s"__${side}_id"),
-      graft.functions.polyFingerprint(col(textCol)).as(s"__${side}_fp"),
-      graft.functions.polyFingerprint(reverse(col(textCol)))
+      col("doc_id").as(s"__${side}_id"),
+      graft.functions.polyFingerprint(col("text")).as(s"__${side}_fp"),
+      graft.functions.polyFingerprint(reverse(col("text")))
         .as(s"__${side}_rfp"))
     fp(oldDocs, "old").join(fp(newDocs, "new"),
         col("__old_id") === col("__new_id"), "full_outer")
@@ -280,7 +263,7 @@ object Curation {
           .when(!(col("__old_fp") <=> col("__new_fp")) ||
             !(col("__old_rfp") <=> col("__new_rfp")), "changed"))
       .filter(col("status").isNotNull)
-      .select(coalesce(col("__old_id"), col("__new_id")).as(idCol),
+      .select(coalesce(col("__old_id"), col("__new_id")).as("doc_id"),
         col("status"))
   }
 
@@ -404,29 +387,27 @@ object Curation {
     * rank — the thresholds-then-assign decomposition is exactly why
     * this survives where `ntile(3) OVER (PARTITION BY domain)` dies.
     */
-  def perplexityBuckets(docs: DataFrame, domainCol: String = "source",
-                        idCol: String = "doc_id",
-                        textCol: String = "text",
-                        scorer: (DataFrame, String, String) => DataFrame =
-                          TextAnalysis.unigramSurprisal(_, _, _)): DataFrame = {
+  def perplexityBuckets(docs: DataFrame,
+                        scorer: DataFrame => DataFrame =
+                          TextAnalysis.unigramSurprisal(_)): DataFrame = {
     // `scorer` is pluggable (round-13 verdict ask #2): any
-    // (docs, idCol, textCol) => DataFrame producing one row per doc
+    // docs => DataFrame producing one row per doc
     // with a `mean_bits_x100` column — unigramSurprisal (default),
     // bigramSurprisal, trigramSurprisal, or a trigramScoreWith closure
     // over a pre-trained backoff model all fit the shape.
-    val scored = scorer(docs, idCol, textCol)
-      .select(col(idCol), col("mean_bits_x100"))
-      .join(docs.select(col(idCol), col(domainCol)), Seq(idCol))
+    val scored = scorer(docs)
+      .select(col("doc_id"), col("mean_bits_x100"))
+      .join(docs.select(col("doc_id"), col("source")), Seq("doc_id"))
       // pinned: the tercile histogram AND the assignment join both read
       // scored — without the pin the whole surprisal chain (two corpus
       // scans + three aggregations) runs twice (the duplicationProfile
       // lesson)
       .pin()
-    val thr = groupPercentiles(scored, domainCol, "mean_bits_x100",
+    val thr = groupPercentiles(scored, "source", "mean_bits_x100",
         Seq(33, 67))
-      .select(col(domainCol), col("p33"), col("p67"))
-    scored.join(broadcast(thr), Seq(domainCol), "left_outer")
-      .select(col(idCol), col(domainCol), col("mean_bits_x100"),
+      .select(col("source"), col("p33"), col("p67"))
+    scored.join(broadcast(thr), Seq("source"), "left_outer")
+      .select(col("doc_id"), col("source"), col("mean_bits_x100"),
         when(col("p33").isNull, lit(null).cast("string"))
           .when(col("mean_bits_x100") <= col("p33"), "head")
           .when(col("mean_bits_x100") <= col("p67"), "middle")
@@ -453,24 +434,18 @@ object Curation {
     * of [[perplexityBuckets]] and [[curate]] — no new corpus-sized
     * exchange beyond theirs.
     */
-  def ccnetCurate(docs: DataFrame, domainCol: String = "source",
-                  idCol: String = "doc_id", textCol: String = "text",
-                  keepBuckets: Seq[String] = Seq("head", "middle"),
-                  minQuality: Int = 3,
-                  splits: Seq[(String, Double)] =
-                    Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1),
-                  scorer: (DataFrame, String, String) => DataFrame =
-                    TextAnalysis.unigramSurprisal(_, _, _)): DataFrame = {
-    require(keepBuckets.nonEmpty, "ccnetCurate needs at least one kept bucket")
-    val buck = perplexityBuckets(docs, domainCol, idCol, textCol, scorer)
-      .select(col(idCol), col("mean_bits_x100"), col("bucket"))
+  def ccnetCurate(docs: DataFrame,
+                  scorer: DataFrame => DataFrame =
+                    TextAnalysis.unigramSurprisal(_)): DataFrame = {
+    val buck = perplexityBuckets(docs, scorer)
+      .select(col("doc_id"), col("mean_bits_x100"), col("bucket"))
       .pin()
     val kept = docs.join(
-      buck.filter(col("bucket").isin(keepBuckets: _*)).select(col(idCol)),
-      Seq(idCol))
-    curate(kept, idCol, textCol, minQuality, splits)
-      .join(buck, Seq(idCol))
-      .select(col(idCol), col("mean_bits_x100"), col("bucket"),
+      buck.filter(col("bucket").isin(Seq("head", "middle"): _*)).select(col("doc_id")),
+      Seq("doc_id"))
+    curate(kept)
+      .join(buck, Seq("doc_id"))
+      .select(col("doc_id"), col("mean_bits_x100"), col("bucket"),
         col("quality"), col("split"))
   }
 
@@ -506,30 +481,27 @@ object Curation {
     * [[Sampling.domainMixThresholds]] posture — domains are the unit
     * of the report, never corpus-sized).
     */
-  def domainReweight(docs: DataFrame, domainCol: String = "source",
-                     idCol: String = "doc_id", textCol: String = "text",
-                     scaleTo: Long = 10000L,
-                     proxyScorer: (DataFrame, String, String) => DataFrame =
-                       TextAnalysis.unigramSurprisal(_, _, _),
-                     refScorer: (DataFrame, String, String) => DataFrame =
-                       TextAnalysis.trigramSurprisal(_, _, _)): DataFrame = {
-    require(scaleTo >= 1, s"scaleTo must be positive, got $scaleTo")
+  def domainReweight(docs: DataFrame,
+                     proxyScorer: DataFrame => DataFrame =
+                       TextAnalysis.unigramSurprisal(_),
+                     refScorer: DataFrame => DataFrame =
+                       TextAnalysis.trigramSurprisal(_)): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    def rung(scorer: (DataFrame, String, String) => DataFrame,
+    def rung(scorer: DataFrame => DataFrame,
              sCol: String, nCol: String): DataFrame = {
-      val out = scorer(docs, idCol, textCol)
+      val out = scorer(docs)
       // rung contract: (idCol, surprisal, n_units, mean_bits_x100) —
       // read the unit column positionally so n_tokens/n_trigrams both fit
       val cols = out.columns
-      out.select(col(cols(0)).as(idCol), col(cols(1)).as(sCol),
+      out.select(col(cols(0)).as("doc_id"), col(cols(1)).as(sCol),
         col(cols(2)).as(nCol))
     }
     val p = rung(proxyScorer, "__dr_ps", "__dr_pn")
     val r = rung(refScorer, "__dr_rs", "__dr_rn")
-    val perDomain = docs.filter(col(domainCol).isNotNull)
-      .select(col(idCol), col(domainCol).as("domain"))
-      .join(p, Seq(idCol)).join(r, Seq(idCol))
+    val perDomain = docs.filter(col("source").isNotNull)
+      .select(col("doc_id"), col("source").as("domain"))
+      .join(p, Seq("doc_id")).join(r, Seq("doc_id"))
       .groupBy("domain")
       .agg(count(lit(1)).as("n_docs"),
         sum("__dr_ps").as("psur"), sum("__dr_pn").as("pn"),
@@ -548,7 +520,7 @@ object Curation {
     val weights =
       if (excess.forall(_._2 == 0L)) excess.map { case (dm, _) => (dm, 1L) }
       else excess
-    val quotas = Sampling.apportion(weights, scaleTo)
+    val quotas = Sampling.apportion(weights, 10000L)
     perDomain.join(broadcast(quotas.toDF("domain", "weight")), Seq("domain"))
       .select("domain", "n_docs", "proxy_bits_x100", "ref_bits_x100",
         "excess_x100", "weight")
@@ -571,15 +543,8 @@ object Curation {
     * training it, which at 100 TB is the difference between one and
     * two full-corpus vocab shuffles per curation run.
     */
-  def ccnetCurateWith(docs: DataFrame, lm: TextAnalysis.LmBundle,
-                      domainCol: String = "source",
-                      idCol: String = "doc_id", textCol: String = "text",
-                      keepBuckets: Seq[String] = Seq("head", "middle"),
-                      minQuality: Int = 3,
-                      splits: Seq[(String, Double)] =
-                        Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1)): DataFrame =
-    ccnetCurate(docs, domainCol, idCol, textCol, keepBuckets, minQuality,
-      splits, scorer = (d, i, t) => lm.score(d, i, t))
+  def ccnetCurateWith(docs: DataFrame, lm: TextAnalysis.LmBundle): DataFrame =
+    ccnetCurate(docs, scorer = lm.score(_))
 
   /** [[domainReweight]] under PERSISTED proxy/reference models — the
     * DoReMi production posture (round-17 advice): both scorer models
@@ -594,13 +559,10 @@ object Curation {
     * [[domainReweight]]. Oracle-gated (t_domain_reweight_persisted).
     */
   def domainReweightWith(docs: DataFrame, proxy: TextAnalysis.LmBundle,
-                         ref: TextAnalysis.LmBundle,
-                         domainCol: String = "source",
-                         idCol: String = "doc_id", textCol: String = "text",
-                         scaleTo: Long = 10000L): DataFrame =
-    domainReweight(docs, domainCol, idCol, textCol, scaleTo,
-      proxyScorer = (d, i, t) => proxy.score(d, i, t),
-      refScorer = (d, i, t) => ref.score(d, i, t))
+                         ref: TextAnalysis.LmBundle): DataFrame =
+    domainReweight(docs,
+      proxyScorer = proxy.score(_),
+      refScorer = ref.score(_))
 
   /** Language-BALANCED corpus mix: classify every document's language
     * with the char-trigram Naive Bayes model ([[TextAnalysis
@@ -619,10 +581,7 @@ object Curation {
     * and the shuffle-free polyhash keep filter. One corpus-keyed join
     * attaches predictions to rows.
     */
-  def langBalancedMix(docs: DataFrame, labeled: DataFrame,
-                      alphaNum: Int = 1, alphaDen: Int = 2,
-                      labelCol: String = "lang", idCol: String = "doc_id",
-                      textCol: String = "text"): DataFrame = {
+  def langBalancedMix(docs: DataFrame, labeled: DataFrame): DataFrame = {
     // PIN the prediction relation: temperatureMix consumes its input
     // twice (per-label counts collect + the keep-filter join), and
     // inlined that re-runs the NB scoring chain — measured 6.0 s at
@@ -630,12 +589,12 @@ object Curation {
     // inside nbParts; the saved work is the scoring half). The pinned
     // relation is (id, label) — ~16 bytes/doc, executor-local blocks.
     val pred = TextAnalysis
-      .classifyLangId(docs, labeled, labelCol, idCol, textCol)
-      .select(col(idCol), col("pred").as("lang_pred"))
+      .classifyLangId(docs, labeled, "doc_id")
+      .select(col("doc_id"), col("pred").as("lang_pred"))
       .pin()
     Sampling.temperatureMix(
-      docs.select(col(idCol)).join(pred, Seq(idCol)),
-      col("lang_pred"), col(idCol), alphaNum, alphaDen)
+      docs.select(col("doc_id")).join(pred, Seq("doc_id")),
+      col("lang_pred"), col("doc_id"), 1, 2)
   }
 
   /** [[langBalancedMix]] under a PERSISTED char-trigram bundle
@@ -643,16 +602,13 @@ object Curation {
     * (the domainReweightWith / codeSwitchWith precedent): identical
     * pin + temperature-mix shape, scoring-only cost.
     */
-  def langBalancedMixWith(docs: DataFrame, bundle: TextAnalysis.NbBundle,
-                          alphaNum: Int = 1, alphaDen: Int = 2,
-                          idCol: String = "doc_id",
-                          textCol: String = "text"): DataFrame = {
-    val pred = TextAnalysis.classifyWith(docs, bundle, idCol, textCol)
-      .select(col(idCol), col("pred").as("lang_pred"))
+  def langBalancedMixWith(docs: DataFrame, bundle: TextAnalysis.NbBundle): DataFrame = {
+    val pred = TextAnalysis.classifyWith(docs, bundle, "doc_id")
+      .select(col("doc_id"), col("pred").as("lang_pred"))
       .pin()
     Sampling.temperatureMix(
-      docs.select(col(idCol)).join(pred, Seq(idCol)),
-      col("lang_pred"), col(idCol), alphaNum, alphaDen)
+      docs.select(col("doc_id")).join(pred, Seq("doc_id")),
+      col("lang_pred"), col("doc_id"), 1, 2)
   }
 
   /** DATASHEET — the per-domain data card a corpus release ships: one
@@ -675,28 +631,26 @@ object Curation {
     * scan; the final joins are on the BOUNDED domain key (broadcast-
     * sized relations by construction).
     */
-  def dataSheet(docs: DataFrame, domainCol: String = "source",
-                textCol: String = "text", langCol: String = "lang",
-                qualityFloor: Long = 3L): DataFrame = {
-    val base = docs.filter(col(domainCol).isNotNull)
-    val core = base.groupBy(col(domainCol))
+  def dataSheet(docs: DataFrame): DataFrame = {
+    val base = docs.filter(col("source").isNotNull)
+    val core = base.groupBy(col("source"))
       .agg(count(lit(1)).as("n_docs"),
-        sum(when(col(textCol).isNull, 0)
-          .otherwise(size(split(col(textCol), " ")))).cast("long")
+        sum(when(col("text").isNull, 0)
+          .otherwise(size(split(col("text"), " ")))).cast("long")
           .as("n_tokens"),
-        countDistinct(col(langCol)).as("n_langs"),
-        sum(when(col(textCol).isNotNull &&
-            TextAnalysis.qualityScore(col(textCol)) >= qualityFloor, 1L)
+        countDistinct(col("lang")).as("n_langs"),
+        sum(when(col("text").isNotNull &&
+            TextAnalysis.qualityScore(col("text")) >= 3L, 1L)
           .otherwise(0L)).as("n_pass"))
       .withColumn("pass_x100", expr("n_pass * 100 div n_docs"))
-    val dups = Dedup.domainDupRates(base, domainCol, textCol)
-      .select(col(domainCol), col("n_dups"), col("dup_x100"))
-    val pii = TextAnalysis.piiReport(base, domainCol, textCol)
-      .select(col(domainCol),
+    val dups = Dedup.domainDupRates(base)
+      .select(col("source"), col("n_dups"), col("dup_x100"))
+    val pii = TextAnalysis.piiReport(base)
+      .select(col("source"),
         (col("n_email") + col("n_ip") + col("n_num")).as("n_pii"))
-    core.join(dups, Seq(domainCol), "left")
-      .join(pii, Seq(domainCol), "left")
-      .select(col(domainCol), col("n_docs"), col("n_tokens"),
+    core.join(dups, Seq("source"), "left")
+      .join(pii, Seq("source"), "left")
+      .select(col("source"), col("n_docs"), col("n_tokens"),
         col("n_langs"),
         coalesce(col("n_dups"), lit(0L)).as("n_dups"),
         coalesce(col("dup_x100"), lit(0L)).as("dup_x100"),

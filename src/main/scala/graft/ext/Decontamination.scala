@@ -34,9 +34,8 @@ object Decontamination {
   /** Distinct n-gram hash set of the benchmark relation — the
     * contamination filter. One column `gram`.
     */
-  def benchmarkGrams(bench: DataFrame, textCol: String = "text",
-                     n: Int = 3): DataFrame =
-    bench.select(explode(Dedup.shingleHashes(col(textCol), n)).as("gram"))
+  def benchmarkGrams(bench: DataFrame): DataFrame =
+    bench.select(explode(Dedup.shingleHashes(col("text"), 3)).as("gram"))
       .distinct()
 
   /** Contamination report against a PRECOMPUTED gram set (one `gram`
@@ -47,14 +46,12 @@ object Decontamination {
     * join-hit count IS the distinct overlap.
     */
   def contaminationReportAgainst(corpus: DataFrame, grams: DataFrame,
-                                 idCol: String = "doc_id",
-                                 textCol: String = "text", n: Int = 3,
                                  minOverlap: Int = 1): DataFrame = {
     require(minOverlap >= 1, s"minOverlap must be >= 1, got $minOverlap")
-    corpus.select(col(idCol),
-        explode(Dedup.shingleHashes(col(textCol), n)).as("gram"))
+    corpus.select(col("doc_id"),
+        explode(Dedup.shingleHashes(col("text"), 3)).as("gram"))
       .join(grams, "gram")
-      .groupBy(col(idCol))
+      .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("overlap_grams"))
       .filter(col("overlap_grams") >= minOverlap)
   }
@@ -62,36 +59,23 @@ object Decontamination {
   /** [[contaminationReportAgainst]] with the gram set derived from the
     * benchmark relation inline.
     */
-  def contaminationReport(corpus: DataFrame, bench: DataFrame,
-                          idCol: String = "doc_id", textCol: String = "text",
-                          n: Int = 3, minOverlap: Int = 1,
-                          broadcastBench: Boolean = true): DataFrame = {
-    val grams0 = benchmarkGrams(bench, textCol, n)
-    val grams = if (broadcastBench) broadcast(grams0) else grams0
-    contaminationReportAgainst(corpus, grams, idCol, textCol, n, minOverlap)
+  def contaminationReport(corpus: DataFrame, bench: DataFrame, minOverlap: Int = 1): DataFrame = {
+    contaminationReportAgainst(corpus, broadcast(benchmarkGrams(bench)), minOverlap)
   }
 
   /** The corpus minus documents contaminated vs a precomputed gram set
     * (anti-join on the report). Column set is the corpus's, unchanged.
     */
-  def decontaminateAgainst(corpus: DataFrame, grams: DataFrame,
-                           idCol: String = "doc_id", textCol: String = "text",
-                           n: Int = 3, minOverlap: Int = 1): DataFrame = {
-    val report = contaminationReportAgainst(corpus, grams, idCol, textCol,
-      n, minOverlap)
-    corpus.join(report.select(col(idCol)), Seq(idCol), "left_anti")
+  def decontaminateAgainst(corpus: DataFrame, grams: DataFrame, minOverlap: Int = 1): DataFrame = {
+    val report = contaminationReportAgainst(corpus, grams, minOverlap)
+    corpus.join(report.select(col("doc_id")), Seq("doc_id"), "left_anti")
   }
 
   /** The corpus minus contaminated documents. Column set is the
     * corpus's, unchanged.
     */
-  def decontaminate(corpus: DataFrame, bench: DataFrame,
-                    idCol: String = "doc_id", textCol: String = "text",
-                    n: Int = 3, minOverlap: Int = 1,
-                    broadcastBench: Boolean = true): DataFrame = {
-    val grams0 = benchmarkGrams(bench, textCol, n)
-    val grams = if (broadcastBench) broadcast(grams0) else grams0
-    decontaminateAgainst(corpus, grams, idCol, textCol, n, minOverlap)
+  def decontaminate(corpus: DataFrame, bench: DataFrame, minOverlap: Int = 1): DataFrame = {
+    decontaminateAgainst(corpus, broadcast(benchmarkGrams(bench)), minOverlap)
   }
 
   /** N-gram NOVELTY score against a reference gram set — the positive
@@ -110,18 +94,16 @@ object Decontamination {
     * eval-sized, or swap in [[BloomGate.mightContain]] ahead of the
     * join when the reference is itself corpus-sized.
     */
-  def noveltyReport(corpus: DataFrame, grams: DataFrame,
-                    idCol: String = "doc_id", textCol: String = "text",
-                    n: Int = 3): DataFrame = {
-    val agg = corpus.select(col(idCol),
-        explode(Dedup.shingleHashes(col(textCol), n)).as("gram"))
+  def noveltyReport(corpus: DataFrame, grams: DataFrame): DataFrame = {
+    val agg = corpus.select(col("doc_id"),
+        explode(Dedup.shingleHashes(col("text"), 3)).as("gram"))
       .join(grams.select(col("gram"), lit(1L).as("seen")),
         Seq("gram"), "left_outer")
-      .groupBy(col(idCol))
+      .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_grams"),
         sum(coalesce(col("seen"), lit(0L))).as("n_seen"))
-    corpus.select(col(idCol)).join(agg, Seq(idCol), "left_outer")
-      .select(col(idCol),
+    corpus.select(col("doc_id")).join(agg, Seq("doc_id"), "left_outer")
+      .select(col("doc_id"),
         coalesce(col("n_grams"), lit(0L)).as("n_grams"),
         coalesce(col("n_seen"), lit(0L)).as("n_seen"))
       .withColumn("novelty_x100",
@@ -133,11 +115,8 @@ object Decontamination {
   /** [[noveltyReport]] with the gram set derived from a reference
     * relation inline (distinct shingle hashes, broadcast).
     */
-  def novelty(corpus: DataFrame, reference: DataFrame,
-              idCol: String = "doc_id", textCol: String = "text",
-              n: Int = 3): DataFrame =
-    noveltyReport(corpus, broadcast(benchmarkGrams(reference, textCol, n)),
-      idCol, textCol, n)
+  def novelty(corpus: DataFrame, reference: DataFrame): DataFrame =
+    noveltyReport(corpus, broadcast(benchmarkGrams(reference)))
 
   // ── FUZZY decontamination (MinHash-LSH Jaccard) ────────────────────
   // Completes the trilogy: EXACT n-gram overlap (above) misses
@@ -160,9 +139,7 @@ object Decontamination {
     * layout as [[Dedup.nearDupPairs]]).
     */
   def fuzzyContaminationReport(corpus: DataFrame, bench: DataFrame,
-                               jaccardNum: Int = 8, jaccardDen: Int = 10,
-                               idCol: String = "doc_id",
-                               textCol: String = "text"): DataFrame = {
+                               jaccardNum: Int = 8, jaccardDen: Int = 10): DataFrame = {
     require(jaccardNum > 0 && jaccardDen > 0 && jaccardNum <= jaccardDen,
       s"jaccard threshold must be a ratio in (0, 1], got " +
         s"$jaccardNum/$jaccardDen")
@@ -170,32 +147,29 @@ object Decontamination {
     // each read them, and Catalyst has no cross-branch subexpression
     // reuse — without the checkpoint the corpus shingle/minhash stage
     // would run twice per call (the repLevelPairs pattern)
-    val cf = Dedup.features(corpus, idCol, textCol).pin()
-    val bf = Dedup.features(bench, idCol, textCol).pin()
-    val cb = Dedup.bands(cf, idCol)
+    val cf = Dedup.features(corpus, "doc_id", "text").pin()
+    val bf = Dedup.features(bench, "doc_id", "text").pin()
+    val cb = Dedup.bands(cf, "doc_id")
       .filter(col("bkey").isNotNull)
-    val bb = Dedup.bands(bf, idCol)
+    val bb = Dedup.bands(bf, "doc_id")
       .filter(col("bkey").isNotNull)
-      .select(col("band"), col("bkey"), col(idCol).as("bench_id"))
+      .select(col("band"), col("bkey"), col("doc_id").as("bench_id"))
     val cand = cb.join(broadcast(bb), Seq("band", "bkey"))
-      .select(col(idCol), col("bench_id")).distinct()
-    Dedup.withJaccard(cand, idCol, "bench_id", cf, bf, idCol)
+      .select(col("doc_id"), col("bench_id")).distinct()
+    Dedup.withJaccard(cand, "doc_id", "bench_id", cf, bf, "doc_id")
       .filter(Dedup.jaccardAtLeast(jaccardNum, jaccardDen))
-      .select(col(idCol), col("bench_id"), col("inter"), col("uni"))
+      .select(col("doc_id"), col("bench_id"), col("inter"), col("uni"))
   }
 
   /** The corpus minus every document within fuzzy-Jaccard range of any
     * benchmark document. Column set is the corpus's, unchanged.
     */
   def fuzzyDecontaminate(corpus: DataFrame, bench: DataFrame,
-                         jaccardNum: Int = 8, jaccardDen: Int = 10,
-                         idCol: String = "doc_id",
-                         textCol: String = "text"): DataFrame =
+                         jaccardNum: Int = 8, jaccardDen: Int = 10): DataFrame =
     corpus.join(
-      fuzzyContaminationReport(corpus, bench, jaccardNum, jaccardDen,
-        idCol, textCol)
-        .select(col(idCol)).distinct(),
-      Seq(idCol), "left_anti")
+      fuzzyContaminationReport(corpus, bench, jaccardNum, jaccardDen)
+        .select(col("doc_id")).distinct(),
+      Seq("doc_id"), "left_anti")
 
   // ── SEMANTIC decontamination (embedding space) ─────────────────────
   // The n-gram rule misses paraphrases; the embedding rule catches a
@@ -213,19 +187,15 @@ object Decontamination {
     * vectors on either side never pair.
     */
   def embeddingContaminationReport(corpus: DataFrame, bench: DataFrame,
-                                   threshold: Double,
-                                   idCol: String = "vec_id",
-                                   vecCol: String = "embedding",
-                                   benchIdCol: String = "vec_id",
-                                   benchVecCol: String = "embedding"): DataFrame = {
-    val b = bench.filter(col(benchVecCol).isNotNull)
-      .select(col(benchIdCol).as("bench_id"), col(benchVecCol).as("__sb_v"))
-    corpus.filter(col(vecCol).isNotNull)
-      .select(col(idCol), col(vecCol))
+                                   threshold: Double): DataFrame = {
+    val b = bench.filter(col("embedding").isNotNull)
+      .select(col("vec_id").as("bench_id"), col("embedding").as("__sb_v"))
+    corpus.filter(col("embedding").isNotNull)
+      .select(col("vec_id"), col("embedding"))
       .crossJoin(broadcast(b))
-      .withColumn("cos", round(Similarity.cosine(col(vecCol), col("__sb_v")), 6))
+      .withColumn("cos", round(Similarity.cosine(col("embedding"), col("__sb_v")), 6))
       .filter(col("cos") >= threshold)
-      .select(col(idCol), col("bench_id"), col("cos"))
+      .select(col("vec_id"), col("bench_id"), col("cos"))
   }
 
   /** The corpus minus every document whose embedding is within
@@ -236,14 +206,12 @@ object Decontamination {
     * stops at the first matching benchmark vector.
     */
   def decontaminateEmbeddings(corpus: DataFrame, bench: DataFrame,
-                              threshold: Double,
-                              vecCol: String = "embedding",
-                              benchVecCol: String = "embedding"): DataFrame = {
-    val b = bench.filter(col(benchVecCol).isNotNull)
-      .select(col(benchVecCol).as("__sb_v"))
+                              threshold: Double): DataFrame = {
+    val b = bench.filter(col("embedding").isNotNull)
+      .select(col("embedding").as("__sb_v"))
     corpus.join(broadcast(b),
-      col(vecCol).isNotNull &&
-        round(Similarity.cosine(col(vecCol), col("__sb_v")), 6) >= threshold,
+      col("embedding").isNotNull &&
+        round(Similarity.cosine(col("embedding"), col("__sb_v")), 6) >= threshold,
       "left_anti")
   }
 }

@@ -80,9 +80,9 @@ object Dedup {
     * isNotNull guard pins null-text → null, matching the native
     * expression (the bare when/otherwise chain would yield [null]).
     */
-  def shingleHashesHof(text: Column, n: Int = 3): Column =
+  def shingleHashesHof(text: Column): Column =
     when(text.isNotNull,
-      array_distinct(transform(shingles(text, n), s => polyFingerprint(s))))
+      array_distinct(transform(shingles(text, 3), s => polyFingerprint(s))))
       .otherwise(lit(null))
 
   /** MinHash signature: per permutation, min over the hash set — one
@@ -115,8 +115,8 @@ object Dedup {
   /** Declarative spec of [[simhash]] — `bits` interpreted filter/size
     * passes per row (the round-2 shape).
     */
-  def simhashHof(hashes: Column, bits: Int = 16): Column =
-    (0 until bits).map { b =>
+  def simhashHof(hashes: Column): Column =
+    (0 until 16).map { b =>
       val ones = size(filter(hashes, h => shiftright(h, b).bitwiseAND(1) === 1))
       when(ones * 2 >= size(hashes), lit(1L << b)).otherwise(lit(0L))
     }.reduce(_ + _)
@@ -280,20 +280,20 @@ object Dedup {
     * [[nearDupClusters]] / [[keepList]] / [[dedupedCorpus]], which never
     * materialize intra-group pairs.
     */
-  def nearDupPairsFromFeatures(feats: DataFrame, idCol: String = "doc_id",
+  def nearDupPairsFromFeatures(feats: DataFrame,
                                maxBucket: Int = DefaultMaxBucketWidth): DataFrame = {
-    val (grouped, repPairs) = repLevelPairs(feats, idCol, maxBucket)
+    val (grouped, repPairs) = repLevelPairs(feats, "doc_id", maxBucket)
     val rp = repPairs.select(col("doc_a").as("ra"), col("doc_b").as("rb"),
       col("inter"), col("uni"))
-    val ga = grouped.select(col(idCol).as("a"), col("rep").as("ra"))
-    val gb = grouped.select(col(idCol).as("b"), col("rep").as("rb"))
+    val ga = grouped.select(col("doc_id").as("a"), col("rep").as("ra"))
+    val gb = grouped.select(col("doc_id").as("b"), col("rep").as("rb"))
     val cross = rp.join(ga, "ra").join(gb, "rb")
       .select(least(col("a"), col("b")).as("doc_a"),
         greatest(col("a"), col("b")).as("doc_b"), col("inter"), col("uni"))
-    val sz = grouped.filter(col(idCol) === col("rep"))
+    val sz = grouped.filter(col("doc_id") === col("rep"))
       .select(col("rep").as("r0"), size(col("hashes")).cast("long").as("h"))
-    val ma = grouped.select(col(idCol).as("a"), col("rep").as("r0"))
-    val mb = grouped.select(col(idCol).as("b"), col("rep").as("r0"))
+    val ma = grouped.select(col("doc_id").as("a"), col("rep").as("r0"))
+    val mb = grouped.select(col("doc_id").as("b"), col("rep").as("r0"))
     val intra = ma.join(mb, "r0").filter(col("a") < col("b")).join(sz, "r0")
       .select(col("a").as("doc_a"), col("b").as("doc_b"),
         col("h").as("inter"), col("h").as("uni"))
@@ -308,10 +308,9 @@ object Dedup {
     * [[features]] to a real table and call
     * [[nearDupPairsFromFeatures]] directly.
     */
-  def nearDupPairs(docs: DataFrame, idCol: String = "doc_id",
-                   textCol: String = "text",
+  def nearDupPairs(docs: DataFrame,
                    maxBucket: Int = DefaultMaxBucketWidth): DataFrame =
-    nearDupPairsFromFeatures(features(docs, idCol, textCol), idCol, maxBucket)
+    nearDupPairsFromFeatures(features(docs, "doc_id", "text"), maxBucket)
 
   /** LSH CONFIG RECALL AUDIT — the eval of the dedup configuration
     * itself: on a deterministic key-hash sample
@@ -344,11 +343,10 @@ object Dedup {
     */
   def lshRecallAudit(docs: DataFrame, sampleFraction: Double = 0.25,
                      jaccardNum: Int = 1, jaccardDen: Int = 2,
-                     idCol: String = "doc_id", textCol: String = "text",
                      maxBucket: Int = DefaultMaxBucketWidth,
                      maxShingleDf: Int = 200): DataFrame =
     lshRecallGrid(docs, Seq((NumBands, RowsPerBand)), sampleFraction,
-      jaccardNum, jaccardDen, idCol, textCol, maxBucket, maxShingleDf)
+      jaccardNum, jaccardDen, maxBucket, maxShingleDf)
       .drop("num_bands", "rows_per_band")
 
   /** The CONFIG GRID over [[lshRecallAudit]] — the sweep that answers
@@ -372,7 +370,6 @@ object Dedup {
                     configs: Seq[(Int, Int)] = Seq((8, 1), (4, 2), (2, 4)),
                     sampleFraction: Double = 0.25,
                     jaccardNum: Int = 1, jaccardDen: Int = 2,
-                    idCol: String = "doc_id", textCol: String = "text",
                     maxBucket: Int = DefaultMaxBucketWidth,
                     maxShingleDf: Int = 200): DataFrame = {
     require(configs.nonEmpty, "lshRecallGrid needs at least one config")
@@ -383,17 +380,17 @@ object Dedup {
     require(maxShingleDf >= 1,
       s"maxShingleDf must be >= 1, got $maxShingleDf")
     val samp = Sampling.sampleByKey(
-      docs.filter(col(textCol).isNotNull), col(idCol), sampleFraction)
+      docs.filter(col("text").isNotNull), col("doc_id"), sampleFraction)
     // only the columns this audit consumes: hashes (truth + Jaccard)
     // and the MinHash sig (banding) — [[features]]' simhash column
     // would be computed and pinned for nothing here
     val feats = samp
-      .select(col(idCol), shingleHashes(col(textCol), ShingleN).as("hashes"))
+      .select(col("doc_id"), shingleHashes(col("text"), ShingleN).as("hashes"))
       .withColumn("sig", minhashSignature(col("hashes")))
       .pin()
-    auditGrid("lshRecallGrid", feats, idCol, configs,
+    auditGrid("lshRecallGrid", feats, "doc_id", configs,
       ("num_bands", "rows_per_band"), jaccardNum, jaccardDen, maxShingleDf) {
-      (b, r) => bucketPairs(withWidth(bandsOf(feats, idCol, b, r)), idCol,
+      (b, r) => bucketPairs(withWidth(bandsOf(feats, "doc_id", b, r)), "doc_id",
         maxBucket)
     }
   }
@@ -413,14 +410,9 @@ object Dedup {
     */
   def simhashRecallAudit(docs: DataFrame, sampleFraction: Double = 0.25,
                          jaccardNum: Int = 1, jaccardDen: Int = 2,
-                         idCol: String = "doc_id", textCol: String = "text",
-                         n: Int = 3, bits: Int = 60, blocks: Int = 6,
-                         maxHamming: Int = 3,
-                         maxBucket: Int = DefaultMaxBucketWidth,
-                         maxShingleDf: Int = 200): DataFrame =
-    simhashRecallGrid(docs, Seq((blocks, maxHamming)), sampleFraction,
-      jaccardNum, jaccardDen, idCol, textCol, n, bits, maxBucket,
-      maxShingleDf)
+                         maxBucket: Int = DefaultMaxBucketWidth): DataFrame =
+    simhashRecallGrid(docs, Seq((6, 3)), sampleFraction,
+      jaccardNum, jaccardDen, maxBucket)
       .drop("blocks", "max_hamming")
 
   /** The CONFIG GRID over [[simhashRecallAudit]] — the
@@ -438,36 +430,31 @@ object Dedup {
                         configs: Seq[(Int, Int)] = Seq((6, 1), (6, 2), (6, 3)),
                         sampleFraction: Double = 0.25,
                         jaccardNum: Int = 1, jaccardDen: Int = 2,
-                        idCol: String = "doc_id", textCol: String = "text",
-                        n: Int = 3, bits: Int = 60,
-                        maxBucket: Int = DefaultMaxBucketWidth,
-                        maxShingleDf: Int = 200): DataFrame = {
+                        maxBucket: Int = DefaultMaxBucketWidth): DataFrame = {
     require(configs.nonEmpty, "simhashRecallGrid needs at least one config")
     require(configs.distinct.size == configs.size,
       s"duplicate configs in $configs")
     require(jaccardDen >= 1 && jaccardNum >= 0 && jaccardNum <= jaccardDen,
       s"jaccard threshold must be 0 <= num <= den, got $jaccardNum/$jaccardDen")
-    require(maxShingleDf >= 1,
-      s"maxShingleDf must be >= 1, got $maxShingleDf")
     val samp = Sampling.sampleByKey(
-      docs.filter(col(textCol).isNotNull), col(idCol), sampleFraction)
+      docs.filter(col("text").isNotNull), col("doc_id"), sampleFraction)
     // hashes ONLY: this audit's banding is the 60-bit simhash computed
     // below — [[features]]' MinHash sig and 16-bit simhash columns
     // would be computed and pinned for nothing
     val feats = samp
-      .select(col(idCol), shingleHashes(col(textCol), n).as("hashes"))
+      .select(col("doc_id"), shingleHashes(col("text"), 3).as("hashes"))
       .pin()
     // the Hamming-0 collapse and the intra-group expansion are
     // radius-INDEPENDENT and run ONCE for the whole sweep; only the
     // block-combination join runs per config
     val grouped = hammingGrouped(feats
-      .select(col(idCol), simhash(col("hashes"), bits).as("simhash")),
-      idCol, "simhash")
-    val intra = hammingIntraPairs(grouped, idCol).select("doc_a", "doc_b")
-    auditGrid("simhashRecallGrid", feats, idCol, configs,
-      ("blocks", "max_hamming"), jaccardNum, jaccardDen, maxShingleDf) {
+      .select(col("doc_id"), simhash(col("hashes"), 60).as("simhash")),
+      "doc_id", "simhash")
+    val intra = hammingIntraPairs(grouped, "doc_id").select("doc_a", "doc_b")
+    auditGrid("simhashRecallGrid", feats, "doc_id", configs,
+      ("blocks", "max_hamming"), jaccardNum, jaccardDen, 200) {
       (blocks, maxHamming) =>
-        hammingCrossPairs(grouped, idCol, bits, blocks, maxHamming, maxBucket)
+        hammingCrossPairs(grouped, "doc_id", 60, blocks, maxHamming, maxBucket)
           .select("doc_a", "doc_b").union(intra)
     }
   }
@@ -587,17 +574,15 @@ object Dedup {
     * Output: (doc_id, container_id, inter, n_grams) — doc_id's
     * `n_grams` kept hashes overlap the container on `inter` of them.
     */
-  def containmentPairs(docs: DataFrame, num: Int = 9, den: Int = 10,
-                       idCol: String = "doc_id", textCol: String = "text",
-                       n: Int = 3,
+  def containmentPairs(docs: DataFrame, num: Int = 9,
                        maxDf: Int = DefaultMaxBucketWidth): DataFrame = {
-    require(num > 0 && den > 0 && num <= den,
-      s"containment threshold must be a ratio in (0, 1], got $num/$den")
+    require(num > 0 && num <= 10,
+      s"containment threshold must be a ratio in (0, 1], got $num/10")
     require(maxDf >= 2, s"maxDf must be >= 2, got $maxDf")
     val feats = docs
-      .select(col(idCol), shingleHashes(col(textCol), n).as("hashes"))
+      .select(col("doc_id"), shingleHashes(col("text"), 3).as("hashes"))
       .filter(col("hashes").isNotNull)
-    val ex = feats.select(col(idCol), explode(col("hashes")).as("h"))
+    val ex = feats.select(col("doc_id"), explode(col("hashes")).as("h"))
     // hash document-frequency, materialized once: the disclosure probe
     // and the universe cut both read it
     val hdf = ex.groupBy("h").agg(count(lit(1)).as("hdf")).pin()
@@ -614,7 +599,7 @@ object Dedup {
       ex.join(hdf.filter(col("hdf") <= maxDf).select("h"), "h")
         .pin()
     }
-    val sizes = kept.groupBy(col(idCol))
+    val sizes = kept.groupBy(col("doc_id"))
       .agg(count(lit(1)).as("nh"))
     // shared-hash counts per pair GENERATED IN-TASK from each hash's
     // df-capped sorted posting list (≤ maxDf ids by the universe cut
@@ -622,7 +607,7 @@ object Dedup {
     // replaces shuffled the kept postings twice more to emit the same
     // multiset of pairs into the (doc_a, doc_b) count
     val posting = kept.groupBy(col("h"))
-      .agg(sort_array(collect_list(col(idCol))).as("__ct_ids"))
+      .agg(sort_array(collect_list(col("doc_id"))).as("__ct_ids"))
     val cids = col("__ct_ids")
     val inter = posting
       .filter(size(cids) >= 2)
@@ -632,13 +617,13 @@ object Dedup {
       .select(col("__ct_p.doc_a"), col("__ct_p.doc_b"))
       .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("inter"))
     val j = inter
-      .join(sizes.select(col(idCol).as("doc_a"), col("nh").as("nh_a")), "doc_a")
-      .join(sizes.select(col(idCol).as("doc_b"), col("nh").as("nh_b")), "doc_b")
-    val aInB = j.filter(col("inter") * den >= col("nh_a") * num)
-      .select(col("doc_a").as(idCol), col("doc_b").as("container_id"),
+      .join(sizes.select(col("doc_id").as("doc_a"), col("nh").as("nh_a")), "doc_a")
+      .join(sizes.select(col("doc_id").as("doc_b"), col("nh").as("nh_b")), "doc_b")
+    val aInB = j.filter(col("inter") * 10 >= col("nh_a") * num)
+      .select(col("doc_a").as("doc_id"), col("doc_b").as("container_id"),
         col("inter"), col("nh_a").as("n_grams"))
-    val bInA = j.filter(col("inter") * den >= col("nh_b") * num)
-      .select(col("doc_b").as(idCol), col("doc_a").as("container_id"),
+    val bInA = j.filter(col("inter") * 10 >= col("nh_b") * num)
+      .select(col("doc_b").as("doc_id"), col("doc_a").as("container_id"),
         col("inter"), col("nh_b").as("n_grams"))
     aInB.union(bInA)
   }
@@ -683,14 +668,13 @@ object Dedup {
     *    inherit the rep pair's Hamming distance; intra-group pairs are
     *    Hamming 0). Null-text docs have null signatures and never pair.
     */
-  def simhashNearDups(docs: DataFrame, idCol: String = "doc_id",
-                      textCol: String = "text", n: Int = 3, bits: Int = 60,
-                      blocks: Int = 6, maxHamming: Int = 3,
+  def simhashNearDups(docs: DataFrame,
+                      blocks: Int = 6,
                       maxBucket: Int = DefaultMaxBucketWidth): DataFrame =
     hammingNearDups(
-      docs.select(col(idCol),
-        simhash(shingleHashes(col(textCol), n), bits).as("simhash")),
-      idCol, "simhash", bits, blocks, maxHamming, maxBucket)
+      docs.select(col("doc_id"),
+        simhash(shingleHashes(col("text"), 3), 60).as("simhash")),
+      "doc_id", "simhash", 60, blocks, maxBucket)
 
   /** Hamming-ball near-dup pairs over PRECOMPUTED integer signatures —
     * the [[simhashNearDups]] machinery (which delegates here) exposed
@@ -704,10 +688,10 @@ object Dedup {
     */
   def hammingNearDups(sigs: DataFrame, idCol: String = "doc_id",
                       sigCol: String = "simhash", bits: Int = 64,
-                      blocks: Int = 8, maxHamming: Int = 3,
+                      blocks: Int = 8,
                       maxBucket: Int = DefaultMaxBucketWidth): DataFrame = {
     val grouped = hammingGrouped(sigs, idCol, sigCol)
-    hammingCrossPairs(grouped, idCol, bits, blocks, maxHamming, maxBucket)
+    hammingCrossPairs(grouped, idCol, bits, blocks, 3, maxBucket)
       .union(hammingIntraPairs(grouped, idCol))
   }
 
@@ -1036,15 +1020,14 @@ object Dedup {
     * clustering chain is therefore immune to the dup-heavy skew cliff,
     * not just the candidate join.
     */
-  def nearDupClusters(docs: DataFrame, idCol: String = "doc_id",
-                      textCol: String = "text",
+  def nearDupClusters(docs: DataFrame,
                       jaccardNum: Int = 8, jaccardDen: Int = 10,
                       maxBucket: Int = DefaultMaxBucketWidth,
-                      maxRounds: Int = 50, strict: Boolean = false): DataFrame = {
-    val edges = nearDupEdgeSet(docs, idCol, textCol, jaccardNum,
+                      strict: Boolean = false): DataFrame = {
+    val edges = nearDupEdgeSet(docs, "doc_id", "text", jaccardNum,
       jaccardDen, maxBucket)
-    clusterLabels(docs.select(col(idCol).as("id")), edges, maxRounds, strict)
-      .select(col("id").as(idCol), col("cluster_id"))
+    clusterLabels(docs.select(col("doc_id").as("id")), edges, 50, strict)
+      .select(col("id").as("doc_id"), col("cluster_id"))
   }
 
   /** [[nearDupClusters]] with the transitive closure computed by
@@ -1056,16 +1039,14 @@ object Dedup {
     * cliques. Gated by the same DuckDB recursive-CTE oracle as
     * [[nearDupClusters]] — the two paths must agree bit-for-bit.
     */
-  def nearDupClustersStar(docs: DataFrame, idCol: String = "doc_id",
-                          textCol: String = "text",
+  def nearDupClustersStar(docs: DataFrame,
                           jaccardNum: Int = 8, jaccardDen: Int = 10,
-                          maxBucket: Int = DefaultMaxBucketWidth,
-                          maxRounds: Int = 25, strict: Boolean = false): DataFrame = {
-    val edges = nearDupEdgeSet(docs, idCol, textCol, jaccardNum,
+                          maxBucket: Int = DefaultMaxBucketWidth): DataFrame = {
+    val edges = nearDupEdgeSet(docs, "doc_id", "text", jaccardNum,
       jaccardDen, maxBucket)
-    clusterLabelsStar(docs.select(col(idCol).as("id")), edges,
-      maxRounds, strict)
-      .select(col("id").as(idCol), col("cluster_id"))
+    clusterLabelsStar(docs.select(col("doc_id").as("id")), edges,
+      25, false)
+      .select(col("id").as("doc_id"), col("cluster_id"))
   }
 
   /** The shared verified near-dup edge set (rep-level LSH candidates
@@ -1089,13 +1070,13 @@ object Dedup {
     * label) per cluster, with the member count — the consumable dedup
     * artifact, not intermediate pair edges.
     */
-  def keepList(clusters: DataFrame, idCol: String = "doc_id"): DataFrame =
+  def keepList(clusters: DataFrame): DataFrame =
     clusters.groupBy("cluster_id")
-      .agg(min(col(idCol)).as("keep_id"), count(lit(1)).as("n_members"))
+      .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("n_members"))
       .select(col("keep_id"), col("n_members"))
 
   /** QUALITY-AWARE keep list: per near-dup cluster keep the
-    * highest-`scoreCol` member (tie: lowest id) instead of the first
+    * highest-`quality` member (tie: lowest id) instead of the first
     * occurrence — what a production dedup actually wants (the cluster's
     * cleanest serialization survives, not whichever copy crawled
     * first). `scored` must expose (idCol, scoreCol) for every
@@ -1107,10 +1088,8 @@ object Dedup {
     * score projection, one cluster-keyed partial aggregation — the
     * argmax is a min(struct(-score, id)), never a per-cluster sort.
     */
-  def keepBest(clusters: DataFrame, scored: DataFrame,
-               scoreCol: String = "quality",
-               idCol: String = "doc_id"): DataFrame =
-    clusters.join(scored.select(col(idCol), col(scoreCol)), Seq(idCol))
+  def keepBest(clusters: DataFrame, scored: DataFrame): DataFrame =
+    clusters.join(scored.select(col("doc_id"), col("quality")), Seq("doc_id"))
       .groupBy("cluster_id")
       .agg(
         // null-last law via a leading null flag (0 = scored, 1 =
@@ -1119,9 +1098,9 @@ object Dedup {
         // that would truncate a fractional 0..1 quality to 0 and
         // silently degenerate the argmax into a lowest-id pick
         min(struct(
-          when(col(scoreCol).isNull, lit(1)).otherwise(lit(0)).as("nullf"),
-          (-col(scoreCol)).as("negs"),
-          col(idCol).as("i"), col(scoreCol).as("s"))).as("__kb_top"),
+          when(col("quality").isNull, lit(1)).otherwise(lit(0)).as("nullf"),
+          (-col("quality")).as("negs"),
+          col("doc_id").as("i"), col("quality").as("s"))).as("__kb_top"),
         count(lit(1)).as("n_members"))
       .select(col("cluster_id"), col("__kb_top.i").as("keep_id"),
         col("__kb_top.s").as("score"), col("n_members"))
@@ -1131,16 +1110,15 @@ object Dedup {
     * the label frame, then a semi-join to re-attach payloads; the
     * payload never rides through the clustering shuffles).
     */
-  def dedupedCorpus(docs: DataFrame, idCol: String = "doc_id",
-                    textCol: String = "text",
+  def dedupedCorpus(docs: DataFrame,
                     jaccardNum: Int = 8, jaccardDen: Int = 10,
                     maxBucket: Int = DefaultMaxBucketWidth,
-                    maxRounds: Int = 50, strict: Boolean = false): DataFrame = {
-    val keep = nearDupClusters(docs, idCol, textCol, jaccardNum, jaccardDen,
-      maxBucket, maxRounds, strict)
-      .filter(col(idCol) === col("cluster_id"))
-      .select(col(idCol))
-    docs.join(keep, Seq(idCol), "left_semi")
+                    strict: Boolean = false): DataFrame = {
+    val keep = nearDupClusters(docs, jaccardNum, jaccardDen,
+      maxBucket, strict)
+      .filter(col("doc_id") === col("cluster_id"))
+      .select(col("doc_id"))
+    docs.join(keep, Seq("doc_id"), "left_semi")
   }
 
   /** Base for the per-passage occurrence key `doc_id · 2²⁰ + chunk_id`:
@@ -1203,13 +1181,12 @@ object Dedup {
     * so strictly less skew-prone.)
     */
   def dedupPassages(docs: DataFrame, window: Int = 8,
-                    idCol: String = "doc_id", textCol: String = "text",
                     keepFirst: Boolean = true,
                     perDocument: Boolean = false): DataFrame = {
     require(window > 0, s"window must be positive, got $window")
     dedupChunked(docs,
-      graft.ext.TextAnalysis.chunkDocuments(docs, window, window, idCol, textCol),
-      idCol, textCol, keepFirst, perDocument, "dedupPassages")
+      graft.ext.TextAnalysis.chunkDocuments(docs, window, window, "doc_id", "text"),
+      "doc_id", "text", keepFirst, perDocument, "dedupPassages")
   }
 
   /** CONTENT-DEFINED chunking (the word-level analog of CDC/Rabin
@@ -1234,15 +1211,14 @@ object Dedup {
     * winnowFingerprints precedent: the interpreted chain built a
     * window-word shingle string per boundary candidate).
     */
-  def cdcChunks(docs: DataFrame, window: Int = 4, divisor: Int = 8,
-                idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+  def cdcChunks(docs: DataFrame, window: Int = 4, divisor: Int = 8): DataFrame = {
     require(window > 0, s"window must be positive, got $window")
     require(divisor > 1, s"divisor must be > 1 (1 cuts after every word), got $divisor")
-    docs.filter(col(textCol).isNotNull)
-      .select(col(idCol), posexplode(
-          graft.functions.cdcChunkTexts(col(textCol), window, divisor))
+    docs.filter(col("text").isNotNull)
+      .select(col("doc_id"), posexplode(
+          graft.functions.cdcChunkTexts(col("text"), window, divisor))
         .as(Seq("chunk_id", "chunk_text")))
-      .select(col(idCol), col("chunk_id").cast("long").as("chunk_id"),
+      .select(col("doc_id"), col("chunk_id").cast("long").as("chunk_id"),
         col("chunk_text"))
   }
 
@@ -1313,17 +1289,15 @@ object Dedup {
     * the declarative executable spec it is tested against; the DuckDB
     * oracle (t_winnow) replays window/min/rightmost-tie relationally.
     */
-  def winnowFingerprints(docs: DataFrame, k: Int = 4, w: Int = 5,
-                         idCol: String = "doc_id",
-                         textCol: String = "text"): DataFrame = {
+  def winnowFingerprints(docs: DataFrame, k: Int = 4, w: Int = 5): DataFrame = {
     require(k >= 1, s"k (gram width) must be >= 1, got $k")
     require(w >= 1, s"w (window width) must be >= 1, got $w")
     import org.apache.spark.sql.graft.Bridge
-    docs.filter(col(textCol).isNotNull)
-      .select(col(idCol),
+    docs.filter(col("text").isNotNull)
+      .select(col("doc_id"),
         explode(Bridge.column(graft.functions.WinnowFps(
-          Bridge.expression(col(textCol)), k, w))).as("__wn_s"))
-      .select(col(idCol), col("__wn_s.pos").as("pos"),
+          Bridge.expression(col("text")), k, w))).as("__wn_s"))
+      .select(col("doc_id"), col("__wn_s.pos").as("pos"),
         col("__wn_s.fp").as("fp"))
   }
 
@@ -1386,25 +1360,23 @@ object Dedup {
     * with a WARN, the established cap-and-disclose guard. Output:
     * (doc_a, doc_b, shared), doc_a < doc_b.
     */
-  def winnowOverlap(docs: DataFrame, k: Int = 4, w: Int = 5,
+  def winnowOverlap(docs: DataFrame,
                     minShared: Int = 2,
-                    maxBucket: Int = DefaultMaxBucketWidth,
-                    idCol: String = "doc_id",
-                    textCol: String = "text"): DataFrame = {
+                    maxBucket: Int = DefaultMaxBucketWidth): DataFrame = {
     require(minShared >= 1, s"minShared must be >= 1, got $minShared")
     require(maxBucket >= 2, s"maxBucket must be >= 2, got $maxBucket")
     // pin the fingerprint relation: it feeds the width table AND both
     // sides of the pair join — unpinned, the interpreted HOF window
     // scan re-runs three times (measured 14.6 s → ~5 s at sf0.1)
-    val fps = winnowFingerprints(docs, k, w, idCol, textCol)
-      .select(col(idCol), col("fp")).distinct()
+    val fps = winnowFingerprints(docs, 4, 5)
+      .select(col("doc_id"), col("fp")).distinct()
       .pin()
     val width = fps.groupBy("fp").agg(count(lit(1)).as("__wo_n"))
       .pin()
     val keep = fps.join(width.filter(col("__wo_n") <= maxBucket), "fp")
-      .select(col(idCol), col("fp"))
-    val a = keep.select(col(idCol).as("doc_a"), col("fp"))
-    val b = keep.select(col(idCol).as("doc_b"), col("fp"))
+      .select(col("doc_id"), col("fp"))
+    val a = keep.select(col("doc_id").as("doc_a"), col("fp"))
+    val b = keep.select(col("doc_id").as("doc_b"), col("fp"))
     Overlap.disclosing("winnowOverlap",
       s"fingerprint bucket(s) wider than $maxBucket documents excluded " +
         "from pair generation (recall loss on corpus-wide template grams, " +
@@ -1426,12 +1398,9 @@ object Dedup {
     * and share nothing. Same first-occurrence min-key law, same output
     * contract and scale shape as [[dedupPassages]].
     */
-  def dedupPassagesCdc(docs: DataFrame, window: Int = 4, divisor: Int = 8,
-                       idCol: String = "doc_id", textCol: String = "text",
-                       keepFirst: Boolean = true,
-                       perDocument: Boolean = false): DataFrame =
-    dedupChunked(docs, cdcChunks(docs, window, divisor, idCol, textCol),
-      idCol, textCol, keepFirst, perDocument, "dedupPassagesCdc")
+  def dedupPassagesCdc(docs: DataFrame, divisor: Int = 8): DataFrame =
+    dedupChunked(docs, cdcChunks(docs, 4, divisor),
+      "doc_id", "text", true, false, "dedupPassagesCdc")
 
   /** Corpus-level LINE dedup — CCNet's first pipeline stage (Wenzek et
     * al. 2020 run it before anything else: identical lines across a
@@ -1451,15 +1420,14 @@ object Dedup {
     * empty-line group, which every multiline document contributes to,
     * combine map-side instead of landing on one reducer.
     */
-  def dedupLines(docs: DataFrame, idCol: String = "doc_id",
-                 textCol: String = "text", keepFirst: Boolean = true,
+  def dedupLines(docs: DataFrame, keepFirst: Boolean = true,
                  perDocument: Boolean = false): DataFrame = {
-    val lines = docs.filter(col(textCol).isNotNull)
-      .select(col(idCol),
-        posexplode(split(col(textCol), "\n")).as(Seq("chunk_id", "chunk_text")))
-      .select(col(idCol), col("chunk_id").cast("long").as("chunk_id"),
+    val lines = docs.filter(col("text").isNotNull)
+      .select(col("doc_id"),
+        posexplode(split(col("text"), "\n")).as(Seq("chunk_id", "chunk_text")))
+      .select(col("doc_id"), col("chunk_id").cast("long").as("chunk_id"),
         col("chunk_text"))
-    dedupChunked(docs, lines, idCol, textCol, keepFirst, perDocument,
+    dedupChunked(docs, lines, "doc_id", "text", keepFirst, perDocument,
       "dedupLines", "\n")
   }
 
@@ -1472,15 +1440,13 @@ object Dedup {
     * contract ((idCol, clean_text, n_passages, n_kept)) and the same
     * skew-safe min-aggregation scale shape.
     */
-  def dedupParagraphs(docs: DataFrame, idCol: String = "doc_id",
-                      textCol: String = "text", keepFirst: Boolean = true,
-                      perDocument: Boolean = false): DataFrame = {
-    val paras = docs.filter(col(textCol).isNotNull)
-      .select(col(idCol),
-        posexplode(split(col(textCol), "\n\n")).as(Seq("chunk_id", "chunk_text")))
-      .select(col(idCol), col("chunk_id").cast("long").as("chunk_id"),
+  def dedupParagraphs(docs: DataFrame): DataFrame = {
+    val paras = docs.filter(col("text").isNotNull)
+      .select(col("doc_id"),
+        posexplode(split(col("text"), "\n\n")).as(Seq("chunk_id", "chunk_text")))
+      .select(col("doc_id"), col("chunk_id").cast("long").as("chunk_id"),
         col("chunk_text"))
-    dedupChunked(docs, paras, idCol, textCol, keepFirst, perDocument,
+    dedupChunked(docs, paras, "doc_id", "text", true, false,
       "dedupParagraphs", "\n\n")
   }
 
@@ -1513,25 +1479,17 @@ object Dedup {
     * (lines OVER the DF threshold), so AQE broadcasts that too; one
     * doc-keyed rebuild. Nothing is ever collected to the driver.
     */
-  def stripBoilerplateLines(docs: DataFrame, idCol: String = "doc_id",
-                            textCol: String = "text",
-                            domainCol: String = "source",
-                            maxDfPermille: Int = 500,
-                            minDomainDocs: Int = 4): DataFrame = {
-    require(maxDfPermille > 0 && maxDfPermille <= 1000,
-      s"maxDfPermille must be in (0, 1000], got $maxDfPermille")
-    require(minDomainDocs >= 1,
-      s"minDomainDocs must be >= 1, got $minDomainDocs")
-    val base = docs.filter(col(textCol).isNotNull && col(domainCol).isNotNull)
-    val lines = base.select(col(idCol), col(domainCol),
-        posexplode(split(col(textCol), "\n")).as(Seq("chunk_id", "chunk_text")))
+  def stripBoilerplateLines(docs: DataFrame): DataFrame = {
+    val base = docs.filter(col("text").isNotNull && col("source").isNotNull)
+    val lines = base.select(col("doc_id"), col("source"),
+        posexplode(split(col("text"), "\n")).as(Seq("chunk_id", "chunk_text")))
       .withColumn("__bp_h", polyFingerprint64(col("chunk_text")))
-    val boiler = boilerLineSet(base, lines, idCol, domainCol,
-        maxDfPermille, minDomainDocs)
-      .select(col(domainCol), col("line_hash").as("__bp_h"),
+    val boiler = boilerLineSet(base, lines, "doc_id", "source",
+        500, 4)
+      .select(col("source"), col("line_hash").as("__bp_h"),
         lit(true).as("__bp_drop"))
-    lines.join(boiler, Seq(domainCol, "__bp_h"), "left")
-      .groupBy(col(idCol), col(domainCol))
+    lines.join(boiler, Seq("source", "__bp_h"), "left")
+      .groupBy(col("doc_id"), col("source"))
       .agg(count(lit(1)).as("n_lines"),
         sum(when(col("__bp_drop").isNull, lit(1L)).otherwise(lit(0L)))
           .as("n_kept"),
@@ -1539,7 +1497,7 @@ object Dedup {
           array_sort(collect_list(when(col("__bp_drop").isNull,
             struct(col("chunk_id"), col("chunk_text"))))),
           s => s("chunk_text")), "\n").as("clean_text"))
-      .select(col(idCol), col(domainCol), col("clean_text"),
+      .select(col("doc_id"), col("source"), col("clean_text"),
         col("n_lines"), col("n_kept"))
   }
 
@@ -1558,16 +1516,15 @@ object Dedup {
     * partial-agg + one equi-join back — the exactByKey posture on the
     * canonical key.
     */
-  def dedupByUrl(docs: DataFrame, idCol: String = "doc_id",
-                 urlCol: String = "url"): DataFrame = {
+  def dedupByUrl(docs: DataFrame): DataFrame = {
     val withCanon = docs.withColumn("canon_url",
-      TextAnalysis.canonicalizeUrl(col(urlCol)))
+      TextAnalysis.canonicalizeUrl(col("url")))
     val firsts = withCanon.filter(col("canon_url").isNotNull)
       .groupBy(col("canon_url"))
-      .agg(min(col(idCol)).as("__ud_first"))
+      .agg(min(col("doc_id")).as("__ud_first"))
     withCanon.join(firsts, Seq("canon_url"), "left")
       .withColumn("url_keep",
-        col("canon_url").isNull || col(idCol) === col("__ud_first"))
+        col("canon_url").isNull || col("doc_id") === col("__ud_first"))
       .drop("__ud_first")
   }
 
@@ -1602,27 +1559,19 @@ object Dedup {
     * on line_hash, and `<name>_meta` recording the threshold knobs the
     * artifact was built under.
     */
-  def writeBoilerplateLines(docs: DataFrame, name: String,
-                            idCol: String = "doc_id",
-                            textCol: String = "text",
-                            domainCol: String = "source",
-                            maxDfPermille: Int = 500,
-                            minDomainDocs: Int = 4,
-                            buckets: Int = 8): Unit = {
-    require(maxDfPermille > 0 && maxDfPermille <= 1000,
-      s"maxDfPermille must be in (0, 1000], got $maxDfPermille")
-    val base = docs.filter(col(textCol).isNotNull && col(domainCol).isNotNull)
-    val lines = base.select(col(idCol), col(domainCol),
-        posexplode(split(col(textCol), "\n")).as(Seq("chunk_id", "chunk_text")))
+  def writeBoilerplateLines(docs: DataFrame, name: String): Unit = {
+    val base = docs.filter(col("text").isNotNull && col("source").isNotNull)
+    val lines = base.select(col("doc_id"), col("source"),
+        posexplode(split(col("text"), "\n")).as(Seq("chunk_id", "chunk_text")))
       .withColumn("__bp_h", polyFingerprint64(col("chunk_text")))
     graft.core.Layout.writeBucketed(
-      boilerLineSet(base, lines, idCol, domainCol, maxDfPermille,
-        minDomainDocs),
-      s"${name}_lines", "line_hash", buckets)
+      boilerLineSet(base, lines, "doc_id", "source", 500,
+        4),
+      s"${name}_lines", "line_hash", 8)
     val spark = docs.sparkSession
     import spark.implicits._
     graft.core.Layout.writeBucketed(
-      Seq((domainCol, maxDfPermille, minDomainDocs))
+      Seq(("source", 500, 4))
         .toDF("domain_col", "max_df_permille", "min_domain_docs"),
       s"${name}_meta", "domain_col", 1)
   }
@@ -1648,26 +1597,24 @@ object Dedup {
     * id join back — batch-sized work, nothing scales with the corpus
     * the artifact was trained on.
     */
-  def stripLinesByHashSet(docs: DataFrame, lineHashes: DataFrame,
-                          idCol: String = "doc_id",
-                          textCol: String = "text"): DataFrame = {
-    val lines = docs.filter(col(textCol).isNotNull)
-      .select(col(idCol),
-        posexplode(split(col(textCol), "\n")).as(Seq("chunk_id", "chunk_text")))
+  def stripLinesByHashSet(docs: DataFrame, lineHashes: DataFrame): DataFrame = {
+    val lines = docs.filter(col("text").isNotNull)
+      .select(col("doc_id"),
+        posexplode(split(col("text"), "\n")).as(Seq("chunk_id", "chunk_text")))
       .withColumn("__bs_h", polyFingerprint64(col("chunk_text")))
     val set = broadcast(lineHashes
       .select(col("line_hash").as("__bs_h")).distinct()
       .withColumn("__bs_drop", lit(true)))
     val clean = lines.join(set, Seq("__bs_h"), "left")
-      .groupBy(col(idCol))
+      .groupBy(col("doc_id"))
       .agg(array_join(transform(
         array_sort(collect_list(when(col("__bs_drop").isNull,
           struct(col("chunk_id"), col("chunk_text"))))),
         s => s("chunk_text")), "\n").as("__bs_clean"))
-    docs.join(clean, Seq(idCol), "left")
-      .withColumn(textCol,
-        when(col(textCol).isNotNull, coalesce(col("__bs_clean"), lit("")))
-          .otherwise(col(textCol)))
+    docs.join(clean, Seq("doc_id"), "left")
+      .withColumn("text",
+        when(col("text").isNotNull, coalesce(col("__bs_clean"), lit("")))
+          .otherwise(col("text")))
       .drop("__bs_clean")
   }
 
@@ -1760,26 +1707,22 @@ object Dedup {
     * anywhere — this is a profile, not a candidate generator, so the
     * hot-bucket guard is structurally unnecessary.
     */
-  def duplicationProfile(docs: DataFrame, n: Int = 3, minDocs: Int = 2,
-                         idCol: String = "doc_id",
-                         textCol: String = "text"): DataFrame = {
-    require(n >= 1, s"shingle width must be >= 1, got $n")
-    require(minDocs >= 2, s"minDocs must be >= 2, got $minDocs")
-    val hs = docs.filter(col(textCol).isNotNull)
-      .select(col(idCol), explode(shingleHashes(col(textCol), n)).as("__dp_h"))
+  def duplicationProfile(docs: DataFrame): DataFrame = {
+    val hs = docs.filter(col("text").isNotNull)
+      .select(col("doc_id"), explode(shingleHashes(col("text"), 3)).as("__dp_h"))
       // pinned: dfreq AND the flag join both read hs — without the pin
       // the corpus scan + shingle explode runs twice, contradicting the
       // single-pass claim above (the nbParts/Decontamination pattern)
       .pin()
     val dfreq = hs.groupBy("__dp_h").agg(count(lit(1)).as("__dp_df"))
     val agg = hs.join(dfreq, "__dp_h")
-      .groupBy(col(idCol))
+      .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_shingles"),
-        sum(when(col("__dp_df") >= minDocs, lit(1L)).otherwise(lit(0L)))
+        sum(when(col("__dp_df") >= 2, lit(1L)).otherwise(lit(0L)))
           .as("dup_shingles"))
-    docs.select(col(idCol))
-      .join(agg, Seq(idCol), "left_outer")
-      .select(col(idCol),
+    docs.select(col("doc_id"))
+      .join(agg, Seq("doc_id"), "left_outer")
+      .select(col("doc_id"),
         coalesce(col("n_shingles"), lit(0L)).as("n_shingles"),
         coalesce(col("dup_shingles"), lit(0L)).as("dup_shingles"),
         when(coalesce(col("n_shingles"), lit(0L)) > 0,
@@ -1810,16 +1753,13 @@ object Dedup {
     * share denominators still count every distinct shingle. The
     * domain-count `types` table is |domains| rows and broadcasts.
     */
-  def crossDomainDup(docs: DataFrame, n: Int = 3,
-                     domainCol: String = "source",
-                     idCol: String = "doc_id", textCol: String = "text",
+  def crossDomainDup(docs: DataFrame,
                      maxDomains: Int = 64): DataFrame = {
-    require(n >= 1, s"shingle width must be >= 1, got $n")
     require(maxDomains >= 2, s"maxDomains must be >= 2, got $maxDomains")
     val hd = docs
-      .filter(col(textCol).isNotNull && col(domainCol).isNotNull)
-      .select(col(domainCol).cast("string").as("__cd_dom"),
-        explode(shingleHashes(col(textCol), n)).as("__cd_h"))
+      .filter(col("text").isNotNull && col("source").isNotNull)
+      .select(col("source").cast("string").as("__cd_dom"),
+        explode(shingleHashes(col("text"), 3)).as("__cd_h"))
       .distinct()
     val types = hd.groupBy("__cd_dom").agg(count(lit(1)).as("__cd_types"))
     val pairs = hd.groupBy("__cd_h")
@@ -1846,13 +1786,11 @@ object Dedup {
     * the matrix under-counts universal boilerplate (visibly, not
     * silently).
     */
-  def crossDomainOverflow(docs: DataFrame, n: Int = 3,
-                          domainCol: String = "source",
-                          textCol: String = "text",
+  def crossDomainOverflow(docs: DataFrame,
                           maxDomains: Int = 64): DataFrame =
-    docs.filter(col(textCol).isNotNull && col(domainCol).isNotNull)
-      .select(col(domainCol).cast("string").as("__cd_dom"),
-        explode(shingleHashes(col(textCol), n)).as("h"))
+    docs.filter(col("text").isNotNull && col("source").isNotNull)
+      .select(col("source").cast("string").as("__cd_dom"),
+        explode(shingleHashes(col("text"), 3)).as("h"))
       .distinct()
       .groupBy("h").agg(countDistinct(col("__cd_dom")).as("n_domains"))
       .filter(col("n_domains") > maxDomains)
@@ -1883,20 +1821,18 @@ object Dedup {
     * shingle explode, one partial-aggregated df shuffle, one hash-keyed
     * flag join, one doc-keyed rollup; no pair explosion.
     */
-  def softDedupWeights(docs: DataFrame, n: Int = 3,
-                       idCol: String = "doc_id",
-                       textCol: String = "text"): DataFrame = {
+  def softDedupWeights(docs: DataFrame, n: Int = 3): DataFrame = {
     require(n >= 1, s"shingle width must be >= 1, got $n")
-    val hs = docs.filter(col(textCol).isNotNull)
-      .select(col(idCol), explode(shingleHashes(col(textCol), n)).as("__sd_h"))
+    val hs = docs.filter(col("text").isNotNull)
+      .select(col("doc_id"), explode(shingleHashes(col("text"), n)).as("__sd_h"))
       .pin()
     val dfreq = hs.groupBy("__sd_h").agg(count(lit(1)).as("__sd_df"))
     val agg = hs.join(dfreq, "__sd_h")
-      .groupBy(col(idCol))
+      .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_shingles"), sum("__sd_df").as("sum_df"))
-    docs.select(col(idCol))
-      .join(agg, Seq(idCol), "left_outer")
-      .select(col(idCol),
+    docs.select(col("doc_id"))
+      .join(agg, Seq("doc_id"), "left_outer")
+      .select(col("doc_id"),
         coalesce(col("n_shingles"), lit(0L)).as("n_shingles"),
         coalesce(col("sum_df"), lit(0L)).as("sum_df"),
         when(coalesce(col("n_shingles"), lit(0L)) > 0,
@@ -1916,13 +1852,11 @@ object Dedup {
     * contributes ~1 document's worth of mass, without the cliff of a
     * hard threshold.
     */
-  def softDedupSample(docs: DataFrame, n: Int = 3,
-                      idCol: String = "doc_id",
-                      textCol: String = "text"): DataFrame =
+  def softDedupSample(docs: DataFrame): DataFrame =
     graft.ext.Sampling.sampleByRate(
-      softDedupWeights(docs, n, idCol, textCol),
-      col(idCol), col("weight_x100"), den = 100)
-      .select(col(idCol), col("weight_x100"))
+      softDedupWeights(docs, 3),
+      col("doc_id"), col("weight_x100"), den = 100)
+      .select(col("doc_id"), col("weight_x100"))
 
   /** Shared front half of the ExactSubstr family ([[dupSpanStats]] /
     * [[removeDupSpans]]): per document, the SORTED array of 0-based
@@ -2032,11 +1966,10 @@ object Dedup {
     * (disclosed trade).
     */
   def dupSpanStats(docs: DataFrame, minLen: Int = 10,
-                   idCol: String = "doc_id", textCol: String = "text",
                    keepFirst: Boolean = true): DataFrame = {
-    val flagged = dupSpanStarts(docs, minLen, idCol, textCol, keepFirst,
+    val flagged = dupSpanStarts(docs, minLen, "doc_id", "text", keepFirst,
       "dupSpanStats")
-    val stats = flagged.select(col(idCol),
+    val stats = flagged.select(col("doc_id"),
       foldSpans(col("__ds_starts"), minLen,
         accInit = struct(lit(0L).as("dup"), lit(0L).as("spans"),
           lit(0L).as("mx")),
@@ -2045,11 +1978,11 @@ object Dedup {
           (acc.getField("spans") + 1L).as("spans"),
           greatest(acc.getField("mx"), e - s).as("mx")),
         finish = (acc, _, _) => acc).as("__ds_r"))
-    docs.select(col(idCol), col(textCol))
-      .join(stats, Seq(idCol), "left_outer")
-      .select(col(idCol),
-        when(col(textCol).isNull, lit(0L))
-          .otherwise(size(split(col(textCol), " ")).cast("long"))
+    docs.select(col("doc_id"), col("text"))
+      .join(stats, Seq("doc_id"), "left_outer")
+      .select(col("doc_id"),
+        when(col("text").isNull, lit(0L))
+          .otherwise(size(split(col("text"), " ")).cast("long"))
           .as("n_tokens"),
         coalesce(col("__ds_r").getField("dup"), lit(0L)).as("dup_tokens"),
         coalesce(col("__ds_r").getField("spans"), lit(0L)).as("n_spans"),
@@ -2067,35 +2000,34 @@ object Dedup {
     * O(tokens · spans) per row, never a shuffle.
     */
   def removeDupSpans(docs: DataFrame, minLen: Int = 10,
-                     idCol: String = "doc_id", textCol: String = "text",
                      keepFirst: Boolean = true): DataFrame = {
-    val flagged = dupSpanStarts(docs, minLen, idCol, textCol, keepFirst,
+    val flagged = dupSpanStarts(docs, minLen, "doc_id", "text", keepFirst,
       "removeDupSpans")
-    val ivs = flagged.select(col(idCol),
+    val ivs = flagged.select(col("doc_id"),
       foldSpans(col("__ds_starts"), minLen,
         accInit = array().cast("array<struct<s:bigint,e:bigint>>"),
         onClose = (acc, s, e) =>
           concat(acc, array(struct(s.as("s"), e.as("e")))),
         finish = (acc, _, _) => acc).as("__ds_ivs"))
-    val ws = split(col(textCol), " ")
+    val ws = split(col("text"), " ")
     val kept = filter(sequence(lit(0), size(col("__ds_ws")) - 1),
       t => !exists(col("__ds_ivs"),
         iv => t.cast("long") >= iv.getField("s") &&
           t.cast("long") < iv.getField("e")))
-    docs.select(col(idCol), col(textCol))
-      .join(ivs, Seq(idCol), "left_outer")
+    docs.select(col("doc_id"), col("text"))
+      .join(ivs, Seq("doc_id"), "left_outer")
       .withColumn("__ds_ws", ws)
       .withColumn("__ds_ivs",
         coalesce(col("__ds_ivs"),
           array().cast("array<struct<s:bigint,e:bigint>>")))
       .withColumn("__ds_kept", kept)
-      .select(col(idCol),
-        when(col(textCol).isNull, lit(null).cast("string"))
+      .select(col("doc_id"),
+        when(col("text").isNull, lit(null).cast("string"))
           .otherwise(concat_ws(" ", transform(col("__ds_kept"),
             t => element_at(col("__ds_ws"), t + 1)))).as("clean_text"),
-        when(col(textCol).isNull, lit(0L))
+        when(col("text").isNull, lit(0L))
           .otherwise(size(col("__ds_ws")).cast("long")).as("n_tokens"),
-        when(col(textCol).isNull, lit(0L))
+        when(col("text").isNull, lit(0L))
           .otherwise(size(col("__ds_kept")).cast("long")).as("kept_tokens"))
   }
 
@@ -2111,14 +2043,13 @@ object Dedup {
     * Scale shape: one codegen'd normalize+hash map over the scan, one
     * partial-agg groupBy of 8-byte keys.
     */
-  def normalizedDupGroups(docs: DataFrame, idCol: String = "doc_id",
-                          textCol: String = "text"): DataFrame =
-    docs.filter(col(textCol).isNotNull)
-      .select(col(idCol),
-        polyFingerprint64(TextAnalysis.normalizeText(col(textCol)))
+  def normalizedDupGroups(docs: DataFrame): DataFrame =
+    docs.filter(col("text").isNotNull)
+      .select(col("doc_id"),
+        polyFingerprint64(TextAnalysis.normalizeText(col("text")))
           .as("norm_fp"))
       .groupBy("norm_fp")
-      .agg(min(col(idCol)).as("keep_id"),
+      .agg(min(col("doc_id")).as("keep_id"),
         count(lit(1)).as("n_copies"))
       .filter(col("n_copies") > 1)
 
@@ -2136,20 +2067,17 @@ object Dedup {
     * boundary-gram hashes are near-unique, so the join is
     * collision-bounded, never all-pairs.
     */
-  def continuationPairs(docs: DataFrame, window: Int = 8,
-                        idCol: String = "doc_id",
-                        textCol: String = "text"): DataFrame = {
-    require(window > 0, s"window must be positive, got $window")
-    val ws = split(col(textCol), " ")
+  def continuationPairs(docs: DataFrame): DataFrame = {
+    val ws = split(col("text"), " ")
     val n = size(ws)
-    val head = concat_ws(" ", slice(ws, 1, window))
-    val tail = concat_ws(" ", slice(ws, -window, window))
-    val base = docs.filter(col(textCol).isNotNull && n >= window)
-      .select(col(idCol), head.as("__cp_head"), tail.as("__cp_tail"))
-    val tails = base.select(col(idCol).as("prev_id"),
+    val head = concat_ws(" ", slice(ws, 1, 8))
+    val tail = concat_ws(" ", slice(ws, -8, 8))
+    val base = docs.filter(col("text").isNotNull && n >= 8)
+      .select(col("doc_id"), head.as("__cp_head"), tail.as("__cp_tail"))
+    val tails = base.select(col("doc_id").as("prev_id"),
       col("__cp_tail").as("boundary_gram"),
       polyFingerprint(col("__cp_tail")).as("__cp_h"))
-    val heads = base.select(col(idCol).as("next_id"),
+    val heads = base.select(col("doc_id").as("next_id"),
       col("__cp_head").as("__cp_hg"),
       polyFingerprint(col("__cp_head")).as("__cp_h"))
     tails.join(heads, "__cp_h")
@@ -2164,13 +2092,12 @@ object Dedup {
     * effort goes. One hash map over the scan, one (domain, fp)
     * partial-agg, one domain rollup.
     */
-  def domainDupRates(docs: DataFrame, domainCol: String = "source",
-                     textCol: String = "text"): DataFrame =
-    docs.filter(col(textCol).isNotNull && col(domainCol).isNotNull)
-      .groupBy(col(domainCol),
-        polyFingerprint64(col(textCol)).as("__dr_fp"))
+  def domainDupRates(docs: DataFrame): DataFrame =
+    docs.filter(col("text").isNotNull && col("source").isNotNull)
+      .groupBy(col("source"),
+        polyFingerprint64(col("text")).as("__dr_fp"))
       .agg(count(lit(1)).as("__dr_c"))
-      .groupBy(domainCol)
+      .groupBy("source")
       .agg(sum("__dr_c").as("n_docs"),
         count(lit(1)).as("n_distinct"),
         (sum("__dr_c") - count(lit(1))).as("n_dups"))
@@ -2184,16 +2111,14 @@ object Dedup {
     * cross-domain group. One codegen'd hash map over the scan + one
     * fp-keyed partial aggregation — 8-byte keys through the exchange.
     */
-  def mirrorDocs(docs: DataFrame, domainCol: String = "source",
-                 idCol: String = "doc_id",
-                 textCol: String = "text"): DataFrame =
-    docs.filter(col(textCol).isNotNull && col(domainCol).isNotNull)
-      .select(col(idCol), col(domainCol),
-        polyFingerprint64(col(textCol)).as("content_fp"))
+  def mirrorDocs(docs: DataFrame): DataFrame =
+    docs.filter(col("text").isNotNull && col("source").isNotNull)
+      .select(col("doc_id"), col("source"),
+        polyFingerprint64(col("text")).as("content_fp"))
       .groupBy("content_fp")
-      .agg(countDistinct(col(domainCol)).as("n_sources"),
+      .agg(countDistinct(col("source")).as("n_sources"),
         count(lit(1)).as("n_copies"),
-        min(col(idCol)).as("keep_id"))
+        min(col("doc_id")).as("keep_id"))
       .filter(col("n_sources") > 1)
 
   /** Contrastive TRAINING TRIPLETS mined from the corpus itself —
@@ -2213,21 +2138,15 @@ object Dedup {
     * resolve through a rank equi-join carrying 3 rows per pair; the
     * near-dup side inherits the guarded LSH machinery wholesale.
     */
-  def contrastiveTriplets(docs: DataFrame, jNum: Int = 1, jDen: Int = 2,
-                          idCol: String = "doc_id",
-                          textCol: String = "text",
-                          groupWidth: Int = 16): DataFrame = {
-    require(jNum >= 0 && jDen > 0 && jNum <= jDen,
-      s"jaccard threshold $jNum/$jDen must be a fraction in [0, 1]")
-    require(groupWidth > 0, s"groupWidth must be positive, got $groupWidth")
-    val pairs = nearDupPairs(docs, idCol, textCol)
-      .filter(col("inter") * jDen >= col("uni") * jNum)
+  def contrastiveTriplets(docs: DataFrame): DataFrame = {
+    val pairs = nearDupPairs(docs)
+      .filter(col("inter") * 2 >= col("uni") * 1)
       .select(col("doc_a").as("anchor_id"), col("doc_b").as("positive_id"))
-    val bkt = Sampling.bucket(col(idCol))
-    val base = docs.select(col(idCol)).withColumn("__ct_bkt", bkt)
-      .withColumn("__ct_grp", (col("__ct_bkt") / groupWidth).cast("long"))
+    val bkt = Sampling.bucket(col("doc_id"))
+    val base = docs.select(col("doc_id")).withColumn("__ct_bkt", bkt)
+      .withColumn("__ct_grp", (col("__ct_bkt") / 16).cast("long"))
     val inGrp = Window.partitionBy("__ct_grp")
-      .orderBy(col("__ct_bkt"), col(idCol))
+      .orderBy(col("__ct_bkt"), col("doc_id"))
     val withRn = base
       .withColumn("__ct_rn", row_number().over(inGrp).cast("long"))
     // per-group offsets: bounded by Grain/groupWidth rows, broadcast
@@ -2239,7 +2158,7 @@ object Dedup {
             .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
       .select("__ct_grp", "__ct_off")
     val ranked = withRn.join(broadcast(offsets), "__ct_grp")
-      .select(col(idCol).as("__ct_cand"),
+      .select(col("doc_id").as("__ct_cand"),
         (col("__ct_rn") + col("__ct_off")).as("__ct_rank"))
     val n = docs.agg(count(lit(1)).as("__ct_n"))
     val cands = pairs.crossJoin(broadcast(n))

@@ -29,7 +29,7 @@ object Eval {
     ((a - a % b) / b).cast("long")
 
   /** Per-item exact-match + bag-of-tokens F1 between a prediction and
-    * a reference relation (joined on `idCol`; items present on only
+    * a reference relation (joined on `doc_id`; items present on only
     * one side are dropped — they have no score). Tokens follow the
     * [[TextAnalysis.normalizeText]] law, so "The cat." matches
     * "the cat"; overlap = Σ_w min(tf_pred(w), tf_ref(w)) — the bag
@@ -48,17 +48,15 @@ object Eval {
     * is the id join plus one projection — no pins, no word exchange,
     * nothing collects or crosses.
     */
-  def tokenF1(preds: DataFrame, refs: DataFrame,
-              idCol: String = "doc_id", predCol: String = "pred",
-              refCol: String = "ref"): DataFrame = {
-    val nP = preds.filter(col(predCol).isNotNull).select(col(idCol),
-      TextAnalysis.normalizeText(col(predCol)).as("__ev_np"))
-    val nR = refs.filter(col(refCol).isNotNull).select(col(idCol),
-      TextAnalysis.normalizeText(col(refCol)).as("__ev_nr"))
-    nP.join(nR, idCol)
+  def tokenF1(preds: DataFrame, refs: DataFrame): DataFrame = {
+    val nP = preds.filter(col("pred").isNotNull).select(col("doc_id"),
+      TextAnalysis.normalizeText(col("pred")).as("__ev_np"))
+    val nR = refs.filter(col("ref").isNotNull).select(col("doc_id"),
+      TextAnalysis.normalizeText(col("ref")).as("__ev_nr"))
+    nP.join(nR, "doc_id")
       .withColumn("__ev_o", element_at(graft.functions.gramOverlap(
         col("__ev_np"), col("__ev_nr"), 1, chars = false), 1))
-      .select(col(idCol),
+      .select(col("doc_id"),
         col("__ev_o.tp").as("n_pred"), col("__ev_o.tr").as("n_ref"),
         col("__ev_o.m").as("overlap"),
         (col("__ev_np") === col("__ev_nr")).as("em"),
@@ -69,7 +67,7 @@ object Eval {
 
   /** Classification CONFUSION MATRIX + per-class precision/recall —
     * the readout every classifier gate (language ID, quality, safety)
-    * ships with: predictions joined to references on `idCol`, one row
+    * ships with: predictions joined to references on `doc_id`, one row
     * per observed (ref, pred) cell with the count, plus the cell's
     * share of its reference row (recall direction) and its prediction
     * column (precision direction), both ×100 integer-truncating —
@@ -82,14 +80,12 @@ object Eval {
     * (ref, pred) partial-agg + two label-keyed marginal joins, all
     * bounded by the label vocabulary.
     */
-  def confusionMatrix(preds: DataFrame, refs: DataFrame,
-                      idCol: String = "doc_id", predCol: String = "pred",
-                      refCol: String = "ref"): DataFrame = {
-    val cells = preds.filter(col(predCol).isNotNull)
-      .select(col(idCol), col(predCol))
-      .join(refs.filter(col(refCol).isNotNull)
-        .select(col(idCol), col(refCol)), idCol)
-      .groupBy(col(refCol).as("ref"), col(predCol).as("pred"))
+  def confusionMatrix(preds: DataFrame, refs: DataFrame): DataFrame = {
+    val cells = preds.filter(col("pred").isNotNull)
+      .select(col("doc_id"), col("pred"))
+      .join(refs.filter(col("ref").isNotNull)
+        .select(col("doc_id"), col("ref")), "doc_id")
+      .groupBy(col("ref").as("ref"), col("pred").as("pred"))
       .agg(count(lit(1)).as("n"))
     val refTot = cells.groupBy(col("ref"))
       .agg(sum(col("n")).as("__cm_rn"))
@@ -102,7 +98,7 @@ object Eval {
   }
 
   /** Majority-vote label aggregation over an annotation relation
-    * (`itemCol`, `annotatorCol`, `labelCol`) — the consensus step of
+    * (`item_id`, `annotator`, `label`) — the consensus step of
     * every labeling pipeline. Per item: the label with the most votes;
     * ties break to the LEXICOGRAPHICALLY SMALLEST label (a stated,
     * engine-independent rule — "first annotator wins" depends on row
@@ -114,21 +110,19 @@ object Eval {
     * per-item max via a bounded struct-max — never a window sort over
     * the corpus).
     */
-  def majorityVote(labels: DataFrame, itemCol: String = "item_id",
-                   annotatorCol: String = "annotator",
-                   labelCol: String = "label"): DataFrame = {
-    val votes = labels.filter(col(labelCol).isNotNull)
-      .groupBy(col(itemCol), col(labelCol))
+  def majorityVote(labels: DataFrame): DataFrame = {
+    val votes = labels.filter(col("label").isNotNull)
+      .groupBy(col("item_id"), col("label"))
       .agg(count(lit(1)).as("votes"))
     // per-item argmax with smallest-label tie: max over
     // struct(votes, NEGATED label order) is wrong for strings — use
     // min over struct(-votes, label) instead: most votes first, then
     // smallest label
-    votes.groupBy(col(itemCol))
-      .agg(min(struct((-col("votes")).as("nv"), col(labelCol).as("l")))
+    votes.groupBy(col("item_id"))
+      .agg(min(struct((-col("votes")).as("nv"), col("label").as("l")))
           .as("__mv_top"),
         sum(col("votes")).as("n_votes"))
-      .select(col(itemCol), col("__mv_top.l").as("label"),
+      .select(col("item_id"), col("__mv_top.l").as("label"),
         (-col("__mv_top.nv")).as("votes"), col("n_votes"),
         (col("__mv_top.nv") === -col("n_votes")).as("unanimous"))
   }
@@ -160,15 +154,13 @@ object Eval {
     * tr) inside the id join's own stage and ONE 4-row-per-item rollup
     * produces the report — the id join is the only shuffle left.
     */
-  def bleuStats(preds: DataFrame, refs: DataFrame,
-                idCol: String = "doc_id", predCol: String = "pred",
-                refCol: String = "ref"): DataFrame = {
-    val nP = preds.filter(col(predCol).isNotNull).select(col(idCol),
-      TextAnalysis.normalizeText(col(predCol)).as("__bl_p"))
-    val nR = refs.filter(col(refCol).isNotNull).select(col(idCol),
-      TextAnalysis.normalizeText(col(refCol)).as("__bl_r"))
+  def bleuStats(preds: DataFrame, refs: DataFrame): DataFrame = {
+    val nP = preds.filter(col("pred").isNotNull).select(col("doc_id"),
+      TextAnalysis.normalizeText(col("pred")).as("__bl_p"))
+    val nR = refs.filter(col("ref").isNotNull).select(col("doc_id"),
+      TextAnalysis.normalizeText(col("ref")).as("__bl_r"))
     // only items present on BOTH sides score (same rule as tokenF1)
-    val both = nP.join(nR, idCol)
+    val both = nP.join(nR, "doc_id")
     val perRow = both.select(explode(graft.functions.gramOverlap(
         col("__bl_p"), col("__bl_r"), 4, chars = false)).as("__bl_o"))
       .select(col("__bl_o.n").as("__bl_n"), col("__bl_o.m").as("__bl_m"),
@@ -205,9 +197,8 @@ object Eval {
     * presentation-layer value (NOT oracle-gated); every input to it
     * sits in the same row as an exact integer.
     */
-  def bleu(preds: DataFrame, refs: DataFrame, idCol: String = "doc_id",
-           predCol: String = "pred", refCol: String = "ref"): DataFrame =
-    bleuStats(preds, refs, idCol, predCol, refCol).withColumn("bleu",
+  def bleu(preds: DataFrame, refs: DataFrame): DataFrame =
+    bleuStats(preds, refs).withColumn("bleu",
       when(col("gm_x10000").isNull, lit(null).cast("double"))
         .otherwise((col("gm_x10000").cast("double") / 10000.0) *
           when(!col("bp_applies"), lit(1.0))
@@ -240,17 +231,15 @@ object Eval {
     * ASCII), then one 6-row-per-item rollup; the id join is the only
     * shuffle left.
     */
-  def chrF(preds: DataFrame, refs: DataFrame,
-           idCol: String = "doc_id", predCol: String = "pred",
-           refCol: String = "ref"): DataFrame = {
+  def chrF(preds: DataFrame, refs: DataFrame): DataFrame = {
     val orders = 1 to 6
     def chars(c: Column): Column =
       regexp_replace(TextAnalysis.normalizeText(c), " ", "")
-    val nP = preds.filter(col(predCol).isNotNull).select(col(idCol),
-      chars(col(predCol)).as("__cf_p"))
-    val nR = refs.filter(col(refCol).isNotNull).select(col(idCol),
-      chars(col(refCol)).as("__cf_r"))
-    val both = nP.join(nR, idCol)
+    val nP = preds.filter(col("pred").isNotNull).select(col("doc_id"),
+      chars(col("pred")).as("__cf_p"))
+    val nR = refs.filter(col("ref").isNotNull).select(col("doc_id"),
+      chars(col("ref")).as("__cf_r"))
+    val both = nP.join(nR, "doc_id")
     val perRow = both.select(explode(graft.functions.gramOverlap(
         col("__cf_p"), col("__cf_r"), orders.max, chars = true)).as("__cf_o"))
       .select(col("__cf_o.n").as("__cf_n"), col("__cf_o.m").as("__cf_m"),
@@ -295,19 +284,17 @@ object Eval {
     * (two row-local explode passes ×2 orders, one (id, n, gram)
     * partial-agg join, one corpus rollup).
     */
-  def rougeN(preds: DataFrame, refs: DataFrame,
-             idCol: String = "doc_id", predCol: String = "pred",
-             refCol: String = "ref"): DataFrame = {
+  def rougeN(preds: DataFrame, refs: DataFrame): DataFrame = {
     val orders = 1 to 2
-    val nP = preds.filter(col(predCol).isNotNull).select(col(idCol),
-      TextAnalysis.normalizeText(col(predCol)).as("__rn_p"))
-    val nR = refs.filter(col(refCol).isNotNull).select(col(idCol),
-      TextAnalysis.normalizeText(col(refCol)).as("__rn_r"))
+    val nP = preds.filter(col("pred").isNotNull).select(col("doc_id"),
+      TextAnalysis.normalizeText(col("pred")).as("__rn_p"))
+    val nR = refs.filter(col("ref").isNotNull).select(col("doc_id"),
+      TextAnalysis.normalizeText(col("ref")).as("__rn_r"))
     // round 22: the clipped counts come out of ONE row-local
     // GramOverlap pass inside the id join's stage (the bleuStats
     // restructure) — the (id, n, gram) exchanges and the gram-keyed
     // join are gone; the id join is the only shuffle left
-    val both = nP.join(nR, idCol)
+    val both = nP.join(nR, "doc_id")
     val perRow = both.select(explode(graft.functions.gramOverlap(
         col("__rn_p"), col("__rn_r"), orders.max, chars = false)).as("__rn_o"))
       .select(col("__rn_o.n").as("__rn_n"), col("__rn_o.m").as("__rn_m"),
@@ -333,7 +320,7 @@ object Eval {
 
   /** Margin-bucket RELIABILITY of a classifier against reference
     * labels — the integer-exact calibration readout (the reliability
-    * diagram's table): rows joined on `idCol`, correctness =
+    * diagram's table): rows joined on `doc_id`, correctness =
     * (pred = ref), confidence bucket = `margin div bucketWidth`
     * (integer floor — margins are the engine's NB bit-margins, already
     * integers). Per bucket: n, n_correct, and `acc_x10000 =
@@ -346,22 +333,15 @@ object Eval {
     * Scale shape: one id join + one bucket-keyed partial agg —
     * bucket cardinality bounded by max-margin/width.
     */
-  def marginReliability(preds: DataFrame, refs: DataFrame,
-                        bucketWidth: Long = 16L,
-                        idCol: String = "doc_id",
-                        predCol: String = "pred",
-                        marginCol: String = "margin",
-                        refCol: String = "ref"): DataFrame = {
-    require(bucketWidth >= 1L,
-      s"bucketWidth must be >= 1, got $bucketWidth")
-    preds.filter(col(predCol).isNotNull && col(marginCol).isNotNull)
-      .select(col(idCol), col(predCol),
-        col(marginCol).cast("long").as("__mr_m"))
-      .join(refs.filter(col(refCol).isNotNull)
-        .select(col(idCol), col(refCol)), idCol)
-      .groupBy(expr(s"__mr_m div ${bucketWidth}L").as("bucket"))
+  def marginReliability(preds: DataFrame, refs: DataFrame): DataFrame = {
+    preds.filter(col("pred").isNotNull && col("margin").isNotNull)
+      .select(col("doc_id"), col("pred"),
+        col("margin").cast("long").as("__mr_m"))
+      .join(refs.filter(col("ref").isNotNull)
+        .select(col("doc_id"), col("ref")), "doc_id")
+      .groupBy(expr(s"__mr_m div 16L").as("bucket"))
       .agg(count(lit(1)).as("n"),
-        sum(when(col(predCol) === col(refCol), 1L).otherwise(0L))
+        sum(when(col("pred") === col("ref"), 1L).otherwise(0L))
           .as("n_correct"))
       .withColumn("acc_x10000", expr("(n_correct * 10000) div n"))
   }
@@ -384,26 +364,24 @@ object Eval {
     * beyond the id join) AND the oracle's recursion depth. Eval
     * answers are short; corpora are not the input here.
     */
-  def rougeL(preds: DataFrame, refs: DataFrame,
-             idCol: String = "doc_id", predCol: String = "pred",
-             refCol: String = "ref", maxTokens: Int = 32): DataFrame = {
+  def rougeL(preds: DataFrame, refs: DataFrame, maxTokens: Int = 32): DataFrame = {
     require(maxTokens >= 1 && maxTokens <= 256,
       s"maxTokens must be in [1, 256], got $maxTokens")
     val emptyArr = expr("cast(array() AS array<string>)")
     def toksOf(c: Column): Column = slice(
       when(c === "", emptyArr).otherwise(split(c, " ")), 1, maxTokens)
-    val nP = preds.filter(col(predCol).isNotNull).select(col(idCol),
-      toksOf(TextAnalysis.normalizeText(col(predCol))).as("__rg_pt"))
-    val nR = refs.filter(col(refCol).isNotNull).select(col(idCol),
-      toksOf(TextAnalysis.normalizeText(col(refCol))).as("__rg_rt"))
-    nP.join(nR, idCol)
+    val nP = preds.filter(col("pred").isNotNull).select(col("doc_id"),
+      toksOf(TextAnalysis.normalizeText(col("pred"))).as("__rg_pt"))
+    val nR = refs.filter(col("ref").isNotNull).select(col("doc_id"),
+      toksOf(TextAnalysis.normalizeText(col("ref"))).as("__rg_rt"))
+    nP.join(nR, "doc_id")
       .withColumn("n_pred", size(col("__rg_pt")).cast("long"))
       .withColumn("n_ref", size(col("__rg_rt")).cast("long"))
       .withColumn("lcs", org.apache.spark.sql.graft.Bridge.column(
         graft.functions.LcsLen(
           org.apache.spark.sql.graft.Bridge.expression(col("__rg_pt")),
           org.apache.spark.sql.graft.Bridge.expression(col("__rg_rt")))))
-      .select(col(idCol), col("n_pred"), col("n_ref"), col("lcs"),
+      .select(col("doc_id"), col("n_pred"), col("n_ref"), col("lcs"),
         when(col("n_pred") + col("n_ref") === 0L, lit(100L))
           .when(col("n_pred") === 0L, lit(0L))
           .otherwise(expr("(lcs * 100) div n_pred")).as("p_x100"),
@@ -436,26 +414,24 @@ object Eval {
     * shape: one codegen'd row-local DP ([[graft.functions.EditDist]])
     * per item after the id join — no shuffle beyond it.
     */
-  def wer(preds: DataFrame, refs: DataFrame,
-          idCol: String = "doc_id", predCol: String = "pred",
-          refCol: String = "ref", maxTokens: Int = 32): DataFrame = {
+  def wer(preds: DataFrame, refs: DataFrame, maxTokens: Int = 32): DataFrame = {
     require(maxTokens >= 1 && maxTokens <= 256,
       s"maxTokens must be in [1, 256], got $maxTokens")
     val emptyArr = expr("cast(array() AS array<string>)")
     def toksOf(c: Column): Column = slice(
       when(c === "", emptyArr).otherwise(split(c, " ")), 1, maxTokens)
-    val nP = preds.filter(col(predCol).isNotNull).select(col(idCol),
-      toksOf(TextAnalysis.normalizeText(col(predCol))).as("__wr_pt"))
-    val nR = refs.filter(col(refCol).isNotNull).select(col(idCol),
-      toksOf(TextAnalysis.normalizeText(col(refCol))).as("__wr_rt"))
-    nP.join(nR, idCol)
+    val nP = preds.filter(col("pred").isNotNull).select(col("doc_id"),
+      toksOf(TextAnalysis.normalizeText(col("pred"))).as("__wr_pt"))
+    val nR = refs.filter(col("ref").isNotNull).select(col("doc_id"),
+      toksOf(TextAnalysis.normalizeText(col("ref"))).as("__wr_rt"))
+    nP.join(nR, "doc_id")
       .withColumn("n_pred", size(col("__wr_pt")).cast("long"))
       .withColumn("n_ref", size(col("__wr_rt")).cast("long"))
       .withColumn("edit_dist", org.apache.spark.sql.graft.Bridge.column(
         graft.functions.EditDist(
           org.apache.spark.sql.graft.Bridge.expression(col("__wr_pt")),
           org.apache.spark.sql.graft.Bridge.expression(col("__wr_rt")))))
-      .select(col(idCol), col("n_pred"), col("n_ref"), col("edit_dist"),
+      .select(col("doc_id"), col("n_pred"), col("n_ref"), col("edit_dist"),
         when(col("n_ref") > 0L, expr("(edit_dist * 100) div n_ref"))
           .when(col("n_pred") === 0L, lit(0L))
           .as("wer_x100"))
@@ -470,10 +446,8 @@ object Eval {
     * when the pooled reference mass is zero. One row:
     * (n_items, n_ref_tokens, n_edits, wer_x100).
     */
-  def werReport(preds: DataFrame, refs: DataFrame,
-                idCol: String = "doc_id", predCol: String = "pred",
-                refCol: String = "ref", maxTokens: Int = 32): DataFrame =
-    wer(preds, refs, idCol, predCol, refCol, maxTokens)
+  def werReport(preds: DataFrame, refs: DataFrame, maxTokens: Int = 32): DataFrame =
+    wer(preds, refs, maxTokens)
       .agg(count(lit(1)).as("n_items"),
         sum(col("n_ref")).as("n_ref_tokens"),
         sum(col("edit_dist")).as("n_edits"))
@@ -496,21 +470,19 @@ object Eval {
     * vocabulary.
     */
   def evalReport(preds: DataFrame, refs: DataFrame, groups: DataFrame,
-                 idCol: String = "doc_id", predCol: String = "pred",
-                 refCol: String = "ref", groupCol: String = "source",
                  maxTokens: Int = 32): DataFrame = {
-    val f1 = tokenF1(preds, refs, idCol, predCol, refCol)
-      .select(col(idCol), col("em"), col("f1_x100"))
-    val rl = rougeL(preds, refs, idCol, predCol, refCol, maxTokens)
-      .select(col(idCol), col("f_x100").as("__er_rf"))
-    f1.join(rl, idCol)
-      .join(groups.select(col(idCol), col(groupCol)), Seq(idCol))
-      .groupBy(col(groupCol))
+    val f1 = tokenF1(preds, refs)
+      .select(col("doc_id"), col("em"), col("f1_x100"))
+    val rl = rougeL(preds, refs, maxTokens)
+      .select(col("doc_id"), col("f_x100").as("__er_rf"))
+    f1.join(rl, "doc_id")
+      .join(groups.select(col("doc_id"), col("source")), Seq("doc_id"))
+      .groupBy(col("source"))
       .agg(count(lit(1)).as("n_items"),
         sum(when(col("em"), 1L).otherwise(0L)).as("n_em"),
         sum(col("f1_x100")).as("__er_f1s"),
         sum(col("__er_rf")).as("__er_rfs"))
-      .select(col(groupCol), col("n_items"), col("n_em"),
+      .select(col("source"), col("n_items"), col("n_em"),
         expr("(n_em * 10000) div n_items").as("em_x10000"),
         expr("__er_f1s div n_items").as("f1_mean_x100"),
         expr("__er_rfs div n_items").as("rouge_mean_x100"))
@@ -545,14 +517,12 @@ object Eval {
     * (worse than chance) is exercised by the rotating annotator in the
     * oracle fixture — exactly where trunc-vs-floor engines diverge.
     */
-  def fleissKappa(labels: DataFrame, itemCol: String = "item_id",
-                  annotatorCol: String = "annotator",
-                  labelCol: String = "label"): DataFrame = {
-    val cells = labels.filter(col(labelCol).isNotNull)
-      .groupBy(col(itemCol), col(labelCol))
+  def fleissKappa(labels: DataFrame): DataFrame = {
+    val cells = labels.filter(col("label").isNotNull)
+      .groupBy(col("item_id"), col("label"))
       .agg(count(lit(1)).as("__fk_nij"))
       .pin()
-    val items = cells.groupBy(col(itemCol))
+    val items = cells.groupBy(col("item_id"))
       .agg(sum(col("__fk_nij")).as("__fk_ri"),
         sum(col("__fk_nij") * col("__fk_nij")).as("__fk_sq"))
       .filter(col("__fk_ri") >= 2L)
@@ -569,8 +539,8 @@ object Eval {
       sum((col("__fk_sq") - col("__fk_ri")) *
         expr(s"${L}L div (__fk_ri * (__fk_ri - 1))")).as("__fk_s"))
     val catAgg = cells
-      .join(items.select(col(itemCol)), Seq(itemCol), "left_semi")
-      .groupBy(col(labelCol)).agg(sum(col("__fk_nij")).as("__fk_cj"))
+      .join(items.select(col("item_id")), Seq("item_id"), "left_semi")
+      .groupBy(col("label")).agg(sum(col("__fk_nij")).as("__fk_cj"))
       .agg(count(lit(1)).as("n_categories"),
         sum(col("__fk_cj")).as("n_ratings"),
         sum(col("__fk_cj") * col("__fk_cj")).as("__fk_q"))
@@ -614,14 +584,12 @@ object Eval {
     * Same scale shape as [[fleissKappa]]: one (unit, label) partial
     * agg, unit/label rollups, an annotator-bounded distinct-r collect.
     */
-  def krippendorffAlpha(labels: DataFrame, itemCol: String = "item_id",
-                        annotatorCol: String = "annotator",
-                        labelCol: String = "label"): DataFrame = {
-    val cells = labels.filter(col(labelCol).isNotNull)
-      .groupBy(col(itemCol), col(labelCol))
+  def krippendorffAlpha(labels: DataFrame): DataFrame = {
+    val cells = labels.filter(col("label").isNotNull)
+      .groupBy(col("item_id"), col("label"))
       .agg(count(lit(1)).as("__ka_nij"))
       .pin()
-    val items = cells.groupBy(col(itemCol))
+    val items = cells.groupBy(col("item_id"))
       .agg(sum(col("__ka_nij")).as("__ka_ri"),
         sum(col("__ka_nij") * col("__ka_nij")).as("__ka_sq"))
       .filter(col("__ka_ri") >= 2L)
@@ -636,8 +604,8 @@ object Eval {
       sum((col("__ka_ri") * col("__ka_ri") - col("__ka_sq")) *
         expr(s"${L}L div (__ka_ri - 1)")).as("__ka_do"))
     val catAgg = cells
-      .join(items.select(col(itemCol)), Seq(itemCol), "left_semi")
-      .groupBy(col(labelCol)).agg(sum(col("__ka_nij")).as("__ka_cj"))
+      .join(items.select(col("item_id")), Seq("item_id"), "left_semi")
+      .groupBy(col("label")).agg(sum(col("__ka_nij")).as("__ka_cj"))
       .agg(count(lit(1)).as("n_categories"),
         sum(col("__ka_cj")).as("n_ratings"),
         sum(col("__ka_cj") * col("__ka_cj")).as("__ka_q"))
@@ -698,43 +666,41 @@ object Eval {
     * divisions run in DECIMAL(38,0) so even those bounds never
     * overflow a gated column.
     */
-  def rankEval(run: DataFrame, qrels: DataFrame, k: Int = 10,
-               queryCol: String = "query_id", docCol: String = "doc_id",
-               rankCol: String = "rank", relCol: String = "rel"): DataFrame = {
+  def rankEval(run: DataFrame, qrels: DataFrame, k: Int = 10): DataFrame = {
     require(k >= 1 && k <= 25, s"k must be in [1, 25], got $k")
     val L = lcmTo(k + 1)
     import org.apache.spark.sql.expressions.Window
-    val qr = qrels.filter(col(relCol) > 0)
-      .select(col(queryCol), col(docCol), col(relCol).cast("long").as("__ir_rel"))
-    val rj = run.filter(col(rankCol) <= k)
-      .select(col(queryCol), col(docCol), col(rankCol).cast("long").as("__ir_r"))
-      .join(qr, Seq(queryCol, docCol), "left")
+    val qr = qrels.filter(col("rel") > 0)
+      .select(col("query_id"), col("doc_id"), col("rel").cast("long").as("__ir_rel"))
+    val rj = run.filter(col("rank") <= k)
+      .select(col("query_id"), col("doc_id"), col("rank").cast("long").as("__ir_r"))
+      .join(qr, Seq("query_id", "doc_id"), "left")
       .withColumn("__ir_g", coalesce(col("__ir_rel"), lit(0L)))
     // running relevant-hit count at each rank: a per-query window over
     // ≤ k rows (rank is unique per query, so the default RANGE frame
     // and a ROWS frame agree — both engines see the same h)
-    val wh = Window.partitionBy(col(queryCol)).orderBy(col("__ir_r"))
+    val wh = Window.partitionBy(col("query_id")).orderBy(col("__ir_r"))
     val rh = rj.withColumn("__ir_h",
       sum(when(col("__ir_g") > 0L, 1L).otherwise(0L)).over(wh))
-    val perQ = rh.groupBy(col(queryCol)).agg(
+    val perQ = rh.groupBy(col("query_id")).agg(
       count(lit(1)).as("n_ret"),
       sum(when(col("__ir_g") > 0L, 1L).otherwise(0L)).as("n_rel_ret"),
       min(when(col("__ir_g") > 0L, col("__ir_r"))).as("first_rel_rank"),
       sum(when(col("__ir_g") > 0L,
         col("__ir_h") * expr(s"${L}L div __ir_r")).otherwise(0L)).as("__ir_apn"),
       sum(col("__ir_g") * expr(s"${L}L div (__ir_r + 1)")).as("__ir_dcgn"))
-    val nRel = qr.groupBy(col(queryCol))
+    val nRel = qr.groupBy(col("query_id"))
       .agg(count(lit(1)).as("__ir_nrel"))
-    val wi = Window.partitionBy(col(queryCol))
-      .orderBy(col("__ir_rel").desc, col(docCol))
+    val wi = Window.partitionBy(col("query_id"))
+      .orderBy(col("__ir_rel").desc, col("doc_id"))
     val ideal = qr.withColumn("__ir_i", row_number().over(wi).cast("long"))
       .filter(col("__ir_i") <= k)
-      .groupBy(col(queryCol))
+      .groupBy(col("query_id"))
       .agg(sum(col("__ir_rel") * expr(s"${L}L div (__ir_i + 1)"))
         .as("__ir_idcgn"))
-    perQ.join(nRel, Seq(queryCol), "left")
-      .join(ideal, Seq(queryCol), "left")
-      .select(col(queryCol),
+    perQ.join(nRel, Seq("query_id"), "left")
+      .join(ideal, Seq("query_id"), "left")
+      .select(col("query_id"),
         col("n_ret"),
         coalesce(col("__ir_nrel"), lit(0L)).as("n_rel"),
         col("n_rel_ret"),
@@ -774,11 +740,7 @@ object Eval {
     * k-row broadcast literal.
     */
   def rankBiasedPrecision(run: DataFrame, qrels: DataFrame, k: Int = 10,
-                          pNum: Int = 4, pDen: Int = 5,
-                          queryCol: String = "query_id",
-                          docCol: String = "doc_id",
-                          rankCol: String = "rank",
-                          relCol: String = "rel"): DataFrame = {
+                          pNum: Int = 4, pDen: Int = 5): DataFrame = {
     require(k >= 1 && k <= 20, s"k must be in [1, 20], got $k")
     require(pDen >= 2 && pNum >= 1 && pNum < pDen,
       s"persistence must satisfy 1 <= pNum < pDen, got $pNum/$pDen")
@@ -799,18 +761,18 @@ object Eval {
     // would wrap (pDen^k up to ~9e17 is admitted above)
     val resid =
       ((BigInt(pNum) pow k) * 10000 / BigInt(denK)).toLong
-    val qr = qrels.filter(col(relCol) > 0)
-      .select(col(queryCol), col(docCol))
-    val hits = run.filter(col(rankCol) <= k)
-      .select(col(queryCol), col(docCol),
-        col(rankCol).cast("long").as("__rb_r"))
-      .join(qr, Seq(queryCol, docCol), "left_semi")
+    val qr = qrels.filter(col("rel") > 0)
+      .select(col("query_id"), col("doc_id"))
+    val hits = run.filter(col("rank") <= k)
+      .select(col("query_id"), col("doc_id"),
+        col("rank").cast("long").as("__rb_r"))
+      .join(qr, Seq("query_id", "doc_id"), "left_semi")
       .join(broadcast(wdf), "__rb_r")
-    run.filter(col(rankCol) <= k).select(col(queryCol)).distinct()
-      .join(hits.groupBy(col(queryCol))
+    run.filter(col("rank") <= k).select(col("query_id")).distinct()
+      .join(hits.groupBy(col("query_id"))
         .agg(count(lit(1)).as("n_rel_ret"),
-          sum(col("__rb_w")).as("rbp_num")), Seq(queryCol), "left")
-      .select(col(queryCol),
+          sum(col("__rb_w")).as("rbp_num")), Seq("query_id"), "left")
+      .select(col("query_id"),
         coalesce(col("n_rel_ret"), lit(0L)).as("n_rel_ret"),
         coalesce(col("rbp_num"), lit(0L)).as("rbp_num"),
         tdiv(dec(coalesce(col("rbp_num"), lit(0L))) * dec(lit(10000L)),
@@ -831,11 +793,9 @@ object Eval {
     * queries (defined everywhere). One row out; scale shape is
     * [[rankEval]]'s plus a single-row rollup.
     */
-  def irReport(run: DataFrame, qrels: DataFrame, k: Int = 10,
-               queryCol: String = "query_id", docCol: String = "doc_id",
-               rankCol: String = "rank", relCol: String = "rel"): DataFrame = {
+  def irReport(run: DataFrame, qrels: DataFrame, k: Int = 10): DataFrame = {
     val L = lcmTo(k + 1)
-    rankEval(run, qrels, k, queryCol, docCol, rankCol, relCol).agg(
+    rankEval(run, qrels, k).agg(
         count(lit(1)).as("n_queries"),
         sum(when(col("n_rel") > 0L, 1L).otherwise(0L)).as("n_with_rel"),
         sum(coalesce(expr(s"${L}L div first_rel_rank"), lit(0L)))
@@ -900,15 +860,14 @@ object Eval {
     * bounded by score cardinality, never by the row count; ×10⁴ in
     * DECIMAL(38,0) so 2·P·N never overflows.
     */
-  def rocAuc(scored: DataFrame, labelCol: String = "label",
-             scoreCol: String = "score"): DataFrame = {
+  def rocAuc(scored: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val byScore = scored
-      .filter(col(scoreCol).isNotNull && col(labelCol).isNotNull)
-      .groupBy(col(scoreCol).as("__ra_s"))
-      .agg(sum(when(col(labelCol).cast("boolean"), 1L).otherwise(0L))
+      .filter(col("score").isNotNull && col("label").isNotNull)
+      .groupBy(col("score").as("__ra_s"))
+      .agg(sum(when(col("label").cast("boolean"), 1L).otherwise(0L))
           .as("__ra_p"),
-        sum(when(col(labelCol).cast("boolean"), 0L).otherwise(1L))
+        sum(when(col("label").cast("boolean"), 0L).otherwise(1L))
           .as("__ra_n"))
     // 100 TB posture (round 22, the Packing.scala decomposed-cumsum
     // pattern): the negatives-below prefix previously ran as ONE
@@ -969,32 +928,29 @@ object Eval {
     * then a per-query pair self-join bounded by k² — query-bounded by
     * construction, never corpus-sized.
     */
-  def rankCorrelation(runA: DataFrame, runB: DataFrame,
-                      queryCol: String = "query_id",
-                      docCol: String = "doc_id",
-                      rankCol: String = "rank"): DataFrame = {
+  def rankCorrelation(runA: DataFrame, runB: DataFrame): DataFrame = {
     val shared = runA
-      .select(col(queryCol), col(docCol), col(rankCol).cast("long").as("__rc_a"))
-      .join(runB.select(col(queryCol), col(docCol),
-        col(rankCol).cast("long").as("__rc_b")), Seq(queryCol, docCol))
-    val l = shared.select(col(queryCol), col(docCol).as("__rc_d1"),
+      .select(col("query_id"), col("doc_id"), col("rank").cast("long").as("__rc_a"))
+      .join(runB.select(col("query_id"), col("doc_id"),
+        col("rank").cast("long").as("__rc_b")), Seq("query_id", "doc_id"))
+    val l = shared.select(col("query_id"), col("doc_id").as("__rc_d1"),
       col("__rc_a").as("__rc_a1"), col("__rc_b").as("__rc_b1"))
-    val r = shared.select(col(queryCol), col(docCol).as("__rc_d2"),
+    val r = shared.select(col("query_id"), col("doc_id").as("__rc_d2"),
       col("__rc_a").as("__rc_a2"), col("__rc_b").as("__rc_b2"))
-    val pairs = l.join(r, Seq(queryCol))
+    val pairs = l.join(r, Seq("query_id"))
       .filter(col("__rc_d1") < col("__rc_d2"))
-      .select(col(queryCol),
+      .select(col("query_id"),
         (((col("__rc_a1") < col("__rc_a2")) &&
           (col("__rc_b1") < col("__rc_b2"))) ||
           ((col("__rc_a1") > col("__rc_a2")) &&
             (col("__rc_b1") > col("__rc_b2")))).as("__rc_con"))
-    val nShared = shared.groupBy(col(queryCol))
+    val nShared = shared.groupBy(col("query_id"))
       .agg(count(lit(1)).as("n_shared"))
-    val agg = pairs.groupBy(col(queryCol))
+    val agg = pairs.groupBy(col("query_id"))
       .agg(sum(when(col("__rc_con"), 1L).otherwise(0L)).as("concordant"),
         sum(when(col("__rc_con"), 0L).otherwise(1L)).as("discordant"))
-    nShared.join(agg, Seq(queryCol), "left")
-      .select(col(queryCol), col("n_shared"),
+    nShared.join(agg, Seq("query_id"), "left")
+      .select(col("query_id"), col("n_shared"),
         coalesce(col("concordant"), lit(0L)).as("concordant"),
         coalesce(col("discordant"), lit(0L)).as("discordant"),
         when(coalesce(col("concordant"), lit(0L)) +
@@ -1012,16 +968,14 @@ object Eval {
     * one-class groups, disclosed. Rows with a null group form their
     * own group (disclosed, not dropped).
     */
-  def rocAucBy(scored: DataFrame, groupCol: String = "source",
-               labelCol: String = "label",
-               scoreCol: String = "score"): DataFrame = {
+  def rocAucBy(scored: DataFrame, groupCol: String = "source"): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val byScore = scored
-      .filter(col(scoreCol).isNotNull && col(labelCol).isNotNull)
-      .groupBy(col(groupCol), col(scoreCol).as("__ra_s"))
-      .agg(sum(when(col(labelCol).cast("boolean"), 1L).otherwise(0L))
+      .filter(col("score").isNotNull && col("label").isNotNull)
+      .groupBy(col(groupCol), col("score").as("__ra_s"))
+      .agg(sum(when(col("label").cast("boolean"), 1L).otherwise(0L))
           .as("__ra_p"),
-        sum(when(col(labelCol).cast("boolean"), 0L).otherwise(1L))
+        sum(when(col("label").cast("boolean"), 0L).otherwise(1L))
           .as("__ra_n"))
     val w = Window.partitionBy(col(groupCol)).orderBy(col("__ra_s"))
       .rowsBetween(Window.unboundedPreceding, -1)
@@ -1046,24 +1000,21 @@ object Eval {
     * [[Preference.winRateReport]] (only IEEE exactly-rounded ops over
     * the documented z = 1.96 literals — z² = 3.8416, z²/2 = 1.9208,
     * z²/4 = 0.9604 — same parenthesization both engines, floored ×10⁴).
-    * Rows joined on `idCol`; a null group is a group (disclosed).
+    * Rows joined on `doc_id`; a null group is a group (disclosed).
     * Output: (groupCol, n, n_correct, acc_x10000, wilson_lo_x10000,
     * wilson_hi_x10000).
     *
     * Scale shape: one id join + one group-keyed partial agg; the
     * Wilson arithmetic is row-local on the group-bounded result.
     */
-  def accuracyCi(preds: DataFrame, refs: DataFrame,
-                 groupCol: String = "source", idCol: String = "doc_id",
-                 predCol: String = "pred",
-                 refCol: String = "ref"): DataFrame = {
-    val agg = preds.filter(col(predCol).isNotNull)
-      .select(col(idCol), col(predCol))
-      .join(refs.filter(col(refCol).isNotNull)
-        .select(col(idCol), col(groupCol), col(refCol)), idCol)
-      .groupBy(col(groupCol))
+  def accuracyCi(preds: DataFrame, refs: DataFrame): DataFrame = {
+    val agg = preds.filter(col("pred").isNotNull)
+      .select(col("doc_id"), col("pred"))
+      .join(refs.filter(col("ref").isNotNull)
+        .select(col("doc_id"), col("source"), col("ref")), "doc_id")
+      .groupBy(col("source"))
       .agg(count(lit(1)).as("n"),
-        sum(when(col(predCol) === col(refCol), 1L).otherwise(0L))
+        sum(when(col("pred") === col("ref"), 1L).otherwise(0L))
           .as("n_correct"))
     val wD = col("n_correct").cast("double")
     val nD = col("n").cast("double")
@@ -1071,7 +1022,7 @@ object Eval {
       (col("n_correct") * (col("n") - col("n_correct"))).cast("double")
         / nD + lit(0.9604))
     def x1e4(c: Column): Column = floor(lit(10000.0) * c).cast("long")
-    agg.select(col(groupCol), col("n"), col("n_correct"),
+    agg.select(col("source"), col("n"), col("n_correct"),
       expr("(n_correct * 10000) div n").as("acc_x10000"),
       x1e4(((wD + lit(1.9208)) - half) / (nD + lit(3.8416)))
         .as("wilson_lo_x10000"),
@@ -1101,16 +1052,14 @@ object Eval {
     * Scale shape: two id-keyed joins + one corpus rollup — nothing
     * beyond the relations' own sizes.
     */
-  def mcnemar(predsA: DataFrame, predsB: DataFrame, refs: DataFrame,
-              idCol: String = "doc_id", predCol: String = "pred",
-              refCol: String = "ref"): DataFrame = {
-    val a = predsA.filter(col(predCol).isNotNull)
-      .select(col(idCol), col(predCol).as("__mn_a"))
-    val b = predsB.filter(col(predCol).isNotNull)
-      .select(col(idCol), col(predCol).as("__mn_b"))
-    val r = refs.filter(col(refCol).isNotNull)
-      .select(col(idCol), col(refCol).as("__mn_r"))
-    a.join(b, idCol).join(r, idCol)
+  def mcnemar(predsA: DataFrame, predsB: DataFrame, refs: DataFrame): DataFrame = {
+    val a = predsA.filter(col("pred").isNotNull)
+      .select(col("doc_id"), col("pred").as("__mn_a"))
+    val b = predsB.filter(col("pred").isNotNull)
+      .select(col("doc_id"), col("pred").as("__mn_b"))
+    val r = refs.filter(col("ref").isNotNull)
+      .select(col("doc_id"), col("ref").as("__mn_r"))
+    a.join(b, "doc_id").join(r, "doc_id")
       .select((col("__mn_a") === col("__mn_r")).as("__mn_ra"),
         (col("__mn_b") === col("__mn_r")).as("__mn_rb"))
       .agg(count(lit(1)).as("n_items"),
@@ -1150,16 +1099,14 @@ object Eval {
     *
     * Output: (ann_a, ann_b, n, agree, kappa_x10000).
     */
-  def cohenKappa(labels: DataFrame, itemCol: String = "item_id",
-                 annotatorCol: String = "annotator",
-                 labelCol: String = "label"): DataFrame = {
-    val l = labels.filter(col(labelCol).isNotNull)
-      .select(col(itemCol), col(annotatorCol), col(labelCol))
-    val a = l.select(col(itemCol), col(annotatorCol).as("ann_a"),
-      col(labelCol).as("__ck_la"))
-    val b = l.select(col(itemCol), col(annotatorCol).as("ann_b"),
-      col(labelCol).as("__ck_lb"))
-    val pairs = a.join(b, Seq(itemCol))
+  def cohenKappa(labels: DataFrame): DataFrame = {
+    val l = labels.filter(col("label").isNotNull)
+      .select(col("item_id"), col("annotator"), col("label"))
+    val a = l.select(col("item_id"), col("annotator").as("ann_a"),
+      col("label").as("__ck_la"))
+    val b = l.select(col("item_id"), col("annotator").as("ann_b"),
+      col("label").as("__ck_lb"))
+    val pairs = a.join(b, Seq("item_id"))
       .filter(col("ann_a") < col("ann_b"))
     val agg = pairs.groupBy(col("ann_a"), col("ann_b"))
       .agg(count(lit(1)).as("n"),

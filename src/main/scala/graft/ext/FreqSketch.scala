@@ -58,9 +58,9 @@ object FreqSketch {
   /** Corpus-wide weighted token relation (`word`, `weight`) via the
     * row-local [[wordTfs]] expression — the build/probe input.
     */
-  def tokenWeights(docs: DataFrame, textCol: String = "text"): DataFrame =
-    docs.filter(col(textCol).isNotNull)
-      .select(explode(wordTfs(col(textCol))).as("wt"))
+  def tokenWeights(docs: DataFrame): DataFrame =
+    docs.filter(col("text").isNotNull)
+      .select(explode(wordTfs(col("text"))).as("wt"))
       .select(col("wt.word").as("word"), col("wt.tf").as("weight"))
 
   // ── HyperLogLog distinct sketch (cross-engine exact) ───────────────
@@ -160,17 +160,16 @@ object FreqSketch {
     * (the exact arm is the billions-of-rows shuffle the sketch
     * replaces; err_x100 documents what that buys).
     */
-  def hllShingleReport(docs: DataFrame, domainCol: String = "source",
-                       textCol: String = "text", n: Int = 3): DataFrame = {
+  def hllShingleReport(docs: DataFrame): DataFrame = {
     val items = docs
-      .filter(col(textCol).isNotNull && col(domainCol).isNotNull)
-      .select(col(domainCol).as("group"),
-        explode(Dedup.shingleHashes(col(textCol), n)).as("h"))
+      .filter(col("text").isNotNull && col("source").isNotNull)
+      .select(col("source").as("group"),
+        explode(Dedup.shingleHashes(col("text"), 3)).as("h"))
     val est = hllEstimate(hllRegisters(items, col("group"), col("h")))
     val exact = items.groupBy("group")
       .agg(countDistinct("h").as("n_exact"))
     est.join(exact, Seq("group"))
-      .select(col("group").as(domainCol), col("n_regs"), col("max_rank"),
+      .select(col("group").as("source"), col("n_regs"), col("max_rank"),
         col("hll_distinct"), col("n_exact"),
         expr("abs(hll_distinct - n_exact) * 100 div n_exact").as("err_x100"))
   }
@@ -179,11 +178,10 @@ object FreqSketch {
     * behind the CMS prune — bit-identical to the plain exact
     * aggregation; the sketch only deletes the tail's shuffle.
     */
-  def heavyHitterWords(docs: DataFrame, threshold: Long,
-                       textCol: String = "text", d: Int = DefaultDepth,
+  def heavyHitterWords(docs: DataFrame, threshold: Long, d: Int = DefaultDepth,
                        w: Int = DefaultWidth): DataFrame = {
     require(threshold >= 1, s"threshold must be >= 1, got $threshold")
-    val toks = tokenWeights(docs, textCol)
+    val toks = tokenWeights(docs)
     val table = buildCms(toks, col("word"), col("weight"), d, w)
     toks.filter(cmsEstimate(col("word"), table, d, w) >= threshold)
       .groupBy("word").agg(sum("weight").cast("long").as("n"))

@@ -295,13 +295,10 @@ object Multimodal {
     * shuffles 8-byte signatures — identical-signature collapse first,
     * so 10⁸ copies of one logo cost one band row.
     */
-  def nearDupMediaPairs(media: DataFrame, maxHamming: Int = 3,
-                        maxBucket: Int = Dedup.DefaultMaxBucketWidth,
-                        useRealDecode: Boolean = true): DataFrame = {
-    val sigs =
-      if (useRealDecode) dHashFeatures(media) else dHash(media)
-    Dedup.hammingNearDups(sigs, idCol = "media_id", sigCol = "dhash",
-        bits = 64, blocks = 8, maxHamming = maxHamming,
+  def nearDupMediaPairs(media: DataFrame,
+                        maxBucket: Int = Dedup.DefaultMaxBucketWidth): DataFrame = {
+    Dedup.hammingNearDups(dHashFeatures(media), idCol = "media_id", sigCol = "dhash",
+        bits = 64, blocks = 8,
         maxBucket = maxBucket)
       .select(col("doc_a").as("media_a"), col("doc_b").as("media_b"),
         col("hamming"))
@@ -332,10 +329,10 @@ object Multimodal {
     * the default radius catches it; unrelated audio differs in ~half
     * the bits. Output: (media_a, media_b, hamming), media_a < media_b.
     */
-  def nearDupAudioPairs(media: DataFrame, maxHamming: Int = 3,
+  def nearDupAudioPairs(media: DataFrame,
                         maxBucket: Int = Dedup.DefaultMaxBucketWidth): DataFrame =
     Dedup.hammingNearDups(audioFingerprint(media), idCol = "media_id",
-        sigCol = "audio_fp", bits = 64, blocks = 8, maxHamming = maxHamming,
+        sigCol = "audio_fp", bits = 64, blocks = 8,
         maxBucket = maxBucket)
       .select(col("doc_a").as("media_a"), col("doc_b").as("media_b"),
         col("hamming"))
@@ -345,14 +342,12 @@ object Multimodal {
     * propagation); every media id appears, singletons label themselves.
     * Output: (media_id, group_id).
     */
-  def nearDupMediaGroups(media: DataFrame, maxHamming: Int = 3,
-                         maxBucket: Int = Dedup.DefaultMaxBucketWidth,
-                         useRealDecode: Boolean = true,
-                         maxRounds: Int = 50): DataFrame = {
-    val edges = nearDupMediaPairs(media, maxHamming, maxBucket, useRealDecode)
+  def nearDupMediaGroups(media: DataFrame,
+                         maxBucket: Int = Dedup.DefaultMaxBucketWidth): DataFrame = {
+    val edges = nearDupMediaPairs(media, maxBucket)
       .select(col("media_a").as("src"), col("media_b").as("dst"))
     Dedup.clusterLabels(media.select(col("media_id").as("id")), edges,
-        maxRounds)
+        50)
       .select(col("id").as("media_id"), col("cluster_id").as("group_id"))
   }
 }

@@ -163,18 +163,15 @@ object Packing {
     * NULL token count costs 0.
     */
   def curriculumPack(df: DataFrame, keyCol: Column, tokensCol: Column,
-                     stageCol: Column, budget: Long,
-                     groupWidth: Int = 16): DataFrame = {
+                     stageCol: Column, budget: Long): DataFrame = {
     require(budget > 0, s"budget must be positive, got $budget")
-    require(groupWidth > 0 && groupWidth <= Sampling.Grain,
-      s"groupWidth must be in [1, ${Sampling.Grain}], got $groupWidth")
     val bkt = Sampling.bucket(keyCol)
     val base = df
       .withColumn("__cp_tok", coalesce(tokensCol.cast("long"), lit(0L)))
       .withColumn("__cp_stg",
         coalesce(stageCol.cast("long"), lit(Long.MaxValue)))
       .withColumn("__cp_bkt", bkt)
-      .withColumn("__cp_grp", (bkt / groupWidth).cast("long"))
+      .withColumn("__cp_grp", (bkt / 16).cast("long"))
     val inGrp = Window.partitionBy("__cp_stg", "__cp_grp")
       .orderBy(col("__cp_bkt"), keyCol)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -238,16 +235,13 @@ object Packing {
     * stage — zero shuffles, no UDFs. Null text → null output, zero
     * counts, never selected.
     */
-  def fimTransform(docs: DataFrame, rate: Int = 50,
-                   idCol: String = "doc_id",
-                   textCol: String = "text"): DataFrame = {
-    require(rate >= 0 && rate <= 100, s"rate must be in [0,100], got $rate")
-    val toks = split(col(textCol), " ")
+  def fimTransform(docs: DataFrame): DataFrame = {
+    val toks = split(col("text"), " ")
     val n = size(toks)
-    val idStr = col(idCol).cast("string")
+    val idStr = col("doc_id").cast("string")
     def h(tag: String) =
       graft.functions.polyFingerprint(concat(idStr, lit(tag)))
-    val pick = pmod(h(":fim"), lit(100L)) < rate.toLong
+    val pick = pmod(h(":fim"), lit(100L)) < 50.toLong
     val c1 = pmod(h(":fimA"), (n + 1).cast("long"))
     val c2 = pmod(h(":fimB"), (n + 1).cast("long"))
     val lo = least(c1, c2).cast("int")
@@ -256,11 +250,11 @@ object Packing {
       array(lit("<fim_prefix>")), slice(toks, lit(1), lo),
       array(lit("<fim_suffix>")), slice(toks, hi + 1, n - hi),
       array(lit("<fim_middle>")), slice(toks, lo + 1, hi - lo)), " ")
-    val present = col(textCol).isNotNull
-    docs.select(col(idCol),
+    val present = col("text").isNotNull
+    docs.select(col("doc_id"),
       (present && pick).as("fim"),
       when(!present, lit(null).cast("string"))
-        .when(pick, psm).otherwise(col(textCol)).as("text_out"),
+        .when(pick, psm).otherwise(col("text")).as("text_out"),
       when(present, n.cast("long")).otherwise(0L).as("n_tokens"),
       when(present && pick, (hi - lo).cast("long")).otherwise(0L)
         .as("n_middle"))
@@ -289,18 +283,15 @@ object Packing {
     * never a single-task global window.
     */
   def sftPack(pairs: DataFrame, keyCol: Column, promptToksCol: Column,
-              responseToksCol: Column, budget: Long,
-              groupWidth: Int = 16): DataFrame = {
+              responseToksCol: Column, budget: Long): DataFrame = {
     require(budget > 0, s"budget must be positive, got $budget")
-    require(groupWidth > 0 && groupWidth <= Sampling.Grain,
-      s"groupWidth must be in [1, ${Sampling.Grain}], got $groupWidth")
     val bkt = Sampling.bucket(keyCol)
     val base = pairs
       .withColumn("__sf_p", coalesce(promptToksCol.cast("long"), lit(0L)))
       .withColumn("__sf_r", coalesce(responseToksCol.cast("long"), lit(0L)))
       .withColumn("__sf_tok", col("__sf_p") + col("__sf_r"))
       .withColumn("__sf_bkt", bkt)
-      .withColumn("__sf_grp", (bkt / groupWidth).cast("long"))
+      .withColumn("__sf_grp", (bkt / 16).cast("long"))
     val inGrp = Window.partitionBy("__sf_grp")
       .orderBy(col("__sf_bkt"), keyCol)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -332,7 +323,7 @@ object Packing {
     * sentinels each followed by the tokens it hid.
     *
     * Span placement is RNG-free and engine-reproducible: token indices
-    * are cut into fixed `blockSize` blocks, and each block masks ONE
+    * are cut into fixed 20-token blocks, and each block masks ONE
     * `spanLen`-token span at offset polyhash(docId:block) mod
     * (blockSize − spanLen + 1) — i.e. a spanLen/blockSize corruption
     * rate (the T5 default 15% at 3/20) with spans that can never
@@ -344,12 +335,7 @@ object Packing {
     * functions over the token array — one codegen'd map stage, zero
     * shuffles, no UDFs. Null text → null inputs/targets, zero counts.
     */
-  def spanCorruption(docs: DataFrame, blockSize: Int = 20, spanLen: Int = 3,
-                     idCol: String = "doc_id",
-                     textCol: String = "text"): DataFrame = {
-    require(spanLen > 0, s"spanLen must be positive, got $spanLen")
-    require(blockSize > spanLen,
-      s"blockSize ($blockSize) must exceed spanLen ($spanLen)")
+  def spanCorruption(docs: DataFrame): DataFrame = {
     val reserved = docs.columns.filter(_.startsWith("__sc_"))
     require(reserved.isEmpty,
       s"column(s) ${reserved.mkString(", ")} collide with spanCorruption's " +
@@ -369,18 +355,18 @@ object Packing {
     // exact integer ceil(n / blockSize): doubles are exact far past any
     // token count, but keep the arithmetic integral anyway
     val nBlocks =
-      floor((n.cast("double") + (blockSize - 1)) / blockSize).cast("int")
+      floor((n.cast("double") + (20 - 1)) / 20).cast("int")
     val offsExpr = transform(sequence(lit(0), nBlocks - 1),
       b => pmod(graft.functions.polyFingerprint(
-        concat(col(idCol).cast("string"), lit(":"), b.cast("string"))),
-        lit(blockSize - spanLen + 1)).cast("int"))
+        concat(col("doc_id").cast("string"), lit(":"), b.cast("string"))),
+        lit(20 - 3 + 1)).cast("int"))
     val offs = col("__sc_offs")
     def blk(i: Column) =
-      floor((i - 1).cast("double") / blockSize).cast("int")
+      floor((i - 1).cast("double") / 20).cast("int")
     def off(i: Column) = element_at(offs, blk(i) + 1)
-    def pos(i: Column) = pmod(i - 1, lit(blockSize))
+    def pos(i: Column) = pmod(i - 1, lit(20))
     def isMasked(i: Column) =
-      pos(i) >= off(i) && pos(i) < off(i) + spanLen
+      pos(i) >= off(i) && pos(i) < off(i) + 3
     def isStart(i: Column) = pos(i) === off(i)
     def sentinel(i: Column) =
       concat(lit("<extra_id_"), blk(i).cast("string"), lit(">"))
@@ -390,11 +376,11 @@ object Packing {
     val tgArr = transform(filter(idxs, i => isMasked(i)),
       i => when(isStart(i), concat(sentinel(i), lit(" "), element_at(toks, i)))
         .otherwise(element_at(toks, i)))
-    val present = col(textCol).isNotNull
+    val present = col("text").isNotNull
     docs
-      .withColumn("__sc_toks", split(col(textCol), " "))
+      .withColumn("__sc_toks", split(col("text"), " "))
       .withColumn("__sc_offs", offsExpr)
-      .select(col(idCol),
+      .select(col("doc_id"),
         when(present, array_join(inArr, " ")).as("inputs"),
         when(present, array_join(tgArr, " ")).as("targets"),
         when(present, n.cast("long")).otherwise(0L).as("n_tokens"),
@@ -437,12 +423,10 @@ object Packing {
     * that conversation's own turns — bounded by turns-per-conv, never
     * the corpus); no window, no driver materialization.
     */
-  def renderChat(turns: DataFrame, convCol: String = "conv_id",
-                 idxCol: String = "turn_idx", roleCol: String = "role",
-                 contentCol: String = "content"): DataFrame = {
+  def renderChat(turns: DataFrame, convCol: String = "conv_id"): DataFrame = {
     val t = turns.filter(col(convCol).isNotNull &&
-      col(idxCol).isNotNull && col(roleCol).isNotNull &&
-      col(contentCol).isNotNull)
+      col("turn_idx").isNotNull && col("role").isNotNull &&
+      col("content").isNotNull)
     // duplicate-order-key guard, row-local over the already-collected
     // sorted array (adjacent equal indexes) — no countDistinct, whose
     // two-phase distinct aggregation would cost a real expand at scale
@@ -453,11 +437,11 @@ object Packing {
     t.groupBy(col(convCol))
       .agg(
         array_sort(collect_list(struct(
-          col(idxCol).cast("long").as("i"),
-          turnPiece(col(roleCol), col(contentCol)).as("p"))))
+          col("turn_idx").cast("long").as("i"),
+          turnPiece(col("role"), col("content")).as("p"))))
           .as("__rc_arr"),
         count(lit(1)).as("n_turns"),
-        sum(turnLen(col(roleCol), col(contentCol))).as("n_chars"))
+        sum(turnLen(col("role"), col("content"))).as("n_chars"))
       .select(col(convCol),
         when(!hasDupIdx(col("__rc_arr")),
           array_join(transform(col("__rc_arr"), x => x.getField("p")), ""))
@@ -482,17 +466,15 @@ object Packing {
     * conv count per role, bounded by |roles| × |convs|) and one
     * broadcast total — groupBy-flat at any corpus size.
     */
-  def chatDatasheet(turns: DataFrame, convCol: String = "conv_id",
-                    roleCol: String = "role",
-                    contentCol: String = "content"): DataFrame = {
-    val t = turns.filter(col(roleCol).isNotNull && col(contentCol).isNotNull)
-    val perRole = t.groupBy(col(roleCol))
+  def chatDatasheet(turns: DataFrame): DataFrame = {
+    val t = turns.filter(col("role").isNotNull && col("content").isNotNull)
+    val perRole = t.groupBy(col("role"))
       .agg(count(lit(1)).as("n_turns"),
-        countDistinct(col(convCol)).as("n_convs"),
-        sum(size(split(col(contentCol), " ")).cast("long")).as("n_tokens"))
+        countDistinct(col("conv_id")).as("n_convs"),
+        sum(size(split(col("content"), " ")).cast("long")).as("n_tokens"))
     val total = perRole.agg(sum(col("n_tokens")).as("__cd_total"))
     perRole.crossJoin(broadcast(total))
-      .select(col(roleCol), col("n_turns"), col("n_convs"),
+      .select(col("role"), col("n_turns"), col("n_convs"),
         col("n_tokens"),
         when(col("__cd_total") > 0L,
           expr("(n_tokens * 10000) div __cd_total"))
@@ -511,44 +493,41 @@ object Packing {
     * conversation's own turns (bounded by turns-per-conv) — the
     * per-key window posture, not a global window.
     */
-  def chatSpans(turns: DataFrame, convCol: String = "conv_id",
-                idxCol: String = "turn_idx", roleCol: String = "role",
-                contentCol: String = "content",
-                lossRole: String = "assistant"): DataFrame = {
-    val t = turns.filter(col(convCol).isNotNull &&
-      col(idxCol).isNotNull && col(roleCol).isNotNull &&
-      col(contentCol).isNotNull)
-    val w = Window.partitionBy(col(convCol))
-      .orderBy(col(idxCol).cast("long"))
+  def chatSpans(turns: DataFrame): DataFrame = {
+    val t = turns.filter(col("conv_id").isNotNull &&
+      col("turn_idx").isNotNull && col("role").isNotNull &&
+      col("content").isNotNull)
+    val w = Window.partitionBy(col("conv_id"))
+      .orderBy(col("turn_idx").cast("long"))
       .rowsBetween(Window.unboundedPreceding, -1)
     // duplicate-index guard ([[renderChat]]'s law, window form): in
     // idx order duplicates are adjacent, so lag(idx) == idx detects
     // every duplicate. lag's spec shares the running sum's partition
     // and order (lag takes its own offset frame), so CollapseWindow
     // plans ONE WindowExec — the guard costs no extra sort/exchange.
-    val wOrd = Window.partitionBy(col(convCol))
-      .orderBy(col(idxCol).cast("long"))
-    t.select(col(convCol), col(idxCol).cast("long").as(idxCol),
-        col(roleCol), col(contentCol))
+    val wOrd = Window.partitionBy(col("conv_id"))
+      .orderBy(col("turn_idx").cast("long"))
+    t.select(col("conv_id"), col("turn_idx").cast("long").as("turn_idx"),
+        col("role"), col("content"))
       .withColumn("__cs_pre",
-        coalesce(sum(turnLen(col(roleCol), col(contentCol))).over(w),
+        coalesce(sum(turnLen(col("role"), col("content"))).over(w),
           lit(0L)))
       .withColumn("__cs_dup",
-        lag(col(idxCol), 1).over(wOrd) === col(idxCol))
+        lag(col("turn_idx"), 1).over(wOrd) === col("turn_idx"))
       .withColumn("__cs_pre",
         when(col("__cs_dup"),
           raise_error(concat(
             lit("chatSpans: duplicate turn_idx in conversation "),
-            col(convCol).cast("string"),
+            col("conv_id").cast("string"),
             lit(" — the order key must be unique per conversation")))
             .cast("long"))
           .otherwise(col("__cs_pre")))
-      .select(col(convCol), col(idxCol), col(roleCol),
-        (col("__cs_pre") + TextAnalysis.codePointLen(col(roleCol))
+      .select(col("conv_id"), col("turn_idx"), col("role"),
+        (col("__cs_pre") + TextAnalysis.codePointLen(col("role"))
           + lit(5L)).as("content_start"),
-        (col("__cs_pre") + TextAnalysis.codePointLen(col(roleCol))
-          + lit(5L) + TextAnalysis.codePointLen(col(contentCol)))
+        (col("__cs_pre") + TextAnalysis.codePointLen(col("role"))
+          + lit(5L) + TextAnalysis.codePointLen(col("content")))
           .as("content_end"),
-        (col(roleCol) === lossRole).as("is_loss"))
+        (col("role") === "assistant").as("is_loss"))
   }
 }

@@ -68,21 +68,19 @@ object Preference {
     * (bounded by the item vocabulary, never the corpus), one
     * (winner, loser) partial-agg.
     */
-  def preferencePairs(ratings: DataFrame, userCol: String = "user_id",
-                      itemCol: String = "event_type",
-                      valueCol: String = "value"): DataFrame = {
+  def preferencePairs(ratings: DataFrame): DataFrame = {
     val per = ratings
-      .filter(col(userCol).isNotNull && col(itemCol).isNotNull &&
-        col(valueCol).isNotNull)
-      .groupBy(col(userCol), col(itemCol))
+      .filter(col("user_id").isNotNull && col("event_type").isNotNull &&
+        col("value").isNotNull)
+      .groupBy(col("user_id"), col("event_type"))
       .agg(count(lit(1)).as("__pp_n"),
-        sum(floor(col(valueCol).cast("double") * 100.0).cast("long"))
+        sum(floor(col("value").cast("double") * 100.0).cast("long"))
           .as("__pp_s"))
-    val a = per.select(col(userCol), col(itemCol).as("__pp_ia"),
+    val a = per.select(col("user_id"), col("event_type").as("__pp_ia"),
       col("__pp_n").as("__pp_na"), col("__pp_s").as("__pp_sa"))
-    val b = per.select(col(userCol), col(itemCol).as("__pp_ib"),
+    val b = per.select(col("user_id"), col("event_type").as("__pp_ib"),
       col("__pp_n").as("__pp_nb"), col("__pp_s").as("__pp_sb"))
-    a.join(b, Seq(userCol))
+    a.join(b, Seq("user_id"))
       .filter(col("__pp_ia") < col("__pp_ib"))
       .filter(col("__pp_sa") * col("__pp_nb") =!=
         col("__pp_sb") * col("__pp_na"))
@@ -96,10 +94,7 @@ object Preference {
   }
 
   def bradleyTerryScores(comparisons: DataFrame, winnerCol: String,
-                         loserCol: String, nCol: String,
-                         rounds: Int = 3): DataFrame = {
-    require(rounds >= 1 && rounds <= MaxRounds,
-      s"rounds must be in [1, $MaxRounds], got $rounds")
+                         loserCol: String, nCol: String): DataFrame = {
     // pinned once — every MM round (and wins/played/items) references
     // the comparison relation; unpinned, the caller's derivation would
     // re-run per round (the Graph.pageRank edge-pinning posture)
@@ -123,7 +118,7 @@ object Preference {
     val played = matches.groupBy(col("a").as("item"))
       .agg(sum("n").as("n_comparisons"))
     var s = items.withColumn("s", lit(Scale))
-    for (_ <- 1 to rounds) {
+    for (_ <- 1 to 3) {
       val denom = matches
         .join(s.select(col("item").as("a"), col("s").as("sa")), "a")
         .join(s.select(col("item").as("b"), col("s").as("sb")), "b")
@@ -175,13 +170,11 @@ object Preference {
     * the comparison relation — item-vocabulary-bounded, row-local
     * arithmetic after it.
     */
-  def winRateReport(comparisons: DataFrame, winnerCol: String = "winner",
-                    loserCol: String = "loser",
-                    nCol: String = "n_pairs"): DataFrame = {
+  def winRateReport(comparisons: DataFrame): DataFrame = {
     val c = comparisons.select(
-        col(winnerCol).cast("string").as("__wr_w"),
-        col(loserCol).cast("string").as("__wr_l"),
-        col(nCol).cast("long").as("__wr_n"))
+        col("winner").cast("string").as("__wr_w"),
+        col("loser").cast("string").as("__wr_l"),
+        col("n_pairs").cast("long").as("__wr_n"))
       .filter(col("__wr_w").isNotNull && col("__wr_l").isNotNull &&
         col("__wr_n") > 0 && col("__wr_w") =!= col("__wr_l"))
     val agg = c.select(
@@ -243,34 +236,33 @@ object Preference {
     * combinable, no self-join, no window, no driver materialization;
     * at 100 TB this is a single shuffle on the prompt key.
     */
-  def dpoPairs(responses: DataFrame, promptCol: String = "prompt_id",
+  def dpoPairs(responses: DataFrame,
                respCol: String = "response_id",
-               scoreCol: String = "score",
                minMargin: Long = 1L): DataFrame = {
     require(minMargin >= 1L, s"minMargin must be >= 1, got $minMargin")
     import org.apache.spark.sql.types._
-    val scoreType = responses.select(col(scoreCol)).schema.head.dataType
+    val scoreType = responses.select(col("score")).schema.head.dataType
     val integral = scoreType match {
       case ByteType | ShortType | IntegerType | LongType => true
       case _ => false
     }
     require(integral,
-      s"dpoPairs needs an integral score column ($scoreCol is $scoreType): " +
+      s"dpoPairs needs an integral score column (score is $scoreType): " +
         "fractional reward scores truncate to 0 under a long cast and " +
         "collapse margins — pre-scale to an integer grain (x10^4) upstream")
     val r = responses
-      .filter(col(promptCol).isNotNull && col(respCol).isNotNull &&
-        col(scoreCol).isNotNull)
-      .select(col(promptCol), col(respCol),
-        col(scoreCol).cast("long").as("__dp_s"))
-    r.groupBy(col(promptCol))
+      .filter(col("prompt_id").isNotNull && col(respCol).isNotNull &&
+        col("score").isNotNull)
+      .select(col("prompt_id"), col(respCol),
+        col("score").cast("long").as("__dp_s"))
+    r.groupBy(col("prompt_id"))
       .agg(
         min(struct((-col("__dp_s")).as("ns"), col(respCol).as("id")))
           .as("__dp_c"),
         min(struct(col("__dp_s").as("s"), col(respCol).as("id")))
           .as("__dp_r"),
         count(lit(1)).as("n_responses"))
-      .select(col(promptCol),
+      .select(col("prompt_id"),
         col("__dp_c.id").as("chosen_id"),
         (-col("__dp_c.ns")).as("chosen_score"),
         col("__dp_r.id").as("rejected_id"),

@@ -19,7 +19,7 @@ object Retrieval {
     * sparse and dense rankings. `queries` is the sparse relation
     * (`query_id`, `term`); the DENSE side uses each distinct query id
     * as a corpus vector id ([[Similarity.topKByIdsNative]]) — `docs`
-    * and `emb` must share one id space (`docIdCol` ↔ `vecIdCol`, the
+    * and `emb` must share one id space (`doc_id` ↔ `vec_id`, the
     * TESTDATA contract). A document ranked by only one system scores
     * that system's term alone (the other contributes 0) — standard RRF.
     *
@@ -35,23 +35,20 @@ object Retrieval {
     * only to derive the dense id list — bounded by |Q| by definition.
     */
   def hybridSearch(docs: DataFrame, emb: DataFrame, queries: DataFrame,
-                   k: Int = 10, kSparse: Int = 20, kDense: Int = 20,
-                   rrfK: Int = 60, docIdCol: String = "doc_id",
-                   textCol: String = "text", vecIdCol: String = "vec_id",
-                   vecCol: String = "embedding"): DataFrame = {
-    require(k > 0 && kSparse > 0 && kDense > 0,
-      s"k/kSparse/kDense must be positive, got $k/$kSparse/$kDense")
+                   k: Int = 10,
+                   rrfK: Int = 60): DataFrame = {
+    require(k > 0, s"k must be positive, got $k")
     require(rrfK >= 1, s"rrfK must be >= 1, got $rrfK")
     // null-safe: a null query_id (or a non-numeric id the cast nulls
     // out) is a contract violation surfaced loudly, not an NPE from
     // Row.getLong deep in the dense arm
     val queryIds = numericQueryIds(queries)
     val sparse = TextAnalysis
-      .searchDocs(docs, queries, kSparse, docIdCol, textCol)
-      .select(col("query_id"), col(docIdCol).as("doc_id"),
+      .searchDocs(docs, queries, 20)
+      .select(col("query_id"), col("doc_id").as("doc_id"),
         col("rank").as("sparse_rank"))
     val dense = Similarity
-      .topKByIdsNative(emb, queryIds, kDense, vecIdCol, vecCol)
+      .topKByIdsNative(emb, queryIds, 20)
       .select(col("query_id"), col("neighbor_id").as("doc_id"),
         col("rank").as("dense_rank"))
     rrfFuse(sparse, dense, k, rrfK)
@@ -73,25 +70,19 @@ object Retrieval {
     * same audit shape as [[hybridSearch]].
     */
   def hybridSearchIndexed(docs: DataFrame, queries: DataFrame,
-                          indexName: String, k: Int = 10, kSparse: Int = 20,
-                          kDense: Int = 20, rrfK: Int = 60, planes: Int = 4,
-                          probeBits: Int = 1, docIdCol: String = "doc_id",
-                          textCol: String = "text"): DataFrame = {
-    require(k > 0 && kSparse > 0 && kDense > 0,
-      s"k/kSparse/kDense must be positive, got $k/$kSparse/$kDense")
-    require(rrfK >= 1, s"rrfK must be >= 1, got $rrfK")
+                          indexName: String, k: Int = 10): DataFrame = {
+    require(k > 0, s"k must be positive, got $k")
     val queryIds = numericQueryIds(queries)
     val bm25 = TextAnalysis
-      .searchDocsBm25(docs, queries, kSparse, idCol = docIdCol,
-        textCol = textCol)
-      .select(col("query_id"), col(docIdCol).as("doc_id"),
+      .searchDocsBm25(docs, queries, 20)
+      .select(col("query_id"), col("doc_id").as("doc_id"),
         col("rank").as("bm25_rank"))
     val dense = Similarity
       .annTopKMultiProbeIndexed(docs.sparkSession, indexName, queryIds,
-        kDense, planes, probeBits = probeBits)
+        20, 4, probeBits = 1)
       .select(col("query_id"), col("neighbor_id").as("doc_id"),
         col("rank").as("dense_rank"))
-    rrfFuseAll(Seq(bm25, dense), k, rrfK)
+    rrfFuseAll(Seq(bm25, dense), k, 60)
   }
 
   /** Distinct numeric query ids for a dense arm — |Q|-bounded driver
@@ -156,7 +147,7 @@ object Retrieval {
       (a, b) => a.join(b, Seq("query_id", "doc_id"), "full_outer"))
     val fused = joined.withColumn("rrf",
       ranks.map(r =>
-        coalesce(expr(s"${1000000L} div ($rrfK + ${bq(r)})"), lit(0L)))
+        coalesce(expr(s"1000000 div ($rrfK + ${bq(r)})"), lit(0L)))
         .reduce(_ + _))
     val top = graft.plans.TopKPerKey(
       Seq(UnresolvedAttribute("query_id")),
@@ -198,21 +189,19 @@ object Retrieval {
     * (|Q|·t rows) so the plan does not re-derive the trajectory.
     */
   def mmrRerank(emb: DataFrame, queryIds: Seq[Long], kCand: Int = 20,
-                k: Int = 5, lambdaX100: Int = 70,
-                idCol: String = "vec_id",
-                vecCol: String = "embedding"): DataFrame = {
+                k: Int = 5, lambdaX100: Int = 70): DataFrame = {
     require(kCand >= 1 && kCand <= 64,
       s"kCand must be in [1, 64], got $kCand")
     require(k >= 1 && k <= kCand, s"k must be in [1, kCand=$kCand], got $k")
     require(lambdaX100 >= 0 && lambdaX100 <= 100,
       s"lambdaX100 must be in [0, 100], got $lambdaX100")
     val lam = lambdaX100.toLong
-    val cand = Similarity.topKByIdsNative(emb, queryIds, kCand, idCol, vecCol)
+    val cand = Similarity.topKByIdsNative(emb, queryIds, kCand)
       .select(col("query_id"), col("neighbor_id"),
         round(col("cos") * 1e6, 0).cast("long").as("__mm_rel"))
       .pin()
     val cv = cand.join(
-      emb.select(col(idCol).as("neighbor_id"), col(vecCol).as("__mm_v")),
+      emb.select(col("vec_id").as("neighbor_id"), col("embedding").as("__mm_v")),
       "neighbor_id")
     val aSide = cv.select(col("query_id"), col("neighbor_id").as("__mm_ia"),
       col("__mm_v").as("__mm_va"))
@@ -270,24 +259,21 @@ object Retrieval {
     * terms, then ONE (query, doc) partial-aggregated exchange bounded
     * by matched documents — never corpus × queries.
     */
-  def termCoverageQrels(docs: DataFrame, queries: DataFrame,
-                        idCol: String = "doc_id", textCol: String = "text",
-                        queryIdCol: String = "query_id",
-                        termCol: String = "term"): DataFrame = {
+  def termCoverageQrels(docs: DataFrame, queries: DataFrame): DataFrame = {
     val terms = queries
-      .select(col(queryIdCol).as("query_id"), col(termCol).as("word"))
+      .select(col("query_id").as("query_id"), col("term").as("word"))
       .distinct()
     val nq = terms.groupBy(col("query_id"))
       .agg(count(lit(1)).as("__tq_nq"))
     // tfRelation emits one row per (doc, word): count(*) per
     // (query, doc) below IS the distinct-matched-term count
-    val matched = TextAnalysis.tfRelation(docs, idCol, textCol)
+    val matched = TextAnalysis.tfRelation(docs, "doc_id", "text")
       .join(broadcast(terms), "word")
-      .groupBy(col("query_id"), col(idCol))
+      .groupBy(col("query_id"), col("doc_id"))
       .agg(count(lit(1)).as("__tq_m"))
     matched.join(broadcast(nq), "query_id")
       .filter(col("__tq_m") * 2 >= col("__tq_nq"))
-      .select(col("query_id"), col(idCol),
+      .select(col("query_id"), col("doc_id"),
         when(col("__tq_m") === col("__tq_nq"), lit(2L))
           .otherwise(lit(1L)).as("rel"))
   }
@@ -301,22 +287,19 @@ object Retrieval {
     * on `word` reproduces the per-(query, doc) distinct-matched-term
     * multiset the standalone join builds.
     */
-  def termCoverageQrelsFromMatched(matched: DataFrame, queries: DataFrame,
-                                   idCol: String = "doc_id",
-                                   queryIdCol: String = "query_id",
-                                   termCol: String = "term"): DataFrame = {
+  def termCoverageQrelsFromMatched(matched: DataFrame, queries: DataFrame): DataFrame = {
     val terms = queries
-      .select(col(queryIdCol).as("query_id"), col(termCol).as("word"))
+      .select(col("query_id").as("query_id"), col("term").as("word"))
       .distinct()
     val nq = terms.groupBy(col("query_id"))
       .agg(count(lit(1)).as("__tq_nq"))
-    val covered = matched.select(col("word"), col(idCol))
+    val covered = matched.select(col("word"), col("doc_id"))
       .join(broadcast(terms), "word")
-      .groupBy(col("query_id"), col(idCol))
+      .groupBy(col("query_id"), col("doc_id"))
       .agg(count(lit(1)).as("__tq_m"))
     covered.join(broadcast(nq), "query_id")
       .filter(col("__tq_m") * 2 >= col("__tq_nq"))
-      .select(col("query_id"), col(idCol),
+      .select(col("query_id"), col("doc_id"),
         when(col("__tq_m") === col("__tq_nq"), lit(2L))
           .otherwise(lit(1L)).as("rel"))
   }

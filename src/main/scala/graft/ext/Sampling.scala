@@ -198,16 +198,14 @@ object Sampling {
     * ever runs.
     */
   def planShards(df: DataFrame, keyCol: Column, tokensCol: Column,
-                 numShards: Int, groupWidth: Int = 16): DataFrame = {
+                 numShards: Int): DataFrame = {
     require(numShards >= 1, s"numShards must be positive, got $numShards")
-    require(groupWidth > 0 && groupWidth <= Grain,
-      s"groupWidth must be in [1, $Grain], got $groupWidth")
     import org.apache.spark.sql.expressions.Window
     val bkt = bucket(keyCol)
     val base = df
       .withColumn("__ps_tok", coalesce(tokensCol.cast("long"), lit(0L)))
       .withColumn("__ps_bkt", bkt)
-      .withColumn("__ps_grp", (bkt / groupWidth).cast("long"))
+      .withColumn("__ps_grp", (bkt / 16).cast("long"))
     val inGrp = Window.partitionBy("__ps_grp")
       .orderBy(col("__ps_bkt"), keyCol)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -408,20 +406,19 @@ object Sampling {
     * Nothing corpus-sized crosses an exchange except the one (doc,
     * bucket) tf aggregation every bag-of-features operator pays.
     */
-  def dsirWeights(corpus: DataFrame, target: DataFrame, buckets: Int = 4096,
-                  idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+  def dsirWeights(corpus: DataFrame, target: DataFrame, buckets: Int = 4096): DataFrame = {
     require(buckets > 0, s"buckets must be positive, got $buckets")
     def gramBuckets(df: DataFrame): DataFrame =
-      df.filter(col(textCol).isNotNull)
-        .select(col(idCol),
-          explode(wordGrams(col(textCol), 1, 2)).as("__ds_gram"))
-        .select(col(idCol),
+      df.filter(col("text").isNotNull)
+        .select(col("doc_id"),
+          explode(wordGrams(col("text"), 1, 2)).as("__ds_gram"))
+        .select(col("doc_id"),
           pmod(polyFingerprint(col("__ds_gram")), lit(buckets.toLong))
             .as("__ds_b"))
     // pinned: the raw model AND the scoring join both read the corpus
     // tf relation — without the pin the scan + gram explode runs twice
     val dtf = gramBuckets(corpus)
-      .groupBy(col(idCol), col("__ds_b"))
+      .groupBy(col("doc_id"), col("__ds_b"))
       .agg(count(lit(1)).as("__ds_tf"))
       .pin()
     val rawm = dtf.groupBy("__ds_b").agg(sum("__ds_tf").as("__ds_cr"))
@@ -436,12 +433,12 @@ object Sampling {
       .select((length(bin(col("__ds_tr") + buckets)) -
         length(bin(col("__ds_tt") + buckets))).cast("long").as("__ds_shift"))
     val agg = dtf.join(broadcast(weights), "__ds_b")
-      .groupBy(col(idCol))
+      .groupBy(col("doc_id"))
       .agg(sum(col("__ds_tf") * col("__ds_w")).as("__ds_gb"),
         sum(col("__ds_tf")).as("__ds_n"))
-    corpus.select(col(idCol)).join(agg, Seq(idCol), "left_outer")
+    corpus.select(col("doc_id")).join(agg, Seq("doc_id"), "left_outer")
       .crossJoin(broadcast(shift))
-      .select(col(idCol),
+      .select(col("doc_id"),
         (coalesce(col("__ds_gb"), lit(0L)) +
           coalesce(col("__ds_n"), lit(0L)) * col("__ds_shift"))
           .as("dsir_bits"),
@@ -457,15 +454,14 @@ object Sampling {
     * the rank window then orders only the ≤ n survivors.
     */
   def dsirSelect(corpus: DataFrame, target: DataFrame, n: Int,
-                 buckets: Int = 4096, idCol: String = "doc_id",
-                 textCol: String = "text"): DataFrame = {
+                 buckets: Int = 4096): DataFrame = {
     require(n > 0, s"n must be positive, got $n")
     import org.apache.spark.sql.expressions.Window
-    val top = dsirWeights(corpus, target, buckets, idCol, textCol)
-      .orderBy(col("dsir_bits").desc, col(idCol))
+    val top = dsirWeights(corpus, target, buckets)
+      .orderBy(col("dsir_bits").desc, col("doc_id"))
       .limit(n)
     top.withColumn("rank", row_number()
-      .over(Window.orderBy(col("dsir_bits").desc, col(idCol))).cast("long"))
+      .over(Window.orderBy(col("dsir_bits").desc, col("doc_id"))).cast("long"))
   }
 
   /** Stratified EXACT-N take: deterministically select (up to) `n` rows
@@ -624,10 +620,7 @@ object Sampling {
     */
   def takeTokenApportioned(df: DataFrame, domainCol: String, keyCol: String,
                            tokensCol: Column,
-                           weights: Seq[(String, Long)], totalTokens: Long,
-                           groupWidth: Int = 16): DataFrame = {
-    require(groupWidth > 0 && groupWidth <= Grain,
-      s"groupWidth must be in [1, $Grain], got $groupWidth")
+                           weights: Seq[(String, Long)], totalTokens: Long): DataFrame = {
     val quotas = apportion(weights, totalTokens)
     val spark = df.sparkSession
     import spark.implicits._
@@ -636,7 +629,7 @@ object Sampling {
     val base = df.join(broadcast(qdf), domainCol)
       .withColumn("toks", coalesce(tokensCol.cast("long"), lit(0L)))
       .withColumn("__tt_bkt", bkt)
-      .withColumn("__tt_grp", (bkt / groupWidth).cast("long"))
+      .withColumn("__tt_grp", (bkt / 16).cast("long"))
     val inCell = org.apache.spark.sql.expressions.Window
       .partitionBy(col(domainCol), col("__tt_grp"))
       .orderBy(col("__tt_bkt"), col(keyCol))
@@ -691,29 +684,26 @@ object Sampling {
     * the standard margin-based AL heuristic, exact here because the
     * margins are integers.
     *
-    * Input: any relation carrying (`groupCol`, `idCol`, `scoreCol`).
+    * Input: any relation carrying (`source`, `doc_id`, `margin`).
     * Output: the selected rows + `rank` (1..k per group, ascending
     * score). Scale shape: the bounded-heap [[graft.plans.TopKPerKey]]
     * cut — each map task keeps ≤ k rows per group, the exchange
     * carries O(groups · k), never a corpus sort.
     */
-  def uncertaintySample(scored: DataFrame, k: Int,
-                        groupCol: String = "source",
-                        idCol: String = "doc_id",
-                        scoreCol: String = "margin"): DataFrame = {
+  def uncertaintySample(scored: DataFrame, k: Int): DataFrame = {
     require(k > 0, s"k must be positive, got $k")
     import org.apache.spark.sql.graft.Bridge
     import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
     import org.apache.spark.sql.catalyst.expressions.{Ascending, SortOrder}
     import org.apache.spark.sql.expressions.Window
-    val in = scored.filter(col(scoreCol).isNotNull)
+    val in = scored.filter(col("margin").isNotNull)
     val top = graft.plans.TopKPerKey(
-      Seq(UnresolvedAttribute(groupCol)),
-      Seq(SortOrder(UnresolvedAttribute(scoreCol), Ascending),
-        SortOrder(UnresolvedAttribute(idCol), Ascending)),
+      Seq(UnresolvedAttribute("source")),
+      Seq(SortOrder(UnresolvedAttribute("margin"), Ascending),
+        SortOrder(UnresolvedAttribute("doc_id"), Ascending)),
       k, Bridge.logicalPlan(in))
-    val w = Window.partitionBy(col(groupCol))
-      .orderBy(col(scoreCol), col(idCol))
+    val w = Window.partitionBy(col("source"))
+      .orderBy(col("margin"), col("doc_id"))
     Bridge.ofRows(scored.sparkSession, top)
       .withColumn("rank", row_number().over(w).cast("long"))
   }

@@ -69,17 +69,15 @@ object Similarity {
     * rows per (partition, query) instead of every scored candidate —
     * the scale path for top-k-per-key (see TopKPerKey scaladoc).
     */
-  def topKByIdsNative(corpus: DataFrame, queryIds: Seq[Long], k: Int,
-                      idCol: String = "vec_id",
-                      vecCol: String = "embedding"): DataFrame = {
+  def topKByIdsNative(corpus: DataFrame, queryIds: Seq[Long], k: Int): DataFrame = {
     import org.apache.spark.sql.graft.Bridge
     val queries = corpus
-      .filter(col(idCol).isin(queryIds: _*))
-      .select(col(idCol).as("query_id"), col(vecCol).as("query_vec"))
+      .filter(col("vec_id").isin(queryIds: _*))
+      .select(col("vec_id").as("query_id"), col("embedding").as("query_vec"))
     val scored = corpus
-      .join(broadcast(queries), col("query_id") =!= col(idCol))
-      .withColumn("cos", round(cosine(col("query_vec"), col(vecCol)), 6))
-      .select(col("query_id"), col(idCol).as("neighbor_id"), col("cos"))
+      .join(broadcast(queries), col("query_id") =!= col("vec_id"))
+      .withColumn("cos", round(cosine(col("query_vec"), col("embedding")), 6))
+      .select(col("query_id"), col("vec_id").as("neighbor_id"), col("cos"))
     import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
     import org.apache.spark.sql.catalyst.expressions.{Ascending, Descending, SortOrder}
     val plan = graft.plans.TopKPerKey(
@@ -110,9 +108,8 @@ object Similarity {
     * it still participates in search and scores 0 against everything).
     * Row-local map — no shuffle, pushes down the scan.
     */
-  def quantizeInt8(corpus: DataFrame, idCol: String = "vec_id",
-                   vecCol: String = "embedding"): DataFrame = {
-    val x = col(vecCol)
+  def quantizeInt8(corpus: DataFrame): DataFrame = {
+    val x = col("embedding")
     val maxabs = coalesce(
       array_max(transform(x, v => abs(v.cast("double")))), lit(0.0))
     corpus
@@ -122,7 +119,7 @@ object Similarity {
           transform(x, v =>
             floor(v.cast("double") * lit(127.0) / col("maxabs")).cast("long")))
           .otherwise(transform(x, _ => lit(0L))))
-      .select(col(idCol), col("qvec"), col("maxabs"))
+      .select(col("vec_id"), col("qvec"), col("maxabs"))
   }
 
   /** Exact top-k by INT8-quantized dot product: quantize the corpus
@@ -138,21 +135,19 @@ object Similarity {
     * quantized corpus is the ¼-width relation you persist and scan
     * instead of the float vectors.
     */
-  def int8TopK(corpus: DataFrame, queryIds: Seq[Long], k: Int,
-               idCol: String = "vec_id",
-               vecCol: String = "embedding"): DataFrame = {
+  def int8TopK(corpus: DataFrame, queryIds: Seq[Long], k: Int): DataFrame = {
     import org.apache.spark.sql.graft.Bridge
     import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
     import org.apache.spark.sql.catalyst.expressions.{Ascending, Descending, SortOrder}
     // null vectors cannot be scored (a null qdot has no deterministic
     // rank) — excluded from both sides, the topK float path's posture
-    val q = quantizeInt8(corpus.filter(col(vecCol).isNotNull), idCol, vecCol)
-    val queries = q.filter(col(idCol).isin(queryIds: _*))
-      .select(col(idCol).as("query_id"), col("qvec").as("query_qvec"))
+    val q = quantizeInt8(corpus.filter(col("embedding").isNotNull))
+    val queries = q.filter(col("vec_id").isin(queryIds: _*))
+      .select(col("vec_id").as("query_id"), col("qvec").as("query_qvec"))
     val scored = q
-      .join(broadcast(queries), col("query_id") =!= col(idCol))
+      .join(broadcast(queries), col("query_id") =!= col("vec_id"))
       .withColumn("qdot", graft.functions.intDot(col("query_qvec"), col("qvec")))
-      .select(col("query_id"), col(idCol).as("neighbor_id"), col("qdot"))
+      .select(col("query_id"), col("vec_id").as("neighbor_id"), col("qdot"))
     val plan = graft.plans.TopKPerKey(
       Seq(UnresolvedAttribute("query_id")),
       Seq(SortOrder(UnresolvedAttribute("qdot"), Descending),
@@ -182,9 +177,8 @@ object Similarity {
     * packs to an empty word array with dims 0. Row-local map — no
     * shuffle, pushes down the scan.
     */
-  def quantizeBinary(corpus: DataFrame, idCol: String = "vec_id",
-                     vecCol: String = "embedding"): DataFrame = {
-    val x = col(vecCol)
+  def quantizeBinary(corpus: DataFrame): DataFrame = {
+    val x = col("embedding")
     val n = size(x)
     val words = transform(
       sequence(lit(0), floor((n - lit(1)) / lit(32.0)).cast("int")),
@@ -194,7 +188,7 @@ object Similarity {
         (acc, i) => acc * lit(2L) +
           when(element_at(x, i) > lit(0f), lit(1L)).otherwise(lit(0L))))
     corpus.filter(x.isNotNull)
-      .select(col(idCol),
+      .select(col("vec_id"),
         when(n > 0, words)
           .otherwise(expr("cast(array() AS array<bigint>)")).as("bvec"),
         n.cast("long").as("dims"))
@@ -211,22 +205,20 @@ object Similarity {
     * rerank the shortlist under int8 or float where precision
     * matters.
     */
-  def hammingTopK(corpus: DataFrame, queryIds: Seq[Long], k: Int,
-                  idCol: String = "vec_id",
-                  vecCol: String = "embedding"): DataFrame = {
+  def hammingTopK(corpus: DataFrame, queryIds: Seq[Long], k: Int): DataFrame = {
     import org.apache.spark.sql.graft.Bridge
     import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
     import org.apache.spark.sql.catalyst.expressions.{Ascending, SortOrder}
-    val b = quantizeBinary(corpus.filter(col(vecCol).isNotNull), idCol, vecCol)
-    val queries = b.filter(col(idCol).isin(queryIds: _*))
-      .select(col(idCol).as("query_id"), col("bvec").as("query_bvec"))
+    val b = quantizeBinary(corpus.filter(col("embedding").isNotNull))
+    val queries = b.filter(col("vec_id").isin(queryIds: _*))
+      .select(col("vec_id").as("query_id"), col("bvec").as("query_bvec"))
     val scored = b
-      .join(broadcast(queries), col("query_id") =!= col(idCol))
+      .join(broadcast(queries), col("query_id") =!= col("vec_id"))
       .withColumn("hamming", aggregate(
         zip_with(col("query_bvec"), col("bvec"),
           (qa, ca) => bit_count(qa.bitwiseXOR(ca)).cast("long")),
         lit(0L), (acc, v) => acc + v))
-      .select(col("query_id"), col(idCol).as("neighbor_id"), col("hamming"))
+      .select(col("query_id"), col("vec_id").as("neighbor_id"), col("hamming"))
     val plan = graft.plans.TopKPerKey(
       Seq(UnresolvedAttribute("query_id")),
       Seq(SortOrder(UnresolvedAttribute("hamming"), Ascending),
@@ -248,15 +240,13 @@ object Similarity {
     * shaped; float reads are candidate-bound, never corpus-bound.
     */
   def hammingTopKReranked(corpus: DataFrame, queryIds: Seq[Long],
-                          kNn: Int, rerank: Int,
-                          idCol: String = "vec_id",
-                          vecCol: String = "embedding"): DataFrame = {
+                          kNn: Int, rerank: Int): DataFrame = {
     require(rerank >= kNn, s"rerank window $rerank must cover kNn=$kNn")
-    val cand = hammingTopK(corpus, queryIds, rerank, idCol, vecCol)
+    val cand = hammingTopK(corpus, queryIds, rerank)
       .select(col("query_id"), col("neighbor_id"))
-    val queries = corpus.filter(col(idCol).isin(queryIds: _*))
-      .select(col(idCol).as("query_id"), col(vecCol).as("__qv"))
-    rerankExact(corpus, cand, queries, kNn, idCol, vecCol)
+    val queries = corpus.filter(col("vec_id").isin(queryIds: _*))
+      .select(col("vec_id").as("query_id"), col("embedding").as("__qv"))
+    rerankExact(corpus, cand, queries, kNn, "vec_id", "embedding")
   }
 
   // ── LSH scale path ─────────────────────────────────────────────────
@@ -304,20 +294,17 @@ object Similarity {
     * ~ tables·n/2^planes per query, never an n×n product.
     */
   def annTopK(corpus: DataFrame, queryIds: Seq[Long], k: Int, planes: Int,
-              dims: Int, tables: Int = 8, idCol: String = "vec_id",
-              vecCol: String = "embedding"): DataFrame =
-    annSearch(lshTableBuckets(corpus, tables, planes, dims, vecCol),
-      queryIds, k, idCol, vecCol)
+              dims: Int): DataFrame =
+    annSearch(lshTableBuckets(corpus, 8, planes, dims, "embedding"),
+      queryIds, k)
 
   /** The LSH search phase over a (pre-)bucketed frame (idCol, vecCol,
     * tbl, bucket) — shared by [[annTopK]] (inline bucketing) and
     * [[annTopKIndexed]] (persisted index; zero bucket computation).
     */
-  def annSearch(bucketed: DataFrame, queryIds: Seq[Long], k: Int,
-                idCol: String = "vec_id",
-                vecCol: String = "embedding"): DataFrame =
+  def annSearch(bucketed: DataFrame, queryIds: Seq[Long], k: Int): DataFrame =
     searchProbes(bucketed,
-      annQueries(bucketed, queryIds, idCol, vecCol), k, idCol, vecCol)
+      annQueries(bucketed, queryIds, "vec_id", "embedding"), k, "vec_id", "embedding")
 
   /** Multi-probe LSH search (Lv et al., VLDB'07): each query probes its
     * own bucket PLUS every perturbation of up to `probeBits` hyperplane
@@ -333,24 +320,21 @@ object Similarity {
     * tables × probe-budget rows).
     */
   def annTopKMultiProbe(corpus: DataFrame, queryIds: Seq[Long], k: Int,
-                        planes: Int, dims: Int, tables: Int = 8,
-                        idCol: String = "vec_id",
-                        vecCol: String = "embedding",
+                        planes: Int, dims: Int,
                         probeBits: Int = 1): DataFrame =
-    annSearchMultiProbe(lshTableBuckets(corpus, tables, planes, dims, vecCol),
-      queryIds, k, planes, idCol, vecCol, probeBits)
+    annSearchMultiProbe(lshTableBuckets(corpus, 8, planes, dims, "embedding"),
+      queryIds, k, planes, probeBits)
 
   /** [[annTopKMultiProbe]]'s search phase over a (pre-)bucketed frame —
     * point it at a persisted LSH index for the indexed variant.
     */
   def annSearchMultiProbe(bucketed: DataFrame, queryIds: Seq[Long], k: Int,
-                          planes: Int, idCol: String = "vec_id",
-                          vecCol: String = "embedding",
+                          planes: Int,
                           probeBits: Int = 1): DataFrame = {
     require(planes > 0 && planes < 63, s"planes must be in [1, 62], got $planes")
     require(probeBits == 1 || probeBits == 2,
       s"probeBits must be 1 or 2, got $probeBits")
-    val q = annQueries(bucketed, queryIds, idCol, vecCol)
+    val q = annQueries(bucketed, queryIds, "vec_id", "embedding")
     val oneBit = (0 until planes).map(i =>
       col("bucket").bitwiseXOR(lit(1L << i)))
     val twoBit =
@@ -360,7 +344,7 @@ object Similarity {
     val probes = q.select(col("tbl"),
       explode(array(col("bucket") +: (oneBit ++ twoBit): _*)).as("bucket"),
       col("query_id"), col("query_vec"))
-    searchProbes(bucketed, probes, k, idCol, vecCol)
+    searchProbes(bucketed, probes, k, "vec_id", "embedding")
   }
 
   /** The query side of an LSH search: each query id's per-table bucket. */
@@ -437,20 +421,19 @@ object Similarity {
     * disappear (standard Lloyd behavior); seeds always capture
     * themselves, so the result has k cells unless seeds are duplicates.
     */
-  def trainCentroids(corpus: DataFrame, k: Int, idCol: String = "vec_id",
-                     vecCol: String = "embedding"): DataFrame = {
+  def trainCentroids(corpus: DataFrame, k: Int): DataFrame = {
     val seeds = corpus
-      .withColumn("__h", graft.functions.polyFingerprint(col(idCol).cast("string")))
-      .orderBy(col("__h"), col(idCol)).limit(k)
-      .select(col(idCol).as("cell"), col(vecCol).as("svec"))
+      .withColumn("__h", graft.functions.polyFingerprint(col("vec_id").cast("string")))
+      .orderBy(col("__h"), col("vec_id")).limit(k)
+      .select(col("vec_id").as("cell"), col("embedding").as("svec"))
     val seedScored = corpus.join(broadcast(seeds))
-      .select(col(idCol).as("query_id"), col(vecCol),
-        col("cell").as("__cand"), cosine(col(vecCol), col("svec")).as("cos"))
+      .select(col("vec_id").as("query_id"), col("embedding"),
+        col("cell").as("__cand"), cosine(col("embedding"), col("svec")).as("cos"))
     val a0 = topKOperator(seedScored, 1, "__cand")
-      .select(col("__cand").as("cell"), col(vecCol))
+      .select(col("__cand").as("cell"), col("embedding"))
     // quantized element-wise mean, grouped per (cell, dim)
     val coords = a0
-      .select(col("cell"), posexplode(col(vecCol)).as(Seq("d", "x")))
+      .select(col("cell"), posexplode(col("embedding")).as(Seq("d", "x")))
       .select(col("cell"), col("d"),
         round(col("x").cast("double") * 1e6, 0).cast("long").as("q"))
       .groupBy("cell", "d")
@@ -472,21 +455,18 @@ object Similarity {
     * no global sort.
     */
   def ivfTopK(corpus: DataFrame, queryIds: Seq[Long], k: Int,
-              centroids: Int = 16, nProbe: Int = 4,
-              idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
-    ivfSearch(corpus, trainCentroids(corpus, centroids, idCol, vecCol),
-      queryIds, k, nProbe, idCol, vecCol)
+              centroids: Int = 16, nProbe: Int = 4): DataFrame =
+    ivfSearch(corpus, trainCentroids(corpus, centroids),
+      queryIds, k, nProbe)
 
   /** The untrained round-2 stand-in (centroids = the `centroids`
     * lowest-id corpus vectors, no Lloyd step) — kept only as the
     * comparison baseline for the k-means recall test in LlmOpsSpec.
     */
-  def ivfTopKStatic(corpus: DataFrame, queryIds: Seq[Long], k: Int,
-                    centroids: Int = 16, nProbe: Int = 4,
-                    idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val cents = corpus.orderBy(col(idCol)).limit(centroids)
-      .select(col(idCol).as("cell"), col(vecCol).cast("array<double>").as("cvec"))
-    ivfSearch(corpus, cents, queryIds, k, nProbe, idCol, vecCol)
+  def ivfTopKStatic(corpus: DataFrame, queryIds: Seq[Long], k: Int, nProbe: Int = 4): DataFrame = {
+    val cents = corpus.orderBy(col("vec_id")).limit(16)
+      .select(col("vec_id").as("cell"), col("embedding").cast("array<double>").as("cvec"))
+    ivfSearch(corpus, cents, queryIds, k, nProbe)
   }
 
   /** Inverted-list assignment: nearest trained centroid per corpus
@@ -494,10 +474,8 @@ object Similarity {
     * tiebreak, matching the oracle's row_number replay). This is the
     * build-time half of IVF — persist its output once, search many.
     */
-  def assignCells(corpus: DataFrame, cents: DataFrame,
-                  idCol: String = "vec_id",
-                  vecCol: String = "embedding"): DataFrame =
-    assignCellsScored(corpus, cents, idCol, vecCol).drop("__cos")
+  def assignCells(corpus: DataFrame, cents: DataFrame): DataFrame =
+    assignCellsScored(corpus, cents, "vec_id", "embedding").drop("__cos")
 
   /** [[assignCells]] keeping the winning cosine as `__cos`: the
     * append path measures drift from the assignment it is ALREADY
@@ -519,10 +497,9 @@ object Similarity {
     * broadcast/equi-joins + TopKPerKey.
     */
   def ivfSearch(corpus: DataFrame, cents: DataFrame, queryIds: Seq[Long],
-                k: Int, nProbe: Int, idCol: String = "vec_id",
-                vecCol: String = "embedding"): DataFrame =
-    searchAssigned(assignCells(corpus, cents, idCol, vecCol), cents,
-      queryIds, k, nProbe, idCol, vecCol)
+                k: Int, nProbe: Int): DataFrame =
+    searchAssigned(assignCells(corpus, cents), cents,
+      queryIds, k, nProbe)
 
   /** The search-only IVF hot path over PRE-ASSIGNED inverted lists
     * `assigned(idCol, vecCol, cell)` and a trained quantizer: probe the
@@ -533,11 +510,9 @@ object Similarity {
     * nProbe/cells of the corpus.
     */
   def searchAssigned(assigned: DataFrame, cents: DataFrame,
-                     queryIds: Seq[Long], k: Int, nProbe: Int,
-                     idCol: String = "vec_id",
-                     vecCol: String = "embedding"): DataFrame = {
-    val queries = assigned.filter(col(idCol).isin(queryIds: _*))
-      .select(col(idCol).as("query_id"), col(vecCol).as("query_vec"))
+                     queryIds: Seq[Long], k: Int, nProbe: Int): DataFrame = {
+    val queries = assigned.filter(col("vec_id").isin(queryIds: _*))
+      .select(col("vec_id").as("query_id"), col("embedding").as("query_vec"))
     val probeScored = queries
       .join(broadcast(cents))
       .select(col("query_id"), col("query_vec"), col("cell").as("__cand"),
@@ -547,17 +522,17 @@ object Similarity {
     // candidates = inverted lists of the probed cells; exact rerank
     val scored = assigned
       .join(broadcast(probes), Seq("cell"))
-      .filter(col("query_id") =!= col(idCol))
-      .dropDuplicates("query_id", idCol)
-      .select(col("query_id"), col(idCol).as("neighbor_id"),
-        round(cosine(col("query_vec"), col(vecCol)), 6).as("cos"))
+      .filter(col("query_id") =!= col("vec_id"))
+      .dropDuplicates("query_id", "vec_id")
+      .select(col("query_id"), col("vec_id").as("neighbor_id"),
+        round(cosine(col("query_vec"), col("embedding")), 6).as("cos"))
     rankTopK(scored, k, "cos")
   }
 
   // ── Hard-negative mining (contrastive-training batches) ────────────
 
   /** Hard-negative mining over a labelled embedding corpus: for each
-    * query anchor, the k HIGHEST-cosine vectors whose `labelCol`
+    * query anchor, the k HIGHEST-cosine vectors whose `label`
     * DIFFERS from the anchor's — the negatives that actually move a
     * contrastive/triplet loss (random negatives are trivially far and
     * contribute ~zero gradient; the near-but-wrong ones define the
@@ -571,17 +546,15 @@ object Similarity {
     * its own label). NULL-label rows participate in NEITHER side — SQL
     * `<>` semantics, identical in the DuckDB oracle.
     */
-  def hardNegatives(corpus: DataFrame, queryIds: Seq[Long], k: Int,
-                    labelCol: String = "label", idCol: String = "vec_id",
-                    vecCol: String = "embedding"): DataFrame = {
-    val queries = corpus.filter(col(idCol).isin(queryIds: _*))
-      .select(col(idCol).as("query_id"), col(vecCol).as("query_vec"),
-        col(labelCol).as("__qlab"))
+  def hardNegatives(corpus: DataFrame, queryIds: Seq[Long], k: Int): DataFrame = {
+    val queries = corpus.filter(col("vec_id").isin(queryIds: _*))
+      .select(col("vec_id").as("query_id"), col("embedding").as("query_vec"),
+        col("label").as("__qlab"))
     val scored = corpus
-      .join(broadcast(queries), col(labelCol) =!= col("__qlab"))
-      .select(col("query_id"), col(idCol).as("neighbor_id"),
-        col(labelCol).as("neg_label"),
-        round(cosine(col("query_vec"), col(vecCol)), 6).as("cos"))
+      .join(broadcast(queries), col("label") =!= col("__qlab"))
+      .select(col("query_id"), col("vec_id").as("neighbor_id"),
+        col("label").as("neg_label"),
+        round(cosine(col("query_vec"), col("embedding")), 6).as("cos"))
     rankTopK(scored, k, "cos")
   }
 
@@ -597,16 +570,14 @@ object Similarity {
     * oracle replaying the identical probe set.
     */
   def hardNegativesIvf(corpus: DataFrame, queryIds: Seq[Long], k: Int,
-                       centroids: Int = 16, nProbe: Int = 4,
-                       labelCol: String = "label", idCol: String = "vec_id",
-                       vecCol: String = "embedding"): DataFrame = {
-    val cents = trainCentroids(corpus, centroids, idCol, vecCol)
-    val assigned = assignCells(corpus, cents, idCol, vecCol)
-    val labels = corpus.select(col(idCol), col(labelCol))
-    val queries = assigned.filter(col(idCol).isin(queryIds: _*))
-      .join(labels, Seq(idCol))
-      .select(col(idCol).as("query_id"), col(vecCol).as("query_vec"),
-        col(labelCol).as("__qlab"))
+                       centroids: Int = 16, nProbe: Int = 4): DataFrame = {
+    val cents = trainCentroids(corpus, centroids)
+    val assigned = assignCells(corpus, cents)
+    val labels = corpus.select(col("vec_id"), col("label"))
+    val queries = assigned.filter(col("vec_id").isin(queryIds: _*))
+      .join(labels, Seq("vec_id"))
+      .select(col("vec_id").as("query_id"), col("embedding").as("query_vec"),
+        col("label").as("__qlab"))
     val probeScored = queries
       .join(broadcast(cents))
       .select(col("query_id"), col("query_vec"), col("__qlab"),
@@ -615,13 +586,13 @@ object Similarity {
     val probes = topKOperator(probeScored, nProbe, "__cand")
       .select(col("query_id"), col("query_vec"), col("__qlab"),
         col("__cand").as("cell"))
-    val scored = assigned.join(labels, Seq(idCol))
+    val scored = assigned.join(labels, Seq("vec_id"))
       .join(broadcast(probes), Seq("cell"))
-      .filter(col(labelCol) =!= col("__qlab"))
-      .dropDuplicates("query_id", idCol)
-      .select(col("query_id"), col(idCol).as("neighbor_id"),
-        col(labelCol).as("neg_label"),
-        round(cosine(col("query_vec"), col(vecCol)), 6).as("cos"))
+      .filter(col("label") =!= col("__qlab"))
+      .dropDuplicates("query_id", "vec_id")
+      .select(col("query_id"), col("vec_id").as("neighbor_id"),
+        col("label").as("neg_label"),
+        round(cosine(col("query_vec"), col("embedding")), 6).as("cos"))
     rankTopK(scored, k, "cos")
   }
 
@@ -635,15 +606,14 @@ object Similarity {
     * path ([[ivfTopKIndexed]]).
     */
   def buildIvfIndex(corpus: DataFrame, name: String, centroids: Int = 16,
-                    buckets: Int = 8, idCol: String = "vec_id",
-                    vecCol: String = "embedding"): Unit = {
+                    buckets: Int = 8): Unit = {
     // train once: the centroid frame feeds two write branches (quantizer
     // table + assignment join) — materialize so Lloyd runs a single time
-    val cents = trainCentroids(corpus, centroids, idCol, vecCol)
+    val cents = trainCentroids(corpus, centroids)
       .pin()
     graft.core.Layout.writeBucketed(cents, s"${name}_centroids", "cell", 1)
     graft.core.Layout.writeBucketed(
-      assignCells(corpus, cents, idCol, vecCol), s"${name}_lists", "cell",
+      assignCells(corpus, cents), s"${name}_lists", "cell",
       buckets)
     writeIndexMeta(corpus.sparkSession, name,
       Seq("centroids" -> centroids, "buckets" -> buckets),
@@ -652,7 +622,7 @@ object Similarity {
     // one cosine per vector, no re-scoring of the k centroids
     writeDriftBaseline(corpus.sparkSession, name,
       Seq("ivf_assign" -> assignDistanceAssigned(
-        corpus.sparkSession.table(s"${name}_lists"), cents, idCol, vecCol)))
+        corpus.sparkSession.table(s"${name}_lists"), cents, "vec_id", "embedding")))
   }
 
   /** One-row build-parameter record per index, checked at append time —
@@ -781,8 +751,7 @@ object Similarity {
     * per-row function with no trained state to drift from.
     */
   def indexDrift(spark: org.apache.spark.sql.SparkSession, name: String,
-                 delta: DataFrame, idCol: String = "vec_id",
-                 vecCol: String = "embedding"): DataFrame = {
+                 delta: DataFrame): DataFrame = {
     require(spark.catalog.tableExists(s"${name}_drift"),
       s"index '$name' has no drift baseline — built before drift tracking " +
         "(rebuild to record one) or an LSH index (no trained state)")
@@ -791,12 +760,12 @@ object Similarity {
     val rows = base.toSeq.sortBy(_._1).map { case (metric, (bMean, bP99)) =>
       val dists = metric match {
         case "ivf_assign" =>
-          assignDistance(delta, spark.table(s"${name}_centroids"), idCol, vecCol)
+          assignDistance(delta, spark.table(s"${name}_centroids"), "vec_id", "embedding")
         case "pq_residual" =>
           val m0 = spark.table(s"${name}_meta").head()
           pqResidual(delta, spark.table(s"${name}_codebooks"),
             m0.getInt(m0.fieldIndex("m")), m0.getInt(m0.fieldIndex("dims")),
-            idCol, vecCol)
+            "vec_id", "embedding")
       }
       val (dMean, dP99) = distStats(dists)
       // a zero-error baseline (degenerate corpus == quantizer) has no
@@ -856,34 +825,27 @@ object Similarity {
     * by the shared t_ann_ivf oracle SQL.
     */
   def ivfTopKIndexed(spark: org.apache.spark.sql.SparkSession, name: String,
-                     queryIds: Seq[Long], k: Int, nProbe: Int = 4,
-                     idCol: String = "vec_id",
-                     vecCol: String = "embedding"): DataFrame =
+                     queryIds: Seq[Long], k: Int, nProbe: Int = 4): DataFrame =
     searchAssigned(spark.table(s"${name}_lists"),
-      spark.table(s"${name}_centroids"), queryIds, k, nProbe, idCol, vecCol)
+      spark.table(s"${name}_centroids"), queryIds, k, nProbe)
 
   /** Build-and-persist the LSH index artifact: all (table, bucket) rows
     * per vector, bucketed by the join key — [[annTopKIndexed]] then
     * computes zero sign-buckets at query time.
     */
-  def buildLshIndex(corpus: DataFrame, name: String, planes: Int, dims: Int,
-                    tables: Int = 8, buckets: Int = 8,
-                    idCol: String = "vec_id",
-                    vecCol: String = "embedding"): Unit = {
+  def buildLshIndex(corpus: DataFrame, name: String, planes: Int, dims: Int): Unit = {
     graft.core.Layout.writeBucketed(
-      lshTableBuckets(corpus, tables, planes, dims, vecCol),
-      s"${name}_buckets", "bucket", buckets)
+      lshTableBuckets(corpus, 8, planes, dims, "embedding"),
+      s"${name}_buckets", "bucket", 8)
     writeIndexMeta(corpus.sparkSession, name, Seq("planes" -> planes,
-      "dims" -> dims, "tables" -> tables, "buckets" -> buckets),
+      "dims" -> dims, "tables" -> 8, "buckets" -> 8),
       dataKeys = Seq("buckets" -> "bucket"))
   }
 
   /** Search-only ANN over the persisted LSH index. */
   def annTopKIndexed(spark: org.apache.spark.sql.SparkSession, name: String,
-                     queryIds: Seq[Long], k: Int,
-                     idCol: String = "vec_id",
-                     vecCol: String = "embedding"): DataFrame =
-    annSearch(spark.table(s"${name}_buckets"), queryIds, k, idCol, vecCol)
+                     queryIds: Seq[Long], k: Int): DataFrame =
+    annSearch(spark.table(s"${name}_buckets"), queryIds, k)
 
   /** [[annTopKMultiProbe]] over a persisted LSH index — zero bucket
     * computation, zero index growth; `planes` is validated against the
@@ -892,12 +854,11 @@ object Similarity {
     */
   def annTopKMultiProbeIndexed(spark: org.apache.spark.sql.SparkSession,
                                name: String, queryIds: Seq[Long], k: Int,
-                               planes: Int, idCol: String = "vec_id",
-                               vecCol: String = "embedding",
+                               planes: Int,
                                probeBits: Int = 1): DataFrame = {
     requireIndexMeta(spark, name, Seq("planes" -> planes))
     annSearchMultiProbe(spark.table(s"${name}_buckets"), queryIds, k,
-      planes, idCol, vecCol, probeBits)
+      planes, probeBits)
   }
 
   // ── Incremental index maintenance (append the delta, never rebuild) ─
@@ -911,14 +872,12 @@ object Similarity {
     * bucket-count mismatch is rejected by the catalog).
     */
   def appendToLshIndex(delta: DataFrame, name: String, planes: Int, dims: Int,
-                       tables: Int = 8, buckets: Int = 8,
-                       idCol: String = "vec_id",
-                       vecCol: String = "embedding"): Unit = {
+                       tables: Int = 8): Unit = {
     requireIndexMeta(delta.sparkSession, name, Seq("planes" -> planes,
-      "dims" -> dims, "tables" -> tables, "buckets" -> buckets))
+      "dims" -> dims, "tables" -> tables, "buckets" -> 8))
     graft.core.Layout.appendBucketed(
-      lshTableBuckets(delta, tables, planes, dims, vecCol),
-      s"${name}_buckets", "bucket", buckets)
+      lshTableBuckets(delta, tables, planes, dims, "embedding"),
+      s"${name}_buckets", "bucket", 8)
   }
 
   /** Append new vectors to a persisted IVF index: the delta is assigned
@@ -932,10 +891,7 @@ object Similarity {
     * refuses with `strictDrift` — that a re-train + rebuild is due.
     */
   def appendToIvfIndex(delta: DataFrame, name: String, buckets: Int = 8,
-                       idCol: String = "vec_id",
-                       vecCol: String = "embedding",
-                       maxDriftRatio: Double = DefaultMaxDriftRatio,
-                       strictDrift: Boolean = false): Unit = {
+                       maxDriftRatio: Double = DefaultMaxDriftRatio): Unit = {
     if (delta.sparkSession.catalog.tableExists(s"${name}_meta")) {
       val m = delta.sparkSession.table(s"${name}_meta").head()
       require(m.getInt(m.fieldIndex("buckets")) == buckets,
@@ -948,12 +904,12 @@ object Similarity {
     // drift is read off the SAME assignment the append writes — with a
     // baseline present the scored frame is checkpointed so the stats
     // job and the append share one evaluation (zero extra delta passes)
-    val scored0 = assignCellsScored(delta, cents, idCol, vecCol)
+    val scored0 = assignCellsScored(delta, cents, "vec_id", "embedding")
     val scored = if (base.isDefined) scored0.pin() else scored0
     base.foreach(b => enforceDrift(name, b,
       Seq("ivf_assign" ->
-        scored.select(col(idCol), (lit(1.0) - col("__cos")).as("d"))),
-      maxDriftRatio, strictDrift))
+        scored.select(col("vec_id"), (lit(1.0) - col("__cos")).as("d"))),
+      maxDriftRatio, false))
     graft.core.Layout.appendBucketed(
       scored.drop("__cos"), s"${name}_lists", "cell", buckets)
   }
@@ -998,16 +954,15 @@ object Similarity {
     * (subspace, cell, cvec: array<double>) — m × k rows.
     */
   def pqTrainCodebooks(corpus: DataFrame, m: Int = 8, k: Int = 16,
-                       dims: Int = 64, idCol: String = "vec_id",
-                       vecCol: String = "embedding"): DataFrame = {
+                       dims: Int = 64): DataFrame = {
     require(dims % m == 0, s"dims $dims must split into $m subspaces")
     val sub = dims / m
     val seeds = corpus
-      .withColumn("__h", graft.functions.polyFingerprint(col(idCol).cast("string")))
-      .orderBy(col("__h"), col(idCol)).limit(k)
-      .select(col(idCol).as("cell"), col(vecCol).as("__sv"))
+      .withColumn("__h", graft.functions.polyFingerprint(col("vec_id").cast("string")))
+      .orderBy(col("__h"), col("vec_id")).limit(k)
+      .select(col("vec_id").as("cell"), col("embedding").as("__sv"))
     val seedSub = subspaces(seeds, "__sv", "cv", m, sub)
-    val corpSub = subspaces(corpus.select(col(idCol), col(vecCol)), vecCol,
+    val corpSub = subspaces(corpus.select(col("vec_id"), col("embedding")), "embedding",
       "xv", m, sub)
     // per-(vector, subspace) argmin as a partial-aggregated min-struct
     // (round 22, guide §2.3): the broadcast join emits all k candidate
@@ -1016,10 +971,10 @@ object Similarity {
     // (full k× exchange + sort). (d, cell) never ties (cells unique),
     // so xv in the struct tail is never compared.
     val a0 = corpSub.join(broadcast(seedSub), Seq("subspace"))
-      .select(col(idCol), col("subspace"),
+      .select(col("vec_id"), col("subspace"),
         struct(l2sq(col("xv"), col("cv")).as("d"), col("cell").as("c"),
           col("xv").as("v")).as("__dcv"))
-      .groupBy(col(idCol), col("subspace"))
+      .groupBy(col("vec_id"), col("subspace"))
       .agg(min(col("__dcv")).as("__m"))
       .select(col("subspace"), col("__m.c").as("cell"), col("__m.v").as("xv"))
     val coords = a0
@@ -1041,9 +996,8 @@ object Similarity {
     * lets the candidate scan live in memory.
     */
   def pqEncode(corpus: DataFrame, codebooks: DataFrame, m: Int = 8,
-               dims: Int = 64, idCol: String = "vec_id",
-               vecCol: String = "embedding"): DataFrame =
-    pqEncodeScored(corpus, codebooks, m, dims, idCol, vecCol).drop("__d")
+               dims: Int = 64): DataFrame =
+    pqEncodeScored(corpus, codebooks, m, dims, "vec_id", "embedding").drop("__d")
 
   /** [[pqEncode]] keeping the winning cell's squared-L2 as `__d` — the
     * per-subspace reconstruction residual the append-time drift check
@@ -1079,22 +1033,20 @@ object Similarity {
     * rerank of the survivors, when wanted, is [[topK]] over k·|Q| ids.
     * Inline training is the build-path gate, as with [[ivfTopK]].
     */
-  def pqTopK(corpus: DataFrame, queryIds: Seq[Long], kNn: Int, m: Int = 8,
-             codebookSize: Int = 16, dims: Int = 64,
-             idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val sub = dims / m
-    val cents = pqTrainCodebooks(corpus, m, codebookSize, dims, idCol, vecCol)
+  def pqTopK(corpus: DataFrame, queryIds: Seq[Long], kNn: Int): DataFrame = {
+    val sub = 64 / 8
+    val cents = pqTrainCodebooks(corpus, 8, 16, 64)
       .pin()
-    val codes = pqEncode(corpus, cents, m, dims, idCol, vecCol)
-    val queries = corpus.filter(col(idCol).isin(queryIds: _*))
-      .select(col(idCol).as("query_id"), col(vecCol))
-    val qSub = subspaces(queries, vecCol, "qv", m, sub)
+    val codes = pqEncode(corpus, cents, 8, 64)
+    val queries = corpus.filter(col("vec_id").isin(queryIds: _*))
+      .select(col("vec_id").as("query_id"), col("embedding"))
+    val qSub = subspaces(queries, "embedding", "qv", 8, sub)
     val lut = adcLut(qSub, cents)
     val scored = codes.join(broadcast(lut), Seq("subspace", "cell"))
-      .filter(col("query_id") =!= col(idCol))
-      .groupBy("query_id", idCol)
+      .filter(col("query_id") =!= col("vec_id"))
+      .groupBy("query_id", "vec_id")
       .agg(sum("pd").as("score"))
-      .select(col("query_id"), col(idCol).as("neighbor_id"), col("score"))
+      .select(col("query_id"), col("vec_id").as("neighbor_id"), col("score"))
     rankTopK(scored, kNn, "score")
   }
 
@@ -1110,16 +1062,13 @@ object Similarity {
     * the oracle.
     */
   def pqTopKReranked(corpus: DataFrame, queryIds: Seq[Long], kNn: Int,
-                     rerank: Int, m: Int = 8, codebookSize: Int = 16,
-                     dims: Int = 64, idCol: String = "vec_id",
-                     vecCol: String = "embedding"): DataFrame = {
+                     rerank: Int): DataFrame = {
     require(rerank >= kNn, s"rerank window $rerank must cover kNn=$kNn")
-    val cand = pqTopK(corpus, queryIds, rerank, m, codebookSize, dims,
-        idCol, vecCol)
+    val cand = pqTopK(corpus, queryIds, rerank)
       .select(col("query_id"), col("neighbor_id"))
-    val queries = corpus.filter(col(idCol).isin(queryIds: _*))
-      .select(col(idCol).as("query_id"), col(vecCol).as("__qv"))
-    rerankExact(corpus, cand, queries, kNn, idCol, vecCol)
+    val queries = corpus.filter(col("vec_id").isin(queryIds: _*))
+      .select(col("vec_id").as("query_id"), col("embedding").as("__qv"))
+    rerankExact(corpus, cand, queries, kNn, "vec_id", "embedding")
   }
 
   /** The shared exact-rerank tail: candidate (query_id, neighbor_id)
@@ -1157,17 +1106,13 @@ object Similarity {
     * production path over the persisted composite.
     */
   def ivfPqTopKReranked(corpus: DataFrame, queryIds: Seq[Long], kNn: Int,
-                        rerank: Int, centroids: Int = 16, nProbe: Int = 6,
-                        m: Int = 8, codebookSize: Int = 16, dims: Int = 64,
-                        idCol: String = "vec_id",
-                        vecCol: String = "embedding"): DataFrame = {
+                        rerank: Int): DataFrame = {
     require(rerank >= kNn, s"rerank window $rerank must cover kNn=$kNn")
-    val cand = ivfPqTopK(corpus, queryIds, rerank, centroids, nProbe, m,
-        codebookSize, dims, idCol, vecCol)
+    val cand = ivfPqTopK(corpus, queryIds, rerank, 6)
       .select(col("query_id"), col("neighbor_id"))
-    val queries = corpus.filter(col(idCol).isin(queryIds: _*))
-      .select(col(idCol).as("query_id"), col(vecCol).as("__qv"))
-    rerankExact(corpus, cand, queries, kNn, idCol, vecCol)
+    val queries = corpus.filter(col("vec_id").isin(queryIds: _*))
+      .select(col("vec_id").as("query_id"), col("embedding").as("__qv"))
+    rerankExact(corpus, cand, queries, kNn, "vec_id", "embedding")
   }
 
   /** The rerank composite over the PERSISTED IVF×PQ index: candidates
@@ -1179,16 +1124,12 @@ object Similarity {
     */
   def ivfPqTopKRerankedIndexed(spark: org.apache.spark.sql.SparkSession,
                                name: String, queries: DataFrame,
-                               corpus: DataFrame, kNn: Int, rerank: Int,
-                               nProbe: Int = 6, m: Int = 8, dims: Int = 64,
-                               idCol: String = "vec_id",
-                               vecCol: String = "embedding"): DataFrame = {
+                               corpus: DataFrame, kNn: Int, rerank: Int): DataFrame = {
     require(rerank >= kNn, s"rerank window $rerank must cover kNn=$kNn")
-    val cand = ivfPqTopKIndexed(spark, name, queries, rerank, nProbe, m,
-        dims, idCol, vecCol)
+    val cand = ivfPqTopKIndexed(spark, name, queries, rerank)
       .select(col("query_id"), col("neighbor_id"))
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("__qv"))
-    rerankExact(corpus, cand, q, kNn, idCol, vecCol)
+    val q = queries.select(col("vec_id").as("query_id"), col("embedding").as("__qv"))
+    rerankExact(corpus, cand, q, kNn, "vec_id", "embedding")
   }
 
   /** IVF×PQ composite ANN — the standard large-scale architecture: the
@@ -1200,36 +1141,32 @@ object Similarity {
     * the oracle. Inline training = the build-path gate; persist
     * assigned+codes via the index lifecycle for the production path.
     */
-  def ivfPqTopK(corpus: DataFrame, queryIds: Seq[Long], kNn: Int,
-                centroids: Int = 16, nProbe: Int = 6, m: Int = 8,
-                codebookSize: Int = 16, dims: Int = 64,
-                idCol: String = "vec_id",
-                vecCol: String = "embedding"): DataFrame = {
-    val sub = dims / m
+  def ivfPqTopK(corpus: DataFrame, queryIds: Seq[Long], kNn: Int, nProbe: Int = 6): DataFrame = {
+    val sub = 64 / 8
     // the coarse quantizer and the PQ codebooks are INDEPENDENT
     // training chains, each ending in an eager pin — overlap them
     // (guide §2.6, the recall-grid pattern) so the second chain's jobs
     // back-fill executors during the first's tail
     val Seq(cents, pqcents) = Overlap.all(Seq(
-      () => trainCentroids(corpus, centroids, idCol, vecCol).pin(),
-      () => pqTrainCodebooks(corpus, m, codebookSize, dims, idCol, vecCol)
+      () => trainCentroids(corpus, 16).pin(),
+      () => pqTrainCodebooks(corpus, 8, 16, 64)
         .pin()))
-    val assigned = assignCells(corpus, cents, idCol, vecCol)
-      .select(col(idCol), col("cell"))
-    val codes = pqEncode(corpus, pqcents, m, dims, idCol, vecCol)
+    val assigned = assignCells(corpus, cents)
+      .select(col("vec_id"), col("cell"))
+    val codes = pqEncode(corpus, pqcents, 8, 64)
       .withColumnRenamed("cell", "code")
-    val queries = corpus.filter(col(idCol).isin(queryIds: _*))
-      .select(col(idCol).as("query_id"), col(vecCol))
+    val queries = corpus.filter(col("vec_id").isin(queryIds: _*))
+      .select(col("vec_id").as("query_id"), col("embedding"))
     val probeScored = queries.join(broadcast(cents))
       .select(col("query_id"), col("cell").as("__cand"),
-        cosine(col(vecCol), col("cvec")).as("cos"))
+        cosine(col("embedding"), col("cvec")).as("cos"))
     val probes = topKOperator(probeScored, nProbe, "__cand")
       .select(col("query_id"), col("__cand").as("cell"))
     val cand = assigned.join(broadcast(probes), Seq("cell"))
-      .filter(col("query_id") =!= col(idCol))
-      .select(col("query_id"), col(idCol))
-    val qSub = subspaces(queries, vecCol, "qv", m, sub)
-    ivfPqScore(cand, codes, adcLut(qSub, pqcents, "code"), kNn, idCol)
+      .filter(col("query_id") =!= col("vec_id"))
+      .select(col("query_id"), col("vec_id"))
+    val qSub = subspaces(queries, "embedding", "qv", 8, sub)
+    ivfPqScore(cand, codes, adcLut(qSub, pqcents, "code"), kNn, "vec_id")
   }
 
   /** The shared IVF×PQ scoring tail: probe-pruned candidate ids joined
@@ -1253,14 +1190,12 @@ object Similarity {
     * once; [[pqTopKIndexed]] is the codes-scan-only hot path.
     */
   def buildPqIndex(corpus: DataFrame, name: String, m: Int = 8,
-                   codebookSize: Int = 16, dims: Int = 64, buckets: Int = 8,
-                   idCol: String = "vec_id",
-                   vecCol: String = "embedding"): Unit = {
-    val cents = pqTrainCodebooks(corpus, m, codebookSize, dims, idCol, vecCol)
+                   codebookSize: Int = 16, dims: Int = 64, buckets: Int = 8): Unit = {
+    val cents = pqTrainCodebooks(corpus, m, codebookSize, dims)
       .pin()
     graft.core.Layout.writeBucketed(cents, s"${name}_codebooks", "cell", 1)
     graft.core.Layout.writeBucketed(
-      pqEncode(corpus, cents, m, dims, idCol, vecCol), s"${name}_codes",
+      pqEncode(corpus, cents, m, dims), s"${name}_codes",
       "cell", buckets)
     writeIndexMeta(corpus.sparkSession, name,
       Seq("m" -> m, "codebook_size" -> codebookSize, "dims" -> dims,
@@ -1270,8 +1205,8 @@ object Similarity {
     // cell, no re-scoring of the k codebook cells
     writeDriftBaseline(corpus.sparkSession, name,
       Seq("pq_residual" -> pqResidualEncoded(corpus,
-        corpus.sparkSession.table(s"${name}_codes"), cents, m, dims, idCol,
-        vecCol)))
+        corpus.sparkSession.table(s"${name}_codes"), cents, m, dims, "vec_id",
+        "embedding")))
   }
 
   /** Append new vectors to a persisted PQ index: the delta is encoded
@@ -1280,21 +1215,18 @@ object Similarity {
     */
   def appendToPqIndex(delta: DataFrame, name: String, m: Int = 8,
                       dims: Int = 64, buckets: Int = 8,
-                      idCol: String = "vec_id",
-                      vecCol: String = "embedding",
-                      maxDriftRatio: Double = DefaultMaxDriftRatio,
-                      strictDrift: Boolean = false): Unit = {
+                      maxDriftRatio: Double = DefaultMaxDriftRatio): Unit = {
     requireIndexMeta(delta.sparkSession, name,
       Seq("m" -> m, "dims" -> dims, "buckets" -> buckets))
     val spark = delta.sparkSession
     val base = driftBaseline(spark, name, maxDriftRatio)
     val cents = spark.table(s"${name}_codebooks")
-    val enc0 = pqEncodeScored(delta, cents, m, dims, idCol, vecCol)
+    val enc0 = pqEncodeScored(delta, cents, m, dims, "vec_id", "embedding")
     val enc = if (base.isDefined) enc0.pin() else enc0
     base.foreach(b => enforceDrift(name, b,
       Seq("pq_residual" ->
-        enc.groupBy(col(idCol)).agg(sum(col("__d")).as("d"))),
-      maxDriftRatio, strictDrift))
+        enc.groupBy(col("vec_id")).agg(sum(col("__d")).as("d"))),
+      maxDriftRatio, false))
     graft.core.Layout.appendBucketed(
       enc.drop("__d"), s"${name}_codes", "cell", buckets)
   }
@@ -1308,21 +1240,19 @@ object Similarity {
     * corruption the append paths already reject.
     */
   def pqTopKIndexed(spark: org.apache.spark.sql.SparkSession, name: String,
-                    queries: DataFrame, kNn: Int, m: Int = 8, dims: Int = 64,
-                    idCol: String = "vec_id",
-                    vecCol: String = "embedding"): DataFrame = {
-    requireIndexMeta(spark, name, Seq("m" -> m, "dims" -> dims))
-    val sub = dims / m
+                    queries: DataFrame, kNn: Int): DataFrame = {
+    requireIndexMeta(spark, name, Seq("m" -> 8, "dims" -> 64))
+    val sub = 64 / 8
     val cents = spark.table(s"${name}_codebooks")
     val codes = spark.table(s"${name}_codes")
     val qSub = subspaces(
-      queries.select(col(idCol).as("query_id"), col(vecCol)), vecCol, "qv", m, sub)
+      queries.select(col("vec_id").as("query_id"), col("embedding")), "embedding", "qv", 8, sub)
     val lut = adcLut(qSub, cents)
     val scored = codes.join(broadcast(lut), Seq("subspace", "cell"))
-      .filter(col("query_id") =!= col(idCol))
-      .groupBy("query_id", idCol)
+      .filter(col("query_id") =!= col("vec_id"))
+      .groupBy("query_id", "vec_id")
       .agg(sum("pd").as("score"))
-      .select(col("query_id"), col(idCol).as("neighbor_id"), col("score"))
+      .select(col("query_id"), col("vec_id").as("neighbor_id"), col("score"))
     rankTopK(scored, kNn, "score")
   }
 
@@ -1341,35 +1271,34 @@ object Similarity {
     */
   def buildIvfPqIndex(corpus: DataFrame, name: String, centroids: Int = 16,
                       m: Int = 8, codebookSize: Int = 16, dims: Int = 64,
-                      buckets: Int = 8, idCol: String = "vec_id",
-                      vecCol: String = "embedding"): Unit = {
-    val cents = trainCentroids(corpus, centroids, idCol, vecCol)
+                      buckets: Int = 8): Unit = {
+    val cents = trainCentroids(corpus, centroids)
       .pin()
     graft.core.Layout.writeBucketed(cents, s"${name}_centroids", "cell", 1)
     graft.core.Layout.writeBucketed(
-      assignCells(corpus, cents, idCol, vecCol).select(col(idCol), col("cell")),
+      assignCells(corpus, cents).select(col("vec_id"), col("cell")),
       s"${name}_lists", "cell", buckets)
-    val books = pqTrainCodebooks(corpus, m, codebookSize, dims, idCol, vecCol)
+    val books = pqTrainCodebooks(corpus, m, codebookSize, dims)
       .pin()
     graft.core.Layout.writeBucketed(books, s"${name}_codebooks", "cell", 1)
     graft.core.Layout.writeBucketed(
-      pqEncode(corpus, books, m, dims, idCol, vecCol), s"${name}_codes",
-      idCol, buckets)
+      pqEncode(corpus, books, m, dims), s"${name}_codes",
+      "vec_id", buckets)
     writeIndexMeta(corpus.sparkSession, name,
       Seq("centroids" -> centroids, "m" -> m,
         "codebook_size" -> codebookSize, "dims" -> dims, "buckets" -> buckets),
-      dataKeys = Seq("lists" -> "cell", "codes" -> idCol))
+      dataKeys = Seq("lists" -> "cell", "codes" -> "vec_id"))
     // baselines priced off the JUST-WRITTEN artifacts, not a re-run of
     // either training-side scoring pass; the composite's bare (id,cell)
     // lists re-attach vectors by id join
     val spark = corpus.sparkSession
     writeDriftBaseline(spark, name,
       Seq("ivf_assign" -> assignDistanceAssigned(
-        corpus.select(col(idCol), col(vecCol))
-          .join(spark.table(s"${name}_lists"), Seq(idCol)),
-        cents, idCol, vecCol),
+        corpus.select(col("vec_id"), col("embedding"))
+          .join(spark.table(s"${name}_lists"), Seq("vec_id")),
+        cents, "vec_id", "embedding"),
         "pq_residual" -> pqResidualEncoded(corpus,
-          spark.table(s"${name}_codes"), books, m, dims, idCol, vecCol)))
+          spark.table(s"${name}_codes"), books, m, dims, "vec_id", "embedding")))
   }
 
   /** Search-only IVF×PQ over the persisted composite: probes from the
@@ -1381,26 +1310,23 @@ object Similarity {
     * m/dims are meta-checked like [[pqTopKIndexed]].
     */
   def ivfPqTopKIndexed(spark: org.apache.spark.sql.SparkSession, name: String,
-                       queries: DataFrame, kNn: Int, nProbe: Int = 6,
-                       m: Int = 8, dims: Int = 64,
-                       idCol: String = "vec_id",
-                       vecCol: String = "embedding"): DataFrame = {
-    requireIndexMeta(spark, name, Seq("m" -> m, "dims" -> dims))
+                       queries: DataFrame, kNn: Int): DataFrame = {
+    requireIndexMeta(spark, name, Seq("m" -> 8, "dims" -> 64))
     val cents = spark.table(s"${name}_centroids")
     val lists = spark.table(s"${name}_lists")
     val books = spark.table(s"${name}_codebooks")
     val codes = spark.table(s"${name}_codes").withColumnRenamed("cell", "code")
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol))
+    val q = queries.select(col("vec_id").as("query_id"), col("embedding"))
     val probeScored = q.join(broadcast(cents))
       .select(col("query_id"), col("cell").as("__cand"),
-        cosine(col(vecCol), col("cvec")).as("cos"))
-    val probes = topKOperator(probeScored, nProbe, "__cand")
+        cosine(col("embedding"), col("cvec")).as("cos"))
+    val probes = topKOperator(probeScored, 6, "__cand")
       .select(col("query_id"), col("__cand").as("cell"))
     val cand = lists.join(broadcast(probes), Seq("cell"))
-      .filter(col("query_id") =!= col(idCol))
-      .select(col("query_id"), col(idCol))
-    val qSub = subspaces(q, vecCol, "qv", m, dims / m)
-    ivfPqScore(cand, codes, adcLut(qSub, books, "code"), kNn, idCol)
+      .filter(col("query_id") =!= col("vec_id"))
+      .select(col("query_id"), col("vec_id"))
+    val qSub = subspaces(q, "embedding", "qv", 8, 64 / 8)
+    ivfPqScore(cand, codes, adcLut(qSub, books, "code"), kNn, "vec_id")
   }
 
   /** Append new vectors to a persisted IVF×PQ index: the delta is
@@ -1414,8 +1340,6 @@ object Similarity {
     */
   def appendToIvfPqIndex(delta: DataFrame, name: String, m: Int = 8,
                          dims: Int = 64, buckets: Int = 8,
-                         idCol: String = "vec_id",
-                         vecCol: String = "embedding",
                          maxDriftRatio: Double = DefaultMaxDriftRatio,
                          strictDrift: Boolean = false): Unit = {
     requireIndexMeta(delta.sparkSession, name,
@@ -1423,24 +1347,24 @@ object Similarity {
     val spark = delta.sparkSession
     val base = driftBaseline(spark, name, maxDriftRatio)
     val scored0 = assignCellsScored(delta, spark.table(s"${name}_centroids"),
-      idCol, vecCol)
+      "vec_id", "embedding")
     val scored = if (base.isDefined) scored0.pin() else scored0
     val enc0 = pqEncodeScored(delta, spark.table(s"${name}_codebooks"), m,
-      dims, idCol, vecCol)
+      dims, "vec_id", "embedding")
     val enc = if (base.isDefined) enc0.pin() else enc0
     // BOTH quantizers' drift from the frames the append writes anyway;
     // the strict path throws before either table has been touched
     base.foreach(b => enforceDrift(name, b,
       Seq("ivf_assign" ->
-        scored.select(col(idCol), (lit(1.0) - col("__cos")).as("d")),
+        scored.select(col("vec_id"), (lit(1.0) - col("__cos")).as("d")),
         "pq_residual" ->
-          enc.groupBy(col(idCol)).agg(sum(col("__d")).as("d"))),
+          enc.groupBy(col("vec_id")).agg(sum(col("__d")).as("d"))),
       maxDriftRatio, strictDrift))
     graft.core.Layout.appendBucketed(
-      scored.select(col(idCol), col("cell")),
+      scored.select(col("vec_id"), col("cell")),
       s"${name}_lists", "cell", buckets)
     graft.core.Layout.appendBucketed(
-      enc.drop("__d"), s"${name}_codes", idCol, buckets)
+      enc.drop("__d"), s"${name}_codes", "vec_id", buckets)
   }
 
   /** The outcome of one [[maintainIndex]] call: which index kind was
@@ -1480,9 +1404,7 @@ object Similarity {
     */
   def maintainIndex(spark: org.apache.spark.sql.SparkSession, name: String,
                     indexed: DataFrame, delta: DataFrame,
-                    maxDriftRatio: Double = DefaultMaxDriftRatio,
-                    idCol: String = "vec_id",
-                    vecCol: String = "embedding"): IndexMaintenance = {
+                    maxDriftRatio: Double = DefaultMaxDriftRatio): IndexMaintenance = {
     require(maxDriftRatio > 0 && !maxDriftRatio.isInfinite,
       s"maxDriftRatio must be a positive finite ratio, got $maxDriftRatio")
     val hasIvf = spark.catalog.tableExists(s"${name}_centroids")
@@ -1495,7 +1417,7 @@ object Similarity {
       case (true, false) => "ivf"
       case _             => "pq"
     }
-    val ratios = indexDrift(spark, name, delta, idCol, vecCol)
+    val ratios = indexDrift(spark, name, delta)
       .select(col("mean_ratio")).collect().map(_.getDouble(0))
       .filterNot(_.isNaN)
     val maxRatio = if (ratios.isEmpty) Double.NaN else ratios.max
@@ -1508,17 +1430,16 @@ object Similarity {
       // those files — an unpinned plan would scan deleted data. The pin
       // costs one corpus materialization on a path that is already
       // corpus-sized by definition.
-      val corpus = indexed.select(col(idCol), col(vecCol))
-        .unionByName(delta.select(col(idCol), col(vecCol)))
+      val corpus = indexed.select(col("vec_id"), col("embedding"))
+        .unionByName(delta.select(col("vec_id"), col("embedding")))
         .pin()
       kind match {
         case "ivf"   => buildIvfIndex(corpus, name, mi("centroids"),
-          mi("buckets"), idCol, vecCol)
+          mi("buckets"))
         case "pq"    => buildPqIndex(corpus, name, mi("m"),
-          mi("codebook_size"), mi("dims"), mi("buckets"), idCol, vecCol)
+          mi("codebook_size"), mi("dims"), mi("buckets"))
         case "ivfpq" => buildIvfPqIndex(corpus, name, mi("centroids"),
-          mi("m"), mi("codebook_size"), mi("dims"), mi("buckets"), idCol,
-          vecCol)
+          mi("m"), mi("codebook_size"), mi("dims"), mi("buckets"))
       }
       IndexMaintenance("rebuilt", kind, maxRatio)
     } else {
@@ -1526,12 +1447,11 @@ object Similarity {
       // quantizers; maxDriftRatio = 0 disables the append's own gate so
       // the delta is not re-measured
       kind match {
-        case "ivf"   => appendToIvfIndex(delta, name, mi("buckets"),
-          idCol, vecCol, maxDriftRatio = 0.0)
+        case "ivf"   => appendToIvfIndex(delta, name, mi("buckets"), maxDriftRatio = 0.0)
         case "pq"    => appendToPqIndex(delta, name, mi("m"), mi("dims"),
-          mi("buckets"), idCol, vecCol, maxDriftRatio = 0.0)
+          mi("buckets"), maxDriftRatio = 0.0)
         case "ivfpq" => appendToIvfPqIndex(delta, name, mi("m"), mi("dims"),
-          mi("buckets"), idCol, vecCol, maxDriftRatio = 0.0)
+          mi("buckets"), maxDriftRatio = 0.0)
       }
       IndexMaintenance("appended", kind, maxRatio)
     }
@@ -1657,32 +1577,30 @@ object Similarity {
     */
   def embeddingNearDups(corpus: DataFrame, threshold: Double, planes: Int,
                         dims: Int, tables: Int = 8,
-                        idCol: String = "vec_id",
-                        vecCol: String = "embedding",
                         maxBucket: Int = graft.ext.Dedup.DefaultMaxBucketWidth): DataFrame = {
     // exact-collapse: one window keyed by the raw vector bits (null
     // vectors never bucketed — same as the unguarded posexplode drop)
-    val grouped = corpus.filter(col(vecCol).isNotNull)
-      .select(col(idCol), col(vecCol))
-      .withColumn("rep", min(col(idCol)).over(Window.partitionBy(col(vecCol))))
+    val grouped = corpus.filter(col("embedding").isNotNull)
+      .select(col("vec_id"), col("embedding"))
+      .withColumn("rep", min(col("vec_id")).over(Window.partitionBy(col("embedding"))))
       .pin()
-    val reps = grouped.filter(col(idCol) === col("rep"))
+    val reps = grouped.filter(col("vec_id") === col("rep"))
     // bucket representatives ONCE (single fused LshBuckets evaluation in
     // the checkpoint job), with bucket width attached in the same pass:
     // the overflow disclosure and the capped join both read the
     // materialized bare (tbl, bucket, id, width) rows
-    val bucketRows = lshTableBuckets(reps, tables, planes, dims, vecCol)
-      .select(col("tbl"), col("bucket"), col(idCol))
+    val bucketRows = lshTableBuckets(reps, tables, planes, dims, "embedding")
+      .select(col("tbl"), col("bucket"), col("vec_id"))
       .withColumn("__w", count(lit(1)).over(Window.partitionBy("tbl", "bucket")))
       .pin()
     val capped = bucketRows.filter(col("__w") <= maxBucket).drop("__w")
-    val l = capped.select(col("tbl"), col("bucket"), col(idCol).as("id_a"))
-    val r = capped.select(col("tbl"), col("bucket"), col(idCol).as("id_b"))
+    val l = capped.select(col("tbl"), col("bucket"), col("vec_id").as("id_a"))
+    val r = capped.select(col("tbl"), col("bucket"), col("vec_id").as("id_b"))
     val candidates = l.join(r, Seq("tbl", "bucket"))
       .filter(col("id_a") < col("id_b"))
       .select("id_a", "id_b").distinct()
-    val va = reps.select(col(idCol).as("id_a"), col(vecCol).as("va"))
-    val vb = reps.select(col(idCol).as("id_b"), col(vecCol).as("vb"))
+    val va = reps.select(col("vec_id").as("id_a"), col("embedding").as("va"))
+    val vb = reps.select(col("vec_id").as("id_b"), col("embedding").as("vb"))
     val repPairs = candidates.join(va, "id_a").join(vb, "id_b")
       .withColumn("cos", round(cosine(col("va"), col("vb")), 6))
       .filter(col("cos") >= threshold)
@@ -1690,17 +1608,17 @@ object Similarity {
     // expansion: cross-group member pairs inherit the rep pair's cosine
     // (bit-identical vectors), intra-group pairs score the rep against
     // itself through the SAME expression the unguarded join would run
-    val ga = grouped.select(col(idCol).as("a"), col("rep").as("ra"))
-    val gb = grouped.select(col(idCol).as("b"), col("rep").as("rb"))
+    val ga = grouped.select(col("vec_id").as("a"), col("rep").as("ra"))
+    val gb = grouped.select(col("vec_id").as("b"), col("rep").as("rb"))
     val cross = repPairs.join(ga, "ra").join(gb, "rb")
       .select(least(col("a"), col("b")).as("id_a"),
         greatest(col("a"), col("b")).as("id_b"), col("cos"))
     val selfCos = reps
-      .withColumn("cos", round(cosine(col(vecCol), col(vecCol)), 6))
+      .withColumn("cos", round(cosine(col("embedding"), col("embedding")), 6))
       .filter(col("cos") >= threshold)
       .select(col("rep").as("r0"), col("cos"))
-    val ma = grouped.select(col(idCol).as("a"), col("rep").as("r0"))
-    val mb = grouped.select(col(idCol).as("b"), col("rep").as("r0"))
+    val ma = grouped.select(col("vec_id").as("a"), col("rep").as("r0"))
+    val mb = grouped.select(col("vec_id").as("b"), col("rep").as("r0"))
     val intra = ma.join(mb, "r0").filter(col("a") < col("b")).join(selfCos, "r0")
       .select(col("a").as("id_a"), col("b").as("id_b"), col("cos"))
     Overlap.disclosing("embeddingNearDups",
@@ -1746,12 +1664,10 @@ object Similarity {
   def embeddingRecallAudit(emb: DataFrame, sampleFraction: Double = 0.25,
                            threshold: Double = 0.25, planes: Int = 7,
                            dims: Int = 64, tables: Int = 8,
-                           idCol: String = "vec_id",
-                           vecCol: String = "embedding",
                            maxBucket: Int = graft.ext.Dedup.DefaultMaxBucketWidth,
                            maxSample: Int = 4096): DataFrame =
     embeddingRecallGrid(emb, Seq((tables, planes)), sampleFraction,
-      threshold, dims, idCol, vecCol, maxBucket, maxSample)
+      threshold, dims, maxBucket, maxSample)
       .drop("tables", "planes")
 
   /** The CONFIG GRID over [[embeddingRecallAudit]] — the
@@ -1770,8 +1686,6 @@ object Similarity {
                             Seq((4, 7), (8, 7), (8, 9)),
                           sampleFraction: Double = 0.25,
                           threshold: Double = 0.25, dims: Int = 64,
-                          idCol: String = "vec_id",
-                          vecCol: String = "embedding",
                           maxBucket: Int = graft.ext.Dedup.DefaultMaxBucketWidth,
                           maxSample: Int = 4096): DataFrame = {
     require(configs.nonEmpty, "embeddingRecallGrid needs at least one config")
@@ -1781,10 +1695,10 @@ object Similarity {
       s"threshold must be a cosine in [-1, 1], got $threshold")
     require(maxSample >= 2, s"maxSample must be >= 2, got $maxSample")
     val frac = graft.ext.Sampling.sampleByKey(
-      emb.filter(col(vecCol).isNotNull &&
-          size(filter(col(vecCol), x => x =!= lit(0.0f))) > 0)
-        .select(col(idCol), col(vecCol)),
-      col(idCol), sampleFraction)
+      emb.filter(col("embedding").isNotNull &&
+          size(filter(col("embedding"), x => x =!= lit(0.0f))) > 0)
+        .select(col("vec_id"), col("embedding")),
+      col("vec_id"), sampleFraction)
     val nFrac = frac.count()
     if (nFrac > maxSample)
       org.slf4j.LoggerFactory.getLogger(getClass).warn(
@@ -1792,18 +1706,17 @@ object Similarity {
           s"maxSample=$maxSample — keeping the deterministic ascending-" +
           "fingerprint prefix (truth join stays maxSample^2/2-bounded)")
     val samp = frac
-      .orderBy(graft.functions.polyFingerprint(col(idCol).cast("string")),
-        col(idCol))
+      .orderBy(graft.functions.polyFingerprint(col("vec_id").cast("string")),
+        col("vec_id"))
       .limit(maxSample)
       .pin()
-    val a = samp.select(col(idCol).as("id_a"), col(vecCol).as("va"))
-    val b = samp.select(col(idCol).as("id_b"), col(vecCol).as("vb"))
+    val a = samp.select(col("vec_id").as("id_a"), col("embedding").as("va"))
+    val b = samp.select(col("vec_id").as("id_b"), col("embedding").as("vb"))
     val truth = a.join(b, col("id_a") < col("id_b"))
       .filter(round(cosine(col("va"), col("vb")), 6) >= threshold)
       .select("id_a", "id_b").pin()
     configs.map { case (tables, planes) =>
-      val cands = embeddingNearDups(samp, -1.0, planes, dims, tables,
-          idCol, vecCol, maxBucket)
+      val cands = embeddingNearDups(samp, -1.0, planes, dims, tables, maxBucket)
         .pin()
       val verified = cands.filter(col("cos") >= threshold)
       val hits = truth.join(cands, Seq("id_a", "id_b"), "left_semi")
@@ -1855,21 +1768,18 @@ object Similarity {
     * — never a corpus cross-join.
     */
   def semDedupPairs(corpus: DataFrame, threshold: Double,
-                    centroids: Int = 16, idCol: String = "vec_id",
-                    vecCol: String = "embedding",
                     maxCell: Int = DefaultMaxCellWidth): DataFrame = {
-    require(centroids > 0, s"centroids must be positive, got $centroids")
     require(maxCell >= 2, s"maxCell must be >= 2, got $maxCell")
-    val vecs = corpus.filter(col(vecCol).isNotNull)
-    val cents = trainCentroids(vecs, centroids, idCol, vecCol)
-    val assigned = assignCells(vecs, cents, idCol, vecCol).pin()
+    val vecs = corpus.filter(col("embedding").isNotNull)
+    val cents = trainCentroids(vecs, 16)
+    val assigned = assignCells(vecs, cents).pin()
     val widths = assigned.groupBy("cell").agg(count(lit(1)).as("n"))
     val capped = assigned.join(
       broadcast(widths.filter(col("n") <= maxCell).select("cell")), "cell")
-    val a = capped.select(col("cell"), col(idCol).as("id_a"),
-      col(vecCol).as("__va"))
-    val b = capped.select(col("cell"), col(idCol).as("id_b"),
-      col(vecCol).as("__vb"))
+    val a = capped.select(col("cell"), col("vec_id").as("id_a"),
+      col("embedding").as("__va"))
+    val b = capped.select(col("cell"), col("vec_id").as("id_b"),
+      col("embedding").as("__vb"))
     Overlap.disclosing("semDedupPairs",
       s"cell(s) wider than $maxCell vectors excluded from pair generation " +
         "(recall loss, not a failure — raise `centroids`)",
@@ -1888,17 +1798,13 @@ object Similarity {
     * [[graft.ext.Dedup.keepList]] for the keep-one-representative
     * artifact SemDeDup prescribes.
     */
-  def semDedupClusters(corpus: DataFrame, threshold: Double,
-                       centroids: Int = 16, idCol: String = "vec_id",
-                       vecCol: String = "embedding",
-                       maxCell: Int = DefaultMaxCellWidth,
-                       maxRounds: Int = 50, strict: Boolean = false): DataFrame =
+  def semDedupClusters(corpus: DataFrame, threshold: Double): DataFrame =
     graft.ext.Dedup.clusterLabels(
-      corpus.select(col(idCol).as("id")),
-      semDedupPairs(corpus, threshold, centroids, idCol, vecCol, maxCell)
+      corpus.select(col("vec_id").as("id")),
+      semDedupPairs(corpus, threshold, DefaultMaxCellWidth)
         .select(col("id_a").as("src"), col("id_b").as("dst")),
-      maxRounds, strict)
-      .select(col("id").as(idCol), col("cluster_id"))
+      50, false)
+      .select(col("id").as("vec_id"), col("cluster_id"))
 
   /** Cluster-stratified DIVERSITY sampling — a small subset that COVERS
     * the embedding space instead of mirroring its density (the
@@ -1917,16 +1823,14 @@ object Similarity {
     * TopKPerKey cut — the exchange carries O(centroids · n) rows,
     * never a per-cell corpus sort.
     */
-  def diversitySample(corpus: DataFrame, n: Int, centroids: Int = 16,
-                      idCol: String = "vec_id",
-                      vecCol: String = "embedding"): DataFrame = {
+  def diversitySample(corpus: DataFrame, n: Int, centroids: Int = 16): DataFrame = {
     require(n > 0, s"n must be positive, got $n")
     require(centroids > 0, s"centroids must be positive, got $centroids")
-    val vecs = corpus.filter(col(vecCol).isNotNull)
-    val cents = trainCentroids(vecs, centroids, idCol, vecCol)
-    val assigned = assignCells(vecs, cents, idCol, vecCol)
-      .select(col(idCol), col("cell"))
-    graft.ext.Sampling.stratifiedTake(assigned, "cell", idCol, n)
+    val vecs = corpus.filter(col("embedding").isNotNull)
+    val cents = trainCentroids(vecs, centroids)
+    val assigned = assignCells(vecs, cents)
+      .select(col("vec_id"), col("cell"))
+    graft.ext.Sampling.stratifiedTake(assigned, "cell", "vec_id", n)
   }
 
   /** Embedding-space HEALTH report — one row of the numbers an index
@@ -1938,13 +1842,12 @@ object Similarity {
     * is the [[cosineHof]] fold order, so both engines quantize the
     * same doubles.
     */
-  def normReport(corpus: DataFrame,
-                 vecCol: String = "embedding"): DataFrame = {
+  def normReport(corpus: DataFrame): DataFrame = {
     def dotSelf(x: Column): Column =
       aggregate(zip_with(x, x, (p, q) => p.cast("double") * q.cast("double")),
         lit(0.0), (acc, v) => acc + v)
-    val n2 = when(col(vecCol).isNull, lit(null))
-      .otherwise(round(dotSelf(col(vecCol)) * 1e6, 0).cast("long"))
+    val n2 = when(col("embedding").isNull, lit(null))
+      .otherwise(round(dotSelf(col("embedding")) * 1e6, 0).cast("long"))
     val base = corpus.select(n2.as("__nr_n2")).pin()
     val stats = base.agg(
       count(lit(1)).as("n_vecs"),
@@ -1965,14 +1868,10 @@ object Similarity {
     * |Q|·k-bounded semi-join — this report costs one extra exact
     * search over the bounded query set, nothing corpus-shaped.
     */
-  def annRecallReport(corpus: DataFrame, queryIds: Seq[Long], k: Int,
-                      planes: Int = 4, dims: Int = 64,
-                      idCol: String = "vec_id",
-                      vecCol: String = "embedding"): DataFrame = {
-    val ann = annTopK(corpus, queryIds, k, planes, dims,
-        idCol = idCol, vecCol = vecCol)
+  def annRecallReport(corpus: DataFrame, queryIds: Seq[Long], k: Int): DataFrame = {
+    val ann = annTopK(corpus, queryIds, k, 4, 64)
       .select("query_id", "neighbor_id")
-    recallAgainstExact(ann, corpus, queryIds, k, idCol, vecCol)
+    recallAgainstExact(ann, corpus, queryIds, k, "vec_id", "embedding")
   }
 
   /** Shared recall tail for the ANN recall reports: exact top-k over
@@ -1999,14 +1898,10 @@ object Similarity {
     * puts the actual number next to it).
     */
   def annRecallReportMultiProbe(corpus: DataFrame, queryIds: Seq[Long],
-                                k: Int, planes: Int = 4, dims: Int = 64,
-                                probeBits: Int = 1,
-                                idCol: String = "vec_id",
-                                vecCol: String = "embedding"): DataFrame = {
-    val ann = annTopKMultiProbe(corpus, queryIds, k, planes, dims,
-        idCol = idCol, vecCol = vecCol, probeBits = probeBits)
+                                k: Int): DataFrame = {
+    val ann = annTopKMultiProbe(corpus, queryIds, k, 4, 64, probeBits = 1)
       .select("query_id", "neighbor_id")
-    recallAgainstExact(ann, corpus, queryIds, k, idCol, vecCol)
+    recallAgainstExact(ann, corpus, queryIds, k, "vec_id", "embedding")
   }
 
   // ── Embedding classifiers (Rocchio nearest-centroid, IVF kNN) ──────
@@ -2024,18 +1919,17 @@ object Similarity {
     * carries at most |labels|·dims rows after map-side combine, never
     * the corpus.
     */
-  def labelCentroids(labeled: DataFrame, labelCol: String = "label",
-                     vecCol: String = "embedding"): DataFrame =
+  def labelCentroids(labeled: DataFrame): DataFrame =
     labeled
-      .filter(col(vecCol).isNotNull)
-      .select(col(labelCol), posexplode(col(vecCol)).as(Seq("d", "x")))
-      .select(col(labelCol), col("d"),
+      .filter(col("embedding").isNotNull)
+      .select(col("label"), posexplode(col("embedding")).as(Seq("d", "x")))
+      .select(col("label"), col("d"),
         round(col("x").cast("double") * 1e6, 0).cast("long").as("q"))
-      .groupBy(labelCol, "d")
+      .groupBy("label", "d")
       .agg(sum("q").as("sq"), count(lit(1)).as("n"))
-      .select(col(labelCol), col("d"),
+      .select(col("label"), col("d"),
         (col("sq").cast("double") / (col("n").cast("double") * 1e6)).as("c"))
-      .groupBy(labelCol)
+      .groupBy("label")
       .agg(transform(array_sort(collect_list(struct(col("d"), col("c")))),
         s => s.getField("c")).as("cvec"))
 
@@ -2051,18 +1945,16 @@ object Similarity {
     * corpus streams through one scored map stage and the bounded-heap
     * TopKPerKey top-1 cut — no corpus-side sort, no all-pairs.
     */
-  def classifyRocchio(queries: DataFrame, labeled: DataFrame,
-                      idCol: String = "vec_id", vecCol: String = "embedding",
-                      labelCol: String = "label"): DataFrame = {
-    val cents = labelCentroids(labeled, labelCol, vecCol)
+  def classifyRocchio(queries: DataFrame, labeled: DataFrame): DataFrame = {
+    val cents = labelCentroids(labeled)
     val scored = queries
-      .filter(col(vecCol).isNotNull)
-      .select(col(idCol).as("query_id"), col(vecCol))
+      .filter(col("embedding").isNotNull)
+      .select(col("vec_id").as("query_id"), col("embedding"))
       .join(broadcast(cents))
-      .select(col("query_id"), col(labelCol).as("__cand"),
-        cosine(col(vecCol), col("cvec")).as("cos"))
+      .select(col("query_id"), col("label").as("__cand"),
+        cosine(col("embedding"), col("cvec")).as("cos"))
     topKOperator(scored, 1, "__cand")
-      .select(col("query_id").as(idCol), col("__cand").as("pred_label"),
+      .select(col("query_id").as("vec_id"), col("__cand").as("pred_label"),
         round(col("cos"), 6).as("cos"))
   }
 
@@ -2083,34 +1975,32 @@ object Similarity {
     * would be the 100 TB scale-killer this variant exists to avoid.
     */
   def knnClassify(train: DataFrame, queries: DataFrame, k: Int = 10,
-                  centroids: Int = 16, nProbe: Int = 4,
-                  idCol: String = "vec_id", vecCol: String = "embedding",
-                  labelCol: String = "label"): DataFrame = {
+                  centroids: Int = 16): DataFrame = {
     require(k > 0, s"k must be positive, got $k")
-    val trainVecs = train.filter(col(vecCol).isNotNull)
-    val cents = trainCentroids(trainVecs, centroids, idCol, vecCol)
-    val assigned = assignCells(trainVecs, cents, idCol, vecCol)
+    val trainVecs = train.filter(col("embedding").isNotNull)
+    val cents = trainCentroids(trainVecs, centroids)
+    val assigned = assignCells(trainVecs, cents)
     val probeScored = queries
-      .filter(col(vecCol).isNotNull)
-      .select(col(idCol).as("query_id"), col(vecCol).as("query_vec"))
+      .filter(col("embedding").isNotNull)
+      .select(col("vec_id").as("query_id"), col("embedding").as("query_vec"))
       .join(broadcast(cents))
       .select(col("query_id"), col("query_vec"), col("cell").as("__cand"),
         cosine(col("query_vec"), col("cvec")).as("cos"))
-    val probes = topKOperator(probeScored, nProbe, "__cand")
+    val probes = topKOperator(probeScored, 4, "__cand")
       .select(col("query_id"), col("query_vec"), col("__cand").as("cell"))
     val scored = assigned
       .join(probes, Seq("cell"))
-      .filter(col("query_id") =!= col(idCol))
-      .select(col("query_id"), col(idCol).as("neighbor_id"),
-        round(cosine(col("query_vec"), col(vecCol)), 6).as("cos"))
+      .filter(col("query_id") =!= col("vec_id"))
+      .select(col("query_id"), col("vec_id").as("neighbor_id"),
+        round(cosine(col("query_vec"), col("embedding")), 6).as("cos"))
     val neighbors = rankTopK(scored, k, "cos")
     val labels = trainVecs
-      .select(col(idCol).as("neighbor_id"), col(labelCol).as("__cand"))
+      .select(col("vec_id").as("neighbor_id"), col("label").as("__cand"))
     val votes = neighbors.join(labels, "neighbor_id")
       .groupBy(col("query_id"), col("__cand"))
       .agg(count(lit(1)).as("votes"))
     topKOperator(votes, 1, "__cand", sortCol = "votes")
-      .select(col("query_id").as(idCol), col("__cand").as("pred_label"),
+      .select(col("query_id").as("vec_id"), col("__cand").as("pred_label"),
         col("votes"))
   }
 }

@@ -167,14 +167,13 @@ object TextAnalysis {
     * `bpeMergeTokensWith(_, table, byteLevel = true)`.
     */
   def learnBpeMerges(docs: DataFrame, nMerges: Int,
-                     textCol: String = "text",
                      minPairCount: Long = 2L,
                      byteLevel: Boolean = false): Seq[(String, String, Long)] = {
     require(nMerges >= 1 && nMerges <= 4096,
       s"nMerges must be in [1, 4096], got $nMerges")
     require(minPairCount >= 1, s"minPairCount must be >= 1, got $minPairCount")
-    val vocabPt = docs.filter(col(textCol).isNotNull)
-      .select(explode(regexp_extract_all(col(textCol), lit(BpePattern),
+    val vocabPt = docs.filter(col("text").isNotNull)
+      .select(explode(regexp_extract_all(col("text"), lit(BpePattern),
         lit(0))).as("pt"))
       .groupBy("pt").agg(count(lit(1)).as("w"))
       .pin()
@@ -234,15 +233,12 @@ object TextAnalysis {
     * `bpeMergeTokensWith(_, table, byteLevel = true)`.
     */
   def learnWordPieceMerges(docs: DataFrame, nMerges: Int,
-                           textCol: String = "text",
-                           minPairCount: Long = 2L,
                            byteLevel: Boolean = false): Seq[(String, String, Long, Long)] = {
     require(nMerges >= 1 && nMerges <= 4096,
       s"nMerges must be in [1, 4096], got $nMerges")
-    require(minPairCount >= 1, s"minPairCount must be >= 1, got $minPairCount")
     val Scale = 1000000000000L
-    val vocabPt = docs.filter(col(textCol).isNotNull)
-      .select(explode(regexp_extract_all(col(textCol), lit(BpePattern),
+    val vocabPt = docs.filter(col("text").isNotNull)
+      .select(explode(regexp_extract_all(col("text"), lit(BpePattern),
         lit(0))).as("pt"))
       .groupBy("pt").agg(count(lit(1)).as("w"))
       .pin()
@@ -278,7 +274,7 @@ object TextAnalysis {
         .withColumn("s", expr(s"(n * ${Scale}L) div (ca * cb)"))
         .orderBy(col("s").desc, col("n").desc, col("lhs"), col("rhs"))
         .limit(1).select("lhs", "rhs", "n", "s").collect()
-      if (top.isEmpty || top(0).getLong(2) < minPairCount) go = false
+      if (top.isEmpty || top(0).getLong(2) < 2L) go = false
       else learned += ((top(0).getString(0), top(0).getString(1),
         top(0).getLong(2), top(0).getLong(3)))
     }
@@ -303,7 +299,7 @@ object TextAnalysis {
     *     `maxPieceLen`-code-point substring is counted (weighted), and
     *     the top `seedSize` by (count DESC, piece ASC) — plus ALL
     *     single characters, for coverage — form the seed inventory.
-    *  2. HARD EM (`emRounds`): piece costs are integer surprisal bits
+    *  2. HARD EM (2 rounds): piece costs are integer surprisal bits
     *     under add-one smoothing (`bitlen(total + |V|) − bitlen(cnt +
     *     1)` — the NB-classifier bit law); the E-step Viterbi-segments
     *     the block vocabulary under those costs
@@ -335,8 +331,6 @@ object TextAnalysis {
     */
   def learnUnigramLm(docs: DataFrame, vocabSize: Int = 200,
                      seedSize: Int = 400, maxPieceLen: Int = 4,
-                     emRounds: Int = 2,
-                     textCol: String = "text",
                      byteLevel: Boolean = false): Seq[(String, Long, Long)] = {
     require(vocabSize >= 1 && vocabSize <= 8192,
       s"vocabSize must be in [1, 8192], got $vocabSize")
@@ -344,13 +338,11 @@ object TextAnalysis {
       s"seedSize ($seedSize) must be >= vocabSize ($vocabSize)")
     require(maxPieceLen >= 1 && maxPieceLen <= UnigramBlockLen,
       s"maxPieceLen must be in [1, $UnigramBlockLen], got $maxPieceLen")
-    require(emRounds >= 1 && emRounds <= 4,
-      s"emRounds must be in [1, 4], got $emRounds")
     def bitlen(x: Long): Long = 64L - java.lang.Long.numberOfLeadingZeros(x)
     def cpLen(s: String): Int = s.codePointCount(0, s.length)
 
-    val rawPts = docs.filter(col(textCol).isNotNull)
-      .select(explode(regexp_extract_all(col(textCol), lit(BpePattern),
+    val rawPts = docs.filter(col("text").isNotNull)
+      .select(explode(regexp_extract_all(col("text"), lit(BpePattern),
         lit(0))).as("pt"))
     val vocabPt = (if (byteLevel)
         rawPts.select(byteLevelEncode(col("pt")).as("pt"))
@@ -386,7 +378,7 @@ object TextAnalysis {
       m.toSeq
     }
 
-    (1 to emRounds).foreach { r =>
+    (1 to 2).foreach { r =>
       val total = inv.map(_._2).sum + inv.size
       val bits = inv.map { case (p, c) =>
         p -> (bitlen(total) - bitlen(c + 1)) }
@@ -399,7 +391,7 @@ object TextAnalysis {
         .groupBy("piece").agg(sum("w").as("cnt")).collect()
         .map(r => r.getString(0) -> r.getLong(1)).toMap
       inv = inv.map { case (p, _) => p -> counts.getOrElse(p, 0L) }
-      if (r == 1 && emRounds > 1) {
+      if (r == 1) {
         val bmap = bits.toMap
         val (chars, multi) = inv.partition { case (p, _) => cpLen(p) == 1 }
         val keepN = math.max(0, vocabSize - chars.size)
@@ -459,20 +451,17 @@ object TextAnalysis {
     * trainer's cap), one partial-agg groupBy — the corpus never
     * shuffles by piece.
     */
-  def tokenizerCoverage(docs: DataFrame, inv: Seq[(String, Long, Long)],
-                        domainCol: String = "source",
-                        textCol: String = "text",
-                        maxPieceLen: Int = 4): DataFrame = {
+  def tokenizerCoverage(docs: DataFrame, inv: Seq[(String, Long, Long)]): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
     val vocab = inv.map(_._1).distinct.toDF("piece")
       .withColumn("__tc_known", lit(1))
-    docs.filter(col(textCol).isNotNull && col(domainCol).isNotNull)
-      .select(col(domainCol),
-        explode(unigramTokensWith(col(textCol), inv, maxPieceLen))
+    docs.filter(col("text").isNotNull && col("source").isNotNull)
+      .select(col("source"),
+        explode(unigramTokensWith(col("text"), inv, 4))
           .as("piece"))
       .join(broadcast(vocab), Seq("piece"), "left")
-      .groupBy(col(domainCol))
+      .groupBy(col("source"))
       .agg(count(lit(1)).as("n_pieces"),
         sum(when(col("__tc_known").isNull, 1L).otherwise(0L)).as("n_oov"))
       .withColumn("oov_ppm", expr("n_oov * 1000000 div n_pieces"))
@@ -656,10 +645,9 @@ object TextAnalysis {
     * spec-pinned there, so emoji and supplementary-CJK text cannot
     * skew `dominant_share_x100` against the oracle.
     */
-  def scriptProfile(docs: DataFrame, idCol: String = "doc_id",
-                    textCol: String = "text"): DataFrame = {
-    val s = coalesce(col(textCol), lit(""))
-    val counted = docs.select(Seq(col(idCol),
+  def scriptProfile(docs: DataFrame): DataFrame = {
+    val s = coalesce(col("text"), lit(""))
+    val counted = docs.select(Seq(col("doc_id"),
       codePointLen(s).as("n_chars")) ++
       ScriptRanges.map { case (name, range) =>
         (length(s) - length(regexp_replace(s, s"[$range]", "")))
@@ -672,7 +660,7 @@ object TextAnalysis {
     }
     counted
       .withColumn("__sp_top", least(top: _*))
-      .select(Seq(col(idCol), col("n_chars")) ++
+      .select(Seq(col("doc_id"), col("n_chars")) ++
         ScriptRanges.map { case (name, _) => col(s"n_$name") } ++ Seq(
         when(col("__sp_top.nc") === 0L, lit("none"))
           .otherwise(col("__sp_top.nm")).as("dominant_script"),
@@ -721,12 +709,11 @@ object TextAnalysis {
     * — its gram universe is empty); a pure codegen'd map over the scan,
     * zero shuffles.
     */
-  def qualityReport(docs: DataFrame, idCol: String = "doc_id",
-                    textCol: String = "text"): DataFrame = {
-    val text = col(textCol)
+  def qualityReport(docs: DataFrame): DataFrame = {
+    val text = col("text")
     val nTok = tokenCount(text)
     val nG = coalesce(gramCount(text), lit(0L))
-    docs.select(col(idCol),
+    docs.select(col("doc_id"),
       when(nTok.between(10, 1000), 1L).otherwise(0L).as("len_ok"),
       when(stopwordCount(text) > 0, 1L).otherwise(0L).as("stopword_ok"),
       when(totalTokenChars(text) >= nTok * 3 &&
@@ -824,10 +811,9 @@ object TextAnalysis {
     * and was the most expensive query in the bench; a per-document
     * statistic never needs the corpus shuffled.
     */
-  def repetitionStats(docs: DataFrame, idCol: String = "doc_id",
-                      textCol: String = "text"): DataFrame = {
-    val t = col(textCol)
-    docs.select(col(idCol),
+  def repetitionStats(docs: DataFrame): DataFrame = {
+    val t = col("text")
+    docs.select(col("doc_id"),
       coalesce(gramCount(t), lit(0L)).as("n_2grams"),
       coalesce(maxGramCount(t), lit(0L)).as("max_2gram_count"),
       coalesce(dupGramCount(t), lit(0L)).as("n_dup_2grams"))
@@ -855,8 +841,7 @@ object TextAnalysis {
     * one word-boundary scan) + codegen'd integer arithmetic; ZERO
     * exchanges, the [[repetitionStats]] plan-guard posture.
     */
-  def gopherStats(docs: DataFrame, idCol: String = "doc_id",
-                  textCol: String = "text",
+  def gopherStats(docs: DataFrame,
                   thresholdsX100: Seq[Int] = GopherThresholdsX100): DataFrame = {
     val names = GopherFields
     require(thresholdsX100.length == names.length,
@@ -864,9 +849,9 @@ object TextAnalysis {
         s"got ${thresholdsX100.length}")
     val g = org.apache.spark.sql.graft.Bridge.column(
       graft.functions.GopherRepetition(
-        org.apache.spark.sql.graft.Bridge.expression(col(textCol))))
-    val nChars = coalesce(length(col(textCol)).cast("long"), lit(0L))
-    val withRaw = docs.select(col(idCol) +: nChars.as("n_chars") +:
+        org.apache.spark.sql.graft.Bridge.expression(col("text"))))
+    val nChars = coalesce(length(col("text")).cast("long"), lit(0L))
+    val withRaw = docs.select(col("doc_id") +: nChars.as("n_chars") +:
       names.map(f => coalesce(g.getField(f), lit(0L)).as(s"__go_$f")): _*)
     val fracs = names.map(f =>
       when(col("n_chars") > 0, expr(s"(__go_$f * 100) div n_chars"))
@@ -874,7 +859,7 @@ object TextAnalysis {
     val passed = names.zip(thresholdsX100).map { case (f, thr) =>
       col(s"${f}_frac_x100") <= thr
     }.reduce(_ && _)
-    withRaw.select(col(idCol) +: col("n_chars") +: fracs: _*)
+    withRaw.select(col("doc_id") +: col("n_chars") +: fracs: _*)
       .withColumn("gopher_pass", when(passed, lit(1L)).otherwise(lit(0L)))
   }
 
@@ -928,8 +913,7 @@ object TextAnalysis {
     * the CDC-chunker lesson: an array expression referenced by several
     * HOFs re-evaluates per reference when inlined.
     */
-  def gopherLineStats(docs: DataFrame, idCol: String = "doc_id",
-                      textCol: String = "text",
+  def gopherLineStats(docs: DataFrame,
                       thresholdsX100: Seq[Int] = GopherLineThresholdsX100)
       : DataFrame = {
     require(thresholdsX100.length == 4,
@@ -943,8 +927,8 @@ object TextAnalysis {
       coalesce(aggregate(transform(arr, u => length(u).cast("long")),
         lit(0L), (acc, x) => acc + x), lit(0L))
     val staged = docs
-      .withColumn("__gl_ls", split(col(textCol), "\n"))
-      .withColumn("__gl_ps", split(col(textCol), "\n\n"))
+      .withColumn("__gl_ls", split(col("text"), "\n"))
+      .withColumn("__gl_ps", split(col("text"), "\n\n"))
       .withColumn("__gl_ln", coalesce(size(col("__gl_ls")), lit(0))
         .cast("long"))
       .withColumn("__gl_ld",
@@ -957,7 +941,7 @@ object TextAnalysis {
         coalesce(size(array_distinct(col("__gl_ps"))), lit(0)).cast("long"))
       .withColumn("__gl_pc", charSum(col("__gl_ps")))
       .withColumn("__gl_pcd", charSum(array_distinct(col("__gl_ps"))))
-    val out = staged.select(col(idCol),
+    val out = staged.select(col("doc_id"),
       col("__gl_ln").as("n_lines"), col("__gl_pn").as("n_paras"),
       when(col("__gl_ln") > 0,
         expr("((__gl_ln - __gl_ld) * 100) div __gl_ln"))
@@ -985,8 +969,8 @@ object TextAnalysis {
       graft.functions.GopherRepetition.DupNs.map(n => s"dup$n")
 
   /** The full per-document stats projection. */
-  def stats(docs: DataFrame, textCol: String = "text"): DataFrame = {
-    val t = col(textCol)
+  def stats(docs: DataFrame): DataFrame = {
+    val t = col("text")
     docs.select(col("doc_id"),
       charLen(t).as("n_chars"),
       tokenCount(t).cast("long").as("n_tokens"),
@@ -1059,11 +1043,10 @@ object TextAnalysis {
     * gated laws are ratio ORDERING (repetitive ≪ diverse) and
     * run-to-run determinism.
     */
-  def compressionStats(docs: DataFrame, idCol: String = "doc_id",
-                       textCol: String = "text"): DataFrame = {
-    val nBytes = octet_length(col(textCol)).cast("long")
-    docs.select(col(idCol), coalesce(nBytes, lit(0L)).as("n_bytes"),
-        coalesce(graft.functions.deflateLen(col(textCol)), lit(0L))
+  def compressionStats(docs: DataFrame): DataFrame = {
+    val nBytes = octet_length(col("text")).cast("long")
+    docs.select(col("doc_id"), coalesce(nBytes, lit(0L)).as("n_bytes"),
+        coalesce(graft.functions.deflateLen(col("text")), lit(0L))
           .as("deflate_len"))
       .withColumn("ratio_x1000",
         when(col("n_bytes") > 0,
@@ -1074,13 +1057,12 @@ object TextAnalysis {
     * domain (total deflate bytes ×1000 div total bytes) — the one-row-
     * per-domain readout a curation pass thresholds on.
     */
-  def compressionReport(docs: DataFrame, domainCol: String = "source",
-                        textCol: String = "text"): DataFrame =
-    docs.filter(col(textCol).isNotNull && col(domainCol).isNotNull)
-      .select(col(domainCol),
-        octet_length(col(textCol)).cast("long").as("__cr_b"),
-        graft.functions.deflateLen(col(textCol)).as("__cr_d"))
-      .groupBy(col(domainCol))
+  def compressionReport(docs: DataFrame): DataFrame =
+    docs.filter(col("text").isNotNull && col("source").isNotNull)
+      .select(col("source"),
+        octet_length(col("text")).cast("long").as("__cr_b"),
+        graft.functions.deflateLen(col("text")).as("__cr_d"))
+      .groupBy(col("source"))
       .agg(count(lit(1)).as("n_docs"), sum("__cr_b").as("n_bytes"),
         sum("__cr_d").as("deflate_bytes"))
       .withColumn("ratio_x1000",
@@ -1131,12 +1113,11 @@ object TextAnalysis {
     *
     * Output: (domain, n_docs, n_email, n_ip, n_num, docs_with_pii).
     */
-  def piiReport(docs: DataFrame, domainCol: String = "source",
-                textCol: String = "text"): DataFrame = {
+  def piiReport(docs: DataFrame): DataFrame = {
     val names = Seq("email", "ip", "num")
     val staged = PiiPatterns.zip(names).zipWithIndex.foldLeft(
-      docs.filter(col(textCol).isNotNull && col(domainCol).isNotNull)
-        .withColumn("__pii_t0", col(textCol))) {
+      docs.filter(col("text").isNotNull && col("source").isNotNull)
+        .withColumn("__pii_t0", col("text"))) {
       case (df, (((pat, rep), nm), i)) =>
         df.withColumn(s"__pii_c_$nm",
             regexp_count(col(s"__pii_t$i"), lit(pat)).cast("long"))
@@ -1144,7 +1125,7 @@ object TextAnalysis {
             regexp_replace(col(s"__pii_t$i"), pat, rep))
     }
     val anyPii = names.map(nm => col(s"__pii_c_$nm")).reduce(_ + _) > 0
-    staged.groupBy(col(domainCol))
+    staged.groupBy(col("source"))
       .agg(count(lit(1)).as("n_docs"),
         sum("__pii_c_email").as("n_email"),
         sum("__pii_c_ip").as("n_ip"),
@@ -1226,18 +1207,16 @@ object TextAnalysis {
     * partial-agg shuffle. The corpus is read once, map-only until the
     * final aggregation.
     */
-  def lexiconHits(docs: DataFrame, lexicon: DataFrame,
-                  idCol: String = "doc_id",
-                  textCol: String = "text"): DataFrame = {
-    val toks = docs.filter(col(textCol).isNotNull)
-      .select(col(idCol),
-        explode(split(normalizeText(col(textCol)), " ")).as("__lx_w"))
+  def lexiconHits(docs: DataFrame, lexicon: DataFrame): DataFrame = {
+    val toks = docs.filter(col("text").isNotNull)
+      .select(col("doc_id"),
+        explode(split(normalizeText(col("text")), " ")).as("__lx_w"))
       .filter(col("__lx_w") =!= "")
     toks.join(
         broadcast(lexicon.select(col("term").as("__lx_w"),
           col("category"), col("weight_x100"))),
         "__lx_w")
-      .groupBy(col(idCol), col("category"))
+      .groupBy(col("doc_id"), col("category"))
       .agg(count(lit(1)).as("hits"),
         sum(col("weight_x100").cast("long")).as("score_x100"))
   }
@@ -1257,24 +1236,22 @@ object TextAnalysis {
     * borderline vs saturated).
     */
   def lexiconScreen(docs: DataFrame, lexicon: DataFrame,
-                    maxScoreX100PerKtok: Long,
-                    idCol: String = "doc_id",
-                    textCol: String = "text"): DataFrame = {
+                    maxScoreX100PerKtok: Long): DataFrame = {
     require(maxScoreX100PerKtok >= 0,
       s"maxScoreX100PerKtok must be >= 0, got $maxScoreX100PerKtok")
-    val norm = normalizeText(col(textCol))
-    val nTok = docs.filter(col(textCol).isNotNull)
-      .select(col(idCol),
+    val norm = normalizeText(col("text"))
+    val nTok = docs.filter(col("text").isNotNull)
+      .select(col("doc_id"),
         when(norm === "", lit(0L))
           .otherwise(size(split(norm, " ")).cast("long")).as("n_tokens"))
-    val flagged = lexiconHits(docs, lexicon, idCol, textCol)
-      .join(nTok, idCol)
+    val flagged = lexiconHits(docs, lexicon)
+      .join(nTok, "doc_id")
       .filter(col("score_x100") * 1000L >
         col("n_tokens") * maxScoreX100PerKtok)
-      .groupBy(col(idCol))
+      .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_flagged"))
-    nTok.join(flagged, Seq(idCol), "left")
-      .select(col(idCol), col("n_tokens"),
+    nTok.join(flagged, Seq("doc_id"), "left")
+      .select(col("doc_id"), col("n_tokens"),
         coalesce(col("n_flagged"), lit(0L)).as("n_flagged"),
         (coalesce(col("n_flagged"), lit(0L)) === 0L).as("screen_pass"))
   }
@@ -1313,8 +1290,7 @@ object TextAnalysis {
     * enter the final exchange, never a full window sort of every
     * (doc, term) pair.
     */
-  def keywords(docs: DataFrame, k: Int = 3, idCol: String = "doc_id",
-               textCol: String = "text"): DataFrame = {
+  def keywords(docs: DataFrame, k: Int = 3): DataFrame = {
     import org.apache.spark.sql.graft.Bridge
     import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
     import org.apache.spark.sql.catalyst.expressions.{Ascending, Descending, SortOrder}
@@ -1327,17 +1303,17 @@ object TextAnalysis {
     // row blow-up. Pinning pays only for BOUNDED or post-aggregation
     // relations (searchDocs' query-cut `matched`, nbParts' vocab-sized
     // `wc`, bigramSurprisal's aggregated `bp`).
-    val tf = tfRelation(docs, idCol, textCol)
+    val tf = tfRelation(docs, "doc_id", "text")
     val dfreq = tf.groupBy(col("word")).agg(count(lit(1)).as("df"))
     val scored = tf.join(dfreq, "word")
       .withColumn("score", expr("(tf * 1000000) div df"))
-      .select(col(idCol), col("word"), col("tf"), col("df"), col("score"))
+      .select(col("doc_id"), col("word"), col("tf"), col("df"), col("score"))
     val top = graft.plans.TopKPerKey(
-      Seq(UnresolvedAttribute(idCol)),
+      Seq(UnresolvedAttribute("doc_id")),
       Seq(SortOrder(UnresolvedAttribute("score"), Descending),
         SortOrder(UnresolvedAttribute("word"), Ascending)),
       k, Bridge.logicalPlan(scored))
-    val w = Window.partitionBy(col(idCol))
+    val w = Window.partitionBy(col("doc_id"))
       .orderBy(col("score").desc, col("word"))
     Bridge.ofRows(docs.sparkSession, top)
       .withColumn("rank", row_number().over(w).cast("long"))
@@ -1361,24 +1337,23 @@ object TextAnalysis {
     * exchange. Two corpus-derived shuffles total, both vocab- or
     * doc-bounded.
     */
-  def unigramSurprisal(docs: DataFrame, idCol: String = "doc_id",
-                       textCol: String = "text"): DataFrame = {
+  def unigramSurprisal(docs: DataFrame): DataFrame = {
     // tf deliberately NOT pinned (the keywords rationale: a cheap
     // codegen'd explode pipelined into two consumers beats
     // materializing the corpus-sized intermediate — measured 0.75→0.94 s
     // at sf0.1 with the pin)
-    val tf = tfRelation(docs, idCol, textCol)
+    val tf = tfRelation(docs, "doc_id", "text")
     val counts = tf.groupBy("word").agg(sum("tf").as("cnt"))
     val total = counts.agg(sum("cnt").as("total"))
     val agg = tf.join(counts, "word")
       .crossJoin(broadcast(total))
       .withColumn("bits",
         (length(bin(col("total"))) - length(bin(col("cnt")))).cast("long"))
-      .groupBy(col(idCol))
+      .groupBy(col("doc_id"))
       .agg(sum(col("tf") * col("bits")).as("surprisal"),
         sum(col("tf")).as("n_tokens"))
-    docs.select(col(idCol)).join(agg, Seq(idCol), "left_outer")
-      .select(col(idCol),
+    docs.select(col("doc_id")).join(agg, Seq("doc_id"), "left_outer")
+      .select(col("doc_id"),
         coalesce(col("surprisal"), lit(0L)).as("surprisal"),
         coalesce(col("n_tokens"), lit(0L)).as("n_tokens"),
         when(coalesce(col("n_tokens"), lit(0L)) > 0,
@@ -1411,15 +1386,11 @@ object TextAnalysis {
     * doc-keyed scoring sum — every exchange vocab- or doc-bounded,
     * never corpus-quadratic.
     */
-  def bigramSurprisal(docs: DataFrame, idCol: String = "doc_id",
-                      textCol: String = "text"): DataFrame = {
-    // input contract: a backticked column name is rejected up front
-    require(!textCol.contains("`"),
-      s"bigramSurprisal: textCol must not contain a backtick, got '$textCol'")
+  def bigramSurprisal(docs: DataFrame): DataFrame = {
     // per-doc bigram occurrence counts; single-token docs yield none
-    val bp = docs.filter(col(textCol).isNotNull)
-      .select(col(idCol), explode(ngramArray(textCol, 2)).as("bigram"))
-      .groupBy(col(idCol), col("bigram"))
+    val bp = docs.filter(col("text").isNotNull)
+      .select(col("doc_id"), explode(ngramArray("text", 2)).as("bigram"))
+      .groupBy(col("doc_id"), col("bigram"))
       .agg(count(lit(1)).as("tf"))
       // pinned: the corpus-wide counts AND the scoring join both read
       // bp — without the pin the scan + bigram explode runs twice (the
@@ -1430,7 +1401,7 @@ object TextAnalysis {
     val c2 = bp.groupBy("bigram").agg(sum("tf").as("cnt"))
       .withColumn("w1", substring_index(col("bigram"), " ", 1))
     val c1 = c2.groupBy("w1").agg(sum("cnt").as("ctx"))
-    val vocab = tfRelation(docs, idCol, textCol)
+    val vocab = tfRelation(docs, "doc_id", "text")
       .agg(count_distinct(col("word")).as("v"))
     val agg = bp
       .join(c2.select("bigram", "cnt", "w1"), "bigram")
@@ -1439,11 +1410,11 @@ object TextAnalysis {
       .withColumn("bits",
         (length(bin(col("ctx") + col("v"))) -
           length(bin(col("cnt") + 1))).cast("long"))
-      .groupBy(col(idCol))
+      .groupBy(col("doc_id"))
       .agg(sum(col("tf") * col("bits")).as("surprisal"),
         sum(col("tf")).as("n_bigrams"))
-    docs.select(col(idCol)).join(agg, Seq(idCol), "left_outer")
-      .select(col(idCol),
+    docs.select(col("doc_id")).join(agg, Seq("doc_id"), "left_outer")
+      .select(col("doc_id"),
         coalesce(col("surprisal"), lit(0L)).as("surprisal"),
         coalesce(col("n_bigrams"), lit(0L)).as("n_bigrams"),
         when(coalesce(col("n_bigrams"), lit(0L)) > 0,
@@ -1466,20 +1437,17 @@ object TextAnalysis {
     * cut beside the repetition gates). Pure row-local array ops, zero
     * shuffles; null text scores zeros.
     */
-  def lexicalDiversity(docs: DataFrame, idCol: String = "doc_id",
-                       textCol: String = "text"): DataFrame = {
-    require(!textCol.contains("`"),
-      s"lexicalDiversity: textCol must not contain a backtick, got '$textCol'")
-    val ws = tokens(col(textCol))
+  def lexicalDiversity(docs: DataFrame): DataFrame = {
+    val ws = tokens(col("text"))
     val nTok = size(ws).cast("long")
     val nTypes = size(array_distinct(ws)).cast("long")
-    docs.select(col(idCol),
-      when(col(textCol).isNull, 0L).otherwise(nTok).as("n_tokens"),
-      when(col(textCol).isNull, 0L).otherwise(nTypes).as("n_types"),
-      when(col(textCol).isNull || nTok === 0L, 0L)
+    docs.select(col("doc_id"),
+      when(col("text").isNull, 0L).otherwise(nTok).as("n_tokens"),
+      when(col("text").isNull, 0L).otherwise(nTypes).as("n_types"),
+      when(col("text").isNull || nTok === 0L, 0L)
         .otherwise(expr(
-          s"size(array_distinct(split(`$textCol`, ' '))) * 100L" +
-            s" div size(split(`$textCol`, ' '))"))
+          s"size(array_distinct(split(`text`, ' '))) * 100L" +
+            s" div size(split(`text`, ' '))"))
         .as("ttr_x100"))
   }
 
@@ -1489,19 +1457,18 @@ object TextAnalysis {
     * boilerplate-heavy domain has few hapaxes, an OCR-noise domain has
     * too many). One (domain, word) partial-agg shuffle, vocab-bounded.
     */
-  def domainLexicalProfile(docs: DataFrame, domainCol: String = "source",
-                           textCol: String = "text"): DataFrame =
-    docs.filter(col(textCol).isNotNull && col(domainCol).isNotNull)
-      .select(col(domainCol), explode(graft.functions.wordTfs(col(textCol))).as("wt"))
-      .groupBy(col(domainCol), col("wt.word").as("word"))
+  def domainLexicalProfile(docs: DataFrame): DataFrame =
+    docs.filter(col("text").isNotNull && col("source").isNotNull)
+      .select(col("source"), explode(graft.functions.wordTfs(col("text"))).as("wt"))
+      .groupBy(col("source"), col("wt.word").as("word"))
       .agg(sum("wt.tf").as("cnt"))
-      .groupBy(domainCol)
+      .groupBy("source")
       .agg(count(lit(1)).as("vocab_size"),
         sum(when(col("cnt") === 1L, 1L).otherwise(0L)).as("hapax_count"))
       .withColumn("hapax_x100", expr("hapax_count * 100 div vocab_size"))
 
   /** Corpus-driven STOPWORD discovery: words whose document frequency
-    * reaches `minDfX100`% of the corpus (exact df, integer
+    * reaches 40% of the corpus (exact df, integer
     * cross-multiplied — df·100 ≥ threshold·n_docs). The standard way a
     * stopword list is built for a language/domain the curated lists
     * don't cover; feed the output to [[stopwordCount]]-style signals
@@ -1512,18 +1479,15 @@ object TextAnalysis {
     * one vocab-bounded (word, df) shuffle; the corpus count is a 1-row
     * broadcast attachment.
     */
-  def discoverStopwords(docs: DataFrame, minDfX100: Long = 40L,
-                        textCol: String = "text"): DataFrame = {
-    require(minDfX100 >= 1 && minDfX100 <= 100,
-      s"minDfX100 must be in [1, 100], got $minDfX100")
-    val n = docs.filter(col(textCol).isNotNull)
+  def discoverStopwords(docs: DataFrame): DataFrame = {
+    val n = docs.filter(col("text").isNotNull)
       .agg(count(lit(1)).as("__sw_n"))
-    docs.filter(col(textCol).isNotNull)
-      .select(explode(graft.functions.wordTfs(col(textCol))).as("wt"))
+    docs.filter(col("text").isNotNull)
+      .select(explode(graft.functions.wordTfs(col("text"))).as("wt"))
       .groupBy(col("wt.word").as("word"))
       .agg(count(lit(1)).as("df"))
       .crossJoin(broadcast(n))
-      .filter(col("df") * 100 >= lit(minDfX100) * col("__sw_n"))
+      .filter(col("df") * 100 >= lit(40L) * col("__sw_n"))
       .select(col("word"), col("df"),
         expr("df * 100 div __sw_n").as("df_x100"))
   }
@@ -1541,25 +1505,21 @@ object TextAnalysis {
     * (partition, domain) into the final exchange — no per-domain
     * vocabulary sort.
     */
-  def domainTopNgrams(docs: DataFrame, k: Int = 5, n: Int = 2,
-                      domainCol: String = "source",
-                      textCol: String = "text"): DataFrame = {
-    require(k > 0, s"k must be positive, got $k")
-    require(n > 0, s"n must be positive, got $n")
+  def domainTopNgrams(docs: DataFrame): DataFrame = {
     import org.apache.spark.sql.graft.Bridge
     import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
     import org.apache.spark.sql.catalyst.expressions.{Ascending, Descending, SortOrder}
     import org.apache.spark.sql.expressions.Window
     val counts = docs
-      .filter(col(textCol).isNotNull && col(domainCol).isNotNull)
-      .select(col(domainCol), explode(ngramArray(textCol, n)).as("gram"))
-      .groupBy(domainCol, "gram").agg(count(lit(1)).as("cnt"))
+      .filter(col("text").isNotNull && col("source").isNotNull)
+      .select(col("source"), explode(ngramArray("text", 2)).as("gram"))
+      .groupBy("source", "gram").agg(count(lit(1)).as("cnt"))
     val top = graft.plans.TopKPerKey(
-      Seq(UnresolvedAttribute(domainCol)),
+      Seq(UnresolvedAttribute("source")),
       Seq(SortOrder(UnresolvedAttribute("cnt"), Descending),
         SortOrder(UnresolvedAttribute("gram"), Ascending)),
-      k, Bridge.logicalPlan(counts))
-    val w = Window.partitionBy(col(domainCol))
+      5, Bridge.logicalPlan(counts))
+    val w = Window.partitionBy(col("source"))
       .orderBy(col("cnt").desc, col("gram"))
     Bridge.ofRows(docs.sparkSession, top)
       .withColumn("rank", row_number().over(w).cast("long"))
@@ -1623,24 +1583,23 @@ object TextAnalysis {
     * replays each). Empty text: zero lines of zero length — fails the
     * alpha floor, as an empty file should. Null text excluded.
     */
-  def codeStats(docs: DataFrame, idCol: String = "doc_id",
-                textCol: String = "text"): DataFrame = {
-    val lines = split(col(textCol), "\n")
+  def codeStats(docs: DataFrame): DataFrame = {
+    val lines = split(col("text"), "\n")
     val nLines = size(lines).cast("long")
     val lens = transform(lines, l => length(l).cast("long"))
     val sumLen = aggregate(lens, lit(0L), (a, v) => a + v)
     val maxLen = coalesce(array_max(lens), lit(0L))
-    val nAlpha = length(regexp_replace(col(textCol), "[^A-Za-z]", ""))
+    val nAlpha = length(regexp_replace(col("text"), "[^A-Za-z]", ""))
       .cast("long")
-    val nChars = length(col(textCol)).cast("long")
+    val nChars = length(col("text")).cast("long")
     val nComment = size(filter(lines,
       l => ltrim(l).rlike("^(#|//|--|/\\*|\\*)"))).cast("long")
-    docs.filter(col(textCol).isNotNull)
-      .select(col(idCol), nLines.as("n_lines"), maxLen.as("max_line_len"),
+    docs.filter(col("text").isNotNull)
+      .select(col("doc_id"), nLines.as("n_lines"), maxLen.as("max_line_len"),
         sumLen.as("__cs_sum"),
         nAlpha.as("__cs_alpha"), nChars.as("__cs_chars"),
         nComment.as("__cs_comment"))
-      .select(col(idCol), col("n_lines"), col("max_line_len"),
+      .select(col("doc_id"), col("n_lines"), col("max_line_len"),
         expr("(__cs_sum * 100) div n_lines").as("avg_line_len_x100"),
         when(col("__cs_chars") > 0L,
           expr("(__cs_alpha * 1000) div __cs_chars")).otherwise(lit(0L))
@@ -1662,11 +1621,11 @@ object TextAnalysis {
     * ([[graft.functions.C4Stats]]), zero shuffles; null text coalesces
     * to the empty page (pass = 0).
     */
-  def c4Stats(docs: DataFrame, idCol: String = "doc_id",
+  def c4Stats(docs: DataFrame,
               textCol: String = "text"): DataFrame =
-    docs.select(col(idCol),
+    docs.select(col("doc_id"),
         graft.functions.c4Stats(col(textCol)).as("c4"))
-      .select(col(idCol),
+      .select(col("doc_id"),
         coalesce(col("c4.clean"), lit("")).as("clean_text"),
         coalesce(col("c4.n_lines"), lit(0L)).as("n_lines"),
         coalesce(col("c4.n_kept"), lit(0L)).as("n_kept"),
@@ -1683,11 +1642,11 @@ object TextAnalysis {
     * replaced by the line-filtered `clean_text` — the shape a curation
     * pipeline feeds downstream. Same zero-shuffle scan as [[c4Stats]].
     */
-  def c4Clean(docs: DataFrame, idCol: String = "doc_id",
+  def c4Clean(docs: DataFrame,
               textCol: String = "text"): DataFrame =
-    c4Stats(docs, idCol, textCol)
+    c4Stats(docs, textCol)
       .filter(col("c4_pass") === 1L)
-      .select(col(idCol), col("clean_text"), col("n_kept"),
+      .select(col("doc_id"), col("clean_text"), col("n_kept"),
         col("n_sentences"))
 
   /** PMI collocation mining (Church & Hanks 1990): corpus-wide bigram
@@ -1714,15 +1673,14 @@ object TextAnalysis {
     * broadcasts into the two attach joins; N is a 1-row broadcast
     * cross. No corpus-sized exchange anywhere.
     */
-  def pmiCollocations(docs: DataFrame, idCol: String = "doc_id",
-                      textCol: String = "text",
+  def pmiCollocations(docs: DataFrame,
                       minCount: Long = 5L): DataFrame = {
     // vocab²-bounded, read twice (N scalar + the filtered output) → pinned
-    val pairs = docs.filter(col(textCol).isNotNull)
-      .select(explode(ngramArray(textCol, 2)).as("bigram"))
+    val pairs = docs.filter(col("text").isNotNull)
+      .select(explode(ngramArray("text", 2)).as("bigram"))
       .groupBy("bigram").agg(count(lit(1)).cast("long").as("n_pair"))
       .pin()
-    val uni = tfRelation(docs, idCol, textCol)
+    val uni = tfRelation(docs, "doc_id", "text")
       .groupBy("word").agg(sum("tf").cast("long").as("cnt"))
     val tot = pairs.agg(sum("n_pair").cast("long").as("n_total"))
     pairs.filter(col("n_pair") >= minCount)
@@ -1760,9 +1718,8 @@ object TextAnalysis {
     * relation is pinned because the level rows and the N+V scalar both
     * read it.
     */
-  def trigramModel(docs: DataFrame, idCol: String = "doc_id",
-                   textCol: String = "text"): DataFrame = {
-    val live = docs.filter(col(textCol).isNotNull)
+  def trigramModel(docs: DataFrame): DataFrame = {
+    val live = docs.filter(col("text").isNotNull)
     // ONE corpus pass (round 22, guide §2.3): all three orders are
     // emitted level-tagged from the same tokenization and
     // partial-aggregated through ONE (level, gram) exchange —
@@ -1770,7 +1727,7 @@ object TextAnalysis {
     // second barrier pin for the unigram level. vocab-bounded, read by
     // the level-0 scalar and the model rows → pinned.
     val counts = live
-      .select(explode(leveledGrams(textCol)).as("lg"))
+      .select(explode(leveledGrams("text")).as("lg"))
       .select(col("lg.level").as("level"), col("lg.gram").as("gram"))
       .groupBy("level", "gram").agg(count(lit(1)).cast("long").as("cnt"))
       .pin()
@@ -1821,17 +1778,15 @@ object TextAnalysis {
     * corpus scored under its own model needs only two of the levels
     * and takes [[trigramSurprisal]]'s path.
     */
-  def trigramScoreWith(docs: DataFrame, model: DataFrame,
-                       idCol: String = "doc_id",
-                       textCol: String = "text"): DataFrame = {
+  def trigramScoreWith(docs: DataFrame, model: DataFrame): DataFrame = {
     val m = model.pin()
     def lvl(n: Int, cntAs: String): DataFrame = m
       .filter(col("level") === n).select(col("gram"), col("cnt").as(cntAs))
     val nv = m.filter(col("level") === 0)
       .select(col("cnt").as("nv"))
-    val occ = docs.filter(col(textCol).isNotNull)
-      .select(col(idCol), explode(ngramArray(textCol, 3)).as("g123"))
-      .groupBy(col(idCol), col("g123"))
+    val occ = docs.filter(col("text").isNotNull)
+      .select(col("doc_id"), explode(ngramArray("text", 3)).as("g123"))
+      .groupBy(col("doc_id"), col("g123"))
       .agg(count(lit(1)).cast("long").as("tf"))
       .withColumn("w2", element_at(split(col("g123"), " "), 2))
       .withColumn("w3", element_at(split(col("g123"), " "), 3))
@@ -1858,11 +1813,11 @@ object TextAnalysis {
           .otherwise(L(col("nv") * 25) -
             L((coalesce(col("c1"), lit(0L)) + 1) * 4))
           .cast("long"))
-      .groupBy(col(idCol))
+      .groupBy(col("doc_id"))
       .agg(sum(col("tf") * col("bits")).as("surprisal"),
         sum(col("tf")).as("n_trigrams"))
-    docs.select(col(idCol)).join(agg, Seq(idCol), "left_outer")
-      .select(col(idCol),
+    docs.select(col("doc_id")).join(agg, Seq("doc_id"), "left_outer")
+      .select(col("doc_id"),
         coalesce(col("surprisal"), lit(0L)).as("surprisal"),
         coalesce(col("n_trigrams"), lit(0L)).as("n_trigrams"),
         when(coalesce(col("n_trigrams"), lit(0L)) > 0,
@@ -1889,14 +1844,13 @@ object TextAnalysis {
     * joins the counts twice, on the trigram and on its prefix bigram;
     * one doc-keyed sum. No pin, no N+V scalar, no corpus sort.
     */
-  def trigramSurprisal(docs: DataFrame, idCol: String = "doc_id",
-                       textCol: String = "text"): DataFrame = {
-    val live = docs.filter(col(textCol).isNotNull)
-    val counts = live.select(explode(wordGrams(col(textCol), 2, 3)).as("gram"))
+  def trigramSurprisal(docs: DataFrame): DataFrame = {
+    val live = docs.filter(col("text").isNotNull)
+    val counts = live.select(explode(wordGrams(col("text"), 2, 3)).as("gram"))
       .groupBy("gram").agg(count(lit(1)).as("cnt"))
     val occ = live
-      .select(col(idCol), explode(ngramArray(textCol, 3)).as("g123"))
-      .groupBy(col(idCol), col("g123"))
+      .select(col("doc_id"), explode(ngramArray("text", 3)).as("g123"))
+      .groupBy(col("doc_id"), col("g123"))
       .agg(count(lit(1)).as("tf"))
     val agg = occ
       .join(counts.select(col("gram").as("g123"), col("cnt").as("c3")), "g123")
@@ -1904,11 +1858,11 @@ object TextAnalysis {
       .join(counts.select(col("gram").as("g12"), col("cnt").as("c12")), "g12")
       .withColumn("bits",
         (length(bin(col("c12"))) - length(bin(col("c3")))).cast("long"))
-      .groupBy(col(idCol))
+      .groupBy(col("doc_id"))
       .agg(sum(col("tf") * col("bits")).as("surprisal"),
         sum(col("tf")).as("n_trigrams"))
-    docs.select(col(idCol)).join(agg, Seq(idCol), "left_outer")
-      .select(col(idCol),
+    docs.select(col("doc_id")).join(agg, Seq("doc_id"), "left_outer")
+      .select(col("doc_id"),
         coalesce(col("surprisal"), lit(0L)).as("surprisal"),
         coalesce(col("n_trigrams"), lit(0L)).as("n_trigrams"),
         when(coalesce(col("n_trigrams"), lit(0L)) > 0,
@@ -1946,9 +1900,8 @@ object TextAnalysis {
     * vocab-bounded aggregation over that pin (the shared kn23
     * aggregation deduped by exchange reuse); no corpus-sized exchange.
     */
-  def knTrigramModel(docs: DataFrame, idCol: String = "doc_id",
-                     textCol: String = "text"): DataFrame = {
-    val live = docs.filter(col(textCol).isNotNull)
+  def knTrigramModel(docs: DataFrame): DataFrame = {
+    val live = docs.filter(col("text").isNotNull)
     // ONE corpus pass + ONE pin (round 22, guide §2.3/§2.6): the raw
     // 1/2/3-gram counts arrive in a single level-tagged explode
     // (previously three corpus explodes behind three eager pins), and
@@ -1957,7 +1910,7 @@ object TextAnalysis {
     // exchange (ReuseExchange), so the scorer's model pin materializes
     // the whole model without touching the corpus again.
     val base = live
-      .select(explode(leveledGrams(textCol)).as("lg"))
+      .select(explode(leveledGrams("text")).as("lg"))
       .select(col("lg.level").as("level"), col("lg.gram").as("gram"))
       .groupBy("level", "gram").agg(count(lit(1)).cast("long").as("cnt"))
       .pin()
@@ -2029,17 +1982,15 @@ object TextAnalysis {
     * broadcasts the small ones), a 1-row scalar broadcast, one
     * doc-keyed sum.
     */
-  def knTrigramScoreWith(docs: DataFrame, model: DataFrame,
-                         idCol: String = "doc_id",
-                         textCol: String = "text"): DataFrame = {
+  def knTrigramScoreWith(docs: DataFrame, model: DataFrame): DataFrame = {
     val m = model.pin()
     def lvl(n: Int, key: String, cntAs: String): DataFrame = m
       .filter(col("level") === n)
       .select(col("gram").as(key), col("cnt").as(cntAs))
     val bu = m.filter(col("level") === 0).select(col("cnt").as("bu"))
-    val occ = docs.filter(col(textCol).isNotNull)
-      .select(col(idCol), explode(ngramArray(textCol, 3)).as("g123"))
-      .groupBy(col(idCol), col("g123"))
+    val occ = docs.filter(col("text").isNotNull)
+      .select(col("doc_id"), explode(ngramArray("text", 3)).as("g123"))
+      .groupBy(col("doc_id"), col("g123"))
       .agg(count(lit(1)).cast("long").as("tf"))
       .withColumn("w2", element_at(split(col("g123"), " "), 2))
       .withColumn("w3", element_at(split(col("g123"), " "), 3))
@@ -2069,11 +2020,11 @@ object TextAnalysis {
           .when(seen2, p12 + L(col("ckd2") * 4) - L(col("ck23") * 4 - 3))
           .otherwise(p12 + p2 + floor1)
           .cast("long"))
-      .groupBy(col(idCol))
+      .groupBy(col("doc_id"))
       .agg(sum(col("tf") * col("bits")).as("surprisal"),
         sum(col("tf")).as("n_trigrams"))
-    docs.select(col(idCol)).join(agg, Seq(idCol), "left_outer")
-      .select(col(idCol),
+    docs.select(col("doc_id")).join(agg, Seq("doc_id"), "left_outer")
+      .select(col("doc_id"),
         coalesce(col("surprisal"), lit(0L)).as("surprisal"),
         coalesce(col("n_trigrams"), lit(0L)).as("n_trigrams"),
         when(coalesce(col("n_trigrams"), lit(0L)) > 0,
@@ -2085,10 +2036,8 @@ object TextAnalysis {
     * [[trigramSurprisal]] contract under [[knTrigramModel]] smoothing;
     * a drop-in scorer for [[graft.ext.Curation.perplexityBuckets]].
     */
-  def knTrigramSurprisal(docs: DataFrame, idCol: String = "doc_id",
-                         textCol: String = "text"): DataFrame =
-    knTrigramScoreWith(docs, knTrigramModel(docs, idCol, textCol),
-      idCol, textCol)
+  def knTrigramSurprisal(docs: DataFrame): DataFrame =
+    knTrigramScoreWith(docs, knTrigramModel(docs))
 
   // ── Persisted n-gram LM bundles ────────────────────────────────────
 
@@ -2099,10 +2048,9 @@ object TextAnalysis {
     * applying one under the other's rule would silently mis-score;
     * `kind` makes that impossible). */
   final case class LmBundle(kind: String, model: DataFrame) {
-    def score(docs: DataFrame, idCol: String = "doc_id",
-              textCol: String = "text"): DataFrame = kind match {
-      case "trigram" => trigramScoreWith(docs, model, idCol, textCol)
-      case "kn" => knTrigramScoreWith(docs, model, idCol, textCol)
+    def score(docs: DataFrame): DataFrame = kind match {
+      case "trigram" => trigramScoreWith(docs, model)
+      case "kn" => knTrigramScoreWith(docs, model)
       case other => throw new IllegalStateException(
         s"LmBundle has unknown kind '$other'") // unreachable via load
     }
@@ -2117,14 +2065,13 @@ object TextAnalysis {
     * a persisted-model score plan co-locates with the bucketed read;
     * `_meta(kind)` pins the smoothing rule.
     */
-  def writeLmModel(model: DataFrame, name: String, kind: String,
-                   buckets: Int = 8): Unit = {
+  def writeLmModel(model: DataFrame, name: String, kind: String): Unit = {
     require(kind == "trigram" || kind == "kn",
       s"LM kind must be trigram|kn, got '$kind'")
     require(!model.filter(col("level") === 0).isEmpty,
       "refusing to persist an LM model with no level-0 scalar row — " +
         "the relation is not a trigramModel/knTrigramModel output")
-    graft.core.Layout.writeBucketed(model, s"${name}_model", "gram", buckets)
+    graft.core.Layout.writeBucketed(model, s"${name}_model", "gram", 8)
     val spark = model.sparkSession
     import spark.implicits._
     graft.core.Layout.writeBucketed(Seq(kind).toDF("kind"),
@@ -2153,7 +2100,7 @@ object TextAnalysis {
     * Σ_t tf(t,d)·10⁶ div df(t)` — the same fixed-point arithmetic as
     * [[keywords]], so ranking is bit-reproducible in any engine (ties:
     * score DESC, then doc id — a total order). `queries` is a RELATION
-    * (`queryIdCol`, `termCol`); duplicate (query, term) pairs are
+    * (`query_id`, `term`); duplicate (query, term) pairs are
     * deduplicated so a repeated term cannot double-count. `n_terms` =
     * how many of the query's terms the document matched.
     *
@@ -2167,15 +2114,12 @@ object TextAnalysis {
     * 100 TB a keyword search costs one corpus scan + matched-sized
     * shuffles.
     */
-  def searchDocs(docs: DataFrame, queries: DataFrame, k: Int = 10,
-                 idCol: String = "doc_id", textCol: String = "text",
-                 queryIdCol: String = "query_id",
-                 termCol: String = "term"): DataFrame = {
+  def searchDocs(docs: DataFrame, queries: DataFrame, k: Int = 10): DataFrame = {
     require(k > 0, s"k must be positive, got $k")
     val terms = queries
-      .select(col(queryIdCol).as("query_id"), col(termCol).as("word"))
+      .select(col("query_id").as("query_id"), col("term").as("word"))
       .distinct()
-    val tf = tfRelation(docs, idCol, textCol)
+    val tf = tfRelation(docs, "doc_id", "text")
     // restrict to query terms FIRST: df of a term is identical computed
     // before or after the cut, and everything downstream is then
     // matched-sized, not corpus-sized. Materialized — df AND scoring
@@ -2183,7 +2127,7 @@ object TextAnalysis {
     // corpus scan (plan-audited: two Scan parquet nodes → one)
     val matched = tf.join(broadcast(terms.select("word").distinct()), "word")
       .pin()
-    searchDocsFromMatched(matched, queries, k, idCol, queryIdCol, termCol)
+    searchDocsFromMatched(matched, queries, k)
   }
 
   /** The query-term-matched corpus tf relation the MULTI-ARM retrieval
@@ -2200,17 +2144,14 @@ object TextAnalysis {
     * and every downstream statistic (df, tf, coverage counts) is a
     * function of those rows alone.
     */
-  def searchMatched(docs: DataFrame, queries: DataFrame,
-                    idCol: String = "doc_id", textCol: String = "text",
-                    queryIdCol: String = "query_id",
-                    termCol: String = "term"): DataFrame = {
-    val words = queries.select(col(termCol).as("word")).distinct()
-    val base = docs.filter(col(textCol).isNotNull)
-      .select(col(idCol), graft.functions.wordTfs(col(textCol)).as("__wt"),
-        size(tokens(col(textCol))).cast("long").as("dlen"))
+  def searchMatched(docs: DataFrame, queries: DataFrame): DataFrame = {
+    val words = queries.select(col("term").as("word")).distinct()
+    val base = docs.filter(col("text").isNotNull)
+      .select(col("doc_id"), graft.functions.wordTfs(col("text")).as("__wt"),
+        size(tokens(col("text"))).cast("long").as("dlen"))
     base
-      .select(col(idCol), col("dlen"), explode(col("__wt")).as("wt"))
-      .select(col(idCol), col("dlen"),
+      .select(col("doc_id"), col("dlen"), explode(col("__wt")).as("wt"))
+      .select(col("doc_id"), col("dlen"),
         col("wt.word").as("word"), col("wt.tf").as("tf"))
       .join(broadcast(words), "word")
       .pin()
@@ -2223,30 +2164,28 @@ object TextAnalysis {
     * two paths cannot drift.
     */
   def searchDocsFromMatched(matched: DataFrame, queries: DataFrame,
-                            k: Int = 10, idCol: String = "doc_id",
-                            queryIdCol: String = "query_id",
-                            termCol: String = "term"): DataFrame = {
+                            k: Int = 10): DataFrame = {
     require(k > 0, s"k must be positive, got $k")
     import org.apache.spark.sql.graft.Bridge
     import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
     import org.apache.spark.sql.catalyst.expressions.{Ascending, Descending, SortOrder}
     import org.apache.spark.sql.expressions.Window
     val terms = queries
-      .select(col(queryIdCol).as("query_id"), col(termCol).as("word"))
+      .select(col("query_id").as("query_id"), col("term").as("word"))
       .distinct()
     val dfreq = matched.groupBy("word").agg(count(lit(1)).as("df"))
     val perQuery = matched.join(broadcast(dfreq), "word")
       .withColumn("tscore", expr("(tf * 1000000) div df"))
       .join(broadcast(terms), "word")
-      .groupBy(col("query_id"), col(idCol))
+      .groupBy(col("query_id"), col("doc_id"))
       .agg(sum("tscore").as("score"), count(lit(1)).as("n_terms"))
     val top = graft.plans.TopKPerKey(
       Seq(UnresolvedAttribute("query_id")),
       Seq(SortOrder(UnresolvedAttribute("score"), Descending),
-        SortOrder(UnresolvedAttribute(idCol), Ascending)),
+        SortOrder(UnresolvedAttribute("doc_id"), Ascending)),
       k, Bridge.logicalPlan(perQuery))
     val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col(idCol))
+      .orderBy(col("score").desc, col("doc_id"))
     Bridge.ofRows(matched.sparkSession, top)
       .withColumn("rank", row_number().over(w).cast("long"))
   }
@@ -2274,34 +2213,27 @@ object TextAnalysis {
     * stay in Long for feedback sets up to ~10⁷ term occurrences per
     * query (score ≤ |terms|·10⁶·max tf).
     */
-  def prfExpandTerms(docs: DataFrame, queries: DataFrame,
-                     kFirst: Int = 10, nExpand: Int = 5,
-                     idCol: String = "doc_id", textCol: String = "text",
-                     queryIdCol: String = "query_id",
-                     termCol: String = "term"): DataFrame = {
-    require(kFirst > 0, s"kFirst must be positive, got $kFirst")
-    require(nExpand > 0, s"nExpand must be positive, got $nExpand")
+  def prfExpandTerms(docs: DataFrame, queries: DataFrame): DataFrame = {
     import org.apache.spark.sql.graft.Bridge
     import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
     import org.apache.spark.sql.catalyst.expressions.{Ascending, Descending, SortOrder}
     import org.apache.spark.sql.expressions.Window
     // query-bounded feedback: kFirst × |queries| (id, score) rows
-    val top = searchDocs(docs, queries, kFirst, idCol, textCol,
-        queryIdCol, termCol)
-      .select(col("query_id"), col(idCol), col("score"))
+    val top = searchDocs(docs, queries, 10)
+      .select(col("query_id"), col("doc_id"), col("score"))
       .pin()
-    val fb = tfRelation(docs, idCol, textCol)
-      .join(broadcast(top), Seq(idCol))
+    val fb = tfRelation(docs, "doc_id", "text")
+      .join(broadcast(top), Seq("doc_id"))
       .groupBy(col("query_id"), col("word"))
       .agg(sum(col("tf") * col("score")).as("weight"))
-    val orig = queries.select(col(queryIdCol).as("query_id"),
-      col(termCol).as("word")).distinct()
+    val orig = queries.select(col("query_id").as("query_id"),
+      col("term").as("word")).distinct()
     val cand = fb.join(orig, Seq("query_id", "word"), "left_anti")
     val topTerms = graft.plans.TopKPerKey(
       Seq(UnresolvedAttribute("query_id")),
       Seq(SortOrder(UnresolvedAttribute("weight"), Descending),
         SortOrder(UnresolvedAttribute("word"), Ascending)),
-      nExpand, Bridge.logicalPlan(cand))
+      5, Bridge.logicalPlan(cand))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("weight").desc, col("word"))
     Bridge.ofRows(docs.sparkSession, topTerms)
@@ -2317,17 +2249,12 @@ object TextAnalysis {
     * the second pass is computed over the expanded term set (the
     * engine's own searchDocs law, replayed verbatim by the oracle).
     */
-  def searchDocsPrf(docs: DataFrame, queries: DataFrame, k: Int = 10,
-                    kFirst: Int = 10, nExpand: Int = 5,
-                    idCol: String = "doc_id", textCol: String = "text",
-                    queryIdCol: String = "query_id",
-                    termCol: String = "term"): DataFrame = {
-    val exp = prfExpandTerms(docs, queries, kFirst, nExpand, idCol,
-        textCol, queryIdCol, termCol)
-      .select(col("query_id").as(queryIdCol), col("term").as(termCol))
-    val expanded = queries.select(col(queryIdCol), col(termCol))
+  def searchDocsPrf(docs: DataFrame, queries: DataFrame): DataFrame = {
+    val exp = prfExpandTerms(docs, queries)
+      .select(col("query_id").as("query_id"), col("term").as("term"))
+    val expanded = queries.select(col("query_id"), col("term"))
       .unionByName(exp).distinct()
-    searchDocs(docs, expanded, k, idCol, textCol, queryIdCol, termCol)
+    searchDocs(docs, expanded, 10)
   }
 
   /** BM25-SHAPED ranked retrieval — [[searchDocs]]'s raw tf·idf scoring
@@ -2353,14 +2280,9 @@ object TextAnalysis {
     * array — no extra shuffle.
     */
   def searchDocsBm25(docs: DataFrame, queries: DataFrame, k: Int = 10,
-                     k1X100: Int = 120, bX100: Int = 75,
-                     idCol: String = "doc_id", textCol: String = "text",
-                     queryIdCol: String = "query_id",
-                     termCol: String = "term"): DataFrame = {
-    val matched = searchMatched(docs, queries, idCol, textCol,
-      queryIdCol, termCol)
-    searchDocsBm25FromMatched(docs, matched, queries, k, k1X100, bX100,
-      idCol, textCol, queryIdCol, termCol)
+                     k1X100: Int = 120, bX100: Int = 75): DataFrame = {
+    val matched = searchMatched(docs, queries)
+    searchDocsBm25FromMatched(docs, matched, queries, k, k1X100, bX100)
   }
 
   /** [[searchDocsBm25]]' scoring over an already-pinned
@@ -2371,11 +2293,7 @@ object TextAnalysis {
     */
   def searchDocsBm25FromMatched(docs: DataFrame, matched: DataFrame,
                                 queries: DataFrame, k: Int = 10,
-                                k1X100: Int = 120, bX100: Int = 75,
-                                idCol: String = "doc_id",
-                                textCol: String = "text",
-                                queryIdCol: String = "query_id",
-                                termCol: String = "term"): DataFrame = {
+                                k1X100: Int = 120, bX100: Int = 75): DataFrame = {
     require(k > 0, s"k must be positive, got $k")
     require(k1X100 >= 0, s"k1X100 must be >= 0, got $k1X100")
     require(bX100 >= 0 && bX100 <= 100,
@@ -2385,15 +2303,15 @@ object TextAnalysis {
     import org.apache.spark.sql.catalyst.expressions.{Ascending, Descending, SortOrder}
     import org.apache.spark.sql.expressions.Window
     val terms = queries
-      .select(col(queryIdCol).as("query_id"), col(termCol).as("word"))
+      .select(col("query_id").as("query_id"), col("term").as("word"))
       .distinct()
     // dlen is the token count — size(split) equals the WordTfs tf-sum
     // (the keep-empties law, NativeExprSpec), and keeps the 1-row stats
     // aggregate a cheap split-size scan instead of a second WordTfs
     // evaluation over the corpus
-    val stats = docs.filter(col(textCol).isNotNull)
+    val stats = docs.filter(col("text").isNotNull)
       .agg(count(lit(1)).as("n_docs"),
-        sum(size(tokens(col(textCol))).cast("long")).as("tot_len"))
+        sum(size(tokens(col("text"))).cast("long")).as("tot_len"))
     val dfreq = matched.groupBy("word").agg(count(lit(1)).as("df"))
     val perQuery = matched.join(broadcast(dfreq), "word")
       .crossJoin(broadcast(stats))
@@ -2405,15 +2323,15 @@ object TextAnalysis {
         expr(s"(idf_bits * tf * ($k1X100 + 100) * 100000000) div " +
           s"(tf * 10000 + $k1X100 * lennorm_x100)"))
       .join(broadcast(terms), "word")
-      .groupBy(col("query_id"), col(idCol))
+      .groupBy(col("query_id"), col("doc_id"))
       .agg(sum("contrib").as("score"), count(lit(1)).as("n_terms"))
     val top = graft.plans.TopKPerKey(
       Seq(UnresolvedAttribute("query_id")),
       Seq(SortOrder(UnresolvedAttribute("score"), Descending),
-        SortOrder(UnresolvedAttribute(idCol), Ascending)),
+        SortOrder(UnresolvedAttribute("doc_id"), Ascending)),
       k, Bridge.logicalPlan(perQuery))
     val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col(idCol))
+      .orderBy(col("score").desc, col("doc_id"))
     Bridge.ofRows(docs.sparkSession, top)
       .withColumn("rank", row_number().over(w).cast("long"))
   }
@@ -2480,9 +2398,8 @@ object TextAnalysis {
     * scanned once, map-only ([[graft.functions.WordTfs]] zero-shuffle
     * tf arrays).
     */
-  def nbModel(labeled: DataFrame, labelCol: String = "lang",
-              textCol: String = "text"): DataFrame =
-    nbParts(labeled, labelCol, textCol)._3
+  def nbModel(labeled: DataFrame): DataFrame =
+    nbParts(labeled, "lang", "text")._3
 
   /** Classify `docs` under a multinomial-NB model trained from
     * `labeled` (see [[nbModel]]): per document the minimum-total-bits
@@ -2509,11 +2426,10 @@ object TextAnalysis {
     */
   def classifyNaiveBayes(docs: DataFrame, labeled: DataFrame,
                          labelCol: String = "lang", idCol: String = "doc_id",
-                         textCol: String = "text",
                          tfs: Column => Column =
                            graft.functions.wordTfs): DataFrame = {
-    val (wc, classes, model) = nbParts(labeled, labelCol, textCol, tfs)
-    applyNaiveBayes(docs, wc, classes, model, idCol, textCol, tfs)
+    val (wc, classes, model) = nbParts(labeled, labelCol, "text", tfs)
+    applyNaiveBayes(docs, wc, classes, model, idCol, "text", tfs)
   }
 
   /** A trained NB model pinned for REPEATED application — the streaming
@@ -2531,10 +2447,9 @@ object TextAnalysis {
     * the language-ID model ([[classifyLangId]]'s space).
     */
   def trainNbBundle(labeled: DataFrame, labelCol: String = "lang",
-                    textCol: String = "text",
                     tfs: Column => Column =
                       graft.functions.wordTfs): NbBundle = {
-    val (wc, classes, model) = nbParts(labeled, labelCol, textCol, tfs)
+    val (wc, classes, model) = nbParts(labeled, labelCol, "text", tfs)
     NbBundle(wc, classes.pin(), model.pin(), tfs)
   }
 
@@ -2542,10 +2457,9 @@ object TextAnalysis {
     * [[classifyNaiveBayes]], zero training work.
     */
   def classifyWith(docs: DataFrame, bundle: NbBundle,
-                   idCol: String = "doc_id",
-                   textCol: String = "text"): DataFrame =
+                   idCol: String = "doc_id"): DataFrame =
     applyNaiveBayes(docs, bundle.wc, bundle.classes, bundle.model,
-      idCol, textCol, bundle.tfs)
+      idCol, "text", bundle.tfs)
 
   /** Named tokenizer registry for PERSISTED NB bundles: the tokenizer
     * must survive a JVM restart, so a written bundle records a name
@@ -2577,19 +2491,19 @@ object TextAnalysis {
     * vocabulary, never corpus-sized.
     */
   def writeNbBundle(labeled: DataFrame, name: String,
-                    labelCol: String = "lang", textCol: String = "text",
-                    tokenizer: String = "word", buckets: Int = 8): Unit = {
+                    labelCol: String = "lang",
+                    tokenizer: String = "word"): Unit = {
     val tfs = NbTokenizers.getOrElse(tokenizer,
       throw new IllegalArgumentException(
         s"unknown tokenizer '$tokenizer' — register it in " +
           s"TextAnalysis.NbTokenizers (have: ${NbTokenizers.keys.mkString(", ")})"))
     // nbParts pins wc, so the three writes share one
     // training aggregation — the labeled corpus is scanned once
-    val (wc, classes, model) = nbParts(labeled, labelCol, textCol, tfs)
-    graft.core.Layout.writeBucketed(wc, s"${name}_wc", "word", buckets)
+    val (wc, classes, model) = nbParts(labeled, labelCol, "text", tfs)
+    graft.core.Layout.writeBucketed(wc, s"${name}_wc", "word", 8)
     graft.core.Layout.writeBucketed(classes, s"${name}_classes", "label", 1)
     graft.core.Layout.writeBucketed(
-      model, s"${name}_model", "word", buckets)
+      model, s"${name}_model", "word", 8)
     val spark = labeled.sparkSession
     import spark.implicits._
     graft.core.Layout.writeBucketed(
@@ -2808,15 +2722,13 @@ object TextAnalysis {
     * is alphabet³-bounded — typically SMALLER than a word vocab, so
     * the (gram, label) model relation broadcasts even more readily.
     */
-  def classifyLangId(docs: DataFrame, labeled: DataFrame,
-                     labelCol: String = "lang", idCol: String = "doc_id",
-                     textCol: String = "text"): DataFrame =
+  def classifyLangId(docs: DataFrame, labeled: DataFrame, idCol: String = "doc_id"): DataFrame =
     // the tokenizer hook, not a text re-encode: CharTrigramTfs emits
     // the gram tf pairs in ONE native pass — the re-encode + re-split
     // formulation measured 25 s at sf0.1 (the 4× intermediate string
     // and a String per gram position dominated); semantics identical
     // (NativeExprSpec pins the twin)
-    classifyNaiveBayes(docs, labeled, labelCol, idCol, textCol,
+    classifyNaiveBayes(docs, labeled, "lang", idCol,
       tfs = graft.functions.charTrigramTfs)
 
   /** Per-document language-MIXTURE (code-switch) profile: cut each doc
@@ -2842,11 +2754,9 @@ object TextAnalysis {
     * docs rows), then two bounded per-doc aggregations. No windows
     * over the corpus, no driver materialization.
     */
-  def codeSwitch(docs: DataFrame, labeled: DataFrame, window: Int = 30,
-                 labelCol: String = "lang", idCol: String = "doc_id",
-                 textCol: String = "text"): DataFrame =
-    codeSwitchRollup(docs, window, idCol, textCol,
-      classifyLangId(_, labeled, labelCol, "__cs_key", textCol))
+  def codeSwitch(docs: DataFrame, labeled: DataFrame): DataFrame =
+    codeSwitchRollup(docs, 30, "doc_id", "text",
+      classifyLangId(_, labeled, "__cs_key"))
 
   /** The chunk → per-chunk prediction → per-doc vote/rollup core shared
     * by [[codeSwitch]] and [[codeSwitchWith]] — ONE definition of the
@@ -2889,11 +2799,9 @@ object TextAnalysis {
     * bundle must be char-trigram (`char3`) trained, which the bundle's
     * own tokenizer field guarantees when loaded via [[loadNbBundle]].
     */
-  def codeSwitchWith(docs: DataFrame, bundle: NbBundle, window: Int = 30,
-                     idCol: String = "doc_id",
-                     textCol: String = "text"): DataFrame =
-    codeSwitchRollup(docs, window, idCol, textCol,
-      classifyWith(_, bundle, "__cs_key", textCol))
+  def codeSwitchWith(docs: DataFrame, bundle: NbBundle): DataFrame =
+    codeSwitchRollup(docs, 30, "doc_id", "text",
+      classifyWith(_, bundle, "__cs_key"))
 
   /** Model-based QUALITY classifier — the GPT-3/LLaMA-pipeline "quality
     * classifier" stage (a learned filter distilled from a trusted
@@ -2913,11 +2821,9 @@ object TextAnalysis {
     * aggregation); the rest is the audited NB plan — 2-row class
     * table, broadcast model joins.
     */
-  def qualityClassifier(docs: DataFrame, minQuality: Int = 3,
-                        idCol: String = "doc_id",
-                        textCol: String = "text"): DataFrame = {
-    classifyNaiveBayes(docs, qualityLabeled(docs, minQuality, idCol, textCol),
-      labelCol = "__qc_label", idCol, textCol)
+  def qualityClassifier(docs: DataFrame, minQuality: Int = 3): DataFrame = {
+    classifyNaiveBayes(docs, qualityLabeled(docs, minQuality, "doc_id", "text"),
+      labelCol = "__qc_label", "doc_id")
   }
 
   /** The rule-teacher labeling half of [[qualityClassifier]], shared
@@ -2944,10 +2850,7 @@ object TextAnalysis {
     * bit-identically (spec-gated, plus the
     * t_quality_classifier_persisted oracle).
     */
-  def writeQualityBundle(docs: DataFrame, name: String, minQuality: Int = 3,
-                         idCol: String = "doc_id", textCol: String = "text",
-                         buckets: Int = 8): Unit =
-    writeNbBundle(qualityLabeled(docs, minQuality, idCol, textCol), name,
-      labelCol = "__qc_label", textCol = textCol, tokenizer = "word",
-      buckets = buckets)
+  def writeQualityBundle(docs: DataFrame, name: String): Unit =
+    writeNbBundle(qualityLabeled(docs, 3, "doc_id", "text"), name,
+      labelCol = "__qc_label", tokenizer = "word")
 }

@@ -1,88 +1,55 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types._
 
-/** Cosine similarity of two float/double vectors as a native Catalyst
-  * expression with whole-stage codegen: one fused loop computing dot,
-  * |a|² and |b|² — no lambda-function interpretation, no boxed arrays.
+/** Cosine similarity of two float/double vectors as a [[NativeBinary]]:
+  * one fused loop computing dot, |a|² and |b|² — no lambda-function
+  * interpretation, no boxed arrays.
   *
   * The higher-order-function formulation (`aggregate(zip_with(...))`)
   * is semantically identical but interpreted per row; on the 100 TB
   * similarity path (ANN rerank over billions of vectors) the fused
-  * codegen loop is the difference between scan-bound and CPU-bound.
+  * loop is the difference between scan-bound and CPU-bound.
   *
   * Numerics: accumulates in double, left-to-right over indices — the
   * exact fold order of both the HOF version and DuckDB's
   * `list_sum(list_transform(...))`, so results stay bit-identical to
   * the oracle (verified by t_similarity_topk).
   *
-  * Null semantics: null if either vector is null (BinaryExpression
-  * default) or if lengths differ / either norm is zero.
+  * Null semantics: null if either vector is null or if lengths differ /
+  * either norm is zero.
   */
 case class CosineSim(left: Expression, right: Expression)
-  extends BinaryExpression with ExpectsInputTypes {
+  extends NativeBinary[ArrayData, ArrayData] {
 
   override def dataType: DataType = DoubleType
   override def nullable: Boolean = true
 
-  private def elemType(e: Expression): DataType =
-    e.dataType.asInstanceOf[ArrayType].elementType
-
   override def inputTypes =
     Seq.fill(2)(Bridge.anyOf(ArrayType(FloatType), ArrayType(DoubleType)))
 
-  private def get(arr: ArrayData, i: Int, t: DataType): Double = t match {
-    case FloatType => arr.getFloat(i).toDouble
-    case _ => arr.getDouble(i)
-  }
+  private def floats(e: Expression) =
+    e.dataType.asInstanceOf[ArrayType].elementType == FloatType
+  private lazy val leftFloat = floats(left)
+  private lazy val rightFloat = floats(right)
 
-  override def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[ArrayData]
-    val b = r.asInstanceOf[ArrayData]
-    if (a.numElements() != b.numElements()) return null
-    val (lt, rt) = (elemType(left), elemType(right))
+  def compute(a: ArrayData, b: ArrayData): Any = {
+    val n = a.numElements()
+    if (n != b.numElements()) return null
     var dot = 0.0; var na = 0.0; var nb = 0.0
     var i = 0
-    val n = a.numElements()
     while (i < n) {
-      val x = get(a, i, lt); val y = get(b, i, rt)
+      val x = if (leftFloat) a.getFloat(i).toDouble else a.getDouble(i)
+      val y = if (rightFloat) b.getFloat(i).toDouble else b.getDouble(i)
       dot += x * y; na += x * x; nb += y * y
       i += 1
     }
     if (na == 0.0 || nb == 0.0) null
     else dot / (math.sqrt(na) * math.sqrt(nb))
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      def getter(arr: String, i: String, t: DataType): String = t match {
-        case FloatType => s"(double) $arr.getFloat($i)"
-        case _ => s"$arr.getDouble($i)"
-      }
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val dot = ctx.freshName("dot")
-      val na = ctx.freshName("na")
-      val nb = ctx.freshName("nb")
-      s"""
-         |int $n = $a.numElements();
-         |if ($n != $b.numElements()) { ${ev.isNull} = true; }
-         |else {
-         |  double $dot = 0.0, $na = 0.0, $nb = 0.0;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    double x = ${getter(a, i, elemType(left))};
-         |    double y = ${getter(b, i, elemType(right))};
-         |    $dot += x * y; $na += x * x; $nb += y * y;
-         |  }
-         |  if ($na == 0.0 || $nb == 0.0) { ${ev.isNull} = true; }
-         |  else { ${ev.value} = $dot / (java.lang.Math.sqrt($na) * java.lang.Math.sqrt($nb)); }
-         |}
-       """.stripMargin
-    })
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): CosineSim =

@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode}
 import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types.{BinaryType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -14,15 +14,28 @@ import org.apache.spark.unsafe.types.UTF8String
   * shipped once per task as a reference object — one virtual call per
   * row, and the enclosing operator stays whole-stage-codegen'd (a
   * CodegenFallback would exclude it from stage fusion). Both paths run
-  * one body, so they cannot disagree.
+  * one body, so they cannot disagree. A `compute` declared to return
+  * `Any` may return null for a null result (the expression must then be
+  * nullable); one declared with the result's own type may not.
   */
 trait NativeExpr extends Expression with ExpectsInputTypes {
+
+  /** Whether `compute` is declared to return `Any`, so may return null. */
+  private lazy val mayReturnNull = getClass.getMethods.exists(m =>
+    m.getName == "compute" && !m.isBridge && m.getReturnType == classOf[Object])
 
   /** Generated code assigning `compute(args)` to `ev.value`. */
   protected def computeCode(ctx: CodegenContext, ev: ExprCode,
                             args: String*): String = {
     val ref = ctx.addReferenceObj(nodeName, this, getClass.getName)
-    s"${ev.value} = $ref.compute(${args.mkString(", ")});"
+    val call = s"$ref.compute(${args.mkString(", ")})"
+    if (!mayReturnNull) s"${ev.value} = $call;"
+    else {
+      val v = ctx.freshName("result")
+      s"""Object $v = $call;
+         |if ($v == null) { ${ev.isNull} = true; }
+         |else { ${ev.value} = (${CodeGenerator.boxedType(dataType)}) $v; }""".stripMargin
+    }
   }
 }
 

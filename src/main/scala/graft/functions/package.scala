@@ -30,9 +30,6 @@ package object functions {
   def timestampToString(epochMillis: Column, fmt: String): Column =
     date_format(timestamp_millis(epochMillis), fmt)
 
-  /** ksqlDB `LCASE` (/root/reference/ksqldb-statements.sql:14). */
-  def lcase(c: Column): Column = lower(c)
-
   /** ksqlDB `EXTRACTJSONFIELD(json, '$.path')` — part of ksqlDB's scalar
     * surface for JSON-string payloads like the corpus' `events.props`
     * (TESTDATA.md). Thin wrapper over Spark's codegen'd

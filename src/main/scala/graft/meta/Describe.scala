@@ -1,23 +1,13 @@
 package graft.meta
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.StreamingQuery
 
-/** Metadata/control surface (SURVEY.md §2.7): ksqlDB's SHOW/DESCRIBE
-  * commands (M1/M2 — /root/reference/README.md:71,101,131,181) mapped to
-  * the engine's catalog.
+/** Metadata/control surface (SURVEY.md §2.7): ksqlDB's DESCRIBE
+  * EXTENDED (M2) and a per-column table profile. `SHOW TOPICS` is
+  * `GET /status` on [[RestServer]].
   */
 object Describe {
-
-  /** M1 `SHOW STREAMS`-analog: every registered engine query. */
-  def showQueries: Seq[String] = graft.SparkEntry.queries.keys.toSeq.sorted
-
-  /** M1 `SHOW TOPICS`-analog: catalog tables/views visible to Spark. */
-  def showTables(spark: SparkSession): Seq[String] =
-    spark.catalog.listTables().collect().map(_.name).toSeq.sorted
-
-  /** M2 `DESCRIBE <obj>`: schema tree of a relation. */
-  def describe(df: DataFrame): String = df.schema.treeString
 
   /** M2 `DESCRIBE EXTENDED`: schema + runtime metrics of a continuous
     * query (ksqlDB surfaces consumer/produce rates; Spark surfaces the

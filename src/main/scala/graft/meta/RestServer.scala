@@ -29,8 +29,8 @@ object RestServer {
     * `server.getAddress.getPort`). Caller owns the returned server
     * (`stop(0)` to shut down).
     */
-  def start(spark: SparkSession, port: Int = 0, limit: Int = 1000): HttpServer = {
-    val server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
+  def start(spark: SparkSession): HttpServer = {
+    val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
 
     server.createContext("/query", (x: HttpExchange) => respond(x) {
       if (x.getRequestMethod != "POST")
@@ -40,7 +40,7 @@ object RestServer {
         // extractSql inside the 400-handler: a malformed body is a CLIENT
         // error, not a 500
         try {
-          val df = spark.sql(extractSql(body)).limit(limit)
+          val df = spark.sql(extractSql(body)).limit(1000)
           val cols = df.columns.map(jstr).mkString("[", ",", "]")
           val rows = df.toJSON.collect().mkString("[", ",", "]")
           (200, s"""{"columns":$cols,"rows":$rows}""")
@@ -67,7 +67,7 @@ object RestServer {
       else {
         val body = new String(x.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
         try {
-          val df = dispatchOp(spark, body).limit(limit)
+          val df = dispatchOp(spark, body).limit(1000)
           val cols = df.columns.map(jstr).mkString("[", ",", "]")
           val rows = df.toJSON.collect().mkString("[", ",", "]")
           (200, s"""{"columns":$cols,"rows":$rows}""")

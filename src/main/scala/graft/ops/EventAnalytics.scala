@@ -36,32 +36,29 @@ object EventAnalytics {
     * no per-key event list ever materializes (the collect_list
     * formulation would put a whale user's history in one row).
     */
-  def funnelDepth(events: DataFrame, steps: Seq[String],
-                  keyCol: String = "user_id",
-                  typeCol: String = "event_type",
-                  tsCol: String = "ts"): DataFrame = {
+  def funnelDepth(events: DataFrame, steps: Seq[String]): DataFrame = {
     require(steps.nonEmpty, "funnelDepth needs at least one step")
     require(steps.distinct.size == steps.size,
       s"duplicate step in $steps — a repeated type is ambiguous")
-    val w = Window.partitionBy(keyCol)
+    val w = Window.partitionBy("user_id")
     // null keys have no identity to funnel over: the window would pool
     // them into ONE partition that can "convert" across unrelated
     // events (and DuckDB's JOIN USING oracle drops them) — exclude,
     // matching rollingActive/stickiness
-    var df = events.filter(col(keyCol).isNotNull)
-      .select(col(keyCol), col(typeCol), col(tsCol))
+    var df = events.filter(col("user_id").isNotNull)
+      .select(col("user_id"), col("event_type"), col("ts"))
     steps.indices.foreach { i =>
       val cond =
-        if (i == 0) col(typeCol) === steps(0)
-        else col(typeCol) === steps(i) &&
-          col(tsCol) > col(s"__fn_t${i - 1}")
-      df = df.withColumn(s"__fn_t$i", min(when(cond, col(tsCol))).over(w))
+        if (i == 0) col("event_type") === steps(0)
+        else col("event_type") === steps(i) &&
+          col("ts") > col(s"__fn_t${i - 1}")
+      df = df.withColumn(s"__fn_t$i", min(when(cond, col("ts"))).over(w))
     }
     val depth = steps.indices
       .map(i => when(col(s"__fn_t$i").isNotNull, 1L).otherwise(0L))
       .reduce(_ + _)
     df.withColumn("__fn_depth", depth)
-      .groupBy(keyCol)
+      .groupBy("user_id")
       .agg(max("__fn_depth").as("steps_completed"))
   }
 
@@ -76,19 +73,18 @@ object EventAnalytics {
     * one key equi-join back, one (cohort, offset) distinct-count — the
     * distinct shuffles (cohort, offset, key) triples, never events.
     */
-  def cohortRetention(events: DataFrame, keyCol: String = "user_id",
-                      tsCol: String = "ts"): DataFrame = {
-    val t = TemporalJoins.toMicros(col(tsCol), events.schema(tsCol).dataType)
-    val days = events.filter(col(tsCol).isNotNull)
-      .select(col(keyCol), t.as("__cr_us"))
+  def cohortRetention(events: DataFrame): DataFrame = {
+    val t = TemporalJoins.toMicros(col("ts"), events.schema("ts").dataType)
+    val days = events.filter(col("ts").isNotNull)
+      .select(col("user_id"), t.as("__cr_us"))
       .withColumn("__cr_day", epochDayExpr("__cr_us"))
-    val cohorts = days.groupBy(keyCol)
+    val cohorts = days.groupBy("user_id")
       .agg(min("__cr_day").as("cohort_day"))
-    days.join(cohorts, keyCol)
-      .select(col(keyCol), col("cohort_day"),
+    days.join(cohorts, "user_id")
+      .select(col("user_id"), col("cohort_day"),
         (col("__cr_day") - col("cohort_day")).as("offset_day"))
       .groupBy("cohort_day", "offset_day")
-      .agg(countDistinct(col(keyCol)).as("n_active"))
+      .agg(countDistinct(col("user_id")).as("n_active"))
   }
 
   /** TOUCH ATTRIBUTION — for every conversion event, the LAST and
@@ -112,29 +108,22 @@ object EventAnalytics {
     * the [[transitionCounts]] posture; the horizon bounds the frame,
     * never a self-join.
     */
-  def touchAttribution(events: DataFrame, convType: String,
-                       horizonMicros: Long = 3600L * 1000000L,
-                       keyCol: String = "user_id",
-                       typeCol: String = "event_type",
-                       tsCol: String = "ts",
-                       idCol: String = "event_id"): DataFrame = {
-    require(horizonMicros > 0,
-      s"horizonMicros must be positive, got $horizonMicros")
-    val t = TemporalJoins.toMicros(col(tsCol), events.schema(tsCol).dataType)
+  def touchAttribution(events: DataFrame, convType: String): DataFrame = {
+    val t = TemporalJoins.toMicros(col("ts"), events.schema("ts").dataType)
     val base = events
-      .filter(col(keyCol).isNotNull && col(tsCol).isNotNull &&
-        col(typeCol).isNotNull)
+      .filter(col("user_id").isNotNull && col("ts").isNotNull &&
+        col("event_type").isNotNull)
       .withColumn("__ta_t", t)
-    val w = Window.partitionBy(col(keyCol)).orderBy(col("__ta_t"))
-      .rangeBetween(-horizonMicros, -1)
-    val touch = when(col(typeCol) =!= convType,
-      struct(col("__ta_t").as("t"), col(idCol).as("id"),
-        col(typeCol).as("tp")))
+    val w = Window.partitionBy(col("user_id")).orderBy(col("__ta_t"))
+      .rangeBetween(-3600L * 1000000L, -1)
+    val touch = when(col("event_type") =!= convType,
+      struct(col("__ta_t").as("t"), col("event_id").as("id"),
+        col("event_type").as("tp")))
     base
       .withColumn("__ta_last", max(touch).over(w))
       .withColumn("__ta_first", min(touch).over(w))
-      .filter(col(typeCol) === convType)
-      .select(col(keyCol), col(idCol).as("conv_id"),
+      .filter(col("event_type") === convType)
+      .select(col("user_id"), col("event_id").as("conv_id"),
         col("__ta_t").as("conv_t"),
         col("__ta_last.tp").as("last_touch_type"),
         col("__ta_last.id").as("last_touch_id"),
@@ -154,18 +143,15 @@ object EventAnalytics {
     * [[EventFeatures.lagFeatures]] posture), then a partial-agg
     * shuffle bounded by |types|² rows.
     */
-  def transitionCounts(events: DataFrame, keyCol: String = "user_id",
-                       typeCol: String = "event_type",
-                       tsCol: String = "ts",
-                       idCol: String = "event_id"): DataFrame = {
-    val w = Window.partitionBy(keyCol).orderBy(col(tsCol), col(idCol))
+  def transitionCounts(events: DataFrame): DataFrame = {
+    val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
     events
-      .filter(col(keyCol).isNotNull && col(tsCol).isNotNull &&
-        col(typeCol).isNotNull)
-      .withColumn("__tc_prev", lag(col(typeCol), 1).over(w))
+      .filter(col("user_id").isNotNull && col("ts").isNotNull &&
+        col("event_type").isNotNull)
+      .withColumn("__tc_prev", lag(col("event_type"), 1).over(w))
       .filter(col("__tc_prev").isNotNull)
       .groupBy(col("__tc_prev").as("type_from"),
-        col(typeCol).as("type_to"))
+        col("event_type").as("type_to"))
       .agg(count(lit(1)).as("n_transitions"))
   }
 
@@ -182,21 +168,19 @@ object EventAnalytics {
     * row-local expansion, one (day, key) distinct count — triples of
     * longs through every exchange, never events.
     */
-  def rollingActive(events: DataFrame, windowDays: Int = 7,
-                    keyCol: String = "user_id",
-                    tsCol: String = "ts"): DataFrame = {
+  def rollingActive(events: DataFrame, windowDays: Int = 7): DataFrame = {
     require(windowDays > 0, s"windowDays must be positive, got $windowDays")
-    val t = TemporalJoins.toMicros(col(tsCol), events.schema(tsCol).dataType)
+    val t = TemporalJoins.toMicros(col("ts"), events.schema("ts").dataType)
     val days = events
-      .filter(col(tsCol).isNotNull && col(keyCol).isNotNull)
-      .select(col(keyCol), t.as("__ra_us"))
+      .filter(col("ts").isNotNull && col("user_id").isNotNull)
+      .select(col("user_id"), t.as("__ra_us"))
       .withColumn("day", epochDayExpr("__ra_us"))
-      .select(col(keyCol), col("day")).distinct()
-    val expanded = days.select(col(keyCol),
+      .select(col("user_id"), col("day")).distinct()
+    val expanded = days.select(col("user_id"),
       explode(sequence(col("day"), col("day") + (windowDays - 1)))
         .as("day"))
     expanded.groupBy("day")
-      .agg(countDistinct(col(keyCol)).as(s"n_active_${windowDays}d"))
+      .agg(countDistinct(col("user_id")).as(s"n_active_${windowDays}d"))
       .join(days.select("day").distinct(), Seq("day"), "left_semi")
   }
 
@@ -210,11 +194,8 @@ object EventAnalytics {
     * expansion of the (key, depth) rows, partial-agg to k+1 rows; the
     * lag window runs over those k+1 rows only.
     */
-  def funnelReport(events: DataFrame, steps: Seq[String],
-                   keyCol: String = "user_id",
-                   typeCol: String = "event_type",
-                   tsCol: String = "ts"): DataFrame = {
-    val depths = funnelDepth(events, steps, keyCol, typeCol, tsCol)
+  def funnelReport(events: DataFrame, steps: Seq[String]): DataFrame = {
+    val depths = funnelDepth(events, steps)
     val spark = events.sparkSession
     import spark.implicits._
     val levels = (0 to steps.length).map(_.toLong).toDF("step")
@@ -243,13 +224,11 @@ object EventAnalytics {
     * 1-day side skips the expansion entirely) + one day-keyed join of
     * day-cardinality relations.
     */
-  def stickiness(events: DataFrame, windowDays: Int = 7,
-                 keyCol: String = "user_id",
-                 tsCol: String = "ts"): DataFrame = {
+  def stickiness(events: DataFrame, windowDays: Int = 7): DataFrame = {
     require(windowDays > 1,
       s"windowDays must exceed the daily window, got $windowDays")
-    val daily = rollingActive(events, 1, keyCol, tsCol)
-    val windowed = rollingActive(events, windowDays, keyCol, tsCol)
+    val daily = rollingActive(events, 1)
+    val windowed = rollingActive(events, windowDays)
     daily.join(windowed, "day")
       .select(col("day"), col("n_active_1d"),
         col(s"n_active_${windowDays}d"),
@@ -269,32 +248,28 @@ object EventAnalytics {
     * [[graft.ext.Curation.groupPercentiles]] histogram aggregation
     * keyed by the k-row step column.
     */
-  def funnelLatency(events: DataFrame, steps: Seq[String],
-                    keyCol: String = "user_id",
-                    typeCol: String = "event_type",
-                    tsCol: String = "ts",
-                    percentiles: Seq[Int] = Seq(50, 90)): DataFrame = {
+  def funnelLatency(events: DataFrame, steps: Seq[String]): DataFrame = {
     require(steps.length >= 2,
       s"funnelLatency needs at least two steps, got ${steps.length}")
     require(steps.distinct.size == steps.size,
       s"duplicate step in $steps — a repeated type is ambiguous")
-    val t = TemporalJoins.toMicros(col(tsCol), events.schema(tsCol).dataType)
-    val w = Window.partitionBy(keyCol)
+    val t = TemporalJoins.toMicros(col("ts"), events.schema("ts").dataType)
+    val w = Window.partitionBy("user_id")
     // null keys excluded for the same reason as funnelDepth: one pooled
     // window partition would convert across unrelated events and emit
     // gap rows the oracle's JOIN USING chain never sees
-    var df = events.filter(col(keyCol).isNotNull)
-      .select(col(keyCol), col(typeCol), t.as("__fl_us"))
+    var df = events.filter(col("user_id").isNotNull)
+      .select(col("user_id"), col("event_type"), t.as("__fl_us"))
     steps.indices.foreach { i =>
       val cond =
-        if (i == 0) col(typeCol) === steps(0)
-        else col(typeCol) === steps(i) &&
+        if (i == 0) col("event_type") === steps(0)
+        else col("event_type") === steps(i) &&
           col("__fl_us") > col(s"__fl_t${i - 1}")
       df = df.withColumn(s"__fl_t$i",
         min(when(cond, col("__fl_us"))).over(w))
     }
     val aggs = steps.indices.map(i => max(s"__fl_t$i").as(s"__fl_t$i"))
-    val perKey = df.groupBy(keyCol).agg(aggs.head, aggs.tail: _*)
+    val perKey = df.groupBy("user_id").agg(aggs.head, aggs.tail: _*)
     val gaps = (1 until steps.length).map { i =>
       perKey
         .filter(col(s"__fl_t$i").isNotNull)
@@ -305,9 +280,9 @@ object EventAnalytics {
       .agg(count(lit(1)).as("n_converted"))
     counts.join(
       graft.ext.Curation.groupPercentiles(gaps, "step", "__fl_gap",
-        percentiles),
+        Seq(50, 90)),
       Seq("step"), "left_outer")
       .select(col("step") +: col("n_converted") +:
-        percentiles.map(p => col(s"p$p").as(s"p${p}_micros")): _*)
+        Seq(50, 90).map(p => col(s"p$p").as(s"p${p}_micros")): _*)
   }
 }

@@ -15,7 +15,7 @@ import graft.core.Pin._
   * analog).
   *
   * Determinism contract: events are ordered per key by
-  * (`timeCol`, `idCol`) — a TOTAL order as long as `idCol` is unique,
+  * (`ts`, `event_id`) — a TOTAL order as long as `event_id` is unique,
   * so every engine reproduces lags/gaps/sessions bit-for-bit (the
   * DuckDB oracle replays the same window). All derived columns are
   * integers or passthrough values — no float accumulation whose result
@@ -52,16 +52,15 @@ object EventFeatures {
     * table joins back key-keyed (AQE broadcasts when small). No
     * corpus sort, no window over raw events.
     */
-  def rateAnomalies(events: DataFrame, key: String = "user_id",
-                    timeCol: String = "ts",
+  def rateAnomalies(events: DataFrame,
                     binMicros: Long = 3600L * 1000000L,
                     factorX100: Long = 300L): DataFrame = {
     require(factorX100 > 100,
       s"factorX100 must exceed 100 (the median itself), got $factorX100")
-    val bins = binCounts(events, key, timeCol, binMicros)
+    val bins = binCounts(events, "user_id", "ts", binMicros)
       // pinned: the median histogram AND the flag join both read bins
       .pin()
-    flagBins(bins, key, factorX100)
+    flagBins(bins, "user_id", factorX100)
   }
 
   /** The (key, bin_start_us, n_events) relation [[rateAnomalies]] and
@@ -118,11 +117,9 @@ object EventFeatures {
     * Null-key or null-time rows pass through with null features (they
     * have no well-defined place in any timeline).
     */
-  def lagFeatures(events: DataFrame, keys: Seq[String] = Seq("user_id"),
-                  timeCol: String = "ts", idCol: String = "event_id",
+  def lagFeatures(events: DataFrame,
                   valueCol: String = "value",
                   sessionGap: Long = 300L * 1000000L): DataFrame = {
-    require(keys.nonEmpty, "lagFeatures needs at least one key column")
     require(sessionGap > 0, s"sessionGap must be positive, got $sessionGap")
     val reserved = events.columns.filter(_.startsWith("__ef_")) ++
       Seq("seq", "prev_value", "gap_micros", "session_idx")
@@ -130,7 +127,7 @@ object EventFeatures {
     require(reserved.isEmpty,
       s"column(s) ${reserved.mkString(", ")} collide with lagFeatures " +
         "outputs / reserved prefix '__ef_' — rename before deriving")
-    val t = TemporalJoins.toMicros(col(timeCol), events.schema(timeCol).dataType)
+    val t = TemporalJoins.toMicros(col("ts"), events.schema("ts").dataType)
     // the validity flag is part of the PARTITIONING, not just an output
     // mask: a null-time row sorted into its key's timeline would shift
     // every seq and leak its value into a lag — isolating invalid rows
@@ -141,11 +138,11 @@ object EventFeatures {
     // re-projects the expression under a fresh attribute and Catalyst
     // plans one exchange per window.
     val valid = col("__ef_valid")
-    val ordered = Window.partitionBy(valid +: keys.map(col): _*)
-      .orderBy(col(timeCol).asc, col(idCol).asc)
+    val ordered = Window.partitionBy(valid +: Seq("user_id").map(col): _*)
+      .orderBy(col("ts").asc, col("event_id").asc)
     val withGap = events
       .withColumn("__ef_valid",
-        keys.map(col(_).isNotNull).reduce(_ && _) && col(timeCol).isNotNull)
+        Seq("user_id").map(col(_).isNotNull).reduce(_ && _) && col("ts").isNotNull)
       .withColumn("__ef_t", t)
       .withColumn("seq",
         when(valid, row_number().over(ordered).cast("long")))
@@ -190,35 +187,29 @@ object EventFeatures {
     * never corpus-sized).
     */
   def sessionTranscripts(events: DataFrame,
-                         keys: Seq[String] = Seq("user_id"),
-                         timeCol: String = "ts", idCol: String = "event_id",
-                         typeCol: String = "event_type",
                          sessionGap: Long = 300L * 1000000L): DataFrame = {
-    val typed = events.filter(col(typeCol).isNotNull)
-    val t = TemporalJoins.toMicros(col(timeCol), events.schema(timeCol).dataType)
-    lagFeatures(typed, keys, timeCol, idCol, typeCol, sessionGap)
+    val typed = events.filter(col("event_type").isNotNull)
+    val t = TemporalJoins.toMicros(col("ts"), events.schema("ts").dataType)
+    lagFeatures(typed, "event_type", sessionGap)
       .filter(col("session_idx").isNotNull)
       .withColumn("__st_turn",
-        struct(t.as("t"), col(idCol).as("id"), col(typeCol).as("tp")))
-      .groupBy((keys.map(col) :+ col("session_idx")): _*)
+        struct(t.as("t"), col("event_id").as("id"), col("event_type").as("tp")))
+      .groupBy((Seq("user_id").map(col) :+ col("session_idx")): _*)
       .agg(count(lit(1)).as("n_turns"),
         array_join(
           transform(array_sort(collect_list(col("__st_turn"))),
             s => s.getField("tp")), " ").as("transcript"))
   }
 
-  def sessionStats(events: DataFrame, keys: Seq[String] = Seq("user_id"),
-                   timeCol: String = "ts", idCol: String = "event_id",
-                   valueCol: String = "value",
-                   sessionGap: Long = 300L * 1000000L): DataFrame = {
-    val t = TemporalJoins.toMicros(col(timeCol), events.schema(timeCol).dataType)
-    lagFeatures(events, keys, timeCol, idCol, valueCol, sessionGap)
+  def sessionStats(events: DataFrame): DataFrame = {
+    val t = TemporalJoins.toMicros(col("ts"), events.schema("ts").dataType)
+    lagFeatures(events, "value", 300L * 1000000L)
       .filter(col("session_idx").isNotNull)
       .withColumn("__ss_us", t)
-      .groupBy((keys.map(col) :+ col("session_idx")): _*)
+      .groupBy((Seq("user_id").map(col) :+ col("session_idx")): _*)
       .agg(count(lit(1)).as("n_events"),
         (max(col("__ss_us")) - min(col("__ss_us"))).as("duration_micros"),
-        sum(round(col(valueCol).cast("double") * 100, 0).cast("long"))
+        sum(round(col("value").cast("double") * 100, 0).cast("long"))
           .as("value_x100"))
   }
 }

@@ -332,12 +332,8 @@ object TemporalJoins {
     */
   def intervalJoin(left: DataFrame, right: DataFrame, keys: Seq[String],
                    leftStartCol: String, leftEndCol: String,
-                   rightStartCol: String, rightEndCol: String,
-                   binMicros: Long = 300L * 1000000L,
-                   maxBins: Int = DefaultMaxBinsPerInterval): DataFrame = {
+                   rightStartCol: String, rightEndCol: String): DataFrame = {
     require(keys.nonEmpty, "intervalJoin needs at least one key column")
-    require(binMicros > 0, s"binMicros must be positive, got $binMicros")
-    require(maxBins > 0, s"maxBins must be positive, got $maxBins")
     requireNoReserved(left, "left", "__ij_")
     requireNoReserved(right, "right", "__ij_")
     val clash = right.columns.toSeq.filterNot(keys.contains)
@@ -351,9 +347,9 @@ object TemporalJoins {
           col(sCol).isNotNull && col(eCol).isNotNull)
         .withColumn(sOut, toMicros(col(sCol), df.schema(sCol).dataType))
         .withColumn(eOut, toMicros(col(eCol), df.schema(eCol).dataType))
-        .withColumn(b0, floorDivExpr(sOut, binMicros))
+        .withColumn(b0, floorDivExpr(sOut, 300L * 1000000L))
         .withColumn("__ij_e1", col(eOut) - 1)
-        .withColumn(b1, floorDivExpr("__ij_e1", binMicros))
+        .withColumn(b1, floorDivExpr("__ij_e1", 300L * 1000000L))
         .withColumn("__ij_nb",
           when(col(eOut) > col(sOut), col(b1) - col(b0) + 1)
             .otherwise(lit(0L)))
@@ -364,18 +360,18 @@ object TemporalJoins {
       "__ij_rs", "__ij_re", "__ij_rb0", "__ij_rb1").pin()
     // one probe over both sides, `side` naming which one a row is from
     def over(base: DataFrame, side: String): DataFrame =
-      base.filter(col("__ij_nb") > maxBins)
+      base.filter(col("__ij_nb") > DefaultMaxBinsPerInterval)
         .select(lit(side).as("side") +: keys.map(col) :+ col("__ij_nb").as("bins"): _*)
-    val lBinned = lBase.filter(col("__ij_nb").between(1, maxBins))
+    val lBinned = lBase.filter(col("__ij_nb").between(1, DefaultMaxBinsPerInterval))
       .withColumn("__ij_bin",
         explode(sequence(col("__ij_lb0"), col("__ij_lb1"))))
       .drop("__ij_nb", "__ij_lb1")
-    val rBinned = rBase.filter(col("__ij_nb").between(1, maxBins))
+    val rBinned = rBase.filter(col("__ij_nb").between(1, DefaultMaxBinsPerInterval))
       .withColumn("__ij_bin",
         explode(sequence(col("__ij_rb0"), col("__ij_rb1"))))
       .drop("__ij_nb", "__ij_rb1")
     Overlap.disclosing("intervalJoin",
-      s"interval(s) spanning more than $maxBins bins excluded " +
+      s"interval(s) spanning more than ${DefaultMaxBinsPerInterval} bins excluded " +
         "(raise binMicros or maxBins)",
       over(lBase, "left").unionByName(over(rBase, "right"))) {
       lBinned.join(rBinned, keys :+ "__ij_bin")

@@ -256,7 +256,7 @@ private[graft] object LlmAnnQueries {
          |FROM rtot t LEFT JOIN rhit h USING (query_id)
          |ORDER BY query_id""".stripMargin) { (s, d) =>
       Similarity.annRecallReport(Tables.embeddings(s, d),
-        Seq(0L, 1L, 2L, 3L, 4L), k = 10, planes = 4, dims = 64)
+        Seq(0L, 1L, 2L, 3L, 4L), k = 10)
     }.sortedBy(col("query_id")),
 
     // Multi-probe recall report: the recall side of the probe-budget
@@ -284,8 +284,7 @@ private[graft] object LlmAnnQueries {
          |FROM rtot t LEFT JOIN rhit h USING (query_id)
          |ORDER BY query_id""".stripMargin) { (s, d) =>
       Similarity.annRecallReportMultiProbe(Tables.embeddings(s, d),
-        Seq(0L, 1L, 2L, 3L, 4L), k = 10, planes = 4, dims = 64,
-        probeBits = 1)
+        Seq(0L, 1L, 2L, 3L, 4L), k = 10)
     }.sortedBy(col("query_id")),
 
     QueryDef("t_ann_lsh", annLshSql) { (s, d) =>
@@ -455,7 +454,7 @@ private[graft] object LlmAnnQueries {
     // score bit-for-bit.
     QueryDef("t_ann_pq", annPqSql) { (s, d) =>
       Similarity.pqTopK(Tables.embeddings(s, d), Seq(0L, 1L, 2L, 3L, 4L),
-        kNn = 10, m = 8, codebookSize = 16, dims = 64)
+        kNn = 10)
     }.sortedBy(col("query_id"), col("rank")),
 
     // PQ + exact rerank — the standard recall repair: ADC (codes-only)
@@ -464,8 +463,7 @@ private[graft] object LlmAnnQueries {
     // reads are candidate-bound, never corpus-bound.
     QueryDef("t_ann_pq_rerank", annPqRerankSql) { (s, d) =>
       Similarity.pqTopKReranked(Tables.embeddings(s, d),
-        Seq(0L, 1L, 2L, 3L, 4L), kNn = 10, rerank = 30, m = 8,
-        codebookSize = 16, dims = 64)
+        Seq(0L, 1L, 2L, 3L, 4L), kNn = 10, rerank = 30)
     }.sortedBy(col("query_id"), col("rank")),
 
     // Same PQ search over the PERSISTED index (codebooks + codes
@@ -474,7 +472,7 @@ private[graft] object LlmAnnQueries {
     QueryDef("t_ann_pq_indexed", annPqSql) { (s, d) =>
       val emb = Tables.embeddings(s, d)
       Similarity.pqTopKIndexed(s, pqIndexFor(s, d),
-        emb.filter(col("vec_id") < 5), kNn = 10, m = 8, dims = 64)
+        emb.filter(col("vec_id") < 5), kNn = 10)
     }.sortedBy(col("query_id"), col("rank")),
 
     // Incremental PQ index maintenance: codebooks trained on the first
@@ -484,7 +482,7 @@ private[graft] object LlmAnnQueries {
     QueryDef("t_ann_pq_appended", annPqSqlFor(HalfCorpus)) { (s, d) =>
       val emb = Tables.embeddings(s, d)
       Similarity.pqTopKIndexed(s, pqAppendIndexFor(s, d),
-        emb.filter(col("vec_id") < 5), kNn = 10, m = 8, dims = 64)
+        emb.filter(col("vec_id") < 5), kNn = 10)
     }.sortedBy(col("query_id"), col("rank")),
 
     // IVF×PQ composite — the standard large-scale ANN architecture:
@@ -494,8 +492,7 @@ private[graft] object LlmAnnQueries {
     // the quantized score parts.
     QueryDef("t_ann_ivfpq", annIvfPqSql) { (s, d) =>
       Similarity.ivfPqTopK(Tables.embeddings(s, d), Seq(0L, 1L, 2L, 3L, 4L),
-        kNn = 10, centroids = 16, nProbe = 6, m = 8, codebookSize = 16,
-        dims = 64)
+        kNn = 10, nProbe = 6)
     }.sortedBy(col("query_id"), col("rank")),
 
     // Same composite over the PERSISTED IVF×PQ index (quantizer, bare
@@ -506,7 +503,7 @@ private[graft] object LlmAnnQueries {
     QueryDef("t_ann_ivfpq_indexed", annIvfPqSql) { (s, d) =>
       val emb = Tables.embeddings(s, d)
       Similarity.ivfPqTopKIndexed(s, ivfPqIndexFor(s, d),
-        emb.filter(col("vec_id") < 5), kNn = 10, nProbe = 6, m = 8, dims = 64)
+        emb.filter(col("vec_id") < 5), kNn = 10)
     }.sortedBy(col("query_id"), col("rank")),
 
     // IVF×PQ + exact rerank — the full production ANN recipe (probe
@@ -514,8 +511,7 @@ private[graft] object LlmAnnQueries {
     // both stages' tie-breaks replay exactly in the oracle.
     QueryDef("t_ann_ivfpq_rerank", annIvfPqRerankSql) { (s, d) =>
       Similarity.ivfPqTopKReranked(Tables.embeddings(s, d),
-        Seq(0L, 1L, 2L, 3L, 4L), kNn = 10, rerank = 30, centroids = 16,
-        nProbe = 6, m = 8, codebookSize = 16, dims = 64)
+        Seq(0L, 1L, 2L, 3L, 4L), kNn = 10, rerank = 30)
     }.sortedBy(col("query_id"), col("rank")),
 
     // Incremental composite maintenance: BOTH quantizers trained on the
@@ -526,7 +522,7 @@ private[graft] object LlmAnnQueries {
     QueryDef("t_ann_ivfpq_appended", annIvfPqSqlFor(HalfCorpus)) { (s, d) =>
       val emb = Tables.embeddings(s, d)
       Similarity.ivfPqTopKIndexed(s, ivfPqAppendIndexFor(s, d),
-        emb.filter(col("vec_id") < 5), kNn = 10, nProbe = 6, m = 8, dims = 64)
+        emb.filter(col("vec_id") < 5), kNn = 10)
     }.sortedBy(col("query_id"), col("rank")),
 
     // Embedding-cosine near-dup pairs (dedup family): LSH-bucketed

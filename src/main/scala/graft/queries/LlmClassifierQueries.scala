@@ -157,7 +157,7 @@ private[graft] object LlmClassifierQueries {
         .select(col("doc_id"),
           when(TextAnalysis.qualityScore(col("text")) >= 3, lit("good"))
             .otherwise(lit("bad")).as("ref"))
-      graft.ext.Eval.marginReliability(cls, refs, bucketWidth = 16L)
+      graft.ext.Eval.marginReliability(cls, refs)
     }.sortedBy(col("bucket")),
 
     // ── Uncertainty sampling: per source, the 5 docs the quality
@@ -662,8 +662,7 @@ private[graft] object LlmClassifierQueries {
         |SELECT word, df, (df * 100 // n) AS df_x100
         |FROM swf CROSS JOIN swn WHERE df * 100 >= 40 * n
         |ORDER BY word""".stripMargin) { (s, d) =>
-      TextAnalysis.discoverStopwords(Tables.documents(s, d),
-        minDfX100 = 40L)
+      TextAnalysis.discoverStopwords(Tables.documents(s, d))
     }.sortedBy(col("word")),
 
     // ── Vocabulary drift between snapshots ─────────────────────────
@@ -695,7 +694,7 @@ private[graft] object LlmClassifierQueries {
         val docs = Tables.documents(s, d)
         graft.ext.Curation.vocabDrift(
           docs.filter(col("doc_id") % 2 === 0),
-          docs.filter(col("doc_id") % 2 === 1), k = 20)
+          docs.filter(col("doc_id") % 2 === 1))
     }.sortedBy(col("rank")),
 
     // ── Per-domain language mixture (multilingual source report) ───

@@ -659,7 +659,7 @@ private[graft] object LlmCorpusQueries {
          |LEFT JOIN p67 ON p67.source = s.source
          |ORDER BY s.doc_id""".stripMargin) { (s, d) =>
       graft.ext.Curation.perplexityBuckets(Tables.documents(s, d),
-        scorer = TextAnalysis.trigramSurprisal(_, _, _))
+        scorer = TextAnalysis.trigramSurprisal(_))
     }.sortedBy(col("doc_id")),
 
     // ── Duplication profile (corpus-wide boilerplate share) ────────

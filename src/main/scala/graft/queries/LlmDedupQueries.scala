@@ -863,7 +863,7 @@ private[graft] object LlmDedupQueries {
         .select(col("doc_id"),
           when(col("doc_id") % 10 <= 1 && m % 5 === 2,
             concat(col("text"), tail)).otherwise(col("text")).as("text"))
-      Dedup.winnowOverlap(planted, k = 4, w = 5, minShared = 1,
+      Dedup.winnowOverlap(planted, minShared = 1,
         maxBucket = 1 << 20)
     }.sortedBy(col("doc_a"), col("doc_b")),
 
@@ -962,7 +962,7 @@ private[graft] object LlmDedupQueries {
         .select((col("doc_id") + 100000).as("doc_id"),
           concat(concat_ws(" ", slice(ws, -8, 8)),
             lit(" page two continues here with fresh words")).as("text"))
-      Dedup.continuationPairs(docs.union(pages), window = 8)
+      Dedup.continuationPairs(docs.union(pages))
     }.sortedBy(col("prev_id"), col("next_id")),
 
     // Per-domain exact-dup rates: which feed ships dupes — the triage
@@ -1121,7 +1121,7 @@ private[graft] object LlmDedupQueries {
          |  SELECT doc_b, doc_a, inter, nh_b
          |  FROM cj WHERE inter * 10 >= nh_b * 9) u
          |ORDER BY doc_id, container_id""".stripMargin) { (s, d) =>
-      Dedup.containmentPairs(Tables.documents(s, d), num = 9, den = 10,
+      Dedup.containmentPairs(Tables.documents(s, d), num = 9,
         maxDf = 50)
     }.sortedBy(col("doc_id"), col("container_id")),
 

@@ -320,7 +320,7 @@ private[graft] object LlmPackingQueries {
       // block, narrower than the evens-wide template grams at EVERY sf
       // (>= 25 even docs at sf0.001) — the corpus-wide grams are
       // excluded (disclosed recall loss), the block grams survive
-      val pairs = Dedup.winnowOverlap(gated, k = 4, w = 5, minShared = 1,
+      val pairs = Dedup.winnowOverlap(gated, minShared = 1,
         maxBucket = 24)
       val clusters = Dedup.clusterLabels(
           gated.select(col("doc_id").as("id")),
@@ -408,7 +408,7 @@ private[graft] object LlmPackingQueries {
       val resp = Tables.documents(s, d).filter(col("text").isNotNull)
         .select(col("source").as("prompt_id"), col("doc_id"),
           TextAnalysis.qualityScore(col("text")).cast("long").as("score"))
-      graft.ext.Preference.dpoPairs(resp, "prompt_id", "doc_id", "score")
+      graft.ext.Preference.dpoPairs(resp, "doc_id")
     }.sortedBy(col("prompt_id")),
 
     // ── DPO pair prep flagship: pairs → texts → packed ─────────────
@@ -647,7 +647,7 @@ private[graft] object LlmPackingQueries {
          |SELECT source, gram, cnt, rank FROM dr WHERE rank <= 5
          |ORDER BY source, rank""".stripMargin
     }) { (s, d) =>
-      TextAnalysis.domainTopNgrams(Tables.documents(s, d), k = 5, n = 2)
+      TextAnalysis.domainTopNgrams(Tables.documents(s, d))
     }.sortedBy(col("source"), col("rank")),
 
     // ── Domain-mixture resampling ──────────────────────────────────

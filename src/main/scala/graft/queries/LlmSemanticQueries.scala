@@ -212,8 +212,7 @@ private[graft] object LlmSemanticQueries {
          |ORDER BY vec_id""".stripMargin) { (s, d) =>
       val emb = Tables.embeddings(s, d)
       Similarity.knnClassify(emb.filter(col("vec_id") % 7 =!= 0),
-        emb.filter(col("vec_id") % 7 === 0), k = 10, centroids = 16,
-        nProbe = 4)
+        emb.filter(col("vec_id") % 7 === 0), k = 10, centroids = 16)
     }.sortedBy(col("vec_id")),
 
     // ── Embedding-space health report ──────────────────────────────
@@ -404,7 +403,7 @@ private[graft] object LlmSemanticQueries {
         .select((col("media_id") + 100000).as("media_id"),
           col("dhash").bitwiseXOR(lit(5L)).as("dhash"))
       Dedup.hammingNearDups(base.union(reenc), idCol = "media_id",
-          sigCol = "dhash", bits = 64, blocks = 8, maxHamming = 3)
+          sigCol = "dhash", bits = 64, blocks = 8)
         .select(col("doc_a").as("media_a"), col("doc_b").as("media_b"),
           col("hamming"))
     }.sortedBy(col("media_a"), col("media_b")),

@@ -173,7 +173,7 @@ private[graft] object LlmShared {
     val toks = nn.select(col("doc_id"),
       size(split(col("text"), " ")).cast("long").as("__dq_t"))
     val pairs = graft.ext.Preference
-      .dpoPairs(resp, "prompt_id", "doc_id", "score")
+      .dpoPairs(resp, "doc_id")
       .join(toks.withColumnRenamed("doc_id", "chosen_id")
         .withColumnRenamed("__dq_t", "chosen_tokens"), "chosen_id")
       .join(toks.withColumnRenamed("doc_id", "rejected_id")
@@ -1424,8 +1424,7 @@ private[graft] object LlmShared {
           .withColumn("__b", graft.ext.Sampling.bucket(col("doc_id")) % 4)
         Seq(0L, 1L, 2L, 2L, 3L).foreach { e =>
           graft.streaming.PreferenceStream.mergeDpoBatch(
-            resp.filter(col("__b") === e).drop("__b"), dir, e,
-            "prompt_id", "doc_id", "score")
+            resp.filter(col("__b") === e).drop("__b"), dir, e, "doc_id")
         }
         dir
       })

@@ -231,7 +231,7 @@ private[graft] object LlmStreamQueries {
         docs.filter(col("doc_id") < 25 && col("text").isNotNull)
           .select((col("doc_id") + 100000).as("doc_id"),
             concat(lit("zzz "), col("text")).as("text")))
-      Dedup.dedupPassagesCdc(planted, window = 4, divisor = 8)
+      Dedup.dedupPassagesCdc(planted, divisor = 8)
     }.sortedBy(col("doc_id")),
 
     // ── ExactSubstr duplicated-span statistics (Lee et al. 2022) ───

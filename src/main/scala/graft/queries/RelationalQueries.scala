@@ -853,7 +853,7 @@ object RelationalQueries {
          |FROM wn WHERE event_type = 'purchase'
          |ORDER BY conv_id""".stripMargin) { (s, d) =>
       graft.ops.EventAnalytics.touchAttribution(Tables.events(s, d),
-        convType = "purchase", horizonMicros = 3600000000L)
+        convType = "purchase")
     }.sortedBy(col("conv_id")),
 
     // RLHF-prep FLAGSHIP: ratings → preference pairs → Bradley-Terry

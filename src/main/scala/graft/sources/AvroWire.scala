@@ -116,7 +116,7 @@ object AvroWire {
     * are magic + schemaId + Avro binary of the whole row.
     */
   def encode(df: DataFrame, keyCol: String, tsCol: String, topic: String,
-             schemaId: Int, numPartitions: Int = 4): DataFrame = {
+             schemaId: Int): DataFrame = {
     import org.apache.spark.sql.functions._
     val schemaJson = avroSchemaJson(df.schema)
     val sparkSchema = df.schema
@@ -137,7 +137,7 @@ object AvroWire {
       new org.apache.spark.sql.api.java.UDF1[Row, Array[Byte]] {
         override def call(r: Row): Array[Byte] = valueOf(r)
       }, BinaryType)
-    val part = pmod(hash(col(keyCol)), lit(numPartitions))
+    val part = pmod(hash(col(keyCol)), lit(4))
     df.select(
       col(keyCol).cast("string").cast("binary").as("key"),
       valueUdf(struct(df.columns.map(col): _*)).as("value"),

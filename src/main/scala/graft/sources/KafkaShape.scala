@@ -25,9 +25,8 @@ object KafkaShape {
     * Partition = hash(key) mod n, offset = per-partition sequence —
     * the same key→partition contract a producer gives.
     */
-  def encode(df: DataFrame, keyCol: String, tsCol: String, topic: String,
-             numPartitions: Int = 4): DataFrame = {
-    val part = pmod(hash(col(keyCol)), lit(numPartitions))
+  def encode(df: DataFrame, keyCol: String, tsCol: String, topic: String): DataFrame = {
+    val part = pmod(hash(col(keyCol)), lit(4))
     df.select(
       col(keyCol).cast("string").cast("binary").as("key"),
       to_json(struct(df.columns.map(col): _*)).cast("binary").as("value"),

@@ -114,15 +114,14 @@ object AnnIndexStream {
       .map(s => s"$name$s")
 
   /** Maintain a persisted LSH index ([[Similarity.buildLshIndex]] must
-    * have run) from a stream of (`idCol`, `vecCol`, ...) rows. Search
+    * have run) from a stream of (`vec_id`, `embedding`, ...) rows. Search
     * over the maintained index is bit-identical to a full rebuild over
     * base ∪ every ingested batch. `planes`/`dims`/`tables`/`buckets`
     * must match the build (validated per append against the index
     * `_meta`).
     */
   def maintainLsh(vectors: DataFrame, name: String, checkpointDir: String,
-                  planes: Int, dims: Int, tables: Int = 8, buckets: Int = 8,
-                  idCol: String = "vec_id", vecCol: String = "embedding",
+                  planes: Int, dims: Int,
                   compactEvery: Int = 0,
                   onBatch: MaintainEvent => Unit = _ => ()): StreamingQuery = {
     val owner = vectors.sparkSession
@@ -134,16 +133,15 @@ object AnnIndexStream {
           onBatch(MaintainEvent(epoch, "skipped", "lsh", 0L, Double.NaN))
         else {
           // pinned: counted for the event AND appended — one evaluation
-          val novel = novelOnly(batch.toDF(), s"${name}_buckets", idCol)
+          val novel = novelOnly(batch.toDF(), s"${name}_buckets", "vec_id")
             .pin()
           val n = novel.count()
           if (n > 0) {
-            Similarity.appendToLshIndex(novel, name, planes, dims, tables,
-              buckets, idCol, vecCol)
+            Similarity.appendToLshIndex(novel, name, planes, dims, 8)
             SwapTable.refreshOwner(owner, indexTables(name): _*)
           }
           markApplied(spark, name, epoch)
-          maybeCompact(spark, owner, name, compactEvery, idCol)
+          maybeCompact(spark, owner, name, compactEvery, "vec_id")
           onBatch(MaintainEvent(epoch, "appended", "lsh", n, Double.NaN))
         }
       }
@@ -163,8 +161,6 @@ object AnnIndexStream {
     * from the batch loop over the source-of-truth corpus instead.
     */
   def maintainIvf(vectors: DataFrame, name: String, checkpointDir: String,
-                  maxDriftRatio: Double = Similarity.DefaultMaxDriftRatio,
-                  idCol: String = "vec_id", vecCol: String = "embedding",
                   compactEvery: Int = 0,
                   onBatch: MaintainEvent => Unit = _ => ()): StreamingQuery = {
     val owner = vectors.sparkSession
@@ -183,17 +179,17 @@ object AnnIndexStream {
         if (epochApplied(spark, name, epoch))
           onBatch(MaintainEvent(epoch, "skipped", "ivf", 0L, Double.NaN))
         else {
-          val novel = novelOnly(batch.toDF(), s"${name}_lists", idCol)
+          val novel = novelOnly(batch.toDF(), s"${name}_lists", "vec_id")
             .pin()
           val n = novel.count()
           if (n > 0) {
             val indexed = spark.table(s"${name}_lists")
-              .select(col(idCol), col(vecCol))
+              .select(col("vec_id"), col("embedding"))
             val r = Similarity.maintainIndex(spark, name, indexed, novel,
-              maxDriftRatio, idCol, vecCol)
+              Similarity.DefaultMaxDriftRatio)
             SwapTable.refreshOwner(owner, indexTables(name): _*)
             markApplied(spark, name, epoch)
-            maybeCompact(spark, owner, name, compactEvery, idCol)
+            maybeCompact(spark, owner, name, compactEvery, "vec_id")
             onBatch(MaintainEvent(epoch, r.action, r.kind, n, r.maxMeanRatio))
           } else {
             markApplied(spark, name, epoch)

@@ -192,8 +192,8 @@ object CurationStream {
                              onDrift: DriftMonitor.DriftEvent => Unit =
                                _ => ())
 
-  /** Start the composed topology. `docs` must carry (`idCol`,
-    * `textCol`, `dimKey`); admitted, quality-passing documents reach
+  /** Start the composed topology. `docs` must carry (`doc_id`,
+    * `text`, `dimKey`); admitted, quality-passing documents reach
     * `sink` enriched (left outer — a doc with no dim row survives with
     * nulls) with a `quality` column attached.
     *
@@ -227,7 +227,7 @@ object CurationStream {
     * size/AQE — at 100 TB a provenance dim can outgrow any driver-side
     * build, and the composed flagship must not pin it to one.
     *
-    * `redactPii = true` rewrites `textCol` through the
+    * `redactPii = true` rewrites `text` through the
     * [[TextAnalysis.redactPii]] chain BEFORE the quality gate — PII
     * never reaches the sink, the store, or the quality signals; the
     * chain is a codegen'd per-row map, so the stream pays zero extra
@@ -236,10 +236,9 @@ object CurationStream {
     * the admitted copy.
     */
   def run(docs: DataFrame, storeName: String, dimDir: String, dimKey: String,
-          checkpointDir: String, idCol: String = "doc_id",
-          textCol: String = "text", minQuality: Int = 3,
+          checkpointDir: String, minQuality: Int = 3,
           jaccardNum: Int = 8, jaccardDen: Int = 10, compactEvery: Int = 64,
-          benchmark: Option[DataFrame] = None, minOverlap: Int = 1,
+          benchmark: Option[DataFrame] = None,
           broadcastDim: Boolean = true, redactPii: Boolean = false,
           gopherGate: Boolean = false,
           minCompressionX1000: Int = 0,
@@ -307,7 +306,7 @@ object CurationStream {
       (lg.bundleName, lg.labeled) match {
         case (Some(nm), _) => TextAnalysis.loadNbBundle(docs.sparkSession, nm)
         case (None, Some(lab)) =>
-          TextAnalysis.trainNbBundle(lab, lg.labelCol, textCol,
+          TextAnalysis.trainNbBundle(lab, lg.labelCol,
             tfs = graft.functions.charTrigramTfs)
         case (None, None) => throw new IllegalArgumentException(
           "LangGate needs either a labeled snapshot to train on or a " +
@@ -320,9 +319,9 @@ object CurationStream {
     // and would leak past the decontamination gate
     val benchGrams = benchmark.map { b =>
       val src = if (redactPii)
-        b.withColumn(textCol, TextAnalysis.redactPii(col(textCol)))
+        b.withColumn("text", TextAnalysis.redactPii(col("text")))
       else b
-      graft.ext.Decontamination.benchmarkGrams(src, textCol).cache()
+      graft.ext.Decontamination.benchmarkGrams(src).cache()
     }
     // Fail at stream START, not mid-stream: a feature column sharing a
     // name with a doc/dim column would make the as-of join's output
@@ -344,28 +343,28 @@ object CurationStream {
           "would produce ambiguous duplicate output columns)")
     }
     val query = IngestDedupGate.gate(docs, storeName, checkpointDir,
-      idCol = idCol, textCol = textCol, jaccardNum = jaccardNum,
-      jaccardDen = jaccardDen, compactEvery = compactEvery) { (novel, epoch) =>
+      jaccardNum = jaccardNum, jaccardDen = jaccardDen,
+      compactEvery = compactEvery) { (novel, epoch) =>
       // drift monitoring observes the NOVEL batch before any gate —
       // the epoch lineage is the gate stream's own checkpoint, so the
       // monitor's replay markers stay consistent across restarts
       driftGate.foreach { dg =>
         dg.onDrift(dg.groupCol match {
           case Some(g) => DriftMonitor.updateBatchBy(dg.name, novel,
-            epoch, g, textCol, minQuality, dg.slack, dg.threshold)
+            epoch, g, minQuality, dg.slack, dg.threshold)
           case None => DriftMonitor.updateBatch(dg.name, novel, epoch,
-            textCol, minQuality, dg.slack, dg.threshold)
+            minQuality, dg.slack, dg.threshold)
         })
       }
       val redacted =
         if (redactPii)
-          novel.withColumn(textCol, TextAnalysis.redactPii(col(textCol)))
+          novel.withColumn("text", TextAnalysis.redactPii(col("text")))
         else novel
       // boilerplate strip rewrites textCol BEFORE the quality signals
       // read it (CCNet ordering); novelty signatures upstream stay on
       // the raw text
       val stripped = boilerHashes.fold(redacted)(hs =>
-        graft.ext.Dedup.stripLinesByHashSet(redacted, hs, idCol, textCol))
+        graft.ext.Dedup.stripLinesByHashSet(redacted, hs))
       // lexicon screen drops over-budget docs on the SHIPPED text
       // (post-redaction/strip), before the quality gates. LEFT join:
       // lexiconScreen only emits rows for non-null-text docs, and the
@@ -375,9 +374,9 @@ object CurationStream {
       val admitted = (lexPinned, lexiconGate) match {
         case (Some(lex), Some(lx)) =>
           val screen = TextAnalysis.lexiconScreen(stripped, lex,
-              lx.maxScoreX100PerKtok, idCol, textCol)
-            .select(col(idCol), col("screen_pass"))
-          stripped.join(screen, Seq(idCol), "left")
+              lx.maxScoreX100PerKtok)
+            .select(col("doc_id"), col("screen_pass"))
+          stripped.join(screen, Seq("doc_id"), "left")
             .filter(coalesce(col("screen_pass"), lit(true)))
             .drop("screen_pass")
         case _ => stripped
@@ -393,9 +392,9 @@ object CurationStream {
       // another pure per-row native expression, zero extra shuffle
       val gated = admitted
         .withColumn("quality",
-          TextAnalysis.qualityScore(col(textCol)).cast("long"))
+          TextAnalysis.qualityScore(col("text")).cast("long"))
         .filter(col("quality") >= minQuality &&
-          (if (gopherGate) TextAnalysis.gopherPass(col(textCol))
+          (if (gopherGate) TextAnalysis.gopherPass(col("text"))
            else lit(true)) &&
           (if (minCompressionX1000 > 0)
             // empty text → octet_length 0 → integer div NULL, which a
@@ -403,38 +402,38 @@ object CurationStream {
             // configured floor (r16 advice). Decision: empty docs pass
             // this gate — they carry no boilerplate signal; the
             // quality floor above already owns the too-short cut.
-            octet_length(col(textCol)) === 0 ||
-              expr(s"deflate_len(`$textCol`) * 1000 div " +
-                s"octet_length(`$textCol`)") >= minCompressionX1000.toLong
+            octet_length(col("text")) === 0 ||
+              expr(s"deflate_len(`text`) * 1000 div " +
+                s"octet_length(`text`)") >= minCompressionX1000.toLong
            else lit(true)))
       // model quality gate: score the rule-passing batch under the
       // PINNED persisted classifier, keep only `keep`-labeled docs
       val mGated = qualityBundle.fold(gated) { b =>
-        val keepPreds = TextAnalysis.classifyWith(gated, b, idCol, textCol)
+        val keepPreds = TextAnalysis.classifyWith(gated, b, "doc_id")
           .filter(col("pred") === qualityGate.get.keep)
-          .select(col(idCol))
-        gated.join(keepPreds, idCol)
+          .select(col("doc_id"))
+        gated.join(keepPreds, "doc_id")
       }
       // language gate: classify the batch under the PINNED model and
       // keep only the routed languages (pred join is batch-sized)
       val routed = langBundle.fold(mGated) { b =>
         val keep = langGate.get.keep
-        val preds = TextAnalysis.classifyWith(mGated, b, idCol, textCol)
+        val preds = TextAnalysis.classifyWith(mGated, b, "doc_id")
           .filter(col("pred").isin(keep.toSeq: _*))
-          .select(col(idCol), col("pred").as("lang_pred"))
-        mGated.join(preds, idCol)
+          .select(col("doc_id"), col("pred").as("lang_pred"))
+        mGated.join(preds, "doc_id")
       }
       // perplexity gate: score the batch under the PINNED persisted LM
       // and keep the low-surprisal head (id join is batch-sized)
       val headed = lmBundle.fold(routed) { b =>
-        val keep = b.score(routed, idCol, textCol)
+        val keep = b.score(routed)
           .filter(col("mean_bits_x100") <= perplexityGate.get.maxMeanBitsX100)
-          .select(col(idCol))
-        routed.join(keep, idCol)
+          .select(col("doc_id"))
+        routed.join(keep, "doc_id")
       }
       val clean = benchGrams.fold(headed)(g =>
         graft.ext.Decontamination.decontaminateAgainst(
-          headed, broadcast(g), idCol, textCol, minOverlap = minOverlap))
+          headed, broadcast(g), minOverlap = 1))
       val dim0 = ManifestStore.read(novel.sparkSession, dimDir, dimKey)
       val dim = if (broadcastDim) broadcast(dim0) else dim0
       val enriched = clean.join(dim, Seq(dimKey), "left_outer")

@@ -80,9 +80,8 @@ object DriftMonitor {
     * not a zero — an all-null batch should not read as "quality went
     * to 0").
     */
-  def metrics(df: DataFrame, textCol: String = "text",
-              minQuality: Int = 3): DataFrame =
-    metricsOf(df, None, textCol, minQuality)
+  def metrics(df: DataFrame): DataFrame =
+    metricsOf(df, None, "text", 3)
 
   /** [[metrics]] resolved PER GROUP (source domain, language, shard):
     * (groupCol, metric, x) — the same three ×10⁴ rates over each
@@ -90,10 +89,8 @@ object DriftMonitor {
     * family's convention), absent signals absent (not zero). One
     * group-keyed partial aggregation; output is |groups|×3-bounded.
     */
-  def metricsBy(df: DataFrame, groupCol: String = "source",
-                textCol: String = "text",
-                minQuality: Int = 3): DataFrame =
-    metricsOf(df, Some(groupCol), textCol, minQuality)
+  def metricsBy(df: DataFrame): DataFrame =
+    metricsOf(df, Some("source"), "text", 3)
 
   /** The metric law over `group`'s groups, or over all of `df` when
     * `group` is None (`groupBy()` with no keys is the global aggregate,
@@ -149,12 +146,9 @@ object DriftMonitor {
     * [[graft.ext.Curation.domainReweight]] apportionment posture), NOT
     * a per-document key.
     */
-  def cusumTrajectoryBy(batches: Seq[DataFrame], profile: DataFrame,
-                        groupCol: String = "source",
-                        textCol: String = "text", minQuality: Int = 3,
-                        slack: Long = 200L): DataFrame =
-    trajectoryOf(batches, profile, Some(groupCol), textCol, minQuality,
-      slack)
+  def cusumTrajectoryBy(batches: Seq[DataFrame], profile: DataFrame): DataFrame =
+    trajectoryOf(batches, profile, Some("source"), "text", 3,
+      200L)
 
   /** PURE batch replay of the CUSUM law — the oracle-gateable face of
     * the monitor (the streaming path's state lives in tables; this
@@ -170,10 +164,8 @@ object DriftMonitor {
     * the driver-side fold collects only configuration-sized data —
     * the [[graft.ext.Curation.domainReweight]] apportionment posture.
     */
-  def cusumTrajectory(batches: Seq[DataFrame], profile: DataFrame,
-                      textCol: String = "text", minQuality: Int = 3,
-                      slack: Long = 200L): DataFrame =
-    trajectoryOf(batches, profile, None, textCol, minQuality, slack)
+  def cusumTrajectory(batches: Seq[DataFrame], profile: DataFrame): DataFrame =
+    trajectoryOf(batches, profile, None, "text", 3, 200L)
 
   /** The CUSUM fold of both trajectory faces, keyed (group, metric);
     * the group is None throughout for the global face, whose output
@@ -218,19 +210,15 @@ object DriftMonitor {
     * `name` is either global or per-group, never both — the two state
     * schemas differ.
     */
-  def writeProfileBy(docs: DataFrame, name: String,
-                     groupCol: String = "source",
-                     textCol: String = "text",
-                     minQuality: Int = 3): Unit =
-    writeProfileOf(docs, name, Some(groupCol), textCol, minQuality)
+  def writeProfileBy(docs: DataFrame, name: String): Unit =
+    writeProfileOf(docs, name, Some("source"), "text", 3)
 
   /** Train-once: pin the baseline profile (metric, mu) from a trusted
     * snapshot. Overwrites an existing profile of the same name — the
     * deliberate re-baseline operation.
     */
-  def writeProfile(docs: DataFrame, name: String, textCol: String = "text",
-                   minQuality: Int = 3): Unit =
-    writeProfileOf(docs, name, None, textCol, minQuality)
+  def writeProfile(docs: DataFrame, name: String): Unit =
+    writeProfileOf(docs, name, None, "text", 3)
 
   private def writeProfileOf(docs: DataFrame, name: String,
                              group: Option[String], textCol: String,
@@ -309,11 +297,10 @@ object DriftMonitor {
     * sentinel domain upstream if they need coverage.
     */
   def updateBatchBy(name: String, batch: DataFrame, epoch: Long,
-                    groupCol: String = "source",
-                    textCol: String = "text", minQuality: Int = 3,
+                    groupCol: String = "source", minQuality: Int = 3,
                     slack: Long = 200L,
                     threshold: Long = 1000L): DriftEvent =
-    updateOf(name, batch, epoch, Some(groupCol), textCol, minQuality,
+    updateOf(name, batch, epoch, Some(groupCol), "text", minQuality,
       slack, threshold)
 
   /** ONE batch's monitor update — the reusable core [[maintain]] wraps
@@ -324,10 +311,9 @@ object DriftMonitor {
     * Returns the batch's [[DriftEvent]]. Epoch numbers must belong to
     * ONE checkpoint lineage per monitor `name`.
     */
-  def updateBatch(name: String, batch: DataFrame, epoch: Long,
-                  textCol: String = "text", minQuality: Int = 3,
+  def updateBatch(name: String, batch: DataFrame, epoch: Long, minQuality: Int = 3,
                   slack: Long = 200L, threshold: Long = 1000L): DriftEvent =
-    updateOf(name, batch, epoch, None, textCol, minQuality, slack,
+    updateOf(name, batch, epoch, None, "text", minQuality, slack,
       threshold)
 
   /** The update of both faces. The state is keyed (grp, metric) when
@@ -408,12 +394,10 @@ object DriftMonitor {
     * [[maintain]]'s topology over [[updateBatchBy]].
     */
   def maintainBy(docs: DataFrame, name: String, checkpointDir: String,
-                 groupCol: String = "source", textCol: String = "text",
-                 minQuality: Int = 3, slack: Long = 200L,
                  threshold: Long = 1000L,
                  onBatch: DriftEvent => Unit = _ => ()): StreamingQuery =
-    maintainOf(docs, name, checkpointDir, Some(groupCol), textCol,
-      minQuality, slack, threshold, onBatch)
+    maintainOf(docs, name, checkpointDir, Some("source"), "text",
+      3, 200L, threshold, onBatch)
 
   /** Maintain the drift monitor over a document stream as its own
     * topology (the standalone shape; [[updateBatch]] is the composable
@@ -422,12 +406,10 @@ object DriftMonitor {
     * alarm once sustained excess accumulates to 10 rate-points — e.g.
     * five consecutive batches each 4 points beyond slack).
     */
-  def maintain(docs: DataFrame, name: String, checkpointDir: String,
-               textCol: String = "text", minQuality: Int = 3,
-               slack: Long = 200L, threshold: Long = 1000L,
+  def maintain(docs: DataFrame, name: String, checkpointDir: String, threshold: Long = 1000L,
                onBatch: DriftEvent => Unit = _ => ()): StreamingQuery =
-    maintainOf(docs, name, checkpointDir, None, textCol, minQuality,
-      slack, threshold, onBatch)
+    maintainOf(docs, name, checkpointDir, None, "text", 3,
+      200L, threshold, onBatch)
 
   private def maintainOf(docs: DataFrame, name: String,
                          checkpointDir: String, group: Option[String],

@@ -84,18 +84,16 @@ object EvalStream {
     * water, WARN-logged) an out-of-order manual caller or a fresh-
     * checkpoint restart re-reading folded history.
     */
-  def mergeBatch(batch: DataFrame, name: String, epoch: Long,
-                 groupCol: String = "source", predCol: String = "pred",
-                 refCol: String = "ref"): EvalEvent = {
+  def mergeBatch(batch: DataFrame, name: String, epoch: Long): EvalEvent = {
     val live = cellsTable(name)
     val liveDf = SwapTable.current(batch.sparkSession, live)
     SwapTable.skipOf(liveDf, "epoch", epoch, live) match {
       case Some(skip) => EvalEvent(epoch, skip, 0L)
       case None =>
         val cells = batch
-          .filter(col(predCol).isNotNull && col(refCol).isNotNull)
-          .groupBy(col(groupCol).as("grp"), col(refCol).as("ref"),
-            col(predCol).as("pred"))
+          .filter(col("pred").isNotNull && col("ref").isNotNull)
+          .groupBy(col("source").as("grp"), col("ref").as("ref"),
+            col("pred").as("pred"))
           .agg(count(lit(1)).as("n"))
           .select(lit("c").as("kind"), col("grp"), col("ref"),
             col("pred"), col("n"), lit(0L).as("epoch"))
@@ -123,15 +121,12 @@ object EvalStream {
     * group (disclosed, the batch family's convention).
     */
   def maintain(scored: DataFrame, name: String, checkpointDir: String,
-               groupCol: String = "source", predCol: String = "pred",
-               refCol: String = "ref",
                onBatch: EvalEvent => Unit = _ => ()): StreamingQuery = {
     val owner = scored.sparkSession
     scored.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: Dataset[Row], epoch: Long) =>
-        val ev = mergeBatch(batch.toDF(), name, epoch, groupCol,
-          predCol, refCol)
+        val ev = mergeBatch(batch.toDF(), name, epoch)
         SwapTable.refreshOwner(owner, cellsTable(name))
         onBatch(ev)
       }

@@ -26,7 +26,7 @@ import graft.ops.TemporalJoins
   *    accumulated history with the exact batch-operator arithmetic.
   *
   * Ordering contract (lagFeatures): within a micro-batch each key's
-  * events are processed in (`timeCol`, `idCol`) order — the batch
+  * events are processed in (`ts`, `event_id`) order — the batch
   * operator's total order — and ACROSS batches the stage trusts arrival
   * order (state never reorders history it has already emitted). Lag
   * features of a stream therefore equal the batch operator's exactly
@@ -78,11 +78,8 @@ object EventFeatureStream {
     * per-batch rescan of old events. A hot key degrades to one task's
     * sorted in-batch slice, the same floor as the batch window.
     */
-  def lagFeatures(events: DataFrame, keys: Seq[String] = Seq("user_id"),
-                  timeCol: String = "ts", idCol: String = "event_id",
-                  valueCol: String = "value",
+  def lagFeatures(events: DataFrame,
                   sessionGap: Long = 300L * 1000000L): DataFrame = {
-    require(keys.nonEmpty, "lagFeatures needs at least one key column")
     require(sessionGap > 0, s"sessionGap must be positive, got $sessionGap")
     val cols = events.columns
     val reserved = cols.filter(_.startsWith("__ef_")) ++
@@ -91,17 +88,17 @@ object EventFeatureStream {
     require(reserved.isEmpty,
       s"column(s) ${reserved.mkString(", ")} collide with lagFeatures " +
         "outputs / reserved prefix '__ef_' — rename before deriving")
-    val t = TemporalJoins.toMicros(col(timeCol), events.schema(timeCol).dataType)
-    val valueType = events.schema(valueCol).dataType
+    val t = TemporalJoins.toMicros(col("ts"), events.schema("ts").dataType)
+    val valueType = events.schema("value").dataType
     val withT = events.withColumn("__ef_t", t)
     val inSchema = withT.schema
     val tIdx = inSchema.fieldIndex("__ef_t")
-    val idIdx = inSchema.fieldIndex(idCol)
-    val valIdx = inSchema.fieldIndex(valueCol)
-    val keyIdxs = keys.map(inSchema.fieldIndex)
+    val idIdx = inSchema.fieldIndex("event_id")
+    val valIdx = inSchema.fieldIndex("value")
+    val keyIdxs = Seq("user_id").map(inSchema.fieldIndex)
     val nIn = inSchema.size
 
-    val keySchema = StructType(keys.map(k => inSchema(inSchema.fieldIndex(k))))
+    val keySchema = StructType(Seq("user_id").map(k => inSchema(inSchema.fieldIndex(k))))
     val stateSchema = StructType(Seq(
       StructField("last_t", LongType, nullable = false),
       StructField("last_value", valueType, nullable = true),
@@ -181,25 +178,20 @@ object EventFeatureStream {
     * Null-time events are skipped (no timeline position); a touched
     * key still reports its standing depth.
     */
-  def funnelDepth(events: DataFrame, steps: Seq[String],
-                  keys: Seq[String] = Seq("user_id"),
-                  typeCol: String = "event_type",
-                  timeCol: String = "ts",
-                  idCol: String = "event_id"): DataFrame = {
+  def funnelDepth(events: DataFrame, steps: Seq[String]): DataFrame = {
     require(steps.nonEmpty, "funnelDepth needs at least one step")
     require(steps.distinct.size == steps.size,
       s"duplicate step in $steps — a repeated type is ambiguous")
-    require(keys.nonEmpty, "funnelDepth needs at least one key column")
-    val t = TemporalJoins.toMicros(col(timeCol), events.schema(timeCol).dataType)
+    val t = TemporalJoins.toMicros(col("ts"), events.schema("ts").dataType)
     val withT = events.withColumn("__ef_t", t)
     val inSchema = withT.schema
     val tIdx = inSchema.fieldIndex("__ef_t")
-    val idIdx = inSchema.fieldIndex(idCol)
-    val typeIdx = inSchema.fieldIndex(typeCol)
-    val keyIdxs = keys.map(inSchema.fieldIndex)
+    val idIdx = inSchema.fieldIndex("event_id")
+    val typeIdx = inSchema.fieldIndex("event_type")
+    val keyIdxs = Seq("user_id").map(inSchema.fieldIndex)
     val k = steps.length
 
-    val keySchema = StructType(keys.map(kc => inSchema(inSchema.fieldIndex(kc))))
+    val keySchema = StructType(Seq("user_id").map(kc => inSchema(inSchema.fieldIndex(kc))))
     val stateSchema = StructType(
       (0 until k).map(i => StructField(s"t$i", LongType, nullable = true)))
     val outSchema = StructType(keySchema.fields :+
@@ -281,39 +273,21 @@ object EventFeatureStream {
     * STATE GROWTH: the tombstone keeps (key, session_idx) coordinates
     * unique after an idle flush, but it means keyed state grows with
     * ALL-TIME key cardinality (pre-r17 `state.remove()` bounded it by
-    * active keys). For high-cardinality key spaces set
-    * `tombstoneTtlMs` > 0 (sensible: ≫ `timeoutMs`, e.g. 100× the
-    * session gap): a tombstone that stays idle that long is DROPPED —
-    * state returns to active-key-bounded, at the documented cost that
-    * a key returning after the TTL restarts at session_idx = 1 (the
-    * duplicate-coordinate window shrinks from "any idle flush" to
-    * "idle flush + return after TTL", and downstream consumers keyed
-    * on (key, session_idx, first-turn time) are unaffected).
+    * active keys).
     */
   def sessionTranscripts(events: DataFrame,
-                         keys: Seq[String] = Seq("user_id"),
-                         timeCol: String = "ts", idCol: String = "event_id",
-                         typeCol: String = "event_type",
                          sessionGap: Long = 300L * 1000000L,
-                         timeoutMs: Long = -1L,
-                         tombstoneTtlMs: Long = -1L): DataFrame = {
-    require(keys.nonEmpty, "sessionTranscripts needs at least one key column")
+                         timeoutMs: Long = -1L): DataFrame = {
     require(sessionGap > 0, s"sessionGap must be positive, got $sessionGap")
-    require(tombstoneTtlMs <= 0 || timeoutMs > 0,
-      "tombstoneTtlMs needs the idle flush (timeoutMs > 0) — tombstones " +
-        "only exist on the idle-flush path")
-    require(tombstoneTtlMs <= 0 || tombstoneTtlMs >= timeoutMs,
-      s"tombstoneTtlMs ($tombstoneTtlMs) must be >= timeoutMs ($timeoutMs): " +
-        "a tombstone outliving its session's idle window is the point")
-    val t = TemporalJoins.toMicros(col(timeCol), events.schema(timeCol).dataType)
+    val t = TemporalJoins.toMicros(col("ts"), events.schema("ts").dataType)
     val withT = events.withColumn("__ef_t", t)
     val inSchema = withT.schema
     val tIdx = inSchema.fieldIndex("__ef_t")
-    val idIdx = inSchema.fieldIndex(idCol)
-    val typeIdx = inSchema.fieldIndex(typeCol)
-    val keyIdxs = keys.map(inSchema.fieldIndex)
+    val idIdx = inSchema.fieldIndex("event_id")
+    val typeIdx = inSchema.fieldIndex("event_type")
+    val keyIdxs = Seq("user_id").map(inSchema.fieldIndex)
 
-    val keySchema = StructType(keys.map(kc => inSchema(inSchema.fieldIndex(kc))))
+    val keySchema = StructType(Seq("user_id").map(kc => inSchema(inSchema.fieldIndex(kc))))
     val stateSchema = StructType(Seq(
       StructField("last_t", LongType, nullable = false),
       StructField("session_idx", LongType, nullable = false),
@@ -334,35 +308,21 @@ object EventFeatureStream {
     def fn(key: Row, it: Iterator[Row], state: GroupState[Row]): Iterator[Row] = {
       if (state.hasTimedOut) {
         val s = state.get
-        if (s.getBoolean(3)) {
-          // a TOMBSTONE timed out — only reachable with
-          // tombstoneTtlMs > 0 (the flush below is the only place that
-          // arms a tombstone timer). The key has been silent for the
-          // whole TTL: drop its state so the store stays bounded by
-          // ACTIVE keys, accepting the documented session_idx reset if
-          // the key ever returns.
-          state.remove()
-          Iterator.empty
-        } else {
-          // idle flush: the open session closes by silence. Keep a
-          // TOMBSTONE (same session_idx, flushed=true, empty turns)
-          // instead of state.remove(): removal forgot the per-key
-          // counter, so the key's next event restarted at session_idx=1
-          // and the stream emitted DUPLICATE (key, session_idx)
-          // coordinates after any idle flush (r16 advice). The
-          // tombstone keeps numbering monotone and dense — the next
-          // event opens session_idx + 1. With tombstoneTtlMs > 0 a
-          // long timer is re-armed so an abandoned key's tombstone is
-          // eventually dropped; otherwise it stays, one tiny row per
-          // idle key, inert until the key returns.
-          val turns = s.getSeq[String](2)
-          state.update(Row(s.getLong(0), s.getLong(1),
-            Seq.empty[String], true))
-          if (tombstoneTtlMs > 0) state.setTimeoutDuration(tombstoneTtlMs)
-          if (turns.nonEmpty)
-            Iterator.single(sessionRow(key, s.getLong(1), turns))
-          else Iterator.empty
-        }
+        // idle flush: the open session closes by silence. Keep a
+        // TOMBSTONE (same session_idx, flushed=true, empty turns)
+        // instead of state.remove(): removal forgot the per-key
+        // counter, so the key's next event restarted at session_idx=1
+        // and the stream emitted DUPLICATE (key, session_idx)
+        // coordinates after any idle flush (r16 advice). The
+        // tombstone keeps numbering monotone and dense — the next
+        // event opens session_idx + 1. The tombstone stays, one tiny
+        // row per idle key, inert until the key returns.
+        val turns = s.getSeq[String](2)
+        state.update(Row(s.getLong(0), s.getLong(1),
+          Seq.empty[String], true))
+        if (turns.nonEmpty)
+          Iterator.single(sessionRow(key, s.getLong(1), turns))
+        else Iterator.empty
       } else {
         val keyNull = (0 until key.size).exists(key.isNullAt)
         val valid = it.toVector.filter(r =>
@@ -441,49 +401,45 @@ object EventFeatureStream {
     * on a long-running stream.
     */
   def rateAnomalies(events: DataFrame, storeDir: String,
-                    checkpointDir: String, key: String = "user_id",
-                    timeCol: String = "ts",
-                    binMicros: Long = 3600L * 1000000L,
-                    factorX100: Long = 300L, compactEvery: Int = 0)
+                    checkpointDir: String,
+                    binMicros: Long = 3600L * 1000000L, compactEvery: Int = 0)
                    (sink: (DataFrame, Long) => Unit): StreamingQuery = {
-    require(factorX100 > 100,
-      s"factorX100 must exceed 100 (the median itself), got $factorX100")
     val Sep = "\u001F"
     events.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: Dataset[Row], epoch: Long) =>
         val spark = batch.sparkSession
         val bins = graft.ops.EventFeatures
-          .binCounts(batch.toDF(), key, timeCol, binMicros)
+          .binCounts(batch.toDF(), "user_id", "ts", binMicros)
           // read twice (store upsert + touched-key list) → pinned;
           // bounded by the batch's (key, bin) cardinality
           .pin()
-        val touched = bins.select(col(key)).distinct()
+        val touched = bins.select(col("user_id")).distinct()
           .collect().map(_.get(0)).toSeq
         if (touched.nonEmpty) {
           require(!touched.exists(_.toString.contains(Sep)),
             s"rateAnomalies: key values must not contain the 0x1F separator")
           val rows = bins.select(
-            concat_ws(Sep, col(key), col("bin_start_us"), lit(epoch))
+            concat_ws(Sep, col("user_id"), col("bin_start_us"), lit(epoch))
               .as("bin_key"),
-            col(key), col("bin_start_us"), col("n_events"))
+            col("user_id"), col("bin_start_us"), col("n_events"))
           val head = ManifestStore.upsert(rows, storeDir)
           // full history of the touched keys only — pruned below the
           // version window (safe: `key` is embedded in the row key, so
           // the predicate is version-invariant)
           val hist = ManifestStore
-            .readWhere(spark, storeDir, head, "bin_key", col(key).isin(touched: _*))
-            .groupBy(col(key), col("bin_start_us"))
+            .readWhere(spark, storeDir, head, "bin_key", col("user_id").isin(touched: _*))
+            .groupBy(col("user_id"), col("bin_start_us"))
             .agg(sum(col("n_events")).as("n_events"))
             .pin() // the flag helper reads it twice
-          sink(graft.ops.EventFeatures.flagBins(hist, key, factorX100), epoch)
+          sink(graft.ops.EventFeatures.flagBins(hist, "user_id", 300L), epoch)
           ManifestStore.compactOnCadence(spark, storeDir, compactEvery, head)(
             ManifestStore.compact(spark, storeDir, "bin_key"))
           ()
         } else sink(
           graft.ops.EventFeatures.flagBins(
             bins.withColumn("bin_start_us", col("bin_start_us").cast("long")),
-            key, factorX100), epoch)
+            "user_id", 300L), epoch)
       }
       .start()
   }

@@ -51,8 +51,26 @@ object IngestDedupGate {
   /** Key-sorted files per table in each version dir. */
   private val StoreBuckets = 8
 
+  /** The near-dup layout the store's band rows are keyed under: the
+    * shingle width, the band tiling and a hash of the MinHash
+    * permutations. Recorded in every manifest the gate commits and
+    * checked on every open, so a build with other constants fails
+    * instead of matching none of the stored band keys.
+    */
+  private[graft] val Layout: String =
+    s"minhash shingle=${Dedup.ShingleN} bands=${Dedup.NumBands} " +
+      f"rows=${Dedup.RowsPerBand} perms=${scala.util.hashing.MurmurHash3.seqHash(Dedup.Perms)}%08x"
+
+  /** The store's latest manifest, checked against [[Layout]]. */
+  private def openStore(spark: SparkSession, dir: String): Option[ManifestStore.Manifest] =
+    ManifestStore.latestManifest(spark, dir).map(ManifestStore.requireLayout(_, dir, Layout))
+
+  private def headOf(spark: SparkSession, dir: String): ManifestStore.Manifest =
+    openStore(spark, dir).getOrElse(
+      throw new IllegalStateException(s"no committed version under $dir"))
+
   def storeExists(spark: SparkSession, name: String): Boolean =
-    ManifestStore.latestManifest(spark, storeDir(spark, name)).nonEmpty
+    openStore(spark, storeDir(spark, name)).nonEmpty
 
   private def readPart(spark: SparkSession, dir: String,
                        m: ManifestStore.Manifest, part: String): DataFrame =
@@ -65,19 +83,13 @@ object IngestDedupGate {
     */
   def bands(spark: SparkSession, name: String): DataFrame = {
     val dir = storeDir(spark, name)
-    readPart(spark, dir,
-      ManifestStore.latestManifest(spark, dir).getOrElse(
-        throw new IllegalStateException(s"no committed version under $dir")),
-      "bands")
+    readPart(spark, dir, headOf(spark, dir), "bands")
   }
 
   /** The store's signature rows (id, hashes, sig), pinned likewise. */
   def feats(spark: SparkSession, name: String): DataFrame = {
     val dir = storeDir(spark, name)
-    readPart(spark, dir,
-      ManifestStore.latestManifest(spark, dir).getOrElse(
-        throw new IllegalStateException(s"no committed version under $dir")),
-      "feats")
+    readPart(spark, dir, headOf(spark, dir), "feats")
   }
 
   /** Key ordering for the chunk sort: integral and String keys (the
@@ -140,35 +152,34 @@ object IngestDedupGate {
     * (bounded by the micro-batch); store scans are isin-pruned by the
     * batch's key sets in `isinChunk`-sized chunks ([[prunedByKeys]]).
     */
-  def filterNovel(batch: DataFrame, name: String, idCol: String = "doc_id",
-                  textCol: String = "text", jaccardNum: Int = 8,
+  def filterNovel(batch: DataFrame, name: String, jaccardNum: Int = 8,
                   jaccardDen: Int = 10, isinChunk: Int = 10000): DataFrame = {
     val spark = batch.sparkSession
     val batchReps = Dedup.withExactReps(
-        Dedup.features(batch, idCol, textCol), idCol)
-      .filter(col(idCol) === col("rep")).drop("rep")
+        Dedup.features(batch, "doc_id", "text"), "doc_id")
+      .filter(col("doc_id") === col("rep")).drop("rep")
       .pin()
     val survivors =
       if (!storeExists(spark, name)) batchReps
       else {
         // 1. redelivered ids: the feats scan pruned to the batch's own
         //    ids (row-group stats via the id sort), then a tiny anti-join
-        val batchIds = batchReps.select(col(idCol)).collect().map(_.get(0)).toSeq
+        val batchIds = batchReps.select(col("doc_id")).collect().map(_.get(0)).toSeq
         val unknownIds = batchReps.join(
-          prunedByKeys(feats(spark, name).select(col(idCol)), idCol,
+          prunedByKeys(feats(spark, name).select(col("doc_id")), "doc_id",
             batchIds, isinChunk),
-          Seq(idCol), "left_anti")
+          Seq("doc_id"), "left_anti")
         // 2. near-dups of stored content: batch band keys vs the store,
         //    scanned pruned by the batch's key chunks. The BOUNDED side
         //    is the batch (|batch| × NumBands rows), so it is broadcast.
-        val bb = Dedup.bands(unknownIds, idCol)
+        val bb = Dedup.bands(unknownIds, "doc_id")
           .filter(col("bkey").isNotNull)
         val batchKeys = bb.select("bkey").distinct().collect()
           .map(_.get(0): Any).toSeq
         val dupIds = storeNearDupIds(bb,
           prunedByKeys(bands(spark, name), "bkey", batchKeys, isinChunk),
-          batchReps, idCol, broadcastBatch = true, jaccardNum, jaccardDen)
-        unknownIds.join(dupIds, Seq(idCol), "left_anti")
+          batchReps, "doc_id", broadcastBatch = true, jaccardNum, jaccardDen)
+        unknownIds.join(dupIds, Seq("doc_id"), "left_anti")
       }
     // within-batch near-dups: lshCandidates emits canonically-ordered
     // (doc_a < doc_b) pairs, so doc_b always has a smaller-id near-dup
@@ -178,16 +189,16 @@ object IngestDedupGate {
     // checkpoint before feeding the self-join's branches.
     val checked =
       if (survivors eq batchReps) batchReps else survivors.pin()
-    withinPairs(checked, "ingest gate", "batch", idCol, jaccardNum,
+    withinPairs(checked, "ingest gate", "batch", "doc_id", jaccardNum,
         jaccardDen) { passing =>
       // the common batch has ZERO within-batch near-dup pairs — skip the
       // drop anti-join and the orphan probe's two joins + count entirely
       // (isEmpty on the checkpointed pair frame is a cheap partition peek)
       if (passing.isEmpty) checked
       else {
-        val batchDups = passing.select(col("doc_b").as(idCol)).distinct()
+        val batchDups = passing.select(col("doc_b").as("doc_id")).distinct()
         discloseOrphans(passing, "ingest gate", "within-batch doc(s) dropped", "batch")
-        checked.join(batchDups, Seq(idCol), "left_anti").pin()
+        checked.join(batchDups, Seq("doc_id"), "left_anti").pin()
       }
     }
   }
@@ -282,8 +293,7 @@ object IngestDedupGate {
     * broadcast: one popular band key can match millions of stored
     * rows). Work then scales with |drop| + collisions either way.
     */
-  def probeBatch(corpus: DataFrame, name: String, idCol: String = "doc_id",
-                 textCol: String = "text", jaccardNum: Int = 8,
+  def probeBatch(corpus: DataFrame, name: String, jaccardNum: Int = 8,
                  jaccardDen: Int = 10, isinChunk: Int = 10000,
                  pushdownKeyLimit: Int = 200000): DataFrame = {
     val spark = corpus.sparkSession
@@ -292,26 +302,26 @@ object IngestDedupGate {
         s"version under ${storeDir(spark, name)} — run the gate (or " +
         "appendToStore) first")
     val feats0 = Dedup.withExactReps(
-      Dedup.features(corpus, idCol, textCol), idCol).pin()
-    val exactDup = feats0.filter(col(idCol) =!= col("rep"))
-      .select(col(idCol), lit("exact_dup_batch").as("verdict"))
-    val batchReps = feats0.filter(col(idCol) === col("rep")).drop("rep")
+      Dedup.features(corpus, "doc_id", "text"), "doc_id").pin()
+    val exactDup = feats0.filter(col("doc_id") =!= col("rep"))
+      .select(col("doc_id"), lit("exact_dup_batch").as("verdict"))
+    val batchReps = feats0.filter(col("doc_id") === col("rep")).drop("rep")
     // bounded probe of the drop's size decides pruned-IN vs full join
-    val sampled = batchReps.select(col(idCol))
+    val sampled = batchReps.select(col("doc_id"))
       .limit(pushdownKeyLimit + 1).collect().map(_.get(0)).toSeq
     val prune = sampled.length <= pushdownKeyLimit
     // stage 1: redelivered ids
     val storeIds =
-      if (prune) prunedByKeys(feats(spark, name).select(col(idCol)), idCol,
+      if (prune) prunedByKeys(feats(spark, name).select(col("doc_id")), "doc_id",
         sampled, isinChunk)
-      else feats(spark, name).select(col(idCol))
-    val knownIds = batchReps.select(col(idCol))
-      .join(storeIds, Seq(idCol), "left_semi")
-      .select(col(idCol), lit("known_id").as("verdict"))
-    val unknown = batchReps.join(storeIds, Seq(idCol), "left_anti")
+      else feats(spark, name).select(col("doc_id"))
+    val knownIds = batchReps.select(col("doc_id"))
+      .join(storeIds, Seq("doc_id"), "left_semi")
+      .select(col("doc_id"), lit("known_id").as("verdict"))
+    val unknown = batchReps.join(storeIds, Seq("doc_id"), "left_anti")
       .pin()
     // stage 2: near-dups of stored content, as in the gate
-    val bb = Dedup.bands(unknown, idCol)
+    val bb = Dedup.bands(unknown, "doc_id")
       .filter(col("bkey").isNotNull)
     val storeBands = {
       val base = bands(spark, name)
@@ -321,25 +331,25 @@ object IngestDedupGate {
         prunedByKeys(base, "bkey", batchKeys, isinChunk)
       } else base
     }
-    val storeDup = storeNearDupIds(bb, storeBands, unknown, idCol, prune,
+    val storeDup = storeNearDupIds(bb, storeBands, unknown, "doc_id", prune,
         jaccardNum, jaccardDen).distinct()
-      .select(col(idCol), lit("store_near_dup").as("verdict"))
+      .select(col("doc_id"), lit("store_near_dup").as("verdict"))
     // stage 3: within-drop pairwise near-dups over the survivors — the
     // same capped candidate generation + disclosure as filterNovel
-    val survivors = unknown.join(storeDup.select(col(idCol)),
-      Seq(idCol), "left_anti").pin()
-    withinPairs(survivors, "gate probe", "drop", idCol, jaccardNum,
+    val survivors = unknown.join(storeDup.select(col("doc_id")),
+      Seq("doc_id"), "left_anti").pin()
+    withinPairs(survivors, "gate probe", "drop", "doc_id", jaccardNum,
         jaccardDen) { passing =>
-      val batchDup = passing.select(col("doc_b").as(idCol)).distinct()
-        .select(col(idCol), lit("batch_near_dup").as("verdict"))
+      val batchDup = passing.select(col("doc_b").as("doc_id")).distinct()
+        .select(col("doc_id"), lit("batch_near_dup").as("verdict"))
       if (!passing.isEmpty)
         discloseOrphans(passing, "gate probe", "within-drop doc(s) would drop", "drop")
       // stages are disjoint by construction — one labeled union, then the
       // left join back to the drop; unlabeled = admitted
       val labeled = exactDup.unionByName(knownIds).unionByName(storeDup)
         .unionByName(batchDup)
-      corpus.select(col(idCol)).join(labeled, Seq(idCol), "left")
-        .select(col(idCol), coalesce(col("verdict"), lit("admit")).as("verdict"))
+      corpus.select(col("doc_id")).join(labeled, Seq("doc_id"), "left")
+        .select(col("doc_id"), coalesce(col("verdict"), lit("admit")).as("verdict"))
     }
   }
 
@@ -356,17 +366,16 @@ object IngestDedupGate {
     * reader ever sees; there is no state where one table has the batch
     * and the other does not. Returns the committed manifest.
     */
-  def appendToStore(novelFeats: DataFrame, name: String,
-                    idCol: String = "doc_id"): ManifestStore.Manifest = {
+  def appendToStore(novelFeats: DataFrame, name: String): ManifestStore.Manifest = {
     val spark = novelFeats.sparkSession
-    val bandRows = Dedup.bands(novelFeats, idCol)
+    val bandRows = Dedup.bands(novelFeats, "doc_id")
       .filter(col("bkey").isNotNull)
-      .join(novelFeats.select(col(idCol), col("hashes")), Seq(idCol))
+      .join(novelFeats.select(col("doc_id"), col("hashes")), Seq("doc_id"))
     ManifestStore.commitVersion(spark, storeDir(spark, name),
-        replace = false) { (_, path) =>
+        replace = false, Layout) { (_, path) =>
       writeSorted(bandRows, s"$path/bands", "bkey")
-      writeSorted(novelFeats.select(col(idCol), col("hashes"), col("sig")),
-        s"$path/feats", idCol)
+      writeSorted(novelFeats.select(col("doc_id"), col("hashes"), col("sig")),
+        s"$path/feats", "doc_id")
     }
   }
 
@@ -378,12 +387,11 @@ object IngestDedupGate {
     * maintenance cadence; [[ManifestStore.vacuum]] over [[storeDir]]
     * reclaims the superseded dirs. Returns the committed manifest.
     */
-  def compactStore(spark: SparkSession, name: String,
-                   idCol: String = "doc_id"): ManifestStore.Manifest = {
+  def compactStore(spark: SparkSession, name: String): ManifestStore.Manifest = {
     val dir = storeDir(spark, name)
-    ManifestStore.commitVersion(spark, dir, replace = true) { (m0, path) =>
+    ManifestStore.commitVersion(spark, dir, replace = true, Layout) { (m0, path) =>
       writeSorted(readPart(spark, dir, m0, "bands"), s"$path/bands", "bkey")
-      writeSorted(readPart(spark, dir, m0, "feats"), s"$path/feats", idCol)
+      writeSorted(readPart(spark, dir, m0, "feats"), s"$path/feats", "doc_id")
     }
   }
 
@@ -397,8 +405,7 @@ object IngestDedupGate {
     */
   def storeStats(spark: SparkSession, name: String): DataFrame = {
     val dir = storeDir(spark, name)
-    val m = ManifestStore.latestManifest(spark, dir).getOrElse(
-      throw new IllegalStateException(s"no committed version under $dir"))
+    val m = headOf(spark, dir)
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     def part(p: String): (Long, Long) = {
@@ -434,7 +441,6 @@ object IngestDedupGate {
     * owning an external maintenance schedule keep it).
     */
   def gate(docs: DataFrame, name: String, checkpointDir: String,
-           idCol: String = "doc_id", textCol: String = "text",
            jaccardNum: Int = 8, jaccardDen: Int = 10, isinChunk: Int = 10000,
            compactEvery: Int = 0)
           (sink: (DataFrame, Long) => Unit): StreamingQuery =
@@ -443,12 +449,12 @@ object IngestDedupGate {
       .foreachBatch { (batch: Dataset[Row], epoch: Long) =>
         val b = batch.toDF()
         val spark = b.sparkSession
-        val novel = filterNovel(b, name, idCol, textCol, jaccardNum,
+        val novel = filterNovel(b, name, jaccardNum,
           jaccardDen, isinChunk)
-        sink(b.join(novel.select(col(idCol)), Seq(idCol), "left_semi"), epoch)
+        sink(b.join(novel.select(col("doc_id")), Seq("doc_id"), "left_semi"), epoch)
         ManifestStore.compactOnCadence(spark, storeDir(spark, name),
-          compactEvery, appendToStore(novel, name, idCol))(
-          compactStore(spark, name, idCol))
+          compactEvery, appendToStore(novel, name))(
+          compactStore(spark, name))
         ()
       }
       .start()

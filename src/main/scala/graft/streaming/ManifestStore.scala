@@ -49,7 +49,15 @@ import graft.tables.LatestByKey
   */
 object ManifestStore {
 
-  final case class Manifest(version: Long, dirs: Seq[(Long, String)])
+  /** One committed version: its live dirs and the layout the store was
+    * written with (empty for a store without one). A store whose rows
+    * are only meaningful under fixed constants — the [[IngestDedupGate]]
+    * signature store's band layout — records them here, and every
+    * commit and open checks them ([[requireLayout]]).
+    */
+  final case class Manifest(version: Long, dirs: Seq[(Long, String)], layout: String)
+
+  private val LayoutLine = "layout\t"
 
   private val ManifestName = """_manifest\.(\d+)\.txt""".r
 
@@ -71,11 +79,24 @@ object ManifestStore {
     val in = fs.open(new Path(new Path(dir), s"_manifest.$v.txt"))
     val content = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
     finally in.close()
-    val dirs = content.linesIterator.filter(_.nonEmpty).map { line =>
+    val (layout, dirLines) = content.linesIterator.filter(_.nonEmpty).toSeq
+      .partition(_.startsWith(LayoutLine))
+    val dirs = dirLines.map { line =>
       val Array(fv, rel) = line.split("\t", 2)
       (fv.toLong, rel)
-    }.toSeq
-    Manifest(v, dirs)
+    }
+    Manifest(v, dirs, layout.headOption.fold("")(_.stripPrefix(LayoutLine)))
+  }
+
+  /** `m`, the manifest of the store under `dir`, if it records `layout`;
+    * otherwise fails naming both layouts — rows written under another
+    * layout would be read as if written under this one.
+    */
+  private[streaming] def requireLayout(m: Manifest, dir: String, layout: String): Manifest = {
+    if (m.layout != layout) throw new IllegalStateException(
+      s"store under $dir was written with layout [${m.layout}], " +
+        s"but this build reads and writes layout [$layout]")
+    m
   }
 
   /** The highest committed manifest, if any commit ever happened. */
@@ -91,7 +112,8 @@ object ManifestStore {
     */
   private[graft] def commit(spark: SparkSession, dir: String, m: Manifest): Unit = {
     val fs = hfs(spark, dir)
-    val body = m.dirs.map { case (v, rel) => s"$v\t$rel" }.mkString("\n")
+    val body = (Some(m.layout).filter(_.nonEmpty).map(LayoutLine + _) ++
+      m.dirs.map { case (v, rel) => s"$v\t$rel" }).mkString("\n")
     val tmp = new Path(dir, s"_manifest.${m.version}.txt.tmp-${java.util.UUID.randomUUID()}")
     val out = fs.create(tmp, false)
     try out.write(body.getBytes(StandardCharsets.UTF_8)) finally out.close()
@@ -136,21 +158,23 @@ object ManifestStore {
     * manifest names it, so a crash in between leaves an unreferenced
     * dir no reader sees (and [[vacuum]] spares while its version is
     * ahead of the head). With no commit yet the head is version 0 with
-    * no dirs, and a `replace` is a no-op. Returns the head after the
+    * no dirs, and a `replace` is a no-op. The manifest records `layout`,
+    * and a head written under another layout fails the commit
+    * ([[requireLayout]]) before anything is written. Returns the head after the
     * call — the committed manifest — so the single writer's cadence
     * check and read-back need not list the store again.
     */
   private[streaming] def commitVersion(spark: SparkSession, dir: String,
-                                       replace: Boolean)
+                                       replace: Boolean, layout: String)
                                       (write: (Manifest, String) => Unit): Manifest = {
-    val head = latestManifest(spark, dir)
-    val m0 = head.getOrElse(Manifest(0L, Nil))
+    val head = latestManifest(spark, dir).map(requireLayout(_, dir, layout))
+    val m0 = head.getOrElse(Manifest(0L, Nil, layout))
     if (replace && head.isEmpty) m0
     else {
       val v = m0.version + 1
       val rel = s"d-$v-${java.util.UUID.randomUUID().toString.take(8)}"
       write(m0, s"$dir/$rel")
-      val m = Manifest(v, (if (replace) Nil else m0.dirs) :+ (v -> rel))
+      val m = Manifest(v, (if (replace) Nil else m0.dirs) :+ (v -> rel), layout)
       commit(spark, dir, m)
       m
     }
@@ -165,7 +189,7 @@ object ManifestStore {
   def applyChanges(latest: DataFrame, dir: String): Manifest = {
     require(latest.columns.contains("__op"),
       "applyChanges needs an __op column; use upsert() for plain upserts")
-    commitVersion(latest.sparkSession, dir, replace = false) { (_, path) =>
+    commitVersion(latest.sparkSession, dir, replace = false, layout = "") { (_, path) =>
       latest.write.parquet(path)
     }
   }
@@ -241,7 +265,7 @@ object ManifestStore {
     * until [[vacuum]]. Returns the committed manifest.
     */
   def compact(spark: SparkSession, dir: String, key: String): Manifest =
-    commitVersion(spark, dir, replace = true) { (m0, path) =>
+    commitVersion(spark, dir, replace = true, layout = "") { (m0, path) =>
       readWherePruned(spark, dir, m0, key, identity).withColumn("__op", lit("u"))
         .write.parquet(path)
     }
@@ -322,9 +346,9 @@ object ManifestStore {
     * `compactEvery` is the [[compactOnCadence]] trigger.
     */
   def maintain(versions: DataFrame, key: String, ts: String, dir: String,
-               checkpointDir: String, tiebreak: Seq[String] = Nil,
+               checkpointDir: String,
                compactEvery: Int = 0): StreamingQuery =
-    LatestByKey.streaming(versions, key, ts, tiebreak = tiebreak)
+    LatestByKey.streaming(versions, key, ts, tiebreak = Nil)
       .writeStream
       .outputMode("update")
       .option("checkpointLocation", checkpointDir)

@@ -38,17 +38,14 @@ object PreferenceStream {
     * prompts that clear `minMargin`, plus the epoch.
     */
   def maintainDpo(responses: DataFrame, storeDir: String,
-                  checkpointDir: String, promptCol: String = "prompt_id",
-                  respCol: String = "response_id",
-                  scoreCol: String = "score", minMargin: Long = 1L,
+                  checkpointDir: String,
                   compactEvery: Int = 0)
                  (sink: (DataFrame, Long) => Unit): StreamingQuery = {
-    require(minMargin >= 1L, s"minMargin must be >= 1, got $minMargin")
     responses.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: Dataset[Row], epoch: Long) =>
-        sink(mergeDpoBatch(batch.toDF(), storeDir, epoch, promptCol,
-          respCol, scoreCol, minMargin, compactEvery), epoch)
+        sink(mergeDpoBatch(batch.toDF(), storeDir, epoch,
+          "response_id", compactEvery), epoch)
       }
       .start()
   }
@@ -84,26 +81,23 @@ object PreferenceStream {
     * store's one cadence ([[ManifestStore.compactOnCadence]]).
     */
   def mergeDpoBatch(batch: DataFrame, storeDir: String, epoch: Long,
-                    promptCol: String = "prompt_id",
                     respCol: String = "response_id",
-                    scoreCol: String = "score", minMargin: Long = 1L,
                     compactEvery: Int = 0, isinChunk: Int = 10000,
                     pushdownKeyLimit: Int = 200000): DataFrame = {
-    require(minMargin >= 1L, s"minMargin must be >= 1, got $minMargin")
     val spark = batch.sparkSession
-    val scoreType = batch.select(col(scoreCol)).schema.head.dataType
+    val scoreType = batch.select(col("score")).schema.head.dataType
     require(scoreType.isInstanceOf[org.apache.spark.sql.types.ByteType]
         || scoreType.isInstanceOf[org.apache.spark.sql.types.ShortType]
         || scoreType.isInstanceOf[org.apache.spark.sql.types.IntegerType]
         || scoreType.isInstanceOf[org.apache.spark.sql.types.LongType],
-      s"mergeDpoBatch needs an integral score column ($scoreCol is " +
+      s"mergeDpoBatch needs an integral score column (score is " +
         s"$scoreType) — the dpoPairs contract")
     // the batch's own partial verdicts — the associative fold
     val partial = batch
-      .filter(col(promptCol).isNotNull && col(respCol).isNotNull &&
-        col(scoreCol).isNotNull)
-      .select(col(promptCol).cast("string").as("prompt"),
-        col(respCol), col(scoreCol).cast("long").as("__dp_s"))
+      .filter(col("prompt_id").isNotNull && col(respCol).isNotNull &&
+        col("score").isNotNull)
+      .select(col("prompt_id").cast("string").as("prompt"),
+        col(respCol), col("score").cast("long").as("__dp_s"))
       .groupBy(col("prompt"))
       .agg(
         min(struct((-col("__dp_s")).as("ns"), col(respCol).as("id")))
@@ -123,7 +117,7 @@ object PreferenceStream {
     // empty batch: the sink still receives the OPERATOR's row shape
     // (pairsOf over the empty partial), never a zero-column frame a
     // column-selecting sink would crash on
-    if (touched.isEmpty) return pairsOf(partial, promptCol, minMargin)
+    if (touched.isEmpty) return pairsOf(partial, "prompt_id", 1L)
     // the Sep guard must cover EVERY key: the collected set is complete
     // on the chunked path; on the oversized path the guard rides the
     // row_key expression itself (raise_error — zero extra jobs, fails
@@ -142,7 +136,7 @@ object PreferenceStream {
       ManifestStore.upsert(rows, storeDir))(
       ManifestStore.compact(spark, storeDir, "row_key"))
     pairsOf(prunedStoreRead(spark, storeDir, head, "prompt", touched, partial,
-      isinChunk, pushdownKeyLimit), promptCol, minMargin)
+      isinChunk, pushdownKeyLimit), "prompt_id", 1L)
   }
 
   /** The merge paths' shared touched-key store read: chunked sorted INs
@@ -173,10 +167,8 @@ object PreferenceStream {
     * .dpoPairs]] over the union of every batch — gated by
     * t_dpo_stream).
     */
-  def currentDpoPairs(spark: SparkSession, storeDir: String,
-                      promptCol: String = "prompt_id",
-                      minMargin: Long = 1L): DataFrame =
-    pairsOf(ManifestStore.read(spark, storeDir, "row_key"), promptCol, minMargin)
+  def currentDpoPairs(spark: SparkSession, storeDir: String): DataFrame =
+    pairsOf(ManifestStore.read(spark, storeDir, "row_key"), "prompt_id", 1L)
 
   /** Merge partial-verdict store rows with the SAME fold the batch
     * operator runs, then apply the pair law — bit-equal to dpoPairs
@@ -205,15 +197,12 @@ object PreferenceStream {
     * conversations, plus the epoch.
     */
   def maintainChat(turns: DataFrame, storeDir: String,
-                   checkpointDir: String, convCol: String = "conv_id",
-                   idxCol: String = "turn_idx", roleCol: String = "role",
-                   contentCol: String = "content", compactEvery: Int = 0)
+                   checkpointDir: String, compactEvery: Int = 0)
                   (sink: (DataFrame, Long) => Unit): StreamingQuery =
     turns.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: Dataset[Row], epoch: Long) =>
-        sink(mergeChatBatch(batch.toDF(), storeDir, epoch, convCol,
-          idxCol, roleCol, contentCol, compactEvery), epoch)
+        sink(mergeChatBatch(batch.toDF(), storeDir, epoch, compactEvery), epoch)
       }
       .start()
 
@@ -243,10 +232,6 @@ object PreferenceStream {
     * chunked-IN / semi-join pruning law, shared via the same helper).
     */
   def mergeChatBatch(batch: DataFrame, storeDir: String, epoch: Long,
-                     convCol: String = "conv_id",
-                     idxCol: String = "turn_idx",
-                     roleCol: String = "role",
-                     contentCol: String = "content",
                      compactEvery: Int = 0, isinChunk: Int = 10000,
                      pushdownKeyLimit: Int = 200000): DataFrame = {
     val spark = batch.sparkSession
@@ -255,12 +240,12 @@ object PreferenceStream {
     // order-AGNOSTIC (see the scaladoc tie-law note); cross-epoch
     // edits resolve by the latest-wins epoch law in renderOf
     val batchTurns = batch
-      .filter(col(convCol).isNotNull && col(idxCol).isNotNull &&
-        col(roleCol).isNotNull && col(contentCol).isNotNull)
-      .select(col(convCol).cast("string").as("conv"),
-        col(idxCol).cast("long").as("turn_idx"),
-        col(roleCol).cast("string").as("role"),
-        col(contentCol).cast("string").as("content"))
+      .filter(col("conv_id").isNotNull && col("turn_idx").isNotNull &&
+        col("role").isNotNull && col("content").isNotNull)
+      .select(col("conv_id").cast("string").as("conv"),
+        col("turn_idx").cast("long").as("turn_idx"),
+        col("role").cast("string").as("role"),
+        col("content").cast("string").as("content"))
       .groupBy(col("conv"), col("turn_idx"))
       .agg(max(struct(col("role"), col("content"))).as("rc"))
       .select(col("conv"), col("turn_idx"),
@@ -274,7 +259,7 @@ object PreferenceStream {
     // empty batch: keep the operator's row shape (renderOf over the
     // empty collapsed batch), never a zero-column frame
     if (touched.isEmpty)
-      return renderOf(batchTurns.withColumn("epoch", lit(epoch)), convCol)
+      return renderOf(batchTurns.withColumn("epoch", lit(epoch)), "conv_id")
     require(!touched.exists(_.contains(Sep)),
       "mergeChatBatch: conv ids must not contain the 0x1F separator")
     val convGuard =
@@ -291,7 +276,7 @@ object PreferenceStream {
       ManifestStore.upsert(rows, storeDir))(
       ManifestStore.compact(spark, storeDir, "row_key"))
     renderOf(prunedStoreRead(spark, storeDir, head, "conv", touched, batchTurns,
-      isinChunk, pushdownKeyLimit), convCol)
+      isinChunk, pushdownKeyLimit), "conv_id")
   }
 
   /** The CURRENT rendered conversations over the WHOLE maintained
@@ -300,9 +285,8 @@ object PreferenceStream {
     * [[graft.ext.Packing.renderChat]] over the latest version of every
     * turn (gated by t_chat_stream).
     */
-  def currentChats(spark: SparkSession, storeDir: String,
-                   convCol: String = "conv_id"): DataFrame =
-    renderOf(ManifestStore.read(spark, storeDir, "row_key"), convCol)
+  def currentChats(spark: SparkSession, storeDir: String): DataFrame =
+    renderOf(ManifestStore.read(spark, storeDir, "row_key"), "conv_id")
 
   /** Latest epoch wins per (conv, turn_idx) — replay-idempotent AND
     * turn-edit semantics in one rule — then the batch render.
@@ -314,7 +298,6 @@ object PreferenceStream {
         .as("rc"))
       .select(col("conv").as(convCol), col("turn_idx"),
         col("rc.role").as("role"), col("rc.content").as("content"))
-    graft.ext.Packing.renderChat(latest, convCol, "turn_idx", "role",
-      "content")
+    graft.ext.Packing.renderChat(latest, convCol)
   }
 }

@@ -16,14 +16,13 @@ object PushQuery {
     * The query is always stopped before returning — a LIMIT push query
     * is transient by definition.
     */
-  def emitChangesLimit(df: DataFrame, n: Int,
-                       timeoutMs: Long = 30000L): Seq[Row] = {
+  def emitChangesLimit(df: DataFrame, n: Int): Seq[Row] = {
     val name = s"push_${UUID.randomUUID().toString.replace("-", "")}"
     val spark = df.sparkSession
     val q = df.writeStream.format("memory").queryName(name)
       .outputMode("append").start()
     try {
-      val deadline = System.currentTimeMillis() + timeoutMs
+      val deadline = System.currentTimeMillis() + 30000L
       var have = 0L
       while (have < n && System.currentTimeMillis() < deadline && q.isActive) {
         have = spark.table(name).count()

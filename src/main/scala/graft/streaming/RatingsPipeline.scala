@@ -44,12 +44,9 @@ final case class RatingsPipeline(
 object RatingsPipeline {
 
   def apply(ratings: DataFrame, customers: DataFrame,
-            watermark: String = "10 minutes",
-            testPattern: String = "%test%",
-            unhappyStarsBelow: Double = 3.0,
-            platinumStatus: String = "platinum"): RatingsPipeline = {
-    val live = RatingsOps.live(ratings, testPattern)
-    val test = RatingsOps.test(ratings, testPattern)
+            watermark: String = "10 minutes"): RatingsPipeline = {
+    val live = RatingsOps.live(ratings, "%test%")
+    val test = RatingsOps.test(ratings, "%test%")
     val enriched = RatingsOps.enrich(ratings, customers)
     val watermarked = enriched.withWatermark("ts", watermark)
     val ratingsWm = ratings.withWatermark("ts", watermark)
@@ -59,7 +56,7 @@ object RatingsPipeline {
       test = test,
       enriched = enriched,
       unhappyPlatinum =
-        RatingsOps.unhappyPlatinum(enriched, unhappyStarsBelow, platinumStatus),
+        RatingsOps.unhappyPlatinum(enriched, 3.0, "platinum"),
       perCustomer15min = RatingsOps.perCustomer15min(watermarked),
       byClubStatus1min = RatingsOps.byClubStatus1min(watermarked),
       // A4 streaming halves: hopping 10m/5m per CHANNEL, session 30m gap

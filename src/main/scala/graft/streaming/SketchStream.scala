@@ -58,6 +58,13 @@ object SketchStream {
     */
   def cmsTable(name: String): String = s"${name}_cms"
 
+  /** The CMS shape of every maintained sketch. Cells are stored by flat
+    * index, so a table can only be read and merged under the shape it
+    * was written with.
+    */
+  private val Depth = FreqSketch.DefaultDepth
+  private val Width = FreqSketch.DefaultWidth
+
   /** Maintain a count-min sketch of corpus WORD frequencies over a
     * document stream — the streaming face of [[FreqSketch.buildCms]]:
     * each batch folds its own tokens into d×w cells (one
@@ -82,15 +89,12 @@ object SketchStream {
     * discipline).
     */
   def maintainCms(docs: DataFrame, name: String, checkpointDir: String,
-                  textCol: String = "text",
-                  d: Int = FreqSketch.DefaultDepth,
-                  w: Int = FreqSketch.DefaultWidth,
                   onBatch: SketchEvent => Unit = _ => ()): StreamingQuery = {
     val owner = docs.sparkSession
     docs.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: Dataset[Row], epoch: Long) =>
-        val ev = mergeCmsBatch(batch.toDF(), name, epoch, textCol, d, w)
+        val ev = mergeCmsBatch(batch.toDF(), name, epoch)
         SwapTable.refreshOwner(owner, cmsTable(name))
         onBatch(ev)
       }
@@ -111,10 +115,7 @@ object SketchStream {
     * water, WARN-logged) an out-of-order manual caller or a fresh-
     * checkpoint restart re-reading folded history.
     */
-  def mergeCmsBatch(batch: DataFrame, name: String, epoch: Long,
-                    textCol: String = "text",
-                    d: Int = FreqSketch.DefaultDepth,
-                    w: Int = FreqSketch.DefaultWidth): SketchEvent = {
+  def mergeCmsBatch(batch: DataFrame, name: String, epoch: Long): SketchEvent = {
     val live = cmsTable(name)
     val liveDf = SwapTable.current(batch.sparkSession, live)
     // monotone-epoch lineage: ONE high-water marker row identifies
@@ -123,13 +124,13 @@ object SketchStream {
     SwapTable.skipOf(liveDf, "k", epoch, live) match {
       case Some(skip) => SketchEvent(epoch, skip, 1L, 0L)
       case None =>
-        val toks = batch.filter(col(textCol).isNotNull)
-          .select(explode(graft.functions.wordTfs(col(textCol)))
+        val toks = batch.filter(col("text").isNotNull)
+          .select(explode(graft.functions.wordTfs(col("text")))
             .as("wt"))
           .select(col("wt.word").as("word"),
             col("wt.tf").cast("long").as("tf"))
         val batchCells = toks
-          .select(explode(FreqSketch.cmsPositions(col("word"), d, w))
+          .select(explode(FreqSketch.cmsPositions(col("word"), Depth, Width))
             .as("k"), col("tf").as("v"))
           .groupBy("k").agg(sum("v").as("v"))
           .select(lit("c").as("kind"), col("k"), col("v"))
@@ -156,20 +157,15 @@ object SketchStream {
     * [[FreqSketch.buildCms]]) and every candidate scores map-side via
     * the codegen'd min-of-d-cells probe. Output: (word, est).
     */
-  def cmsEstimates(spark: SparkSession, name: String, words: DataFrame,
-                   wordCol: String = "word",
-                   d: Int = FreqSketch.DefaultDepth,
-                   w: Int = FreqSketch.DefaultWidth): DataFrame =
-    words.select(col(wordCol).as("word"),
-      FreqSketch.cmsEstimate(col(wordCol), loadCells(spark, name, d, w), d, w)
-        .as("est"))
+  def cmsEstimates(spark: SparkSession, name: String, words: DataFrame): DataFrame =
+    words.select(col("word"),
+      FreqSketch.cmsEstimate(col("word"), loadCells(spark, name), Depth, Width).as("est"))
 
   /** The maintained d×w cell array (config-bounded driver load — ≤ 64k
     * longs at the default), shared by the probe paths.
     */
-  private def loadCells(spark: SparkSession, name: String, d: Int,
-                        w: Int): Array[Long] = {
-    val table = new Array[Long](d * w)
+  private def loadCells(spark: SparkSession, name: String): Array[Long] = {
+    val table = new Array[Long](Depth * Width)
     spark.table(cmsTable(name)).filter(col("kind") === "c")
       .select(col("k"), col("v")).collect()
       .foreach(r => table(r.getLong(0).toInt) = r.getLong(1))
@@ -188,18 +184,16 @@ object SketchStream {
     * catches over-counting exactly).
     */
   def heavyHitters(spark: SparkSession, name: String, docs: DataFrame,
-                   threshold: Long, textCol: String = "text",
-                   d: Int = FreqSketch.DefaultDepth,
-                   w: Int = FreqSketch.DefaultWidth): DataFrame = {
+                   threshold: Long): DataFrame = {
     require(threshold >= 1, s"threshold must be >= 1, got $threshold")
-    val table = loadCells(spark, name, d, w)
-    val toks = FreqSketch.tokenWeights(docs, textCol)
-    toks.filter(FreqSketch.cmsEstimate(col("word"), table, d, w) >= threshold)
+    val table = loadCells(spark, name)
+    val toks = FreqSketch.tokenWeights(docs)
+    toks.filter(FreqSketch.cmsEstimate(col("word"), table, Depth, Width) >= threshold)
       .groupBy("word").agg(sum("weight").cast("long").as("n"))
       .filter(col("n") >= threshold)
   }
 
-  /** Maintain per-`groupCol` HLL registers of distinct `n`-shingles
+  /** Maintain per-`source` HLL registers of distinct 3-shingles
     * over a document stream. Each batch: build the batch's registers
     * (one partial-aggregated pass over the batch only), max-merge with
     * the persisted table, publish via [[graft.core.SwapTable]]. Null
@@ -207,8 +201,6 @@ object SketchStream {
     * [[FreqSketch.hllShingleReport]].
     */
   def maintainHll(docs: DataFrame, name: String, checkpointDir: String,
-                  groupCol: String = "source", textCol: String = "text",
-                  n: Int = 3,
                   onBatch: SketchEvent => Unit = _ => ()): StreamingQuery = {
     val owner = docs.sparkSession
     docs.writeStream
@@ -216,9 +208,9 @@ object SketchStream {
       .foreachBatch { (batch: Dataset[Row], epoch: Long) =>
         val live = registersTable(name)
         val items = batch.toDF()
-          .filter(col(textCol).isNotNull && col(groupCol).isNotNull)
-          .select(col(groupCol).as("group"),
-            explode(Dedup.shingleHashes(col(textCol), n)).as("h"))
+          .filter(col("text").isNotNull && col("source").isNotNull)
+          .select(col("source").as("group"),
+            explode(Dedup.shingleHashes(col("text"), 3)).as("h"))
         val batchRegs = FreqSketch.hllRegisters(items, col("group"), col("h"))
         // pinned BEFORE the swap: the merge plan reads the live table's
         // files; materializing first keeps the read/overwrite disjoint

@@ -39,21 +39,14 @@ object LatestByKey {
     * new latest row for a key whenever it changes (changelog updates).
     * State: exactly one Row per key. Run with OutputMode.Update.
     *
-    * No state timeout by default: a ksqlDB table retains every key
-    * forever. At 100 TB key cardinality the caller bounds state with
-    * `ttl` (event keys that stop updating are evicted) — the same
-    * trade-off ksqlDB pushes to topic retention.
+    * No state timeout: a ksqlDB table retains every key forever.
     */
   def streaming(df: DataFrame, key: String, ts: String,
-                ttl: Option[String] = None,
                 tiebreak: Seq[String] = Nil): DataFrame = {
     val schema = df.schema
     val ordIdx = (ts +: tiebreak).map(schema.fieldIndex)
     val keyIdx = schema.fieldIndex(key)
     implicit val rowEnc = Encoders.row(schema)
-    val timeout =
-      if (ttl.isDefined) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
 
     // same ordering as the batch max_by struct: (ts, tiebreak...)
     // lexicographic — equal-ts versions resolve deterministically by the
@@ -74,23 +67,16 @@ object LatestByKey {
     }
 
     df.groupByKey(r => String.valueOf(r.get(keyIdx)))(Encoders.STRING)
-      .flatMapGroupsWithState[Row, Row](OutputMode.Update, timeout) {
+      .flatMapGroupsWithState[Row, Row](OutputMode.Update, GroupStateTimeout.NoTimeout) {
         (_: String, rows: Iterator[Row], state: GroupState[Row]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            val incoming = rows.reduceOption((a, b) => if (newer(b, a)) b else a)
-            val current = state.getOption
-            val next = (current, incoming) match {
-              case (Some(c), Some(i)) => if (newer(i, c)) Some(i) else None
-              case (None, i)          => i
-              case (_, None)          => None
-            }
-            next.foreach { r =>
-              state.update(r)
-              ttl.foreach(state.setTimeoutDuration)
-            }
-            next.iterator
+          val incoming = rows.reduceOption((a, b) => if (newer(b, a)) b else a)
+          val next = (state.getOption, incoming) match {
+            case (Some(c), Some(i)) => if (newer(i, c)) Some(i) else None
+            case (None, i)          => i
+            case (_, None)          => None
           }
+          next.foreach(state.update)
+          next.iterator
       }
   }
 }

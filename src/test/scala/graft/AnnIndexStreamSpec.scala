@@ -198,7 +198,7 @@ class AnnIndexStreamSpec extends SparkSuite {
     val booksBefore = rows(spark.table("t_cp_ivfpq_codebooks"))
     val qs = emb.filter(col("vec_id") < 3)
     val searchBefore = rows(Similarity.ivfPqTopKIndexed(spark, "t_cp_ivfpq",
-      qs, 5, m = 8, dims = 64))
+      qs, 5))
     val rep2 = Similarity.compactIndex(spark, "t_cp_ivfpq")
     assert(rep2.map(_.table).toSet ==
       Set("t_cp_ivfpq_lists", "t_cp_ivfpq_codes"), rep2.toString)
@@ -206,7 +206,7 @@ class AnnIndexStreamSpec extends SparkSuite {
     assert(rows(spark.table("t_cp_ivfpq_centroids")) == centsBefore)
     assert(rows(spark.table("t_cp_ivfpq_codebooks")) == booksBefore)
     assert(rows(Similarity.ivfPqTopKIndexed(spark, "t_cp_ivfpq",
-      qs, 5, m = 8, dims = 64)) == searchBefore)
+      qs, 5)) == searchBefore)
   }
 
   test("compactIndex swap is crash-recoverable: orphaned scratch completes, data intact") {

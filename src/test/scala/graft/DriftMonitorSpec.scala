@@ -42,8 +42,7 @@ class DriftMonitorSpec extends SparkSuite {
     val ckpt = java.nio.file.Files.createTempDirectory("drift-ckpt").toString
     val docsSchema = mix(1, 0, 0L).schema
     def start(ck: String = ckpt) = DriftMonitor.maintain(
-      spark.readStream.schema(docsSchema).parquet(srcDir), name, ck,
-      slack = 200L, threshold = 2000L, onBatch = events.add(_))
+      spark.readStream.schema(docsSchema).parquet(srcDir), name, ck, threshold = 2000L, onBatch = events.add(_))
     def feed(df: DataFrame): Unit =
       df.write.mode("append").parquet(srcDir)
 
@@ -195,8 +194,7 @@ class DriftMonitorSpec extends SparkSuite {
     val ckpt = java.nio.file.Files.createTempDirectory("dby-ckpt").toString
     val schema = dom("a", 1, 0, 0L).schema
     def start(ck: String = ckpt) = DriftMonitor.maintainBy(
-      spark.readStream.schema(schema).parquet(srcDir), name, ck,
-      slack = 200L, threshold = 5000L, onBatch = events.add(_))
+      spark.readStream.schema(schema).parquet(srcDir), name, ck, threshold = 5000L, onBatch = events.add(_))
     def feed(df: DataFrame): Unit =
       df.write.mode("append").parquet(srcDir)
     // batch 0: both on-profile; batches 1–2: b collapses to 40% good
@@ -275,12 +273,11 @@ class DriftMonitorSpec extends SparkSuite {
     // groups drop (never match a baseline), long shard ids fold
     // through their string form
     val shardProf = Seq(("7", "quality_rate", 8000L))
-      .toDF("shard", "metric", "mu")
+      .toDF("source", "metric", "mu")
     val shardBatch = mix(20, 30, 40000L)
-      .withColumn("shard", when(col("doc_id") % 2 === 0, lit(7L))
+      .withColumn("source", when(col("doc_id") % 2 === 0, lit(7L))
         .otherwise(lit(null).cast("long")))
-    val shardTraj = DriftMonitor.cusumTrajectoryBy(
-        Seq(shardBatch), shardProf, groupCol = "shard")
+    val shardTraj = DriftMonitor.cusumTrajectoryBy(Seq(shardBatch), shardProf)
       .collect().map(r => (r.getString(1), r.getString(2)) -> r).toMap
     assert(shardTraj.keySet.forall(_._1 == "7"), shardTraj.keySet)
     assert(shardTraj.contains(("7", "quality_rate")), shardTraj.keySet)

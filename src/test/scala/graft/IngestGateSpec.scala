@@ -181,6 +181,44 @@ class IngestGateSpec extends SparkSuite {
     assert(decide() == before)
   }
 
+  test("the gate store records its near-dup layout; a store written under another layout fails every open, naming both") {
+    import spark.implicits._
+    val name = "t_gate_layout"
+    val docs = Seq(
+      (1L, "stream processing engines keep per key state in a versioned store"),
+      (2L, "minhash signatures band into buckets that collide for similar text"))
+      .toDF("doc_id", "text")
+    IngestDedupGate.appendToStore(IngestDedupGate.filterNovel(docs, name), name)
+    val dir = IngestDedupGate.storeDir(spark, name)
+    val head = ManifestStore.latestManifest(spark, dir).get
+    assert(head.layout == IngestDedupGate.Layout)
+    Seq(s"shingle=${graft.ext.Dedup.ShingleN}", s"bands=${graft.ext.Dedup.NumBands}",
+      s"rows=${graft.ext.Dedup.RowsPerBand}", "perms=").foreach(p =>
+      assert(head.layout.contains(p), head.layout))
+    // the same build reopens its own store
+    assert(IngestDedupGate.filterNovel(docs, name).count() == 0)
+    // the next version was committed by a build with another shingle width
+    val other = IngestDedupGate.Layout.replace(
+      s"shingle=${graft.ext.Dedup.ShingleN}", s"shingle=${graft.ext.Dedup.ShingleN + 2}")
+    ManifestStore.commit(spark, dir,
+      head.copy(version = head.version + 1, layout = other))
+    def failsNamingBoth(open: => Any): Unit = {
+      val e = intercept[IllegalStateException](open)
+      assert(e.getMessage.contains(s"[$other]") &&
+        e.getMessage.contains(s"[${IngestDedupGate.Layout}]"), e.getMessage)
+    }
+    // probe (a restarted gate's first batch runs the same filterNovel)
+    failsNamingBoth(IngestDedupGate.filterNovel(docs, name).collect())
+    failsNamingBoth(IngestDedupGate.probeBatch(docs, name).collect())
+    // append, compaction and the operator snapshot
+    failsNamingBoth(IngestDedupGate.appendToStore(
+      IngestDedupGate.filterNovel(docs, "t_gate_layout_fresh"), name))
+    failsNamingBoth(IngestDedupGate.compactStore(spark, name))
+    failsNamingBoth(IngestDedupGate.storeStats(spark, name).collect())
+    // the failed append wrote no version
+    assert(ManifestStore.latestManifest(spark, dir).get.version == head.version + 1)
+  }
+
   test("chunked isin pruning pushes one IN filter per chunk to the scan") {
     import spark.implicits._
     val p = java.nio.file.Files.createTempDirectory("gate-prune").toString + "/data"
@@ -862,7 +900,7 @@ class IngestGateSpec extends SparkSuite {
     // the cached benchmark gram set is released once the query
     // terminates (the listener unpersists it): rebuilding the same plan
     // must no longer hit the cache
-    val g = graft.ext.Decontamination.benchmarkGrams(bench, "text", 3)
+    val g = graft.ext.Decontamination.benchmarkGrams(bench)
     val deadline = System.currentTimeMillis + 20000
     while (g.storageLevel != org.apache.spark.storage.StorageLevel.NONE &&
            System.currentTimeMillis < deadline) Thread.sleep(100)
@@ -1033,9 +1071,7 @@ class IngestGateSpec extends SparkSuite {
       .toDF("event_id", "user_id", "event_type", "ts").schema
     val steps = Seq("signup", "view", "purchase")
     def start() = graft.streaming.EventFeatureStream.funnelDepth(
-        spark.readStream.schema(schema).parquet(srcDir), steps,
-        keys = Seq("user_id"), typeCol = "event_type", timeCol = "ts",
-        idCol = "event_id")
+        spark.readStream.schema(schema).parquet(srcDir), steps)
       .writeStream.option("checkpointLocation", ckpt)
       .foreachBatch { (out: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
         out.collect().foreach(r => last.put(r.getLong(0), r.getLong(1)))
@@ -1059,8 +1095,7 @@ class IngestGateSpec extends SparkSuite {
     val q2 = start(); q2.processAllAvailable(); q2.stop()
     // final stream depths == the batch operator over the closed log
     val batch = graft.ops.EventAnalytics.funnelDepth(
-        b1.unionByName(b2), steps, keyCol = "user_id",
-        typeCol = "event_type", tsCol = "ts")
+        b1.unionByName(b2), steps)
       .as[(Long, Long)].collect().toMap
     val streamed = Map(1L -> last.get(1L), 2L -> last.get(2L),
       3L -> last.get(3L))
@@ -1075,9 +1110,7 @@ class IngestGateSpec extends SparkSuite {
     val ckpt = java.nio.file.Files.createTempDirectory("efs-ckpt").toString
     val schema = Seq((0L, 0L, 0L, 0L)).toDF("event_id", "user_id", "ts", "value").schema
     def start() = graft.streaming.EventFeatureStream.lagFeatures(
-        spark.readStream.schema(schema).parquet(srcDir),
-        keys = Seq("user_id"), timeCol = "ts", idCol = "event_id",
-        valueCol = "value", sessionGap = 1000L)
+        spark.readStream.schema(schema).parquet(srcDir), sessionGap = 1000L)
       .writeStream.option("checkpointLocation", ckpt)
       .foreachBatch { (out: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
         out.select("event_id", "seq", "prev_value", "gap_micros", "session_idx")
@@ -1107,7 +1140,6 @@ class IngestGateSpec extends SparkSuite {
       Seq((4L, 1L, 2000L, 400L), (5L, 2L, 60L, 500L))
         .toDF("event_id", "user_id", "ts", "value"))
     val batch = graft.ops.EventFeatures.lagFeatures(all,
-        keys = Seq("user_id"), timeCol = "ts", idCol = "event_id",
         valueCol = "value", sessionGap = 1000L)
       .select("event_id", "seq", "prev_value", "gap_micros", "session_idx")
       .collect().map { r =>
@@ -1133,9 +1165,7 @@ class IngestGateSpec extends SparkSuite {
       .toDF("event_id", "user_id", "ts", "event_type").schema
     def start(timeoutMs: Long = -1L) =
       graft.streaming.EventFeatureStream.sessionTranscripts(
-          spark.readStream.schema(schema).parquet(srcDir),
-          keys = Seq("user_id"), timeCol = "ts", idCol = "event_id",
-          typeCol = "event_type", sessionGap = 1000L,
+          spark.readStream.schema(schema).parquet(srcDir), sessionGap = 1000L,
           timeoutMs = timeoutMs)
         .writeStream.option("checkpointLocation", ckpt)
         .foreachBatch { (out: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
@@ -1164,9 +1194,7 @@ class IngestGateSpec extends SparkSuite {
     val batch = graft.ops.EventFeatures.sessionTranscripts(
         Seq((1L, 1L, 10L, "view"), (2L, 1L, 110L, "click"),
           (3L, 1L, 2000L, "buy"), (4L, 1L, 4000L, "view"))
-          .toDF("event_id", "user_id", "ts", "event_type"),
-        keys = Seq("user_id"), timeCol = "ts", idCol = "event_id",
-        typeCol = "event_type", sessionGap = 1000L)
+          .toDF("event_id", "user_id", "ts", "event_type"), sessionGap = 1000L)
       .collect().map(r =>
         (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3))).toSet
     assert(got.asScala.toSet.subsetOf(batch), s"$batch")
@@ -1181,9 +1209,7 @@ class IngestGateSpec extends SparkSuite {
       .toDF("event_id", "user_id", "ts", "event_type")
       .write.mode("append").parquet(srcDir2)
     val q3 = graft.streaming.EventFeatureStream.sessionTranscripts(
-        spark.readStream.schema(schema).parquet(srcDir2),
-        keys = Seq("user_id"), timeCol = "ts", idCol = "event_id",
-        typeCol = "event_type", sessionGap = 1000L, timeoutMs = 600L)
+        spark.readStream.schema(schema).parquet(srcDir2), sessionGap = 1000L, timeoutMs = 600L)
       .writeStream.option("checkpointLocation", ckpt2)
       .foreachBatch { (out: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
         out.collect().foreach(r => got.add(
@@ -1214,9 +1240,7 @@ class IngestGateSpec extends SparkSuite {
       .toDF("event_id", "user_id", "ts", "event_type")
       .write.mode("append").parquet(srcDir2)
     val q4 = graft.streaming.EventFeatureStream.sessionTranscripts(
-        spark.readStream.schema(schema).parquet(srcDir2),
-        keys = Seq("user_id"), timeCol = "ts", idCol = "event_id",
-        typeCol = "event_type", sessionGap = 1000L, timeoutMs = 600000L)
+        spark.readStream.schema(schema).parquet(srcDir2), sessionGap = 1000L, timeoutMs = 600000L)
       .writeStream.option("checkpointLocation", ckpt2)
       .foreachBatch { (out: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
         out.collect().foreach(r => got.add(
@@ -1248,17 +1272,13 @@ class IngestGateSpec extends SparkSuite {
       .withColumn("event_id", col("event_id").cast("short"))
     events.write.mode("append").parquet(srcDir)
     val q = graft.streaming.EventFeatureStream.sessionTranscripts(
-        spark.readStream.schema(events.schema).parquet(srcDir),
-        keys = Seq("user_id"), timeCol = "ts", idCol = "event_id",
-        typeCol = "event_type", sessionGap = 1000L)
+        spark.readStream.schema(events.schema).parquet(srcDir), sessionGap = 1000L)
       .writeStream.option("checkpointLocation", ckpt)
       .foreachBatch { (out: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
         out.select("transcript").collect().foreach(r => got.add(r.getString(0)))
       }.start()
     try q.processAllAvailable() finally q.stop()
-    val batch = graft.ops.EventFeatures.sessionTranscripts(events,
-        keys = Seq("user_id"), timeCol = "ts", idCol = "event_id",
-        typeCol = "event_type", sessionGap = 1000L)
+    val batch = graft.ops.EventFeatures.sessionTranscripts(events, sessionGap = 1000L)
       .filter(col("session_idx") === 1).select("transcript")
       .as[String].collect().toSeq
     assert(batch == Seq("first second"))
@@ -1276,17 +1296,13 @@ class IngestGateSpec extends SparkSuite {
       val ckpt = java.nio.file.Files.createTempDirectory("sts-sql-ckpt").toString
       events.coalesce(1).write.mode("append").parquet(srcDir)
       val q = graft.streaming.EventFeatureStream.sessionTranscripts(
-          spark.readStream.schema(events.schema).parquet(srcDir),
-          keys = Seq("user_id"), timeCol = "ts", idCol = "event_id",
-          typeCol = "event_type", sessionGap = 1000L)
+          spark.readStream.schema(events.schema).parquet(srcDir), sessionGap = 1000L)
         .writeStream.option("checkpointLocation", ckpt)
         .foreachBatch { (out: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
           out.select("transcript").collect().foreach(r => got.add(r.getString(0)))
         }.start()
       try q.processAllAvailable() finally q.stop()
-      val batch = graft.ops.EventFeatures.sessionTranscripts(events,
-          keys = Seq("user_id"), timeCol = "ts", idCol = "event_id",
-          typeCol = "event_type", sessionGap = 1000L)
+      val batch = graft.ops.EventFeatures.sessionTranscripts(events, sessionGap = 1000L)
         .filter(col("session_idx") === 1).select("transcript")
         .as[String].collect().toSeq
       (got.asScala.toSeq, batch)
@@ -1315,9 +1331,7 @@ class IngestGateSpec extends SparkSuite {
     val store = java.nio.file.Files.createTempDirectory("ras-store").toString
     val schema = Seq((0L, 0L)).toDF("user_id", "ts").schema
     def start() = graft.streaming.EventFeatureStream.rateAnomalies(
-        spark.readStream.schema(schema).parquet(srcDir), store, ckpt,
-        key = "user_id", timeCol = "ts", binMicros = 100L,
-        factorX100 = 300L) { (flags, epoch) =>
+        spark.readStream.schema(schema).parquet(srcDir), store, ckpt, binMicros = 100L) { (flags, epoch) =>
       flags.collect().foreach(r => got.add((epoch, r.getLong(0),
         r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))))
     }
@@ -1342,8 +1356,7 @@ class IngestGateSpec extends SparkSuite {
     // accumulated history — bit-identical to the batch operator over the
     // whole log
     val all = (u1b1.map(t => (1L, t)) ++ b2).toDF("user_id", "ts")
-    val batch = graft.ops.EventFeatures.rateAnomalies(all,
-        key = "user_id", timeCol = "ts", binMicros = 100L, factorX100 = 300L)
+    val batch = graft.ops.EventFeatures.rateAnomalies(all, binMicros = 100L, factorX100 = 300L)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getLong(3), r.getLong(4))).toSet
     val e1 = got.asScala.filter(_._1 == 1L)

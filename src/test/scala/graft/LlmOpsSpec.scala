@@ -371,10 +371,10 @@ class LlmOpsSpec extends SparkSuite {
     assert(capped == Set((0L, 4L, 0L)),
       s"capped buckets must drop rep candidates, got $capped")
     intercept[IllegalArgumentException] {
-      Dedup.simhashNearDups(docs, bits = 60, blocks = 7)
+      Dedup.simhashNearDups(docs, blocks = 7)
     }
     intercept[IllegalArgumentException] {
-      Dedup.simhashNearDups(docs, blocks = 3, maxHamming = 3)
+      Dedup.simhashNearDups(docs, blocks = 3)
     }
   }
 
@@ -611,7 +611,7 @@ class LlmOpsSpec extends SparkSuite {
     // centroid splits its cluster across cells, and single-probe search
     // misses the far half; a mean-sitting trained centroid does not.
     val trained = recallOf(Similarity.ivfTopK(emb, ids, 10, centroids = 16, nProbe = 1))
-    val static0 = recallOf(Similarity.ivfTopKStatic(emb, ids, 10, centroids = 16, nProbe = 1))
+    val static0 = recallOf(Similarity.ivfTopKStatic(emb, ids, 10, nProbe = 1))
     assert(trained > static0,
       s"k-means recall $trained does not strictly beat static stand-in $static0")
   }
@@ -666,7 +666,7 @@ class LlmOpsSpec extends SparkSuite {
     // IVF×PQ composite: pruned candidates + ADC scoring still recall
     // usefully on the structured corpus, and results are a subset of
     // what full-corpus ADC could return (pruning only removes)
-    val ivfpq = Similarity.ivfPqTopK(emb, ids, 10, centroids = 16, nProbe = 8)
+    val ivfpq = Similarity.ivfPqTopK(emb, ids, 10, nProbe = 8)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
     val ivfpqRecall = (exact intersect ivfpq).size.toDouble / exact.size
     assert(ivfpqRecall >= 0.25, s"IVF×PQ recall $ivfpqRecall below floor")
@@ -985,7 +985,7 @@ class LlmOpsSpec extends SparkSuite {
       (3L, "entirely unrelated text about catalyst rules and codegen"),
       (4L, null.asInstanceOf[String]))
       .toDF("doc_id", "text")
-    val got = Dedup.containmentPairs(docs, num = 9, den = 10)
+    val got = Dedup.containmentPairs(docs, num = 9)
       .select("doc_id", "container_id", "inter", "n_grams")
       .as[(Long, Long, Long, Long)].collect().toSet
     assert(got == Set((2L, 1L, 13L, 13L)), s"got $got")
@@ -1000,7 +1000,7 @@ class LlmOpsSpec extends SparkSuite {
     val spam = Seq((1L, a), (2L, a), (3L, a)).toDF("doc_id", "text")
     assert(Dedup.containmentPairs(spam, maxDf = 2).count() == 0)
     intercept[IllegalArgumentException](
-      Dedup.containmentPairs(docs, num = 11, den = 10))
+      Dedup.containmentPairs(docs, num = 11))
     intercept[IllegalArgumentException](
       Dedup.containmentPairs(docs, maxDf = 1))
   }
@@ -1136,8 +1136,7 @@ class LlmOpsSpec extends SparkSuite {
         (if (i <= 2) "\na quote" else ""), "A"))
     val b = (6 to 8).map(i => (i.toLong, s"FOOTER B\nown $i", "B"))
     val out = Dedup.stripBoilerplateLines(
-        (a ++ b).toDF("doc_id", "text", "source"),
-        maxDfPermille = 500, minDomainDocs = 4)
+        (a ++ b).toDF("doc_id", "text", "source"))
       .collect().map(r => r.getLong(0) ->
         ((r.getString(2), r.getLong(3), r.getLong(4)))).toMap
     assert(out(1L) == (("body 1\na quote", 3L, 2L)), out(1L))
@@ -1146,8 +1145,7 @@ class LlmOpsSpec extends SparkSuite {
     // an all-boilerplate doc keeps an empty clean_text, never vanishes
     val solo = Dedup.stripBoilerplateLines(
         ((1 to 4).map(i => (i.toLong, "ONLY BANNER", "C")) :+
-          ((5L, "ONLY BANNER\nreal", "C"))).toDF("doc_id", "text", "source"),
-        maxDfPermille = 500, minDomainDocs = 4)
+          ((5L, "ONLY BANNER\nreal", "C"))).toDF("doc_id", "text", "source"))
       .collect().map(r => r.getLong(0) -> r.getString(2)).toMap
     assert(solo(1L) == "" && solo(5L) == "real", solo)
   }
@@ -1776,13 +1774,6 @@ class LlmOpsSpec extends SparkSuite {
     assert(out.size == 4, "one row per input document")
     // the word-order law: repeated-bigram text is conditionally cheaper
     assert(out(1L)._3 < out(2L)._3)
-    // the SQL-splice guard: a backticked column name is rejected up
-    // front, not via an opaque parse error (ADVICE r13)
-    val e = intercept[IllegalArgumentException] {
-      graft.ext.TextAnalysis.bigramSurprisal(
-        docs.withColumnRenamed("text", "t`xt"), textCol = "t`xt")
-    }
-    assert(e.getMessage.contains("backtick"), e.getMessage)
   }
 
   test("trigram stupid-backoff: seen trigram, bigram backoff, unigram floor — hand-computed bits") {
@@ -1853,7 +1844,7 @@ class LlmOpsSpec extends SparkSuite {
       (i.toLong, words.mkString(" "), "A")
     }.toDF("doc_id", "text", "source")
     val viaTri = graft.ext.Curation.perplexityBuckets(docs,
-        scorer = graft.ext.TextAnalysis.trigramSurprisal(_, _, _))
+        scorer = graft.ext.TextAnalysis.trigramSurprisal(_))
       .select("doc_id", "mean_bits_x100", "bucket")
       .as[(Long, Long, String)].collect().map(r => r._1 -> ((r._2, r._3))).toMap
     val direct = graft.ext.TextAnalysis.trigramSurprisal(docs)
@@ -3194,7 +3185,7 @@ class LlmOpsSpec extends SparkSuite {
       .select("doc_id", "n_passages", "n_kept")
       .as[(Long, Long, Long)].collect().map(r => r._1 -> (r._2, r._3)).toMap
     assert(fixed(2L)._1 == fixed(2L)._2, s"fixed windows all shift: $fixed")
-    val cdc = Dedup.dedupPassagesCdc(pair, window = 4, divisor = 4)
+    val cdc = Dedup.dedupPassagesCdc(pair, divisor = 4)
       .select("doc_id", "n_passages", "n_kept")
       .as[(Long, Long, Long)].collect().map(r => r._1 -> (r._2, r._3)).toMap
     // reimplementation of the min-key law over the same chunkings
@@ -3467,8 +3458,6 @@ class LlmOpsSpec extends SparkSuite {
     assert(rm(4L) == ((null, 0L, 0L)))
 
     intercept[IllegalArgumentException](Dedup.dupSpanStats(docs, minLen = 1))
-    intercept[IllegalArgumentException](
-      Dedup.removeDupSpans(docs, idCol = "doc`id"))
     // key-packing violation fails loudly at execution
     val bad = Seq(("doc-a", (1 to 30).map("w" + _).mkString(" "))).toDF("doc_id", "text")
     val ex = intercept[Exception](Dedup.dupSpanStats(bad, minLen = 4).collect())
@@ -3774,7 +3763,7 @@ class LlmOpsSpec extends SparkSuite {
     }
 
     val knn = graft.ext.Similarity.knnClassify(train, queries, k = 5,
-      centroids = 4, nProbe = 4)
+      centroids = 4)
       .select("vec_id", "pred_label", "votes").as[(Long, Int, Long)]
       .collect()
     assert(knn.length == 10)
@@ -3842,7 +3831,7 @@ class LlmOpsSpec extends SparkSuite {
     // drop-in scorer: the CCNet bucket stage accepts the KN rung
     val docs = Tables.documents(spark, sf).limit(120)
     val buckets = graft.ext.Curation.perplexityBuckets(docs,
-      scorer = graft.ext.TextAnalysis.knTrigramSurprisal(_, _, _))
+      scorer = graft.ext.TextAnalysis.knTrigramSurprisal(_))
     val names = buckets.select("bucket").distinct()
       .as[String].collect().toSet
     assert(names.subsetOf(Set("head", "middle", "tail")) && names.nonEmpty)
@@ -3914,7 +3903,7 @@ class LlmOpsSpec extends SparkSuite {
       (None, 50L, Some(8L)), (Some("A"), 13L, None))
       .toDF("prompt_id", "response_id", "score")
     val got = graft.ext.Preference
-      .dpoPairs(resp, "prompt_id", "response_id", "score")
+      .dpoPairs(resp, "response_id")
       .collect().map(r => r.getString(0) -> r).toMap
     assert(got.keySet == Set("A", "B"), got.keySet)
     val a = got("A")
@@ -3928,10 +3917,10 @@ class LlmOpsSpec extends SparkSuite {
       b.getLong(b.fieldIndex("margin")) == 5L, b)
     // a margin floor above the spread drops A too
     assert(graft.ext.Preference
-      .dpoPairs(resp, "prompt_id", "response_id", "score", minMargin = 5L)
+      .dpoPairs(resp, "response_id", minMargin = 5L)
       .collect().map(_.getString(0)).toSet == Set("B"))
     intercept[IllegalArgumentException](graft.ext.Preference
-      .dpoPairs(resp, "prompt_id", "response_id", "score", minMargin = 0L))
+      .dpoPairs(resp, "response_id", minMargin = 0L))
   }
 
   test("chat render + spans: template law, code-point grain, shared offsets") {
@@ -4011,13 +4000,13 @@ class LlmOpsSpec extends SparkSuite {
     val resp = Seq(("A", 10L, 0.9), ("A", 11L, 0.1))
       .toDF("prompt_id", "response_id", "score")
     val e = intercept[IllegalArgumentException](graft.ext.Preference
-      .dpoPairs(resp, "prompt_id", "response_id", "score"))
+      .dpoPairs(resp, "response_id"))
     assert(e.getMessage.contains("integral score column"), e.getMessage)
     // an integer-typed column of any width still works
     val ok = Seq(("A", 10L, 9), ("A", 11L, 1))
       .toDF("prompt_id", "response_id", "score")
     assert(graft.ext.Preference
-      .dpoPairs(ok, "prompt_id", "response_id", "score").count() == 1L)
+      .dpoPairs(ok, "response_id").count() == 1L)
   }
 
   test("chat render + spans: duplicate turn_idx fails loud on both faces") {

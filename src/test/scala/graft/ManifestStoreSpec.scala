@@ -90,9 +90,9 @@ class ManifestStoreSpec extends SparkSuite {
     ManifestStore.seed(Seq((1, "a")).toDF("id", "v"), dir)
     // two writers race version 2: the winner's commit sticks
     ManifestStore.commit(spark, dir,
-      ManifestStore.Manifest(2L, ManifestStore.latestManifest(spark, dir).get.dirs))
+      ManifestStore.Manifest(2L, ManifestStore.latestManifest(spark, dir).get.dirs, ""))
     val loser = intercept[IllegalStateException] {
-      ManifestStore.commit(spark, dir, ManifestStore.Manifest(2L, Nil))
+      ManifestStore.commit(spark, dir, ManifestStore.Manifest(2L, Nil, ""))
     }
     assert(loser.getMessage.contains("commit race"))
     // the winner's manifest content is intact (the loser's Nil list

@@ -943,7 +943,7 @@ class OpsPropertySpec extends SparkSuite {
         .view.mapValues(_.map(r => (r.getLong(1), r.getLong(2)))).toMap
       Seq(1L, 3L).foreach { mm =>
         val got = graft.ext.Preference
-          .dpoPairs(resp, "prompt_id", "response_id", "score",
+          .dpoPairs(resp, "response_id",
             minMargin = mm)
           .collect()
         // at most one pair per prompt

@@ -11,7 +11,7 @@ class PushQuerySpec extends SparkSuite {
 
   test("EMIT CHANGES LIMIT 5 returns 5 rows from the live generator and stops") {
     val gen = KafkaShape.ratingsGen(spark, rowsPerSecond = 200)
-    val out = PushQuery.emitChangesLimit(gen, 5, timeoutMs = 60000)
+    val out = PushQuery.emitChangesLimit(gen, 5)
     assert(out.length == 5)
     // datagen shape: RATING_ID, USER_ID, STARS, CHANNEL, MESSAGE, ts
     assert(out.head.schema.fieldNames.toSeq ==

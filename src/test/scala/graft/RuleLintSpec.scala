@@ -28,7 +28,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * raw-parquet dim store (whose concurrent reads could tear). Parquet is
   * read through graft.core.Parquet only, which reuses inferred schemas:
   * a `.read.parquet(` anywhere else, which starts a schema-inference job
-  * per call, fails it. Exemptions:
+  * per call, fails it. And the operator surface keeps few options: the
+  * defaulted parameters of public defs in src/main outside graft/queries
+  * are counted (and the count printed), and a count above
+  * [[MaxDefaultedParams]] fails it — a knob every caller leaves at one
+  * value is a constant, not a parameter. Exemptions:
   *
   *  - queries/LlmOracle.scala keeps its own moduli, its own word splits
   *    and its own band-layout parameters: its DuckDB replay text is the
@@ -77,6 +81,154 @@ class RuleLintSpec extends AnyFunSuite {
   // the character class keeps this spec's own source from naming it
   private val RawDimStore = """\bChangelog[D]im\b""".r
   private val ParquetRead = """\.read\s*\.\s*parquet\(""".r
+
+  /** Ceiling on the defaulted parameters of public defs in src/main
+    * outside graft/queries. Lower it when a change removes options;
+    * raising it needs a caller that passes a second value.
+    */
+  private val MaxDefaultedParams = 346
+
+  /** `src` with comments, string and char literals blanked to spaces
+    * (newlines kept), so offsets and line numbers still match.
+    */
+  private def blanked(src: String): String = {
+    val out = src.toCharArray
+    def blank(from: Int, to: Int): Unit =
+      (from until math.min(to, src.length)).foreach(k => if (out(k) != '\n') out(k) = ' ')
+    def stringEnd(at: Int): Int = // `at` is the opening quote
+      if (src.startsWith("\"\"\"", at)) {
+        var e = src.indexOf("\"\"\"", at + 3) + 3
+        while (e < src.length && src(e) == '"') e += 1
+        e
+      } else {
+        val interpolated = at > 0 && Character.isLetter(src(at - 1))
+        var i = at + 1
+        while (i < src.length && src(i) != '"' && src(i) != '\n') {
+          if (src(i) == '\\') i += 2
+          else if (interpolated && src.startsWith("${", i)) {
+            var depth = 0
+            do {
+              if (src(i) == '{') depth += 1 else if (src(i) == '}') depth -= 1
+              else if (src(i) == '"') i = stringEnd(i) - 1
+              i += 1
+            } while (depth > 0 && i < src.length)
+          } else i += 1
+        }
+        i + 1
+      }
+    var i = 0
+    while (i < src.length) {
+      if (src.startsWith("//", i)) {
+        val e = src.indexOf('\n', i)
+        val end = if (e < 0) src.length else e
+        blank(i, end); i = end
+      } else if (src.startsWith("/*", i)) {
+        var depth = 0
+        val start = i
+        do {
+          if (src.startsWith("/*", i)) { depth += 1; i += 2 }
+          else if (src.startsWith("*/", i)) { depth -= 1; i += 2 }
+          else i += 1
+        } while (depth > 0 && i < src.length)
+        blank(start, i)
+      } else if (src(i) == '"') {
+        val e = stringEnd(i); blank(i, e); i = e
+      } else if (src(i) == '\'' && i + 2 < src.length &&
+          (src(i + 2) == '\'' || src(i + 1) == '\\')) {
+        val e = src.indexOf('\'', i + 2) + 1
+        blank(i, e); i = e
+      } else i += 1
+    }
+    new String(out)
+  }
+
+  private val HeaderWord =
+    """\b(object|class|trait|def|val|var|new|if|else|for|while|match|try|catch|finally|do|yield|case|return)\b""".r
+  private val DefName = """\bdef\s+[^\s(\[:=]+""".r
+
+  /** Offset just past the bracket closing the one at `open` (any of
+    * `([{`, nested ones counted together).
+    */
+  private def closingAny(code: String, open: Int): Int = {
+    var depth = 0
+    var i = open
+    do {
+      if ("([{".contains(code(i))) depth += 1 else if (")]}".contains(code(i))) depth -= 1
+      i += 1
+    } while (depth > 0 && i < code.length)
+    i
+  }
+
+  /** Top-level pieces of a bracketed clause (its text without brackets). */
+  private def pieces(clause: String): Seq[String] = {
+    val out = Seq.newBuilder[String]
+    var depth = 0
+    var from = 0
+    clause.indices.foreach { i =>
+      val c = clause(i)
+      if ("([{".contains(c)) depth += 1
+      else if (")]}".contains(c)) depth -= 1
+      else if (c == ',' && depth == 0) { out += clause.substring(from, i); from = i + 1 }
+    }
+    (out += clause.substring(from)).result()
+  }
+
+  private def hasDefault(param: String): Boolean = {
+    var depth = 0
+    param.indices.exists { i =>
+      val c = param(i)
+      if ("([{".contains(c)) depth += 1 else if (")]}".contains(c)) depth -= 1
+      depth == 0 && c == '=' && !"=<>!".contains(param.lift(i - 1).getOrElse(' ')) &&
+        !"=>".contains(param.lift(i + 1).getOrElse(' '))
+    }
+  }
+
+  /** (def name, defaulted-parameter count) for each public def in `src`
+    * that has a defaulted parameter. A def is public when no modifier
+    * before it on its line is private or protected and every brace
+    * around it opens the body of a non-private object, class or trait
+    * (so local defs and defs in anonymous classes are not counted).
+    */
+  private def defaultedParams(src: String): Seq[(String, Int)] = {
+    val code = blanked(src)
+    // for every `{`: does it open a public template body?
+    val opens = scala.collection.mutable.Stack.empty[Boolean]
+    val publicAt = new Array[Boolean](code.length + 1)
+    var last = 0 // offset after the last brace seen
+    var public = true
+    code.indices.foreach { i =>
+      publicAt(i) = opens.forall(identity)
+      if (code(i) == '{') {
+        val header = code.substring(last, i)
+        val word = HeaderWord.findAllMatchIn(header).toSeq.lastOption.map(_.group(1))
+        opens.push(word.exists(Set("object", "class", "trait")) &&
+          !header.contains("private") && !header.contains("protected"))
+        last = i + 1
+      } else if (code(i) == '}') {
+        if (opens.nonEmpty) opens.pop()
+        last = i + 1
+      }
+    }
+    DefName.findAllMatchIn(code).toSeq.flatMap { m =>
+      val lineStart = code.lastIndexOf('\n', m.start) + 1
+      val mods = code.substring(lineStart, m.start)
+      if (!publicAt(m.start) || mods.contains("private") || mods.contains("protected")) None
+      else {
+        var i = m.end
+        def skipWs(): Unit = while (i < code.length && code(i).isWhitespace) i += 1
+        skipWs()
+        if (i < code.length && code(i) == '[') { i = closingAny(code, i); skipWs() }
+        var n = 0
+        while (i < code.length && code(i) == '(') {
+          val end = closingAny(code, i)
+          n += pieces(code.substring(i + 1, end - 1)).count(hasDefault)
+          i = end
+          skipWs()
+        }
+        if (n > 0) Some(m.matched.stripPrefix("def").trim -> n) else None
+      }
+    }
+  }
 
   /** Offset just past the paren that closes the one at `open`. */
   private def closing(src: String, open: Int): Int = {
@@ -201,5 +353,32 @@ class RuleLintSpec extends AnyFunSuite {
       case (file, src) if ParquetRead.findFirstIn(src).isDefined => file
     }
     assert(readers == Seq("graft/core/Parquet.scala"))
+  }
+
+  test("defaulted parameters on public defs outside graft/queries stay under the ceiling") {
+    val sample =
+      """object A {
+        |  def f(df: DataFrame, textCol: String = "text", k: Int = 3)(implicit s: S = null): Int = {
+        |    def local(x: Int = 1) = x // "def g(y: Int = 2)"
+        |    val h = (a: Int) => a >= 2 && a <= 3
+        |    k
+        |  }
+        |  private def p(x: Int = 1) = x
+        |  def g[T](f: Int => Unit = _ => (), m: Map[String, Int] = Map("a" -> 1), s: String = s"$${q("(")}") = 0
+        |  def noDefaults(a: Int, b: String => Boolean) = a
+        |}
+        |private object B { def q(x: Int = 1) = x }
+        |class C(x: Int = 1) { def r(y: Int = 2) = y; new T { def s(z: Int = 3) = z } }
+        |""".stripMargin
+    assert(defaultedParams(sample) == Seq("f" -> 3, "g" -> 3, "r" -> 1))
+    val counted = sources.toSeq.sortBy(_._1)
+      .filterNot(_._1.startsWith("graft/queries/"))
+      .flatMap { case (file, src) => defaultedParams(src).map { case (d, n) => (file, d, n) } }
+    val total = counted.map(_._3).sum
+    println(s"[lint] $total defaulted parameters on ${counted.size} public defs " +
+      s"in src/main outside graft/queries (ceiling $MaxDefaultedParams)")
+    assert(total <= MaxDefaultedParams,
+      counted.groupBy(_._1).toSeq.sortBy(_._1).map { case (f, ds) =>
+        s"$f: ${ds.map(_._3).sum}" }.mkString("; "))
   }
 }

@@ -55,7 +55,7 @@ class TemporalJoinsSpec extends SparkSuite {
     val events = ((0 until 5).flatMap(h => ev("u", h, 2)) ++ ev("u", 5, 12) ++
       (0 until 4).flatMap(h => ev("v", h, 3)) ++ ev("w", 7, 9))
       .toDF("event_id", "user_id", "ts")
-    val out = graft.ops.EventFeatures.rateAnomalies(events, key = "user_id")
+    val out = graft.ops.EventFeatures.rateAnomalies(events)
       .as[(String, Long, Long, Long, Long)].collect()
     val flagged = out.filter(_._5 == 1L)
     assert(flagged.map(r => (r._1, r._3)).toSeq == Seq(("u", 12L)),
